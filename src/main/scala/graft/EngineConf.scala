@@ -24,19 +24,15 @@ import org.apache.spark.sql.SparkSession
   *    (≤256 dirs); deployments on high-latency stores can lower it via
   *    `SPARK_GRAFT_LISTING_THRESHOLD` without a code change. Grids
   *    larger than the threshold still engage the parallel path.
-  *  - '''fileoutputcommitter v2''': every STAGED engine write lands in
-  *    a staging/generation directory that is published by an atomic
-  *    rename or pointer flip (ArtifactStore/ShardedCommit/BulkSink), so
+  *  - '''fileoutputcommitter v2''': every engine artifact write lands
+  *    in a staging/generation directory that is published by an atomic
+  *    rename or pointer flip (ArtifactStore.publish, ShardedCommit,
+  *    BulkSink) — no index artifact byte is ever written in place — so
   *    v1's extra job-commit rename pass (one rename per task output,
   *    serial on the driver) buys no safety the artifact protocol does
-  *    not already provide — it only doubles the metadata ops of the
-  *    256-directory staged writes. The FLAT-LAYOUT in-place saves
-  *    (saveSemIndex, saveImiIndex, the bounded codebook/meta roots,
-  *    single-table LSH/CDC saves) are the exception: they overwrite
-  *    final paths directly, where v2 would leave a partially-committed
-  *    surface on a crash — those writes pin v1 per write
-  *    ([[graft.sinks.ArtifactStore.InPlaceCommit]]), so the session
-  *    default never weakens their all-or-nothing job commit.
+  *    not already provide; it only doubles the metadata ops of the
+  *    256-directory staged writes. A crash mid-job leaves a partial
+  *    generation no pointer names.
   *  - '''zstd parquet''': smaller artifacts at similar read speed
   *    (guide §6); content is unchanged, so save→load exactness and
   *    every oracle comparison are unaffected.

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.operators.{Bpe, Clustering, Dedup, Retrieval, Similarity, UnigramLm, WordPiece}
+import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
 
 /** The build-once/serve-many index tier behind the CLI facade: one
   * `index-build` / `index-serve` verb pair over every persistable
@@ -143,22 +144,19 @@ object IndexTool {
     Bpe.docWords(docs, "doc_id", "text").select(col("doc_id"),
       col("word").as("term"))
 
-  /** CLI builds write the VERSIONED artifact layout (a fresh generation
-    * directory + atomic pointer CAS — [[graft.sinks.ArtifactStore]]):
-    * readers never observe a half-built or mid-swap artifact, and a
-    * build racing an update on the same path fails loudly instead of
-    * silently clobbering it. */
+  /** Every tier save publishes a fresh generation through the pointer
+    * CAS ([[ArtifactStore.publish]]): readers never observe a half-built
+    * or mid-swap artifact, and a build racing an update on the same path
+    * fails loudly instead of silently clobbering it. */
   def build(spark: SparkSession, tpe: String, input: DataFrame,
-            path: String, flags: Map[String, String]): Unit = {
-    import graft.sinks.ArtifactStore
-    val loadedGen = ArtifactStore.currentGen(spark, path)
-    val gen = ArtifactStore.newGenDir(spark, path, loadedGen)
-    buildInto(spark, tpe, input, gen, flags)
-    ArtifactStore.commitGen(spark, path, gen, loadedGen)
-  }
+            path: String, flags: Map[String, String]): Unit =
+    build(spark, tpe, input, path, flags, None)
 
-  private def buildInto(spark: SparkSession, tpe: String, input: DataFrame,
-                        path: String, flags: Map[String, String]): Unit = {
+  /** [[build]] committing against `expected` (a rebuild's pinned
+    * generation — see [[ArtifactStore.Expect]]). */
+  private def build(spark: SparkSession, tpe: String, input: DataFrame,
+                    path: String, flags: Map[String, String],
+                    expected: ArtifactStore.Expect): Unit = {
     def num(k: String, dflt: Int): Int = flags.get(k).map(_.toInt).getOrElse(dflt)
     tpe match {
       case "hybrid" => throw new IllegalArgumentException(
@@ -222,7 +220,7 @@ object IndexTool {
           pqEmbOf(input, flags), "vec_id", "embedding",
           num("dim", 64), num("m", 8), num("k", 16), num("iters", 2),
           num("centroids", 64), attrCols = attrColsOf(flags)),
-          path, num("shards", 4))
+          path, num("shards", 4), expected)
       case "ivfpqr" =>
         // residual-encoded IVFPQ (the production Faiss IndexIVFPQ): PQ
         // quantizes v − centroid(cell), so the codebooks spend their
@@ -241,7 +239,7 @@ object IndexTool {
           pqEmbOf(input, flags), "vec_id", "embedding",
           num("dim", 64), num("m", 8), num("k", 16), num("iters", 2),
           num("centroids", 64), attrCols = attrColsOf(flags)),
-          path, num("shards", 4))
+          path, num("shards", 4), expected)
       case "imi" =>
         // inverted MULTI-index: two half-space codebooks whose product
         // is the cell grid — fit cost n·(kA+kB) for kA·kB cells, the
@@ -318,7 +316,9 @@ object IndexTool {
       case "decontam" =>
         // the "index" IS the held-out eval suite: persist its vectors
         // once, screen every later candidate batch against them
-        embOf(input, flags).coalesce(1).write.mode("overwrite").parquet(path)
+        ArtifactStore.publish(spark, path) { dir =>
+          embOf(input, flags).coalesce(1).write.mode("overwrite").parquet(dir)
+        }
       case "cdc" =>
         // two-surface artifact: serve reads the rollup; the doc-grain
         // chunks surface makes the index removable and the re-ingestion
@@ -415,27 +415,21 @@ object IndexTool {
       col(flags.getOrElse("id-col", "doc_id")).cast(LongType).as("doc_id"))
     def vecIds: DataFrame = input.select(
       col(flags.getOrElse("id-col", "vec_id")).cast(LongType).as("n_id"))
-    // Pin the generation this remove folds onto: loads plan against
-    // `base`, and the commit CAS refuses if the pointer moved meanwhile
-    // (a racing update/remove) — fail loudly, never drop a deletion.
-    import graft.sinks.ArtifactStore
-    val loadedGen = ArtifactStore.currentGen(spark, path)
-    val base = loadedGen.map(g => s"$path/$g").getOrElse(path)
     if (tpe == "ivfflat-sharded") {
       // sharded removals commit per-SHARD generations (only the shards
-      // the removed ids route to are read or rewritten) — the root
+      // the removed ids route to are read or rewritten) — the artifact
       // generation never moves, mirroring the sharded add
-      val touched = Clustering.removeFromIvfFlatSharded(spark, base, vecIds)
+      val touched = Clustering.removeFromIvfFlatSharded(spark, path, vecIds)
       println(s"removed from shards: ${touched.mkString(", ")}")
       return
     }
     if (tpe == "ivfpq-sharded") {
-      val touched = Clustering.removeFromIvfPqSharded(spark, base, vecIds)
+      val touched = Clustering.removeFromIvfPqSharded(spark, path, vecIds)
       println(s"removed from shards: ${touched.mkString(", ")}")
       return
     }
     if (tpe == "ivfpqr-sharded") {
-      val touched = Clustering.removeFromIvfPqrSharded(spark, base, vecIds)
+      val touched = Clustering.removeFromIvfPqrSharded(spark, path, vecIds)
       println(s"removed from shards: ${touched.mkString(", ")}")
       return
     }
@@ -443,71 +437,74 @@ object IndexTool {
       // removal inherently touches every TERM shard (a doc's terms hash
       // across the grid) but only the routed DOC shards; all commit in
       // one atomic pointer transaction
-      val touched = Retrieval.removeFromBm25Sharded(spark, base, docIds)
+      val touched = Retrieval.removeFromBm25Sharded(spark, path, docIds)
       println(s"removed from doc shards: ${touched.mkString(", ")}")
       return
     }
     if (tpe == "lsh-sharded") {
       // a doc's signature rows hash across the whole bucket grid —
       // every shard rewrites (bounded, one atomic transaction)
-      val touched = Dedup.removeFromLshSharded(spark, base,
+      val touched = Dedup.removeFromLshSharded(spark, path,
         docIds.select(col("doc_id").as("id")),
         num("num-hashes", 28), num("bands", 4))
       println(s"removed from shards: ${touched.mkString(", ")}")
       return
     }
     if (tpe == "cdc-sharded") {
-      val touched = Dedup.removeFromCdcSharded(spark, base, docIds)
+      val touched = Dedup.removeFromCdcSharded(spark, path, docIds)
       println(s"removed from shards: ${touched.mkString(", ")}")
       return
     }
     if (tpe == "semdedup-sharded") {
       // vid IS the shard key: only the removed ids' own shards rewrite
-      val touched = Clustering.removeFromSemIndexSharded(spark, base,
+      val touched = Clustering.removeFromSemIndexSharded(spark, path,
         vecIds.select(col("n_id").as("vid")))
       println(s"removed from shards: ${touched.mkString(", ")}")
       return
     }
-    val staging = ArtifactStore.newGenDir(spark, path, loadedGen)
+    // Pin the generation this remove folds onto: loads plan against
+    // `base`, and the commit CAS refuses if the pointer moved meanwhile
+    // (a racing update/remove) — fail loudly, never drop a deletion.
+    val (_, loaded, base) = ArtifactStore.pinGen(spark, path)
+    val expected = Some(loaded)
     tpe match {
       case "lsh" =>
         Dedup.saveLshIndex(Dedup.removeFromLshIndex(
           Dedup.loadLshIndex(spark, base),
           docIds.select(col("doc_id").as("id")),
-          num("num-hashes", 28), num("bands", 4)), staging)
+          num("num-hashes", 28), num("bands", 4)), path, expected)
       case "bm25" =>
         Retrieval.saveBm25Index(Retrieval.removeFromBm25Index(
-          Retrieval.loadBm25Index(spark, base), docIds), staging)
+          Retrieval.loadBm25Index(spark, base), docIds), path, expected)
       case "cdc" =>
         Dedup.saveCdcArtifact(Dedup.removeFromCdcArtifact(
-          Dedup.loadCdcArtifact(spark, base), docIds), staging)
+          Dedup.loadCdcArtifact(spark, base), docIds), path, expected)
       case "ivfflat" =>
         Clustering.saveIvfFlatIndex(Clustering.removeFromIvfFlatIndex(
-          Clustering.loadIvfFlatIndex(spark, base), vecIds), staging)
+          Clustering.loadIvfFlatIndex(spark, base), vecIds), path, expected)
       case "ivfpq" =>
         Clustering.saveIvfPqIndex(Clustering.removeFromIvfPqIndex(
-          Clustering.loadIvfPqIndex(spark, base), vecIds), staging)
+          Clustering.loadIvfPqIndex(spark, base), vecIds), path, expected)
       case "pq" =>
         Clustering.savePqIndex(Clustering.removeFromPqIndex(
-          Clustering.loadPqIndex(spark, base), vecIds), staging)
+          Clustering.loadPqIndex(spark, base), vecIds), path, expected)
       case "semdedup" =>
         Clustering.saveSemIndex(Clustering.removeFromSemIndex(
           Clustering.loadSemIndex(spark, base),
-          vecIds.select(col("n_id").as("vid"))), staging)
+          vecIds.select(col("n_id").as("vid"))), path, expected)
       case "imi" =>
         Clustering.saveImiIndex(Clustering.removeFromImiIndex(
-          Clustering.loadImiIndex(spark, base), vecIds), staging)
+          Clustering.loadImiIndex(spark, base), vecIds), path, expected)
       case "sq" =>
         Clustering.saveSqIndex(Clustering.removeFromSqIndex(
-          Clustering.loadSqIndex(spark, base), vecIds), staging)
+          Clustering.loadSqIndex(spark, base), vecIds), path, expected)
       case "ivfsq" =>
         Clustering.saveIvfSqIndex(Clustering.removeFromIvfSqIndex(
-          Clustering.loadIvfSqIndex(spark, base), vecIds), staging)
+          Clustering.loadIvfSqIndex(spark, base), vecIds), path, expected)
       case "ivfpqr" =>
         Clustering.saveIvfPqrIndex(Clustering.removeFromIvfPqrIndex(
-          Clustering.loadIvfPqrIndex(spark, base), vecIds), staging)
+          Clustering.loadIvfPqrIndex(spark, base), vecIds), path, expected)
     }
-    ArtifactStore.commitGen(spark, path, staging, loadedGen)
   }
 
   /** The SEGMENTED tiers `index-compact` folds back to one segment per
@@ -525,28 +522,27 @@ object IndexTool {
       s"index-compact supports --type=${CompactTypes.toSeq.sorted.mkString("|")} " +
         s"only (got '$tpe'); the vector sharded tiers rewrite whole " +
         s"shards on update, so they never accumulate segments")
-    import graft.sinks.{ArtifactStore, SegmentStore}
-    val loadedGen = ArtifactStore.currentGen(spark, path)
-    val base = loadedGen.map(g => s"$path/$g").getOrElse(path)
-    val roots = segmentedRootsOf(spark, tpe, base)
+    val roots = segmentedRootsOf(spark, tpe, path)
     val before = SegmentStore.liveSegmentCount(spark, roots)
     tpe match {
-      case "bm25-sharded" => Retrieval.compactBm25Sharded(spark, base)
-      case "lsh-sharded" => Dedup.compactLshSharded(spark, base)
-      case "cdc-sharded" => Dedup.compactCdcSharded(spark, base)
+      case "bm25-sharded" => Retrieval.compactBm25Sharded(spark, path)
+      case "lsh-sharded" => Dedup.compactLshSharded(spark, path)
+      case "cdc-sharded" => Dedup.compactCdcSharded(spark, path)
       case "semdedup-sharded" =>
-        Clustering.compactSemIndexSharded(spark, base)
+        Clustering.compactSemIndexSharded(spark, path)
     }
     val after = SegmentStore.liveSegmentCount(spark, roots)
     println(s"compacted: $before -> $after live segments")
     Map("segments_before" -> before, "segments_after" -> after)
   }
 
-  /** Every per-shard generational root of a SEGMENTED artifact (the
-    * dirs whose manifests name live `_seg_*` data). */
-  private[graft] def segmentedRootsOf(spark: SparkSession, tpe: String,
-                                      base: String): Seq[String] = {
-    val n = graft.sinks.ShardedCommit.numShards(spark, base)
+  /** Every per-shard generational root of the live generation of a
+    * SEGMENTED artifact (the dirs whose manifests name live `_seg_*`
+    * data). */
+  private def segmentedRootsOf(spark: SparkSession, tpe: String,
+                               path: String): Seq[String] = {
+    val base = ArtifactStore.resolve(spark, path)
+    val n = ShardedCommit.numShards(spark, base)
     val t = (0 until n).map(sh => s"$base/shards/$sh")
     if (tpe == "bm25-sharded")
       t ++ (0 until n).map(sh => s"$base/docshards/$sh")
@@ -576,9 +572,9 @@ object IndexTool {
         s"sq|ivfsq|pq) have no sharded generation history to preserve — " +
         s"run index-build on the corpus")
     def num(k: String, dflt: Int): Int = flags.get(k).map(_.toInt).getOrElse(dflt)
-    import graft.sinks.ArtifactStore
-    val loadedGen = ArtifactStore.currentGen(spark, path)
-    val base = loadedGen.map(g => s"$path/$g").getOrElse(path)
+    // Pin the generation every rebuild reads and commits against.
+    val (_, loaded, base) = ArtifactStore.pinGen(spark, path)
+    val expected = Some(loaded)
     if (tpe == "ivfpq-sharded" || tpe == "ivfpqr-sharded") {
       // The long-lived PRODUCTION compressed artifacts: drift accumulates
       // on exactly these, and pointing the operator at index-build would
@@ -658,9 +654,7 @@ object IndexTool {
           .filterNot(Set("n_id", "c_id")).mkString(","))
         .filter { case (_, v) => v.nonEmpty }
       val effective = defaults ++ flags
-      val staging = ArtifactStore.newGenDir(spark, path, loadedGen)
-      buildInto(spark, tpe, corpus, staging, effective)
-      ArtifactStore.commitGen(spark, path, staging, loadedGen)
+      build(spark, tpe, corpus, path, effective, expected)
       return Map("skew_x100_before" -> (skew * 100).toLong,
         "centroids" -> effective("centroids").toLong,
         "shards" -> effective("shards").toLong)
@@ -679,9 +673,7 @@ object IndexTool {
       val kB = flags.get("half-centroids-b").map(_.toInt).getOrElse(idx.kB)
       val rebuilt = Clustering.rebuildImiIndex(idx, kA, kB,
         num("iters", Similarity.IvfCoarseIters))
-      val staging = ArtifactStore.newGenDir(spark, path, loadedGen)
-      Clustering.saveImiIndex(rebuilt, staging)
-      ArtifactStore.commitGen(spark, path, staging, loadedGen)
+      Clustering.saveImiIndex(rebuilt, path, expected)
       return Map("skew_x100_before" -> (skew * 100).toLong,
         "half_centroids_a" -> kA.toLong, "half_centroids_b" -> kB.toLong)
     }
@@ -712,18 +704,15 @@ object IndexTool {
       idx.lanes.select(col("cluster")).distinct().count().toInt)
     val rebuilt = Clustering.rebuildIvfFlatIndex(idx,
       centroids, num("iters", Similarity.IvfCoarseIters))
-    val staging = ArtifactStore.newGenDir(spark, path, loadedGen)
     tpe match {
-      case "ivfflat" => Clustering.saveIvfFlatIndex(rebuilt, staging)
+      case "ivfflat" => Clustering.saveIvfFlatIndex(rebuilt, path, expected)
       case _ =>
-        // a fresh ROOT generation holding a complete sharded layout
-        // (lanes + meta + per-shard generational roots), committed by
-        // the ONE root pointer flip below — in-flight serves keep the
-        // displaced generation's whole shard tree
-        Clustering.saveIvfFlatSharded(rebuilt, staging,
-          Clustering.shardedNumShards(spark, base))
+        // a fresh artifact generation holding a complete sharded layout
+        // (lanes + marker + per-shard generational roots) — in-flight
+        // serves keep the displaced generation's whole shard tree
+        Clustering.saveIvfFlatSharded(rebuilt, path,
+          Clustering.shardedNumShards(spark, base), expected)
     }
-    ArtifactStore.commitGen(spark, path, staging, loadedGen)
     Map("skew_x100_before" -> (skew * 100).toLong,
       "centroids" -> centroids.toLong)
   }
@@ -773,8 +762,8 @@ object IndexTool {
 
   /** `index-update`: load the artifact at `path`, fold the delta batch
     * in, and commit a NEW GENERATION via the pointer compare-and-swap
-    * ([[graft.sinks.ArtifactStore.commitGen]] — the artifact never
-    * half-exists, a failed update leaves the old generation serving,
+    * ([[ArtifactStore.publish]] — the artifact never half-exists, a
+    * failed update leaves the old generation serving,
     * and the DISPLACED generation is retained for in-flight readers).
     * CONCURRENCY: serves may run alongside an update; two updates (or
     * an update ∥ remove) racing on the same artifact SERIALIZE or fail
@@ -801,9 +790,8 @@ object IndexTool {
     def num(k: String, dflt: Int): Int = flags.get(k).map(_.toInt).getOrElse(dflt)
     // Pin the generation this update folds onto: loads plan against
     // `base`; the commit CAS refuses if the pointer moved meanwhile.
-    import graft.sinks.ArtifactStore
-    val loadedGen = ArtifactStore.currentGen(spark, path)
-    val base = loadedGen.map(g => s"$path/$g").getOrElse(path)
+    val (_, loaded, base) = ArtifactStore.pinGen(spark, path)
+    val expected = Some(loaded)
     val docTier =
       Set("lsh", "lsh-sharded", "cdc", "cdc-sharded", "bm25",
         "bm25-sharded")(tpe)
@@ -829,7 +817,7 @@ object IndexTool {
       // generation (codebook + shard set) never moves on an add — the
       // rewrite unit at 100 TB is a shard, never the whole postings
       // surface.
-      val touched = Clustering.updateIvfFlatSharded(spark, base,
+      val touched = Clustering.updateIvfFlatSharded(spark, path,
         embAllOf(input, flags), "vec_id", "embedding")
       println(s"updated shards: ${touched.mkString(", ")}")
       return
@@ -838,7 +826,7 @@ object IndexTool {
       // same economics on the production compressed tier: cells + codes
       // of only the touched shards rewrite, swapping together inside
       // each shard's generation
-      val touched = Clustering.updateIvfPqSharded(spark, base,
+      val touched = Clustering.updateIvfPqSharded(spark, path,
         embAllOf(input, flags), "vec_id", "embedding",
         num("dim", 64), num("m", 8))
       println(s"updated shards: ${touched.mkString(", ")}")
@@ -847,9 +835,9 @@ object IndexTool {
     // --mode for the segmented doc/lexical tiers: `append` (default —
     // each touched shard gains one delta-sized immutable segment; the
     // O(delta) write the 100 TB cadence needs) or `merge` (whole-shard
-    // rewrite — the compacting write, also what legacy roots fall back
-    // to automatically). Vector-tier sharded updates ignore it (their
-    // deltas route by id, not by sprayed content hashes).
+    // rewrite — the compacting write). Vector-tier sharded updates
+    // ignore it (their deltas route by id, not by sprayed content
+    // hashes).
     val appendMode = flags.getOrElse("mode", "append") match {
       case "append" => true
       case "merge" => false
@@ -860,7 +848,7 @@ object IndexTool {
       // lexical-tier economics: a crawl delta appends one delta-sized
       // segment per routed term/doc shard (postings + df partials the
       // serve sum-merges) and rewrites the 1-row stats rollup
-      val touched = Retrieval.updateBm25Sharded(spark, base,
+      val touched = Retrieval.updateBm25Sharded(spark, path,
         terms(docsOf(input, flags)), appendMode)
       println(s"updated term shards: ${touched.mkString(", ")}")
       return
@@ -869,7 +857,7 @@ object IndexTool {
       // near-dup-tier economics: the delta's (band, bkey) buckets are
       // re-censused into one shadow-bucket segment per routed shard
       // (masks supersede the buckets' earlier censuses at read)
-      val touched = Dedup.updateLshSharded(spark, base,
+      val touched = Dedup.updateLshSharded(spark, path,
         shingled(docsOf(input, flags), num("shingle-n", 3)),
         num("num-hashes", 28), num("bands", 4), appendMode)
       println(s"updated shards: ${touched.mkString(", ")}")
@@ -878,7 +866,7 @@ object IndexTool {
     if (tpe == "cdc-sharded") {
       // chunk-tier economics: occurrence + rollup-partial segments
       // append to the routed chunk-hash shards, co-swapping per shard
-      val touched = Dedup.updateCdcSharded(spark, base,
+      val touched = Dedup.updateCdcSharded(spark, path,
         docsOf(input, flags), "doc_id", "text", num("avg-mask", 32),
         appendMode)
       println(s"updated shards: ${touched.mkString(", ")}")
@@ -888,14 +876,14 @@ object IndexTool {
       // semantic-tier economics: the delta's vids route to their own
       // assign shards (plain row-append segments — no rollup);
       // lanes/seeds/sizes (the fitted params) never move
-      val touched = Clustering.updateSemIndexSharded(spark, base,
+      val touched = Clustering.updateSemIndexSharded(spark, path,
         embOf(input, flags), "vec_id", "embedding",
         append = appendMode)
       println(s"updated shards: ${touched.mkString(", ")}")
       return
     }
     if (tpe == "ivfpqr-sharded") {
-      val touched = Clustering.updateIvfPqrSharded(spark, base,
+      val touched = Clustering.updateIvfPqrSharded(spark, path,
         embAllOf(input, flags), "vec_id", "embedding",
         num("dim", 64), num("m", 8))
       println(s"updated shards: ${touched.mkString(", ")}")
@@ -922,21 +910,20 @@ object IndexTool {
           s"per-shard rewrite units) or raise --max-rewrite-rows=N " +
           s"deliberately for a one-off")
     }
-    val staging = ArtifactStore.newGenDir(spark, path, loadedGen)
     tpe match {
       case "lsh" =>
         Dedup.saveLshIndex(Dedup.updateLshIndex(
           Dedup.loadLshIndex(spark, base),
           shingled(docsOf(input, flags), num("shingle-n", 3)),
-          num("num-hashes", 28), num("bands", 4)), staging)
+          num("num-hashes", 28), num("bands", 4)), path, expected)
       case "cdc" =>
         Dedup.saveCdcArtifact(Dedup.updateCdcArtifact(
           Dedup.loadCdcArtifact(spark, base), docsOf(input, flags),
-          "doc_id", "text", num("avg-mask", 32)), staging)
+          "doc_id", "text", num("avg-mask", 32)), path, expected)
       case "bm25" =>
         Retrieval.saveBm25Index(Retrieval.updateBm25Index(
           Retrieval.loadBm25Index(spark, base),
-          terms(docsOf(input, flags))), staging)
+          terms(docsOf(input, flags))), path, expected)
       case "ivfflat" =>
         // a filtered-capable artifact carries attribute columns — the
         // delta must supply the same ones (loud select error otherwise)
@@ -949,16 +936,16 @@ object IndexTool {
             col(flags.getOrElse("vec-col", "embedding")).as("embedding") +:
             attrs.map(col): _*)
         Clustering.saveIvfFlatIndex(Clustering.updateIvfFlatIndex(
-          idx0, deltaIn, "vec_id", "embedding"), staging)
+          idx0, deltaIn, "vec_id", "embedding"), path, expected)
       case "semdedup" =>
         Clustering.saveSemIndex(Clustering.updateSemIndex(
           Clustering.loadSemIndex(spark, base),
-          embOf(input, flags), "vec_id", "embedding"), staging)
+          embOf(input, flags), "vec_id", "embedding"), path, expected)
       case "pq" =>
         Clustering.savePqIndex(Clustering.updatePqIndex(
           Clustering.loadPqIndex(spark, base),
           embOf(input, flags), "vec_id", "embedding",
-          num("dim", 64), num("m", 8)), staging)
+          num("dim", 64), num("m", 8)), path, expected)
       case "ivfpq" =>
         // embAllOf: an attr-carrying artifact's fold selects the
         // artifact's attribute columns FROM the delta — embOf would
@@ -966,26 +953,25 @@ object IndexTool {
         Clustering.saveIvfPqIndex(Clustering.updateIvfPqIndex(
           Clustering.loadIvfPqIndex(spark, base),
           embAllOf(input, flags), "vec_id", "embedding",
-          num("dim", 64), num("m", 8)), staging)
+          num("dim", 64), num("m", 8)), path, expected)
       case "imi" =>
         Clustering.saveImiIndex(Clustering.updateImiIndex(
           Clustering.loadImiIndex(spark, base),
-          embOf(input, flags), "vec_id", "embedding"), staging)
+          embOf(input, flags), "vec_id", "embedding"), path, expected)
       case "sq" =>
         Clustering.saveSqIndex(Clustering.updateSqIndex(
           Clustering.loadSqIndex(spark, base),
-          embOf(input, flags), "vec_id", "embedding"), staging)
+          embOf(input, flags), "vec_id", "embedding"), path, expected)
       case "ivfsq" =>
         Clustering.saveIvfSqIndex(Clustering.updateIvfSqIndex(
           Clustering.loadIvfSqIndex(spark, base),
-          embOf(input, flags), "vec_id", "embedding"), staging)
+          embOf(input, flags), "vec_id", "embedding"), path, expected)
       case "ivfpqr" =>
         Clustering.saveIvfPqrIndex(Clustering.updateIvfPqrIndex(
           Clustering.loadIvfPqrIndex(spark, base),
           embAllOf(input, flags), "vec_id", "embedding",
-          num("dim", 64), num("m", 8)), staging)
+          num("dim", 64), num("m", 8)), path, expected)
     }
-    ArtifactStore.commitGen(spark, path, staging, loadedGen)
   }
 
   /** Corpus-size gate on the EXHAUSTIVE serve tiers (flat sq/pq scans,
@@ -1084,50 +1070,30 @@ object IndexTool {
     }
   }
 
-  /** Layout-sniffed ivfflat load: a SHARDED root carries `meta` +
-    * `shards/` beside the shared `lanes`; anything else loads flat.
-    * Used wherever a flag names "an ivfflat artifact" without a type
-    * of its own (`--rerank-from`, the hybrid `--dense-path`) so those
+  /** Whether the artifact at `path` is SHARDED: its live generation
+    * carries the `_num_shards` marker. Used wherever a flag names "an
+    * ivfflat/ivfpq/bm25 artifact" without a type of its own
+    * (`--rerank-from`, the hybrid `--path`/`--dense-path`) so those
     * composites work against either layout — at 100 TB the raw-vector
     * rerank source IS the sharded artifact. */
+  private def isSharded(spark: SparkSession, path: String): Boolean =
+    ShardedCommit.shardCount(spark, ArtifactStore.resolve(spark, path))
+      .isDefined
+
   private def loadFlatAuto(spark: SparkSession, path: String)
-      : Clustering.IvfFlatIndex = {
-    val base = graft.sinks.ArtifactStore.resolve(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$base/shards")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$base/meta")))
-      Clustering.loadIvfFlatSharded(spark, base)
+      : Clustering.IvfFlatIndex =
+    if (isSharded(spark, path)) Clustering.loadIvfFlatSharded(spark, path)
     else Clustering.loadIvfFlatIndex(spark, path)
-  }
 
-  /** [[loadFlatAuto]] for the LEXICAL tier (the hybrid `--path` leg):
-    * a sharded bm25 root carries `meta` + `shards/` where the unsharded
-    * layout has `postings/` at the root. */
   private def loadBm25Auto(spark: SparkSession, path: String)
-      : graft.operators.Bm25Index = {
-    val base = graft.sinks.ArtifactStore.resolve(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$base/shards")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$base/meta")))
-      Retrieval.loadBm25Sharded(spark, base)
+      : graft.operators.Bm25Index =
+    if (isSharded(spark, path)) Retrieval.loadBm25Sharded(spark, path)
     else Retrieval.loadBm25Index(spark, path)
-  }
 
-  /** [[loadFlatAuto]] for the compressed tier (`--dense-path` with
-    * `--dense-type=ivfpq`): a sharded root carries `meta` + `shards/`
-    * beside the shared `coarse`/`pqlanes`. */
   private def loadPqAuto(spark: SparkSession, path: String)
-      : Clustering.IvfPqIndex = {
-    val base = graft.sinks.ArtifactStore.resolve(spark, path)
-    val fs = new org.apache.hadoop.fs.Path(base)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$base/shards")) &&
-        fs.exists(new org.apache.hadoop.fs.Path(s"$base/meta")))
-      Clustering.loadIvfPqSharded(spark, base)
+      : Clustering.IvfPqIndex =
+    if (isSharded(spark, path)) Clustering.loadIvfPqSharded(spark, path)
     else Clustering.loadIvfPqIndex(spark, path)
-  }
 
   /** Opt-out id-parity precheck for the COMPOSITE serves (`--rerank-from`
     * two-stage search, `--type=hybrid` fusion): they read two
@@ -1400,8 +1366,7 @@ object IndexTool {
         // bit-for-bit
         Dedup.incrementalLshPairsIndexed(
             shingled(docsOf(input, flags), num("shingle-n", 3)),
-            Dedup.loadLshSharded(spark,
-              graft.sinks.ArtifactStore.resolve(spark, path)),
+            Dedup.loadLshSharded(spark, path),
             num("num-hashes", 28), num("bands", 4), dbl("threshold", 0.6))
           .orderBy(col("new_doc"), col("dup_of"))
       case "ivf" =>
@@ -1431,8 +1396,7 @@ object IndexTool {
         // partition pruning. --filter-col/--filter-val work exactly as
         // on the unsharded serve: attrs ride every shard surface, and
         // the predicate composes into each shard's pruned scan
-        serveFlatMaybeFiltered(Clustering.loadIvfFlatSharded(spark,
-              graft.sinks.ArtifactStore.resolve(spark, path)),
+        serveFlatMaybeFiltered(Clustering.loadIvfFlatSharded(spark, path),
             embOf(input, flags), flags)
           .orderBy(col("q_id"), col("rank"))
       case "imi" =>
@@ -1457,8 +1421,7 @@ object IndexTool {
         // reproduces the single-artifact ADC serve bit-for-bit (equal
         // surface sets, deterministic rank); same --rerank-from /
         // --filter-col contracts as the unsharded verb
-        servePqMaybeRerank(spark, Clustering.loadIvfPqSharded(spark,
-              graft.sinks.ArtifactStore.resolve(spark, path)),
+        servePqMaybeRerank(spark, Clustering.loadIvfPqSharded(spark, path),
             embOf(input, flags), flags)
           .orderBy(col("q_id"), col("rank"))
       case "pq" =>
@@ -1496,8 +1459,7 @@ object IndexTool {
             embOf(input, flags), flags)
           .orderBy(col("q_id"), col("rank"))
       case "ivfpqr-sharded" =>
-        servePqrMaybeRerank(spark, Clustering.loadIvfPqrSharded(spark,
-              graft.sinks.ArtifactStore.resolve(spark, path)),
+        servePqrMaybeRerank(spark, Clustering.loadIvfPqrSharded(spark, path),
             embOf(input, flags), flags)
           .orderBy(col("q_id"), col("rank"))
       case "hybrid" =>
@@ -1513,8 +1475,7 @@ object IndexTool {
       case "bm25-sharded" =>
         // per-shard surfaces unioned — equal posting/df/len/stats sets,
         // so the ranking reproduces the unsharded serve bit-for-bit
-        serveBm25(Retrieval.loadBm25Sharded(spark,
-              graft.sinks.ArtifactStore.resolve(spark, path)),
+        serveBm25(Retrieval.loadBm25Sharded(spark, path),
             docsOf(input, flags), flags)
           .orderBy(col("q_id"), col("rank"))
       case "unigram" =>
@@ -1527,14 +1488,13 @@ object IndexTool {
           .orderBy(col("pruned"))
       case "semdedup-sharded" =>
         Clustering.semDedupDeltaHier(embOf(input, flags), "vec_id",
-            "embedding", Clustering.loadSemIndexSharded(spark,
-              graft.sinks.ArtifactStore.resolve(spark, path)),
+            "embedding", Clustering.loadSemIndexSharded(spark, path),
             dbl("threshold", 0.999))
           .orderBy(col("pruned"))
       case "decontam" =>
         Similarity.semanticDecontam(embOf(input, flags),
             spark.read.parquet(
-              graft.sinks.ArtifactStore.resolve(spark, path)),
+              ArtifactStore.resolve(spark, path)),
             "vec_id", "embedding", dbl("threshold", 0.4))
           .orderBy(col("contaminated"))
       case "cdc" =>
@@ -1544,8 +1504,7 @@ object IndexTool {
           .orderBy(col("new_doc"))
       case "cdc-sharded" =>
         Dedup.incrementalCdcMatches(docsOf(input, flags),
-            Dedup.loadCdcSharded(spark,
-              graft.sinks.ArtifactStore.resolve(spark, path)).rollup,
+            Dedup.loadCdcSharded(spark, path).rollup,
             "doc_id", "text", num("avg-mask", 32))
           .orderBy(col("new_doc"))
       case "wordpiece" =>
@@ -1613,14 +1572,18 @@ object IndexTool {
     require(Types(tpe),
       s"unknown index type '$tpe' (expected ${Types.toSeq.sorted.mkString("|")})")
     def rows(p: String): Long = spark.read.parquet(
-      graft.sinks.ArtifactStore.resolve(spark, p)).count()
-    // Generation health first (versioned layout only): orphaned
+      ArtifactStore.resolve(spark, p)).count()
+    def shards: (String, Long) = "shards" ->
+      ShardedCommit.numShards(spark, ArtifactStore.resolve(spark, path)).toLong
+    def liveSegments: (String, Long) = "live_segments" ->
+      SegmentStore.liveSegmentCount(spark, segmentedRootsOf(spark, tpe, path))
+    // Generation health first: orphaned
     // generations are a crashed/raced writer's leftovers (or the one
     // retained displaced generation) — detected here, swept by the next
     // successful commit. A lingering commit claim means a writer is
     // mid-flip or crashed inside the (milliseconds-wide) CAS window.
     val genCounters: Seq[(String, Long)] =
-      graft.sinks.ArtifactStore.generationReport(spark, path) match {
+      ArtifactStore.generationReport(spark, path) match {
         case None => Seq.empty
         case Some((cur, orphans, claimed)) =>
           if (orphans.nonEmpty) println(
@@ -1631,7 +1594,7 @@ object IndexTool {
               s"sweeps them)")
           if (claimed) println(
             s"WARNING: commit claim present at $path/" +
-              s"${graft.sinks.ArtifactStore.ClaimFile} — a commit is in " +
+              s"${ArtifactStore.ClaimFile} — a commit is in " +
               s"flight, or a writer crashed mid-flip (safe to delete " +
               s"after confirming no writer is running)")
           Seq("generations" -> (orphans.length + 1L),
@@ -1647,16 +1610,12 @@ object IndexTool {
         Seq("signature_rows" -> a.getLong(0), "docs" -> a.getLong(1),
           "bands" -> a.getLong(2))
       case "lsh-sharded" =>
-        val base = graft.sinks.ArtifactStore.resolve(spark, path)
-        val a = Dedup.loadLshSharded(spark, base)
+        val a = Dedup.loadLshSharded(spark, path)
           .agg(count(lit(1)), countDistinct(col("id")),
             countDistinct(col("band"))).head()
-        Seq("shards" ->
-            graft.sinks.ShardedCommit.numShards(spark, base).toLong,
+        Seq(shards,
           "signature_rows" -> a.getLong(0), "docs" -> a.getLong(1),
-          "bands" -> a.getLong(2),
-          "live_segments" -> graft.sinks.SegmentStore.liveSegmentCount(
-            spark, segmentedRootsOf(spark, tpe, base)))
+          "bands" -> a.getLong(2), liveSegments)
       case "cdc" =>
         // coalesce: sum over an EMPTY artifact is null, and describe is
         // exactly the verb an operator points at a degenerate index
@@ -1668,18 +1627,15 @@ object IndexTool {
           "chunk_occurrences" -> agg.getLong(1),
           "docs" -> art.chunks.select(col("doc_id")).distinct().count())
       case "cdc-sharded" =>
-        val base = graft.sinks.ArtifactStore.resolve(spark, path)
-        val art = Dedup.loadCdcSharded(spark, base)
+        val art = Dedup.loadCdcSharded(spark, path)
         val agg = art.rollup
           .agg(count(lit(1)),
             coalesce(sum(col("n_occ")), lit(0L)).as("occ")).head()
-        Seq("shards" ->
-            graft.sinks.ShardedCommit.numShards(spark, base).toLong,
+        Seq(shards,
           "unique_chunks" -> agg.getLong(0),
           "chunk_occurrences" -> agg.getLong(1),
           "docs" -> art.chunks.select(col("doc_id")).distinct().count(),
-          "live_segments" -> graft.sinks.SegmentStore.liveSegmentCount(
-            spark, segmentedRootsOf(spark, tpe, base)))
+          liveSegments)
       case "bm25" =>
         val idx = Retrieval.loadBm25Index(spark, path)
         val st = idx.stats.head()
@@ -1688,19 +1644,16 @@ object IndexTool {
           "vocab_terms" -> idx.docfreq.count(),
           "total_tokens" -> st.getAs[Long]("total_len"))
       case "bm25-sharded" =>
-        val base = graft.sinks.ArtifactStore.resolve(spark, path)
-        val idx = Retrieval.loadBm25Sharded(spark, base)
+        val idx = Retrieval.loadBm25Sharded(spark, path)
         val st = idx.stats.head()
-        Seq("shards" -> Retrieval.shardedNumShards(spark, base).toLong,
+        Seq(shards,
           "posting_rows" -> idx.postings.count(),
           "docs" -> idx.doclen.count(),
           "vocab_terms" -> idx.docfreq.count(),
           "total_tokens" -> st.getAs[Long]("total_len"),
-          "live_segments" -> graft.sinks.SegmentStore.liveSegmentCount(
-            spark, segmentedRootsOf(spark, tpe, base)))
+          liveSegments)
       case "ivf" =>
-        val lanes = spark.read.parquet(
-          graft.sinks.ArtifactStore.resolve(spark, path))
+        val lanes = spark.read.parquet(ArtifactStore.resolve(spark, path))
         Seq("centroids" -> lanes.select(col("cluster")).distinct().count(),
           "dim" -> lanes.select(col("pos")).distinct().count())
       case "ivfflat" =>
@@ -1722,14 +1675,13 @@ object IndexTool {
           "occupancy_skew_x100" -> (if (st.getLong(1) == 0L) 0L
             else st.getLong(2) * st.getLong(0) * 100L / st.getLong(1)))
       case "ivfflat-sharded" =>
-        val base = graft.sinks.ArtifactStore.resolve(spark, path)
-        val idx = Clustering.loadIvfFlatSharded(spark, base)
+        val idx = Clustering.loadIvfFlatSharded(spark, path)
         val st = idx.postings.groupBy(col("c_id")).count()
           .agg(count(lit(1)), coalesce(sum(col("count")), lit(0L)),
             coalesce(max(col("count")), lit(0L))).head()
         Seq("centroids" ->
             idx.lanes.select(col("cluster")).distinct().count(),
-          "shards" -> Clustering.shardedNumShards(spark, base).toLong,
+          shards,
           "vectors" -> st.getLong(1),
           "occupied_cells" -> st.getLong(0),
           "largest_cell" -> st.getLong(2),
@@ -1761,14 +1713,13 @@ object IndexTool {
           "codebook_k" ->
             idx.pqLanes.select(col("code")).distinct().count())
       case "ivfpq-sharded" | "ivfpqr-sharded" =>
-        val base = graft.sinks.ArtifactStore.resolve(spark, path)
-        val idx = Clustering.loadIvfPqSharded(spark, base)
+        val idx = Clustering.loadIvfPqSharded(spark, path)
         val st = idx.cells.groupBy(col("c_id")).count()
           .agg(count(lit(1)), coalesce(sum(col("count")), lit(0L)),
             coalesce(max(col("count")), lit(0L))).head()
         Seq("centroids" ->
             idx.coarseLanes.select(col("cluster")).distinct().count(),
-          "shards" -> Clustering.shardedNumShards(spark, base).toLong,
+          shards,
           "vectors" -> st.getLong(1),
           "occupied_cells" -> st.getLong(0),
           "largest_cell" -> st.getLong(2),
@@ -1825,22 +1776,19 @@ object IndexTool {
           "assigned_rows" -> idx.assign.count(),
           "fine_clusters" -> idx.sizes.count())
       case "semdedup-sharded" =>
-        val base = graft.sinks.ArtifactStore.resolve(spark, path)
-        val idx = Clustering.loadSemIndexSharded(spark, base)
-        Seq("shards" ->
-            graft.sinks.ShardedCommit.numShards(spark, base).toLong,
+        val idx = Clustering.loadSemIndexSharded(spark, path)
+        Seq(shards,
           "coarse_k" -> idx.coarseK.toLong,
           "cluster_cap" -> idx.clusterCap,
           "fine_seeds" -> idx.seeds.count(),
           "assigned_rows" -> idx.assign.count(),
           "fine_clusters" -> idx.sizes.count(),
-          "live_segments" -> graft.sinks.SegmentStore.liveSegmentCount(
-            spark, segmentedRootsOf(spark, tpe, base)))
+          liveSegments)
       case "bpe" => Seq("merges" -> rows(path))
       case "unigram" => Seq("vocab_pieces" -> rows(path))
       case "wordpiece" =>
         val v = spark.read.parquet(
-          graft.sinks.ArtifactStore.resolve(spark, path))
+          ArtifactStore.resolve(spark, path))
         Seq("vocab_pieces" -> v.count(),
           "continuation_pieces" -> v.filter(col("is_cont")).count())
       case "decontam" => Seq("eval_vectors" -> rows(path))
@@ -1869,7 +1817,7 @@ object IndexTool {
               s"supported: ${(UpdateTypes ++ RemoveTypes).toSeq.sorted
                 .mkString("|")})")
           existingIds(spark, t,
-            graft.sinks.ArtifactStore.resolve(spark, p)).distinct()
+            ArtifactStore.resolve(spark, p)).distinct()
         }
         val here = idsOf(tpe, path)
         val there = idsOf(pairTpe, pairPath)
@@ -1981,8 +1929,7 @@ object IndexTool {
         // serve == the batch verb
         graft.streaming.StreamingCells.lshServeStream(
           docsOf(stream, flags), "doc_id", "text",
-          Dedup.loadLshSharded(spark,
-            graft.sinks.ArtifactStore.resolve(spark, path)),
+          Dedup.loadLshSharded(spark, path),
           num("shingle-n", 3), num("num-hashes", 28), num("bands", 4),
           dbl("threshold", 0.6))(sink)
       case "semdedup" =>
@@ -1993,14 +1940,13 @@ object IndexTool {
       case "semdedup-sharded" =>
         graft.streaming.StreamingCells.semDedupServeStream(
           embOf(stream, flags), "vec_id", "embedding",
-          Clustering.loadSemIndexSharded(spark,
-            graft.sinks.ArtifactStore.resolve(spark, path)),
+          Clustering.loadSemIndexSharded(spark, path),
           dbl("threshold", 0.999))(sink)
       case "decontam" =>
         graft.streaming.StreamingCells.decontamServeStream(
           embOf(stream, flags), "vec_id", "embedding",
           spark.read.parquet(
-            graft.sinks.ArtifactStore.resolve(spark, path)),
+            ArtifactStore.resolve(spark, path)),
           dbl("threshold", 0.4))(sink)
       case "cdc" =>
         val idx = Dedup.loadCdcArtifact(spark, path).rollup
@@ -2010,8 +1956,7 @@ object IndexTool {
               num("avg-mask", 32)), batchId)
         }
       case "cdc-sharded" =>
-        val idx = Dedup.loadCdcSharded(spark,
-          graft.sinks.ArtifactStore.resolve(spark, path)).rollup
+        val idx = Dedup.loadCdcSharded(spark, path).rollup
         docsOf(stream, flags).writeStream.foreachBatch {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(Dedup.incrementalCdcMatches(batch, idx, "doc_id", "text",
@@ -2037,8 +1982,7 @@ object IndexTool {
       case "ivfflat-sharded" =>
         // shard union loaded once; per-batch serve == the batch verb
         // (including the filtered form)
-        val idx = Clustering.loadIvfFlatSharded(spark,
-          graft.sinks.ArtifactStore.resolve(spark, path))
+        val idx = Clustering.loadIvfFlatSharded(spark, path)
         embOf(stream, flags).writeStream.foreachBatch {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(serveFlatMaybeFiltered(idx, batch, flags), batchId)
@@ -2098,8 +2042,7 @@ object IndexTool {
             sink(servePqrMaybeRerank(spark, idx, batch, flags), batchId)
         }
       case "ivfpqr-sharded" =>
-        val idx = Clustering.loadIvfPqrSharded(spark,
-          graft.sinks.ArtifactStore.resolve(spark, path))
+        val idx = Clustering.loadIvfPqrSharded(spark, path)
         embOf(stream, flags).writeStream.foreachBatch {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(servePqrMaybeRerank(spark, idx, batch, flags), batchId)
@@ -2116,8 +2059,7 @@ object IndexTool {
             sink(servePqMaybeRerank(spark, idx, batch, flags), batchId)
         }
       case "ivfpq-sharded" =>
-        val idx = Clustering.loadIvfPqSharded(spark,
-          graft.sinks.ArtifactStore.resolve(spark, path))
+        val idx = Clustering.loadIvfPqSharded(spark, path)
         embOf(stream, flags).writeStream.foreachBatch {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(servePqMaybeRerank(spark, idx, batch, flags), batchId)
@@ -2129,8 +2071,7 @@ object IndexTool {
             sink(serveBm25(idx, batch, flags), batchId)
         }
       case "bm25-sharded" =>
-        val idx = Retrieval.loadBm25Sharded(spark,
-          graft.sinks.ArtifactStore.resolve(spark, path))
+        val idx = Retrieval.loadBm25Sharded(spark, path)
         docsOf(stream, flags).writeStream.foreachBatch {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(serveBm25(idx, batch, flags), batchId)

@@ -305,8 +305,10 @@ object Bpe {
   def saveMerges(merges: Seq[Merge], spark: org.apache.spark.sql.SparkSession,
                  path: String): Unit = {
     import spark.implicits._
-    merges.toDF("step", "lhs", "rhs", "cnt")
-      .coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).parquet(path)
+    graft.sinks.ArtifactStore.publish(spark, path) { dir =>
+      merges.toDF("step", "lhs", "rhs", "cnt")
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+    }
   }
 
   def loadMerges(spark: org.apache.spark.sql.SparkSession,

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.functions.TextFunctions.hash28
 import graft.functions.VectorFunctions.scaled
+import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
 
 /** Distributed k-means (Lloyd's) over embedding columns — the corpus
   * topic-clustering step of a training-data pipeline (cluster-balanced
@@ -479,30 +480,32 @@ object Clustering {
     * past `seedLiteralCap` is precisely one whose seeds are too big to
     * collect), so a `coalesce(1)` there would re-create the single-task
     * bottleneck the fallback exists to avoid. */
-  def saveSemIndex(idx: SemIndex, path: String): Unit = {
+  def saveSemIndex(idx: SemIndex, path: String,
+                   expected: ArtifactStore.Expect = None): Unit = {
     val spark = idx.lanes.sparkSession
     import spark.implicits._
     // five independent surface writes, overlapped (guide §2.6); they
     // share the fit's persisted sv ancestor, so no duplicated lineage
-    concurrentWrites(Seq(
-      idx.assign -> ((df: DataFrame) => df.write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-        .parquet(s"$path/assign")),
-      idx.lanes -> ((df: DataFrame) => df.coalesce(1)
-        .write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).parquet(s"$path/lanes")),
-      idx.seeds -> ((df: DataFrame) => df.write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-        .parquet(s"$path/seeds")),
-      idx.sizes -> ((df: DataFrame) => df.write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-        .parquet(s"$path/sizes")),
-      Seq((idx.coarseK, idx.clusterCap, idx.salt))
-        .toDF("coarse_k", "cluster_cap", "salt") ->
-        ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-          .parquet(s"$path/meta"))))
+    ArtifactStore.publish(spark, path, expected) { dir =>
+      concurrentWrites(Seq(
+        idx.assign -> ((df: DataFrame) =>
+          df.write.mode("overwrite").parquet(s"$dir/assign")),
+        idx.lanes -> ((df: DataFrame) =>
+          df.coalesce(1).write.mode("overwrite").parquet(s"$dir/lanes")),
+        idx.seeds -> ((df: DataFrame) =>
+          df.write.mode("overwrite").parquet(s"$dir/seeds")),
+        idx.sizes -> ((df: DataFrame) =>
+          df.write.mode("overwrite").parquet(s"$dir/sizes")),
+        Seq((idx.coarseK, idx.clusterCap, idx.salt))
+          .toDF("coarse_k", "cluster_cap", "salt") ->
+          ((df: DataFrame) =>
+            df.coalesce(1).write.mode("overwrite").parquet(s"$dir/meta"))))
+    }
   }
 
   def loadSemIndex(spark: org.apache.spark.sql.SparkSession,
                    p0: String): SemIndex = {
-    // versioned-artifact pointer when present (CLI layout), flat otherwise
-    val path = graft.sinks.ArtifactStore.resolve(spark, p0)
+    val path = ArtifactStore.resolve(spark, p0)
     val meta = spark.read.parquet(s"$path/meta").head()
     SemIndex(spark.read.parquet(s"$path/lanes"),
       spark.read.parquet(s"$path/seeds"),
@@ -519,12 +522,12 @@ object Clustering {
   // surface WHOLESALE per delta. Here `assign` shards by `vid mod S`
   // into independent generational roots; the BOUNDED fitted parameters
   // (lanes ≤ MaxCentroids, seeds/sizes ∝ n/targetRows, 1-row meta) stay
-  // at the root and never move on an add/remove — exactly the Faiss
-  // train/add split made physical:
+  // beside them in the artifact generation and never move on an
+  // add/remove — exactly the Faiss train/add split made physical:
   //
-  //   path/meta/                      (num_shards, coarse_k, cluster_cap, salt)
-  //   path/lanes/ seeds/ sizes/       the fitted parameters (build-time)
-  //   path/shards/<s>/_gen_*/assign/  (vid, v, nrm, cluster, cell), vid mod S == s
+  //   <gen>/_num_shards, <gen>/meta/  S; (coarse_k, cluster_cap, salt)
+  //   <gen>/lanes/ seeds/ sizes/      the fitted parameters (build-time)
+  //   <gen>/shards/<s>/_seg_*/assign/ (vid, v, nrm, cluster, cell), vid mod S == s
   //
   // An add rewrites only the shards its vids route to; a REMOVE routes
   // the same way (vid is the shard key — unlike the doc-tier grids,
@@ -539,46 +542,47 @@ object Clustering {
 
   def saveSemIndexSharded(idx: SemIndex, path: String,
                           numShards: Int): Unit = {
-    require(numShards > 0, s"numShards must be positive: $numShards")
     val spark = idx.lanes.sparkSession
-    import graft.sinks.{ArtifactStore, ShardedCommit}
     import spark.implicits._
-    concurrentWrites(Seq(
-      idx.lanes -> ((df: DataFrame) => df.coalesce(1)
-        .write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).parquet(s"$path/lanes")),
-      idx.seeds -> ((df: DataFrame) => df.write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-        .parquet(s"$path/seeds")),
-      idx.sizes -> ((df: DataFrame) => df.write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-        .parquet(s"$path/sizes")),
-      Seq((numShards, idx.coarseK, idx.clusterCap, idx.salt))
-        .toDF("num_shards", "coarse_k", "cluster_cap", "salt") ->
-        ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-          .parquet(s"$path/meta"))))
-    ShardedCommit.writeMetaMarker(spark, path, numShards)
-    val assign = assignCols(idx.assign).withColumn("shard", vidShard(numShards))
-    ShardedCommit.commitSegmented(spark, path, Seq(ShardedCommit.SegFamily(
-      (0 until numShards).map(sh =>
-        sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh")),
-      Seq(ShardedCommit.Surface("assign", assign,
-        () => assign.limit(0).drop("shard"))),
-      ShardedCommit.SegReplace)))
+    ArtifactStore.publish(spark, path) { dir =>
+      ShardedCommit.writeNumShards(spark, dir, numShards)
+      concurrentWrites(Seq(
+        idx.lanes -> ((df: DataFrame) =>
+          df.coalesce(1).write.mode("overwrite").parquet(s"$dir/lanes")),
+        idx.seeds -> ((df: DataFrame) =>
+          df.write.mode("overwrite").parquet(s"$dir/seeds")),
+        idx.sizes -> ((df: DataFrame) =>
+          df.write.mode("overwrite").parquet(s"$dir/sizes")),
+        Seq((idx.coarseK, idx.clusterCap, idx.salt))
+          .toDF("coarse_k", "cluster_cap", "salt") ->
+          ((df: DataFrame) =>
+            df.coalesce(1).write.mode("overwrite").parquet(s"$dir/meta"))))
+      val assign =
+        assignCols(idx.assign).withColumn("shard", vidShard(numShards))
+      ShardedCommit.commitSegmented(spark, dir, Seq(ShardedCommit.SegFamily(
+        (0 until numShards).map(sh =>
+          sh -> ArtifactStore.pinGen(spark, s"$dir/shards/$sh")),
+        Seq(ShardedCommit.Surface("assign", assign,
+          () => assign.limit(0).drop("shard"))),
+        ShardedCommit.SegReplace)))
+    }
   }
 
-  /** Load as a regular [[SemIndex]] — fitted parameters from the root,
-    * `assign` as ONE multi-path scan over the live shard generations —
-    * so every serve path ([[semDedupHierServe]], [[semDedupDeltaHier]])
-    * is shared with the unsharded artifact. */
+  /** Load as a regular [[SemIndex]] — fitted parameters from the live
+    * generation, `assign` as ONE multi-path scan over the live shard
+    * segments — so every serve path ([[semDedupHierServe]],
+    * [[semDedupDeltaHier]]) is shared with the unsharded artifact. */
   def loadSemIndexSharded(spark: org.apache.spark.sql.SparkSession,
-                          path: String): SemIndex = {
-    import graft.sinks.{ArtifactStore, ShardedCommit}
+                          root: String): SemIndex = {
+    val path = ArtifactStore.resolve(spark, root)
     val n = ShardedCommit.numShards(spark, path)
     val meta = spark.read.parquet(s"$path/meta").head()
     SemIndex(spark.read.parquet(s"$path/lanes"),
       spark.read.parquet(s"$path/seeds"),
       spark.read.parquet((0 until n).flatMap { sh =>
-        val root = s"$path/shards/$sh"
-        graft.sinks.SegmentStore.surfacePathsAt(spark, root,
-          ArtifactStore.resolve(spark, root), "assign") }: _*),
+        val shardRoot = s"$path/shards/$sh"
+        SegmentStore.surfacePathsAt(spark, shardRoot,
+          ArtifactStore.resolve(spark, shardRoot), "assign") }: _*),
       spark.read.parquet(s"$path/sizes"),
       meta.getAs[Int]("coarse_k"), meta.getAs[Long]("cluster_cap"),
       meta.getAs[String]("salt"))
@@ -588,19 +592,18 @@ object Clustering {
     * gains one DELTA-SIZED `assign` segment — vids are NEW by the
     * disjoint contract and assign rows are per-vid (no rollup), so a
     * plain row append IS the exact merge and the write volume is
-    * O(delta). `append = false` is the round-17 whole-shard merge —
-    * now the compacting write, and the automatic fallback on legacy
-    * (unsegmented) roots. The assignment chain, the fixed-parameters
+    * O(delta). `append = false` is the whole-shard merge — the
+    * compacting write. The assignment chain, the fixed-parameters
     * contract, and the loss checks are [[updateSemIndex]]'s exactly
     * ([[checkedDeltaCells]] is shared); only the persistence unit
     * changes. Returns the touched shard ids. */
   def updateSemIndexSharded(spark: org.apache.spark.sql.SparkSession,
-                            path: String, delta: DataFrame,
+                            root: String, delta: DataFrame,
                             idCol: String, vecCol: String,
                             seedLiteralCap: Int = Similarity.MaxCentroids,
                             append: Boolean = true)
       : Seq[Int] = {
-    import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
+    val path = ArtifactStore.resolve(spark, root)
     val n = ShardedCommit.numShards(spark, path)
     val idx = loadSemIndexSharded(spark, path)
     val cells = checkedDeltaCells(idx, delta, idCol, vecCol, seedLiteralCap)
@@ -609,10 +612,8 @@ object Clustering {
     if (touched.isEmpty) return touched
     val pinned = touched.map(sh =>
       sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
-    val anyLegacy = pinned.exists { case (_, (_, _, gen)) =>
-      SegmentStore.readManifest(spark, gen).isEmpty }
     val (rows, mode) =
-      if (append && !anyLegacy)
+      if (append)
         (assignCols(cells), ShardedCommit.SegAppend)
       else {
         val merged = spark.read.parquet(
@@ -637,8 +638,8 @@ object Clustering {
     * read-amplification reset after append-mode adds (assign rows
     * re-persist as-is; there is no rollup to merge). */
   def compactSemIndexSharded(spark: org.apache.spark.sql.SparkSession,
-                             path: String): Seq[Int] = {
-    import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
+                             root: String): Seq[Int] = {
+    val path = ArtifactStore.resolve(spark, root)
     val n = ShardedCommit.numShards(spark, path)
     val all = (0 until n).toSeq
     val pinned = all.map(sh =>
@@ -662,9 +663,9 @@ object Clustering {
     * roots; the doc-tier grids can't route removals this tightly). A
     * SEGMENT-COMPACTING write for the touched shards. */
   def removeFromSemIndexSharded(spark: org.apache.spark.sql.SparkSession,
-                                path: String, removedIds: DataFrame)
+                                root: String, removedIds: DataFrame)
       : Seq[Int] = {
-    import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
+    val path = ArtifactStore.resolve(spark, root)
     val n = ShardedCommit.numShards(spark, path)
     val ids = OperatorCaches.register(
       removedIds.select(col("vid")).distinct().persist())
@@ -1151,16 +1152,19 @@ object Clustering {
   /** Persist a [[PqIndex]] as two parquet tables. The codes table is the
     * corpus-sized side (m rows per vector) and keeps its partitioning;
     * the codebooks are k·m·subDim rows — one file. */
-  def savePqIndex(idx: PqIndex, path: String): Unit =
-    concurrentWrites(Seq(
-      idx.codes -> ((df: DataFrame) => df.write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-        .parquet(s"$path/codes")),
-      idx.lanes -> ((df: DataFrame) => df.coalesce(1)
-        .write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).parquet(s"$path/lanes"))))
+  def savePqIndex(idx: PqIndex, path: String,
+                  expected: ArtifactStore.Expect = None): Unit =
+    ArtifactStore.publish(idx.codes.sparkSession, path, expected) { dir =>
+      concurrentWrites(Seq(
+        idx.codes -> ((df: DataFrame) => df.write.mode("overwrite")
+          .parquet(s"$dir/codes")),
+        idx.lanes -> ((df: DataFrame) => df.coalesce(1)
+          .write.mode("overwrite").parquet(s"$dir/lanes"))))
+    }
 
   def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
                   p0: String): PqIndex = {
-    val path = graft.sinks.ArtifactStore.resolve(spark, p0)
+    val path = ArtifactStore.resolve(spark, p0)
     PqIndex(spark.read.parquet(s"$path/codes"),
       spark.read.parquet(s"$path/lanes"))
   }
@@ -1496,18 +1500,21 @@ object Clustering {
 
   /** Persist: dim-bounded lanes funnel to one file; the codes keep
     * their partitioning (the corpus-sized surface). */
-  def saveSqIndex(idx: SqIndex, path: String): Unit =
-    concurrentWrites(Seq(
-      idx.lanes.select(col("d"), col("lo"), col("hi")) ->
-        ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-          .parquet(s"$path/lanes")),
-      idx.codes.select(col("n_id"), col("code")) ->
-        ((df: DataFrame) => df.write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-          .parquet(s"$path/codes"))))
+  def saveSqIndex(idx: SqIndex, path: String,
+                  expected: ArtifactStore.Expect = None): Unit =
+    ArtifactStore.publish(idx.codes.sparkSession, path, expected) { dir =>
+      concurrentWrites(Seq(
+        idx.lanes.select(col("d"), col("lo"), col("hi")) ->
+          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
+            .parquet(s"$dir/lanes")),
+        idx.codes.select(col("n_id"), col("code")) ->
+          ((df: DataFrame) => df.write.mode("overwrite")
+            .parquet(s"$dir/codes"))))
+    }
 
   def loadSqIndex(spark: org.apache.spark.sql.SparkSession,
                   p0: String): SqIndex = {
-    val path = graft.sinks.ArtifactStore.resolve(spark, p0)
+    val path = ArtifactStore.resolve(spark, p0)
     SqIndex(spark.read.parquet(s"$path/lanes"),
       spark.read.parquet(s"$path/codes"))
   }
@@ -1649,23 +1656,26 @@ object Clustering {
   /** Persist: both fitted surfaces funnel to one file each (bounded);
     * codes get the inverted-list directory layout the serve-time
     * partition filter prunes. */
-  def saveIvfSqIndex(idx: IvfSqIndex, path: String): Unit =
-    concurrentWrites(Seq(
-      idx.coarseLanes.select(col("cluster"), col("pos"), col("cval"),
-        col("n")) ->
-        ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-          .parquet(s"$path/lanes")),
-      idx.sqLanes.select(col("d"), col("lo"), col("hi")) ->
-        ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-          .parquet(s"$path/sqlanes")),
-      idx.codes.select(col("n_id"), col("code"), col("c_id")) ->
-        ((df: DataFrame) => df.repartition(writePar(df), col("c_id"))
-          .write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).partitionBy("c_id")
-          .parquet(s"$path/codes"))))
+  def saveIvfSqIndex(idx: IvfSqIndex, path: String,
+                     expected: ArtifactStore.Expect = None): Unit =
+    ArtifactStore.publish(idx.codes.sparkSession, path, expected) { dir =>
+      concurrentWrites(Seq(
+        idx.coarseLanes.select(col("cluster"), col("pos"), col("cval"),
+          col("n")) ->
+          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
+            .parquet(s"$dir/lanes")),
+        idx.sqLanes.select(col("d"), col("lo"), col("hi")) ->
+          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
+            .parquet(s"$dir/sqlanes")),
+        idx.codes.select(col("n_id"), col("code"), col("c_id")) ->
+          ((df: DataFrame) => df.repartition(writePar(df), col("c_id"))
+            .write.mode("overwrite").partitionBy("c_id")
+            .parquet(s"$dir/codes"))))
+    }
 
   def loadIvfSqIndex(spark: org.apache.spark.sql.SparkSession,
                      p0: String): IvfSqIndex = {
-    val path = graft.sinks.ArtifactStore.resolve(spark, p0)
+    val path = ArtifactStore.resolve(spark, p0)
     IvfSqIndex(spark.read.parquet(s"$path/lanes"),
       spark.read.parquet(s"$path/sqlanes"),
       spark.read.parquet(s"$path/codes")
@@ -1898,27 +1908,30 @@ object Clustering {
   /** Persist/load: the [[IvfPqIndex]] layout (bounded codebooks funnel
     * to one file each; cells get the inverted-list directory layout;
     * codes stay n_id-keyed). */
-  def saveIvfPqrIndex(idx: IvfPqrIndex, path: String): Unit =
-    concurrentWrites(Seq(
-      idx.coarseLanes.select(col("cluster"), col("pos"), col("cval"),
-        col("n")) ->
-        ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-          .parquet(s"$path/coarse")),
-      idx.pqLanes.select(col("s"), col("code"), col("pos"), col("cval")) ->
-        ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-          .parquet(s"$path/pqlanes")),
-      idx.cells.select(col("n_id") +: cellsAttrCols(idx.cells).map(col) :+
-        col("c_id"): _*) ->
-        ((df: DataFrame) => df.repartition(writePar(df), col("c_id"))
-          .write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).partitionBy("c_id")
-          .parquet(s"$path/cells")),
-      idx.codes.select(col("n_id"), col("s"), col("code")) ->
-        ((df: DataFrame) => df.write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-          .parquet(s"$path/codes"))))
+  def saveIvfPqrIndex(idx: IvfPqrIndex, path: String,
+                      expected: ArtifactStore.Expect = None): Unit =
+    ArtifactStore.publish(idx.cells.sparkSession, path, expected) { dir =>
+      concurrentWrites(Seq(
+        idx.coarseLanes.select(col("cluster"), col("pos"), col("cval"),
+          col("n")) ->
+          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
+            .parquet(s"$dir/coarse")),
+        idx.pqLanes.select(col("s"), col("code"), col("pos"), col("cval")) ->
+          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
+            .parquet(s"$dir/pqlanes")),
+        idx.cells.select(col("n_id") +: cellsAttrCols(idx.cells).map(col) :+
+          col("c_id"): _*) ->
+          ((df: DataFrame) => df.repartition(writePar(df), col("c_id"))
+            .write.mode("overwrite").partitionBy("c_id")
+            .parquet(s"$dir/cells")),
+        idx.codes.select(col("n_id"), col("s"), col("code")) ->
+          ((df: DataFrame) => df.write.mode("overwrite")
+            .parquet(s"$dir/codes"))))
+    }
 
   def loadIvfPqrIndex(spark: org.apache.spark.sql.SparkSession,
                       p0: String): IvfPqrIndex = {
-    val path = graft.sinks.ArtifactStore.resolve(spark, p0)
+    val path = ArtifactStore.resolve(spark, p0)
     val rawCells = spark.read.parquet(s"$path/cells")
     IvfPqrIndex(spark.read.parquet(s"$path/coarse"),
       rawCells.select(col("n_id") +: cellsAttrCols(rawCells).map(col) :+
@@ -1948,36 +1961,10 @@ object Clustering {
   // shard's generation, and commit through the same all-or-nothing
   // multi-root pointer transaction.
 
-  def saveIvfPqrSharded(idx: IvfPqrIndex, path: String,
-                        numShards: Int): Unit = {
-    require(numShards > 0, s"numShards must be positive: $numShards")
-    val spark = idx.coarseLanes.sparkSession
-    import spark.implicits._
-    val attrs = cellsAttrCols(idx.cells)
-    val shardOf = pmod(col("n_id"), lit(numShards.toLong)).cast("int")
-    val pinned = (0 until numShards)
-      .map(sh => sh -> pinShardGen(spark, path, sh)).toMap
-    // codebook/meta writes overlap the stagings, as [[saveIvfPqSharded]]
-    commitPqShards(spark, path, 0 until numShards,
-      idx.cells.select(col("n_id") +: attrs.map(col) :+ col("c_id"): _*)
-        .withColumn("shard", shardOf),
-      idx.codes.select(col("n_id"), col("s"), col("code"))
-        .withColumn("shard", shardOf),
-      pinned,
-      extraWrites = Seq(
-        idx.coarseLanes.select(col("cluster"), col("pos"), col("cval"),
-          col("n")) ->
-          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-            .parquet(s"$path/coarse")),
-        idx.pqLanes.select(col("s"), col("code"), col("pos"), col("cval")) ->
-          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-            .parquet(s"$path/pqlanes")),
-        Seq(numShards).toDF("num_shards") ->
-          ((df: DataFrame) => {
-            df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).parquet(s"$path/meta")
-            graft.sinks.ShardedCommit.writeMetaMarker(spark, path, numShards)
-          })))
-  }
+  def saveIvfPqrSharded(idx: IvfPqrIndex, path: String, numShards: Int,
+                        expected: ArtifactStore.Expect = None): Unit =
+    saveIvfPqSharded(IvfPqIndex(idx.coarseLanes, idx.cells, idx.codes,
+      idx.pqLanes), path, numShards, expected) // identical surface layout
 
   def loadIvfPqrSharded(spark: org.apache.spark.sql.SparkSession,
                         path: String): IvfPqrIndex = {
@@ -1990,15 +1977,15 @@ object Clustering {
     * encode against the FIXED codebooks (the [[updateIvfPqrIndex]]
     * fold), rewriting ONLY the routed shards. Returns them. */
   def updateIvfPqrSharded(spark: org.apache.spark.sql.SparkSession,
-                          path: String, delta: DataFrame,
+                          root: String, delta: DataFrame,
                           idCol: String, vecCol: String,
                           dim: Int, m: Int): Seq[Int] = {
-    import org.apache.spark.sql.types.LongType
-    val numShards = shardedNumShards(spark, path)
+    val path = ArtifactStore.resolve(spark, root)
+    val numShards = ShardedCommit.numShards(spark, path)
     val coarse = spark.read.parquet(s"$path/coarse")
     val pqLanes = spark.read.parquet(s"$path/pqlanes")
     val attrs = cellsAttrCols(spark.read.parquet(
-      graft.sinks.ArtifactStore.resolve(spark, s"$path/shards/0") + "/cells"))
+      ArtifactStore.resolve(spark, s"$path/shards/0") + "/cells"))
     val shardOf = pmod(col("n_id"), lit(numShards.toLong)).cast("int")
     val resid = OperatorCaches.register(
       Similarity.ivfPostingsAttrs(delta, idCol, vecCol,
@@ -2132,13 +2119,15 @@ object Clustering {
     * pure int64, so the reloaded [[graft.plans.IvfCentroids]] is
     * bit-identical to the freshly trained one. */
   def saveIvfCodebook(lanes: DataFrame, path: String): Unit =
-    lanes.select(col("cluster"), col("pos"), col("cval"), col("n"))
-      .coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).parquet(path)
+    ArtifactStore.publish(lanes.sparkSession, path) { dir =>
+      lanes.select(col("cluster"), col("pos"), col("cval"), col("n"))
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+    }
 
   def loadIvfCodebook(spark: org.apache.spark.sql.SparkSession,
                       path: String): graft.plans.IvfCentroids =
     Similarity.centroidSetFromLanes(spark.read.parquet(
-      graft.sinks.ArtifactStore.resolve(spark, path)))
+      ArtifactStore.resolve(spark, path)))
 
   /** The FULL inverted-file index — trained coarse codebook (`lanes`)
     * PLUS the materialized inverted lists (`postings`: one row per
@@ -2201,21 +2190,24 @@ object Clustering {
   private def postingsAttrCols(postings: DataFrame): Seq[String] =
     postings.columns.toSeq.filterNot(Set("n_id", "nv", "nn", "c_id"))
 
-  def saveIvfFlatIndex(idx: IvfFlatIndex, path: String): Unit =
-    concurrentWrites(Seq(
-      idx.lanes.select(col("cluster"), col("pos"), col("cval"), col("n")) ->
-        ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-          .parquet(s"$path/lanes")),
-      idx.postings.select(Seq(col("n_id"), col("nv"), col("nn")) ++
-        postingsAttrCols(idx.postings).map(col) :+ col("c_id"): _*) ->
-        ((df: DataFrame) => df.repartition(writePar(df), col("c_id"))
-          .write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).partitionBy("c_id")
-          .parquet(s"$path/postings"))))
+  def saveIvfFlatIndex(idx: IvfFlatIndex, path: String,
+                       expected: ArtifactStore.Expect = None): Unit =
+    ArtifactStore.publish(idx.postings.sparkSession, path, expected) { dir =>
+      concurrentWrites(Seq(
+        idx.lanes.select(col("cluster"), col("pos"), col("cval"), col("n")) ->
+          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
+            .parquet(s"$dir/lanes")),
+        idx.postings.select(Seq(col("n_id"), col("nv"), col("nn")) ++
+          postingsAttrCols(idx.postings).map(col) :+ col("c_id"): _*) ->
+          ((df: DataFrame) => df.repartition(writePar(df), col("c_id"))
+            .write.mode("overwrite").partitionBy("c_id")
+            .parquet(s"$dir/postings"))))
+    }
 
   def loadIvfFlatIndex(spark: org.apache.spark.sql.SparkSession,
                        p0: String): IvfFlatIndex = {
     import org.apache.spark.sql.types.LongType
-    val path = graft.sinks.ArtifactStore.resolve(spark, p0)
+    val path = ArtifactStore.resolve(spark, p0)
     val raw = spark.read.parquet(s"$path/postings")
     IvfFlatIndex(spark.read.parquet(s"$path/lanes"),
       raw.select(Seq(col("n_id"), col("nv"), col("nn")) ++
@@ -2471,29 +2463,32 @@ object Clustering {
 
   /** Persist: both half-codebooks and the 1-row meta funnel to one file
     * (bounded); postings get the inverted-list directory layout. */
-  def saveImiIndex(idx: ImiIndex, path: String): Unit = {
+  def saveImiIndex(idx: ImiIndex, path: String,
+                   expected: ArtifactStore.Expect = None): Unit = {
     val spark = idx.lanesA.sparkSession
     import spark.implicits._
-    concurrentWrites(Seq(
-      idx.lanesA.select(col("cluster"), col("pos"), col("cval"), col("n")) ->
-        ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-          .parquet(s"$path/lanes_a")),
-      idx.lanesB.select(col("cluster"), col("pos"), col("cval"), col("n")) ->
-        ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-          .parquet(s"$path/lanes_b")),
-      Seq((idx.kA, idx.kB, idx.dim)).toDF("ka", "kb", "dim") ->
-        ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-          .parquet(s"$path/meta")),
-      idx.postings.select(col("n_id"), col("nv"), col("nn"), col("c_id")) ->
-        ((df: DataFrame) => df.repartition(writePar(df), col("c_id"))
-          .write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).partitionBy("c_id")
-          .parquet(s"$path/postings"))))
+    ArtifactStore.publish(spark, path, expected) { dir =>
+      concurrentWrites(Seq(
+        idx.lanesA.select(col("cluster"), col("pos"), col("cval"), col("n")) ->
+          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
+            .parquet(s"$dir/lanes_a")),
+        idx.lanesB.select(col("cluster"), col("pos"), col("cval"), col("n")) ->
+          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
+            .parquet(s"$dir/lanes_b")),
+        Seq((idx.kA, idx.kB, idx.dim)).toDF("ka", "kb", "dim") ->
+          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
+            .parquet(s"$dir/meta")),
+        idx.postings.select(col("n_id"), col("nv"), col("nn"), col("c_id")) ->
+          ((df: DataFrame) => df.repartition(writePar(df), col("c_id"))
+            .write.mode("overwrite").partitionBy("c_id")
+            .parquet(s"$dir/postings"))))
+    }
   }
 
   def loadImiIndex(spark: org.apache.spark.sql.SparkSession,
                    p0: String): ImiIndex = {
     import org.apache.spark.sql.types.LongType
-    val path = graft.sinks.ArtifactStore.resolve(spark, p0)
+    val path = ArtifactStore.resolve(spark, p0)
     val meta = spark.read.parquet(s"$path/meta").head()
     ImiIndex(spark.read.parquet(s"$path/lanes_a"),
       spark.read.parquet(s"$path/lanes_b"),
@@ -2567,10 +2562,11 @@ object Clustering {
     * delta must not rewrite a corpus-sized parquet dataset. Layout:
     *
     * {{{
-    * path/lanes/                 # the shared frozen codebook (bounded)
-    * path/meta/                  # num_shards (1 row)
-    * path/shards/<s>/            # one generational root PER SHARD
-    *   _gen_current, gen_<n>_<uuid>/c_id=<cell>/...
+    * path/_gen_current -> <gen>  # the artifact generation
+    * <gen>/lanes/                # the shared frozen codebook (bounded)
+    * <gen>/_num_shards           # the grid size
+    * <gen>/shards/<s>/           # one generational root PER SHARD
+    *   _gen_current, _gen_<n>_<uuid>/c_id=<cell>/...
     * }}}
     *
     * Shard routing is `n_id mod numShards` — deterministic, so a delta
@@ -2616,11 +2612,9 @@ object Clustering {
     Similarity.ivfRerank(postings, queries, k)
   }
 
-  def saveIvfFlatSharded(idx: IvfFlatIndex, path: String,
-                         numShards: Int): Unit = {
-    require(numShards > 0, s"numShards must be positive: $numShards")
+  def saveIvfFlatSharded(idx: IvfFlatIndex, path: String, numShards: Int,
+                         expected: ArtifactStore.Expect = None): Unit = {
     val spark = idx.lanes.sparkSession
-    import spark.implicits._
     // ONE corpus scan writes every shard's inverted-list layout
     // (partitionBy(shard, c_id)), then each shard=<s> subtree is RENAMED
     // into that shard's fresh generation — S metadata moves instead of S
@@ -2630,12 +2624,13 @@ object Clustering {
     // NamedLambdaVariable carries per-evaluation mutable state, and the
     // race was OBSERVED cross-wiring (n_id, c_id) pairs in this very
     // write before the single-scan form replaced it. concurrentFrames
-    // lambda-isolates, so the lanes/meta writes can overlap it.)
+    // lambda-isolates, so the lanes write can overlap it.)
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging = s"$path/__shards_stage_${java.util.UUID.randomUUID().toString.take(8)}"
     val attrs = postingsAttrCols(idx.postings)
-    try {
+    ArtifactStore.publish(spark, path, expected) { dir =>
+      ShardedCommit.writeNumShards(spark, dir, numShards)
+      val staging = s"$dir/__shards_stage"
       concurrentWrites(Seq(
         idx.postings
           .select(Seq(col("n_id"), col("nv"), col("nn")) ++ attrs.map(col) ++
@@ -2646,24 +2641,16 @@ object Clustering {
             .write.mode("overwrite").partitionBy("shard", "c_id")
             .parquet(staging)),
         idx.lanes.select(col("cluster"), col("pos"), col("cval"), col("n")) ->
-          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-            .parquet(s"$path/lanes")),
-        Seq(numShards).toDF("num_shards") ->
-          ((df: DataFrame) => {
-            df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).parquet(s"$path/meta")
-            graft.sinks.ShardedCommit.writeMetaMarker(spark, path, numShards)
-          })))
+          ((df: DataFrame) =>
+            df.coalesce(1).write.mode("overwrite").parquet(s"$dir/lanes"))))
       // stage EVERY shard's generation first (renames + empty-shard
       // writes — all data movement), then commit all pointers in one
-      // all-or-nothing transaction under the base claim: a crash can
-      // never leave some shards on the new build and others on the old
-      // (ArtifactStore.commitGenAll's contract)
-      import graft.sinks.ArtifactStore
+      // all-or-nothing transaction (ArtifactStore.commitGenAll's
+      // contract) before the artifact generation itself is published
       val commits = (0 until numShards).map { sh =>
         val src = new org.apache.hadoop.fs.Path(s"$staging/shard=$sh")
-        val shardRoot = s"$path/shards/$sh"
-        val loaded = ArtifactStore.currentGen(spark, shardRoot)
-        val gen = ArtifactStore.newGenDir(spark, shardRoot, loaded)
+        val shardRoot = s"$dir/shards/$sh"
+        val gen = ArtifactStore.newGenDir(spark, shardRoot, None)
         if (fs.exists(src)) {
           fs.mkdirs(new org.apache.hadoop.fs.Path(shardRoot))
           require(fs.rename(src, new org.apache.hadoop.fs.Path(gen)),
@@ -2675,14 +2662,13 @@ object Clustering {
           // complete shard grid
           idx.postings.limit(0)
             .select(Seq(col("n_id"), col("nv"), col("nn")) ++
-              attrs.map(col) :+
-              col("c_id").cast(org.apache.spark.sql.types.LongType)
-                .as("c_id"): _*)
+              attrs.map(col) :+ col("c_id").cast(LongType).as("c_id"): _*)
             .coalesce(1).write.mode("overwrite").parquet(gen)
-        (shardRoot, gen, loaded)
+        (shardRoot, gen, None)
       }
-      ArtifactStore.commitGenAll(spark, path, commits)
-    } finally fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
+      ArtifactStore.commitGenAll(spark, dir, commits)
+    }
   }
 
   /** Pin one shard root's live generation: (root, loaded pointer, the
@@ -2694,22 +2680,23 @@ object Clustering {
   private def pinShardGen(spark: org.apache.spark.sql.SparkSession,
                           path: String, sh: Int)
       : (String, Option[String], String) =
-    graft.sinks.ArtifactStore.pinGen(spark, s"$path/shards/$sh")
+    ArtifactStore.pinGen(spark, s"$path/shards/$sh")
 
+  /** The shard-grid size of the sharded artifact at `root`. */
   def shardedNumShards(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Int =
-    graft.sinks.ShardedCommit.numShards(spark, path)
+                       root: String): Int =
+    ShardedCommit.numShards(spark, ArtifactStore.resolve(spark, root))
 
   /** Load the sharded artifact as a regular [[IvfFlatIndex]]: union of
     * the per-shard live generations. Each union branch keeps its own
     * probed-cell partition pruning, so serve cost stays O(probed cells)
     * per shard. */
   def loadIvfFlatSharded(spark: org.apache.spark.sql.SparkSession,
-                         path: String): IvfFlatIndex = {
-    import org.apache.spark.sql.types.LongType
-    val postings = (0 until shardedNumShards(spark, path)).map { sh =>
+                         root: String): IvfFlatIndex = {
+    val path = ArtifactStore.resolve(spark, root)
+    val postings = (0 until ShardedCommit.numShards(spark, path)).map { sh =>
       val raw = spark.read.parquet(
-        graft.sinks.ArtifactStore.resolve(spark, s"$path/shards/$sh"))
+        ArtifactStore.resolve(spark, s"$path/shards/$sh"))
       raw.select(Seq(col("n_id"), col("nv"), col("nn")) ++
         postingsAttrCols(raw).map(col) :+
         col("c_id").cast(LongType).as("c_id"): _*)
@@ -2725,16 +2712,16 @@ object Clustering {
     * touched-shard set (≤ numShards values) collects driver-side.
     * Returns the touched shard ids. */
   def updateIvfFlatSharded(spark: org.apache.spark.sql.SparkSession,
-                           path: String, delta: DataFrame,
+                           root: String, delta: DataFrame,
                            idCol: String, vecCol: String): Seq[Int] = {
-    import org.apache.spark.sql.types.LongType
-    val numShards = shardedNumShards(spark, path)
+    val path = ArtifactStore.resolve(spark, root)
+    val numShards = ShardedCommit.numShards(spark, path)
     val lanes = spark.read.parquet(s"$path/lanes")
     // attribute columns (filtered-serve metadata) ride every shard
     // surface — discover them from shard 0's live generation and demand
     // them from the delta (loud select error otherwise)
     val shard0 = spark.read.parquet(
-      graft.sinks.ArtifactStore.resolve(spark, s"$path/shards/0"))
+      ArtifactStore.resolve(spark, s"$path/shards/0"))
     val attrs = postingsAttrCols(shard0)
     val assigned = OperatorCaches.register(
       Similarity.ivfPostingsAttrs(delta, idCol, vecCol,
@@ -2772,7 +2759,6 @@ object Clustering {
         .repartition(writePar(existingTouched), col("shard"), col("c_id"))
         .write.mode("overwrite").partitionBy("shard", "c_id")
         .parquet(staging)
-      import graft.sinks.ArtifactStore
       val commits = touched.map { sh =>
         val (shardRoot, loaded, _) = pinned(sh)
         val gen = ArtifactStore.newGenDir(spark, shardRoot, loaded)
@@ -2796,10 +2782,10 @@ object Clustering {
     * empty postings set (the save path's empty-shard form). Returns the
     * touched shard ids. */
   def removeFromIvfFlatSharded(spark: org.apache.spark.sql.SparkSession,
-                               path: String, removedIds: DataFrame)
+                               root: String, removedIds: DataFrame)
       : Seq[Int] = {
-    import org.apache.spark.sql.types.LongType
-    val numShards = shardedNumShards(spark, path)
+    val path = ArtifactStore.resolve(spark, root)
+    val numShards = ShardedCommit.numShards(spark, path)
     val ids = OperatorCaches.register(removedIds
       .select(col("n_id").cast(LongType).as("n_id")).distinct()
       .withColumn("shard",
@@ -2826,7 +2812,6 @@ object Clustering {
         .repartition(writePar(existingTouched), col("shard"), col("c_id"))
         .write.mode("overwrite").partitionBy("shard", "c_id")
         .parquet(staging)
-      import graft.sinks.ArtifactStore
       val commits = touched.map { sh =>
         val (shardRoot, loaded, _) = pinned(sh)
         val gen = ArtifactStore.newGenDir(spark, shardRoot, loaded)
@@ -2973,28 +2958,31 @@ object Clustering {
   private def cellsAttrCols(cells: DataFrame): Seq[String] =
     cells.columns.toSeq.filterNot(Set("n_id", "c_id"))
 
-  def saveIvfPqIndex(idx: IvfPqIndex, path: String): Unit =
-    concurrentWrites(Seq(
-      idx.coarseLanes.select(col("cluster"), col("pos"), col("cval"),
-        col("n")) ->
-        ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-          .parquet(s"$path/coarse")),
-      idx.pqLanes.select(col("s"), col("code"), col("pos"), col("cval")) ->
-        ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-          .parquet(s"$path/pqlanes")),
-      idx.cells.select(col("n_id") +: cellsAttrCols(idx.cells).map(col) :+
-        col("c_id"): _*) ->
-        ((df: DataFrame) => df.repartition(writePar(df), col("c_id"))
-          .write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).partitionBy("c_id")
-          .parquet(s"$path/cells")),
-      idx.codes.select(col("n_id"), col("s"), col("code")) ->
-        ((df: DataFrame) => df.write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-          .parquet(s"$path/codes"))))
+  def saveIvfPqIndex(idx: IvfPqIndex, path: String,
+                     expected: ArtifactStore.Expect = None): Unit =
+    ArtifactStore.publish(idx.cells.sparkSession, path, expected) { dir =>
+      concurrentWrites(Seq(
+        idx.coarseLanes.select(col("cluster"), col("pos"), col("cval"),
+          col("n")) ->
+          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
+            .parquet(s"$dir/coarse")),
+        idx.pqLanes.select(col("s"), col("code"), col("pos"), col("cval")) ->
+          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
+            .parquet(s"$dir/pqlanes")),
+        idx.cells.select(col("n_id") +: cellsAttrCols(idx.cells).map(col) :+
+          col("c_id"): _*) ->
+          ((df: DataFrame) => df.repartition(writePar(df), col("c_id"))
+            .write.mode("overwrite").partitionBy("c_id")
+            .parquet(s"$dir/cells")),
+        idx.codes.select(col("n_id"), col("s"), col("code")) ->
+          ((df: DataFrame) => df.write.mode("overwrite")
+            .parquet(s"$dir/codes"))))
+    }
 
   def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
                      p0: String): IvfPqIndex = {
     import org.apache.spark.sql.types.LongType
-    val path = graft.sinks.ArtifactStore.resolve(spark, p0)
+    val path = ArtifactStore.resolve(spark, p0)
     val rawCells = spark.read.parquet(s"$path/cells")
     IvfPqIndex(spark.read.parquet(s"$path/coarse"),
       rawCells.select(col("n_id") +: cellsAttrCols(rawCells).map(col) :+
@@ -3109,47 +3097,39 @@ object Clustering {
 
   /** Persist an [[IvfPqIndex]] sharded:
     * {{{
-    * path/coarse/ path/pqlanes/     # shared frozen codebooks (bounded)
-    * path/meta/                     # num_shards (1 row)
-    * path/shards/<s>/_gen_<n>_<uuid>/cells/c_id=<cell>/...   # per shard
-    * path/shards/<s>/_gen_<n>_<uuid>/codes/...
+    * <gen>/coarse/ <gen>/pqlanes/   # shared frozen codebooks (bounded)
+    * <gen>/_num_shards              # the grid size
+    * <gen>/shards/<s>/_gen_<n>_<uuid>/cells/c_id=<cell>/...   # per shard
+    * <gen>/shards/<s>/_gen_<n>_<uuid>/codes/...
     * }}}
-    * ONE corpus scan stages each surface (partitionBy(shard[, c_id])),
-    * then per-shard renames assemble the generations and ONE
-    * all-or-nothing pointer commit publishes them
-    * ([[graft.sinks.ArtifactStore.commitGenAll]]). */
-  def saveIvfPqSharded(idx: IvfPqIndex, path: String,
-                       numShards: Int): Unit = {
-    require(numShards > 0, s"numShards must be positive: $numShards")
+    * inside the artifact generation `<gen>`. ONE corpus scan stages each
+    * surface (partitionBy(shard[, c_id])), then per-shard renames
+    * assemble the generations and ONE all-or-nothing pointer commit
+    * publishes them ([[ArtifactStore.commitGenAll]]). */
+  def saveIvfPqSharded(idx: IvfPqIndex, path: String, numShards: Int,
+                       expected: ArtifactStore.Expect = None): Unit = {
     val spark = idx.coarseLanes.sparkSession
-    import spark.implicits._
     val attrs = cellsAttrCols(idx.cells)
     val shardOf = pmod(col("n_id"), lit(numShards.toLong)).cast("int")
-    val pinned = (0 until numShards)
-      .map(sh => sh -> pinShardGen(spark, path, sh)).toMap
-    // the three bounded codebook/meta writes overlap the two corpus
-    // stagings — five independent jobs, one barrier (guide §2.6); the
-    // _num_shards marker lands AFTER the meta overwrite (which clears
-    // the directory), inside the same thunk
-    commitPqShards(spark, path, 0 until numShards,
-      idx.cells.select(col("n_id") +: attrs.map(col) :+ col("c_id"): _*)
-        .withColumn("shard", shardOf),
-      idx.codes.select(col("n_id"), col("s"), col("code"))
-        .withColumn("shard", shardOf),
-      pinned,
-      extraWrites = Seq(
-        idx.coarseLanes.select(col("cluster"), col("pos"), col("cval"),
-          col("n")) ->
-          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-            .parquet(s"$path/coarse")),
-        idx.pqLanes.select(col("s"), col("code"), col("pos"), col("cval")) ->
-          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit)
-            .parquet(s"$path/pqlanes")),
-        Seq(numShards).toDF("num_shards") ->
-          ((df: DataFrame) => {
-            df.coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).parquet(s"$path/meta")
-            graft.sinks.ShardedCommit.writeMetaMarker(spark, path, numShards)
-          })))
+    ArtifactStore.publish(spark, path, expected) { dir =>
+      ShardedCommit.writeNumShards(spark, dir, numShards)
+      // the two bounded codebook writes overlap the two corpus stagings
+      // — four independent jobs, one barrier (guide §2.6)
+      commitPqShards(spark, dir, 0 until numShards,
+        idx.cells.select(col("n_id") +: attrs.map(col) :+ col("c_id"): _*)
+          .withColumn("shard", shardOf),
+        idx.codes.select(col("n_id"), col("s"), col("code"))
+          .withColumn("shard", shardOf),
+        (0 until numShards).map(sh => sh -> pinShardGen(spark, dir, sh)).toMap,
+        extraWrites = Seq(
+          idx.coarseLanes.select(col("cluster"), col("pos"), col("cval"),
+            col("n")) ->
+            ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
+              .parquet(s"$dir/coarse")),
+          idx.pqLanes.select(col("s"), col("code"), col("pos"), col("cval")) ->
+            ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
+              .parquet(s"$dir/pqlanes"))))
+    }
   }
 
   /** Load the sharded compressed artifact as a regular [[IvfPqIndex]]:
@@ -3157,10 +3137,10 @@ object Clustering {
     * keeps its own probed-cell partition pruning, so the ADC serve
     * stays O(probed cells) per shard. */
   def loadIvfPqSharded(spark: org.apache.spark.sql.SparkSession,
-                       path: String): IvfPqIndex = {
-    import org.apache.spark.sql.types.LongType
-    val bases = (0 until shardedNumShards(spark, path)).map(sh =>
-      graft.sinks.ArtifactStore.resolve(spark, s"$path/shards/$sh"))
+                       root: String): IvfPqIndex = {
+    val path = ArtifactStore.resolve(spark, root)
+    val bases = (0 until ShardedCommit.numShards(spark, path)).map(sh =>
+      ArtifactStore.resolve(spark, s"$path/shards/$sh"))
     // cells stay one branch PER SHARD: each keeps its own c_id partition
     // discovery + probed-cell pruning (multi-root partition discovery
     // needs a common basePath the per-shard generations don't have).
@@ -3186,17 +3166,17 @@ object Clustering {
     * delta's ids route to — per-shard generations, one all-or-nothing
     * pointer commit. Returns the touched shard ids. */
   def updateIvfPqSharded(spark: org.apache.spark.sql.SparkSession,
-                         path: String, delta: DataFrame,
+                         root: String, delta: DataFrame,
                          idCol: String, vecCol: String,
                          dim: Int, m: Int): Seq[Int] = {
-    import org.apache.spark.sql.types.LongType
-    val numShards = shardedNumShards(spark, path)
+    val path = ArtifactStore.resolve(spark, root)
+    val numShards = ShardedCommit.numShards(spark, path)
     val coarse = spark.read.parquet(s"$path/coarse")
     val pqLanes = spark.read.parquet(s"$path/pqlanes")
     // attribute columns ride the cells surface of every shard — discover
     // them from shard 0 and demand them from the delta
     val attrs = cellsAttrCols(spark.read.parquet(
-      graft.sinks.ArtifactStore.resolve(spark, s"$path/shards/0") + "/cells"))
+      ArtifactStore.resolve(spark, s"$path/shards/0") + "/cells"))
     val shardOf = pmod(col("n_id"), lit(numShards.toLong)).cast("int")
     val deltaCells = OperatorCaches.register(
       Similarity.ivfPostingsAttrs(delta, idCol, vecCol,
@@ -3231,10 +3211,10 @@ object Clustering {
     * BOTH surfaces within the shards the ids route to; untouched shards
     * are never read or written. Returns the touched shard ids. */
   def removeFromIvfPqSharded(spark: org.apache.spark.sql.SparkSession,
-                             path: String, removedIds: DataFrame)
+                             root: String, removedIds: DataFrame)
       : Seq[Int] = {
-    import org.apache.spark.sql.types.LongType
-    val numShards = shardedNumShards(spark, path)
+    val path = ArtifactStore.resolve(spark, root)
+    val numShards = ShardedCommit.numShards(spark, path)
     val ids = OperatorCaches.register(removedIds
       .select(col("n_id").cast(LongType).as("n_id")).distinct()
       .withColumn("shard",
@@ -3273,7 +3253,6 @@ object Clustering {
                              extraWrites: Seq[(DataFrame, DataFrame => Unit)] =
                                Nil)
       : Unit = {
-    import graft.sinks.ArtifactStore
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tag = java.util.UUID.randomUUID().toString.take(8)
@@ -3281,7 +3260,7 @@ object Clustering {
     val stagingK = s"$path/__codes_stage_$tag"
     try {
       // the two surface stagings are independent jobs — overlap them,
-      // plus any caller-supplied bounded writes (codebooks/meta from the
+      // plus any caller-supplied bounded writes (codebooks from the
       // save path: serializing them BEFORE the staging paid both
       // latencies — guide §2.6)
       concurrentFrames(Seq(cells, codes) ++ extraWrites.map(_._1)) {

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.TextFunctions._
+import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
 
 /** The persisted two-surface CDC chunk index (see
   * [[Dedup.buildCdcArtifact]]): `chunks` is the doc-grain occurrence
@@ -412,15 +413,15 @@ object Dedup {
     * of build-once/serve-many ingestion dedup (the LSH analog of
     * `Clustering.savePqIndex`). Partitioning survives as parquet file
     * layout; the serve-side join re-shuffles on (band, bkey) either way. */
-  def saveLshIndex(index: DataFrame, path: String): Unit =
-    index.write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).parquet(path)
+  def saveLshIndex(index: DataFrame, path: String,
+                   expected: ArtifactStore.Expect = None): Unit =
+    ArtifactStore.publish(index.sparkSession, path, expected) { dir =>
+      index.write.mode("overwrite").parquet(dir)
+    }
 
-  /** Loads resolve the versioned-artifact pointer when present
-    * ([[graft.sinks.ArtifactStore.resolve]] — the CLI layout) and fall
-    * back to the flat path (the query fixtures' layout). */
   def loadLshIndex(spark: org.apache.spark.sql.SparkSession,
                    path: String): DataFrame =
-    spark.read.parquet(graft.sinks.ArtifactStore.resolve(spark, path))
+    spark.read.parquet(ArtifactStore.resolve(spark, path))
 
   /** Fold a DELTA batch's signatures into an existing banded index —
     * the update leg of build-once/serve-many ingestion dedup (documents
@@ -470,9 +471,11 @@ object Dedup {
   // generational roots (the [[graft.operators.Retrieval.saveBm25Sharded]]
   // pattern on the lexical tier):
   //
-  //   path/meta/                      num_shards (1 row)
-  //   path/shards/<s>/_gen_*/sig/     (id, ghash, band, bkey, cell, nc)
+  //   <gen>/_num_shards               the grid size
+  //   <gen>/shards/<s>/_seg_*/sig/    (id, ghash, band, bkey, cell, nc)
   //                                   rows with hash(band,bkey) mod S == s
+  //
+  // inside the artifact generation `<gen>`.
   //
   // The shard key is (band, bkey) — the tile census (bucket size → nc,
   // cell) is per-(band, bkey) state, so a bucket NEVER straddles shards
@@ -519,13 +522,14 @@ object Dedup {
     * persisted explicitly so the grid is complete). */
   def saveLshSharded(index: DataFrame, path: String, numShards: Int): Unit = {
     val spark = index.sparkSession
-    import graft.sinks.{ArtifactStore, ShardedCommit}
-    ShardedCommit.writeMeta(spark, path, numShards)
-    commitLshShards(spark, path,
-      (0 until numShards).map(sh =>
-        sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh")),
-      lshSegCols(index, 0L), emptyLshMask(spark, index),
-      ShardedCommit.SegReplace, numShards)
+    ArtifactStore.publish(spark, path) { dir =>
+      ShardedCommit.writeNumShards(spark, dir, numShards)
+      commitLshShards(spark, dir,
+        (0 until numShards).map(sh =>
+          sh -> ArtifactStore.pinGen(spark, s"$dir/shards/$sh")),
+        lshSegCols(index, 0L), emptyLshMask(spark, index),
+        ShardedCommit.SegReplace, numShards)
+    }
   }
 
   private def emptyLshMask(spark: org.apache.spark.sql.SparkSession,
@@ -540,24 +544,21 @@ object Dedup {
     * Output is exactly [[loadLshIndex]]'s shape, so every serve path
     * is shared. */
   def loadLshSharded(spark: org.apache.spark.sql.SparkSession,
-                     path: String): DataFrame = {
-    import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
+                     root: String): DataFrame = {
+    val path = ArtifactStore.resolve(spark, root)
     val n = ShardedCommit.numShards(spark, path)
     val resolved = (0 until n).map { sh =>
-      val root = s"$path/shards/$sh"
-      (root, ArtifactStore.resolve(spark, root))
+      val shardRoot = s"$path/shards/$sh"
+      (shardRoot, ArtifactStore.resolve(spark, shardRoot))
     }
-    val sigPaths = resolved.map { case (root, gen) =>
-      SegmentStore.surfacePathsAt(spark, root, gen, "sig") }
-    val legacy = resolved.exists { case (_, gen) =>
-      SegmentStore.readManifest(spark, gen).isEmpty }
-    if (legacy)
-      return spark.read.parquet(sigPaths.flatten: _*)
+    val sigPaths = resolved.map { case (shardRoot, gen) =>
+      SegmentStore.surfacePathsAt(spark, shardRoot, gen, "sig") }
     val sig = spark.read.parquet(sigPaths.flatten: _*)
     if (sigPaths.forall(_.size <= 1)) sig.drop("seg_ord")
     else {
-      val masks = spark.read.parquet(resolved.flatMap { case (root, gen) =>
-        SegmentStore.surfacePathsAt(spark, root, gen, "mask") }: _*)
+      val masks = spark.read.parquet(resolved.flatMap {
+        case (shardRoot, gen) =>
+          SegmentStore.surfacePathsAt(spark, shardRoot, gen, "mask") }: _*)
       sig.join(broadcast(masks),
           sig("band") === masks("band") && sig("bkey") === masks("bkey") &&
             masks("mord") > sig("seg_ord"), "left_anti")
@@ -572,18 +573,15 @@ object Dedup {
     * keys spray across the whole grid (the x25 measurement: the
     * merge-mode sharded update touched 8/8 shards, re-persisted every
     * surface, and ran SLOWER than the unsharded merge). `append =
-    * false` is the round-17 whole-shard merge — now the compacting
-    * write, and the automatic fallback while any root still has the
-    * legacy layout (the fallback then rewrites ALL shards once, so the
-    * root migrates in one step and never serves mixed schemas). Same
+    * false` is the whole-shard merge — the compacting write. Same
     * exactness either way: the census is per-(band, bkey) state, so
     * re-tiling exactly the touched buckets equals the global re-census
     * ([[updateLshIndex]]'s semantics). Returns the touched shard ids. */
   def updateLshSharded(spark: org.apache.spark.sql.SparkSession,
-                       path: String, deltaHashed: DataFrame,
+                       root: String, deltaHashed: DataFrame,
                        numHashes: Int, bands: Int,
                        append: Boolean = true): Seq[Int] = {
-    import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
+    val path = ArtifactStore.resolve(spark, root)
     val n = ShardedCommit.numShards(spark, path)
     val deltaBanded = OperatorCaches.register(
       bandedSignatures(deltaHashed, numHashes, bands)
@@ -591,12 +589,36 @@ object Dedup {
     val touched = deltaBanded.select(col("shard")).distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
     if (touched.isEmpty) return touched
-    val anyLegacy = (0 until n).exists { sh =>
-      SegmentStore.readManifest(spark, ArtifactStore.resolve(spark,
-        s"$path/shards/$sh")).isEmpty }
-    if (append && !anyLegacy) {
-      val pinned = touched.map(sh =>
-        sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
+    val pinned = touched.map(sh =>
+      sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
+    // live rows of the touched shards, read through the MASKED view —
+    // raw segments still hold superseded bucket censuses that must not
+    // resurface
+    val sig = spark.read.parquet(
+      pinned.flatMap { case (sh, (_, _, gen)) =>
+        SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
+          "sig") }: _*)
+    val masks = spark.read.parquet(
+      pinned.flatMap { case (sh, (_, _, gen)) =>
+        SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
+          "mask") }: _*)
+    val live = sig.join(broadcast(masks),
+        sig("band") === masks("band") && sig("bkey") === masks("bkey") &&
+          masks("mord") > sig("seg_ord"), "left_anti")
+    // append re-censuses only the delta's buckets; merge (the compacting
+    // write) rewrites each touched shard's whole live view
+    val buckets = deltaBanded.select(col("band"), col("bkey")).distinct()
+    val kept =
+      if (append) live.join(broadcast(buckets), Seq("band", "bkey"), "left_semi")
+      else live
+    val merged = kept.select(col("id"), col("ghash"), col("band"), col("bkey"))
+      .unionByName(deltaBanded
+        .select(col("id"), col("ghash"), col("band"), col("bkey")))
+    val retiled =
+      if (numHashes / bands < 6)
+        merged.withColumn("cell", lit(0)).withColumn("nc", lit(1))
+      else tileCensus(merged, LshBucketCap)
+    if (append) {
       // per-ROOT write ordinal: ordinals only ever compare within one
       // root (buckets never straddle shards), and the commit mints the
       // segment dir name from the same listing, so row ordinal == dir
@@ -604,70 +626,15 @@ object Dedup {
       val ordOf: Map[Int, Long] = pinned.map { case (sh, _) =>
         sh -> (1L + maxLiveSegOrd(spark, s"$path/shards/$sh")) }.toMap
       val ordCol = element_at(typedLit(ordOf), col("shard"))
-      // live rows of the delta's buckets, from the touched shards only
-      val buckets = deltaBanded.select(col("band"), col("bkey")).distinct()
-      val sig = spark.read.parquet(
-        pinned.flatMap { case (sh, (_, _, gen)) =>
-          SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
-            "sig") }: _*)
-      val masks = spark.read.parquet(
-        pinned.flatMap { case (sh, (_, _, gen)) =>
-          SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
-            "mask") }: _*)
-      val live = sig.join(broadcast(masks),
-          sig("band") === masks("band") && sig("bkey") === masks("bkey") &&
-            masks("mord") > sig("seg_ord"), "left_anti")
-      val bucketRows = live
-        .join(broadcast(buckets), Seq("band", "bkey"), "left_semi")
-        .select(col("id"), col("ghash"), col("band"), col("bkey"))
-      val merged = bucketRows.unionByName(deltaBanded
-        .select(col("id"), col("ghash"), col("band"), col("bkey")))
-      val retiled =
-        if (numHashes / bands < 6)
-          merged.withColumn("cell", lit(0)).withColumn("nc", lit(1))
-        else tileCensus(merged, LshBucketCap)
       commitLshShardsPresharded(spark, path, pinned,
         lshSigCols(retiled).withColumn("shard", lshShard(n))
           .withColumn("seg_ord", ordCol),
         buckets.withColumn("shard", lshShard(n))
           .withColumn("mord", ordCol),
         ShardedCommit.SegAppend)
-      return touched
-    }
-    // merge path: whole-shard rewrite (the compacting write). On a
-    // legacy root the rewrite covers ALL shards so the migration to
-    // the segmented schema is atomic and complete. Reads go through
-    // the MASKED live view — raw segments still hold superseded bucket
-    // censuses that must not resurface in the merge.
-    val shards = if (anyLegacy) (0 until n).toSeq else touched
-    val pinned = shards.map(sh =>
-      sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
-    val sigRaw = spark.read.parquet(
-      pinned.flatMap { case (sh, (_, _, gen)) =>
-        SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
-          "sig") }: _*)
-    val existing =
-      if (anyLegacy) sigRaw
-      else {
-        val masks = spark.read.parquet(
-          pinned.flatMap { case (sh, (_, _, gen)) =>
-            SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
-              "mask") }: _*)
-        sigRaw.join(broadcast(masks),
-          sigRaw("band") === masks("band") &&
-            sigRaw("bkey") === masks("bkey") &&
-            masks("mord") > sigRaw("seg_ord"), "left_anti")
-      }
-    val merged = existing
-      .select(col("id"), col("ghash"), col("band"), col("bkey"))
-      .unionByName(deltaBanded
-        .select(col("id"), col("ghash"), col("band"), col("bkey")))
-    val retiled =
-      if (numHashes / bands < 6)
-        merged.withColumn("cell", lit(0)).withColumn("nc", lit(1))
-      else tileCensus(merged, LshBucketCap)
-    commitLshShards(spark, path, pinned, lshSegCols(retiled, 0L),
-      emptyLshMask(spark, retiled), ShardedCommit.SegReplace, n)
+    } else
+      commitLshShards(spark, path, pinned, lshSegCols(retiled, 0L),
+        emptyLshMask(spark, retiled), ShardedCommit.SegReplace, n)
     touched
   }
 
@@ -683,7 +650,7 @@ object Dedup {
     val r = new org.apache.hadoop.fs.Path(root)
     if (!fs.exists(r)) 0L
     else fs.listStatus(r).iterator
-      .flatMap(s => graft.sinks.SegmentStore.segOrdinal(s.getPath.getName))
+      .flatMap(s => SegmentStore.segOrdinal(s.getPath.getName))
       .foldLeft(0L)(_ max _)
   }
 
@@ -691,8 +658,8 @@ object Dedup {
     * read-amplification reset after append-mode updates: the masked
     * live view re-persists wholesale, masks vanish. */
   def compactLshSharded(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Seq[Int] = {
-    import graft.sinks.{ArtifactStore, ShardedCommit}
+                        root: String): Seq[Int] = {
+    val path = ArtifactStore.resolve(spark, root)
     val n = ShardedCommit.numShards(spark, path)
     val all = (0 until n).toSeq
     val live = loadLshSharded(spark, path)
@@ -711,9 +678,9 @@ object Dedup {
     * economics). Census re-derives per shard over the survivors; a
     * SEGMENT-COMPACTING write. */
   def removeFromLshSharded(spark: org.apache.spark.sql.SparkSession,
-                           path: String, removedIds: DataFrame,
+                           root: String, removedIds: DataFrame,
                            numHashes: Int, bands: Int): Seq[Int] = {
-    import graft.sinks.{ArtifactStore, ShardedCommit}
+    val path = ArtifactStore.resolve(spark, root)
     val n = ShardedCommit.numShards(spark, path)
     val all = (0 until n).toSeq
     val live = loadLshSharded(spark, path)
@@ -732,12 +699,12 @@ object Dedup {
   }
 
   /** Shared commit tail of the sharded-LSH writers: sig+mask co-swap
-    * per shard through [[graft.sinks.ShardedCommit.commitSegmented]]. */
+    * per shard through [[ShardedCommit.commitSegmented]]. */
   private def commitLshShards(
       spark: org.apache.spark.sql.SparkSession, path: String,
       pinned: Seq[(Int, (String, Option[String], String))],
       sig: DataFrame, mask: DataFrame,
-      mode: graft.sinks.ShardedCommit.SegMode, numShards: Int): Unit =
+      mode: ShardedCommit.SegMode, numShards: Int): Unit =
     commitLshShardsPresharded(spark, path, pinned,
       sig.withColumn("shard", lshShard(numShards)),
       mask.withColumn("shard", lshShard(numShards)), mode)
@@ -746,9 +713,9 @@ object Dedup {
       spark: org.apache.spark.sql.SparkSession, path: String,
       pinned: Seq[(Int, (String, Option[String], String))],
       sig: DataFrame, mask: DataFrame,
-      mode: graft.sinks.ShardedCommit.SegMode): Unit = {
-    import graft.sinks.ShardedCommit.{SegFamily, Surface}
-    graft.sinks.ShardedCommit.commitSegmented(spark, path,
+      mode: ShardedCommit.SegMode): Unit = {
+    import ShardedCommit.{SegFamily, Surface}
+    ShardedCommit.commitSegmented(spark, path,
       Seq(SegFamily(pinned, Seq(
         Surface("sig", sig, () => sig.limit(0).drop("shard")),
         Surface("mask", mask, () => mask.limit(0).drop("shard"))),
@@ -1286,7 +1253,9 @@ object Dedup {
       .agg(min(col("id")).as("first_doc"), count(lit(1)).as("n_occ"))
 
   def saveCdcIndex(index: DataFrame, path: String): Unit =
-    index.write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).parquet(path)
+    ArtifactStore.publish(index.sparkSession, path) { dir =>
+      index.write.mode("overwrite").parquet(dir)
+    }
 
   /** Fold a DELTA batch's chunks into an existing chunk index — the
     * update leg of the CDC screen. The index rows `(h, first_doc,
@@ -1308,7 +1277,7 @@ object Dedup {
 
   def loadCdcIndex(spark: org.apache.spark.sql.SparkSession,
                    path: String): DataFrame =
-    spark.read.parquet(graft.sinks.ArtifactStore.resolve(spark, path))
+    spark.read.parquet(ArtifactStore.resolve(spark, path))
 
   /** Fold a delta into a two-surface [[CdcArtifact]]: chunk occurrences
     * union (per-doc rows, a monoid over disjoint doc sets) and the
@@ -1376,21 +1345,25 @@ object Dedup {
     * so the chunks frame is persisted across the two write actions (the
     * [[graft.operators.Retrieval.saveBm25Index]] cache-then-derive
     * pattern, one wave deep). */
-  def saveCdcArtifact(idx: CdcArtifact, path: String): Unit = {
+  def saveCdcArtifact(idx: CdcArtifact, path: String,
+                      expected: ArtifactStore.Expect = None): Unit = {
     val c = OperatorCaches.register(idx.chunks.persist())
-    c.write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).parquet(s"$path/chunks")
-    idx.rollup.write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).parquet(s"$path/rollup")
+    ArtifactStore.publish(c.sparkSession, path, expected) { dir =>
+      c.write.mode("overwrite").parquet(s"$dir/chunks")
+      idx.rollup.write.mode("overwrite").parquet(s"$dir/rollup")
+    }
   }
 
   /** Loads the two-surface layout; a LEGACY rollup-only artifact (the
-    * pre-two-surface CLI wrote [[saveCdcIndex]]'s rollup rows at the
-    * root) loads with an empty chunks surface and `legacy = true`, so
-    * read-only serves keep working while the mutating verbs refuse with
+    * pre-two-surface CLI wrote [[saveCdcIndex]]'s rollup rows as the
+    * whole generation) loads with an empty chunks surface and
+    * `legacy = true`, so read-only serves keep working while the
+    * mutating verbs refuse with
     * rebuild guidance instead of failing on a missing subdirectory (or
     * worse, silently maintaining a wrong chunks surface). */
   def loadCdcArtifact(spark: org.apache.spark.sql.SparkSession,
                       path: String): CdcArtifact = {
-    val p = graft.sinks.ArtifactStore.resolve(spark, path)
+    val p = ArtifactStore.resolve(spark, path)
     val fs = new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new org.apache.hadoop.fs.Path(p, "rollup")))
@@ -1410,9 +1383,12 @@ object Dedup {
   // chunk tier: both surfaces shard by CHUNK HASH into independent
   // generational roots —
   //
-  //   path/meta/                        num_shards (1 row)
-  //   path/shards/<s>/_gen_*/chunks/    (doc_id, h) occurrence rows
-  //   path/shards/<s>/_gen_*/rollup/    (h, first_doc, n_occ)
+  //   <gen>/_num_shards                 the grid size
+  //   <gen>/shards/<s>/_seg_*/chunks/   (doc_id, h) occurrence rows
+  //   <gen>/shards/<s>/_seg_*/rollup/   (h, first_doc, n_occ)
+  //
+  // inside the artifact generation `<gen>`; each shard root names its
+  // live segments through its own generation pointer.
   //
   // chunks and rollup ride the SAME h-shard and swap together inside
   // one generation (the cells+codes co-swap lesson: a chunk occurrence
@@ -1428,16 +1404,17 @@ object Dedup {
     require(!idx.legacy, "legacy rollup-only cdc artifact: rebuild with " +
       "index-build --type=cdc-sharded before sharding")
     val spark = idx.rollup.sparkSession
-    import graft.sinks.{ArtifactStore, ShardedCommit}
-    ShardedCommit.writeMeta(spark, path, numShards)
     val chunks = idx.chunks.select(col("doc_id"), col("h"))
       .withColumn("shard", cdcShard(numShards))
     val rollup = idx.rollup.select(col("h"), col("first_doc"), col("n_occ"))
       .withColumn("shard", cdcShard(numShards))
-    commitCdcShards(spark, path,
-      (0 until numShards).map(sh =>
-        sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh")),
-      chunks, rollup, ShardedCommit.SegReplace)
+    ArtifactStore.publish(spark, path) { dir =>
+      ShardedCommit.writeNumShards(spark, dir, numShards)
+      commitCdcShards(spark, dir,
+        (0 until numShards).map(sh =>
+          sh -> ArtifactStore.pinGen(spark, s"$dir/shards/$sh")),
+        chunks, rollup, ShardedCommit.SegReplace)
+    }
   }
 
   /** Load as a regular [[CdcArtifact]] — one multi-path scan per
@@ -1448,20 +1425,20 @@ object Dedup {
     * chunk hash — after `index-compact` the plan collapses back to the
     * plain scan. */
   def loadCdcSharded(spark: org.apache.spark.sql.SparkSession,
-                     path: String): CdcArtifact = {
-    import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
+                     root: String): CdcArtifact = {
+    val path = ArtifactStore.resolve(spark, root)
     val n = ShardedCommit.numShards(spark, path)
     val resolved = (0 until n).map { sh =>
-      val root = s"$path/shards/$sh"
-      (root, ArtifactStore.resolve(spark, root))
+      val shardRoot = s"$path/shards/$sh"
+      (shardRoot, ArtifactStore.resolve(spark, shardRoot))
     }
-    val rollPaths = resolved.map { case (root, gen) =>
-      SegmentStore.surfacePathsAt(spark, root, gen, "rollup") }
+    val rollPaths = resolved.map { case (shardRoot, gen) =>
+      SegmentStore.surfacePathsAt(spark, shardRoot, gen, "rollup") }
     val rollRaw = spark.read.parquet(rollPaths.flatten: _*)
       .select(col("h"), col("first_doc"), col("n_occ"))
     CdcArtifact(
-      spark.read.parquet(resolved.flatMap { case (root, gen) =>
-        SegmentStore.surfacePathsAt(spark, root, gen, "chunks") }: _*)
+      spark.read.parquet(resolved.flatMap { case (shardRoot, gen) =>
+        SegmentStore.surfacePathsAt(spark, shardRoot, gen, "chunks") }: _*)
         .select(col("doc_id"), col("h")),
       if (rollPaths.forall(_.size <= 1)) rollRaw
       else rollRaw.groupBy(col("h"))
@@ -1475,17 +1452,16 @@ object Dedup {
     * the write volume is O(delta) even though chunk hashes spray
     * across the whole grid (the x25 measurement: the merge-mode
     * sharded update touched 8/8 shards and re-persisted every one).
-    * `append = false` is the round-17 merge — now also the compacting
-    * write, and the automatic fallback on legacy (unsegmented) roots.
+    * `append = false` is the merge — the compacting write.
     * Exactness as [[updateCdcArtifact]] either way: a chunk hash's
     * rollup rows live only in its own shard, so per-shard merges and
     * the serve-time partial-merge both equal the global groupBy. Same
     * NEW-doc_ids contract. Returns touched shards. */
   def updateCdcSharded(spark: org.apache.spark.sql.SparkSession,
-                       path: String, delta: DataFrame, idCol: String,
+                       root: String, delta: DataFrame, idCol: String,
                        textCol: String, avgMask: Int,
                        append: Boolean = true): Seq[Int] = {
-    import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
+    val path = ArtifactStore.resolve(spark, root)
     val n = ShardedCommit.numShards(spark, path)
     val deltaChunks = OperatorCaches.register(
       cdcChunks(delta, idCol, textCol, avgMask)
@@ -1498,9 +1474,7 @@ object Dedup {
       sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
     val deltaRollup = deltaChunks.groupBy(col("shard"), col("h"))
       .agg(min(col("doc_id")).as("first_doc"), count(lit(1)).as("n_occ"))
-    val anyLegacy = pinned.exists { case (_, (_, _, gen)) =>
-      SegmentStore.readManifest(spark, gen).isEmpty }
-    if (append && !anyLegacy) {
+    if (append) {
       commitCdcShards(spark, path, pinned, deltaChunks,
         deltaRollup, ShardedCommit.SegAppend)
       return touched
@@ -1533,8 +1507,8 @@ object Dedup {
     * read-amplification reset after append-mode updates (occurrences
     * re-persist as-is, rollup min/sum-merges its partials). */
   def compactCdcSharded(spark: org.apache.spark.sql.SparkSession,
-                        path: String): Seq[Int] = {
-    import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
+                        root: String): Seq[Int] = {
+    val path = ArtifactStore.resolve(spark, root)
     val n = ShardedCommit.numShards(spark, path)
     val all = (0 until n).toSeq
     val pinned = all.map(sh =>
@@ -1565,8 +1539,8 @@ object Dedup {
     * occurrences, all flipping in one pointer transaction — a
     * SEGMENT-COMPACTING write. */
   def removeFromCdcSharded(spark: org.apache.spark.sql.SparkSession,
-                           path: String, removedIds: DataFrame): Seq[Int] = {
-    import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
+                           root: String, removedIds: DataFrame): Seq[Int] = {
+    val path = ArtifactStore.resolve(spark, root)
     val n = ShardedCommit.numShards(spark, path)
     val all = (0 until n).toSeq
     val pinned = all.map(sh =>
@@ -1588,15 +1562,15 @@ object Dedup {
   }
 
   /** Shared commit tail of the sharded-CDC writers: chunks+rollup
-    * co-swap per shard ([[graft.sinks.ShardedCommit.commitSegmented]] —
+    * co-swap per shard ([[ShardedCommit.commitSegmented]] —
     * full writes as `SegReplace`, delta appends as `SegAppend`). */
   private def commitCdcShards(
       spark: org.apache.spark.sql.SparkSession, path: String,
       pinned: Seq[(Int, (String, Option[String], String))],
       chunks: DataFrame, rollup: DataFrame,
-      mode: graft.sinks.ShardedCommit.SegMode): Unit = {
-    import graft.sinks.ShardedCommit.{SegFamily, Surface}
-    graft.sinks.ShardedCommit.commitSegmented(spark, path,
+      mode: ShardedCommit.SegMode): Unit = {
+    import ShardedCommit.{SegFamily, Surface}
+    ShardedCommit.commitSegmented(spark, path,
       Seq(SegFamily(pinned, Seq(
         Surface("chunks", chunks, () => chunks.limit(0).drop("shard")),
         Surface("rollup", rollup, () => rollup.limit(0).drop("shard"))),

@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
+
 /** A built BM25 inverted index as its four relational artifacts — all
   * integer-typed, so a parquet roundtrip is bit-lossless:
   *
@@ -66,23 +68,24 @@ object Retrieval {
     * still-cold cache and re-run the corpus scan). Within each wave the
     * independent write jobs overlap through driver-side futures (same
     * pattern as the k-means training chains). */
-  def saveBm25Index(index: Bm25Index, path: String): Unit = {
+  def saveBm25Index(index: Bm25Index, path: String,
+                    expected: ArtifactStore.Expect = None): Unit = {
     val p = OperatorCaches.register(index.postings.persist())
     val dl = OperatorCaches.register(index.doclen.persist())
-    def wave(frames: Seq[(String, DataFrame)]): Unit = {
-      Clustering.concurrentFrames(frames.map(_._2)) { (i, df) =>
-        df.write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).parquet(s"$path/${frames(i)._1}")
+    ArtifactStore.publish(p.sparkSession, path, expected) { dir =>
+      def wave(frames: Seq[(String, DataFrame)]): Unit = {
+        Clustering.concurrentFrames(frames.map(_._2)) { (i, df) =>
+          df.write.mode("overwrite").parquet(s"$dir/${frames(i)._1}")
+        }
+        ()
       }
-      ()
+      wave(Seq("postings" -> p, "doclen" -> dl))
+      wave(Seq("docfreq" -> index.docfreq, "stats" -> index.stats))
     }
-    wave(Seq("postings" -> p, "doclen" -> dl))
-    wave(Seq("docfreq" -> index.docfreq, "stats" -> index.stats))
   }
 
   def loadBm25Index(spark: SparkSession, path: String): Bm25Index = {
-    // versioned-artifact pointer when present (the CLI layout), flat
-    // path otherwise (the query fixtures' layout)
-    val p = graft.sinks.ArtifactStore.resolve(spark, path)
+    val p = ArtifactStore.resolve(spark, path)
     Bm25Index(
       spark.read.parquet(s"$p/postings"),
       spark.read.parquet(s"$p/doclen"),
@@ -147,12 +150,15 @@ object Retrieval {
   // index. Here the corpus-sized surfaces shard into independent
   // generational roots and a delta commits only the shards it routes to:
   //
-  //   path/meta/                        num_shards (1 row)
-  //   path/shards/<s>/_gen_*/postings/  term-hash shards: postings + the
-  //   path/shards/<s>/_gen_*/docfreq/     vocabulary rollup for ITS terms
-  //   path/docshards/<s>/_gen_*/doclen/ doc-id shards: per-doc lengths
-  //   path/stats/_gen_*/                the 1-row corpus rollup (O(1)
+  //   <gen>/_num_shards                 the grid size
+  //   <gen>/shards/<s>/_seg_*/postings/ term-hash shards: postings + the
+  //   <gen>/shards/<s>/_seg_*/docfreq/    vocabulary rollup for ITS terms
+  //   <gen>/docshards/<s>/_seg_*/doclen/ doc-id shards: per-doc lengths
+  //   <gen>/stats/_gen_*/               the 1-row corpus rollup (O(1)
   //                                       rewrite per update by design)
+  //
+  // all inside the artifact generation `<gen>`; each shard root names
+  // its live segments through its own generation pointer.
   //
   // postings and docfreq ride the SAME term shard and swap inside one
   // generation — they must stay term-consistent (a posting whose term
@@ -165,15 +171,9 @@ object Retrieval {
   private def docShard(s: Int): org.apache.spark.sql.Column =
     pmod(col("doc_id"), lit(s.toLong)).cast("int")
 
-  def shardedNumShards(spark: SparkSession, path: String): Int =
-    graft.sinks.ShardedCommit.numShards(spark, path)
-
   def saveBm25Sharded(index: Bm25Index, path: String,
                       numShards: Int): Unit = {
-    require(numShards > 0, s"numShards must be positive: $numShards")
     val spark = index.postings.sparkSession
-    graft.sinks.ShardedCommit.writeMeta(spark, path, numShards)
-    import graft.sinks.{ArtifactStore, ShardedCommit}
     // persist the two corpus-derived bases: postings' staging job
     // materializes the tf cache which the (wave-1) docfreq staging and
     // the stats rollup then substitute instead of re-running the
@@ -181,20 +181,23 @@ object Retrieval {
     // now on the sharded path too)
     OperatorCaches.register(index.postings.persist())
     OperatorCaches.register(index.doclen.persist())
-    commitBm25Shards(spark, path,
-      (0 until numShards).map(sh =>
-        sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh")),
-      index.postings.select(col("term"), col("doc_id"), col("tf"))
-        .withColumn("shard", termShard(numShards)),
-      index.docfreq.select(col("term"), col("df"))
-        .withColumn("shard", termShard(numShards)),
-      (0 until numShards).map(sh =>
-        sh -> ArtifactStore.pinGen(spark, s"$path/docshards/$sh")),
-      index.doclen.select(col("doc_id"), col("dl"))
-        .withColumn("shard", docShard(numShards)),
-      Some((index.stats.select(col("n_docs"), col("total_len")),
-        ArtifactStore.pinGen(spark, s"$path/stats"))),
-      ShardedCommit.SegReplace)
+    ArtifactStore.publish(spark, path) { dir =>
+      ShardedCommit.writeNumShards(spark, dir, numShards)
+      commitBm25Shards(spark, dir,
+        (0 until numShards).map(sh =>
+          sh -> ArtifactStore.pinGen(spark, s"$dir/shards/$sh")),
+        index.postings.select(col("term"), col("doc_id"), col("tf"))
+          .withColumn("shard", termShard(numShards)),
+        index.docfreq.select(col("term"), col("df"))
+          .withColumn("shard", termShard(numShards)),
+        (0 until numShards).map(sh =>
+          sh -> ArtifactStore.pinGen(spark, s"$dir/docshards/$sh")),
+        index.doclen.select(col("doc_id"), col("dl"))
+          .withColumn("shard", docShard(numShards)),
+        Some((index.stats.select(col("n_docs"), col("total_len")),
+          ArtifactStore.pinGen(spark, s"$dir/stats"))),
+        ShardedCommit.SegReplace)
+    }
   }
 
   /** Load the sharded artifact as a regular [[Bm25Index]]: every
@@ -207,9 +210,9 @@ object Retrieval {
     * when any shard holds more than one segment the load sum-merges
     * them per term — after compaction the plan collapses back to the
     * plain scan. */
-  def loadBm25Sharded(spark: SparkSession, path: String): Bm25Index = {
-    import graft.sinks.{ArtifactStore, SegmentStore}
-    val n = shardedNumShards(spark, path)
+  def loadBm25Sharded(spark: SparkSession, root: String): Bm25Index = {
+    val path = ArtifactStore.resolve(spark, root)
+    val n = ShardedCommit.numShards(spark, path)
     val tPaths = (0 until n).map { sh =>
       val root = s"$path/shards/$sh"
       (root, ArtifactStore.resolve(spark, root))
@@ -241,19 +244,18 @@ object Retrieval {
     * crawl batch's term hashes spray across the whole grid (the x25
     * measurement that motivated segments: the merge-mode sharded
     * update re-persisted every touched shard's surface and ran SLOWER
-    * than unsharded). `append = false` is the round-17 merge: per
-    * touched shard, postings union + docfreq sum-merge, re-persisted
-    * wholesale — now also the SEGMENT-COMPACTING write, and the
-    * automatic fallback when a touched root still has the legacy
-    * (unsegmented) layout. Same exactness either way: a term's df rows
-    * live only in its own shard, so per-shard merges equal the global
-    * one and the serve-time sum over partials equals the merged count.
+    * than unsharded). `append = false` is the merge: per touched
+    * shard, postings union + docfreq sum-merge, re-persisted wholesale —
+    * the SEGMENT-COMPACTING write. Same exactness either way: a term's
+    * df rows live only in its own shard, so per-shard merges equal the
+    * global one and the serve-time sum over partials equals the merged
+    * count.
     * Returns the touched TERM shard ids. */
-  def updateBm25Sharded(spark: SparkSession, path: String,
+  def updateBm25Sharded(spark: SparkSession, root: String,
                         deltaTerms: DataFrame,
                         append: Boolean = true): Seq[Int] = {
-    import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
-    val n = shardedNumShards(spark, path)
+    val path = ArtifactStore.resolve(spark, root)
+    val n = ShardedCommit.numShards(spark, path)
     val d = buildBm25Index(deltaTerms)
     // persist the BASE surfaces (not the shard-annotated projections):
     // d.docfreq and d.stats derive from the same tf/doclen subtrees, so
@@ -277,12 +279,7 @@ object Retrieval {
       .select(col("n_docs"), col("total_len")).unionByName(d.stats)
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col("total_len")).as("total_len"))
-    val anyLegacy =
-      tTouched.exists(sh => SegmentStore
-        .readManifest(spark, tPinned(sh)._3).isEmpty) ||
-      dTouched.exists(sh => SegmentStore
-        .readManifest(spark, dPinned(sh)._3).isEmpty)
-    if (append && !anyLegacy) {
+    if (append) {
       commitBm25Shards(spark, path,
         tTouched.map(sh => sh -> tPinned(sh)),
         dPost, d.docfreq.withColumn("shard", termShard(n)),
@@ -323,10 +320,10 @@ object Retrieval {
     * (postings/doclen re-persist as-is, docfreq sum-merges its
     * partials; results are hash-identical by the same argument as the
     * merge update). Returns (termShards, docShards) compacted. */
-  def compactBm25Sharded(spark: SparkSession, path: String)
+  def compactBm25Sharded(spark: SparkSession, root: String)
       : (Seq[Int], Seq[Int]) = {
-    import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
-    val n = shardedNumShards(spark, path)
+    val path = ArtifactStore.resolve(spark, root)
+    val n = ShardedCommit.numShards(spark, path)
     val all = (0 until n).toSeq
     val tPinned = all.map(sh =>
       sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh")).toMap
@@ -363,10 +360,10 @@ object Retrieval {
     * pointer transaction. docfreq re-derives per shard from its
     * surviving postings; stats decrements by the removed docs' doclen
     * rollup. Returns the touched DOC shard ids. */
-  def removeFromBm25Sharded(spark: SparkSession, path: String,
+  def removeFromBm25Sharded(spark: SparkSession, root: String,
                             removedIds: DataFrame): Seq[Int] = {
-    import graft.sinks.ArtifactStore
-    val n = shardedNumShards(spark, path)
+    val path = ArtifactStore.resolve(spark, root)
+    val n = ShardedCommit.numShards(spark, path)
     val ids = OperatorCaches.register(removedIds
       .select(col("doc_id")).distinct().persist())
     val dTouched = ids.withColumn("shard", docShard(n))
@@ -380,14 +377,14 @@ object Retrieval {
       sh -> ArtifactStore.pinGen(spark, s"$path/docshards/$sh")).toMap
     val sPin = ArtifactStore.pinGen(spark, s"$path/stats")
     val keptPost = OperatorCaches.register(tAll.map { sh =>
-      spark.read.parquet(graft.sinks.SegmentStore.surfacePathsAt(spark,
+      spark.read.parquet(SegmentStore.surfacePathsAt(spark,
           s"$path/shards/$sh", tPinned(sh)._3, "postings"): _*)
         .select(col("term"), col("doc_id"), col("tf"))
         .withColumn("shard", lit(sh))
     }.reduce(_ unionByName _).join(ids, Seq("doc_id"), "left_anti")
       .persist())
     val touchedLen = dTouched.map { sh =>
-      spark.read.parquet(graft.sinks.SegmentStore.surfacePathsAt(spark,
+      spark.read.parquet(SegmentStore.surfacePathsAt(spark,
           s"$path/docshards/$sh", dPinned(sh)._3, "doclen"): _*)
         .select(col("doc_id"), col("dl")).withColumn("shard", lit(sh))
     }.reduce(_ unionByName _)
@@ -406,7 +403,7 @@ object Retrieval {
       dTouched.map(sh => sh -> dPinned(sh)),
       touchedLen.join(ids, Seq("doc_id"), "left_anti"),
       Some((newStats, sPin)),
-      graft.sinks.ShardedCommit.SegReplace)
+      ShardedCommit.SegReplace)
     dTouched
   }
 
@@ -417,7 +414,7 @@ object Retrieval {
     * stats as a singleton root, one all-or-nothing pointer commit.
     * Full writes (build/remove/compact, `SegReplace`) and delta writes
     * (append-mode update, `SegAppend`) both land as immutable segments
-    * through [[graft.sinks.ShardedCommit.commitSegmented]]. */
+    * through [[ShardedCommit.commitSegmented]]. */
   private def commitBm25Shards(
       spark: SparkSession, path: String,
       termShards: Seq[(Int, (String, Option[String], String))],
@@ -425,9 +422,9 @@ object Retrieval {
       docShards: Seq[(Int, (String, Option[String], String))],
       doclen: DataFrame,
       stats: Option[(DataFrame, (String, Option[String], String))],
-      mode: graft.sinks.ShardedCommit.SegMode): Unit = {
-    import graft.sinks.ShardedCommit.{SegFamily, Surface}
-    graft.sinks.ShardedCommit.commitSegmented(spark, path,
+      mode: ShardedCommit.SegMode): Unit = {
+    import ShardedCommit.{SegFamily, Surface}
+    ShardedCommit.commitSegmented(spark, path,
       Seq(
         SegFamily(termShards, Seq(
           Surface("postings", postings, () => postings.limit(0).drop("shard")),

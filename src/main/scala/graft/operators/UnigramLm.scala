@@ -244,9 +244,11 @@ object UnigramLm {
     * only, lossless int64/string roundtrip). */
   def saveVocab(vocab: Vocab, spark: SparkSession, path: String): Unit = {
     import spark.implicits._
-    vocab.pieces.map(p => (p.piece, p.cnt, p.cost, vocab.unkCost))
-      .toDF("piece", "cnt", "cost", "unk_cost")
-      .coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).parquet(path)
+    graft.sinks.ArtifactStore.publish(spark, path) { dir =>
+      vocab.pieces.map(p => (p.piece, p.cnt, p.cost, vocab.unkCost))
+        .toDF("piece", "cnt", "cost", "unk_cost")
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+    }
   }
 
   def loadVocab(spark: SparkSession, path: String): Vocab = {

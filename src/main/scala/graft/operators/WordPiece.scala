@@ -236,9 +236,11 @@ object WordPiece {
     * convention (Bpe.saveMerges, UnigramLm, the index tiers). */
   def saveVocab(vocab: WpVocab, spark: SparkSession, path: String): Unit = {
     import spark.implicits._
-    (vocab.head.map((_, false)) ++ vocab.cont.map((_, true))).toSeq
-      .toDF("piece", "is_cont")
-      .coalesce(1).write.mode("overwrite").options(graft.sinks.ArtifactStore.InPlaceCommit).parquet(path)
+    graft.sinks.ArtifactStore.publish(spark, path) { dir =>
+      (vocab.head.map((_, false)) ++ vocab.cont.map((_, true))).toSeq
+        .toDF("piece", "is_cont")
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+    }
   }
 
   def loadVocab(spark: SparkSession, path: String): WpVocab = {

@@ -1402,8 +1402,7 @@ object VectorQueries {
         "centroids" -> (1 << ivfBits(s, d)).toString, "force" -> "true"),
       Some(emb))
     graft.operators.Clustering.serveIvfPq(
-        graft.operators.Clustering.loadIvfPqSharded(s,
-          graft.sinks.ArtifactStore.resolve(s, path)),
+        graft.operators.Clustering.loadIvfPqSharded(s, path),
         emb, "vec_id", "embedding", Dim, PqM, MaxQueryId, IvfNprobe, PqTopK)
       .orderBy($"q_id", $"rank")
   }
@@ -1431,8 +1430,7 @@ object VectorQueries {
         "centroids" -> (1 << ivfBits(s, d)).toString, "force" -> "true"),
       Some(emb))
     graft.operators.Clustering.serveIvfPqr(
-        graft.operators.Clustering.loadIvfPqrSharded(s,
-          graft.sinks.ArtifactStore.resolve(s, path)),
+        graft.operators.Clustering.loadIvfPqrSharded(s, path),
         emb, "vec_id", "embedding", Dim, PqM, MaxQueryId, IvfNprobe,
         PqTopK)
       .orderBy($"q_id", $"rank")

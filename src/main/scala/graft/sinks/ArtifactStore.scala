@@ -43,43 +43,26 @@ import org.apache.spark.sql.SparkSession
   *    are swept by the next successful commit and surfaced by
   *    `index-describe` ([[generationReport]]).
   *
-  * Legacy compatibility: an artifact with no pointer file (anything
-  * written by the tier save functions directly — the query fixtures'
-  * layout) resolves to the root path itself, so every load path accepts
-  * both layouts; only the CLI verbs write the versioned layout.
+  * One layout for every artifact: each tier `save*` and each CLI verb
+  * writes through [[publish]], so no artifact byte is ever written in
+  * place. A root holds only the pointer, the claim while a commit runs,
+  * and generation directories; a sharded artifact keeps its codebooks,
+  * `_num_shards` marker and per-shard roots inside its top generation.
   */
 object ArtifactStore {
 
   val PointerFile = "_gen_current"
   val ClaimFile = "_gen_claim"
 
-  /** Per-write options for a FLAT-LAYOUT artifact surface written IN
-    * PLACE — a final path with mode=overwrite, no staging directory or
-    * generation pointer (saveSemIndex, saveImiIndex, the bounded
-    * codebook/meta roots of the sharded tiers, the single-table LSH/CDC
-    * saves, …). The engine-wide session default is committer v2
-    * (EngineConf — correct for every STAGED write, whose publication is
-    * an atomic rename/pointer flip), but v2 commits task files straight
-    * into the destination, so a crash mid-job leaves partially-committed
-    * part-files a later `spark.read.parquet` silently accepts as the
-    * full artifact where v1 failed loudly (no visible data files until
-    * job commit). Pinning v1 for exactly these writes restores that
-    * failure mode at the cost of one serial rename per file —
-    * negligible for the bounded in-place surfaces. (Verified
-    * empirically: per-write options reach the Hadoop committer — an
-    * invalid version value fails the write.) */
-  val InPlaceCommit: Map[String, String] =
-    Map("mapreduce.fileoutputcommitter.algorithm.version" -> "1")
   /** Generation directories are UNDERSCORE-prefixed so Spark's file
-    * listing never surfaces them to a reader resolving a LEGACY flat
-    * root: a crash (or the window between a staged generation landing
-    * and the pointer flip) on a pointerless artifact/table would
-    * otherwise expose `gen_*` parquet beside the legacy files —
-    * "conflicting directory structures" or silent double-reads on
-    * every `spark.read.parquet(root)`. Underscore paths are skipped
-    * when LISTED but load fine when NAMED explicitly (the `_changes`
-    * feed precedent), which is exactly how resolved readers open the
-    * live generation. [[ordinalOf]] still accepts the round-16 `gen_`
+    * listing never surfaces them to a reader of a pointerless root (a
+    * table's flat files, or an artifact whose first commit crashed):
+    * `gen_*` parquet beside those files would mean "conflicting
+    * directory structures" or silent double-reads on every
+    * `spark.read.parquet(root)`. Underscore paths are skipped when
+    * LISTED but load fine when NAMED explicitly (the `_changes` feed
+    * precedent), which is exactly how resolved readers open the live
+    * generation. [[ordinalOf]] still accepts the round-16 `gen_`
     * spelling so artifacts written before the rename keep loading. */
   private val GenPrefix = "_gen_"
   private val LegacyGenPrefix = "gen_"
@@ -107,25 +90,29 @@ object ArtifactStore {
     * spelling) — the one test every sweep/keep filter uses. */
   def isGenName(n: String): Boolean = ordinalOf(n).isDefined
 
-  /** The live generation's directory NAME, if the artifact uses the
-    * versioned layout. Pointer writes are atomic (temp + rename), so a
+  /** A small driver-side text file's content, None when absent — ONE
+    * `open` treating `FileNotFoundException` as absence (an `exists`
+    * probe first would pay a second metadata call on every pointer,
+    * manifest and marker read, once per shard root). */
+  private[sinks] def readText(spark: SparkSession, p: Path): Option[String] =
+    try {
+      val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
+      try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
+      finally in.close()
+    } catch { case _: java.io.FileNotFoundException => None }
+
+  /** The live generation's directory NAME, None for a root no commit
+    * has published yet. Pointer writes are atomic (temp + rename), so a
     * read sees a complete value or no file; an empty/torn read (possible
     * only on a filesystem without atomic rename) retries briefly then
-    * fails loudly — treating it as absent would silently serve a stale
-    * legacy root. */
+    * fails loudly — treating it as absent would silently serve the
+    * wrong artifact. */
   def currentGen(spark: SparkSession, path: String): Option[String] = {
-    val fs = fsOf(spark, path)
     val p = new Path(path, PointerFile)
     var attempt = 0
     while (true) {
-      if (!fs.exists(p)) return None
-      val content =
-        try {
-          val in = fs.open(p)
-          try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim)
-          finally in.close()
-        } catch { case _: java.io.FileNotFoundException => return None }
-      content match {
+      readText(spark, p).map(_.trim) match {
+        case None => return None
         case Some(s) if s.nonEmpty => return Some(s)
         case _ if attempt < 5 => attempt += 1; Thread.sleep(20L << attempt)
         case _ => throw new IllegalStateException(
@@ -137,7 +124,8 @@ object ArtifactStore {
   }
 
   /** The directory a reader should plan against: the live generation
-    * under a versioned root, or the root itself (legacy flat layout). */
+    * under a published root, or the path itself when it names no
+    * pointer (a generation directory pinned by [[pinGen]]). */
   def resolve(spark: SparkSession, path: String): String =
     currentGen(spark, path).map(g => s"$path/$g").getOrElse(path)
 
@@ -164,6 +152,26 @@ object ArtifactStore {
     s"$path/$GenPrefix${next}_$uuid"
   }
 
+  /** A save's pointer-CAS expectation: `Some(loaded)` when the written
+    * surfaces were folded from generation `loaded` (the [[pinGen]] of an
+    * update, remove or rebuild — the commit refuses if the pointer moved
+    * since), `None` to replace whatever is live when the save starts. */
+  type Expect = Option[Option[String]]
+
+  /** The one write path of every artifact: `write` fills a fresh
+    * generation directory ([[newGenDir]]), then [[commitGen]] flips the
+    * pointer to it. Readers see the old artifact or the new one, never
+    * a half-written one. A `write` that throws leaves the pointer where
+    * it was and its directory behind as an orphan: reported by
+    * [[generationReport]], swept by the next successful commit. */
+  def publish(spark: SparkSession, path: String, expected: Expect = None)
+             (write: String => Unit): Unit = {
+    val loaded = expected.getOrElse(currentGen(spark, path))
+    val gen = newGenDir(spark, path, loaded)
+    write(gen)
+    commitGen(spark, path, gen, loaded)
+  }
+
   /** Create-exclusive test-and-set on the commit claim (see
     * `EntityTable.tryClaimArrival` for the local-FS O_EXCL rationale). */
   private def tryClaim(fs: FileSystem, claim: Path): Boolean =
@@ -179,6 +187,30 @@ object ArtifactStore {
     else
       try { fs.create(claim, false).close(); true }
       catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
+
+  /** Run `body` holding `dir`'s create-exclusive `_gen_claim` (brief
+    * retry loop, so two writers committing at the same instant
+    * serialize rather than one failing on the claim alone), releasing
+    * it however `body` ends. The claim guards only pointer flips and
+    * sweeps (milliseconds), so a stale claim from a crash in that window
+    * is unlikely; if present, the error names the file and the recovery
+    * step. */
+  private def withClaim[T](spark: SparkSession, dir: String)
+                          (body: FileSystem => T): T = {
+    val fs = fsOf(spark, dir)
+    val claim = new Path(dir, ClaimFile)
+    var attempts = 0
+    while (!tryClaim(fs, claim)) {
+      attempts += 1
+      if (attempts > 100) throw new IllegalStateException(
+        s"cannot acquire commit claim $claim after ${attempts - 1} retries — " +
+          s"a concurrent commit is in flight, or a crashed writer left the " +
+          s"claim behind (safe to delete after confirming no " +
+          s"index-update/remove/build is running under $dir)")
+      Thread.sleep(100L)
+    }
+    try body(fs) finally fs.delete(claim, false)
+  }
 
   /** Atomic pointer write: temp + rename-with-overwrite (the
     * `EntityTable.writeMarker` idiom). */
@@ -197,76 +229,19 @@ object ArtifactStore {
     } catch { case e: Throwable => fs.delete(tmp, false); throw e }
   }
 
-  /** Compare-and-swap commit of a written generation:
-    *
-    *  1. acquire the `_gen_claim` (create-exclusive; brief retry loop so
-    *     two writers committing at the same instant serialize rather
-    *     than one failing on the claim alone);
-    *  2. verify the pointer still names `expected` — the generation this
-    *     writer loaded and folded its delta onto. If it moved, a
-    *     concurrent update won the race: delete OUR generation and fail
-    *     LOUDLY — the delta was not applied and must be re-run against
-    *     the new version. Silent last-swap-wins is exactly the data-loss
-    *     mode this protocol exists to remove;
-    *  3. flip the pointer (atomic rename);
-    *  4. sweep every generation that is neither the new one nor
-    *     `expected` — crashed writers' orphans and generations older
-    *     than the displaced one (retention: exactly one displaced
-    *     generation stays for in-flight readers);
-    *  5. release the claim.
-    *
-    * The claim guards only steps 2–4 (milliseconds), so a stale claim
-    * from a crash in that window is unlikely; if present, the error
-    * names the file and the recovery step. */
+  /** Compare-and-swap commit of one written generation — the
+    * single-root case of [[commitGenAll]], claimed at the root itself:
+    * the pointer flips only if it still names `expected` (the generation
+    * this writer loaded and folded its delta onto). If it moved, a
+    * concurrent writer won the race: OUR generation is deleted and the
+    * commit fails LOUDLY — the delta was not applied and must be re-run
+    * against the new version. Silent last-swap-wins is exactly the
+    * data-loss mode this protocol exists to remove. Retention: every
+    * generation but the new one and `expected` is swept, so exactly one
+    * displaced generation stays for in-flight readers. */
   def commitGen(spark: SparkSession, path: String, genDir: String,
-                expected: Option[String]): Unit = {
-    val fs = fsOf(spark, path)
-    val claim = new Path(path, ClaimFile)
-    var attempts = 0
-    while (!tryClaim(fs, claim)) {
-      attempts += 1
-      if (attempts > 100) throw new IllegalStateException(
-        s"cannot acquire commit claim $claim after ${attempts - 1} retries — " +
-          s"a concurrent commit is in flight, or a crashed writer left the " +
-          s"claim behind (safe to delete after confirming no " +
-          s"index-update/remove/build is running on $path)")
-      Thread.sleep(100L)
-    }
-    try {
-      val cur = currentGen(spark, path)
-      if (cur != expected) {
-        fs.delete(new Path(genDir), true)
-        throw new IllegalStateException(
-          s"concurrent writer detected on artifact $path: generation " +
-            s"advanced from ${expected.getOrElse("<legacy>")} to " +
-            s"${cur.getOrElse("<legacy>")} while this writer folded its " +
-            s"delta. The delta was NOT applied — re-run the " +
-            s"update/remove against the new version (FIXTURES.md §10)")
-      }
-      val genName = new Path(genDir).getName
-      // A staged generation carries NO claim while being filled (only
-      // this commit section does), so an `index-gc` running in the
-      // staging window sees it as indistinguishable from a crashed
-      // writer's orphan and may sweep it. The pointer has not moved, so
-      // the CAS above still passes — without this check the flip would
-      // point `_gen_current` at a deleted (or half-deleted) directory
-      // while both commands report success. Verify the staged directory
-      // survived, INSIDE the claim, so the race degrades to the
-      // protocol's fail-loud mode instead of silent corruption.
-      if (!fs.exists(new Path(genDir)))
-        throw new IllegalStateException(
-          s"staged generation $genDir was swept by a concurrent index-gc " +
-            s"before this commit could claim it — the delta was NOT " +
-            s"applied; re-run the update/build (and run index-gc only in " +
-            s"windows with no in-flight writers, or without --all)")
-      writePointer(spark, path, genName)
-      val keep = Set(Some(genName), expected).flatten
-      fs.listStatus(new Path(path)).foreach { s =>
-        val n = s.getPath.getName
-        if (isGenName(n) && !keep(n)) fs.delete(s.getPath, true)
-      }
-    } finally fs.delete(claim, false)
-  }
+                expected: Option[String]): Unit =
+    commitGenAll(spark, path, Seq((path, genDir, expected)))
 
   /** Commit MANY staged generations (one per shard root) as a single
     * all-or-nothing pointer transaction — the multi-shard commit a
@@ -281,13 +256,16 @@ object ArtifactStore {
     *     sharded writer serializes on it, so two multi-shard commits
     *     can never interleave);
     *  2. EVERY commit's precondition is verified before ANY pointer
-    *     moves: the shard pointer still names the generation the writer
-    *     folded onto, and the staged directory survived (the index-gc
-    *     staging race, same as [[commitGen]]);
+    *     moves: the root's pointer still names the generation the
+    *     writer folded onto, and the staged directory survived. (A
+    *     staged generation holds no claim while being filled, so an
+    *     `index-gc` in the staging window may sweep it as an orphan; the
+    *     pointer has not moved, so without this check the flip would
+    *     point at a deleted directory while both commands succeed);
     *  3. only then do all pointers flip — each flip is one atomic
     *     rename of a few bytes, so the all-flips window is
     *     milliseconds of pure metadata (no corpus I/O interleaves);
-    *  4. per-root sweeps run last (non-semantic cleanup).
+    *  4. per-root retention sweeps run last (non-semantic cleanup).
     *
     * If ANY precondition fails, every staged generation is deleted and
     * the call throws with the delta UNAPPLIED EVERYWHERE — re-run it.
@@ -299,28 +277,17 @@ object ArtifactStore {
   def commitGenAll(spark: SparkSession, claimDir: String,
                    commits: Seq[(String, String, Option[String])]): Unit = {
     if (commits.isEmpty) return
-    val fs = fsOf(spark, claimDir)
-    val claim = new Path(claimDir, ClaimFile)
-    var attempts = 0
-    while (!tryClaim(fs, claim)) {
-      attempts += 1
-      if (attempts > 100) throw new IllegalStateException(
-        s"cannot acquire commit claim $claim after ${attempts - 1} retries — " +
-          s"a concurrent sharded commit is in flight, or a crashed writer " +
-          s"left the claim behind (safe to delete after confirming no " +
-          s"index-update/remove/build is running under $claimDir)")
-      Thread.sleep(100L)
-    }
-    try {
+    withClaim(spark, claimDir) { fs =>
       // Phase 1: verify EVERY precondition before ANY pointer moves.
       val failures = commits.flatMap { case (root, genDir, expected) =>
         val cur = currentGen(spark, root)
         if (cur != expected) Some(
-          s"$root: generation advanced from ${expected.getOrElse("<legacy>")} " +
-            s"to ${cur.getOrElse("<legacy>")}")
+          s"$root: concurrent writer detected — generation advanced from " +
+            s"${expected.getOrElse("<none>")} to ${cur.getOrElse("<none>")}")
         else if (!fs.exists(new Path(genDir))) Some(
-          s"$root: staged generation $genDir was swept (index-gc racing " +
-            s"the staging window?)")
+          s"$root: staged generation $genDir was swept by a concurrent " +
+            s"index-gc (run index-gc only in windows with no in-flight " +
+            s"writers, or without --all)")
         else None
       }
       if (failures.nonEmpty) {
@@ -328,9 +295,10 @@ object ArtifactStore {
           fs.delete(new Path(genDir), true)
         }
         throw new IllegalStateException(
-          s"sharded commit aborted — the delta was NOT applied to ANY " +
-            s"shard; re-run it against the current version. Failed " +
-            s"preconditions: ${failures.mkString("; ")} (FIXTURES.md §10)")
+          s"commit aborted — the delta was NOT applied to ANY root; " +
+            s"re-run the update/remove/build against the current version. " +
+            s"Failed preconditions: ${failures.mkString("; ")} " +
+            s"(FIXTURES.md §10)")
       }
       // Phase 2: all pointers flip (atomic renames, metadata-only).
       commits.foreach { case (root, genDir, _) =>
@@ -344,7 +312,7 @@ object ArtifactStore {
           if (isGenName(n) && !keep(n)) fs.delete(s.getPath, true)
         }
       }
-    } finally fs.delete(claim, false)
+    }
   }
 
   /** Maintenance sweep (`index-gc`): delete non-live generations
@@ -356,8 +324,8 @@ object ArtifactStore {
     * highest-ordinal non-live generation — the in-flight-reader
     * retention the serve ∥ update contract promises; pass false (CLI
     * `--all=true`) only inside a maintenance window with no readers.
-    * Returns the deleted generation names. Legacy flat artifacts (no
-    * pointer) have nothing to sweep.
+    * Returns the deleted generation names. A root with no pointer has
+    * nothing to sweep.
     *
     * Above-live generations need one more distinction: a crashed
     * writer's orphan and an IN-FLIGHT writer's still-being-staged
@@ -373,12 +341,13 @@ object ArtifactStore {
 
   /** Max modification time across a directory tree (the directory
     * itself, every file, every subdirectory) — the staging-freshness
-    * signal [[sweep]] uses. A writer actively filling a generation
-    * keeps SOME entry's mtime fresh (task files land continuously) even
-    * where the top-level directory mtime froze at job start. Bounded:
-    * called only for above-live generation candidates, which are rare
-    * (a crashed writer's orphan or one in-flight staging). */
-  private def treeMaxMtime(fs: FileSystem, p: Path): Long = {
+    * signal [[sweep]] and `SegmentStore.sweepOrphans` use. A writer
+    * actively filling a generation keeps SOME entry's mtime fresh (task
+    * files land continuously) even where the top-level directory mtime
+    * froze at job start. Bounded: called only for sweep candidates,
+    * which are rare (a crashed writer's orphan or one in-flight
+    * staging). */
+  private[sinks] def treeMaxMtime(fs: FileSystem, p: Path): Long = {
     val self = fs.getFileStatus(p)
     if (!self.isDirectory) self.getModificationTime
     else (self.getModificationTime +:
@@ -390,20 +359,10 @@ object ArtifactStore {
   def sweep(spark: SparkSession, path: String,
             keepDisplaced: Boolean,
             stagingGraceMs: Long = StagingGraceMs): Seq[String] = {
-    val fs = fsOf(spark, path)
-    if (!fs.exists(new Path(path))) throw new IllegalArgumentException(
-      s"no artifact at $path — nothing to sweep (check the --path)")
-    val claim = new Path(path, ClaimFile)
-    var attempts = 0
-    while (!tryClaim(fs, claim)) {
-      attempts += 1
-      if (attempts > 100) throw new IllegalStateException(
-        s"cannot acquire commit claim $claim — a commit is in flight, or " +
-          s"a crashed writer left the claim behind (safe to delete after " +
-          s"confirming no index-update/remove/build is running on $path)")
-      Thread.sleep(100L)
-    }
-    try {
+    if (!fsOf(spark, path).exists(new Path(path)))
+      throw new IllegalArgumentException(
+        s"no artifact at $path — nothing to sweep (check the --path)")
+    withClaim(spark, path) { fs =>
       currentGen(spark, path) match {
         case None => Seq.empty
         case Some(cur) =>
@@ -440,7 +399,7 @@ object ArtifactStore {
           victims.foreach(n => fs.delete(new Path(path, n), true))
           victims
       }
-    } finally fs.delete(claim, false)
+    }
   }
 
   /** Generation-health counters for `index-describe`: total gen_* dirs,

@@ -41,9 +41,6 @@ import org.apache.spark.sql.SparkSession
   * segments survive exactly as long as their generation does), with
   * the same tree-mtime staging grace [[ArtifactStore.sweep]] applies
   * to generations — a writer mid-staging keeps its segment fresh.
-  * Legacy (round-17) roots hold surface dirs directly inside the
-  * generation; [[surfacePathsAt]] serves them unchanged, and the first
-  * mutating write migrates the root to the segmented layout wholesale.
   */
 object SegmentStore {
 
@@ -80,18 +77,16 @@ object SegmentStore {
   }
 
   /** The manifest of a generation dir: segment names in ingestion
-    * order, or None for a LEGACY generation (surface dirs inline). */
-  def readManifest(spark: SparkSession, genDir: String): Option[Seq[String]] = {
-    val fs = fsOf(spark, genDir)
-    val m = new Path(genDir, ManifestFile)
-    if (!fs.exists(m)) None
-    else {
-      val in = fs.open(m)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-              finally in.close()
-      Some(s.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq)
-    }
-  }
+    * order, or None when the directory holds no manifest. */
+  def readManifest(spark: SparkSession, genDir: String): Option[Seq[String]] =
+    ArtifactStore.readText(spark, new Path(genDir, ManifestFile)).map(
+      _.split("\n").iterator.map(_.trim).filter(_.nonEmpty).toSeq)
+
+  /** The manifest of a segmented shard root's generation, failing
+    * loudly when it is missing. */
+  def segmentsAt(spark: SparkSession, genDir: String): Seq[String] =
+    readManifest(spark, genDir).getOrElse(throw new IllegalStateException(
+      s"$genDir holds no segment manifest ($ManifestFile)"))
 
   /** Write a staged generation's manifest (small, single create). */
   def writeManifest(spark: SparkSession, genDir: String,
@@ -103,26 +98,16 @@ object SegmentStore {
     finally out.close()
   }
 
-  /** Live segment names of a root (resolved pointer), Nil for legacy. */
+  /** Live segment names of a root (resolved pointer). */
   def liveSegments(spark: SparkSession, root: String): Seq[String] =
-    readManifest(spark, ArtifactStore.resolve(spark, root))
-      .getOrElse(Seq.empty)
+    segmentsAt(spark, ArtifactStore.resolve(spark, root))
 
   /** Data paths of one surface under a PINNED generation — the
-    * manifest's `<root>/<seg>/<surface>` list, or the legacy inline
-    * `<genDir>/<surface>`. Every caller hands the whole list to one
-    * multi-path scan. */
+    * manifest's `<root>/<seg>/<surface>` list. Every caller hands the
+    * whole list to one multi-path scan. */
   def surfacePathsAt(spark: SparkSession, root: String, genDir: String,
                      surface: String): Seq[String] =
-    readManifest(spark, genDir) match {
-      case Some(segs) => segs.map(s => s"$root/$s/$surface")
-      case None => Seq(s"$genDir/$surface")
-    }
-
-  /** [[surfacePathsAt]] against the live pointer. */
-  def surfacePaths(spark: SparkSession, root: String,
-                   surface: String): Seq[String] =
-    surfacePathsAt(spark, root, ArtifactStore.resolve(spark, root), surface)
+    segmentsAt(spark, genDir).map(s => s"$root/$s/$surface")
 
   /** Delete `_seg_*` dirs referenced by NO present generation's
     * manifest and stale past the staging grace (fresh tree mtime = a
@@ -147,7 +132,7 @@ object SegmentStore {
     val victims = statuses.iterator
       .filter(s => isSegName(s.getPath.getName))
       .filter(s => !referenced(s.getPath.getName))
-      .filter(s => now - treeMaxMtime(fs, s.getPath) >= graceMs)
+      .filter(s => now - ArtifactStore.treeMaxMtime(fs, s.getPath) >= graceMs)
       .map(_.getPath.getName).toSeq
     victims.foreach(n => fs.delete(new Path(root, n), true))
     victims
@@ -157,13 +142,4 @@ object SegmentStore {
     * `index-describe`'s compaction-pressure signal. */
   def liveSegmentCount(spark: SparkSession, roots: Seq[String]): Long =
     roots.map(r => liveSegments(spark, r).size.toLong).sum
-
-  private def treeMaxMtime(fs: FileSystem, p: Path): Long = {
-    val self = fs.getFileStatus(p)
-    if (!self.isDirectory) self.getModificationTime
-    else (self.getModificationTime +:
-      fs.listStatus(p).map(s =>
-        if (s.isDirectory) treeMaxMtime(fs, s.getPath)
-        else s.getModificationTime).toSeq).max
-  }
 }

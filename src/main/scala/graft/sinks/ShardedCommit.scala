@@ -6,7 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * 100 TB rewrite-unit layout (reference anchor: one file set per
   * locality group, `KM/output/framework/KijiHFileOutputFormat.java:122-186`,
   * generalized to per-shard generational roots): a corpus-sized surface
-  * splits into S independent roots `path/<family>/<s>/_gen_*`, a delta
+  * splits into S independent roots `<gen>/<family>/<s>/_gen_*` inside
+  * the artifact's top generation `<gen>`, a delta
   * rewrites only the shards it routes to, and ALL touched roots flip in
   * one all-or-nothing pointer transaction ([[ArtifactStore.commitGenAll]]
   * under the artifact-base claim).
@@ -21,8 +22,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  1. every surface stages as ONE `partitionBy("shard")` job (never a
   *     write per shard — S jobs of planning overhead for one job's I/O);
   *  2. each shard's staged partition directories RENAME into that
-  *     shard's fresh generation — surfaces sharing a family swap
-  *     TOGETHER inside one generation (the cells+codes lesson: a row in
+  *     shard's fresh segment — surfaces sharing a family swap TOGETHER
+  *     inside one segment (the cells+codes lesson: a row in
   *     one surface whose sibling rows are in another generation is a
   *     silent-drop hazard);
   *  3. a shard with no staged rows gets an EXPLICIT schema-bearing
@@ -49,82 +50,50 @@ object ShardedCommit {
   final case class Surface(name: String, df: DataFrame,
                            empty: () => DataFrame, wave: Int = 0)
 
-  /** A family of shard roots swapping the same surfaces together:
-    * every `(shardId, pin)` gets one fresh generation holding one
-    * directory per surface. */
-  final case class Family(shards: Seq[(Int, Pin)], surfaces: Seq[Surface])
+  /** The shard-grid size every sharded save records inside its
+    * generation (`<gen>/_num_shards`): routing hashes mod it, so it can
+    * never change without a rebuild. Every load/update/serve starts
+    * with it, so it is a tiny driver-side text file (one `open`, never
+    * a Spark job — a parquet read of one int cost ~60-150 ms of
+    * scheduling, several times per lifecycle op). Underscore-prefixed,
+    * so Spark listings of the generation never surface it. */
+  private val NumShardsFile = "_num_shards"
 
-  /** The 1-row shard-grid descriptor every sharded artifact writes at
-    * `path/meta` (grid size is a build-time constant: routing hashes
-    * mod it, so it can never change without a rebuild). */
-  def writeMeta(spark: SparkSession, path: String, numShards: Int): Unit = {
+  def writeNumShards(spark: SparkSession, base: String,
+                     numShards: Int): Unit = {
     require(numShards > 0, s"numShards must be positive: $numShards")
-    import spark.implicits._
-    Seq(numShards).toDF("num_shards")
-      .coalesce(1).write.mode("overwrite")
-      .options(ArtifactStore.InPlaceCommit).parquet(s"$path/meta")
-    writeMetaMarker(spark, path, numShards)
-  }
-
-  /** Grid-size fast path: a tiny `meta/_num_shards` text file written
-    * beside the parquet meta. Every load/update/serve of a sharded
-    * artifact starts with the grid size, and reading it through
-    * `spark.read.parquet(...).head()` is a full Spark JOB (~60-150 ms
-    * of scheduling for one int, several times per lifecycle op —
-    * measured round 18). The marker is one driver-side read; the
-    * parquet meta stays authoritative for legacy artifacts and
-    * schema-bearing readers. Underscore-prefixed, so Spark listings of
-    * the meta directory never surface it. */
-  private val MetaMarker = "_num_shards"
-
-  def writeMetaMarker(spark: SparkSession, path: String,
-                      numShards: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/meta/$MetaMarker")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
+    val p = new org.apache.hadoop.fs.Path(base, NumShardsFile)
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .create(p, true)
     try out.write(numShards.toString.getBytes("UTF-8")) finally out.close()
   }
 
-  def numShards(spark: SparkSession, path: String): Int = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/meta/$MetaMarker")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // open directly and treat FileNotFound as the fallback signal — the
-    // exists()+open() form paid TWO metadata RPCs per read on object
-    // stores (ADVICE round 18); one open is the whole fast path
-    val fast =
-      try {
-        val in = fs.open(p)
-        val txt =
-          try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-          finally in.close()
-        txt.toIntOption // empty/torn marker → parquet fallback
-      } catch { case _: java.io.FileNotFoundException => None }
-    fast.getOrElse(
-      spark.read.parquet(s"$path/meta")
-        .select(org.apache.spark.sql.functions.col("num_shards"))
-        .head().getInt(0))
-  }
+  /** The grid size of the sharded artifact generation `base`, None when
+    * `base` holds no sharded artifact (no marker). */
+  def shardCount(spark: SparkSession, base: String): Option[Int] =
+    ArtifactStore.readText(spark,
+        new org.apache.hadoop.fs.Path(base, NumShardsFile))
+      .map(t => t.trim.toIntOption.getOrElse(throw new IllegalStateException(
+        s"$base/$NumShardsFile is unreadable: '$t'")))
+
+  def numShards(spark: SparkSession, base: String): Int =
+    shardCount(spark, base).getOrElse(throw new IllegalStateException(
+      s"no sharded artifact at $base ($NumShardsFile missing)"))
 
   /** How a [[SegFamily]]'s fresh segment joins each shard's manifest:
     * REPLACE makes it the only live segment (build / compact / remove —
     * the full-surface writes), APPEND adds it after the pinned
-    * generation's list (the O(delta) update — requires the pinned
-    * generation to be segmented already; callers migrate legacy roots
-    * with one REPLACE write first). */
+    * generation's list (the O(delta) update). */
   sealed trait SegMode
   case object SegReplace extends SegMode
   case object SegAppend extends SegMode
 
-  /** A [[Family]] committing through the SEGMENTED layout
-    * ([[graft.sinks.SegmentStore]]): each touched shard gets one new
-    * immutable `_seg_*` data dir plus a manifest-only generation. */
+  /** Shard roots swapping the same surfaces together through the
+    * SEGMENTED layout ([[graft.sinks.SegmentStore]]): each touched shard
+    * `(shardId, pin)` gets one new immutable `_seg_*` data dir holding
+    * one directory per surface, plus a manifest-only generation. */
   final case class SegFamily(shards: Seq[(Int, Pin)],
                              surfaces: Seq[Surface], mode: SegMode)
-
-  /** Stage every family's surfaces, assemble per-shard generations, and
-    * flip all pointers in one transaction. `singletons` are bounded
-    * rollup roots (e.g. BM25's 1-row stats) committing in the same
-    * transaction as single-file generations. */
 
   /** Stage every surface concurrently: the per-surface staging writes
     * are independent jobs, so overlapping them collapses their driver
@@ -161,69 +130,17 @@ object ShardedCommit {
     }
   }
 
-  def commit(spark: SparkSession, path: String,
-             families: Seq[Family],
-             singletons: Seq[(DataFrame, Pin)] = Nil): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val staged: Seq[(Family, Seq[(Surface, String)])] =
-      families.zipWithIndex.map { case (fam, fi) =>
-        fam -> fam.surfaces.zipWithIndex.map { case (surf, si) =>
-          surf -> s"$path/__stage_${tag}_${fi}_${si}_${surf.name}"
-        }
-      }
-    try {
-      // singleton rollup writes overlap the wave-0 stagings: their
-      // generation dirs are named up front, written concurrently, and
-      // committed in the same pointer transaction
-      val singletonGens = singletons.map { case (df, (root, loaded, _)) =>
-        (df, root, loaded, ArtifactStore.newGenDir(spark, root, loaded))
-      }
-      stageAll(staged.flatMap(_._2), singletonGens.map {
-        case (df, _, _, gen) =>
-          df -> ((d: DataFrame) =>
-            d.coalesce(1).write.mode("overwrite").parquet(gen))
-      })
-      val commits = scala.collection.mutable.ArrayBuffer
-        .empty[(String, String, Option[String])]
-      staged.foreach { case (fam, surfs) =>
-        fam.shards.foreach { case (sh, (root, loaded, _)) =>
-          val gen = ArtifactStore.newGenDir(spark, root, loaded)
-          fs.mkdirs(new org.apache.hadoop.fs.Path(gen))
-          surfs.foreach { case (surf, stage) =>
-            val src = new org.apache.hadoop.fs.Path(s"$stage/shard=$sh")
-            if (fs.exists(src))
-              require(fs.rename(src,
-                  new org.apache.hadoop.fs.Path(s"$gen/${surf.name}")),
-                s"sharded commit: cannot stage $src as $gen/${surf.name}")
-            else
-              surf.empty().coalesce(1).write.mode("overwrite")
-                .parquet(s"$gen/${surf.name}")
-          }
-          commits += ((root, gen, loaded))
-        }
-      }
-      singletonGens.foreach { case (_, root, loaded, gen) =>
-        commits += ((root, gen, loaded))
-      }
-      ArtifactStore.commitGenAll(spark, path, commits.toSeq)
-    } finally staged.foreach { case (_, surfs) =>
-      surfs.foreach { case (_, stage) =>
-        fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-      }
-    }
-  }
-
-  /** The segmented twin of [[commit]] — same staging (one
-    * `partitionBy("shard")` job per surface), but each shard's staged
-    * partitions land in a fresh IMMUTABLE `_seg_*` dir and the new
-    * generation holds only the manifest naming the live segment list
-    * (see [[graft.sinks.SegmentStore]]): write volume is the staged
-    * rows, never the shard's prior surface. The pointer transaction is
-    * the same [[ArtifactStore.commitGenAll]]; after it, each root's
-    * orphaned segments (displaced-out manifests' data past the staging
-    * grace) are swept. */
+  /** Stage every family's surfaces (one `partitionBy("shard")` job per
+    * surface), land each shard's staged partitions in a fresh IMMUTABLE
+    * `_seg_*` dir, give each shard a new generation holding only the
+    * manifest naming its live segment list (see
+    * [[graft.sinks.SegmentStore]]), and flip all pointers in one
+    * [[ArtifactStore.commitGenAll]] transaction claimed at `path` —
+    * write volume is the staged rows, never the shard's prior surface.
+    * `singletons` are bounded rollup roots (e.g. BM25's 1-row stats)
+    * committing in the same transaction as single-file generations.
+    * After the flip, each root's orphaned segments (displaced-out
+    * manifests' data past the staging grace) are swept. */
   def commitSegmented(spark: SparkSession, path: String,
                       families: Seq[SegFamily],
                       singletons: Seq[(DataFrame, Pin)] = Nil): Unit = {
@@ -237,7 +154,9 @@ object ShardedCommit {
         }
       }
     try {
-      // singleton rollup writes overlap the wave-0 stagings (see commit)
+      // singleton rollup writes overlap the wave-0 stagings: their
+      // generation dirs are named up front, written concurrently, and
+      // committed in the same pointer transaction
       val singletonGens = singletons.map { case (df, (root, loaded, _)) =>
         (df, root, loaded, ArtifactStore.newGenDir(spark, root, loaded))
       }
@@ -268,12 +187,7 @@ object ShardedCommit {
           val manifest = fam.mode match {
             case SegReplace => Seq(segName)
             case SegAppend =>
-              val prev = SegmentStore.readManifest(spark, pinnedGen)
-                .getOrElse(throw new IllegalStateException(
-                  s"SegAppend on a LEGACY (unsegmented) root $root — " +
-                    s"migrate it first with one full write (merge-mode " +
-                    s"update, remove, or index-compact)"))
-              prev :+ segName
+              SegmentStore.segmentsAt(spark, pinnedGen) :+ segName
           }
           val gen = ArtifactStore.newGenDir(spark, root, loaded)
           fs.mkdirs(new org.apache.hadoop.fs.Path(gen))

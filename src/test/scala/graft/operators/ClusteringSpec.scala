@@ -652,7 +652,7 @@ class ClusteringSpec extends SparkSpec {
     Clustering.saveIvfFlatIndex(
       Clustering.buildIvfFlatIndex(blobs, "vec_id", "embedding", 3, 2), path)
     // the artifact is laid out as one directory per inverted list
-    val cellDirs = new java.io.File(s"$path/postings").listFiles()
+    val cellDirs = new java.io.File(s"${live(path)}/postings").listFiles()
       .filter(_.getName.startsWith("c_id=")).map(_.getName)
     assert(cellDirs.length >= 2, s"expected cell directories, got ${cellDirs.toSeq}")
     // one query, nprobe=1 → the static cell filter reaches the scan as a
@@ -690,7 +690,7 @@ class ClusteringSpec extends SparkSpec {
     // shard routing is n_id mod numShards — a delta whose ids all route
     // to shard 2 must advance ONLY shard 2's generation
     def genOf(sh: Int): Option[String] =
-      ArtifactStore.currentGen(spark, s"$sharded/shards/$sh")
+      ArtifactStore.currentGen(spark, s"${live(sharded)}/shards/$sh")
     val before = (0 until 4).map(genOf)
     assert(before.forall(_.isDefined))
     val delta = Seq((102L, Seq(0f, 0f, 0f, 9f)), (106L, Seq(0f, 0f, 0f, 9.1f)))
@@ -781,7 +781,7 @@ class ClusteringSpec extends SparkSpec {
       "codes must load as ONE multi-path scan over all shard dirs")
     // a delta routing only to shard 2 advances ONLY shard 2's generation
     def genOf(sh: Int): Option[String] =
-      ArtifactStore.currentGen(spark, s"$sharded/shards/$sh")
+      ArtifactStore.currentGen(spark, s"${live(sharded)}/shards/$sh")
     val before = (0 until 4).map(genOf)
     assert(before.forall(_.isDefined))
     val delta = Seq((102L, Seq(0f, 0f, 0f, 9f)), (106L, Seq(0f, 0f, 0f, 9.1f)))
@@ -972,7 +972,7 @@ class ClusteringSpec extends SparkSpec {
     assert(serveSet(loaded) == serveSet(built) && serveSet(loaded).nonEmpty)
     // postings are laid out one directory per COMPOSED cell, and the
     // static probe filter prunes the scan to the probed cells
-    val cellDirs = new java.io.File(s"$path/postings").listFiles()
+    val cellDirs = new java.io.File(s"${live(path)}/postings").listFiles()
       .filter(_.getName.startsWith("c_id=")).map(_.getName)
     assert(cellDirs.length >= 2, s"expected cell dirs, got ${cellDirs.toSeq}")
     val served = Clustering.serveImi(loaded, vecs, "vec_id", "embedding",
@@ -1085,7 +1085,7 @@ class ClusteringSpec extends SparkSpec {
       assert(n % 3 == q % 3, s"query $q top-1 $n crossed blobs") }
     // codes are laid out one directory per cell, and the static probe
     // filter prunes the scan to the probed cells
-    val cellDirs = new java.io.File(s"$path/codes").listFiles()
+    val cellDirs = new java.io.File(s"${live(path)}/codes").listFiles()
       .filter(_.getName.startsWith("c_id=")).map(_.getName)
     assert(cellDirs.length >= 2, s"expected cell dirs, got ${cellDirs.toSeq}")
     val one = Clustering.serveIvfSq(loaded, blobs, "vec_id", "embedding",

@@ -401,4 +401,91 @@ class ArtifactStoreSpec extends SparkSpec {
     assert(ArtifactStore.sweep(spark, path, keepDisplaced = true) ==
       Seq(new org.apache.hadoop.fs.Path(gB).getName))
   }
+
+  test("a save whose write job fails partway leaves the previous artifact loading unchanged; the orphan is reported and swept by the next save") {
+    import org.apache.spark.sql.functions.{explode, lit, raise_error, split, when}
+    val path = s"${tmpDir("artfail")}/bm25"
+    val built = Retrieval.buildBm25Index(corpusDocs
+      .select($"doc_id", explode(split($"text", " ")).as("term")))
+    Retrieval.saveBm25Index(built, path)
+    def loaded(): Seq[Set[Seq[Any]]] = {
+      val idx = Retrieval.loadBm25Index(spark, path)
+      Seq(idx.postings, idx.doclen, idx.docfreq, idx.stats)
+        .map(_.collect().map(_.toSeq).toSet)
+    }
+    val before = loaded()
+    // an overwriting save whose docfreq write job dies on one row
+    val broken = built.copy(docfreq = built.docfreq.withColumn("df",
+      when($"term" === "spark", raise_error(lit("injected write failure")))
+        .otherwise($"df")))
+    intercept[Exception](Retrieval.saveBm25Index(broken, path))
+    assert(loaded() == before, "a failed save must leave the old artifact")
+    val (live, orphans, claimed) =
+      ArtifactStore.generationReport(spark, path).get
+    assert(orphans.size == 1 && !claimed,
+      s"the failed save's generation must show as an orphan: $orphans")
+    // the next successful save sweeps it, keeping only the displaced one
+    Retrieval.saveBm25Index(built, path)
+    val (_, after, _) = ArtifactStore.generationReport(spark, path).get
+    assert(after == Seq(live), s"orphan not swept: $after")
+    assert(loaded() == before)
+  }
+
+  test("every index-build type keeps its root down to the pointer and generations, after build, update and remove") {
+    val base = tmpDir("artlayout")
+    val docs = Seq((0L, "spark join hash table scan batch"),
+      (1L, "row batch filter merge plan"), (2L, "slow order vector line agg"),
+      (3L, "spark join hash table scan rows")).toDF("doc_id", "text")
+    val docDelta = Seq((10L, "completely novel content here today"))
+      .toDF("doc_id", "text")
+    def emb(ids: Seq[Long]): DataFrame = ids.map { i =>
+        val v = Array(1f, 1f, 1f, 1f); v((i % 4).toInt) = 10f + i * 0.01f
+        (i, v.toSeq)
+      }.toDF("vec_id", "embedding")
+      .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
+    val vecs = emb(0L until 12L)
+    val vecDelta = emb(Seq(20L, 21L))
+    val pq = Map("dim" -> "4", "m" -> "2", "k" -> "2", "centroids" -> "2")
+    val flags: Map[String, Map[String, String]] = Map(
+      "lsh" -> Map("shingle-n" -> "2"), "cdc" -> Map("avg-mask" -> "3"),
+      "ivf" -> Map("centroids" -> "2"), "ivfflat" -> Map("centroids" -> "2"),
+      "ivfpq" -> pq, "ivfpqr" -> pq, "pq" -> (pq - "centroids"),
+      "sq" -> Map("dim" -> "4"), "ivfsq" -> Map("dim" -> "4", "centroids" -> "2"),
+      "imi" -> Map("dim" -> "4", "half-centroids-a" -> "2",
+        "half-centroids-b" -> "2"),
+      "semdedup" -> Map("coarse-k" -> "2", "target-rows" -> "4",
+        "cluster-cap" -> "64"))
+    val docTypes = Set("lsh", "cdc", "bm25", "bpe", "unigram", "wordpiece")
+    val fs = new org.apache.hadoop.fs.Path(base)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (tpe <- (IndexTool.Types - "hybrid").toSeq.sorted) {
+      val path = s"$base/$tpe"
+      val tier = tpe.stripSuffix("-sharded")
+      val f = flags.getOrElse(tier, Map.empty[String, String]) +
+        ("shards" -> "2")
+      val doc = docTypes(tier)
+      def assertLayout(after: String): Unit = {
+        // Hadoop's local FS writes hidden `.<name>.crc` checksum sidecars
+        val names = fs.listStatus(new org.apache.hadoop.fs.Path(path))
+          .map(_.getPath.getName)
+          .filterNot(n => n.startsWith(".") && n.endsWith(".crc")).toSeq
+        assert(names.contains(ArtifactStore.PointerFile) &&
+          names.forall(n => n == ArtifactStore.PointerFile ||
+            ArtifactStore.isGenName(n)),
+          s"$tpe after $after: root must hold only the pointer and " +
+            s"generations: ${names.sorted}")
+      }
+      IndexTool.build(spark, tpe, if (doc) docs else vecs, path, f)
+      assertLayout("build")
+      if (IndexTool.UpdateTypes(tpe)) {
+        IndexTool.update(spark, tpe, if (doc) docDelta else vecDelta, path, f)
+        assertLayout("update")
+      }
+      if (IndexTool.RemoveTypes(tpe)) {
+        IndexTool.remove(spark, tpe,
+          if (doc) Seq(1L).toDF("doc_id") else Seq(1L).toDF("vec_id"), path, f)
+        assertLayout("remove")
+      }
+    }
+  }
 }
