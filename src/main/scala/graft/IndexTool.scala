@@ -1493,7 +1493,7 @@ object IndexTool {
           .orderBy(col("pruned"))
       case "decontam" =>
         Similarity.semanticDecontam(embOf(input, flags),
-            spark.read.parquet(
+            ArtifactStore.readSurface(spark,
               ArtifactStore.resolve(spark, path)),
             "vec_id", "embedding", dbl("threshold", 0.4))
           .orderBy(col("contaminated"))
@@ -1571,7 +1571,7 @@ object IndexTool {
       : Map[String, Long] = {
     require(Types(tpe),
       s"unknown index type '$tpe' (expected ${Types.toSeq.sorted.mkString("|")})")
-    def rows(p: String): Long = spark.read.parquet(
+    def rows(p: String): Long = ArtifactStore.readSurface(spark,
       ArtifactStore.resolve(spark, p)).count()
     def shards: (String, Long) = "shards" ->
       ShardedCommit.numShards(spark, ArtifactStore.resolve(spark, path)).toLong
@@ -1653,7 +1653,8 @@ object IndexTool {
           "total_tokens" -> st.getAs[Long]("total_len"),
           liveSegments)
       case "ivf" =>
-        val lanes = spark.read.parquet(ArtifactStore.resolve(spark, path))
+        val lanes =
+          ArtifactStore.readSurface(spark, ArtifactStore.resolve(spark, path))
         Seq("centroids" -> lanes.select(col("cluster")).distinct().count(),
           "dim" -> lanes.select(col("pos")).distinct().count())
       case "ivfflat" =>
@@ -1787,7 +1788,7 @@ object IndexTool {
       case "bpe" => Seq("merges" -> rows(path))
       case "unigram" => Seq("vocab_pieces" -> rows(path))
       case "wordpiece" =>
-        val v = spark.read.parquet(
+        val v = ArtifactStore.readSurface(spark,
           ArtifactStore.resolve(spark, path))
         Seq("vocab_pieces" -> v.count(),
           "continuation_pieces" -> v.filter(col("is_cont")).count())
@@ -1901,7 +1902,7 @@ object IndexTool {
     // or the producer hasn't started): drain nothing instead of failing
     // the whole cron run on the schema probe.
     val schema =
-      try spark.read.parquet(inFile).schema
+      try ArtifactStore.readSurface(spark, inFile).schema
       catch { case e: org.apache.spark.sql.AnalysisException =>
         System.err.println(s"[index-serve] no parquet input at $inFile " +
           s"yet — nothing to drain (${e.getCondition})")
@@ -1945,7 +1946,7 @@ object IndexTool {
       case "decontam" =>
         graft.streaming.StreamingCells.decontamServeStream(
           embOf(stream, flags), "vec_id", "embedding",
-          spark.read.parquet(
+          ArtifactStore.readSurface(spark,
             ArtifactStore.resolve(spark, path)),
           dbl("threshold", 0.4))(sink)
       case "cdc" =>

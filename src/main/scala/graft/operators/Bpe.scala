@@ -313,7 +313,8 @@ object Bpe {
 
   def loadMerges(spark: org.apache.spark.sql.SparkSession,
                  path: String): Seq[Merge] =
-    spark.read.parquet(graft.sinks.ArtifactStore.resolve(spark, path))
+    graft.sinks.ArtifactStore.readSurface(spark,
+        graft.sinks.ArtifactStore.resolve(spark, path))
       .select(col("step").cast("int"), col("lhs").cast("string"),
         col("rhs").cast("string"), col("cnt").cast("long"))
       .collect()

@@ -506,11 +506,11 @@ object Clustering {
   def loadSemIndex(spark: org.apache.spark.sql.SparkSession,
                    p0: String): SemIndex = {
     val path = ArtifactStore.resolve(spark, p0)
-    val meta = spark.read.parquet(s"$path/meta").head()
-    SemIndex(spark.read.parquet(s"$path/lanes"),
-      spark.read.parquet(s"$path/seeds"),
-      spark.read.parquet(s"$path/assign"),
-      spark.read.parquet(s"$path/sizes"),
+    val meta = ArtifactStore.readSurface(spark, s"$path/meta").head()
+    SemIndex(ArtifactStore.readSurface(spark, s"$path/lanes"),
+      ArtifactStore.readSurface(spark, s"$path/seeds"),
+      ArtifactStore.readSurface(spark, s"$path/assign"),
+      ArtifactStore.readSurface(spark, s"$path/sizes"),
       meta.getAs[Int]("coarse_k"), meta.getAs[Long]("cluster_cap"),
       meta.getAs[String]("salt"))
   }
@@ -576,14 +576,14 @@ object Clustering {
                           root: String): SemIndex = {
     val path = ArtifactStore.resolve(spark, root)
     val n = ShardedCommit.numShards(spark, path)
-    val meta = spark.read.parquet(s"$path/meta").head()
-    SemIndex(spark.read.parquet(s"$path/lanes"),
-      spark.read.parquet(s"$path/seeds"),
-      spark.read.parquet((0 until n).flatMap { sh =>
+    val meta = ArtifactStore.readSurface(spark, s"$path/meta").head()
+    SemIndex(ArtifactStore.readSurface(spark, s"$path/lanes"),
+      ArtifactStore.readSurface(spark, s"$path/seeds"),
+      ArtifactStore.readSurface(spark, (0 until n).flatMap { sh =>
         val shardRoot = s"$path/shards/$sh"
         SegmentStore.surfacePathsAt(spark, shardRoot,
           ArtifactStore.resolve(spark, shardRoot), "assign") }: _*),
-      spark.read.parquet(s"$path/sizes"),
+      ArtifactStore.readSurface(spark, s"$path/sizes"),
       meta.getAs[Int]("coarse_k"), meta.getAs[Long]("cluster_cap"),
       meta.getAs[String]("salt"))
   }
@@ -616,7 +616,7 @@ object Clustering {
       if (append)
         (assignCols(cells), ShardedCommit.SegAppend)
       else {
-        val merged = spark.read.parquet(
+        val merged = ArtifactStore.readSurface(spark,
             pinned.flatMap { case (sh, (_, _, gen)) =>
               SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh",
                 gen, "assign") }: _*)
@@ -644,7 +644,7 @@ object Clustering {
     val all = (0 until n).toSeq
     val pinned = all.map(sh =>
       sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
-    val rows = spark.read.parquet(
+    val rows = ArtifactStore.readSurface(spark,
         pinned.flatMap { case (sh, (_, _, gen)) =>
           SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
             "assign") }: _*)
@@ -674,7 +674,7 @@ object Clustering {
     if (touched.isEmpty) return touched
     val pinned = touched.map(sh =>
       sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
-    val kept = spark.read.parquet(
+    val kept = ArtifactStore.readSurface(spark,
         pinned.flatMap { case (sh, (_, _, gen)) =>
           SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
             "assign") }: _*)
@@ -1165,8 +1165,8 @@ object Clustering {
   def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
                   p0: String): PqIndex = {
     val path = ArtifactStore.resolve(spark, p0)
-    PqIndex(spark.read.parquet(s"$path/codes"),
-      spark.read.parquet(s"$path/lanes"))
+    PqIndex(ArtifactStore.readSurface(spark, s"$path/codes"),
+      ArtifactStore.readSurface(spark, s"$path/lanes"))
   }
 
   /** ADD a delta batch to a fitted/loaded [[PqIndex]]: ENCODE each delta
@@ -1515,8 +1515,8 @@ object Clustering {
   def loadSqIndex(spark: org.apache.spark.sql.SparkSession,
                   p0: String): SqIndex = {
     val path = ArtifactStore.resolve(spark, p0)
-    SqIndex(spark.read.parquet(s"$path/lanes"),
-      spark.read.parquet(s"$path/codes"))
+    SqIndex(ArtifactStore.readSurface(spark, s"$path/lanes"),
+      ArtifactStore.readSurface(spark, s"$path/codes"))
   }
 
   // ── composed IVF × SQ8 (IndexIVFScalarQuantizer) ───────────────────────
@@ -1676,9 +1676,9 @@ object Clustering {
   def loadIvfSqIndex(spark: org.apache.spark.sql.SparkSession,
                      p0: String): IvfSqIndex = {
     val path = ArtifactStore.resolve(spark, p0)
-    IvfSqIndex(spark.read.parquet(s"$path/lanes"),
-      spark.read.parquet(s"$path/sqlanes"),
-      spark.read.parquet(s"$path/codes")
+    IvfSqIndex(ArtifactStore.readSurface(spark, s"$path/lanes"),
+      ArtifactStore.readSurface(spark, s"$path/sqlanes"),
+      ArtifactStore.readSurface(spark, s"$path/codes")
         .select(col("n_id"), col("code"),
           col("c_id").cast(LongType).as("c_id")))
   }
@@ -1932,12 +1932,12 @@ object Clustering {
   def loadIvfPqrIndex(spark: org.apache.spark.sql.SparkSession,
                       p0: String): IvfPqrIndex = {
     val path = ArtifactStore.resolve(spark, p0)
-    val rawCells = spark.read.parquet(s"$path/cells")
-    IvfPqrIndex(spark.read.parquet(s"$path/coarse"),
+    val rawCells = ArtifactStore.readSurface(spark, s"$path/cells")
+    IvfPqrIndex(ArtifactStore.readSurface(spark, s"$path/coarse"),
       rawCells.select(col("n_id") +: cellsAttrCols(rawCells).map(col) :+
         col("c_id").cast(LongType).as("c_id"): _*),
-      spark.read.parquet(s"$path/codes"),
-      spark.read.parquet(s"$path/pqlanes"))
+      ArtifactStore.readSurface(spark, s"$path/codes"),
+      ArtifactStore.readSurface(spark, s"$path/pqlanes"))
   }
 
   /** FILTERED residual-ADC serve — [[serveIvfPqFiltered]]'s contract on
@@ -1982,9 +1982,9 @@ object Clustering {
                           dim: Int, m: Int): Seq[Int] = {
     val path = ArtifactStore.resolve(spark, root)
     val numShards = ShardedCommit.numShards(spark, path)
-    val coarse = spark.read.parquet(s"$path/coarse")
-    val pqLanes = spark.read.parquet(s"$path/pqlanes")
-    val attrs = cellsAttrCols(spark.read.parquet(
+    val coarse = ArtifactStore.readSurface(spark, s"$path/coarse")
+    val pqLanes = ArtifactStore.readSurface(spark, s"$path/pqlanes")
+    val attrs = cellsAttrCols(ArtifactStore.readSurface(spark,
       ArtifactStore.resolve(spark, s"$path/shards/0") + "/cells"))
     val shardOf = pmod(col("n_id"), lit(numShards.toLong)).cast("int")
     val resid = OperatorCaches.register(
@@ -2000,13 +2000,13 @@ object Clustering {
     if (touched.isEmpty) return touched
     val pinned = touched.map(sh => sh -> pinShardGen(spark, path, sh)).toMap
     val existingCells = touched.map { sh =>
-      val raw = spark.read.parquet(s"${pinned(sh)._3}/cells")
+      val raw = ArtifactStore.readSurface(spark, s"${pinned(sh)._3}/cells")
       raw.select(col("n_id") +: cellsAttrCols(raw).map(col) :+
           col("c_id").cast(LongType).as("c_id"): _*)
         .withColumn("shard", lit(sh))
     }.reduce(_ unionByName _)
     val existingCodes = touched.map { sh =>
-      spark.read.parquet(s"${pinned(sh)._3}/codes")
+      ArtifactStore.readSurface(spark, s"${pinned(sh)._3}/codes")
         .select(col("n_id"), col("s"), col("code"))
         .withColumn("shard", lit(sh))
     }.reduce(_ unionByName _)
@@ -2126,7 +2126,7 @@ object Clustering {
 
   def loadIvfCodebook(spark: org.apache.spark.sql.SparkSession,
                       path: String): graft.plans.IvfCentroids =
-    Similarity.centroidSetFromLanes(spark.read.parquet(
+    Similarity.centroidSetFromLanes(ArtifactStore.readSurface(spark,
       ArtifactStore.resolve(spark, path)))
 
   /** The FULL inverted-file index — trained coarse codebook (`lanes`)
@@ -2208,8 +2208,8 @@ object Clustering {
                        p0: String): IvfFlatIndex = {
     import org.apache.spark.sql.types.LongType
     val path = ArtifactStore.resolve(spark, p0)
-    val raw = spark.read.parquet(s"$path/postings")
-    IvfFlatIndex(spark.read.parquet(s"$path/lanes"),
+    val raw = ArtifactStore.readSurface(spark, s"$path/postings")
+    IvfFlatIndex(ArtifactStore.readSurface(spark, s"$path/lanes"),
       raw.select(Seq(col("n_id"), col("nv"), col("nn")) ++
         postingsAttrCols(raw).map(col) :+
         col("c_id").cast(LongType).as("c_id"): _*))
@@ -2489,10 +2489,10 @@ object Clustering {
                    p0: String): ImiIndex = {
     import org.apache.spark.sql.types.LongType
     val path = ArtifactStore.resolve(spark, p0)
-    val meta = spark.read.parquet(s"$path/meta").head()
-    ImiIndex(spark.read.parquet(s"$path/lanes_a"),
-      spark.read.parquet(s"$path/lanes_b"),
-      spark.read.parquet(s"$path/postings")
+    val meta = ArtifactStore.readSurface(spark, s"$path/meta").head()
+    ImiIndex(ArtifactStore.readSurface(spark, s"$path/lanes_a"),
+      ArtifactStore.readSurface(spark, s"$path/lanes_b"),
+      ArtifactStore.readSurface(spark, s"$path/postings")
         .select(col("n_id"), col("nv"), col("nn"),
           col("c_id").cast(LongType).as("c_id")),
       meta.getAs[Int]("ka"), meta.getAs[Int]("kb"), meta.getAs[Int]("dim"))
@@ -2695,13 +2695,13 @@ object Clustering {
                          root: String): IvfFlatIndex = {
     val path = ArtifactStore.resolve(spark, root)
     val postings = (0 until ShardedCommit.numShards(spark, path)).map { sh =>
-      val raw = spark.read.parquet(
+      val raw = ArtifactStore.readSurface(spark,
         ArtifactStore.resolve(spark, s"$path/shards/$sh"))
       raw.select(Seq(col("n_id"), col("nv"), col("nn")) ++
         postingsAttrCols(raw).map(col) :+
         col("c_id").cast(LongType).as("c_id"): _*)
     }.reduce(_ unionByName _)
-    IvfFlatIndex(spark.read.parquet(s"$path/lanes"), postings)
+    IvfFlatIndex(ArtifactStore.readSurface(spark, s"$path/lanes"), postings)
   }
 
   /** Fold a delta into the sharded artifact, rewriting ONLY the shards
@@ -2716,11 +2716,11 @@ object Clustering {
                            idCol: String, vecCol: String): Seq[Int] = {
     val path = ArtifactStore.resolve(spark, root)
     val numShards = ShardedCommit.numShards(spark, path)
-    val lanes = spark.read.parquet(s"$path/lanes")
+    val lanes = ArtifactStore.readSurface(spark, s"$path/lanes")
     // attribute columns (filtered-serve metadata) ride every shard
     // surface — discover them from shard 0's live generation and demand
     // them from the delta (loud select error otherwise)
-    val shard0 = spark.read.parquet(
+    val shard0 = ArtifactStore.readSurface(spark,
       ArtifactStore.resolve(spark, s"$path/shards/0"))
     val attrs = postingsAttrCols(shard0)
     val assigned = OperatorCaches.register(
@@ -2744,7 +2744,7 @@ object Clustering {
     val cols = Seq("n_id", "nv", "nn") ++ attrs :+ "c_id"
     val pinned = touched.map(sh => sh -> pinShardGen(spark, path, sh)).toMap
     val existingTouched = touched.map { sh =>
-      spark.read.parquet(pinned(sh)._3)
+      ArtifactStore.readSurface(spark, pinned(sh)._3)
         .select(Seq(col("n_id"), col("nv"), col("nn")) ++ attrs.map(col) :+
           col("c_id").cast(LongType).as("c_id"): _*)
         .withColumn("shard", lit(sh))
@@ -2796,7 +2796,7 @@ object Clustering {
     if (touched.isEmpty) return touched
     val pinned = touched.map(sh => sh -> pinShardGen(spark, path, sh)).toMap
     val existingTouched = touched.map { sh =>
-      val raw = spark.read.parquet(pinned(sh)._3)
+      val raw = ArtifactStore.readSurface(spark, pinned(sh)._3)
       raw.select(Seq(col("n_id"), col("nv"), col("nn")) ++
           postingsAttrCols(raw).map(col) :+
           col("c_id").cast(LongType).as("c_id"): _*)
@@ -2983,12 +2983,12 @@ object Clustering {
                      p0: String): IvfPqIndex = {
     import org.apache.spark.sql.types.LongType
     val path = ArtifactStore.resolve(spark, p0)
-    val rawCells = spark.read.parquet(s"$path/cells")
-    IvfPqIndex(spark.read.parquet(s"$path/coarse"),
+    val rawCells = ArtifactStore.readSurface(spark, s"$path/cells")
+    IvfPqIndex(ArtifactStore.readSurface(spark, s"$path/coarse"),
       rawCells.select(col("n_id") +: cellsAttrCols(rawCells).map(col) :+
         col("c_id").cast(LongType).as("c_id"): _*),
-      spark.read.parquet(s"$path/codes"),
-      spark.read.parquet(s"$path/pqlanes"))
+      ArtifactStore.readSurface(spark, s"$path/codes"),
+      ArtifactStore.readSurface(spark, s"$path/pqlanes"))
   }
 
   /** ADD a delta: one kernel cell-assignment against the fixed coarse
@@ -3145,7 +3145,7 @@ object Clustering {
     // discovery + probed-cell pruning (multi-root partition discovery
     // needs a common basePath the per-shard generations don't have).
     val cells = bases.map { base =>
-      val raw = spark.read.parquet(s"$base/cells")
+      val raw = ArtifactStore.readSurface(spark, s"$base/cells")
       raw.select(col("n_id") +: cellsAttrCols(raw).map(col) :+
         col("c_id").cast(LongType).as("c_id"): _*)
     }.reduce(_ unionByName _)
@@ -3153,11 +3153,11 @@ object Clustering {
     // shard directories instead of an S-way union of single scans (the
     // union's per-branch listing/planning overhead grows with S × the
     // cell grid and showed up directly in the x50 serve row)
-    val codes = spark.read
-      .parquet(bases.map(b => s"$b/codes"): _*)
+    val codes = ArtifactStore.readSurface(spark,
+        bases.map(b => s"$b/codes"): _*)
       .select(col("n_id"), col("s"), col("code"))
-    IvfPqIndex(spark.read.parquet(s"$path/coarse"), cells, codes,
-      spark.read.parquet(s"$path/pqlanes"))
+    IvfPqIndex(ArtifactStore.readSurface(spark, s"$path/coarse"), cells, codes,
+      ArtifactStore.readSurface(spark, s"$path/pqlanes"))
   }
 
   /** ADD a delta to the sharded compressed artifact: one kernel cell
@@ -3171,11 +3171,11 @@ object Clustering {
                          dim: Int, m: Int): Seq[Int] = {
     val path = ArtifactStore.resolve(spark, root)
     val numShards = ShardedCommit.numShards(spark, path)
-    val coarse = spark.read.parquet(s"$path/coarse")
-    val pqLanes = spark.read.parquet(s"$path/pqlanes")
+    val coarse = ArtifactStore.readSurface(spark, s"$path/coarse")
+    val pqLanes = ArtifactStore.readSurface(spark, s"$path/pqlanes")
     // attribute columns ride the cells surface of every shard — discover
     // them from shard 0 and demand them from the delta
-    val attrs = cellsAttrCols(spark.read.parquet(
+    val attrs = cellsAttrCols(ArtifactStore.readSurface(spark,
       ArtifactStore.resolve(spark, s"$path/shards/0") + "/cells"))
     val shardOf = pmod(col("n_id"), lit(numShards.toLong)).cast("int")
     val deltaCells = OperatorCaches.register(
@@ -3189,13 +3189,13 @@ object Clustering {
     if (touched.isEmpty) return touched
     val pinned = touched.map(sh => sh -> pinShardGen(spark, path, sh)).toMap
     val existingCells = touched.map { sh =>
-      val raw = spark.read.parquet(s"${pinned(sh)._3}/cells")
+      val raw = ArtifactStore.readSurface(spark, s"${pinned(sh)._3}/cells")
       raw.select(col("n_id") +: cellsAttrCols(raw).map(col) :+
           col("c_id").cast(LongType).as("c_id"): _*)
         .withColumn("shard", lit(sh))
     }.reduce(_ unionByName _)
     val existingCodes = touched.map { sh =>
-      spark.read.parquet(s"${pinned(sh)._3}/codes")
+      ArtifactStore.readSurface(spark, s"${pinned(sh)._3}/codes")
         .select(col("n_id"), col("s"), col("code"))
         .withColumn("shard", lit(sh))
     }.reduce(_ unionByName _)
@@ -3226,13 +3226,13 @@ object Clustering {
     val pinned = touched.map(sh => sh -> pinShardGen(spark, path, sh)).toMap
     val bareIds = ids.select(col("n_id"))
     val keptCells = touched.map { sh =>
-      val raw = spark.read.parquet(s"${pinned(sh)._3}/cells")
+      val raw = ArtifactStore.readSurface(spark, s"${pinned(sh)._3}/cells")
       raw.select(col("n_id") +: cellsAttrCols(raw).map(col) :+
           col("c_id").cast(LongType).as("c_id"): _*)
         .withColumn("shard", lit(sh))
     }.reduce(_ unionByName _).join(bareIds, Seq("n_id"), "left_anti")
     val keptCodes = touched.map { sh =>
-      spark.read.parquet(s"${pinned(sh)._3}/codes")
+      ArtifactStore.readSurface(spark, s"${pinned(sh)._3}/codes")
         .select(col("n_id"), col("s"), col("code"))
         .withColumn("shard", lit(sh))
     }.reduce(_ unionByName _).join(bareIds, Seq("n_id"), "left_anti")

@@ -421,7 +421,7 @@ object Dedup {
 
   def loadLshIndex(spark: org.apache.spark.sql.SparkSession,
                    path: String): DataFrame =
-    spark.read.parquet(ArtifactStore.resolve(spark, path))
+    ArtifactStore.readSurface(spark, ArtifactStore.resolve(spark, path))
 
   /** Fold a DELTA batch's signatures into an existing banded index —
     * the update leg of build-once/serve-many ingestion dedup (documents
@@ -553,10 +553,10 @@ object Dedup {
     }
     val sigPaths = resolved.map { case (shardRoot, gen) =>
       SegmentStore.surfacePathsAt(spark, shardRoot, gen, "sig") }
-    val sig = spark.read.parquet(sigPaths.flatten: _*)
+    val sig = ArtifactStore.readSurface(spark, sigPaths.flatten: _*)
     if (sigPaths.forall(_.size <= 1)) sig.drop("seg_ord")
     else {
-      val masks = spark.read.parquet(resolved.flatMap {
+      val masks = ArtifactStore.readSurface(spark, resolved.flatMap {
         case (shardRoot, gen) =>
           SegmentStore.surfacePathsAt(spark, shardRoot, gen, "mask") }: _*)
       sig.join(broadcast(masks),
@@ -594,11 +594,11 @@ object Dedup {
     // live rows of the touched shards, read through the MASKED view —
     // raw segments still hold superseded bucket censuses that must not
     // resurface
-    val sig = spark.read.parquet(
+    val sig = ArtifactStore.readSurface(spark,
       pinned.flatMap { case (sh, (_, _, gen)) =>
         SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
           "sig") }: _*)
-    val masks = spark.read.parquet(
+    val masks = ArtifactStore.readSurface(spark,
       pinned.flatMap { case (sh, (_, _, gen)) =>
         SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
           "mask") }: _*)
@@ -1277,7 +1277,7 @@ object Dedup {
 
   def loadCdcIndex(spark: org.apache.spark.sql.SparkSession,
                    path: String): DataFrame =
-    spark.read.parquet(ArtifactStore.resolve(spark, path))
+    ArtifactStore.readSurface(spark, ArtifactStore.resolve(spark, path))
 
   /** Fold a delta into a two-surface [[CdcArtifact]]: chunk occurrences
     * union (per-doc rows, a monoid over disjoint doc sets) and the
@@ -1367,10 +1367,10 @@ object Dedup {
     val fs = new org.apache.hadoop.fs.Path(p)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(new org.apache.hadoop.fs.Path(p, "rollup")))
-      CdcArtifact(spark.read.parquet(s"$p/chunks"),
-        spark.read.parquet(s"$p/rollup"))
+      CdcArtifact(ArtifactStore.readSurface(spark, s"$p/chunks"),
+        ArtifactStore.readSurface(spark, s"$p/rollup"))
     else {
-      val rollup = spark.read.parquet(p)
+      val rollup = ArtifactStore.readSurface(spark, p)
       CdcArtifact(
         rollup.select(col("first_doc").as("doc_id"), col("h")).limit(0),
         rollup, legacy = true)
@@ -1434,11 +1434,12 @@ object Dedup {
     }
     val rollPaths = resolved.map { case (shardRoot, gen) =>
       SegmentStore.surfacePathsAt(spark, shardRoot, gen, "rollup") }
-    val rollRaw = spark.read.parquet(rollPaths.flatten: _*)
+    val rollRaw = ArtifactStore.readSurface(spark, rollPaths.flatten: _*)
       .select(col("h"), col("first_doc"), col("n_occ"))
     CdcArtifact(
-      spark.read.parquet(resolved.flatMap { case (shardRoot, gen) =>
-        SegmentStore.surfacePathsAt(spark, shardRoot, gen, "chunks") }: _*)
+      ArtifactStore.readSurface(spark, resolved.flatMap {
+        case (shardRoot, gen) =>
+          SegmentStore.surfacePathsAt(spark, shardRoot, gen, "chunks") }: _*)
         .select(col("doc_id"), col("h")),
       if (rollPaths.forall(_.size <= 1)) rollRaw
       else rollRaw.groupBy(col("h"))
@@ -1479,12 +1480,12 @@ object Dedup {
         deltaRollup, ShardedCommit.SegAppend)
       return touched
     }
-    val existChunks = spark.read.parquet(
+    val existChunks = ArtifactStore.readSurface(spark,
         pinned.flatMap { case (sh, (_, _, gen)) =>
           SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
             "chunks") }: _*)
       .select(col("doc_id"), col("h"))
-    val existRollup = spark.read.parquet(
+    val existRollup = ArtifactStore.readSurface(spark,
         pinned.flatMap { case (sh, (_, _, gen)) =>
           SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
             "rollup") }: _*)
@@ -1513,12 +1514,12 @@ object Dedup {
     val all = (0 until n).toSeq
     val pinned = all.map(sh =>
       sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
-    val chunks = spark.read.parquet(
+    val chunks = ArtifactStore.readSurface(spark,
         pinned.flatMap { case (sh, (_, _, gen)) =>
           SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
             "chunks") }: _*)
       .select(col("doc_id"), col("h"))
-    val rollup = spark.read.parquet(
+    val rollup = ArtifactStore.readSurface(spark,
         pinned.flatMap { case (sh, (_, _, gen)) =>
           SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
             "rollup") }: _*)
@@ -1545,7 +1546,7 @@ object Dedup {
     val all = (0 until n).toSeq
     val pinned = all.map(sh =>
       sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
-    val kept = spark.read.parquet(
+    val kept = ArtifactStore.readSurface(spark,
         pinned.flatMap { case (sh, (_, _, gen)) =>
           SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
             "chunks") }: _*)

@@ -87,10 +87,10 @@ object Retrieval {
   def loadBm25Index(spark: SparkSession, path: String): Bm25Index = {
     val p = ArtifactStore.resolve(spark, path)
     Bm25Index(
-      spark.read.parquet(s"$p/postings"),
-      spark.read.parquet(s"$p/doclen"),
-      spark.read.parquet(s"$p/docfreq"),
-      spark.read.parquet(s"$p/stats"))
+      ArtifactStore.readSurface(spark, s"$p/postings"),
+      ArtifactStore.readSurface(spark, s"$p/doclen"),
+      ArtifactStore.readSurface(spark, s"$p/docfreq"),
+      ArtifactStore.readSurface(spark, s"$p/stats"))
   }
 
   /** REMOVE a doc set from the inverted index — the
@@ -184,14 +184,12 @@ object Retrieval {
     ArtifactStore.publish(spark, path) { dir =>
       ShardedCommit.writeNumShards(spark, dir, numShards)
       commitBm25Shards(spark, dir,
-        (0 until numShards).map(sh =>
-          sh -> ArtifactStore.pinGen(spark, s"$dir/shards/$sh")),
+        pinAll(spark, dir, "shards", 0 until numShards),
         index.postings.select(col("term"), col("doc_id"), col("tf"))
           .withColumn("shard", termShard(numShards)),
         index.docfreq.select(col("term"), col("df"))
           .withColumn("shard", termShard(numShards)),
-        (0 until numShards).map(sh =>
-          sh -> ArtifactStore.pinGen(spark, s"$dir/docshards/$sh")),
+        pinAll(spark, dir, "docshards", 0 until numShards),
         index.doclen.select(col("doc_id"), col("dl"))
           .withColumn("shard", docShard(numShards)),
         Some((index.stats.select(col("n_docs"), col("total_len")),
@@ -200,41 +198,59 @@ object Retrieval {
     }
   }
 
+  /** Each pinned shard root with its live segment names — one manifest
+    * read per root, shared by every surface the caller scans. */
+  private def liveSegs(spark: SparkSession,
+                       pinned: Seq[(Int, ShardedCommit.Pin)])
+      : Seq[(String, Seq[String])] =
+    pinned.map { case (_, (root, _, gen)) =>
+      root -> SegmentStore.segmentsAt(spark, gen) }
+
+  /** One surface of a shard family as ONE multi-path scan over every
+    * root's live segments, its columns in `cols`' order — never an
+    * S-way union of single scans (the union's per-branch planning
+    * overhead is the cost sharding must not add). */
+  private def scanShards(spark: SparkSession,
+                         segs: Seq[(String, Seq[String])], surface: String,
+                         cols: String*): DataFrame =
+    ArtifactStore.readSurface(spark, segs.flatMap { case (root, ss) =>
+      ss.map(s => s"$root/$s/$surface") }: _*).select(cols.map(col): _*)
+
+  /** [[scanShards]] with each row's shard id, recomputed with the
+    * routing hash the rows were written under ([[termShard]] /
+    * [[docShard]]): every writer stages a row into shard `s` only when
+    * its hash mod S is `s`, so this equals the shard it was read from. */
+  private def scanRouted(spark: SparkSession,
+                         segs: Seq[(String, Seq[String])], surface: String,
+                         shard: org.apache.spark.sql.Column,
+                         cols: String*): DataFrame =
+    scanShards(spark, segs, surface, cols: _*).withColumn("shard", shard)
+
+  private def pinAll(spark: SparkSession, path: String, family: String,
+                     shards: Seq[Int]): Seq[(Int, ShardedCommit.Pin)] =
+    shards.map(sh => sh -> ArtifactStore.pinGen(spark, s"$path/$family/$sh"))
+
   /** Load the sharded artifact as a regular [[Bm25Index]]: every
     * surface is partition-column-free, so each loads as ONE multi-path
-    * scan over its per-shard live SEGMENTS (never an S-way union of
-    * single scans — the union's per-branch planning overhead is the
-    * cost sharding must not add at serve time; the path list just
-    * grows with append-mode segments until `index-compact`). docfreq
-    * segments written by append-mode updates are PARTIAL df counts;
-    * when any shard holds more than one segment the load sum-merges
-    * them per term — after compaction the plan collapses back to the
-    * plain scan. */
+    * scan over its per-shard live SEGMENTS ([[scanShards]]; the path
+    * list grows with append-mode segments until `index-compact`).
+    * docfreq segments written by append-mode updates are PARTIAL df
+    * counts; when any shard holds more than one segment the load
+    * sum-merges them per term — after compaction the plan collapses
+    * back to the plain scan. */
   def loadBm25Sharded(spark: SparkSession, root: String): Bm25Index = {
     val path = ArtifactStore.resolve(spark, root)
-    val n = ShardedCommit.numShards(spark, path)
-    val tPaths = (0 until n).map { sh =>
-      val root = s"$path/shards/$sh"
-      (root, ArtifactStore.resolve(spark, root))
-    }
-    val dPaths = (0 until n).map { sh =>
-      val root = s"$path/docshards/$sh"
-      (root, ArtifactStore.resolve(spark, root))
-    }
-    val dfPaths = tPaths.map { case (root, gen) =>
-      SegmentStore.surfacePathsAt(spark, root, gen, "docfreq") }
-    val dfRaw = spark.read.parquet(dfPaths.flatten: _*)
-      .select(col("term"), col("df"))
+    val all = 0 until ShardedCommit.numShards(spark, path)
+    val tSegs = liveSegs(spark, pinAll(spark, path, "shards", all))
+    val dfRaw = scanShards(spark, tSegs, "docfreq", "term", "df")
     Bm25Index(
-      spark.read.parquet(tPaths.flatMap { case (root, gen) =>
-        SegmentStore.surfacePathsAt(spark, root, gen, "postings") }: _*)
-        .select(col("term"), col("doc_id"), col("tf")),
-      spark.read.parquet(dPaths.flatMap { case (root, gen) =>
-        SegmentStore.surfacePathsAt(spark, root, gen, "doclen") }: _*)
-        .select(col("doc_id"), col("dl")),
-      if (dfPaths.forall(_.size <= 1)) dfRaw
+      scanShards(spark, tSegs, "postings", "term", "doc_id", "tf"),
+      scanShards(spark, liveSegs(spark, pinAll(spark, path, "docshards", all)),
+        "doclen", "doc_id", "dl"),
+      if (tSegs.forall(_._2.size <= 1)) dfRaw
       else dfRaw.groupBy(col("term")).agg(sum(col("df")).as("df")),
-      spark.read.parquet(ArtifactStore.resolve(spark, s"$path/stats")))
+      ArtifactStore.readSurface(spark,
+        ArtifactStore.resolve(spark, s"$path/stats")))
   }
 
   /** Fold a DELTA batch in. Default (`append = true`, the 100 TB
@@ -270,46 +286,31 @@ object Retrieval {
     val dTouched = dLen.select(col("shard")).distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
     if (tTouched.isEmpty && dTouched.isEmpty) return tTouched
-    val tPinned = tTouched.map(sh =>
-      sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh")).toMap
-    val dPinned = dTouched.map(sh =>
-      sh -> ArtifactStore.pinGen(spark, s"$path/docshards/$sh")).toMap
+    val tPinned = pinAll(spark, path, "shards", tTouched)
+    val dPinned = pinAll(spark, path, "docshards", dTouched)
     val sPin = ArtifactStore.pinGen(spark, s"$path/stats")
-    val newStats = spark.read.parquet(sPin._3)
+    val newStats = ArtifactStore.readSurface(spark, sPin._3)
       .select(col("n_docs"), col("total_len")).unionByName(d.stats)
       .agg(sum(col("n_docs")).as("n_docs"),
         sum(col("total_len")).as("total_len"))
+    val dDf = d.docfreq.withColumn("shard", termShard(n))
     if (append) {
-      commitBm25Shards(spark, path,
-        tTouched.map(sh => sh -> tPinned(sh)),
-        dPost, d.docfreq.withColumn("shard", termShard(n)),
-        dTouched.map(sh => sh -> dPinned(sh)), dLen,
+      commitBm25Shards(spark, path, tPinned, dPost, dDf, dPinned, dLen,
         Some((newStats, sPin)), ShardedCommit.SegAppend)
       return tTouched
     }
-    val existPost = tTouched.map { sh =>
-      spark.read.parquet(SegmentStore.surfacePathsAt(spark,
-          s"$path/shards/$sh", tPinned(sh)._3, "postings"): _*)
-        .select(col("term"), col("doc_id"), col("tf"))
-        .withColumn("shard", lit(sh))
-    }.reduce(_ unionByName _)
-    val existDf = tTouched.map { sh =>
-      spark.read.parquet(SegmentStore.surfacePathsAt(spark,
-          s"$path/shards/$sh", tPinned(sh)._3, "docfreq"): _*)
-        .select(col("term"), col("df")).withColumn("shard", lit(sh))
-    }.reduce(_ unionByName _)
-    val existLen = dTouched.map { sh =>
-      spark.read.parquet(SegmentStore.surfacePathsAt(spark,
-          s"$path/docshards/$sh", dPinned(sh)._3, "doclen"): _*)
-        .select(col("doc_id"), col("dl")).withColumn("shard", lit(sh))
-    }.reduce(_ unionByName _)
-    commitBm25Shards(spark, path,
-      tTouched.map(sh => sh -> tPinned(sh)),
-      existPost.unionByName(dPost),
-      existDf.unionByName(d.docfreq.withColumn("shard", termShard(n)))
+    val tSegs = liveSegs(spark, tPinned)
+    val dSegs = liveSegs(spark, dPinned)
+    commitBm25Shards(spark, path, tPinned,
+      scanRouted(spark, tSegs, "postings", termShard(n),
+          "term", "doc_id", "tf")
+        .unionByName(dPost),
+      scanRouted(spark, tSegs, "docfreq", termShard(n), "term", "df")
+        .unionByName(dDf)
         .groupBy(col("shard"), col("term")).agg(sum(col("df")).as("df")),
-      dTouched.map(sh => sh -> dPinned(sh)),
-      existLen.unionByName(dLen),
+      dPinned,
+      scanRouted(spark, dSegs, "doclen", docShard(n), "doc_id", "dl")
+        .unionByName(dLen),
       Some((newStats, sPin)),
       ShardedCommit.SegReplace)
     tTouched
@@ -319,36 +320,24 @@ object Retrieval {
     * the read-amplification reset after a run of append-mode updates
     * (postings/doclen re-persist as-is, docfreq sum-merges its
     * partials; results are hash-identical by the same argument as the
-    * merge update). Returns (termShards, docShards) compacted. */
+    * merge update). One scan per surface over every shard's segments.
+    * Returns (termShards, docShards) compacted. */
   def compactBm25Sharded(spark: SparkSession, root: String)
       : (Seq[Int], Seq[Int]) = {
     val path = ArtifactStore.resolve(spark, root)
     val n = ShardedCommit.numShards(spark, path)
     val all = (0 until n).toSeq
-    val tPinned = all.map(sh =>
-      sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh")).toMap
-    val dPinned = all.map(sh =>
-      sh -> ArtifactStore.pinGen(spark, s"$path/docshards/$sh")).toMap
-    val post = all.map { sh =>
-      spark.read.parquet(SegmentStore.surfacePathsAt(spark,
-          s"$path/shards/$sh", tPinned(sh)._3, "postings"): _*)
-        .select(col("term"), col("doc_id"), col("tf"))
-        .withColumn("shard", lit(sh))
-    }.reduce(_ unionByName _)
-    val df = all.map { sh =>
-      spark.read.parquet(SegmentStore.surfacePathsAt(spark,
-          s"$path/shards/$sh", tPinned(sh)._3, "docfreq"): _*)
-        .select(col("term"), col("df")).withColumn("shard", lit(sh))
-    }.reduce(_ unionByName _)
-      .groupBy(col("shard"), col("term")).agg(sum(col("df")).as("df"))
-    val len = all.map { sh =>
-      spark.read.parquet(SegmentStore.surfacePathsAt(spark,
-          s"$path/docshards/$sh", dPinned(sh)._3, "doclen"): _*)
-        .select(col("doc_id"), col("dl")).withColumn("shard", lit(sh))
-    }.reduce(_ unionByName _)
-    commitBm25Shards(spark, path,
-      all.map(sh => sh -> tPinned(sh)), post, df,
-      all.map(sh => sh -> dPinned(sh)), len,
+    val tPinned = pinAll(spark, path, "shards", all)
+    val dPinned = pinAll(spark, path, "docshards", all)
+    val tSegs = liveSegs(spark, tPinned)
+    commitBm25Shards(spark, path, tPinned,
+      scanRouted(spark, tSegs, "postings", termShard(n),
+        "term", "doc_id", "tf"),
+      scanRouted(spark, tSegs, "docfreq", termShard(n), "term", "df")
+        .groupBy(col("shard"), col("term")).agg(sum(col("df")).as("df")),
+      dPinned,
+      scanRouted(spark, liveSegs(spark, dPinned), "doclen",
+        docShard(n), "doc_id", "dl"),
       None, ShardedCommit.SegReplace)
     (all, all)
   }
@@ -371,36 +360,27 @@ object Retrieval {
       .collect().map(_.getInt(0)).sorted.toSeq
     if (dTouched.isEmpty) return dTouched
     val tAll = (0 until n).toSeq
-    val tPinned = tAll.map(sh =>
-      sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh")).toMap
-    val dPinned = dTouched.map(sh =>
-      sh -> ArtifactStore.pinGen(spark, s"$path/docshards/$sh")).toMap
+    val tPinned = pinAll(spark, path, "shards", tAll)
+    val dPinned = pinAll(spark, path, "docshards", dTouched)
     val sPin = ArtifactStore.pinGen(spark, s"$path/stats")
-    val keptPost = OperatorCaches.register(tAll.map { sh =>
-      spark.read.parquet(SegmentStore.surfacePathsAt(spark,
-          s"$path/shards/$sh", tPinned(sh)._3, "postings"): _*)
-        .select(col("term"), col("doc_id"), col("tf"))
-        .withColumn("shard", lit(sh))
-    }.reduce(_ unionByName _).join(ids, Seq("doc_id"), "left_anti")
-      .persist())
-    val touchedLen = dTouched.map { sh =>
-      spark.read.parquet(SegmentStore.surfacePathsAt(spark,
-          s"$path/docshards/$sh", dPinned(sh)._3, "doclen"): _*)
-        .select(col("doc_id"), col("dl")).withColumn("shard", lit(sh))
-    }.reduce(_ unionByName _)
+    val keptPost = OperatorCaches.register(
+      scanRouted(spark, liveSegs(spark, tPinned), "postings",
+          termShard(n), "term", "doc_id", "tf")
+        .join(ids, Seq("doc_id"), "left_anti").persist())
+    val touchedLen = scanRouted(spark, liveSegs(spark, dPinned),
+      "doclen", docShard(n), "doc_id", "dl")
     val removedAgg = touchedLen.join(ids, Seq("doc_id"), "left_semi")
       .agg(coalesce(count(lit(1)), lit(0L)).as("rm_docs"),
         coalesce(sum(col("dl")), lit(0L)).as("rm_len"))
-    val newStats = spark.read.parquet(sPin._3)
+    val newStats = ArtifactStore.readSurface(spark, sPin._3)
       .select(col("n_docs"), col("total_len")).crossJoin(removedAgg)
       .select((col("n_docs") - col("rm_docs")).as("n_docs"),
         (col("total_len") - col("rm_len")).as("total_len"))
-    commitBm25Shards(spark, path,
-      tAll.map(sh => sh -> tPinned(sh)),
+    commitBm25Shards(spark, path, tPinned,
       keptPost,
       keptPost.groupBy(col("shard"), col("term"))
         .agg(count(lit(1)).as("df")),
-      dTouched.map(sh => sh -> dPinned(sh)),
+      dPinned,
       touchedLen.join(ids, Seq("doc_id"), "left_anti"),
       Some((newStats, sPin)),
       ShardedCommit.SegReplace)
@@ -417,11 +397,11 @@ object Retrieval {
     * through [[ShardedCommit.commitSegmented]]. */
   private def commitBm25Shards(
       spark: SparkSession, path: String,
-      termShards: Seq[(Int, (String, Option[String], String))],
+      termShards: Seq[(Int, ShardedCommit.Pin)],
       postings: DataFrame, docfreq: DataFrame,
-      docShards: Seq[(Int, (String, Option[String], String))],
+      docShards: Seq[(Int, ShardedCommit.Pin)],
       doclen: DataFrame,
-      stats: Option[(DataFrame, (String, Option[String], String))],
+      stats: Option[(DataFrame, ShardedCommit.Pin)],
       mode: ShardedCommit.SegMode): Unit = {
     import ShardedCommit.{SegFamily, Surface}
     ShardedCommit.commitSegmented(spark, path,

@@ -252,7 +252,7 @@ object UnigramLm {
   }
 
   def loadVocab(spark: SparkSession, path: String): Vocab = {
-    val rows = spark.read.parquet(
+    val rows = graft.sinks.ArtifactStore.readSurface(spark,
       graft.sinks.ArtifactStore.resolve(spark, path))
       .select(col("piece").cast("string"), col("cnt").cast("long"),
         col("cost").cast("long"), col("unk_cost").cast("long"))

@@ -244,7 +244,7 @@ object WordPiece {
   }
 
   def loadVocab(spark: SparkSession, path: String): WpVocab = {
-    val rows = spark.read.parquet(
+    val rows = graft.sinks.ArtifactStore.readSurface(spark,
       graft.sinks.ArtifactStore.resolve(spark, path))
       .select(col("piece").cast("string"), col("is_cont").cast("boolean"))
       .collect()

@@ -1,7 +1,12 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Versioned-generation layout for persisted index artifacts — the
   * pointer-file commit protocol every table format with concurrent
@@ -48,6 +53,11 @@ import org.apache.spark.sql.SparkSession
   * place. A root holds only the pointer, the claim while a commit runs,
   * and generation directories; a sharded artifact keeps its codebooks,
   * `_num_shards` marker and per-shard roots inside its top generation.
+  *
+  * One read path for every artifact surface: [[readSurface]] takes the
+  * schema from the writer's parquet footer on the driver, so no
+  * artifact load launches a Spark job — a load is lazy, and the only
+  * jobs are the ones its caller's actions plan.
   */
 object ArtifactStore {
 
@@ -100,6 +110,75 @@ object ArtifactStore {
       try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
       finally in.close()
     } catch { case _: java.io.FileNotFoundException => None }
+
+  /** The row-metadata key under which Spark's parquet writer stores the
+    * written frame's schema as JSON. */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
+
+  /** Spark's listing rules ([[readSurface]] must pick a file the scan
+    * itself would list): `_`/`.` entries are hidden unless they are a
+    * `k=v` partition directory, and in-flight `._COPYING_` files are
+    * skipped. */
+  private def listed(name: String): Boolean =
+    !((name.startsWith("_") && !name.contains("=")) ||
+      name.startsWith(".") || name.endsWith("._COPYING_"))
+
+  /** The first data file Spark would list under `p`, descending into
+    * listed subdirectories; None when there is none or `p` does not
+    * exist. */
+  private def firstDataFile(fs: FileSystem, p: Path): Option[FileStatus] = {
+    val entries =
+      try fs.listStatus(p)
+      catch {
+        case _: java.io.FileNotFoundException => Array.empty[FileStatus]
+      }
+    val (files, dirs) = entries.filter(s => listed(s.getPath.getName))
+      .sortBy(_.getPath.getName).partition(_.isFile)
+    files.headOption.orElse(
+      dirs.iterator.flatMap(d => firstDataFile(fs, d.getPath)).nextOption())
+  }
+
+  /** The Spark schema a parquet data file's writer recorded in its
+    * footer; None for a file written by another engine (no row
+    * metadata). Reads only the footer's key-value metadata. */
+  private def footerSchema(spark: SparkSession,
+                           f: FileStatus): Option[StructType] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf),
+      HadoopReadOptions.builder(conf)
+        .withMetadataFilter(ParquetMetadataConverter.SKIP_ROW_GROUPS).build())
+    try Option(reader.getFooter.getFileMetaData.getKeyValueMetaData
+        .get(SparkSchemaKey))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
+    finally reader.close()
+  }
+
+  /** Read an artifact surface (one directory, or a surface's segment
+    * list as one multi-path scan) WITHOUT a schema-inference job. A
+    * schema-less `spark.read.parquet` runs one Spark job just to read a
+    * footer — ~60-150 ms of scheduling, the same fixed cost that moved
+    * the shard count out of parquet into `_num_shards`
+    * (`ShardedCommit`), paid once per surface on every load, update,
+    * compaction and removal. Here the first data file Spark would list
+    * under `paths` is found on the driver, its writer's schema is read
+    * from the footer (Spark's row-metadata key, exactly what inference
+    * would pick), and the scan is planned with it. Partition columns
+    * (`shard=`, `c_id=`) are still discovered from the paths.
+    *
+    * Segments of one surface may store their columns in different
+    * orders (an append segment is written from a differently-ordered
+    * frame than the base), so callers keep their explicit `select`s;
+    * parquet columns are matched by name. With no data file (or a
+    * footer without Spark's schema, a file another engine wrote) this
+    * IS `spark.read.parquet(paths)`: inference then fails loudly on a
+    * missing or empty surface exactly as before. */
+  def readSurface(spark: SparkSession, paths: String*): DataFrame =
+    paths.iterator
+      .flatMap(p => firstDataFile(fsOf(spark, p), new Path(p))).nextOption()
+      .flatMap(footerSchema(spark, _))
+      .fold(spark.read.parquet(paths: _*))(
+        spark.read.schema(_).parquet(paths: _*))
 
   /** The live generation's directory NAME, None for a root no commit
     * has published yet. Pointer writes are atomic (temp + rename), so a

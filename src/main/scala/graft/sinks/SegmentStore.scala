@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Segmented shard roots — the WRITE-VOLUME fix for the sharded
@@ -61,17 +61,21 @@ object SegmentStore {
   private def fsOf(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  /** A root's entries, empty when the root does not exist yet — ONE
+    * `listStatus` treating `FileNotFoundException` as absence (the
+    * `ArtifactStore.readText` idiom: an `exists` probe first would pay a
+    * second metadata call per touched root per commit). */
+  private def listRoot(spark: SparkSession, root: String): Array[FileStatus] =
+    try fsOf(spark, root).listStatus(new Path(root))
+    catch { case _: java.io.FileNotFoundException => Array.empty }
+
   /** Next segment name for a root: one past the max ordinal of EVERY
     * present `_seg_*` dir (not just the referenced ones — a displaced
     * generation's segments still hold their ordinals, and reusing one
     * would let an unreferenced dir shadow fresh data). */
   def newSegName(spark: SparkSession, root: String): String = {
-    val fs = fsOf(spark, root)
-    val r = new Path(root)
-    val prev =
-      if (!fs.exists(r)) -1L
-      else fs.listStatus(r).iterator
-        .flatMap(s => segOrdinal(s.getPath.getName)).foldLeft(-1L)(_ max _)
+    val prev = listRoot(spark, root).iterator
+      .flatMap(s => segOrdinal(s.getPath.getName)).foldLeft(-1L)(_ max _)
     f"${SegPrefix.stripSuffix("_")}_${prev + 1L}%d_" +
       java.util.UUID.randomUUID().toString.take(8)
   }
@@ -120,9 +124,7 @@ object SegmentStore {
                    graceMs: Long = ArtifactStore.StagingGraceMs)
       : Seq[String] = {
     val fs = fsOf(spark, root)
-    val r = new Path(root)
-    if (!fs.exists(r)) return Seq.empty
-    val statuses = fs.listStatus(r)
+    val statuses = listRoot(spark, root)
     val referenced: Set[String] = statuses.iterator
       .map(_.getPath.getName)
       .filter(ArtifactStore.isGenName)

@@ -1,0 +1,118 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graftbridge.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
+
+import graft.operators.{Bpe, Clustering, Dedup, Retrieval, UnigramLm, WordPiece}
+import graft.sinks.ArtifactStore
+
+/** Spark-job ceilings for the index lifecycle: every job is a fixed
+  * scheduling cost (tens of ms at any data size), so a change that adds
+  * jobs to a load or a lifecycle op fails here before it shows on the
+  * benchmark. Suites run one at a time in the forked test JVM, so the
+  * counter sees only the measured block's jobs. */
+class JobBudgetSpec extends SparkSpec with BeforeAndAfterAll {
+
+  private val started = new AtomicInteger()
+  private lazy val counter = {
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        started.incrementAndGet(); ()
+      }
+    }
+    spark.sparkContext.addSparkListener(l)
+    l
+  }
+
+  override def afterAll(): Unit =
+    try spark.sparkContext.removeSparkListener(counter)
+    finally super.afterAll()
+
+  /** The Spark jobs `body` launches. */
+  private def jobsOf(body: => Any): Int = {
+    counter
+    ListenerDrain(spark.sparkContext)
+    val before = started.get()
+    body
+    ListenerDrain(spark.sparkContext)
+    started.get() - before
+  }
+
+  private val loaders: Map[String, (SparkSession, String) => Any] = Map(
+    "lsh" -> Dedup.loadLshIndex, "lsh-sharded" -> Dedup.loadLshSharded,
+    "cdc" -> Dedup.loadCdcArtifact, "cdc-sharded" -> Dedup.loadCdcSharded,
+    "bm25" -> Retrieval.loadBm25Index,
+    "bm25-sharded" -> Retrieval.loadBm25Sharded,
+    "semdedup" -> Clustering.loadSemIndex,
+    "semdedup-sharded" -> Clustering.loadSemIndexSharded,
+    "ivf" -> Clustering.loadIvfCodebook,
+    "ivfflat" -> Clustering.loadIvfFlatIndex,
+    "ivfflat-sharded" -> Clustering.loadIvfFlatSharded,
+    "ivfpq" -> Clustering.loadIvfPqIndex,
+    "ivfpq-sharded" -> Clustering.loadIvfPqSharded,
+    "ivfpqr" -> Clustering.loadIvfPqrIndex,
+    "ivfpqr-sharded" -> Clustering.loadIvfPqrSharded,
+    "pq" -> Clustering.loadPqIndex, "sq" -> Clustering.loadSqIndex,
+    "ivfsq" -> Clustering.loadIvfSqIndex, "imi" -> Clustering.loadImiIndex,
+    "bpe" -> Bpe.loadMerges, "unigram" -> UnigramLm.loadVocab,
+    "wordpiece" -> WordPiece.loadVocab,
+    "decontam" -> ((s: SparkSession, p: String) =>
+      ArtifactStore.readSurface(s, ArtifactStore.resolve(s, p))))
+
+  /** Loaders that hand the caller driver-side values, not frames: their
+    * one job is that collect (the tokenizer vocabularies, the IVF
+    * codebook) or the 1-row fitted-parameter read (semdedup, imi). */
+  private val materializing = Set("bpe", "unigram", "wordpiece", "ivf",
+    "semdedup", "semdedup-sharded", "imi")
+
+  test("loading any index type's artifact launches no schema-inference job: frame loaders launch none, driver-side loaders only their collect") {
+    val base = tmpDir("jobload")
+    val fixtures = IndexFixtures.all(spark)
+    assert(fixtures.map(_.tpe).toSet == loaders.keySet)
+    for (fx <- fixtures) {
+      val path = s"$base/${fx.tpe}"
+      IndexTool.build(spark, fx.tpe, fx.input, path, fx.flags)
+      val want = if (materializing(fx.tpe)) 1 else 0
+      val got = jobsOf(loaders(fx.tpe)(spark, path))
+      assert(got == want, s"${fx.tpe}: load launched $got jobs, want $want")
+    }
+  }
+
+  test("bm25-sharded (S = 4) update, serve, compact and remove stay within their job ceilings") {
+    import spark.implicits._
+    val base = tmpDir("jobbm25")
+    val path = s"$base/bm25"
+    val flags = Map("shards" -> "4", "topk" -> "3")
+    val words = "spark join hash table scan batch row filter merge plan " +
+      "slow order vector line agg bloom index shard segment commit"
+    val vocab = words.split(" ")
+    def docs(ids: Range): org.apache.spark.sql.DataFrame = ids.map { i =>
+      (i.toLong, (0 until 6).map(j => vocab((i * 7 + j * 3) % vocab.length))
+        .mkString(" "))
+    }.toDF("doc_id", "text")
+    IndexTool.build(spark, "bm25-sharded", docs(0 until 40), path, flags)
+    val queries = docs(0 until 3)
+    // ceilings = the counts this fixture measures with footer-read
+    // schemas and one scan per surface (before: 25, 15, 19 and 30 —
+    // a schema-inference job per surface read, S per surface in
+    // compaction and removal)
+    val ceilings = Seq("update" -> 20, "serve" -> 11, "compact" -> 7,
+      "remove" -> 18)
+    val counts = Seq(
+      "update" -> jobsOf(IndexTool.update(spark, "bm25-sharded",
+        docs(100 until 104), path, flags)),
+      "serve" -> jobsOf(IndexTool.serve(spark, "bm25-sharded", queries,
+        path, flags).collect()),
+      "compact" -> jobsOf(IndexTool.compact(spark, "bm25-sharded", path,
+        flags)),
+      "remove" -> jobsOf(IndexTool.remove(spark, "bm25-sharded",
+        Seq(1L, 2L, 101L).toDF("doc_id"), path, flags)))
+    counts.zip(ceilings).foreach { case ((op, got), (_, ceiling)) =>
+      assert(got <= ceiling, s"$op launched $got jobs, ceiling $ceiling")
+    }
+  }
+}

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import graft.{IndexTool, SparkSpec}
+import graft.{IndexFixtures, IndexTool, SparkSpec}
 import graft.operators.{Dedup, Retrieval}
 import org.apache.spark.sql.DataFrame
 
@@ -433,37 +433,11 @@ class ArtifactStoreSpec extends SparkSpec {
 
   test("every index-build type keeps its root down to the pointer and generations, after build, update and remove") {
     val base = tmpDir("artlayout")
-    val docs = Seq((0L, "spark join hash table scan batch"),
-      (1L, "row batch filter merge plan"), (2L, "slow order vector line agg"),
-      (3L, "spark join hash table scan rows")).toDF("doc_id", "text")
-    val docDelta = Seq((10L, "completely novel content here today"))
-      .toDF("doc_id", "text")
-    def emb(ids: Seq[Long]): DataFrame = ids.map { i =>
-        val v = Array(1f, 1f, 1f, 1f); v((i % 4).toInt) = 10f + i * 0.01f
-        (i, v.toSeq)
-      }.toDF("vec_id", "embedding")
-      .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
-    val vecs = emb(0L until 12L)
-    val vecDelta = emb(Seq(20L, 21L))
-    val pq = Map("dim" -> "4", "m" -> "2", "k" -> "2", "centroids" -> "2")
-    val flags: Map[String, Map[String, String]] = Map(
-      "lsh" -> Map("shingle-n" -> "2"), "cdc" -> Map("avg-mask" -> "3"),
-      "ivf" -> Map("centroids" -> "2"), "ivfflat" -> Map("centroids" -> "2"),
-      "ivfpq" -> pq, "ivfpqr" -> pq, "pq" -> (pq - "centroids"),
-      "sq" -> Map("dim" -> "4"), "ivfsq" -> Map("dim" -> "4", "centroids" -> "2"),
-      "imi" -> Map("dim" -> "4", "half-centroids-a" -> "2",
-        "half-centroids-b" -> "2"),
-      "semdedup" -> Map("coarse-k" -> "2", "target-rows" -> "4",
-        "cluster-cap" -> "64"))
-    val docTypes = Set("lsh", "cdc", "bm25", "bpe", "unigram", "wordpiece")
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    for (tpe <- (IndexTool.Types - "hybrid").toSeq.sorted) {
+    for (fx <- IndexFixtures.all(spark)) {
+      val tpe = fx.tpe
       val path = s"$base/$tpe"
-      val tier = tpe.stripSuffix("-sharded")
-      val f = flags.getOrElse(tier, Map.empty[String, String]) +
-        ("shards" -> "2")
-      val doc = docTypes(tier)
       def assertLayout(after: String): Unit = {
         // Hadoop's local FS writes hidden `.<name>.crc` checksum sidecars
         val names = fs.listStatus(new org.apache.hadoop.fs.Path(path))
@@ -475,17 +449,90 @@ class ArtifactStoreSpec extends SparkSpec {
           s"$tpe after $after: root must hold only the pointer and " +
             s"generations: ${names.sorted}")
       }
-      IndexTool.build(spark, tpe, if (doc) docs else vecs, path, f)
+      IndexTool.build(spark, tpe, fx.input, path, fx.flags)
       assertLayout("build")
       if (IndexTool.UpdateTypes(tpe)) {
-        IndexTool.update(spark, tpe, if (doc) docDelta else vecDelta, path, f)
+        IndexTool.update(spark, tpe, fx.delta, path, fx.flags)
         assertLayout("update")
       }
       if (IndexTool.RemoveTypes(tpe)) {
-        IndexTool.remove(spark, tpe,
-          if (doc) Seq(1L).toDF("doc_id") else Seq(1L).toDF("vec_id"), path, f)
+        IndexTool.remove(spark, tpe, fx.removed, path, fx.flags)
         assertLayout("remove")
       }
     }
+  }
+
+  /** Every directory under `dir` that Spark would read as one surface:
+    * a directory holding data files directly, or the root above its
+    * `k=v` partition directories. Generation and segment directories
+    * are walked too (readers name them explicitly). */
+  private def surfaceDirs(dir: String): Seq[String] = {
+    val fs = new org.apache.hadoop.fs.Path(dir)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def walk(p: org.apache.hadoop.fs.Path): Seq[org.apache.hadoop.fs.Path] = {
+      val (files, dirs) = fs.listStatus(p).toSeq.partition(_.isFile)
+      val here =
+        if (files.exists(f => f.getPath.getName.startsWith("part-"))) Seq(p)
+        else Nil
+      here ++ dirs.flatMap(d => walk(d.getPath))
+    }
+    walk(new org.apache.hadoop.fs.Path(dir)).map { p =>
+      var q = p
+      while (q.getName.contains("=")) q = q.getParent
+      q.toString
+    }.distinct.sorted
+  }
+
+  test("readSurface takes each surface's schema from its footer: the same schema inference gives, for every surface of every index type") {
+    val base = tmpDir("artschema")
+    def assertParity(tpe: String, after: String, root: String): Unit = {
+      val dirs = surfaceDirs(root)
+      assert(dirs.nonEmpty, s"$tpe after $after: no surface under $root")
+      dirs.foreach { d =>
+        assert(ArtifactStore.readSurface(spark, d).schema ==
+          spark.read.parquet(d).schema, s"$tpe after $after: $d")
+      }
+    }
+    for (fx <- IndexFixtures.all(spark)) {
+      val path = s"$base/${fx.tpe}"
+      IndexTool.build(spark, fx.tpe, fx.input, path, fx.flags)
+      assertParity(fx.tpe, "build", path)
+      if (IndexTool.UpdateTypes(fx.tpe)) {
+        IndexTool.update(spark, fx.tpe, fx.delta, path, fx.flags)
+        assertParity(fx.tpe, "update", path)
+      }
+    }
+    // a bm25-sharded surface after an append update, read as one
+    // multi-path scan: the delta segment stores (doc_id, term, tf), the
+    // base (term, doc_id, tf) — the same fields, in another order
+    val bm = ArtifactStore.resolve(spark, s"$base/bm25-sharded")
+    def fieldsByName(df: DataFrame) = df.schema.fields.map(f => f.name -> f).toMap
+    for (surface <- Seq("postings", "docfreq")) {
+      val paths = (0 until 2).flatMap { sh =>
+        val root = s"$bm/shards/$sh"
+        SegmentStore.surfacePathsAt(spark, root,
+          ArtifactStore.resolve(spark, root), surface)
+      }
+      assert(paths.size > 2, s"no append segment in $paths")
+      assert(fieldsByName(ArtifactStore.readSurface(spark, paths: _*)) ==
+        fieldsByName(spark.read.parquet(paths: _*)), surface)
+    }
+    // partitioned roots: partition columns still come from the paths
+    import spark.implicits._
+    val rows = Seq((1L, 0, 3L, "a"), (2L, 1, 4L, "b")).toDF("n_id", "shard", "c_id", "v")
+    for (parts <- Seq(Seq("shard"), Seq("c_id"), Seq("shard", "c_id"))) {
+      val d = s"$base/part_${parts.mkString("_")}"
+      rows.write.partitionBy(parts: _*).parquet(d)
+      val got = ArtifactStore.readSurface(spark, d)
+      assert(got.schema == spark.read.parquet(d).schema, d)
+      assert(got.collect().toSet == spark.read.parquet(d).collect().toSet, d)
+    }
+    // no data file: fails loudly, as inference does
+    val empty = s"$base/empty"
+    new java.io.File(empty).mkdirs()
+    intercept[org.apache.spark.sql.AnalysisException](
+      ArtifactStore.readSurface(spark, empty))
+    intercept[org.apache.spark.sql.AnalysisException](
+      ArtifactStore.readSurface(spark, s"$base/missing"))
   }
 }
