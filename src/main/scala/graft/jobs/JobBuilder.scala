@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.kvstore.{KeyValueStore, UnconfiguredKeyValueStore}
 import graft.operators.Lifecycle
 import graft.operators.Lifecycle._
-import graft.sinks.BulkSink
+import graft.sinks.{ArtifactStore, BulkSink}
 
 /** Job facade — the `MapReduceJobBuilder` analog
   * (`KM/framework/MapReduceJobBuilder.java:296-307` configure chain,
@@ -65,7 +65,7 @@ object Jobs {
       * empty typed frames, not a path-not-found, so listings and joins
       * against a fresh history stay valid. */
     def table: DataFrame =
-      if (exists("jobs")) spark.read.parquet(s"$path/jobs")
+      if (exists("jobs")) ArtifactStore.readSurface(spark, s"$path/jobs")
       else {
         import spark.implicits._
         Seq.empty[(String, String, Long, Long, String,
@@ -75,7 +75,8 @@ object Jobs {
       }
 
     def counters: DataFrame =
-      if (exists("counters")) spark.read.parquet(s"$path/counters")
+      if (exists("counters"))
+        ArtifactStore.readSurface(spark, s"$path/counters")
       else {
         import spark.implicits._
         Seq.empty[(String, String, Long)]

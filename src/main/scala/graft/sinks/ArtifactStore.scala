@@ -54,10 +54,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * and generation directories; a sharded artifact keeps its codebooks,
   * `_num_shards` marker and per-shard roots inside its top generation.
   *
-  * One read path for every artifact surface: [[readSurface]] takes the
-  * schema from the writer's parquet footer on the driver, so no
-  * artifact load launches a Spark job — a load is lazy, and the only
-  * jobs are the ones its caller's actions plan.
+  * One read path for every parquet the engine wrote — artifact surfaces,
+  * entity-table bases and change feeds, job history: [[readSurface]]
+  * takes the schema from the writer's parquet footer on the driver, so
+  * no load launches a Spark job — a load is lazy, and the only jobs are
+  * the ones its caller's actions plan.
   */
 object ArtifactStore {
 
@@ -104,7 +105,7 @@ object ArtifactStore {
     * `open` treating `FileNotFoundException` as absence (an `exists`
     * probe first would pay a second metadata call on every pointer,
     * manifest and marker read, once per shard root). */
-  private[sinks] def readText(spark: SparkSession, p: Path): Option[String] =
+  private[graft] def readText(spark: SparkSession, p: Path): Option[String] =
     try {
       val in = p.getFileSystem(spark.sparkContext.hadoopConfiguration).open(p)
       try Some(scala.io.Source.fromInputStream(in, "UTF-8").mkString)
@@ -154,17 +155,18 @@ object ArtifactStore {
     finally reader.close()
   }
 
-  /** Read an artifact surface (one directory, or a surface's segment
-    * list as one multi-path scan) WITHOUT a schema-inference job. A
-    * schema-less `spark.read.parquet` runs one Spark job just to read a
-    * footer — ~60-150 ms of scheduling, the same fixed cost that moved
-    * the shard count out of parquet into `_num_shards`
-    * (`ShardedCommit`), paid once per surface on every load, update,
-    * compaction and removal. Here the first data file Spark would list
-    * under `paths` is found on the driver, its writer's schema is read
-    * from the footer (Spark's row-metadata key, exactly what inference
-    * would pick), and the scan is planned with it. Partition columns
-    * (`shard=`, `c_id=`) are still discovered from the paths.
+  /** Read any parquet the engine wrote (an artifact surface, a
+    * surface's segment list as one multi-path scan, an entity table's
+    * base, bucket leaves or change feed) WITHOUT a schema-inference job.
+    * A schema-less `spark.read.parquet` runs one Spark job just to read
+    * a footer — ~60-150 ms of scheduling, the same fixed cost that moved
+    * the shard count out of parquet into `_num_shards` (`ShardedCommit`),
+    * paid once per read on every load, update, append, merged read and
+    * fold. Here the first data file Spark would list under `paths` is
+    * found on the driver, its writer's schema is read from the footer
+    * (Spark's row-metadata key, exactly what inference would pick), and
+    * the scan is planned with it. Partition columns (`shard=`, `c_id=`,
+    * `lg=`) are still discovered from the paths.
     *
     * Segments of one surface may store their columns in different
     * orders (an append segment is written from a differently-ordered
@@ -172,13 +174,23 @@ object ArtifactStore {
     * parquet columns are matched by name. With no data file (or a
     * footer without Spark's schema, a file another engine wrote) this
     * IS `spark.read.parquet(paths)`: inference then fails loudly on a
-    * missing or empty surface exactly as before. */
+    * missing or empty surface exactly as before. User-supplied inputs
+    * stay on plain inference: their footers need not be Spark's. */
   def readSurface(spark: SparkSession, paths: String*): DataFrame =
+    readSurface(spark, Map.empty[String, String], paths: _*)
+
+  /** [[readSurface]] with reader `options` (the change feed's
+    * `recursiveFileLookup`), applied to the footer-schema scan and to
+    * the inference fallback alike. */
+  def readSurface(spark: SparkSession, options: Map[String, String],
+                  paths: String*): DataFrame = {
+    val reader = spark.read.options(options)
     paths.iterator
       .flatMap(p => firstDataFile(fsOf(spark, p), new Path(p))).nextOption()
       .flatMap(footerSchema(spark, _))
-      .fold(spark.read.parquet(paths: _*))(
-        spark.read.schema(_).parquet(paths: _*))
+      .fold(reader)(s => reader.schema(s))
+      .parquet(paths: _*)
+  }
 
   /** The live generation's directory NAME, None for a root no commit
     * has published yet. Pointer writes are atomic (temp + rename), so a

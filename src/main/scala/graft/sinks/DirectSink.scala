@@ -53,12 +53,14 @@ object DirectSink {
   }
 
   /** Compact a direct-written table back to bulk-load order (reads the
-    * live generation, commits a new one via the pointer CAS). */
+    * live generation with its footer schema, commits a new one via the
+    * pointer CAS). */
   def compact(spark: SparkSession, tablePath: String,
               numPartitions: Int = 32): Unit = {
     import org.apache.spark.sql.functions.col
     BulkSink.bulkLoad(
-      spark.read.parquet(ArtifactStore.resolve(spark, tablePath)),
+      ArtifactStore.readSurface(spark,
+        ArtifactStore.resolve(spark, tablePath)),
       tablePath, numPartitions,
       Seq("entity_id"),
       Seq(col("entity_id"), col("family"), col("qualifier"), col("ts").desc))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.dml.Dml
-import graft.sinks.BulkSink
+import graft.sinks.{ArtifactStore, BulkSink}
 
 /** Family retention + storage policy — the locality-group knobs of the
   * reference layout (`max_versions`, `ttl_seconds`, `in_memory`,
@@ -82,6 +82,15 @@ final case class DataRequest(columns: Seq[(String, String)] = Seq.empty,
   * schedule. The `_changes` name is deliberate: Spark's file listing
   * skips underscore-prefixed dirs, so base-table scans never see the feed.
   *
+  * Building a table frame — [[cells]], [[read]], [[mostRecent]], the
+  * `readAsOf*` reads, [[localityGroupCells]] — launches no Spark job:
+  * every base, bucket-leaf and feed scan takes its schema from the
+  * writer's parquet footer on the driver
+  * ([[graft.sinks.ArtifactStore.readSurface]]), and the feed, marker and
+  * manifest checks are driver-side listings and reads. The only jobs are
+  * the ones the caller's actions plan; a fold or an append pays only its
+  * own writes and aggregates.
+  *
   * == Concurrency contract ==
   *
   * Which operations may run concurrently on ONE table (readers are
@@ -156,18 +165,14 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
   private def hasPendingChangesIn(dir: String): Boolean =
     feedDataFilesIn(dir).nonEmpty
 
-  /** All committed data files of the feed: top-level files (single-file
-    * appends) plus files inside `batch_*` subdirectories (atomic
-    * multi-file appends, committed by one directory rename). */
-  private def feedDataFiles: Seq[org.apache.hadoop.fs.FileStatus] =
-    feedDataFilesIn(dataDir)
-
+  /** All committed data files of the feed under generation `dir`:
+    * top-level files (single-file appends) plus files inside `batch_*`
+    * subdirectories (atomic multi-file appends, committed by one
+    * directory rename). A missing feed is an empty one. */
   private def feedDataFilesIn(dir: String)
       : Seq[org.apache.hadoop.fs.FileStatus] = {
     def visible(n: String) = !n.startsWith("_") && !n.startsWith(".")
-    val p = new org.apache.hadoop.fs.Path(feedPathIn(dir))
-    if (!hadoopFs.exists(p)) Seq.empty
-    else hadoopFs.listStatus(p).toSeq.flatMap { s =>
+    listOrEmpty(new org.apache.hadoop.fs.Path(feedPathIn(dir))).flatMap { s =>
       if (!visible(s.getPath.getName)) Seq.empty
       else if (s.isFile) Seq(s)
       else hadoopFs.listStatus(s.getPath).toSeq
@@ -175,13 +180,23 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     }
   }
 
+  /** One `listStatus`, a missing directory listing as empty (an
+    * `exists` probe first would pay a second metadata call). */
+  private def listOrEmpty(p: org.apache.hadoop.fs.Path)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    try hadoopFs.listStatus(p).toSeq
+    catch { case _: java.io.FileNotFoundException => Seq.empty }
+
   /** The pending change feed (empty-schema error if none — guard with
     * `hasPendingChanges`). Batch subdirectories (atomic multi-file
-    * appends) are picked up by the recursive lookup. */
+    * appends) are picked up by the recursive lookup; the schema comes
+    * from the first batch's footer, so building the frame launches no
+    * job. */
   def pendingChanges: DataFrame = pendingChangesIn(dataDir)
 
-  private def pendingChangesIn(dir: String): DataFrame = spark.read
-    .option("recursiveFileLookup", "true").parquet(feedPathIn(dir))
+  private def pendingChangesIn(dir: String): DataFrame =
+    ArtifactStore.readSurface(spark, Map("recursiveFileLookup" -> "true"),
+      feedPathIn(dir))
 
   /** Base cells only — the bulk-loaded / direct-appended files, change
     * feed NOT folded in. `lg` is the locality-group partition column of
@@ -190,9 +205,9 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * the `_numbuckets` marker in the live root generation) holds no
     * data in the root generation at all: its base is the union of the
     * per-bucket generations named by the root generation's
-    * `_bucket_gens` manifest. */
-  private def baseCells: DataFrame = baseCellsIn(dataDir)
-
+    * `_bucket_gens` manifest. Every scan takes its schema from a
+    * footer ([[ArtifactStore.readSurface]]), so building it launches no
+    * job. */
   private def baseCellsIn(dir: String): DataFrame =
     numBucketsIn(dir) match {
       case Some(n) =>
@@ -207,19 +222,22 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
         // inference over lg dirs would otherwise fail with a
         // conflicting-directory-structures error, and the lg column is
         // layout metadata readers never see anyway
-        val leaves = bucketBasesIn(dir, n).flatMap { b =>
-          val p = new org.apache.hadoop.fs.Path(b)
-          val lgs =
-            if (!hadoopFs.exists(p)) Seq.empty
-            else hadoopFs.listStatus(p).toSeq.filter(s => s.isDirectory &&
-              s.getPath.getName.startsWith("lg=")).map(_.getPath.toString)
-          if (lgs.isEmpty) Seq(b) else lgs
-        }
-        val df = spark.read.parquet(leaves: _*)
-        if (df.columns.contains("lg")) df.drop("lg") else df
-      case None =>
-        val df = spark.read.parquet(dir)
-        if (df.columns.contains("lg")) df.drop("lg") else df
+        dropLg(ArtifactStore.readSurface(spark,
+          leavesOf(bucketBasesIn(dir, n)): _*))
+      case None => dropLg(ArtifactStore.readSurface(spark, dir))
+    }
+
+  private def dropLg(df: DataFrame): DataFrame =
+    if (df.columns.contains("lg")) df.drop("lg") else df
+
+  /** Scan leaves of bucket bases: a grouped base's `lg=<group>` file
+    * sets, an ungrouped base itself. */
+  private def leavesOf(bases: Seq[String]): Seq[String] =
+    bases.flatMap { b =>
+      val lgs = listOrEmpty(new org.apache.hadoop.fs.Path(b)).filter(s =>
+        s.isDirectory && s.getPath.getName.startsWith("lg="))
+        .map(_.getPath.toString)
+      if (lgs.isEmpty) Seq(b) else lgs
     }
 
   // ───────────────────── key-bucketed generations ──────────────────────
@@ -262,19 +280,13 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * manifest-less bucket (unreachable for tables written by
     * [[bulkLoadBucketed]], kept for forward compatibility). */
   private def bucketBasesIn(dir: String, n: Int): Seq[String] = {
-    val manifest: Map[Int, String] = {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/_bucket_gens")
-      if (!hadoopFs.exists(p)) Map.empty
-      else {
-        val in = hadoopFs.open(p)
-        val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-                finally in.close()
-        s.split("\n").filter(_.nonEmpty).map { line =>
+    val manifest: Map[Int, String] = ArtifactStore.readText(spark,
+        new org.apache.hadoop.fs.Path(s"$dir/_bucket_gens"))
+      .fold(Map.empty[Int, String])(_.split("\n").filter(_.nonEmpty).map {
+        line =>
           val Array(b, g) = line.split("\t", 2)
           b.toInt -> g
-        }.toMap
-      }
-    }
+      }.toMap)
     (0 until n).map { b =>
       manifest.get(b).map(g => s"$path/_buckets/$b/$g").getOrElse(
         graft.sinks.ArtifactStore.resolve(spark, s"$path/_buckets/$b"))
@@ -568,24 +580,22 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
   def asOfArrivalWatermark: Long = readMarker("_asof_arrival_watermark")
 
   /** Marker read with torn-write tolerance. Marker writes are atomic
-    * (temp + rename, [[writeMarker]]), so a reader sees a complete value
+    * (temp + rename, [[writeMarkerIn]]), so a reader sees a complete value
     * or no file — but a marker written by an OLDER writer generation (or
     * a filesystem without atomic rename) could still surface
     * empty/partial content, so an unparseable read retries briefly.
     * After retries: `lenient = true` treats the marker as absent (the
-    * caller has a ground-truth fallback — [[nextArrival]] re-derives the
+    * caller has a ground-truth fallback — [[arrivalFloorIn]] re-derives the
     * reservation floor from the feed's own `arrival` stamps); `lenient =
     * false` (the as-of watermarks, where "absent" would silently LOWER a
     * history barrier) fails loudly with the recovery step. */
-  private def readMarker(name: String, lenient: Boolean = false): Long =
-    readMarkerIn(dataDir, name, lenient)
+  private def readMarker(name: String): Long = readMarkerIn(dataDir, name)
 
   private def readMarkerIn(dir: String, name: String,
                            lenient: Boolean = false): Long = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
     var attempt = 0
     while (true) {
-      if (!hadoopFs.exists(p)) return Long.MinValue
       val parsed =
         try {
           val in = hadoopFs.open(p)
@@ -612,8 +622,7 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * metadata op on HDFS; `Files.move(REPLACE_EXISTING)` on local FS) —
     * a reader can never observe a created-but-unwritten marker, and a
     * crash mid-write leaves only a temp file readers skip. */
-  private def writeMarker(name: String, value: Long): Unit = {
-    val dir = dataDir
+  private def writeMarkerIn(dir: String, name: String, value: Long): Unit = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
     val tmp = new org.apache.hadoop.fs.Path(
       s"$dir/_${name.stripPrefix("_")}.tmp_${java.util.UUID.randomUUID().toString.take(8)}")
@@ -639,11 +648,10 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
       s"no locality group '$group' in table ${layout.name}")
     val fams = layout.localityGroups(group).map(_.name)
     val dir = dataDir // one resolution for base + feed (torn-read guard)
-    // bucketed tables are single-group by construction (bulkLoadBucketed
-    // refuses grouped layouts) — their "group" read is the family filter
-    // over the bucket union
+    // a bucketed table's leaves carry no `lg` column (baseCellsIn) —
+    // its "group" read is the family filter over the bucket union
     val raw = if (numBucketsIn(dir).isDefined) baseCellsIn(dir)
-      else spark.read.parquet(dir)
+      else ArtifactStore.readSurface(spark, dir)
     val base =
       if (raw.columns.contains("lg")) raw.filter(col("lg") === group).drop("lg")
       else raw.filter(col("family").isin(fams: _*))
@@ -829,20 +837,26 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
           lit(s"' for table '${layout.name}'")))))
     val guarded = guardLayout(opGuarded, allowNullScope = true)
       .select(need.map(col): _*)
+    // resolve the live generation ONCE for the whole append so the
+    // stamping decision, the reservation, staging and commit all target
+    // the same directory (a physical fold racing this append is
+    // writer-unsafe by contract either way)
+    val dir = dataDir
     // Arrival-ordinal stamp: one monotone batch number per append — the
     // strict batch-history axis of [[cellsAsOfOrdinal]] (logical cell ts
     // can be non-monotone with append order; the stamp cannot). Stamped
     // only while the feed is consistently stamped (every appendChanges
     // feed is; a feed created by an external writer stays unstamped so
     // its files keep ONE schema — ordinal reads then refuse with
-    // guidance).
+    // guidance). The check reads the feed's footer on the driver: no job.
     val stampOrdinal =
-      if (hasPendingChanges && !pendingChanges.columns.contains("arrival"))
+      if (hasPendingChangesIn(dir) &&
+          !pendingChangesIn(dir).columns.contains("arrival"))
         Long.MinValue
       else
         // reserve the ordinal BEFORE writing the batch: a crash between
         // the two leaves a skipped number (harmless), never a duplicate
-        reserveArrival()
+        reserveArrival(dir)
     val stamped =
       if (stampOrdinal == Long.MinValue) guarded
       else guarded.withColumn("arrival", lit(stampOrdinal))
@@ -861,10 +875,6 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     // (FileIndex hides them), so a mid-write failure exposes zero rows.
     val shaped = if (numFiles >= 1) stamped.coalesce(numFiles) else stamped
     val id = java.util.UUID.randomUUID().toString.take(8)
-    // resolve the live generation ONCE for the whole append so staging
-    // and commit target the same directory (a physical fold racing this
-    // append is writer-unsafe by contract either way)
-    val dir = dataDir
     val staging = new org.apache.hadoop.fs.Path(s"$dir/__changes_stage_$id")
     // Cleanup covers the RENAME failing too (e.g. the feed path
     // occupied by a non-directory): the staging dir must not outlive a
@@ -896,14 +906,15 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * continues strictly ABOVE the refused range instead of restarting at
     * 1 underneath it (restarted numbers would be unreachable by any
     * ordinal cut: cuts below the watermark refuse). */
-  private def arrivalFloor: Long = {
-    val reserved = readMarker("_arrival_reserved", lenient = true)
+  private def arrivalFloorIn(dir: String): Long = {
+    val reserved = readMarkerIn(dir, "_arrival_reserved", lenient = true)
     val inUse =
       if (reserved != Long.MinValue) reserved
-      else if (!hasPendingChanges) 0L
-      else Option(pendingChanges.agg(max(col("arrival"))).head().get(0))
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
-    math.max(inUse, math.max(asOfArrivalWatermark, 0L))
+      else if (!hasPendingChangesIn(dir)) 0L
+      else Option(pendingChangesIn(dir).agg(max(col("arrival"))).head()
+        .get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
+    math.max(inUse,
+      math.max(readMarkerIn(dir, "_asof_arrival_watermark"), 0L))
   }
 
   /** Atomically reserve the next arrival ordinal — the concurrency-safe
@@ -926,15 +937,14 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * ordinal. Stale claims below the marker are garbage-collected by
     * [[compactFeed]] (writer-exclusive by contract, so no reservation is
     * probing while it sweeps). */
-  private def reserveArrival(): Long =
+  private def reserveArrival(dir: String): Long =
     EntityTable.tableLock(path).synchronized {
-      // claims live in the live generation (the table root for a legacy
-      // flat table) — a physical fold flips to a fresh generation with no
-      // claims, and its arrival WATERMARK keeps post-fold numbering
-      // monotone, exactly as the pre-generational dir swap did
-      val dir = dataDir
+      // claims live in the live generation `dir` (the table root for a
+      // legacy flat table) — a physical fold flips to a fresh generation
+      // with no claims, and its arrival WATERMARK keeps post-fold
+      // numbering monotone, exactly as the pre-generational dir swap did
       hadoopFs.mkdirs(new org.apache.hadoop.fs.Path(dir))
-      var candidate = arrivalFloor + 1L
+      var candidate = arrivalFloorIn(dir) + 1L
       var attempts = 0
       while (!tryClaimArrival(dir, candidate)) {
         attempts += 1
@@ -944,7 +954,7 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
             s"claims; run compactFeed to sweep, or delete stale _arrival_claim_* files")
         candidate += 1L
       }
-      writeMarker("_arrival_reserved", candidate)
+      writeMarkerIn(dir, "_arrival_reserved", candidate)
       candidate
     }
 
@@ -996,7 +1006,6 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * claims at or below the `_arrival_reserved` marker can never be
     * probed again once no reservation is in flight. */
   def compactFeed(maxFiles: Int = 0): Unit = {
-    sweepArrivalClaims()
     // One generation resolution AND one feed listing for the whole fold:
     // the fold trigger needs only the FILE COUNT — the previous
     // changeFeedStats call also ran a full feed-rows count() job whose
@@ -1004,6 +1013,7 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     // measured round 19; the CLI describe verb still reports rows via
     // changeFeedStats, where they are actually printed).
     val dir = dataDir
+    sweepArrivalClaimsIn(dir)
     val files = feedDataFilesIn(dir)
     if (files.length <= math.max(maxFiles, 1)) return // 0/1 file: no fold
     val staging = new org.apache.hadoop.fs.Path(
@@ -1029,12 +1039,10 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * flight, is at or above every claimed ordinal), so deleting it can
     * never let an ordinal be claimed twice. Claims ABOVE the marker —
     * possible after a cross-process marker regression — are kept. */
-  private def sweepArrivalClaims(): Unit = {
-    val reserved = readMarker("_arrival_reserved", lenient = true)
+  private def sweepArrivalClaimsIn(dir: String): Unit = {
+    val reserved = readMarkerIn(dir, "_arrival_reserved", lenient = true)
     if (reserved == Long.MinValue) return
-    val root = new org.apache.hadoop.fs.Path(dataDir)
-    if (!hadoopFs.exists(root)) return
-    hadoopFs.listStatus(root).foreach { s =>
+    listOrEmpty(new org.apache.hadoop.fs.Path(dir)).foreach { s =>
       val n = s.getPath.getName
       if (n.startsWith("_arrival_claim_") &&
           scala.util.Try(n.stripPrefix("_arrival_claim_").toLong)
@@ -1097,8 +1105,8 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
       feedAgg.crossJoin(c.agg(max(col("ts")).as("c_ts"))))
     val decode: org.apache.spark.sql.Row => Map[String, String] = r => {
       def at(i: Int): Long = if (r.isNullAt(i)) Long.MinValue else r.getLong(i)
-      val w = Seq(asOfWatermark, at(0), at(2)).max
-      val wa = math.max(asOfArrivalWatermark, at(1))
+      val w = Seq(readMarkerIn(dir, "_asof_watermark"), at(0), at(2)).max
+      val wa = math.max(readMarkerIn(dir, "_asof_arrival_watermark"), at(1))
       (if (w > Long.MinValue) Map("_asof_watermark" -> w.toString)
        else Map.empty[String, String]) ++
         (if (wa > Long.MinValue) Map("_asof_arrival_watermark" -> wa.toString)
@@ -1149,19 +1157,9 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
         // from entity_id. Leaf expansion mirrors baseCellsIn (a grouped
         // bucketed table's lg= file sets would otherwise break partition
         // inference across roots).
-        val touchedLeaves = bucketBasesIn(dir, n).zipWithIndex
-          .collect { case (p, b) if touched.contains(b) => p }
-          .flatMap { b =>
-            val p = new org.apache.hadoop.fs.Path(b)
-            val lgs =
-              if (!hadoopFs.exists(p)) Seq.empty
-              else hadoopFs.listStatus(p).toSeq.filter(s => s.isDirectory &&
-                s.getPath.getName.startsWith("lg=")).map(_.getPath.toString)
-            if (lgs.isEmpty) Seq(b) else lgs
-          }
-        val rawBase = spark.read.parquet(touchedLeaves: _*)
-        val base =
-          if (rawBase.columns.contains("lg")) rawBase.drop("lg") else rawBase
+        val base = dropLg(ArtifactStore.readSurface(spark, leavesOf(
+          bucketBasesIn(dir, n).zipWithIndex
+            .collect { case (p, b) if touched.contains(b) => p }): _*))
         val merged =
           if (hasPendingChangesIn(dir))
             Dml.applyChanges(base, pendingChangesIn(dir))

@@ -9,11 +9,12 @@ import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.{Bpe, Clustering, Dedup, Retrieval, UnigramLm, WordPiece}
 import graft.sinks.ArtifactStore
+import graft.table.{DataRequest, TableFixtures}
 
-/** Spark-job ceilings for the index lifecycle: every job is a fixed
-  * scheduling cost (tens of ms at any data size), so a change that adds
-  * jobs to a load or a lifecycle op fails here before it shows on the
-  * benchmark. Suites run one at a time in the forked test JVM, so the
+/** Spark-job ceilings for the index lifecycle and the entity-table
+  * reads, appends and folds: every job is a fixed scheduling cost (tens
+  * of ms at any data size), so a change that adds jobs to a load, a read
+  * frame or a lifecycle op fails here before it shows on the benchmark. Suites run one at a time in the forked test JVM, so the
   * counter sees only the measured block's jobs. */
 class JobBudgetSpec extends SparkSpec with BeforeAndAfterAll {
 
@@ -113,6 +114,43 @@ class JobBudgetSpec extends SparkSpec with BeforeAndAfterAll {
         Seq(1L, 2L, 101L).toDF("doc_id"), path, flags)))
     counts.zip(ceilings).foreach { case ((op, got), (_, ceiling)) =>
       assert(got <= ceiling, s"$op launched $got jobs, ceiling $ceiling")
+    }
+  }
+
+  test("entity tables: building any read frame launches no job on every layout; appendChanges and compactFeed launch one; folds stay within their ceilings") {
+    // fold ceilings (applyChanges, majorCompact) = the counts this
+    // fixture measures with footer-schema table scans. Before, with a
+    // schema-inference job per base, feed and touched-bucket scan: every
+    // read frame 2 jobs, appendChanges and compactFeed 2, applyChanges
+    // 12/17/15/20 and majorCompact 10/15/10/15 (flat, grouped, bucketed,
+    // grouped-bucketed).
+    val ceilings = Map("flat" -> (9, 7), "grouped" -> (14, 12),
+      "bucketed" -> (11, 7), "grouped-bucketed" -> (16, 12))
+    for (fx <- TableFixtures.all(spark, tmpDir("jobtable"))) {
+      val t = fx.table
+      val reads = Seq[(String, () => Any)](
+        "cells" -> (() => t.cells),
+        "read" -> (() => t.read(DataRequest(maxVersions = 2))),
+        "mostRecent" -> (() => t.mostRecent()),
+        "readAsOf" -> (() => t.readAsOf(26L)),
+        "readAsOfOrdinal" -> (() => t.readAsOfOrdinal(1L))) ++
+        fx.layout.localityGroups.keys.toSeq.sorted.map(g =>
+          s"localityGroupCells($g)" -> (() => t.localityGroupCells(g)))
+      reads.foreach { case (n, frame) =>
+        val got = jobsOf(frame())
+        assert(got == 0, s"${fx.name} $n: building the frame launched $got jobs")
+      }
+      val append = jobsOf(t.appendChanges(TableFixtures.batch1(spark)))
+      assert(append == 1, s"${fx.name} appendChanges launched $append jobs")
+      val compact = jobsOf(t.compactFeed())
+      assert(compact == 1, s"${fx.name} compactFeed (3 batches) launched $compact jobs")
+      val apply = jobsOf(t.applyChanges(TableFixtures.batch2(spark),
+        numPartitions = 2))
+      t.appendChanges(TableFixtures.batch1(spark))
+      val major = jobsOf(t.majorCompact(numPartitions = 2))
+      val (applyMax, majorMax) = ceilings(fx.name)
+      assert(apply <= applyMax, s"${fx.name} applyChanges launched $apply jobs, ceiling $applyMax")
+      assert(major <= majorMax, s"${fx.name} majorCompact launched $major jobs, ceiling $majorMax")
     }
   }
 }

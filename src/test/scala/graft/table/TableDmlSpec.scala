@@ -1000,4 +1000,151 @@ class TableDmlSpec extends SparkSpec {
       .map(_.getPath.getName).filter(_.startsWith("lg=")).toSet
     assert(lgs0.nonEmpty, "majorCompact dropped the group file sets")
   }
+
+  // ───── footer-schema reads vs schema-inferred reads of the same paths ─────
+
+  private def dropLg(df: org.apache.spark.sql.DataFrame) =
+    if (df.columns.contains("lg")) df.drop("lg") else df
+
+  /** A table's base re-read with a schema-INFERRING scan of the same
+    * paths: the live generation (bucketed: the manifest's bucket
+    * generations, expanded to their `lg=` leaves). Keeps a flat grouped
+    * table's `lg` column. */
+  private def inferredBase(path: String): org.apache.spark.sql.DataFrame = {
+    val dir = live(path)
+    if (!Files.exists(Paths.get(dir, "_numbuckets"))) spark.read.parquet(dir)
+    else {
+      val leaves = Files.readAllLines(Paths.get(dir, "_bucket_gens")).asScala
+        .filter(_.nonEmpty).toSeq.flatMap { line =>
+          val Array(b, g) = line.split("\t", 2)
+          val bd = Paths.get(path, "_buckets", b, g)
+          val lgs = Files.list(bd).iterator().asScala.filter(p =>
+            Files.isDirectory(p) && p.getFileName.toString.startsWith("lg="))
+            .map(_.toString).toSeq.sorted
+          if (lgs.isEmpty) Seq(bd.toString) else lgs
+        }
+      spark.read.parquet(leaves: _*)
+    }
+  }
+
+  /** The recursive `_changes` feed, schema inferred. */
+  private def inferredFeed(path: String): org.apache.spark.sql.DataFrame =
+    spark.read.option("recursiveFileLookup", "true")
+      .parquet(s"${live(path)}/_changes")
+
+  /** `mostRecent()` and `read()` (default request, no TTL) over a cell
+    * set — the engine's aggregation formulas, so a reference built from
+    * inferred scans must match the engine's frame in schema and rows. */
+  private def retainedRef(layout: TableLayout,
+                          src: org.apache.spark.sql.DataFrame) =
+    src.filter(col("ts") >= layout.families.foldLeft(lit(Long.MinValue)) {
+      (acc, f) => when(col("family") === f.name, lit(Long.MinValue))
+        .otherwise(acc)
+    })
+  private def mostRecentRef(layout: TableLayout,
+                            src: org.apache.spark.sql.DataFrame) =
+    retainedRef(layout, src)
+      .groupBy(col("entity_id"), col("family"), col("qualifier"))
+      .agg(max(struct(col("ts"), col("value"))).as("m"))
+      .select(col("entity_id"), col("family"), col("qualifier"),
+        col("m.ts").as("ts"), col("m.value").as("value"))
+  private def versionedRef(layout: TableLayout,
+                           src: org.apache.spark.sql.DataFrame) = {
+    val famMax = layout.families.foldLeft(lit(Int.MaxValue)) { (acc, f) =>
+      when(col("family") === f.name, lit(f.maxVersions)).otherwise(acc)
+    }
+    retainedRef(layout, src)
+      .groupBy(col("entity_id"), col("family"), col("qualifier"))
+      .agg(reverse(sort_array(collect_list(struct(col("ts"), col("value")))))
+        .as("all_versions"), first(famMax).as("fam_max"))
+      .select(col("entity_id"), col("family"), col("qualifier"),
+        slice(col("all_versions"), lit(1),
+          least(lit(1), col("fam_max"))).as("versions"))
+  }
+
+  private def sameFrame(what: String, got: org.apache.spark.sql.DataFrame,
+                        want: org.apache.spark.sql.DataFrame): Unit = {
+    assert(got.schema == want.schema,
+      s"$what schema: ${got.schema.simpleString} != ${want.schema.simpleString}")
+    assert(got.collect().map(_.toString).sorted.toSeq ==
+      want.collect().map(_.toString).sorted.toSeq, s"$what rows differ")
+  }
+
+  test("footer-schema table reads == schema-inferred reads of the same paths on every layout (flat, grouped, bucketed, grouped-bucketed)") {
+    for (fx <- TableFixtures.all(spark, tmpDir("footerparity"))) {
+      val t = fx.table
+      val (rawBase, feed) = (inferredBase(fx.path), inferredFeed(fx.path))
+      val base = dropLg(rawBase)
+      assert(feed.columns.contains("arrival"), s"${fx.name}: feed unstamped")
+      val live = Dml.applyChanges(base, feed)
+      val cut1 = Dml.applyChanges(base, feed.filter(col("arrival") <= 1L))
+      sameFrame(s"${fx.name} cells", t.cells, live)
+      sameFrame(s"${fx.name} pendingChanges", t.pendingChanges, feed)
+      sameFrame(s"${fx.name} readAsOfOrdinal(1)", t.readAsOfOrdinal(1L),
+        versionedRef(fx.layout, cut1))
+      sameFrame(s"${fx.name} mostRecent", t.mostRecent(),
+        mostRecentRef(fx.layout, live))
+      fx.layout.localityGroups.foreach { case (g, fs) =>
+        val fams = fs.map(_.name)
+        val groupBase =
+          if (rawBase.columns.contains("lg"))
+            rawBase.filter(col("lg") === g).drop("lg")
+          else base.filter(col("family").isin(fams: _*))
+        sameFrame(s"${fx.name} localityGroupCells($g)",
+          t.localityGroupCells(g), Dml.applyChanges(groupBase, feed.filter(
+            col("family").isNull || col("family").isin(fams: _*))))
+      }
+      // a reader planned before a physical fold still reads the folded
+      // generation's files after the swap
+      val inFlight = Seq(t.cells, t.mostRecent())
+      val want = Seq(live, mostRecentRef(fx.layout, live))
+        .map(_.collect().map(_.toString).sorted.toSeq)
+      t.majorCompact(numPartitions = 2)
+      assert(!t.hasPendingChanges)
+      inFlight.zip(want).foreach { case (df, w) =>
+        assert(df.collect().map(_.toString).sorted.toSeq == w,
+          s"${fx.name}: a reader planned before the fold lost rows")
+      }
+    }
+  }
+
+  test("footer-schema table reads keep their edge cases: unstamped external feed, empty feed dir, empty and append-only roots") {
+    val root = tmpDir("footeredge")
+    val layout = TableFixtures.flatLayout
+    // a feed an external writer left unstamped: ordinal cuts refuse with
+    // the same message, and a later append keeps the feed unstamped
+    val ext = new EntityTable(spark, s"$root/ext", layout)
+    ext.bulkLoad(TableFixtures.baseCells(spark), numPartitions = 2)
+    TableFixtures.batch1(spark).write
+      .parquet(s"${live(s"$root/ext")}/_changes/batch_external")
+    def refusal() = intercept[IllegalArgumentException](
+      ext.readAsOfOrdinal(1L)).getMessage
+    assert(refusal().contains("this change feed has no arrival stamps"))
+    ext.appendChanges(TableFixtures.batch2(spark))
+    assert(!ext.pendingChanges.columns.contains("arrival"))
+    assert(refusal().contains("this change feed has no arrival stamps"))
+    sameFrame("unstamped cells", ext.cells, Dml.applyChanges(
+      inferredBase(s"$root/ext"), inferredFeed(s"$root/ext")))
+    // an empty `_changes` directory (a failed append's leftover) reads
+    // as "no pending changes", and the next append stamps ordinal 1
+    val empty = new EntityTable(spark, s"$root/emptyfeed", layout)
+    empty.bulkLoad(TableFixtures.baseCells(spark), numPartitions = 2)
+    Files.createDirectories(Paths.get(live(s"$root/emptyfeed"), "_changes"))
+    assert(!empty.hasPendingChanges)
+    sameFrame("empty-feed cells", empty.cells,
+      inferredBase(s"$root/emptyfeed"))
+    empty.appendChanges(TableFixtures.batch1(spark))
+    assert(empty.pendingChanges.select(max("arrival")).head().getLong(0) == 1L)
+    // an empty root, a missing root and an append-only root (a feed but
+    // no base) still fail loudly on read
+    Files.createDirectories(Paths.get(root, "bare"))
+    val appendOnly = new EntityTable(spark, s"$root/appendonly", layout)
+    appendOnly.appendChanges(TableFixtures.batch1(spark))
+    Seq("bare", "missing", "appendonly").foreach { n =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        new EntityTable(spark, s"$root/$n", layout).cells)
+      assert(e.getMessage.contains("UNABLE_TO_INFER_SCHEMA") ||
+        e.getMessage.contains("PATH_NOT_FOUND"), s"$n: ${e.getMessage}")
+    }
+  }
 }
