@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.sinks.SegmentedIndex
+
 /** Dev microbenchmark for the UPDATE-side rewrite unit of the doc-tier
   * dedup artifacts — the round-18 sharding's operational claim: with a
   * FIXED delta batch, the unsharded `index-update` re-persists the
@@ -79,36 +81,37 @@ object DedupUpdateScaleBench {
     val lshSh = s"/tmp/updscale_lshsh_$tag"
     val lshIndex = Dedup.bandedSignaturesTiled(shingles(docs), numHashes, bands)
     Dedup.saveLshIndex(lshIndex, lshFlat)
-    Dedup.saveLshSharded(lshIndex, lshSh, numShards)
+    SegmentedIndex.save(spark, Dedup.LshSharded, lshIndex, lshSh, numShards)
     val lshUnsharded = timed(() =>
       Dedup.saveLshIndex(Dedup.updateLshIndex(
         Dedup.loadLshIndex(spark, lshFlat), shingles(delta),
         numHashes, bands), s"${lshFlat}_upd"))
     var lshTouched = 0
     val lshSharded = timed(() =>
-      lshTouched = Dedup.updateLshSharded(spark, lshSh, shingles(delta),
-        numHashes, bands, append = false).size)
+      lshTouched = SegmentedIndex.update(spark, lshSh,
+        Dedup.LshSharded.delta(shingles(delta), numHashes, bands),
+        append = false).size)
     val lshAppend = timed(() =>
-      Dedup.updateLshSharded(spark, lshSh, shingles(delta2),
-        numHashes, bands, append = true))
+      SegmentedIndex.update(spark, lshSh,
+        Dedup.LshSharded.delta(shingles(delta2), numHashes, bands)))
 
     // ── CDC tier ──
     val cdcFlat = s"/tmp/updscale_cdcflat_$tag"
     val cdcSh = s"/tmp/updscale_cdcsh_$tag"
     val cdcArt = Dedup.buildCdcArtifact(docs, "doc_id", "text", avgMask)
     Dedup.saveCdcArtifact(cdcArt, cdcFlat)
-    Dedup.saveCdcSharded(cdcArt, cdcSh, numShards)
+    SegmentedIndex.save(spark, Dedup.CdcSharded, cdcArt, cdcSh, numShards)
     val cdcUnsharded = timed(() =>
       Dedup.saveCdcArtifact(Dedup.updateCdcArtifact(
         Dedup.loadCdcArtifact(spark, cdcFlat), delta, "doc_id", "text",
         avgMask), s"${cdcFlat}_upd"))
     var cdcTouched = 0
     val cdcSharded = timed(() =>
-      cdcTouched = Dedup.updateCdcSharded(spark, cdcSh, delta, "doc_id",
-        "text", avgMask, append = false).size)
+      cdcTouched = SegmentedIndex.update(spark, cdcSh,
+        Dedup.CdcSharded.delta(delta, avgMask), append = false).size)
     val cdcAppend = timed(() =>
-      Dedup.updateCdcSharded(spark, cdcSh, delta2, "doc_id", "text",
-        avgMask, append = true))
+      SegmentedIndex.update(spark, cdcSh,
+        Dedup.CdcSharded.delta(delta2, avgMask)))
 
     graft.operators.OperatorCaches.releaseAll()
     println(f"""{"metric":"dedup_update_scale","corpus":"$corpusDir","rows":$n,"delta_rows":200,"shards":$numShards,"lsh_unsharded_sec":$lshUnsharded%.2f,"lsh_sharded_sec":$lshSharded%.2f,"lsh_append_sec":$lshAppend%.2f,"lsh_touched":$lshTouched,"cdc_unsharded_sec":$cdcUnsharded%.2f,"cdc_sharded_sec":$cdcSharded%.2f,"cdc_append_sec":$cdcAppend%.2f,"cdc_touched":$cdcTouched}""")

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.operators.{Bpe, Clustering, Dedup, Retrieval, Similarity, UnigramLm, WordPiece}
-import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
+import graft.sinks.{ArtifactStore, SegmentedIndex, ShardedCommit}
 
 /** The build-once/serve-many index tier behind the CLI facade: one
   * `index-build` / `index-serve` verb pair over every persistable
@@ -91,6 +91,55 @@ object IndexTool {
       "semdedup-sharded", "wordpiece", "decontam", "cdc", "cdc-sharded",
       "imi", "hybrid")
 
+  private def intFlag(flags: Map[String, String], k: String, dflt: Int): Int =
+    flags.get(k).map(_.toInt).getOrElse(dflt)
+
+  /** A segmented type behind the CLI: its [[SegmentedIndex]] descriptor,
+    * whether it indexes documents (`doc_id`) or vectors (`vec_id`), and
+    * its delta and removal folds over a verb's input and flags (the
+    * removal input is the id column `tier.ids` names). */
+  private final case class SegmentedType(tier: SegmentedIndex.Tier[_],
+      docs: Boolean,
+      delta: (DataFrame, Map[String, String]) => SegmentedIndex.Fold,
+      removal: (DataFrame, Map[String, String]) => SegmentedIndex.Fold)
+
+  /** The segmented tiers: `index-compact` and their branches of
+    * `index-update`, `index-remove`, `index-describe` and the
+    * re-ingestion guard are lookups here. */
+  private val Segmented: Map[String, SegmentedType] = Map(
+    "bm25-sharded" -> SegmentedType(Retrieval.Bm25Sharded, docs = true,
+      (in, f) => Retrieval.Bm25Sharded.delta(terms(docsOf(in, f))),
+      (ids, _) => Retrieval.Bm25Sharded.removal(ids)),
+    "lsh-sharded" -> SegmentedType(Dedup.LshSharded, docs = true,
+      (in, f) => Dedup.LshSharded.delta(
+        shingled(docsOf(in, f), intFlag(f, "shingle-n", 3)),
+        intFlag(f, "num-hashes", 28), intFlag(f, "bands", 4)),
+      (ids, f) => Dedup.LshSharded.removal(ids,
+        intFlag(f, "num-hashes", 28), intFlag(f, "bands", 4))),
+    "cdc-sharded" -> SegmentedType(Dedup.CdcSharded, docs = true,
+      (in, f) => Dedup.CdcSharded.delta(docsOf(in, f),
+        intFlag(f, "avg-mask", 32)),
+      (ids, _) => Dedup.CdcSharded.removal(ids)),
+    "semdedup-sharded" -> SegmentedType(Clustering.SemSharded, docs = false,
+      (in, f) => Clustering.SemSharded.delta(embOf(in, f)),
+      (ids, _) => Clustering.SemSharded.removal(ids)))
+
+  /** A tier's artifact at `path` from either layout: the segmented type
+    * through [[SegmentedIndex.load]], the flat one through `flat`. */
+  private def loadTier[A](spark: SparkSession, tpe: String, path: String,
+                          tier: SegmentedIndex.Tier[A])(flat: => A): A =
+    if (Segmented.contains(tpe)) SegmentedIndex.load(spark, tier, path)
+    else flat
+
+  /** Save `a` in the layout `tpe` names: segmented with `--shards`
+    * (default 4) roots, or flat through `flat`. */
+  private def saveTier[A](spark: SparkSession, tpe: String,
+                          tier: SegmentedIndex.Tier[A], a: A, path: String,
+                          flags: Map[String, String])(flat: => Unit): Unit =
+    if (Segmented.contains(tpe))
+      SegmentedIndex.save(spark, tier, a, path, intFlag(flags, "shards", 4))
+    else flat
+
   private def docsOf(df: DataFrame, flags: Map[String, String]): DataFrame = {
     val id = flags.getOrElse("id-col", "doc_id")
     val text = flags.getOrElse("text-col", "text")
@@ -164,18 +213,12 @@ object IndexTool {
           "of a bm25 artifact at --path with an ivfflat artifact at " +
           "--dense-path) — build/update/remove the two artifacts " +
           "separately with their own types")
-      case "lsh" =>
-        Dedup.saveLshIndex(Dedup.bandedSignaturesTiled(
+      case "lsh" | "lsh-sharded" =>
+        val idx = Dedup.bandedSignaturesTiled(
           shingled(docsOf(input, flags), num("shingle-n", 3)),
-          num("num-hashes", 28), num("bands", 4)), path)
-      case "lsh-sharded" =>
-        // the 100 TB rewrite-unit layout on the near-dup tier: the
-        // signature surface splits by (band, bkey) hash into --shards
-        // independent generational roots — an update rewrites only the
-        // shards its delta's buckets route to (Dedup.updateLshSharded)
-        Dedup.saveLshSharded(Dedup.bandedSignaturesTiled(
-          shingled(docsOf(input, flags), num("shingle-n", 3)),
-          num("num-hashes", 28), num("bands", 4)), path, num("shards", 4))
+          num("num-hashes", 28), num("bands", 4))
+        saveTier(spark, tpe, Dedup.LshSharded, idx, path, flags)(
+          Dedup.saveLshIndex(idx, path))
       case "ivf" =>
         Clustering.saveIvfCodebook(Clustering.ivfCoarseLanes(
           embOf(input, flags), "vec_id", "embedding",
@@ -271,16 +314,10 @@ object IndexTool {
           Bpe.wordFreq(Bpe.docWords(docsOf(input, flags), "doc_id", "text")),
           num("merges", 6))
         Bpe.saveMerges(merges, spark, path)
-      case "bm25" =>
-        Retrieval.saveBm25Index(
-          Retrieval.buildBm25Index(terms(docsOf(input, flags))), path)
-      case "bm25-sharded" =>
-        // the 100 TB rewrite-unit layout for the lexical tier: postings
-        // + docfreq shard by term hash, doclen by doc id, stats is an
-        // O(1) rollup root — a crawl delta rewrites only touched shards
-        Retrieval.saveBm25Sharded(
-          Retrieval.buildBm25Index(terms(docsOf(input, flags))), path,
-          num("shards", 4))
+      case "bm25" | "bm25-sharded" =>
+        val idx = Retrieval.buildBm25Index(terms(docsOf(input, flags)))
+        saveTier(spark, tpe, Retrieval.Bm25Sharded, idx, path, flags)(
+          Retrieval.saveBm25Index(idx, path))
       case "unigram" =>
         // --target-vocab engages the EM+prune size-targeted trainer (the
         // SentencePiece vocabulary-size knob); absent = the fixed-seed
@@ -291,23 +328,15 @@ object IndexTool {
           .map(t => UnigramLm.trainLocal(wfd, t.toInt))
           .getOrElse(UnigramLm.trainLocal(wfd))
         UnigramLm.saveVocab(vocab, spark, path)
-      case "semdedup" =>
-        Clustering.saveSemIndex(Clustering.semDedupHierFit(
+      case "semdedup" | "semdedup-sharded" =>
+        val idx = Clustering.semDedupHierFit(
           embOf(input, flags), "vec_id", "embedding",
           num("coarse-k", 16), num("target-rows", 32).toLong,
           num("iters", 2), flags.getOrElse("salt", "semdedup-h"),
           num("cluster-cap", 256).toLong,
-          num("max-fine-per-cell", 256)), path)
-      case "semdedup-sharded" =>
-        // the corpus-sized assign surface shards by vid mod S; the
-        // bounded fitted parameters (lanes/seeds/sizes) stay at the
-        // root and never move on an add/remove
-        Clustering.saveSemIndexSharded(Clustering.semDedupHierFit(
-          embOf(input, flags), "vec_id", "embedding",
-          num("coarse-k", 16), num("target-rows", 32).toLong,
-          num("iters", 2), flags.getOrElse("salt", "semdedup-h"),
-          num("cluster-cap", 256).toLong,
-          num("max-fine-per-cell", 256)), path, num("shards", 4))
+          num("max-fine-per-cell", 256))
+        saveTier(spark, tpe, Clustering.SemSharded, idx, path, flags)(
+          Clustering.saveSemIndex(idx, path))
       case "wordpiece" =>
         val (_, finalToks) = WordPiece.trainAuto(
           Bpe.wordFreq(Bpe.docWords(docsOf(input, flags), "doc_id", "text")),
@@ -319,17 +348,14 @@ object IndexTool {
         ArtifactStore.publish(spark, path) { dir =>
           embOf(input, flags).coalesce(1).write.mode("overwrite").parquet(dir)
         }
-      case "cdc" =>
+      case "cdc" | "cdc-sharded" =>
         // two-surface artifact: serve reads the rollup; the doc-grain
         // chunks surface makes the index removable and the re-ingestion
         // guard exact (Dedup.CdcArtifact)
-        Dedup.saveCdcArtifact(Dedup.buildCdcArtifact(docsOf(input, flags),
-          "doc_id", "text", num("avg-mask", 32)), path)
-      case "cdc-sharded" =>
-        // both surfaces shard by chunk hash and swap together per shard
-        // generation — a crawl delta rewrites only its routed shards
-        Dedup.saveCdcSharded(Dedup.buildCdcArtifact(docsOf(input, flags),
-          "doc_id", "text", num("avg-mask", 32)), path, num("shards", 4))
+        val idx = Dedup.buildCdcArtifact(docsOf(input, flags),
+          "doc_id", "text", num("avg-mask", 32))
+        saveTier(spark, tpe, Dedup.CdcSharded, idx, path, flags)(
+          Dedup.saveCdcArtifact(idx, path))
       case other => throw new IllegalArgumentException(
         s"unknown index type '$other' (expected ${Types.toSeq.sorted.mkString("|")})")
     }
@@ -433,34 +459,15 @@ object IndexTool {
       println(s"removed from shards: ${touched.mkString(", ")}")
       return
     }
-    if (tpe == "bm25-sharded") {
-      // removal inherently touches every TERM shard (a doc's terms hash
-      // across the grid) but only the routed DOC shards; all commit in
-      // one atomic pointer transaction
-      val touched = Retrieval.removeFromBm25Sharded(spark, path, docIds)
-      println(s"removed from doc shards: ${touched.mkString(", ")}")
-      return
-    }
-    if (tpe == "lsh-sharded") {
-      // a doc's signature rows hash across the whole bucket grid —
-      // every shard rewrites (bounded, one atomic transaction)
-      val touched = Dedup.removeFromLshSharded(spark, path,
-        docIds.select(col("doc_id").as("id")),
-        num("num-hashes", 28), num("bands", 4))
-      println(s"removed from shards: ${touched.mkString(", ")}")
-      return
-    }
-    if (tpe == "cdc-sharded") {
-      val touched = Dedup.removeFromCdcSharded(spark, path, docIds)
-      println(s"removed from shards: ${touched.mkString(", ")}")
-      return
-    }
-    if (tpe == "semdedup-sharded") {
-      // vid IS the shard key: only the removed ids' own shards rewrite
-      val touched = Clustering.removeFromSemIndexSharded(spark, path,
-        vecIds.select(col("n_id").as("vid")))
-      println(s"removed from shards: ${touched.mkString(", ")}")
-      return
+    Segmented.get(tpe) match {
+      case Some(seg) =>
+        val touched = SegmentedIndex.remove(spark, path, seg.removal(
+          input.select(col(flags.getOrElse("id-col",
+            if (seg.docs) "doc_id" else "vec_id")).cast(LongType)
+            .as(seg.tier.ids._2)), flags))
+        println(s"removed from shards: ${touched.mkString(", ")}")
+        return
+      case None =>
     }
     // Pin the generation this remove folds onto: loads plan against
     // `base`, and the commit CAS refuses if the pointer moved meanwhile
@@ -513,8 +520,7 @@ object IndexTool {
     * segment; reads stay one multi-path scan but the path list and the
     * partial-merge work grow until a compaction). Serves before and
     * after are hash-identical — compaction is purely physical. */
-  val CompactTypes: Set[String] =
-    Set("bm25-sharded", "lsh-sharded", "cdc-sharded", "semdedup-sharded")
+  val CompactTypes: Set[String] = Segmented.keySet
 
   def compact(spark: SparkSession, tpe: String, path: String,
               flags: Map[String, String]): Map[String, Long] = {
@@ -522,31 +528,10 @@ object IndexTool {
       s"index-compact supports --type=${CompactTypes.toSeq.sorted.mkString("|")} " +
         s"only (got '$tpe'); the vector sharded tiers rewrite whole " +
         s"shards on update, so they never accumulate segments")
-    val roots = segmentedRootsOf(spark, tpe, path)
-    val before = SegmentStore.liveSegmentCount(spark, roots)
-    tpe match {
-      case "bm25-sharded" => Retrieval.compactBm25Sharded(spark, path)
-      case "lsh-sharded" => Dedup.compactLshSharded(spark, path)
-      case "cdc-sharded" => Dedup.compactCdcSharded(spark, path)
-      case "semdedup-sharded" =>
-        Clustering.compactSemIndexSharded(spark, path)
-    }
-    val after = SegmentStore.liveSegmentCount(spark, roots)
+    val (before, after) =
+      SegmentedIndex.compact(spark, Segmented(tpe).tier, path)
     println(s"compacted: $before -> $after live segments")
     Map("segments_before" -> before, "segments_after" -> after)
-  }
-
-  /** Every per-shard generational root of the live generation of a
-    * SEGMENTED artifact (the dirs whose manifests name live `_seg_*`
-    * data). */
-  private def segmentedRootsOf(spark: SparkSession, tpe: String,
-                               path: String): Seq[String] = {
-    val base = ArtifactStore.resolve(spark, path)
-    val n = ShardedCommit.numShards(spark, base)
-    val t = (0 until n).map(sh => s"$base/shards/$sh")
-    if (tpe == "bm25-sharded")
-      t ++ (0 until n).map(sh => s"$base/docshards/$sh")
-    else t
   }
 
   /** The index types with a RETRAIN-in-place repair (`index-rebuild`).
@@ -723,16 +708,12 @@ object IndexTool {
     * collected). */
   private def existingIds(spark: SparkSession, tpe: String, base: String)
       : DataFrame = tpe match {
+    case t if Segmented.contains(t) =>
+      SegmentedIndex.ids(spark, Segmented(t).tier, base)
     case "lsh" => Dedup.loadLshIndex(spark, base).select(col("id"))
-    case "lsh-sharded" => Dedup.loadLshSharded(spark, base)
-      .select(col("id"))
     case "cdc" => Dedup.loadCdcArtifact(spark, base).chunks
       .select(col("doc_id").as("id"))
-    case "cdc-sharded" => Dedup.loadCdcSharded(spark, base).chunks
-      .select(col("doc_id").as("id"))
     case "bm25" => Retrieval.loadBm25Index(spark, base).doclen
-      .select(col("doc_id").as("id"))
-    case "bm25-sharded" => Retrieval.loadBm25Sharded(spark, base).doclen
       .select(col("doc_id").as("id"))
     case "ivfflat" => Clustering.loadIvfFlatIndex(spark, base).postings
       .select(col("n_id").as("id"))
@@ -740,8 +721,6 @@ object IndexTool {
       .postings.select(col("n_id").as("id"))
     case "semdedup" => Clustering.loadSemIndex(spark, base).assign
       .select(col("vid").as("id"))
-    case "semdedup-sharded" => Clustering.loadSemIndexSharded(spark, base)
-      .assign.select(col("vid").as("id"))
     case "pq" => Clustering.loadPqIndex(spark, base).codes
       .select(col("n_id").as("id"))
     case "ivfpq" => Clustering.loadIvfPqIndex(spark, base).codes
@@ -792,9 +771,8 @@ object IndexTool {
     // `base`; the commit CAS refuses if the pointer moved meanwhile.
     val (_, loaded, base) = ArtifactStore.pinGen(spark, path)
     val expected = Some(loaded)
-    val docTier =
-      Set("lsh", "lsh-sharded", "cdc", "cdc-sharded", "bm25",
-        "bm25-sharded")(tpe)
+    val docTier = Segmented.get(ShardedTwin.getOrElse(tpe, tpe))
+      .exists(_.docs)
     if (!flags.get("skip-disjoint-check").exists(_.toBoolean)) {
       val deltaIds = (if (docTier) docsOf(input, flags).select(
           col("doc_id").as("id"))
@@ -844,43 +822,13 @@ object IndexTool {
       case other => throw new IllegalArgumentException(
         s"--mode=$other: expected append|merge")
     }
-    if (tpe == "bm25-sharded") {
-      // lexical-tier economics: a crawl delta appends one delta-sized
-      // segment per routed term/doc shard (postings + df partials the
-      // serve sum-merges) and rewrites the 1-row stats rollup
-      val touched = Retrieval.updateBm25Sharded(spark, path,
-        terms(docsOf(input, flags)), appendMode)
-      println(s"updated term shards: ${touched.mkString(", ")}")
-      return
-    }
-    if (tpe == "lsh-sharded") {
-      // near-dup-tier economics: the delta's (band, bkey) buckets are
-      // re-censused into one shadow-bucket segment per routed shard
-      // (masks supersede the buckets' earlier censuses at read)
-      val touched = Dedup.updateLshSharded(spark, path,
-        shingled(docsOf(input, flags), num("shingle-n", 3)),
-        num("num-hashes", 28), num("bands", 4), appendMode)
-      println(s"updated shards: ${touched.mkString(", ")}")
-      return
-    }
-    if (tpe == "cdc-sharded") {
-      // chunk-tier economics: occurrence + rollup-partial segments
-      // append to the routed chunk-hash shards, co-swapping per shard
-      val touched = Dedup.updateCdcSharded(spark, path,
-        docsOf(input, flags), "doc_id", "text", num("avg-mask", 32),
-        appendMode)
-      println(s"updated shards: ${touched.mkString(", ")}")
-      return
-    }
-    if (tpe == "semdedup-sharded") {
-      // semantic-tier economics: the delta's vids route to their own
-      // assign shards (plain row-append segments — no rollup);
-      // lanes/seeds/sizes (the fitted params) never move
-      val touched = Clustering.updateSemIndexSharded(spark, path,
-        embOf(input, flags), "vec_id", "embedding",
-        append = appendMode)
-      println(s"updated shards: ${touched.mkString(", ")}")
-      return
+    Segmented.get(tpe) match {
+      case Some(seg) =>
+        val touched = SegmentedIndex.update(spark, path,
+          seg.delta(input, flags), appendMode)
+        println(s"updated shards: ${touched.mkString(", ")}")
+        return
+      case None =>
     }
     if (tpe == "ivfpqr-sharded") {
       val touched = Clustering.updateIvfPqrSharded(spark, path,
@@ -1087,7 +1035,8 @@ object IndexTool {
 
   private def loadBm25Auto(spark: SparkSession, path: String)
       : graft.operators.Bm25Index =
-    if (isSharded(spark, path)) Retrieval.loadBm25Sharded(spark, path)
+    if (isSharded(spark, path))
+      SegmentedIndex.load(spark, Retrieval.Bm25Sharded, path)
     else Retrieval.loadBm25Index(spark, path)
 
   private def loadPqAuto(spark: SparkSession, path: String)
@@ -1354,19 +1303,13 @@ object IndexTool {
     def dbl(k: String, dflt: Double): Double =
       flags.get(k).map(_.toDouble).getOrElse(dflt)
     tpe match {
-      case "lsh" =>
+      case "lsh" | "lsh-sharded" =>
+        // the segmented load's live rows equal the flat artifact's, so
+        // the probe reproduces the unsharded serve bit-for-bit
         Dedup.incrementalLshPairsIndexed(
             shingled(docsOf(input, flags), num("shingle-n", 3)),
-            Dedup.loadLshIndex(spark, path),
-            num("num-hashes", 28), num("bands", 4), dbl("threshold", 0.6))
-          .orderBy(col("new_doc"), col("dup_of"))
-      case "lsh-sharded" =>
-        // per-shard signature rows unioned in one multi-path scan —
-        // equal row set, so the probe reproduces the unsharded serve
-        // bit-for-bit
-        Dedup.incrementalLshPairsIndexed(
-            shingled(docsOf(input, flags), num("shingle-n", 3)),
-            Dedup.loadLshSharded(spark, path),
+            loadTier(spark, tpe, path, Dedup.LshSharded)(
+              Dedup.loadLshIndex(spark, path)),
             num("num-hashes", 28), num("bands", 4), dbl("threshold", 0.6))
           .orderBy(col("new_doc"), col("dup_of"))
       case "ivf" =>
@@ -1468,27 +1411,17 @@ object IndexTool {
       case "bpe" =>
         encodeTransform(spark, "bpe", path, flags)(docsOf(input, flags))
           .orderBy(col("doc_id"))
-      case "bm25" =>
-        serveBm25(Retrieval.loadBm25Index(spark, path),
-            docsOf(input, flags), flags)
-          .orderBy(col("q_id"), col("rank"))
-      case "bm25-sharded" =>
-        // per-shard surfaces unioned — equal posting/df/len/stats sets,
-        // so the ranking reproduces the unsharded serve bit-for-bit
-        serveBm25(Retrieval.loadBm25Sharded(spark, path),
-            docsOf(input, flags), flags)
+      case "bm25" | "bm25-sharded" =>
+        serveBm25(loadTier(spark, tpe, path, Retrieval.Bm25Sharded)(
+            Retrieval.loadBm25Index(spark, path)), docsOf(input, flags), flags)
           .orderBy(col("q_id"), col("rank"))
       case "unigram" =>
         encodeTransform(spark, "unigram", path, flags)(docsOf(input, flags))
           .orderBy(col("doc_id"))
-      case "semdedup" =>
+      case "semdedup" | "semdedup-sharded" =>
         Clustering.semDedupDeltaHier(embOf(input, flags), "vec_id",
-            "embedding", Clustering.loadSemIndex(spark, path),
-            dbl("threshold", 0.999))
-          .orderBy(col("pruned"))
-      case "semdedup-sharded" =>
-        Clustering.semDedupDeltaHier(embOf(input, flags), "vec_id",
-            "embedding", Clustering.loadSemIndexSharded(spark, path),
+            "embedding", loadTier(spark, tpe, path, Clustering.SemSharded)(
+              Clustering.loadSemIndex(spark, path)),
             dbl("threshold", 0.999))
           .orderBy(col("pruned"))
       case "decontam" =>
@@ -1497,15 +1430,11 @@ object IndexTool {
               ArtifactStore.resolve(spark, path)),
             "vec_id", "embedding", dbl("threshold", 0.4))
           .orderBy(col("contaminated"))
-      case "cdc" =>
+      case "cdc" | "cdc-sharded" =>
         Dedup.incrementalCdcMatches(docsOf(input, flags),
-            Dedup.loadCdcArtifact(spark, path).rollup, "doc_id", "text",
+            loadTier(spark, tpe, path, Dedup.CdcSharded)(
+              Dedup.loadCdcArtifact(spark, path)).rollup, "doc_id", "text",
             num("avg-mask", 32))
-          .orderBy(col("new_doc"))
-      case "cdc-sharded" =>
-        Dedup.incrementalCdcMatches(docsOf(input, flags),
-            Dedup.loadCdcSharded(spark, path).rollup,
-            "doc_id", "text", num("avg-mask", 32))
           .orderBy(col("new_doc"))
       case "wordpiece" =>
         encodeTransform(spark, "wordpiece", path, flags)(docsOf(input, flags))
@@ -1575,8 +1504,6 @@ object IndexTool {
       ArtifactStore.resolve(spark, p)).count()
     def shards: (String, Long) = "shards" ->
       ShardedCommit.numShards(spark, ArtifactStore.resolve(spark, path)).toLong
-    def liveSegments: (String, Long) = "live_segments" ->
-      SegmentStore.liveSegmentCount(spark, segmentedRootsOf(spark, tpe, path))
     // Generation health first: orphaned
     // generations are a crashed/raced writer's leftovers (or the one
     // retained displaced generation) — detected here, swept by the next
@@ -1601,57 +1528,39 @@ object IndexTool {
             "orphan_generations" -> orphans.length.toLong,
             "commit_claim_present" -> (if (claimed) 1L else 0L))
       }
-    val counters: Seq[(String, Long)] = genCounters ++ (tpe match {
-      case "lsh" =>
+    // a segmented type reports its flat twin's counters over its live
+    // view, plus the grid size and the compaction-pressure signal
+    val segmented: Seq[(String, Long)] = Segmented.get(tpe).toSeq.flatMap(
+      seg => Seq(shards, "live_segments" ->
+        SegmentedIndex.liveSegments(spark, seg.tier, path)))
+    val counters: Seq[(String, Long)] = genCounters ++ segmented ++ (tpe match {
+      case "lsh" | "lsh-sharded" =>
         // one scan: count + both distincts in a single (expanded) agg
-        val a = Dedup.loadLshIndex(spark, path)
+        val a = loadTier(spark, tpe, path, Dedup.LshSharded)(
+            Dedup.loadLshIndex(spark, path))
           .agg(count(lit(1)), countDistinct(col("id")),
             countDistinct(col("band"))).head()
         Seq("signature_rows" -> a.getLong(0), "docs" -> a.getLong(1),
           "bands" -> a.getLong(2))
-      case "lsh-sharded" =>
-        val a = Dedup.loadLshSharded(spark, path)
-          .agg(count(lit(1)), countDistinct(col("id")),
-            countDistinct(col("band"))).head()
-        Seq(shards,
-          "signature_rows" -> a.getLong(0), "docs" -> a.getLong(1),
-          "bands" -> a.getLong(2), liveSegments)
-      case "cdc" =>
+      case "cdc" | "cdc-sharded" =>
         // coalesce: sum over an EMPTY artifact is null, and describe is
         // exactly the verb an operator points at a degenerate index
-        val art = Dedup.loadCdcArtifact(spark, path)
+        val art = loadTier(spark, tpe, path, Dedup.CdcSharded)(
+          Dedup.loadCdcArtifact(spark, path))
         val agg = art.rollup
           .agg(count(lit(1)),
             coalesce(sum(col("n_occ")), lit(0L)).as("occ")).head()
         Seq("unique_chunks" -> agg.getLong(0),
           "chunk_occurrences" -> agg.getLong(1),
           "docs" -> art.chunks.select(col("doc_id")).distinct().count())
-      case "cdc-sharded" =>
-        val art = Dedup.loadCdcSharded(spark, path)
-        val agg = art.rollup
-          .agg(count(lit(1)),
-            coalesce(sum(col("n_occ")), lit(0L)).as("occ")).head()
-        Seq(shards,
-          "unique_chunks" -> agg.getLong(0),
-          "chunk_occurrences" -> agg.getLong(1),
-          "docs" -> art.chunks.select(col("doc_id")).distinct().count(),
-          liveSegments)
-      case "bm25" =>
-        val idx = Retrieval.loadBm25Index(spark, path)
+      case "bm25" | "bm25-sharded" =>
+        val idx = loadTier(spark, tpe, path, Retrieval.Bm25Sharded)(
+          Retrieval.loadBm25Index(spark, path))
         val st = idx.stats.head()
         Seq("posting_rows" -> idx.postings.count(),
           "docs" -> idx.doclen.count(),
           "vocab_terms" -> idx.docfreq.count(),
           "total_tokens" -> st.getAs[Long]("total_len"))
-      case "bm25-sharded" =>
-        val idx = Retrieval.loadBm25Sharded(spark, path)
-        val st = idx.stats.head()
-        Seq(shards,
-          "posting_rows" -> idx.postings.count(),
-          "docs" -> idx.doclen.count(),
-          "vocab_terms" -> idx.docfreq.count(),
-          "total_tokens" -> st.getAs[Long]("total_len"),
-          liveSegments)
       case "ivf" =>
         val lanes =
           ArtifactStore.readSurface(spark, ArtifactStore.resolve(spark, path))
@@ -1769,22 +1678,14 @@ object IndexTool {
           "vectors" -> st.getLong(1),
           "occupied_cells" -> st.getLong(0),
           "largest_cell" -> st.getLong(2))
-      case "semdedup" =>
-        val idx = Clustering.loadSemIndex(spark, path)
+      case "semdedup" | "semdedup-sharded" =>
+        val idx = loadTier(spark, tpe, path, Clustering.SemSharded)(
+          Clustering.loadSemIndex(spark, path))
         Seq("coarse_k" -> idx.coarseK.toLong,
           "cluster_cap" -> idx.clusterCap,
           "fine_seeds" -> idx.seeds.count(),
           "assigned_rows" -> idx.assign.count(),
           "fine_clusters" -> idx.sizes.count())
-      case "semdedup-sharded" =>
-        val idx = Clustering.loadSemIndexSharded(spark, path)
-        Seq(shards,
-          "coarse_k" -> idx.coarseK.toLong,
-          "cluster_cap" -> idx.clusterCap,
-          "fine_seeds" -> idx.seeds.count(),
-          "assigned_rows" -> idx.assign.count(),
-          "fine_clusters" -> idx.sizes.count(),
-          liveSegments)
       case "bpe" => Seq("merges" -> rows(path))
       case "unigram" => Seq("vocab_pieces" -> rows(path))
       case "wordpiece" =>
@@ -1919,29 +1820,19 @@ object IndexTool {
       batchOut.write.mode("overwrite")
         .parquet(s"$outFile/batch=$batchId"): Unit
     val writer = tpe match {
-      case "lsh" =>
+      case "lsh" | "lsh-sharded" =>
+        // artifact loaded once; per-batch serve == the batch verb
         graft.streaming.StreamingCells.lshServeStream(
           docsOf(stream, flags), "doc_id", "text",
-          Dedup.loadLshIndex(spark, path),
+          loadTier(spark, tpe, path, Dedup.LshSharded)(
+            Dedup.loadLshIndex(spark, path)),
           num("shingle-n", 3), num("num-hashes", 28), num("bands", 4),
           dbl("threshold", 0.6))(sink)
-      case "lsh-sharded" =>
-        // shard union loaded once (one multi-path scan); per-batch
-        // serve == the batch verb
-        graft.streaming.StreamingCells.lshServeStream(
-          docsOf(stream, flags), "doc_id", "text",
-          Dedup.loadLshSharded(spark, path),
-          num("shingle-n", 3), num("num-hashes", 28), num("bands", 4),
-          dbl("threshold", 0.6))(sink)
-      case "semdedup" =>
+      case "semdedup" | "semdedup-sharded" =>
         graft.streaming.StreamingCells.semDedupServeStream(
           embOf(stream, flags), "vec_id", "embedding",
-          Clustering.loadSemIndex(spark, path),
-          dbl("threshold", 0.999))(sink)
-      case "semdedup-sharded" =>
-        graft.streaming.StreamingCells.semDedupServeStream(
-          embOf(stream, flags), "vec_id", "embedding",
-          Clustering.loadSemIndexSharded(spark, path),
+          loadTier(spark, tpe, path, Clustering.SemSharded)(
+            Clustering.loadSemIndex(spark, path)),
           dbl("threshold", 0.999))(sink)
       case "decontam" =>
         graft.streaming.StreamingCells.decontamServeStream(
@@ -1949,15 +1840,9 @@ object IndexTool {
           ArtifactStore.readSurface(spark,
             ArtifactStore.resolve(spark, path)),
           dbl("threshold", 0.4))(sink)
-      case "cdc" =>
-        val idx = Dedup.loadCdcArtifact(spark, path).rollup
-        docsOf(stream, flags).writeStream.foreachBatch {
-          (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            sink(Dedup.incrementalCdcMatches(batch, idx, "doc_id", "text",
-              num("avg-mask", 32)), batchId)
-        }
-      case "cdc-sharded" =>
-        val idx = Dedup.loadCdcSharded(spark, path).rollup
+      case "cdc" | "cdc-sharded" =>
+        val idx = loadTier(spark, tpe, path, Dedup.CdcSharded)(
+          Dedup.loadCdcArtifact(spark, path)).rollup
         docsOf(stream, flags).writeStream.foreachBatch {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(Dedup.incrementalCdcMatches(batch, idx, "doc_id", "text",
@@ -2065,14 +1950,9 @@ object IndexTool {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(servePqMaybeRerank(spark, idx, batch, flags), batchId)
         }
-      case "bm25" =>
-        val idx = Retrieval.loadBm25Index(spark, path)
-        docsOf(stream, flags).writeStream.foreachBatch {
-          (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            sink(serveBm25(idx, batch, flags), batchId)
-        }
-      case "bm25-sharded" =>
-        val idx = Retrieval.loadBm25Sharded(spark, path)
+      case "bm25" | "bm25-sharded" =>
+        val idx = loadTier(spark, tpe, path, Retrieval.Bm25Sharded)(
+          Retrieval.loadBm25Index(spark, path))
         docsOf(stream, flags).writeStream.foreachBatch {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(serveBm25(idx, batch, flags), batchId)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.functions.TextFunctions.hash28
 import graft.functions.VectorFunctions.scaled
-import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
+import graft.sinks.{ArtifactStore, SegmentedIndex, ShardedCommit}
 
 /** Distributed k-means (Lloyd's) over embedding columns — the corpus
   * topic-clustering step of a training-data pipeline (cluster-balanced
@@ -481,212 +481,95 @@ object Clustering {
     * collect), so a `coalesce(1)` there would re-create the single-task
     * bottleneck the fallback exists to avoid. */
   def saveSemIndex(idx: SemIndex, path: String,
-                   expected: ArtifactStore.Expect = None): Unit = {
-    val spark = idx.lanes.sparkSession
-    import spark.implicits._
+                   expected: ArtifactStore.Expect = None): Unit =
     // five independent surface writes, overlapped (guide §2.6); they
     // share the fit's persisted sv ancestor, so no duplicated lineage
-    ArtifactStore.publish(spark, path, expected) { dir =>
-      concurrentWrites(Seq(
-        idx.assign -> ((df: DataFrame) =>
-          df.write.mode("overwrite").parquet(s"$dir/assign")),
-        idx.lanes -> ((df: DataFrame) =>
-          df.coalesce(1).write.mode("overwrite").parquet(s"$dir/lanes")),
-        idx.seeds -> ((df: DataFrame) =>
-          df.write.mode("overwrite").parquet(s"$dir/seeds")),
-        idx.sizes -> ((df: DataFrame) =>
-          df.write.mode("overwrite").parquet(s"$dir/sizes")),
-        Seq((idx.coarseK, idx.clusterCap, idx.salt))
-          .toDF("coarse_k", "cluster_cap", "salt") ->
-          ((df: DataFrame) =>
-            df.coalesce(1).write.mode("overwrite").parquet(s"$dir/meta"))))
+    ArtifactStore.publish(idx.lanes.sparkSession, path, expected) { dir =>
+      concurrentWrites((idx.assign -> ((df: DataFrame) =>
+        df.write.mode("overwrite").parquet(s"$dir/assign"))) +:
+        fittedWrites(idx, dir))
     }
+
+  /** The writes of a [[SemIndex]]'s fitted parameters into `dir`. */
+  private def fittedWrites(idx: SemIndex, dir: String)
+      : Seq[(DataFrame, DataFrame => Unit)] = {
+    val spark = idx.lanes.sparkSession
+    import spark.implicits._
+    Seq(
+      idx.lanes -> ((df: DataFrame) =>
+        df.coalesce(1).write.mode("overwrite").parquet(s"$dir/lanes")),
+      idx.seeds -> ((df: DataFrame) =>
+        df.write.mode("overwrite").parquet(s"$dir/seeds")),
+      idx.sizes -> ((df: DataFrame) =>
+        df.write.mode("overwrite").parquet(s"$dir/sizes")),
+      Seq((idx.coarseK, idx.clusterCap, idx.salt))
+        .toDF("coarse_k", "cluster_cap", "salt") ->
+        ((df: DataFrame) =>
+          df.coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")))
   }
 
   def loadSemIndex(spark: org.apache.spark.sql.SparkSession,
                    p0: String): SemIndex = {
     val path = ArtifactStore.resolve(spark, p0)
-    val meta = ArtifactStore.readSurface(spark, s"$path/meta").head()
-    SemIndex(ArtifactStore.readSurface(spark, s"$path/lanes"),
-      ArtifactStore.readSurface(spark, s"$path/seeds"),
-      ArtifactStore.readSurface(spark, s"$path/assign"),
-      ArtifactStore.readSurface(spark, s"$path/sizes"),
+    semIndexAt(spark, path, ArtifactStore.readSurface(spark, s"$path/assign"))
+  }
+
+  /** The [[SemIndex]] whose fitted parameters sit in generation `dir`. */
+  private def semIndexAt(spark: org.apache.spark.sql.SparkSession,
+                         dir: String, assign: DataFrame): SemIndex = {
+    val meta = ArtifactStore.readSurface(spark, s"$dir/meta").head()
+    SemIndex(ArtifactStore.readSurface(spark, s"$dir/lanes"),
+      ArtifactStore.readSurface(spark, s"$dir/seeds"), assign,
+      ArtifactStore.readSurface(spark, s"$dir/sizes"),
       meta.getAs[Int]("coarse_k"), meta.getAs[Long]("cluster_cap"),
       meta.getAs[String]("salt"))
   }
 
-  // ──────────────────── sharded SemDeDup artifact ────────────────────
-  //
-  // The rewrite-unit fix for the semantic tier: [[updateSemIndex]] is
-  // exact but [[saveSemIndex]] re-persists the corpus-sized `assign`
-  // surface WHOLESALE per delta. Here `assign` shards by `vid mod S`
-  // into independent generational roots; the BOUNDED fitted parameters
-  // (lanes ≤ MaxCentroids, seeds/sizes ∝ n/targetRows, 1-row meta) stay
-  // beside them in the artifact generation and never move on an
-  // add/remove — exactly the Faiss train/add split made physical:
-  //
-  //   <gen>/_num_shards, <gen>/meta/  S; (coarse_k, cluster_cap, salt)
-  //   <gen>/lanes/ seeds/ sizes/      the fitted parameters (build-time)
-  //   <gen>/shards/<s>/_seg_*/assign/ (vid, v, nrm, cluster, cell), vid mod S == s
-  //
-  // An add rewrites only the shards its vids route to; a REMOVE routes
-  // the same way (vid is the shard key — unlike the doc-tier grids,
-  // removal here touches only the removed ids' own shards). The shard
-  // id derives from vid, so readers load assign as ONE multi-path scan.
+  /** The segmented SemDeDup tier ([[graft.sinks.SegmentedIndex]]): the
+    * corpus-sized `assign` surface shards by `vid mod S`, while the
+    * BOUNDED fitted parameters (lanes ≤ MaxCentroids, seeds/sizes ∝
+    * n/targetRows, 1-row meta) are build-time roots that never move on
+    * an add/remove — the Faiss train/add split made physical. vid is
+    * the shard key, so a removal reads and rewrites only the removed
+    * ids' own shards, and assign rows are per-vid (no rollup): an
+    * append-mode segment IS the exact merge. */
+  object SemSharded extends SegmentedIndex.Tier[SemIndex] {
+    import SegmentedIndex.{Family, Surface, Write}
 
-  private def vidShard(s: Int): org.apache.spark.sql.Column =
-    pmod(col("vid"), lit(s.toLong)).cast("int")
+    val families: Seq[Family] = Seq(Family("shards",
+      n => pmod(col("vid"), lit(n.toLong)).cast("int"),
+      Seq(Surface("assign", Seq("vid", "v", "nrm", "cluster", "cell")))))
+    val ids: (String, String) = ("assign", "vid")
 
-  private def assignCols(df: DataFrame): DataFrame =
-    df.select(col("vid"), col("v"), col("nrm"), col("cluster"), col("cell"))
+    def surfacesOf(idx: SemIndex): Map[String, DataFrame] =
+      Map("assign" -> idx.assign)
 
-  def saveSemIndexSharded(idx: SemIndex, path: String,
-                          numShards: Int): Unit = {
-    val spark = idx.lanes.sparkSession
-    import spark.implicits._
-    ArtifactStore.publish(spark, path) { dir =>
-      ShardedCommit.writeNumShards(spark, dir, numShards)
-      concurrentWrites(Seq(
-        idx.lanes -> ((df: DataFrame) =>
-          df.coalesce(1).write.mode("overwrite").parquet(s"$dir/lanes")),
-        idx.seeds -> ((df: DataFrame) =>
-          df.write.mode("overwrite").parquet(s"$dir/seeds")),
-        idx.sizes -> ((df: DataFrame) =>
-          df.write.mode("overwrite").parquet(s"$dir/sizes")),
-        Seq((idx.coarseK, idx.clusterCap, idx.salt))
-          .toDF("coarse_k", "cluster_cap", "salt") ->
-          ((df: DataFrame) =>
-            df.coalesce(1).write.mode("overwrite").parquet(s"$dir/meta"))))
-      val assign =
-        assignCols(idx.assign).withColumn("shard", vidShard(numShards))
-      ShardedCommit.commitSegmented(spark, dir, Seq(ShardedCommit.SegFamily(
-        (0 until numShards).map(sh =>
-          sh -> ArtifactStore.pinGen(spark, s"$dir/shards/$sh")),
-        Seq(ShardedCommit.Surface("assign", assign,
-          () => assign.limit(0).drop("shard"))),
-        ShardedCommit.SegReplace)))
+    override def writeRoots(dir: String, idx: SemIndex): Unit =
+      concurrentWrites(fittedWrites(idx, dir))
+
+    def artifact(spark: org.apache.spark.sql.SparkSession, dir: String,
+                 view: String => DataFrame): SemIndex =
+      semIndexAt(spark, dir, view("assign"))
+
+    /** ADD a delta batch `(vec_id, embedding)`: the assignment chain,
+      * fixed-parameters contract and loss checks are [[updateSemIndex]]'s
+      * ([[checkedDeltaCells]] is shared); only the persistence unit
+      * changes. */
+    def delta(delta: DataFrame,
+              seedLiteralCap: Int = Similarity.MaxCentroids)
+        : SegmentedIndex.Fold = fold { o =>
+      val cells = checkedDeltaCells(SegmentedIndex.load(o.spark, this, o.dir),
+        delta, "vec_id", "embedding", seedLiteralCap)
+      Write(Map("shards" -> cells), _ => Map("assign" -> cells))
     }
-  }
 
-  /** Load as a regular [[SemIndex]] — fitted parameters from the live
-    * generation, `assign` as ONE multi-path scan over the live shard
-    * segments — so every serve path ([[semDedupHierServe]],
-    * [[semDedupDeltaHier]]) is shared with the unsharded artifact. */
-  def loadSemIndexSharded(spark: org.apache.spark.sql.SparkSession,
-                          root: String): SemIndex = {
-    val path = ArtifactStore.resolve(spark, root)
-    val n = ShardedCommit.numShards(spark, path)
-    val meta = ArtifactStore.readSurface(spark, s"$path/meta").head()
-    SemIndex(ArtifactStore.readSurface(spark, s"$path/lanes"),
-      ArtifactStore.readSurface(spark, s"$path/seeds"),
-      ArtifactStore.readSurface(spark, (0 until n).flatMap { sh =>
-        val shardRoot = s"$path/shards/$sh"
-        SegmentStore.surfacePathsAt(spark, shardRoot,
-          ArtifactStore.resolve(spark, shardRoot), "assign") }: _*),
-      ArtifactStore.readSurface(spark, s"$path/sizes"),
-      meta.getAs[Int]("coarse_k"), meta.getAs[Long]("cluster_cap"),
-      meta.getAs[String]("salt"))
-  }
-
-  /** ADD a delta batch. Default (`append = true`): each touched shard
-    * gains one DELTA-SIZED `assign` segment — vids are NEW by the
-    * disjoint contract and assign rows are per-vid (no rollup), so a
-    * plain row append IS the exact merge and the write volume is
-    * O(delta). `append = false` is the whole-shard merge — the
-    * compacting write. The assignment chain, the fixed-parameters
-    * contract, and the loss checks are [[updateSemIndex]]'s exactly
-    * ([[checkedDeltaCells]] is shared); only the persistence unit
-    * changes. Returns the touched shard ids. */
-  def updateSemIndexSharded(spark: org.apache.spark.sql.SparkSession,
-                            root: String, delta: DataFrame,
-                            idCol: String, vecCol: String,
-                            seedLiteralCap: Int = Similarity.MaxCentroids,
-                            append: Boolean = true)
-      : Seq[Int] = {
-    val path = ArtifactStore.resolve(spark, root)
-    val n = ShardedCommit.numShards(spark, path)
-    val idx = loadSemIndexSharded(spark, path)
-    val cells = checkedDeltaCells(idx, delta, idCol, vecCol, seedLiteralCap)
-    val touched = cells.select(vidShard(n).as("shard")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (touched.isEmpty) return touched
-    val pinned = touched.map(sh =>
-      sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
-    val (rows, mode) =
-      if (append)
-        (assignCols(cells), ShardedCommit.SegAppend)
-      else {
-        val merged = ArtifactStore.readSurface(spark,
-            pinned.flatMap { case (sh, (_, _, gen)) =>
-              SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh",
-                gen, "assign") }: _*)
-          .select(col("vid"), col("v"), col("nrm"), col("cluster"),
-            col("cell"))
-          .unionByName(assignCols(cells))
-        (merged, ShardedCommit.SegReplace)
-      }
-    ShardedCommit.commitSegmented(spark, path,
-      Seq(ShardedCommit.SegFamily(pinned,
-        Seq(ShardedCommit.Surface("assign",
-          rows.withColumn("shard", vidShard(n)),
-          () => rows.limit(0))),
-        mode)))
-    touched
-  }
-
-  /** Fold every shard's segment list back to ONE segment — the
-    * read-amplification reset after append-mode adds (assign rows
-    * re-persist as-is; there is no rollup to merge). */
-  def compactSemIndexSharded(spark: org.apache.spark.sql.SparkSession,
-                             root: String): Seq[Int] = {
-    val path = ArtifactStore.resolve(spark, root)
-    val n = ShardedCommit.numShards(spark, path)
-    val all = (0 until n).toSeq
-    val pinned = all.map(sh =>
-      sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
-    val rows = ArtifactStore.readSurface(spark,
-        pinned.flatMap { case (sh, (_, _, gen)) =>
-          SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
-            "assign") }: _*)
-      .select(col("vid"), col("v"), col("nrm"), col("cluster"), col("cell"))
-    ShardedCommit.commitSegmented(spark, path,
-      Seq(ShardedCommit.SegFamily(pinned,
-        Seq(ShardedCommit.Surface("assign",
-          rows.withColumn("shard", vidShard(n)),
-          () => rows.limit(0))),
-        ShardedCommit.SegReplace)))
-    all
-  }
-
-  /** REMOVE a vector set — vid IS the shard key, so only the removed
-    * ids' own shards are read or rewritten (bounded ≤ min(|ids|, S)
-    * roots; the doc-tier grids can't route removals this tightly). A
-    * SEGMENT-COMPACTING write for the touched shards. */
-  def removeFromSemIndexSharded(spark: org.apache.spark.sql.SparkSession,
-                                root: String, removedIds: DataFrame)
-      : Seq[Int] = {
-    val path = ArtifactStore.resolve(spark, root)
-    val n = ShardedCommit.numShards(spark, path)
-    val ids = OperatorCaches.register(
-      removedIds.select(col("vid")).distinct().persist())
-    val touched = ids.select(vidShard(n).as("shard")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (touched.isEmpty) return touched
-    val pinned = touched.map(sh =>
-      sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
-    val kept = ArtifactStore.readSurface(spark,
-        pinned.flatMap { case (sh, (_, _, gen)) =>
-          SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
-            "assign") }: _*)
-      .select(col("vid"), col("v"), col("nrm"), col("cluster"), col("cell"))
-      .join(ids, Seq("vid"), "left_anti")
-    ShardedCommit.commitSegmented(spark, path,
-      Seq(ShardedCommit.SegFamily(pinned,
-        Seq(ShardedCommit.Surface("assign",
-          kept.withColumn("shard", vidShard(n)),
-          () => kept.limit(0))),
-        ShardedCommit.SegReplace)))
-    touched
+    /** REMOVE a vector set `(vid)` ([[removeFromSemIndex]]'s semantics). */
+    def removal(removedIds: DataFrame): SegmentedIndex.Fold = fold { _ =>
+      val ids = OperatorCaches.register(
+        removedIds.select(col("vid")).distinct().persist())
+      Write(Map("shards" -> ids), s => Map("assign" ->
+        s.live("assign").join(ids, Seq("vid"), "left_anti")))
+    }
   }
 
   /** The SCALE-OUT twin of the [[graft.plans.GroupedNearestL2]] literal
@@ -942,16 +825,15 @@ object Clustering {
     // need it most. Descriptions are thread-local, so each thunk labels
     // only its own jobs.
     // Skip the shared plumbing frames (this method, concurrentWrites,
-    // ShardedCommit.stageAll/commit*) so jobs are labeled with the REAL
-    // operator call site: the round-18 filter conjoined the method check
-    // with `Clustering$`, but stageAll lives in ShardedCommit$ — every
-    // sharded commit's jobs were labeled 'ShardedCommit.scala:<line>'
-    // and the per-operator attribution was lost (ADVICE round 18).
+    // the segmented lifecycle and its commit) so jobs are labeled with
+    // the REAL operator call site, not 'ShardedCommit.scala:<line>'
+    // for every sharded commit (ADVICE round 18).
     val caller = Thread.currentThread.getStackTrace
       .find(e => e.getClassName.startsWith("graft.") &&
         !(e.getClassName.endsWith("Clustering$") &&
           e.getMethodName.startsWith("concurrent")) &&
-        !e.getClassName.startsWith("graft.sinks.ShardedCommit"))
+        !e.getClassName.startsWith("graft.sinks.ShardedCommit") &&
+        !e.getClassName.startsWith("graft.sinks.SegmentedIndex"))
       .map(e => s"${e.getFileName}:${e.getLineNumber}")
       .getOrElse("concurrentFrames")
     concurrentlyUnchecked(iso.zipWithIndex.map { case (df, i) =>

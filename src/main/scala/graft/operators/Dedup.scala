@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.TextFunctions._
-import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
+import graft.sinks.{ArtifactStore, SegmentedIndex}
 
 /** The persisted two-surface CDC chunk index (see
   * [[Dedup.buildCdcArtifact]]): `chunks` is the doc-grain occurrence
@@ -401,12 +401,8 @@ object Dedup {
     * columns ride through [[saveLshIndex]]/[[loadLshIndex]] as ordinary
     * parquet columns. */
   def bandedSignaturesTiled(hashedGrams: DataFrame, numHashes: Int,
-                            bands: Int): DataFrame = {
-    val banded = bandedSignatures(hashedGrams, numHashes, bands)
-    if (numHashes / bands < 6)
-      banded.withColumn("cell", lit(0)).withColumn("nc", lit(1))
-    else tileCensus(banded, LshBucketCap)
-  }
+                            bands: Int): DataFrame =
+    retile(bandedSignatures(hashedGrams, numHashes, bands), numHashes, bands)
 
   /** Persist a banded-signature index ([[bandedSignatures]] output) as
     * one parquet table `(id, ghash, band, bkey)` — the build-once half
@@ -437,12 +433,8 @@ object Dedup {
     * same census), which is what the q155 oracle verifies. */
   def updateLshIndex(index: DataFrame, deltaHashed: DataFrame,
                      numHashes: Int, bands: Int): DataFrame = {
-    val base = index.select(col("id"), col("ghash"), col("band"), col("bkey"))
-    val merged = base.unionByName(
-      bandedSignatures(deltaHashed, numHashes, bands))
-    if (numHashes / bands < 6)
-      merged.withColumn("cell", lit(0)).withColumn("nc", lit(1))
-    else tileCensus(merged, LshBucketCap)
+    retile(sigCols(index).unionByName(
+      bandedSignatures(deltaHashed, numHashes, bands)), numHashes, bands)
   }
 
   /** REMOVE a doc set from the banded index — the right-to-be-forgotten
@@ -453,273 +445,98 @@ object Dedup {
     * over the remaining corpus exactly (q164's oracle replays it: pairs
     * against removed docs VANISH). `removedIds` is one `id` column. */
   def removeFromLshIndex(index: DataFrame, removedIds: DataFrame,
-                         numHashes: Int, bands: Int): DataFrame = {
-    val remaining = index
-      .select(col("id"), col("ghash"), col("band"), col("bkey"))
-      .join(removedIds.select(col("id")).distinct(), Seq("id"), "left_anti")
+                         numHashes: Int, bands: Int): DataFrame =
+    retile(sigCols(index).join(removedIds.select(col("id")).distinct(),
+      Seq("id"), "left_anti"), numHashes, bands)
+
+  /** The census columns `(cell, nc)` over signature rows `(id, ghash,
+    * band, bkey)`: the skew tiles when rows per band are 6 or more
+    * ([[tileCensus]]), else every row cell 0 of 1. */
+  private def retile(banded: DataFrame, numHashes: Int,
+                     bands: Int): DataFrame =
     if (numHashes / bands < 6)
-      remaining.withColumn("cell", lit(0)).withColumn("nc", lit(1))
-    else tileCensus(remaining, LshBucketCap)
-  }
+      banded.withColumn("cell", lit(0)).withColumn("nc", lit(1))
+    else tileCensus(banded, LshBucketCap)
 
-  // ─────────────────────── sharded LSH artifact ───────────────────────
-  //
-  // The rewrite-unit fix for the near-dup tier: [[updateLshIndex]] is
-  // exact but re-persists the unioned signature rows WHOLESALE — at
-  // 100 TB a daily crawl would rewrite the entire banded index. Here
-  // the signature surface shards by BUCKET-KEY hash into independent
-  // generational roots (the [[graft.operators.Retrieval.saveBm25Sharded]]
-  // pattern on the lexical tier):
-  //
-  //   <gen>/_num_shards               the grid size
-  //   <gen>/shards/<s>/_seg_*/sig/    (id, ghash, band, bkey, cell, nc)
-  //                                   rows with hash(band,bkey) mod S == s
-  //
-  // inside the artifact generation `<gen>`.
-  //
-  // The shard key is (band, bkey) — the tile census (bucket size → nc,
-  // cell) is per-(band, bkey) state, so a bucket NEVER straddles shards
-  // and the per-shard census re-derivation equals the global one
-  // restricted to those buckets. A delta batch rewrites only the shards
-  // its buckets hash to; all touched roots flip in one all-or-nothing
-  // pointer transaction. The shard id is DERIVABLE from (band, bkey),
-  // so readers load all live shard generations as ONE multi-path scan
-  // and updates recompute routing instead of threading a shard column
-  // through unions.
+  private def sigCols(df: DataFrame): DataFrame =
+    df.select(col("id"), col("ghash"), col("band"), col("bkey"))
 
-  private def lshShard(s: Int): Column =
-    pmod(xxhash64(col("band"), col("bkey")), lit(s.toLong)).cast("int")
+  /** The segmented LSH tier ([[graft.sinks.SegmentedIndex]]) over a
+    * TILED banded index ([[bandedSignaturesTiled]] — the layout exists
+    * for corpora big enough to need the skew tiles). Signature rows
+    * shard by BUCKET-KEY hash: the tile census is per-(band, bkey)
+    * state, so a bucket never straddles shards and a per-shard
+    * re-census equals the global one restricted to those buckets.
+    *
+    * The census is also why an append can not just add rows: admitting
+    * delta rows re-tiles their buckets. An append-mode segment is a
+    * SHADOW-BUCKET segment — the re-censused union of every touched
+    * bucket (its live rows + the delta's; volume delta × bucket
+    * occupancy, bounded by [[LshBucketCap]] tiles) plus a `mask` row per
+    * touched bucket. Every sig row carries `seg_ord`, the ordinal of the
+    * segment that wrote it (strictly monotone per root); a row is live
+    * iff no later mask names its bucket, so the live view is one
+    * broadcast anti-join against the delta-scaled masks, and after
+    * compaction the masks vanish. */
+  object LshSharded extends SegmentedIndex.Tier[DataFrame] {
+    import SegmentedIndex.{Family, Surface, Write}
 
-  private def lshSigCols(df: DataFrame): DataFrame =
-    df.select(col("id"), col("ghash"), col("band"), col("bkey"),
-      col("cell"), col("nc"))
+    val families: Seq[Family] = Seq(Family("shards",
+      n => pmod(xxhash64(col("band"), col("bkey")), lit(n.toLong)).cast("int"),
+      Seq(Surface("sig",
+          Seq("id", "ghash", "band", "bkey", "cell", "nc", "seg_ord")),
+        Surface("mask", Seq("band", "bkey", "mord")))))
+    val ids: (String, String) = ("sig", "id")
 
-  /** The census problem an LSH segment must solve that the other
-    * segmented tiers don't have: `cell`/`nc` are PER-BUCKET derived
-    * state — admitting delta rows re-tiles their buckets, so a naive
-    * row append would leave two inconsistent censuses of one bucket in
-    * the index. Append-mode segments are therefore SHADOW-BUCKET
-    * segments: a delta's segment stores the RE-CENSUSED union of every
-    * touched bucket (base rows of those buckets + delta rows — write
-    * volume delta × bucket occupancy, bounded by [[LshBucketCap]]
-    * tiles, never the corpus) plus a `mask` surface naming the touched
-    * (band, bkey) keys. Every sig row carries `seg_ord`, a per-root
-    * monotone write ordinal; a row is live iff NO later mask names its
-    * bucket, so the load is one multi-path scan plus one broadcast
-    * anti-join against the (delta-scaled) mask set — and after
-    * `index-compact` the masks vanish and the plan collapses back to
-    * the plain scan. Correctness rides on buckets never straddling
-    * shards: a bucket's rows and every mask that could name it live in
-    * one root, whose write ordinals are strictly monotone. */
-  private def lshSegCols(df: DataFrame, ord: Long): DataFrame =
-    df.select(col("id"), col("ghash"), col("band"), col("bkey"),
-      col("cell"), col("nc"), lit(ord).as("seg_ord"))
+    override def live(s: SegmentedIndex.Scan, surface: String): DataFrame =
+      if (!s.layered(surface)) s(surface)
+      else if (surface == "sig") {
+        val (sig, masks) = (s("sig"), s("mask"))
+        sig.join(broadcast(masks),
+            sig("band") === masks("band") && sig("bkey") === masks("bkey") &&
+              masks("mord") > sig("seg_ord"), "left_anti")
+          .withColumn("seg_ord", lit(0L))
+      } else s(surface).limit(0)
 
-  /** Persist a TILED banded index ([[bandedSignaturesTiled]] /
-    * [[updateLshIndex]] output — the `cell`/`nc` columns are required:
-    * the sharded layout exists for corpora big enough to need the skew
-    * tiles) into the sharded layout, every shard written (empty shards
-    * persisted explicitly so the grid is complete). */
-  def saveLshSharded(index: DataFrame, path: String, numShards: Int): Unit = {
-    val spark = index.sparkSession
-    ArtifactStore.publish(spark, path) { dir =>
-      ShardedCommit.writeNumShards(spark, dir, numShards)
-      commitLshShards(spark, dir,
-        (0 until numShards).map(sh =>
-          sh -> ArtifactStore.pinGen(spark, s"$dir/shards/$sh")),
-        lshSegCols(index, 0L), emptyLshMask(spark, index),
-        ShardedCommit.SegReplace, numShards)
+    def surfacesOf(index: DataFrame): Map[String, DataFrame] = Map(
+      "sig" -> index.withColumn("seg_ord", lit(0L)),
+      "mask" -> index.select(col("band"), col("bkey"), lit(0L).as("mord"))
+        .limit(0))
+
+    /** Exactly [[loadLshIndex]]'s shape, so every serve path is shared. */
+    def artifact(spark: org.apache.spark.sql.SparkSession, dir: String,
+                 view: String => DataFrame): DataFrame =
+      view("sig").drop("seg_ord")
+
+    /** Fold a DELTA batch's signatures in: one shadow-bucket segment per
+      * touched shard. Re-tiling exactly the touched buckets equals the
+      * global re-census ([[updateLshIndex]]'s semantics). */
+    def delta(deltaHashed: DataFrame, numHashes: Int,
+              bands: Int): SegmentedIndex.Fold = fold { _ =>
+      val banded = OperatorCaches.register(
+        bandedSignatures(deltaHashed, numHashes, bands).persist())
+      Write(Map("shards" -> banded), s => {
+        val buckets = banded.select(col("band"), col("bkey")).distinct()
+        val ord = s.segOrdinal("shards")
+        Map("sig" -> retile(sigCols(s.live("sig")
+              .join(broadcast(buckets), Seq("band", "bkey"), "left_semi"))
+            .unionByName(sigCols(banded)), numHashes, bands)
+            .withColumn("seg_ord", ord),
+          "mask" -> buckets.withColumn("mord", ord))
+      })
     }
-  }
 
-  private def emptyLshMask(spark: org.apache.spark.sql.SparkSession,
-                           like: DataFrame): DataFrame =
-    like.select(col("band"), col("bkey"), lit(0L).as("mord")).limit(0)
-
-  /** Load the sharded banded index: ONE multi-path scan over every
-    * live segment (the union-of-single-scans planning overhead is the
-    * cost sharding must not add — BASELINE round 17), plus — only
-    * while append-mode segments are live — one broadcast anti-join
-    * dropping each bucket's superseded census (see [[lshSegCols]]).
-    * Output is exactly [[loadLshIndex]]'s shape, so every serve path
-    * is shared. */
-  def loadLshSharded(spark: org.apache.spark.sql.SparkSession,
-                     root: String): DataFrame = {
-    val path = ArtifactStore.resolve(spark, root)
-    val n = ShardedCommit.numShards(spark, path)
-    val resolved = (0 until n).map { sh =>
-      val shardRoot = s"$path/shards/$sh"
-      (shardRoot, ArtifactStore.resolve(spark, shardRoot))
+    /** REMOVE a doc set: its signature rows hash across the whole bucket
+      * grid, so every shard rewrites, the census re-derived over the
+      * survivors ([[removeFromLshIndex]]'s semantics). */
+    def removal(removedIds: DataFrame, numHashes: Int,
+                bands: Int): SegmentedIndex.Fold = fold { _ =>
+      Write(Map.empty, s => Map(
+        "sig" -> retile(sigCols(s.live("sig")).join(
+            removedIds.select(col("id")).distinct(), Seq("id"), "left_anti"),
+          numHashes, bands).withColumn("seg_ord", lit(0L)),
+        "mask" -> s("mask").limit(0)))
     }
-    val sigPaths = resolved.map { case (shardRoot, gen) =>
-      SegmentStore.surfacePathsAt(spark, shardRoot, gen, "sig") }
-    val sig = ArtifactStore.readSurface(spark, sigPaths.flatten: _*)
-    if (sigPaths.forall(_.size <= 1)) sig.drop("seg_ord")
-    else {
-      val masks = ArtifactStore.readSurface(spark, resolved.flatMap {
-        case (shardRoot, gen) =>
-          SegmentStore.surfacePathsAt(spark, shardRoot, gen, "mask") }: _*)
-      sig.join(broadcast(masks),
-          sig("band") === masks("band") && sig("bkey") === masks("bkey") &&
-            masks("mord") > sig("seg_ord"), "left_anti")
-        .drop("seg_ord")
-    }
-  }
-
-  /** Fold a DELTA batch's signatures in. Default (`append = true`):
-    * one SHADOW-BUCKET segment per touched shard — the re-censused
-    * touched buckets plus their mask rows ([[lshSegCols]]) — so the
-    * write volume is O(delta × bucket occupancy) even though bucket
-    * keys spray across the whole grid (the x25 measurement: the
-    * merge-mode sharded update touched 8/8 shards, re-persisted every
-    * surface, and ran SLOWER than the unsharded merge). `append =
-    * false` is the whole-shard merge — the compacting write. Same
-    * exactness either way: the census is per-(band, bkey) state, so
-    * re-tiling exactly the touched buckets equals the global re-census
-    * ([[updateLshIndex]]'s semantics). Returns the touched shard ids. */
-  def updateLshSharded(spark: org.apache.spark.sql.SparkSession,
-                       root: String, deltaHashed: DataFrame,
-                       numHashes: Int, bands: Int,
-                       append: Boolean = true): Seq[Int] = {
-    val path = ArtifactStore.resolve(spark, root)
-    val n = ShardedCommit.numShards(spark, path)
-    val deltaBanded = OperatorCaches.register(
-      bandedSignatures(deltaHashed, numHashes, bands)
-        .withColumn("shard", lshShard(n)).persist())
-    val touched = deltaBanded.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (touched.isEmpty) return touched
-    val pinned = touched.map(sh =>
-      sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
-    // live rows of the touched shards, read through the MASKED view —
-    // raw segments still hold superseded bucket censuses that must not
-    // resurface
-    val sig = ArtifactStore.readSurface(spark,
-      pinned.flatMap { case (sh, (_, _, gen)) =>
-        SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
-          "sig") }: _*)
-    val masks = ArtifactStore.readSurface(spark,
-      pinned.flatMap { case (sh, (_, _, gen)) =>
-        SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
-          "mask") }: _*)
-    val live = sig.join(broadcast(masks),
-        sig("band") === masks("band") && sig("bkey") === masks("bkey") &&
-          masks("mord") > sig("seg_ord"), "left_anti")
-    // append re-censuses only the delta's buckets; merge (the compacting
-    // write) rewrites each touched shard's whole live view
-    val buckets = deltaBanded.select(col("band"), col("bkey")).distinct()
-    val kept =
-      if (append) live.join(broadcast(buckets), Seq("band", "bkey"), "left_semi")
-      else live
-    val merged = kept.select(col("id"), col("ghash"), col("band"), col("bkey"))
-      .unionByName(deltaBanded
-        .select(col("id"), col("ghash"), col("band"), col("bkey")))
-    val retiled =
-      if (numHashes / bands < 6)
-        merged.withColumn("cell", lit(0)).withColumn("nc", lit(1))
-      else tileCensus(merged, LshBucketCap)
-    if (append) {
-      // per-ROOT write ordinal: ordinals only ever compare within one
-      // root (buckets never straddle shards), and the commit mints the
-      // segment dir name from the same listing, so row ordinal == dir
-      // ordinal and both are strictly monotone per root
-      val ordOf: Map[Int, Long] = pinned.map { case (sh, _) =>
-        sh -> (1L + maxLiveSegOrd(spark, s"$path/shards/$sh")) }.toMap
-      val ordCol = element_at(typedLit(ordOf), col("shard"))
-      commitLshShardsPresharded(spark, path, pinned,
-        lshSigCols(retiled).withColumn("shard", lshShard(n))
-          .withColumn("seg_ord", ordCol),
-        buckets.withColumn("shard", lshShard(n))
-          .withColumn("mord", ordCol),
-        ShardedCommit.SegAppend)
-    } else
-      commitLshShards(spark, path, pinned, lshSegCols(retiled, 0L),
-        emptyLshMask(spark, retiled), ShardedCommit.SegReplace, n)
-    touched
-  }
-
-  /** Highest row-level `seg_ord` a root's next shadow segment must
-    * exceed — tracked as the max ordinal across its PRESENT `_seg_*`
-    * dir names (strictly monotone per commit, cheap driver listing);
-    * row ordinals are always assigned at or below the dir ordinal the
-    * commit mints, so dir-max + 1 is strictly above every live row. */
-  private def maxLiveSegOrd(spark: org.apache.spark.sql.SparkSession,
-                            root: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val r = new org.apache.hadoop.fs.Path(root)
-    if (!fs.exists(r)) 0L
-    else fs.listStatus(r).iterator
-      .flatMap(s => SegmentStore.segOrdinal(s.getPath.getName))
-      .foldLeft(0L)(_ max _)
-  }
-
-  /** Fold every shard's segment list back to ONE segment — the
-    * read-amplification reset after append-mode updates: the masked
-    * live view re-persists wholesale, masks vanish. */
-  def compactLshSharded(spark: org.apache.spark.sql.SparkSession,
-                        root: String): Seq[Int] = {
-    val path = ArtifactStore.resolve(spark, root)
-    val n = ShardedCommit.numShards(spark, path)
-    val all = (0 until n).toSeq
-    val live = loadLshSharded(spark, path)
-    val pinned = all.map(sh =>
-      sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
-    commitLshShards(spark, path, pinned, lshSegCols(live, 0L),
-      emptyLshMask(spark, live), ShardedCommit.SegReplace, n)
-    all
-  }
-
-  /** REMOVE a doc set. A document's signature rows hash across the
-    * whole bucket grid (one bucket per band, bkey varying), so removal
-    * inherently touches EVERY shard — but each rewrites independently,
-    * bounded, in the one atomic pointer transaction (the
-    * [[graft.operators.Retrieval.removeFromBm25Sharded]] term-grid
-    * economics). Census re-derives per shard over the survivors; a
-    * SEGMENT-COMPACTING write. */
-  def removeFromLshSharded(spark: org.apache.spark.sql.SparkSession,
-                           root: String, removedIds: DataFrame,
-                           numHashes: Int, bands: Int): Seq[Int] = {
-    val path = ArtifactStore.resolve(spark, root)
-    val n = ShardedCommit.numShards(spark, path)
-    val all = (0 until n).toSeq
-    val live = loadLshSharded(spark, path)
-    val pinned = all.map(sh =>
-      sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
-    val remaining = live
-      .select(col("id"), col("ghash"), col("band"), col("bkey"))
-      .join(removedIds.select(col("id")).distinct(), Seq("id"), "left_anti")
-    val retiled =
-      if (numHashes / bands < 6)
-        remaining.withColumn("cell", lit(0)).withColumn("nc", lit(1))
-      else tileCensus(remaining, LshBucketCap)
-    commitLshShards(spark, path, pinned, lshSegCols(retiled, 0L),
-      emptyLshMask(spark, retiled), ShardedCommit.SegReplace, n)
-    all
-  }
-
-  /** Shared commit tail of the sharded-LSH writers: sig+mask co-swap
-    * per shard through [[ShardedCommit.commitSegmented]]. */
-  private def commitLshShards(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      pinned: Seq[(Int, (String, Option[String], String))],
-      sig: DataFrame, mask: DataFrame,
-      mode: ShardedCommit.SegMode, numShards: Int): Unit =
-    commitLshShardsPresharded(spark, path, pinned,
-      sig.withColumn("shard", lshShard(numShards)),
-      mask.withColumn("shard", lshShard(numShards)), mode)
-
-  private def commitLshShardsPresharded(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      pinned: Seq[(Int, (String, Option[String], String))],
-      sig: DataFrame, mask: DataFrame,
-      mode: ShardedCommit.SegMode): Unit = {
-    import ShardedCommit.{SegFamily, Surface}
-    ShardedCommit.commitSegmented(spark, path,
-      Seq(SegFamily(pinned, Seq(
-        Surface("sig", sig, () => sig.limit(0).drop("shard")),
-        Surface("mask", mask, () => mask.limit(0).drop("shard"))),
-        mode)))
   }
 
   /** [[incrementalLshPairs]] against an already-built (typically LOADED)
@@ -1270,8 +1087,17 @@ object Dedup {
     * [[graft.operators.Retrieval.updateBm25Index]]). */
   def updateCdcIndex(index: DataFrame, delta: DataFrame, idCol: String,
                      textCol: String, avgMask: Int): DataFrame =
-    index.unionByName(buildCdcIndex(delta, idCol, textCol, avgMask))
-      .groupBy(col("h"))
+    mergeRollups(index.unionByName(
+      buildCdcIndex(delta, idCol, textCol, avgMask)))
+
+  /** The rollup `(h, first_doc, n_occ)` of chunk occurrences `(doc_id, h)`. */
+  private def rollupOf(chunks: DataFrame): DataFrame =
+    chunks.groupBy(col("h"))
+      .agg(min(col("doc_id")).as("first_doc"), count(lit(1)).as("n_occ"))
+
+  /** Merge partial rollups of disjoint doc sets: min first_doc, sum n_occ. */
+  private def mergeRollups(rollups: DataFrame): DataFrame =
+    rollups.groupBy(col("h"))
       .agg(min(col("first_doc")).as("first_doc"),
         sum(col("n_occ")).as("n_occ"))
 
@@ -1294,15 +1120,8 @@ object Dedup {
     val deltaChunks = OperatorCaches.register(
       cdcChunks(delta, idCol, textCol, avgMask)
         .select(col("id").as("doc_id"), col("h")).persist())
-    CdcArtifact(
-      idx.chunks.unionByName(deltaChunks),
-      idx.rollup.unionByName(
-          deltaChunks.groupBy(col("h"))
-            .agg(min(col("doc_id")).as("first_doc"),
-              count(lit(1)).as("n_occ")))
-        .groupBy(col("h"))
-        .agg(min(col("first_doc")).as("first_doc"),
-          sum(col("n_occ")).as("n_occ")))
+    CdcArtifact(idx.chunks.unionByName(deltaChunks),
+      mergeRollups(idx.rollup.unionByName(rollupOf(deltaChunks))))
   }
 
   /** REMOVE a doc set from a [[CdcArtifact]] — the right-to-be-forgotten
@@ -1319,9 +1138,7 @@ object Dedup {
       "rebuild with index-build --type=cdc on the remaining corpus")
     val ids = removedIds.select(col("doc_id")).distinct()
     val chunks = idx.chunks.join(ids, Seq("doc_id"), "left_anti")
-    CdcArtifact(chunks,
-      chunks.groupBy(col("h"))
-        .agg(min(col("doc_id")).as("first_doc"), count(lit(1)).as("n_occ")))
+    CdcArtifact(chunks, rollupOf(chunks))
   }
 
   /** The two-surface persisted CDC artifact (the CLI `--type=cdc`
@@ -1336,9 +1153,7 @@ object Dedup {
                        avgMask: Int): CdcArtifact = {
     val chunks = cdcChunks(docs, idCol, textCol, avgMask)
       .select(col("id").as("doc_id"), col("h"))
-    CdcArtifact(chunks,
-      chunks.groupBy(col("h"))
-        .agg(min(col("doc_id")).as("first_doc"), count(lit(1)).as("n_occ")))
+    CdcArtifact(chunks, rollupOf(chunks))
   }
 
   /** Persist both surfaces. The rollup derives from the chunks subtree,
@@ -1377,205 +1192,57 @@ object Dedup {
     }
   }
 
-  // ─────────────────────── sharded CDC artifact ───────────────────────
-  //
-  // Same rewrite-unit economics as the sharded LSH/BM25 layouts, on the
-  // chunk tier: both surfaces shard by CHUNK HASH into independent
-  // generational roots —
-  //
-  //   <gen>/_num_shards                 the grid size
-  //   <gen>/shards/<s>/_seg_*/chunks/   (doc_id, h) occurrence rows
-  //   <gen>/shards/<s>/_seg_*/rollup/   (h, first_doc, n_occ)
-  //
-  // inside the artifact generation `<gen>`; each shard root names its
-  // live segments through its own generation pointer.
-  //
-  // chunks and rollup ride the SAME h-shard and swap together inside
-  // one generation (the cells+codes co-swap lesson: a chunk occurrence
-  // whose rollup row is in another generation would silently desync the
-  // serve join from the removal surface). `h` determines the shard, so
-  // per-shard rollup merges equal the global groupBy-h merge, and
-  // readers load each surface as ONE multi-path scan.
+  /** The segmented CDC tier ([[graft.sinks.SegmentedIndex]]): chunks and
+    * rollup shard by CHUNK HASH and swap together per shard segment (a
+    * chunk occurrence whose rollup row sits in another generation would
+    * silently desync the serve join from the removal surface). `h`
+    * determines the shard, so per-shard rollup merges equal the global
+    * groupBy-h merge; append-mode rollup segments are per-delta partials
+    * the live view min/sum-merges. */
+  object CdcSharded extends SegmentedIndex.Tier[CdcArtifact] {
+    import SegmentedIndex.{Family, Surface, Write}
 
-  private def cdcShard(s: Int): Column =
-    pmod(xxhash64(col("h")), lit(s.toLong)).cast("int")
+    val families: Seq[Family] = Seq(Family("shards",
+      n => pmod(xxhash64(col("h")), lit(n.toLong)).cast("int"),
+      Seq(Surface("chunks", Seq("doc_id", "h")),
+        Surface("rollup", Seq("h", "first_doc", "n_occ")))))
+    val ids: (String, String) = ("chunks", "doc_id")
 
-  def saveCdcSharded(idx: CdcArtifact, path: String, numShards: Int): Unit = {
-    require(!idx.legacy, "legacy rollup-only cdc artifact: rebuild with " +
-      "index-build --type=cdc-sharded before sharding")
-    val spark = idx.rollup.sparkSession
-    val chunks = idx.chunks.select(col("doc_id"), col("h"))
-      .withColumn("shard", cdcShard(numShards))
-    val rollup = idx.rollup.select(col("h"), col("first_doc"), col("n_occ"))
-      .withColumn("shard", cdcShard(numShards))
-    ArtifactStore.publish(spark, path) { dir =>
-      ShardedCommit.writeNumShards(spark, dir, numShards)
-      commitCdcShards(spark, dir,
-        (0 until numShards).map(sh =>
-          sh -> ArtifactStore.pinGen(spark, s"$dir/shards/$sh")),
-        chunks, rollup, ShardedCommit.SegReplace)
+    override def live(s: SegmentedIndex.Scan, surface: String): DataFrame =
+      if (surface == "rollup" && s.layered(surface)) mergeRollups(s(surface))
+      else s(surface)
+
+    def surfacesOf(idx: CdcArtifact): Map[String, DataFrame] = {
+      require(!idx.legacy, "legacy rollup-only cdc artifact: rebuild with " +
+        "index-build --type=cdc-sharded before sharding")
+      Map("chunks" -> idx.chunks, "rollup" -> idx.rollup)
     }
-  }
 
-  /** Load as a regular [[CdcArtifact]] — one multi-path scan per
-    * surface over every live SEGMENT, so every serve/screen path is
-    * shared with the unsharded artifact. Rollup segments written by
-    * append-mode updates are PARTIALS (per-delta min/count); when any
-    * shard holds more than one segment the load min/sum-merges per
-    * chunk hash — after `index-compact` the plan collapses back to the
-    * plain scan. */
-  def loadCdcSharded(spark: org.apache.spark.sql.SparkSession,
-                     root: String): CdcArtifact = {
-    val path = ArtifactStore.resolve(spark, root)
-    val n = ShardedCommit.numShards(spark, path)
-    val resolved = (0 until n).map { sh =>
-      val shardRoot = s"$path/shards/$sh"
-      (shardRoot, ArtifactStore.resolve(spark, shardRoot))
+    def artifact(spark: org.apache.spark.sql.SparkSession, dir: String,
+                 view: String => DataFrame): CdcArtifact =
+      CdcArtifact(view("chunks"), view("rollup"))
+
+    /** Fold a DELTA batch `(doc_id, text)` in ([[updateCdcArtifact]]'s
+      * exactness and NEW-doc_ids contract): occurrence rows as-is, the
+      * rollup as per-delta partials. */
+    def delta(docs: DataFrame, avgMask: Int): SegmentedIndex.Fold = fold { _ =>
+      val chunks = OperatorCaches.register(
+        cdcChunks(docs, "doc_id", "text", avgMask)
+          .select(col("id").as("doc_id"), col("h")).persist())
+      Write(Map("shards" -> chunks),
+        _ => Map("chunks" -> chunks, "rollup" -> rollupOf(chunks)))
     }
-    val rollPaths = resolved.map { case (shardRoot, gen) =>
-      SegmentStore.surfacePathsAt(spark, shardRoot, gen, "rollup") }
-    val rollRaw = ArtifactStore.readSurface(spark, rollPaths.flatten: _*)
-      .select(col("h"), col("first_doc"), col("n_occ"))
-    CdcArtifact(
-      ArtifactStore.readSurface(spark, resolved.flatMap {
-        case (shardRoot, gen) =>
-          SegmentStore.surfacePathsAt(spark, shardRoot, gen, "chunks") }: _*)
-        .select(col("doc_id"), col("h")),
-      if (rollPaths.forall(_.size <= 1)) rollRaw
-      else rollRaw.groupBy(col("h"))
-        .agg(min(col("first_doc")).as("first_doc"),
-          sum(col("n_occ")).as("n_occ")))
-  }
 
-  /** Fold a DELTA batch's chunks in. Default (`append = true`): each
-    * touched shard gains one DELTA-SIZED segment — occurrence rows
-    * as-is, rollup as per-delta partials the load min/sum-merges — so
-    * the write volume is O(delta) even though chunk hashes spray
-    * across the whole grid (the x25 measurement: the merge-mode
-    * sharded update touched 8/8 shards and re-persisted every one).
-    * `append = false` is the merge — the compacting write.
-    * Exactness as [[updateCdcArtifact]] either way: a chunk hash's
-    * rollup rows live only in its own shard, so per-shard merges and
-    * the serve-time partial-merge both equal the global groupBy. Same
-    * NEW-doc_ids contract. Returns touched shards. */
-  def updateCdcSharded(spark: org.apache.spark.sql.SparkSession,
-                       root: String, delta: DataFrame, idCol: String,
-                       textCol: String, avgMask: Int,
-                       append: Boolean = true): Seq[Int] = {
-    val path = ArtifactStore.resolve(spark, root)
-    val n = ShardedCommit.numShards(spark, path)
-    val deltaChunks = OperatorCaches.register(
-      cdcChunks(delta, idCol, textCol, avgMask)
-        .select(col("id").as("doc_id"), col("h"))
-        .withColumn("shard", cdcShard(n)).persist())
-    val touched = deltaChunks.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (touched.isEmpty) return touched
-    val pinned = touched.map(sh =>
-      sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
-    val deltaRollup = deltaChunks.groupBy(col("shard"), col("h"))
-      .agg(min(col("doc_id")).as("first_doc"), count(lit(1)).as("n_occ"))
-    if (append) {
-      commitCdcShards(spark, path, pinned, deltaChunks,
-        deltaRollup, ShardedCommit.SegAppend)
-      return touched
+    /** REMOVE a doc set: its chunks hash across the whole grid, so every
+      * shard's rollup re-derives from its surviving occurrences. */
+    def removal(removedIds: DataFrame): SegmentedIndex.Fold = fold { _ =>
+      Write(Map.empty, s => {
+        val kept = s.live("chunks").join(
+          removedIds.select(col("doc_id")).distinct(), Seq("doc_id"),
+          "left_anti")
+        Map("chunks" -> kept, "rollup" -> rollupOf(kept))
+      })
     }
-    val existChunks = ArtifactStore.readSurface(spark,
-        pinned.flatMap { case (sh, (_, _, gen)) =>
-          SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
-            "chunks") }: _*)
-      .select(col("doc_id"), col("h"))
-    val existRollup = ArtifactStore.readSurface(spark,
-        pinned.flatMap { case (sh, (_, _, gen)) =>
-          SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
-            "rollup") }: _*)
-      .select(col("h"), col("first_doc"), col("n_occ"))
-    val newChunks = existChunks
-      .unionByName(deltaChunks.select(col("doc_id"), col("h")))
-    val newRollup = existRollup
-      .unionByName(deltaRollup.drop("shard"))
-      .groupBy(col("h"))
-      .agg(min(col("first_doc")).as("first_doc"),
-        sum(col("n_occ")).as("n_occ"))
-    commitCdcShards(spark, path, pinned,
-      newChunks.withColumn("shard", cdcShard(n)),
-      newRollup.withColumn("shard", cdcShard(n)),
-      ShardedCommit.SegReplace)
-    touched
-  }
-
-  /** Fold every shard's segment list back to ONE segment — the
-    * read-amplification reset after append-mode updates (occurrences
-    * re-persist as-is, rollup min/sum-merges its partials). */
-  def compactCdcSharded(spark: org.apache.spark.sql.SparkSession,
-                        root: String): Seq[Int] = {
-    val path = ArtifactStore.resolve(spark, root)
-    val n = ShardedCommit.numShards(spark, path)
-    val all = (0 until n).toSeq
-    val pinned = all.map(sh =>
-      sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
-    val chunks = ArtifactStore.readSurface(spark,
-        pinned.flatMap { case (sh, (_, _, gen)) =>
-          SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
-            "chunks") }: _*)
-      .select(col("doc_id"), col("h"))
-    val rollup = ArtifactStore.readSurface(spark,
-        pinned.flatMap { case (sh, (_, _, gen)) =>
-          SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
-            "rollup") }: _*)
-      .select(col("h"), col("first_doc"), col("n_occ"))
-      .groupBy(col("h"))
-      .agg(min(col("first_doc")).as("first_doc"),
-        sum(col("n_occ")).as("n_occ"))
-    commitCdcShards(spark, path, pinned,
-      chunks.withColumn("shard", cdcShard(n)),
-      rollup.withColumn("shard", cdcShard(n)),
-      ShardedCommit.SegReplace)
-    all
-  }
-
-  /** REMOVE a doc set. A document's chunks hash across the whole shard
-    * grid, so removal touches every shard (the sharded-LSH/BM25 remove
-    * economics); each shard's rollup re-derives from its surviving
-    * occurrences, all flipping in one pointer transaction — a
-    * SEGMENT-COMPACTING write. */
-  def removeFromCdcSharded(spark: org.apache.spark.sql.SparkSession,
-                           root: String, removedIds: DataFrame): Seq[Int] = {
-    val path = ArtifactStore.resolve(spark, root)
-    val n = ShardedCommit.numShards(spark, path)
-    val all = (0 until n).toSeq
-    val pinned = all.map(sh =>
-      sh -> ArtifactStore.pinGen(spark, s"$path/shards/$sh"))
-    val kept = ArtifactStore.readSurface(spark,
-        pinned.flatMap { case (sh, (_, _, gen)) =>
-          SegmentStore.surfacePathsAt(spark, s"$path/shards/$sh", gen,
-            "chunks") }: _*)
-      .select(col("doc_id"), col("h"))
-      .join(removedIds.select(col("doc_id")).distinct(), Seq("doc_id"),
-        "left_anti")
-    val rollup = kept.groupBy(col("h"))
-      .agg(min(col("doc_id")).as("first_doc"), count(lit(1)).as("n_occ"))
-    commitCdcShards(spark, path, pinned,
-      kept.withColumn("shard", cdcShard(n)),
-      rollup.withColumn("shard", cdcShard(n)),
-      ShardedCommit.SegReplace)
-    all
-  }
-
-  /** Shared commit tail of the sharded-CDC writers: chunks+rollup
-    * co-swap per shard ([[ShardedCommit.commitSegmented]] —
-    * full writes as `SegReplace`, delta appends as `SegAppend`). */
-  private def commitCdcShards(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      pinned: Seq[(Int, (String, Option[String], String))],
-      chunks: DataFrame, rollup: DataFrame,
-      mode: ShardedCommit.SegMode): Unit = {
-    import ShardedCommit.{SegFamily, Surface}
-    ShardedCommit.commitSegmented(spark, path,
-      Seq(SegFamily(pinned, Seq(
-        Surface("chunks", chunks, () => chunks.limit(0).drop("shard")),
-        Surface("rollup", rollup, () => rollup.limit(0).drop("shard"))),
-        mode)))
   }
 
   /** Chunk-level screen of a DELTA batch against a built/loaded chunk

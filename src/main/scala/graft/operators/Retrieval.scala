@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sinks.{ArtifactStore, SegmentStore, ShardedCommit}
+import graft.sinks.{ArtifactStore, SegmentedIndex}
 
 /** A built BM25 inverted index as its four relational artifacts — all
   * integer-typed, so a parquet roundtrip is bit-lossless:
@@ -142,282 +142,91 @@ object Retrieval {
           sum(col("total_len")).as("total_len")))
   }
 
-  // ────────────────────── sharded BM25 artifact ──────────────────────
-  //
-  // The rewrite-unit fix for the lexical tier: [[updateBm25Index]] is
-  // exact but re-persists the unioned postings and re-aggregated docfreq
-  // WHOLESALE — at 100 TB a daily crawl would rewrite the entire lexical
-  // index. Here the corpus-sized surfaces shard into independent
-  // generational roots and a delta commits only the shards it routes to:
-  //
-  //   <gen>/_num_shards                 the grid size
-  //   <gen>/shards/<s>/_seg_*/postings/ term-hash shards: postings + the
-  //   <gen>/shards/<s>/_seg_*/docfreq/    vocabulary rollup for ITS terms
-  //   <gen>/docshards/<s>/_seg_*/doclen/ doc-id shards: per-doc lengths
-  //   <gen>/stats/_gen_*/               the 1-row corpus rollup (O(1)
-  //                                       rewrite per update by design)
-  //
-  // all inside the artifact generation `<gen>`; each shard root names
-  // its live segments through its own generation pointer.
-  //
-  // postings and docfreq ride the SAME term shard and swap inside one
-  // generation — they must stay term-consistent (a posting whose term
-  // has no df row silently drops from every idf computation). All
-  // touched roots commit in ONE all-or-nothing pointer transaction
-  // (ArtifactStore.commitGenAll under the artifact-base claim).
+  /** The segmented BM25 tier ([[graft.sinks.SegmentedIndex]]): the
+    * corpus-sized surfaces shard so a delta commits only the shards it
+    * routes to. postings and docfreq ride the SAME term-hash shard — they
+    * must stay term-consistent (a posting whose term has no df row
+    * silently drops from every idf computation); doclen shards by doc
+    * id; the 1-row stats is a singleton. Append-mode docfreq segments
+    * are PARTIAL per-term counts, summed by the live view; a term's df
+    * rows live only in its own shard, so per-shard merges equal the
+    * global one. */
+  object Bm25Sharded extends SegmentedIndex.Tier[Bm25Index] {
+    import SegmentedIndex.{Family, Surface, Write}
 
-  private def termShard(s: Int): org.apache.spark.sql.Column =
-    pmod(xxhash64(col("term")), lit(s.toLong)).cast("int")
-  private def docShard(s: Int): org.apache.spark.sql.Column =
-    pmod(col("doc_id"), lit(s.toLong)).cast("int")
+    val families: Seq[Family] = Seq(
+      Family("shards",
+        n => pmod(xxhash64(col("term")), lit(n.toLong)).cast("int"), Seq(
+          Surface("postings", Seq("term", "doc_id", "tf")),
+          // wave 1: docfreq derives from the postings' persisted lineage
+          // — staging it after the postings wave lets it substitute the
+          // freshly materialized cache
+          Surface("docfreq", Seq("term", "df"), wave = 1))),
+      Family("docshards", n => pmod(col("doc_id"), lit(n.toLong)).cast("int"),
+        Seq(Surface("doclen", Seq("doc_id", "dl")))))
+    override val singletons: Seq[Surface] =
+      Seq(Surface("stats", Seq("n_docs", "total_len")))
+    val ids: (String, String) = ("doclen", "doc_id")
 
-  def saveBm25Sharded(index: Bm25Index, path: String,
-                      numShards: Int): Unit = {
-    val spark = index.postings.sparkSession
-    // persist the two corpus-derived bases: postings' staging job
-    // materializes the tf cache which the (wave-1) docfreq staging and
-    // the stats rollup then substitute instead of re-running the
-    // tokenize+aggregate corpus scan (saveBm25Index's wave economics,
-    // now on the sharded path too)
-    OperatorCaches.register(index.postings.persist())
-    OperatorCaches.register(index.doclen.persist())
-    ArtifactStore.publish(spark, path) { dir =>
-      ShardedCommit.writeNumShards(spark, dir, numShards)
-      commitBm25Shards(spark, dir,
-        pinAll(spark, dir, "shards", 0 until numShards),
-        index.postings.select(col("term"), col("doc_id"), col("tf"))
-          .withColumn("shard", termShard(numShards)),
-        index.docfreq.select(col("term"), col("df"))
-          .withColumn("shard", termShard(numShards)),
-        pinAll(spark, dir, "docshards", 0 until numShards),
-        index.doclen.select(col("doc_id"), col("dl"))
-          .withColumn("shard", docShard(numShards)),
-        Some((index.stats.select(col("n_docs"), col("total_len")),
-          ArtifactStore.pinGen(spark, s"$dir/stats"))),
-        ShardedCommit.SegReplace)
+    override def live(s: SegmentedIndex.Scan, surface: String): DataFrame =
+      if (surface == "docfreq" && s.layered(surface))
+        s(surface).groupBy(col("term")).agg(sum(col("df")).as("df"))
+      else s(surface)
+
+    /** Persists the two corpus-derived bases: the postings/doclen
+      * stagings materialize the caches the docfreq and stats rollups
+      * then substitute instead of re-running the corpus scan
+      * ([[saveBm25Index]]'s wave economics). */
+    def surfacesOf(index: Bm25Index): Map[String, DataFrame] = Map(
+      "postings" -> OperatorCaches.register(index.postings.persist()),
+      "doclen" -> OperatorCaches.register(index.doclen.persist()),
+      "docfreq" -> index.docfreq, "stats" -> index.stats)
+
+    def artifact(spark: SparkSession, dir: String,
+                 view: String => DataFrame): Bm25Index =
+      Bm25Index(view("postings"), view("doclen"), view("docfreq"),
+        view("stats"))
+
+    /** Fold a DELTA batch in ([[updateBm25Index]]'s exactness and
+      * NEW-doc_ids contract): postings/doclen rows as-is, docfreq as
+      * per-delta partials, stats re-added. */
+    def delta(deltaTerms: DataFrame): SegmentedIndex.Fold = fold { _ =>
+      val d = buildBm25Index(deltaTerms)
+      // persist the BASE surfaces: d.docfreq and d.stats derive from the
+      // same tf/doclen subtrees, so cache substitution covers every
+      // consumer, including the wave-1 docfreq staging
+      OperatorCaches.register(d.postings.persist())
+      OperatorCaches.register(d.doclen.persist())
+      Write(Map("shards" -> d.postings, "docshards" -> d.doclen), s => Map(
+        "postings" -> d.postings, "docfreq" -> d.docfreq,
+        "doclen" -> d.doclen,
+        "stats" -> s("stats").unionByName(d.stats)
+          .agg(sum(col("n_docs")).as("n_docs"),
+            sum(col("total_len")).as("total_len"))), Seq("stats"))
     }
-  }
 
-  /** Each pinned shard root with its live segment names — one manifest
-    * read per root, shared by every surface the caller scans. */
-  private def liveSegs(spark: SparkSession,
-                       pinned: Seq[(Int, ShardedCommit.Pin)])
-      : Seq[(String, Seq[String])] =
-    pinned.map { case (_, (root, _, gen)) =>
-      root -> SegmentStore.segmentsAt(spark, gen) }
-
-  /** One surface of a shard family as ONE multi-path scan over every
-    * root's live segments, its columns in `cols`' order — never an
-    * S-way union of single scans (the union's per-branch planning
-    * overhead is the cost sharding must not add). */
-  private def scanShards(spark: SparkSession,
-                         segs: Seq[(String, Seq[String])], surface: String,
-                         cols: String*): DataFrame =
-    ArtifactStore.readSurface(spark, segs.flatMap { case (root, ss) =>
-      ss.map(s => s"$root/$s/$surface") }: _*).select(cols.map(col): _*)
-
-  /** [[scanShards]] with each row's shard id, recomputed with the
-    * routing hash the rows were written under ([[termShard]] /
-    * [[docShard]]): every writer stages a row into shard `s` only when
-    * its hash mod S is `s`, so this equals the shard it was read from. */
-  private def scanRouted(spark: SparkSession,
-                         segs: Seq[(String, Seq[String])], surface: String,
-                         shard: org.apache.spark.sql.Column,
-                         cols: String*): DataFrame =
-    scanShards(spark, segs, surface, cols: _*).withColumn("shard", shard)
-
-  private def pinAll(spark: SparkSession, path: String, family: String,
-                     shards: Seq[Int]): Seq[(Int, ShardedCommit.Pin)] =
-    shards.map(sh => sh -> ArtifactStore.pinGen(spark, s"$path/$family/$sh"))
-
-  /** Load the sharded artifact as a regular [[Bm25Index]]: every
-    * surface is partition-column-free, so each loads as ONE multi-path
-    * scan over its per-shard live SEGMENTS ([[scanShards]]; the path
-    * list grows with append-mode segments until `index-compact`).
-    * docfreq segments written by append-mode updates are PARTIAL df
-    * counts; when any shard holds more than one segment the load
-    * sum-merges them per term — after compaction the plan collapses
-    * back to the plain scan. */
-  def loadBm25Sharded(spark: SparkSession, root: String): Bm25Index = {
-    val path = ArtifactStore.resolve(spark, root)
-    val all = 0 until ShardedCommit.numShards(spark, path)
-    val tSegs = liveSegs(spark, pinAll(spark, path, "shards", all))
-    val dfRaw = scanShards(spark, tSegs, "docfreq", "term", "df")
-    Bm25Index(
-      scanShards(spark, tSegs, "postings", "term", "doc_id", "tf"),
-      scanShards(spark, liveSegs(spark, pinAll(spark, path, "docshards", all)),
-        "doclen", "doc_id", "dl"),
-      if (tSegs.forall(_._2.size <= 1)) dfRaw
-      else dfRaw.groupBy(col("term")).agg(sum(col("df")).as("df")),
-      ArtifactStore.readSurface(spark,
-        ArtifactStore.resolve(spark, s"$path/stats")))
-  }
-
-  /** Fold a DELTA batch in. Default (`append = true`, the 100 TB
-    * posture): each touched shard gains one DELTA-SIZED segment —
-    * postings/doclen rows as-is, docfreq as PARTIAL per-term counts the
-    * load sum-merges — so the write volume is O(delta) even though a
-    * crawl batch's term hashes spray across the whole grid (the x25
-    * measurement that motivated segments: the merge-mode sharded
-    * update re-persisted every touched shard's surface and ran SLOWER
-    * than unsharded). `append = false` is the merge: per touched
-    * shard, postings union + docfreq sum-merge, re-persisted wholesale —
-    * the SEGMENT-COMPACTING write. Same exactness either way: a term's
-    * df rows live only in its own shard, so per-shard merges equal the
-    * global one and the serve-time sum over partials equals the merged
-    * count.
-    * Returns the touched TERM shard ids. */
-  def updateBm25Sharded(spark: SparkSession, root: String,
-                        deltaTerms: DataFrame,
-                        append: Boolean = true): Seq[Int] = {
-    val path = ArtifactStore.resolve(spark, root)
-    val n = ShardedCommit.numShards(spark, path)
-    val d = buildBm25Index(deltaTerms)
-    // persist the BASE surfaces (not the shard-annotated projections):
-    // d.docfreq and d.stats derive from the same tf/doclen subtrees, so
-    // cache substitution covers every consumer below, including the
-    // wave-1 docfreq staging
-    OperatorCaches.register(d.postings.persist())
-    OperatorCaches.register(d.doclen.persist())
-    val dPost = d.postings.withColumn("shard", termShard(n))
-    val dLen = d.doclen.withColumn("shard", docShard(n))
-    val tTouched = dPost.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    val dTouched = dLen.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (tTouched.isEmpty && dTouched.isEmpty) return tTouched
-    val tPinned = pinAll(spark, path, "shards", tTouched)
-    val dPinned = pinAll(spark, path, "docshards", dTouched)
-    val sPin = ArtifactStore.pinGen(spark, s"$path/stats")
-    val newStats = ArtifactStore.readSurface(spark, sPin._3)
-      .select(col("n_docs"), col("total_len")).unionByName(d.stats)
-      .agg(sum(col("n_docs")).as("n_docs"),
-        sum(col("total_len")).as("total_len"))
-    val dDf = d.docfreq.withColumn("shard", termShard(n))
-    if (append) {
-      commitBm25Shards(spark, path, tPinned, dPost, dDf, dPinned, dLen,
-        Some((newStats, sPin)), ShardedCommit.SegAppend)
-      return tTouched
+    /** REMOVE a doc set. A document's terms hash across the whole term
+      * grid, so removal touches EVERY term shard but only the doc shards
+      * its ids route to; docfreq re-derives from the surviving postings
+      * and stats decrements by the removed docs' doclen rollup. */
+    def removal(removedIds: DataFrame): SegmentedIndex.Fold = fold { _ =>
+      val ids = OperatorCaches.register(removedIds
+        .select(col("doc_id")).distinct().persist())
+      Write(Map("docshards" -> ids), s => {
+        val kept = OperatorCaches.register(s.live("postings")
+          .join(ids, Seq("doc_id"), "left_anti").persist())
+        val touchedLen = s.live("doclen")
+        val removed = touchedLen.join(ids, Seq("doc_id"), "left_semi")
+          .agg(coalesce(count(lit(1)), lit(0L)).as("rm_docs"),
+            coalesce(sum(col("dl")), lit(0L)).as("rm_len"))
+        Map("postings" -> kept,
+          "docfreq" -> kept.groupBy(col("term")).agg(count(lit(1)).as("df")),
+          "doclen" -> touchedLen.join(ids, Seq("doc_id"), "left_anti"),
+          "stats" -> s("stats").crossJoin(removed)
+            .select((col("n_docs") - col("rm_docs")).as("n_docs"),
+              (col("total_len") - col("rm_len")).as("total_len")))
+      }, Seq("stats"))
     }
-    val tSegs = liveSegs(spark, tPinned)
-    val dSegs = liveSegs(spark, dPinned)
-    commitBm25Shards(spark, path, tPinned,
-      scanRouted(spark, tSegs, "postings", termShard(n),
-          "term", "doc_id", "tf")
-        .unionByName(dPost),
-      scanRouted(spark, tSegs, "docfreq", termShard(n), "term", "df")
-        .unionByName(dDf)
-        .groupBy(col("shard"), col("term")).agg(sum(col("df")).as("df")),
-      dPinned,
-      scanRouted(spark, dSegs, "doclen", docShard(n), "doc_id", "dl")
-        .unionByName(dLen),
-      Some((newStats, sPin)),
-      ShardedCommit.SegReplace)
-    tTouched
-  }
-
-  /** Fold every shard's segment list back to ONE segment per root —
-    * the read-amplification reset after a run of append-mode updates
-    * (postings/doclen re-persist as-is, docfreq sum-merges its
-    * partials; results are hash-identical by the same argument as the
-    * merge update). One scan per surface over every shard's segments.
-    * Returns (termShards, docShards) compacted. */
-  def compactBm25Sharded(spark: SparkSession, root: String)
-      : (Seq[Int], Seq[Int]) = {
-    val path = ArtifactStore.resolve(spark, root)
-    val n = ShardedCommit.numShards(spark, path)
-    val all = (0 until n).toSeq
-    val tPinned = pinAll(spark, path, "shards", all)
-    val dPinned = pinAll(spark, path, "docshards", all)
-    val tSegs = liveSegs(spark, tPinned)
-    commitBm25Shards(spark, path, tPinned,
-      scanRouted(spark, tSegs, "postings", termShard(n),
-        "term", "doc_id", "tf"),
-      scanRouted(spark, tSegs, "docfreq", termShard(n), "term", "df")
-        .groupBy(col("shard"), col("term")).agg(sum(col("df")).as("df")),
-      dPinned,
-      scanRouted(spark, liveSegs(spark, dPinned), "doclen",
-        docShard(n), "doc_id", "dl"),
-      None, ShardedCommit.SegReplace)
-    (all, all)
-  }
-
-  /** REMOVE a doc set. A document's terms hash across the whole term
-    * grid, so removal inherently touches EVERY term shard (the per-doc
-    * surfaces are the doc shards its ids route to) — but each shard
-    * still rewrites independently, bounded, and in the one atomic
-    * pointer transaction. docfreq re-derives per shard from its
-    * surviving postings; stats decrements by the removed docs' doclen
-    * rollup. Returns the touched DOC shard ids. */
-  def removeFromBm25Sharded(spark: SparkSession, root: String,
-                            removedIds: DataFrame): Seq[Int] = {
-    val path = ArtifactStore.resolve(spark, root)
-    val n = ShardedCommit.numShards(spark, path)
-    val ids = OperatorCaches.register(removedIds
-      .select(col("doc_id")).distinct().persist())
-    val dTouched = ids.withColumn("shard", docShard(n))
-      .select(col("shard")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (dTouched.isEmpty) return dTouched
-    val tAll = (0 until n).toSeq
-    val tPinned = pinAll(spark, path, "shards", tAll)
-    val dPinned = pinAll(spark, path, "docshards", dTouched)
-    val sPin = ArtifactStore.pinGen(spark, s"$path/stats")
-    val keptPost = OperatorCaches.register(
-      scanRouted(spark, liveSegs(spark, tPinned), "postings",
-          termShard(n), "term", "doc_id", "tf")
-        .join(ids, Seq("doc_id"), "left_anti").persist())
-    val touchedLen = scanRouted(spark, liveSegs(spark, dPinned),
-      "doclen", docShard(n), "doc_id", "dl")
-    val removedAgg = touchedLen.join(ids, Seq("doc_id"), "left_semi")
-      .agg(coalesce(count(lit(1)), lit(0L)).as("rm_docs"),
-        coalesce(sum(col("dl")), lit(0L)).as("rm_len"))
-    val newStats = ArtifactStore.readSurface(spark, sPin._3)
-      .select(col("n_docs"), col("total_len")).crossJoin(removedAgg)
-      .select((col("n_docs") - col("rm_docs")).as("n_docs"),
-        (col("total_len") - col("rm_len")).as("total_len"))
-    commitBm25Shards(spark, path, tPinned,
-      keptPost,
-      keptPost.groupBy(col("shard"), col("term"))
-        .agg(count(lit(1)).as("df")),
-      dPinned,
-      touchedLen.join(ids, Seq("doc_id"), "left_anti"),
-      Some((newStats, sPin)),
-      ShardedCommit.SegReplace)
-    dTouched
-  }
-
-  /** Shared staging/commit tail of the sharded-BM25 writers — the
-    * [[graft.sinks.ShardedCommit]] choreography (extracted there when
-    * the LSH/CDC/SemDeDup tiers adopted the layout): postings+docfreq
-    * swap together per term shard, doclen per doc shard, the 1-row
-    * stats as a singleton root, one all-or-nothing pointer commit.
-    * Full writes (build/remove/compact, `SegReplace`) and delta writes
-    * (append-mode update, `SegAppend`) both land as immutable segments
-    * through [[ShardedCommit.commitSegmented]]. */
-  private def commitBm25Shards(
-      spark: SparkSession, path: String,
-      termShards: Seq[(Int, ShardedCommit.Pin)],
-      postings: DataFrame, docfreq: DataFrame,
-      docShards: Seq[(Int, ShardedCommit.Pin)],
-      doclen: DataFrame,
-      stats: Option[(DataFrame, ShardedCommit.Pin)],
-      mode: ShardedCommit.SegMode): Unit = {
-    import ShardedCommit.{SegFamily, Surface}
-    ShardedCommit.commitSegmented(spark, path,
-      Seq(
-        SegFamily(termShards, Seq(
-          Surface("postings", postings, () => postings.limit(0).drop("shard")),
-          // wave 1: docfreq usually derives from the postings frame's
-          // persisted lineage — staging it after the postings wave lets
-          // it substitute the freshly materialized cache
-          Surface("docfreq", docfreq, () => docfreq.limit(0).drop("shard"),
-            wave = 1)),
-          mode),
-        SegFamily(docShards, Seq(
-          Surface("doclen", doclen, () => doclen.limit(0).drop("shard"))),
-          mode)),
-      stats.toSeq)
   }
 
   /** Rank the whole corpus for each query in `queryTerms` (q_id, term) —

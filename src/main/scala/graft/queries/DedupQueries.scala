@@ -7,6 +7,7 @@ import graft.Tables
 import graft.functions.TextFunctions._
 import graft.operators.Dedup
 import graft.operators.Dedup._
+import graft.sinks.SegmentedIndex
 
 /** Dedup operators as oracle-checked queries over `documents`.
   *
@@ -1014,7 +1015,7 @@ object DedupQueries {
   // surface splits by (band, bkey) hash into independent generational
   // roots, so the week-1 fold rewrites ONLY the shards its buckets
   // route to (one all-or-nothing multi-root pointer commit;
-  // Dedup.updateLshSharded) instead of re-persisting the whole index —
+  // Dedup.LshSharded.delta) instead of re-persisting the whole index —
   // q155's lifecycle on the sharded layout. Signature row set equals
   // the unsharded artifact's, so the week-2 screen reproduces q155
   // exactly: the oracle IS q155's SQL. CLI:
@@ -1026,17 +1027,17 @@ object DedupQueries {
       columnOf(graft.plans.WordShingleHashes(
         expressionOf($"text"), ShingleN, 7)).as("ghash"))
     val path = QueryTmp.dir("lshsharded", d)
-    Dedup.saveLshSharded(
+    SegmentedIndex.save(s, Dedup.LshSharded,
       Dedup.bandedSignaturesTiled(
         hashed.filter(!$"source".isin(DeltaSources: _*)).drop("source"),
         lshK(s, d), MinHashBands),
-      path, numShards = 4)
-    Dedup.updateLshSharded(s, path,
+      path, 4)
+    SegmentedIndex.update(s, path, Dedup.LshSharded.delta(
       hashed.filter($"source" === DeltaSources.head).drop("source"),
-      lshK(s, d), MinHashBands)
+      lshK(s, d), MinHashBands))
     Dedup.incrementalLshPairsIndexed(
         hashed.filter($"source" === DeltaSources(1)).drop("source"),
-        Dedup.loadLshSharded(s, path),
+        SegmentedIndex.load(s, Dedup.LshSharded, path),
         lshK(s, d), MinHashBands, JaccardThreshold)
       .orderBy($"new_doc", $"dup_of")
   }
@@ -1050,7 +1051,7 @@ object DedupQueries {
   // touched buckets plus a mask naming them — every row carries a
   // per-root write ordinal, a row is live iff no later mask names its
   // bucket, so the load is one multi-path scan + one broadcast
-  // anti-join against the delta-scaled masks. compactLshSharded then
+  // anti-join against the delta-scaled masks. The compaction then
   // folds the masked live view back to one segment per root. The
   // week-2 screen after BOTH steps reproduces q155 exactly: the oracle
   // IS q155's SQL. CLI: index-update --mode=append + index-compact
@@ -1062,18 +1063,18 @@ object DedupQueries {
       columnOf(graft.plans.WordShingleHashes(
         expressionOf($"text"), ShingleN, 7)).as("ghash"))
     val path = QueryTmp.dir("lshseg", d)
-    Dedup.saveLshSharded(
+    SegmentedIndex.save(s, Dedup.LshSharded,
       Dedup.bandedSignaturesTiled(
         hashed.filter(!$"source".isin(DeltaSources: _*)).drop("source"),
         lshK(s, d), MinHashBands),
-      path, numShards = 4)
-    Dedup.updateLshSharded(s, path,
+      path, 4)
+    SegmentedIndex.update(s, path, Dedup.LshSharded.delta(
       hashed.filter($"source" === DeltaSources.head).drop("source"),
-      lshK(s, d), MinHashBands, append = true)
-    Dedup.compactLshSharded(s, path)
+      lshK(s, d), MinHashBands), append = true)
+    SegmentedIndex.compact(s, Dedup.LshSharded, path)
     Dedup.incrementalLshPairsIndexed(
         hashed.filter($"source" === DeltaSources(1)).drop("source"),
-        Dedup.loadLshSharded(s, path),
+        SegmentedIndex.load(s, Dedup.LshSharded, path),
         lshK(s, d), MinHashBands, JaccardThreshold)
       .orderBy($"new_doc", $"dup_of")
   }
@@ -1081,7 +1082,7 @@ object DedupQueries {
   // ── q192: SHARDED CDC artifact — the same rewrite-unit economics on
   // the chunk tier: occurrences + rollup shard by CHUNK HASH and
   // co-swap per shard generation, the arriving slice's fold rewriting
-  // only its routed shards (Dedup.updateCdcSharded) — q154's lifecycle
+  // only its routed shards (Dedup.CdcSharded.delta) — q154's lifecycle
   // on the sharded layout. Per-shard min/sum rollup merges equal the
   // global one (h determines the shard), so the updated rollup equals
   // the full-corpus build exactly: the oracle IS q154's SQL. CLI:
@@ -1090,13 +1091,13 @@ object DedupQueries {
     import s.implicits._
     val docs = Tables.documents(s, d)
     val path = QueryTmp.dir("cdcsharded", d)
-    Dedup.saveCdcSharded(
+    SegmentedIndex.save(s, Dedup.CdcSharded,
       Dedup.buildCdcArtifact(docs.filter($"doc_id" % 10 =!= 0),
         "doc_id", "text", CdcMask),
-      path, numShards = 4)
-    Dedup.updateCdcSharded(s, path, docs.filter($"doc_id" % 10 === 0),
-      "doc_id", "text", CdcMask)
-    Dedup.loadCdcSharded(s, path).rollup
+      path, 4)
+    SegmentedIndex.update(s, path,
+      Dedup.CdcSharded.delta(docs.filter($"doc_id" % 10 === 0), CdcMask))
+    SegmentedIndex.load(s, Dedup.CdcSharded, path).rollup
       .select($"h", $"first_doc", $"n_occ")
       .orderBy($"h")
   }

@@ -7,6 +7,8 @@ import org.apache.spark.sql.types._
 
 import graft.Tables
 import graft.functions.TextFunctions.tokens
+import graft.operators.Retrieval.Bm25Sharded
+import graft.sinks.SegmentedIndex
 
 /** Corpus-statistics lexical scoring over the `documents` table: BM25
   * retrieval (q100) and add-one-smoothed bigram-LM quality scoring (q103).
@@ -250,12 +252,11 @@ object LexicalQueries {
     def termsOf(df: org.apache.spark.sql.DataFrame) =
       df.select($"doc_id", explode(toks($"text")).as("term"))
     val path = QueryTmp.dir("bm25sharded", d)
-    graft.operators.Retrieval.saveBm25Sharded(
-      graft.operators.Retrieval.buildBm25Index(
-        termsOf(docs.filter($"doc_id" % 7 =!= 3))), path, numShards = 4)
-    graft.operators.Retrieval.updateBm25Sharded(s, path,
-      termsOf(docs.filter($"doc_id" % 7 === 3)))
-    val idx = graft.operators.Retrieval.loadBm25Sharded(s, path)
+    SegmentedIndex.save(s, Bm25Sharded, graft.operators.Retrieval
+      .buildBm25Index(termsOf(docs.filter($"doc_id" % 7 =!= 3))), path, 4)
+    SegmentedIndex.update(s, path,
+      Bm25Sharded.delta(termsOf(docs.filter($"doc_id" % 7 === 3))))
+    val idx = SegmentedIndex.load(s, Bm25Sharded, path)
     graft.operators.Retrieval.bm25Ranked(queryTermsOf(idx), idx,
         BmK1, BmB, BmScale)
       .where($"rank" <= BmTopK)
@@ -271,7 +272,7 @@ object LexicalQueries {
   // immutable segment per routed shard — postings/doclen rows as-is,
   // docfreq as per-delta PARTIALS the load sum-merges — O(delta) write
   // volume. Two appends with overlapping vocabulary force the partial
-  // merge, then Retrieval.compactBm25Sharded folds each root back to
+  // merge, then SegmentedIndex.compact folds each root back to
   // one segment (purely physical). The served ranking equals the
   // full-corpus build after BOTH steps: the oracle IS q100's SQL.
   // CLI: index-update --mode=append + index-compact --type=bm25-sharded.
@@ -281,16 +282,15 @@ object LexicalQueries {
     def termsOf(df: org.apache.spark.sql.DataFrame) =
       df.select($"doc_id", explode(toks($"text")).as("term"))
     val path = QueryTmp.dir("bm25seg", d)
-    graft.operators.Retrieval.saveBm25Sharded(
-      graft.operators.Retrieval.buildBm25Index(
-        termsOf(docs.filter($"doc_id" % 7 =!= 3 && $"doc_id" % 7 =!= 5))),
-      path, numShards = 4)
-    graft.operators.Retrieval.updateBm25Sharded(s, path,
-      termsOf(docs.filter($"doc_id" % 7 === 3)), append = true)
-    graft.operators.Retrieval.updateBm25Sharded(s, path,
-      termsOf(docs.filter($"doc_id" % 7 === 5)), append = true)
-    graft.operators.Retrieval.compactBm25Sharded(s, path)
-    val idx = graft.operators.Retrieval.loadBm25Sharded(s, path)
+    SegmentedIndex.save(s, Bm25Sharded, graft.operators.Retrieval
+      .buildBm25Index(termsOf(docs.filter(
+        $"doc_id" % 7 =!= 3 && $"doc_id" % 7 =!= 5))), path, 4)
+    SegmentedIndex.update(s, path,
+      Bm25Sharded.delta(termsOf(docs.filter($"doc_id" % 7 === 3))))
+    SegmentedIndex.update(s, path,
+      Bm25Sharded.delta(termsOf(docs.filter($"doc_id" % 7 === 5))))
+    SegmentedIndex.compact(s, Bm25Sharded, path)
+    val idx = SegmentedIndex.load(s, Bm25Sharded, path)
     graft.operators.Retrieval.bm25Ranked(queryTermsOf(idx), idx,
         BmK1, BmB, BmScale)
       .where($"rank" <= BmTopK)

@@ -1750,7 +1750,7 @@ object VectorQueries {
   // surface shards by `vid mod S` into independent generational roots
   // while the BOUNDED fitted parameters (lanes/seeds/sizes) stay at the
   // root, so the week-1 fold rewrites ONLY the assign shards its vids
-  // route to (Clustering.updateSemIndexSharded — lanes/seeds/sizes
+  // route to (Clustering.SemSharded.delta — lanes/seeds/sizes
   // never move, the Faiss train/add split made physical) — q158's
   // lifecycle on the sharded layout. Assign row set equals the
   // unsharded artifact's, so the week-2 screen reproduces q158 exactly:
@@ -1763,17 +1763,18 @@ object VectorQueries {
     val bits = Similarity.bitsFor(corpus.count(), SemTargetClusterRows, 20)
     val coarseK = 1 << math.min(HierMaxCoarseBits, (bits + 1) / 2)
     val path = QueryTmp.dir("semsharded", d)
-    graft.operators.Clustering.saveSemIndexSharded(
+    val tier = graft.operators.Clustering.SemSharded
+    graft.sinks.SegmentedIndex.save(s, tier,
       graft.operators.Clustering.semDedupHierFit(corpus, "vec_id",
         "embedding", coarseK, SemTargetClusterRows, SemIters, "semdedup-hd",
         clusterCap = SemClusterCap, maxFinePerCell = HierMaxFinePerCell),
-      path, numShards = 4)
-    graft.operators.Clustering.updateSemIndexSharded(s, path,
-      emb.filter($"label" === SemDeltaLabels.head), "vec_id", "embedding")
+      path, 4)
+    graft.sinks.SegmentedIndex.update(s, path,
+      tier.delta(emb.filter($"label" === SemDeltaLabels.head)))
     graft.operators.Clustering
       .semDedupDeltaHier(emb.filter($"label" === SemDeltaLabels(1)),
         "vec_id", "embedding",
-        graft.operators.Clustering.loadSemIndexSharded(s, path),
+        graft.sinks.SegmentedIndex.load(s, tier, path),
         CosineDupThreshold)
       .orderBy($"pruned")
   }

@@ -69,16 +69,19 @@ object SegmentStore {
     try fsOf(spark, root).listStatus(new Path(root))
     catch { case _: java.io.FileNotFoundException => Array.empty }
 
-  /** Next segment name for a root: one past the max ordinal of EVERY
-    * present `_seg_*` dir (not just the referenced ones — a displaced
+  /** The highest ordinal of EVERY present `_seg_*` dir of a root, -1
+    * when it holds none (not just the referenced ones — a displaced
     * generation's segments still hold their ordinals, and reusing one
-    * would let an unreferenced dir shadow fresh data). */
-  def newSegName(spark: SparkSession, root: String): String = {
-    val prev = listRoot(spark, root).iterator
+    * would let an unreferenced dir shadow fresh data). One listing. */
+  def maxSegOrdinal(spark: SparkSession, root: String): Long =
+    listRoot(spark, root).iterator
       .flatMap(s => segOrdinal(s.getPath.getName)).foldLeft(-1L)(_ max _)
-    f"${SegPrefix.stripSuffix("_")}_${prev + 1L}%d_" +
+
+  /** A fresh segment name of ordinal `ord` (uuid-suffixed, so two
+    * racing writers never collide on the directory). */
+  def segName(ord: Long): String =
+    f"${SegPrefix.stripSuffix("_")}_$ord%d_" +
       java.util.UUID.randomUUID().toString.take(8)
-  }
 
   /** The manifest of a generation dir: segment names in ingestion
     * order, or None when the directory holds no manifest. */
@@ -101,10 +104,6 @@ object SegmentStore {
     try out.write(segs.mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
   }
-
-  /** Live segment names of a root (resolved pointer). */
-  def liveSegments(spark: SparkSession, root: String): Seq[String] =
-    segmentsAt(spark, ArtifactStore.resolve(spark, root))
 
   /** Data paths of one surface under a PINNED generation — the
     * manifest's `<root>/<seg>/<surface>` list. Every caller hands the
@@ -139,9 +138,4 @@ object SegmentStore {
     victims.foreach(n => fs.delete(new Path(root, n), true))
     victims
   }
-
-  /** Total live segment count across a sharded artifact's roots —
-    * `index-describe`'s compaction-pressure signal. */
-  def liveSegmentCount(spark: SparkSession, roots: Seq[String]): Long =
-    roots.map(r => liveSegments(spark, r).size.toLong).sum
 }

@@ -1,0 +1,296 @@
+package graft.sinks
+
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, element_at, typedLit}
+
+/** The one lifecycle of every SEGMENTED index artifact (bm25-, lsh-,
+  * cdc- and semdedup-sharded): the rewrite-unit layout (reference
+  * anchor: one immutable file set made live by one metadata move,
+  * `KM/output/framework/KijiHFileOutputFormat.java:122-186`,
+  * generalized to per-shard generational roots). A flat artifact
+  * re-persists its corpus-sized surfaces wholesale on every delta; here
+  * they split into S independent shard roots inside the artifact's top
+  * generation `<gen>`:
+  *
+  *   <gen>/_num_shards                     the grid size S
+  *   <gen>/<family>/<s>/_gen_<o>/_segments  shard s's manifest generation
+  *   <gen>/<family>/<s>/_seg_<o>/<surface>/ immutable data segments
+  *   <gen>/<singleton>/_gen_<o>/            a 1-row rollup root (bm25
+  *                                         `stats`)
+  *   <gen>/<root surface>/                 build-time surfaces no update
+  *                                         moves (semdedup's fitted
+  *                                         lanes/seeds/sizes/meta)
+  *
+  * A tier is a [[Tier]] descriptor: its shard FAMILIES (each a routing
+  * column over S and the surfaces that swap together inside one segment
+  * — a row whose sibling rows sit in another generation is a
+  * silent-drop hazard), its singletons and build-time roots, and its
+  * `live` fold — how raw segment scans merge into the live view. Every
+  * routing key determines the rows a surface's derived state depends
+  * on, so per-shard merges equal the global one.
+  *
+  * Every verb is the same five steps:
+  *  1. open: resolve the artifact generation and read S;
+  *  2. pin the touched shard roots (and the singletons the verb
+  *     rewrites) BEFORE any read — the pins are the commit's CAS
+  *     expectations, so a writer that lands in between fails this
+  *     commit loudly instead of being overwritten;
+  *  3. scan each surface as ONE multi-path scan over every pinned root's
+  *     live segments (each root's manifest read once) — never an S-way
+  *     union, whose per-branch planning is the cost sharding must not
+  *     add;
+  *  4. route rows to shards and collect the touched ones;
+  *  5. commit through [[ShardedCommit.commitSegmented]]: the shard
+  *     column and the empty surface of a rowless shard are added here.
+  *
+  * An append-mode update lands one DELTA-SIZED segment per touched
+  * shard (write volume O(delta) however widely the delta's hash keys
+  * spray); build, removal, compaction and merge-mode updates write one
+  * full segment per touched shard. Reads merge the segments through
+  * `live` until `index-compact` folds each root back to one.
+  */
+object SegmentedIndex {
+
+  /** One stored surface: its directory name, its columns in stored
+    * order, and its staging wave ([[ShardedCommit.Surface]]). */
+  final case class Surface(name: String, cols: Seq[String], wave: Int = 0)
+
+  /** S shard roots `<gen>/<name>/<s>` whose surfaces swap together
+    * inside one segment; a row lives in shard `route(S)`. */
+  final case class Family(name: String, route: Int => Column,
+                          surfaces: Seq[Surface])
+
+  /** A segmented tier's descriptor. `A` is the artifact a load returns —
+    * the flat tier's, so every serve path is shared. */
+  trait Tier[A] {
+    def families: Seq[Family]
+
+    /** 1-row rollup roots `<gen>/<name>`, rewritten whole in the same
+      * pointer transaction as the shards. */
+    def singletons: Seq[Surface] = Nil
+
+    /** The surface holding one row per indexed id, and its id column. */
+    def ids: (String, String)
+
+    /** One surface's live view from the raw segment scans in `s`. Load,
+      * compaction and merge-mode updates all read through it. */
+    def live(s: Scan, surface: String): DataFrame = s(surface)
+
+    /** Every family surface and singleton of `a`, for a full write. */
+    def surfacesOf(a: A): Map[String, DataFrame]
+
+    /** Write the build-time root surfaces of `a` into generation `dir`. */
+    def writeRoots(dir: String, a: A): Unit = ()
+
+    /** The artifact of generation `dir`, its surfaces read via `view`. */
+    def artifact(spark: SparkSession, dir: String,
+                 view: String => DataFrame): A
+
+    /** A write of this tier, planned against the opened artifact. */
+    final def fold(plan: Opened => Write): Fold = Fold(this, plan)
+  }
+
+  /** The live generation of a segmented artifact and its grid size. */
+  final case class Opened(spark: SparkSession, dir: String, numShards: Int)
+
+  /** One update or removal: `keys` rows route the touched shards of each
+    * family they name (a family not named is touched whole),
+    * `singletons` names the singleton roots it rewrites, and `rows`
+    * builds every surface it commits from the scan of the pinned roots. */
+  final case class Write(keys: Map[String, DataFrame],
+                         rows: Scan => Map[String, DataFrame],
+                         singletons: Seq[String] = Nil)
+
+  /** A tier's update or removal, planned once the artifact is opened. */
+  final case class Fold(tier: Tier[_], plan: Opened => Write)
+
+  /** A pinned shard root: its live segments and the ordinal its next
+    * segment takes, each read once on first use. */
+  final class Root(spark: SparkSession, val shard: Int,
+                   val pin: ShardedCommit.Pin) {
+    lazy val segments: Seq[String] = SegmentStore.segmentsAt(spark, pin._3)
+    lazy val nextOrdinal: Long =
+      SegmentStore.maxSegOrdinal(spark, pin._1) + 1L
+    def paths(surface: String): Seq[String] =
+      segments.map(s => s"${pin._1}/$s/$surface")
+  }
+
+  /** The pinned roots of one verb. `apply` is a surface's raw scan —
+    * one multi-path scan over its family's pinned roots, or the pinned
+    * singleton — built on first use; `live` is the tier's live view.
+    * `layer` holds a merge-mode update's rows as one more segment. */
+  final class Scan private[SegmentedIndex] (
+      tier: Tier[_], val opened: Opened,
+      val roots: Seq[(Family, Seq[Root])],
+      val singles: Seq[(Surface, ShardedCommit.Pin)],
+      layer: Map[String, DataFrame]) {
+
+    private val spark = opened.spark
+    private val scans = scala.collection.mutable.Map.empty[String, DataFrame]
+
+    private def familyOf(surface: String): Option[(Surface, Seq[Root])] =
+      roots.iterator.flatMap { case (f, rs) =>
+        f.surfaces.find(_.name == surface).map(_ -> rs) }.nextOption()
+
+    def apply(surface: String): DataFrame = scans.getOrElseUpdate(surface, {
+      val (spec, raw) = familyOf(surface) match {
+        case Some((sp, rs)) =>
+          sp -> ArtifactStore.readSurface(spark,
+            rs.flatMap(_.paths(surface)): _*)
+        case None =>
+          val (sp, pin) = singles.find(_._1.name == surface).getOrElse(
+            throw new IllegalArgumentException(s"$surface is not pinned"))
+          sp -> ArtifactStore.readSurface(spark, pin._3)
+      }
+      val cols = spec.cols.map(col)
+      layer.get(surface).foldLeft(raw.select(cols: _*))(
+        (df, l) => df.unionByName(l.select(cols: _*)))
+    })
+
+    /** Whether `surface` spans more than one segment of some root — the
+      * partial segments `live` must merge. */
+    def layered(surface: String): Boolean = layer.contains(surface) ||
+      familyOf(surface).exists(_._2.exists(_.segments.size > 1))
+
+    def live(surface: String): DataFrame =
+      if (familyOf(surface).isDefined) tier.live(this, surface)
+      else apply(surface)
+
+    /** Per row, the ordinal of the segment this commit mints in the row's
+      * root of `family` — lets a segment's rows carry their write order. */
+    def segOrdinal(family: String): Column = {
+      val (f, rs) = roots.find(_._1.name == family).get
+      element_at(typedLit(rs.map(r => r.shard -> r.nextOrdinal).toMap),
+        f.route(opened.numShards))
+    }
+
+    private[SegmentedIndex] def withLayer(rows: Map[String, DataFrame]): Scan =
+      new Scan(tier, opened, roots, singles, rows)
+  }
+
+  def open(spark: SparkSession, root: String): Opened = {
+    val dir = ArtifactStore.resolve(spark, root)
+    Opened(spark, dir, ShardedCommit.numShards(spark, dir))
+  }
+
+  /** Pin `shards(family)` of every family and the named singletons. */
+  private def pin(tier: Tier[_], o: Opened, shards: Family => Seq[Int],
+                  singles: Seq[String]): Scan = new Scan(tier, o,
+    tier.families.map(f => f -> shards(f).map(sh => new Root(o.spark, sh,
+      ArtifactStore.pinGen(o.spark, s"${o.dir}/${f.name}/$sh")))),
+    tier.singletons.filter(s => singles.contains(s.name))
+      .map(s => s -> ArtifactStore.pinGen(o.spark, s"${o.dir}/${s.name}")),
+    Map.empty)
+
+  /** Pin every shard root of the artifact at `root`. */
+  def pinAll(spark: SparkSession, tier: Tier[_], root: String): Scan = {
+    val o = open(spark, root)
+    pin(tier, o, _ => 0 until o.numShards, Nil)
+  }
+
+  def load[A](spark: SparkSession, tier: Tier[A], root: String): A = {
+    val o = open(spark, root)
+    val s = pin(tier, o, _ => 0 until o.numShards, tier.singletons.map(_.name))
+    tier.artifact(spark, o.dir, s.live)
+  }
+
+  /** The artifact's indexed ids as one `id` column — only the id
+    * surface's family is pinned and scanned. */
+  def ids(spark: SparkSession, tier: Tier[_], root: String): DataFrame = {
+    val (surface, c) = tier.ids
+    val o = open(spark, root)
+    pin(tier, o, f => if (f.surfaces.exists(_.name == surface))
+      0 until o.numShards else Nil, Nil).live(surface).select(col(c).as("id"))
+  }
+
+  /** Total live segment count — `index-describe`'s compaction-pressure
+    * signal. */
+  def liveSegments(spark: SparkSession, tier: Tier[_], root: String): Long =
+    segmentCount(pinAll(spark, tier, root))
+
+  private def segmentCount(s: Scan): Long =
+    s.roots.map(_._2.map(_.segments.size.toLong).sum).sum
+
+  /** A full write of `a` as a fresh generation of `path` (S = numShards). */
+  def save[A](spark: SparkSession, tier: Tier[A], a: A, path: String,
+              numShards: Int): Unit = {
+    val rows = tier.surfacesOf(a)
+    ArtifactStore.publish(spark, path) { dir =>
+      ShardedCommit.writeNumShards(spark, dir, numShards)
+      tier.writeRoots(dir, a)
+      commit(pin(tier, Opened(spark, dir, numShards), _ => 0 until numShards,
+        tier.singletons.map(_.name)), rows, ShardedCommit.SegReplace)
+    }
+  }
+
+  /** Fold every shard root back to ONE segment holding its live view —
+    * the read-amplification reset after append-mode updates; serves
+    * before and after are identical. Returns the live segment counts
+    * (before, after). */
+  def compact(spark: SparkSession, tier: Tier[_], root: String)
+      : (Long, Long) = compact(pinAll(spark, tier, root))
+
+  /** [[compact]] of an already pinned artifact. */
+  def compact(s: Scan): (Long, Long) = {
+    val before = segmentCount(s)
+    commit(s, liveRows(s), ShardedCommit.SegReplace)
+    (before, s.roots.map(_._2.size.toLong).sum)
+  }
+
+  /** Fold a delta in. `append` (the default) lands the fold's rows as
+    * one delta-sized segment per touched shard; otherwise they merge
+    * with the touched shards' segments through the tier's live view into
+    * one full segment per shard (the compacting write). Returns the
+    * touched shards of the first keyed family. */
+  def update(spark: SparkSession, root: String, fold: Fold,
+             append: Boolean = true): Seq[Int] =
+    write(spark, root, fold) { (s, rows) =>
+      if (append) commit(s, rows, ShardedCommit.SegAppend)
+      else commit(s, liveRows(s.withLayer(rows)) ++
+        s.singles.map { case (sp, _) => sp.name -> rows(sp.name) },
+        ShardedCommit.SegReplace)
+    }
+
+  /** Replace the touched shards with the fold's rows (a removal). */
+  def remove(spark: SparkSession, root: String, fold: Fold): Seq[Int] =
+    write(spark, root, fold)(commit(_, _, ShardedCommit.SegReplace))
+
+  /** Open, route the fold's keys, pin the touched shards and the
+    * singletons it rewrites, build its rows from the pinned scan and
+    * hand both to `commitRows`. */
+  private def write(spark: SparkSession, root: String, fold: Fold)(
+      commitRows: (Scan, Map[String, DataFrame]) => Unit): Seq[Int] = {
+    val o = open(spark, root)
+    val w = fold.plan(o)
+    val keyed = fold.tier.families.flatMap(f => w.keys.get(f.name).map(k =>
+      f.name -> k.select(f.route(o.numShards)).distinct().collect()
+        .map(_.getInt(0)).sorted.toSeq))
+    if (keyed.nonEmpty && keyed.forall(_._2.isEmpty)) return Nil
+    val all = 0 until o.numShards
+    val s = pin(fold.tier, o, f => keyed.toMap.getOrElse(f.name, all),
+      w.singletons)
+    commitRows(s, w.rows(s))
+    keyed.headOption.fold(all: Seq[Int])(_._2)
+  }
+
+  /** The live view of every surface of the pinned families. */
+  private def liveRows(s: Scan): Map[String, DataFrame] =
+    s.roots.filter(_._2.nonEmpty).flatMap(_._1.surfaces)
+      .map(sp => sp.name -> s.live(sp.name)).toMap
+
+  private def commit(s: Scan, rows: Map[String, DataFrame],
+                     mode: ShardedCommit.SegMode): Unit = {
+    val n = s.opened.numShards
+    def stored(sp: Surface): DataFrame =
+      rows(sp.name).select(sp.cols.map(col): _*)
+    ShardedCommit.commitSegmented(s.opened.spark, s.opened.dir,
+      s.roots.filter(_._2.nonEmpty).map { case (f, rs) =>
+        ShardedCommit.SegFamily(rs, f.surfaces.map { sp =>
+          val df = stored(sp)
+          ShardedCommit.Surface(sp.name, df.withColumn("shard", f.route(n)),
+            () => df.limit(0), sp.wave)
+        }, mode)
+      },
+      s.singles.map { case (sp, p) => stored(sp) -> p })
+  }
+}

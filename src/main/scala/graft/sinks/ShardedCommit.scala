@@ -2,35 +2,22 @@ package graft.sinks
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The shared staging/commit machinery of every SHARDED artifact — the
-  * 100 TB rewrite-unit layout (reference anchor: one file set per
-  * locality group, `KM/output/framework/KijiHFileOutputFormat.java:122-186`,
-  * generalized to per-shard generational roots): a corpus-sized surface
-  * splits into S independent roots `<gen>/<family>/<s>/_gen_*` inside
-  * the artifact's top generation `<gen>`, a delta
-  * rewrites only the shards it routes to, and ALL touched roots flip in
-  * one all-or-nothing pointer transaction ([[ArtifactStore.commitGenAll]]
-  * under the artifact-base claim).
-  *
-  * First extracted from the BM25 tier (`Retrieval.commitBm25Shards`,
-  * round 17) when the doc-tier dedup artifacts (LSH banded index, CDC
-  * chunk index, SemDeDup assign surface) adopted the same layout — the
-  * commit choreography is identical across tiers and MUST stay so (the
-  * staging-grace, empty-surface, and co-swap contracts are easy to get
-  * subtly wrong three times):
+/** How a sharded artifact's shard roots commit: the `_num_shards`
+  * grid marker every sharded tier records, and the staged,
+  * all-or-nothing segment commit behind [[SegmentedIndex]] (whose
+  * scaladoc describes the layout). A commit keeps four rules:
   *
   *  1. every surface stages as ONE `partitionBy("shard")` job (never a
   *     write per shard — S jobs of planning overhead for one job's I/O);
   *  2. each shard's staged partition directories RENAME into that
   *     shard's fresh segment — surfaces sharing a family swap TOGETHER
-  *     inside one segment (the cells+codes lesson: a row in
-  *     one surface whose sibling rows are in another generation is a
-  *     silent-drop hazard);
+  *     inside one segment (a row in one surface whose sibling rows are
+  *     in another generation is a silent-drop hazard);
   *  3. a shard with no staged rows gets an EXPLICIT schema-bearing
   *     empty surface, so later readers/updates never hit a missing
   *     directory (and schema discovery survives a rowless shard);
   *  4. [[ArtifactStore.commitGenAll]] verifies every CAS precondition
-  *     before ANY pointer flips — a lost race aborts with the delta
+  *     before ANY pointer flips — a lost race aborts with the write
   *     unapplied EVERYWHERE.
   */
 object ShardedCommit {
@@ -89,10 +76,10 @@ object ShardedCommit {
   case object SegAppend extends SegMode
 
   /** Shard roots swapping the same surfaces together through the
-    * SEGMENTED layout ([[graft.sinks.SegmentStore]]): each touched shard
-    * `(shardId, pin)` gets one new immutable `_seg_*` data dir holding
-    * one directory per surface, plus a manifest-only generation. */
-  final case class SegFamily(shards: Seq[(Int, Pin)],
+    * SEGMENTED layout ([[graft.sinks.SegmentStore]]): each pinned root
+    * gets one new immutable `_seg_*` data dir holding one directory per
+    * surface, plus a manifest-only generation. */
+  final case class SegFamily(shards: Seq[SegmentedIndex.Root],
                              surfaces: Seq[Surface], mode: SegMode)
 
   /** Stage every surface concurrently: the per-surface staging writes
@@ -169,8 +156,10 @@ object ShardedCommit {
         .empty[(String, String, Option[String])]
       val roots = scala.collection.mutable.ArrayBuffer.empty[String]
       staged.foreach { case (fam, surfs) =>
-        fam.shards.foreach { case (sh, (root, loaded, pinnedGen)) =>
-          val segName = SegmentStore.newSegName(spark, root)
+        fam.shards.foreach { r =>
+          val (root, loaded, _) = r.pin
+          val sh = r.shard
+          val segName = SegmentStore.segName(r.nextOrdinal)
           val segDir = s"$root/$segName"
           fs.mkdirs(new org.apache.hadoop.fs.Path(segDir))
           surfs.foreach { case (surf, stage) =>
@@ -186,8 +175,7 @@ object ShardedCommit {
           }
           val manifest = fam.mode match {
             case SegReplace => Seq(segName)
-            case SegAppend =>
-              SegmentStore.segmentsAt(spark, pinnedGen) :+ segName
+            case SegAppend => r.segments :+ segName
           }
           val gen = ArtifactStore.newGenDir(spark, root, loaded)
           fs.mkdirs(new org.apache.hadoop.fs.Path(gen))

@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 
 import graft.operators.{Bpe, Clustering, Dedup, Retrieval, UnigramLm, WordPiece}
-import graft.sinks.ArtifactStore
+import graft.sinks.{ArtifactStore, SegmentedIndex}
 import graft.table.{DataRequest, TableFixtures}
 
 /** Spark-job ceilings for the index lifecycle and the entity-table
@@ -43,13 +43,17 @@ class JobBudgetSpec extends SparkSpec with BeforeAndAfterAll {
     started.get() - before
   }
 
+  private def segmented(tier: SegmentedIndex.Tier[_])
+      : (SparkSession, String) => Any = SegmentedIndex.load(_, tier, _)
+
   private val loaders: Map[String, (SparkSession, String) => Any] = Map(
-    "lsh" -> Dedup.loadLshIndex, "lsh-sharded" -> Dedup.loadLshSharded,
-    "cdc" -> Dedup.loadCdcArtifact, "cdc-sharded" -> Dedup.loadCdcSharded,
+    "lsh" -> Dedup.loadLshIndex, "lsh-sharded" -> segmented(Dedup.LshSharded),
+    "cdc" -> Dedup.loadCdcArtifact,
+    "cdc-sharded" -> segmented(Dedup.CdcSharded),
     "bm25" -> Retrieval.loadBm25Index,
-    "bm25-sharded" -> Retrieval.loadBm25Sharded,
+    "bm25-sharded" -> segmented(Retrieval.Bm25Sharded),
     "semdedup" -> Clustering.loadSemIndex,
-    "semdedup-sharded" -> Clustering.loadSemIndexSharded,
+    "semdedup-sharded" -> segmented(Clustering.SemSharded),
     "ivf" -> Clustering.loadIvfCodebook,
     "ivfflat" -> Clustering.loadIvfFlatIndex,
     "ivfflat-sharded" -> Clustering.loadIvfFlatSharded,
@@ -83,18 +87,22 @@ class JobBudgetSpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
+  /** Six-word documents `(doc_id, text)` over a 20-word vocabulary. */
+  private def docs(ids: Range): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    val vocab = ("spark join hash table scan batch row filter merge plan " +
+      "slow order vector line agg bloom index shard segment commit").split(" ")
+    ids.map { i =>
+      (i.toLong, (0 until 6).map(j => vocab((i * 7 + j * 3) % vocab.length))
+        .mkString(" "))
+    }.toDF("doc_id", "text")
+  }
+
   test("bm25-sharded (S = 4) update, serve, compact and remove stay within their job ceilings") {
     import spark.implicits._
     val base = tmpDir("jobbm25")
     val path = s"$base/bm25"
     val flags = Map("shards" -> "4", "topk" -> "3")
-    val words = "spark join hash table scan batch row filter merge plan " +
-      "slow order vector line agg bloom index shard segment commit"
-    val vocab = words.split(" ")
-    def docs(ids: Range): org.apache.spark.sql.DataFrame = ids.map { i =>
-      (i.toLong, (0 until 6).map(j => vocab((i * 7 + j * 3) % vocab.length))
-        .mkString(" "))
-    }.toDF("doc_id", "text")
     IndexTool.build(spark, "bm25-sharded", docs(0 until 40), path, flags)
     val queries = docs(0 until 3)
     // ceilings = the counts this fixture measures with footer-read
@@ -114,6 +122,45 @@ class JobBudgetSpec extends SparkSpec with BeforeAndAfterAll {
         Seq(1L, 2L, 101L).toDF("doc_id"), path, flags)))
     counts.zip(ceilings).foreach { case ((op, got), (_, ceiling)) =>
       assert(got <= ceiling, s"$op launched $got jobs, ceiling $ceiling")
+    }
+  }
+
+  test("lsh-, cdc- and semdedup-sharded (S = 4) update, compact and remove stay within their job ceilings") {
+    import spark.implicits._
+    val base = tmpDir("jobsegmented")
+    def emb(ids: Range): org.apache.spark.sql.DataFrame = ids.map { i =>
+        val v = Array(1f, 1f, 1f, 1f); v(i % 4) = 10f + i * 0.01f
+        (i.toLong, v.toSeq)
+      }.toDF("vec_id", "embedding")
+      .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
+    // ceilings = the counts this fixture measured while each tier had
+    // its own segmented lifecycle (on the shared one: 13/8/9, 10/5/7,
+    // 16/2/5)
+    val cases = Seq(
+      ("lsh-sharded", docs(0 until 40), docs(100 until 104),
+        Seq(1L, 2L, 101L).toDF("doc_id"), Map("shingle-n" -> "2"),
+        Map("update" -> 14, "compact" -> 8, "remove" -> 9)),
+      ("cdc-sharded", docs(0 until 40), docs(100 until 104),
+        Seq(1L, 2L, 101L).toDF("doc_id"), Map("avg-mask" -> "3"),
+        Map("update" -> 10, "compact" -> 5, "remove" -> 7)),
+      ("semdedup-sharded", emb(0 until 40), emb(100 until 104),
+        Seq(1L, 2L, 101L).toDF("vec_id"),
+        Map("coarse-k" -> "2", "target-rows" -> "4", "cluster-cap" -> "64"),
+        Map("update" -> 17, "compact" -> 2, "remove" -> 5)))
+    for ((tpe, input, delta, removed, extra, ceilings) <- cases) {
+      val path = s"$base/$tpe"
+      val flags = extra + ("shards" -> "4")
+      IndexTool.build(spark, tpe, input, path, flags)
+      val counts = Seq(
+        "update" -> jobsOf(IndexTool.update(spark, tpe, delta, path, flags)),
+        "compact" -> jobsOf(IndexTool.compact(spark, tpe, path, flags)),
+        "remove" -> jobsOf(IndexTool.remove(spark, tpe, removed, path,
+          flags)))
+      info(s"$tpe: ${counts.map { case (op, n) => s"$op $n" }.mkString(", ")}")
+      counts.foreach { case (op, got) =>
+        assert(got <= ceilings(op),
+          s"$tpe $op launched $got jobs, ceiling ${ceilings(op)}")
+      }
     }
   }
 
