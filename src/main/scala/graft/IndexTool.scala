@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
 import graft.operators.{Bpe, Clustering, Dedup, Retrieval, Similarity, UnigramLm, WordPiece}
-import graft.sinks.{ArtifactStore, SegmentedIndex, ShardedCommit}
+import graft.sinks.{ArtifactStore, SegmentStore, SegmentedIndex, ShardedCommit}
 
 /** The build-once/serve-many index tier behind the CLI facade: one
   * `index-build` / `index-serve` verb pair over every persistable
@@ -1529,10 +1529,19 @@ object IndexTool {
             "commit_claim_present" -> (if (claimed) 1L else 0L))
       }
     // a segmented type reports its flat twin's counters over its live
-    // view, plus the grid size and the compaction-pressure signal
-    val segmented: Seq[(String, Long)] = Segmented.get(tpe).toSeq.flatMap(
-      seg => Seq(shards, "live_segments" ->
-        SegmentedIndex.liveSegments(spark, seg.tier, path)))
+    // view, plus the grid size, the compaction-pressure signal and the
+    // segments no manifest names (a crashed or CAS-losing writer's —
+    // index-gc sweeps them)
+    val segmented: Seq[(String, Long)] = Segmented.get(tpe).toSeq.flatMap {
+      seg =>
+        val orphans = SegmentStore.orphans(spark,
+          ArtifactStore.resolve(spark, path), graceMs = 0L)
+        if (orphans.nonEmpty) println(s"WARNING: segments named by no " +
+          s"manifest (index-gc sweeps them): ${orphans.mkString(", ")}")
+        Seq(shards, "live_segments" ->
+          SegmentedIndex.liveSegments(spark, seg.tier, path),
+          "orphan_segments" -> orphans.length.toLong)
+    }
     val counters: Seq[(String, Long)] = genCounters ++ segmented ++ (tpe match {
       case "lsh" | "lsh-sharded" =>
         // one scan: count + both distincts in a single (expanded) agg

@@ -158,27 +158,22 @@ object Tool {
         .getOrElse(graft.sinks.ArtifactStore.StagingGraceMs)
       val sweptRoot = graft.sinks.ArtifactStore.sweep(spark, path,
         keepDisplaced = !all, stagingGraceMs = grace)
-      // multi-root layouts keep ONE generational root per shard/bucket
-      // (sharded index artifacts: shards/ + docshards/ + stats under
-      // the live root generation; bucketed tables: _buckets/ at the
-      // table root) — a crashed sharded update's orphans live THERE,
-      // so the sweep recurses over every child root under the same
-      // policy (each child sweep runs under its own claim)
+      // multi-root layouts keep more generational roots below the
+      // artifact's: a segmented artifact ONE segment manifest root
+      // (`_segments`), a vector-sharded artifact one root per shard, a
+      // bucketed table one per bucket (`_buckets/`) — a crashed writer's
+      // orphan generations live THERE, so the sweep recurses over every
+      // child root under the same policy (each under its own claim)
       val base = graft.sinks.ArtifactStore.resolve(spark, path)
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def childrenOf(p: String): Seq[String] = {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        if (!fs.exists(hp)) Seq.empty
-        else fs.listStatus(hp).filter(_.isDirectory)
-          .map(_.getPath.toString).toSeq.sorted
-      }
+      def childrenOf(p: String): Seq[String] = graft.sinks.SegmentStore
+        .list(fs, p).filter(_.isDirectory).map(_.getPath.toString).toSeq.sorted
+      val segmented = graft.sinks.SegmentStore.isSegmented(spark, base)
       val childRoots =
-        Seq(s"$base/shards", s"$base/docshards", s"$path/_buckets")
-          .flatMap(childrenOf) ++
-        (if (fs.exists(new org.apache.hadoop.fs.Path(
-            s"$base/stats/${graft.sinks.ArtifactStore.PointerFile}")))
-          Seq(s"$base/stats") else Seq.empty)
+        (if (segmented) Seq(s"$base/${graft.sinks.SegmentStore.ManifestFile}")
+         else Seq(s"$base/shards").flatMap(childrenOf)) ++
+          childrenOf(s"$path/_buckets")
       val sweptChildren = childRoots.flatMap { r =>
         // display-relative: "<family>/<child>/<gen>" (listStatus returns
         // scheme-qualified paths, so a plain prefix strip misses)
@@ -188,17 +183,14 @@ object Tool {
             keepDisplaced = !all, stagingGraceMs = grace)
           .map(g => s"$rel/$g")
       }
-      // segmented roots also accumulate crashed writers' UNREFERENCED
-      // `_seg_*` data dirs (a successful commit sweeps its own root's
-      // orphans; a crash before the pointer flip leaves them) — same
-      // grace policy: --all (no-writers window) ignores it
-      val sweptSegments = childRoots.flatMap { r =>
-        val hp = new org.apache.hadoop.fs.Path(r)
-        val rel = s"${hp.getParent.getName}/${hp.getName}"
-        graft.sinks.SegmentStore.sweepOrphans(spark, r,
-            graceMs = if (all) 0L else grace)
-          .map(s => s"$rel/$s")
-      }
+      // a segmented artifact's roots also hold crashed or CAS-losing
+      // writers' `_seg_*` data dirs, which no manifest names — swept
+      // after the manifest generations, under the same grace policy
+      // (--all, the no-writers window, ignores it)
+      val sweptSegments =
+        if (!segmented) Seq.empty
+        else graft.sinks.SegmentStore.sweepOrphans(spark, base,
+          graceMs = if (all) 0L else grace)
       val swept = sweptRoot ++ sweptChildren ++ sweptSegments
       swept.foreach(g => println(s"swept: $g"))
       val now = System.currentTimeMillis()
@@ -535,9 +527,10 @@ object Tool {
       |   | graft.Tool index-gc --path=<dir> [--all=true|false] [--grace-ms=N]
       |       (sweep non-live generations left by crashed writers;
       |        keeps the retained displaced generation unless --all;
-      |        recurses over shard/bucket roots — shards/, docshards/,
-      |        stats, _buckets/ — so a crashed SHARDED update's orphans
-      |        AND unreferenced _seg_* data dirs are reachable too)
+      |        recurses over child roots — a segmented artifact's
+      |        _segments manifest root, shards/, _buckets/ — so a crashed
+      |        SHARDED update's orphans AND unreferenced _seg_* data dirs
+      |        are reachable too)
       |  --input="format=<parquet|text|csv|json|xml|seq|avro|avrokv|small-text-files> file=... [k=v ...]"
       |        | "format=kiji table=<path> [layout=<layout.json>] [maxversions=N]
       |           [columns=fam:qual,...] [timerange=lo,hi] [startrow=K] [limitrow=K]

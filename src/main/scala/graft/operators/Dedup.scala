@@ -517,7 +517,7 @@ object Dedup {
         bandedSignatures(deltaHashed, numHashes, bands).persist())
       Write(Map("shards" -> banded), s => {
         val buckets = banded.select(col("band"), col("bkey")).distinct()
-        val ord = s.segOrdinal("shards")
+        val ord = s.segOrdinal
         Map("sig" -> retile(sigCols(s.live("sig")
               .join(broadcast(buckets), Seq("band", "bkey"), "left_semi"))
             .unionByName(sigCols(banded)), numHashes, bands)

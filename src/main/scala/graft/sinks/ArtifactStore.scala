@@ -336,7 +336,9 @@ object ArtifactStore {
 
   /** Commit MANY staged generations (one per shard root) as a single
     * all-or-nothing pointer transaction — the multi-shard commit a
-    * sharded artifact's update/remove needs. A sequential per-shard
+    * vector-sharded artifact's update/remove needs (the segmented tiers
+    * commit one manifest through [[commitGen]] instead,
+    * `SegmentStore.commit`). A sequential per-shard
     * [[commitGen]] loop has a partial-failure window: a crash (or one
     * lost CAS) mid-loop leaves the delta applied to some shards but not
     * others, and re-running then either trips the disjoint-ids guard or
@@ -432,7 +434,7 @@ object ArtifactStore {
 
   /** Max modification time across a directory tree (the directory
     * itself, every file, every subdirectory) — the staging-freshness
-    * signal [[sweep]] and `SegmentStore.sweepOrphans` use. A writer
+    * signal [[sweep]] and `SegmentStore.orphans` use. A writer
     * actively filling a generation keeps SOME entry's mtime fresh (task
     * files land continuously) even where the top-level directory mtime
     * froze at job start. Bounded: called only for sweep candidates,

@@ -1,22 +1,23 @@
 package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, element_at, typedLit}
+import org.apache.spark.sql.functions.{col, lit}
 
 /** The one lifecycle of every SEGMENTED index artifact (bm25-, lsh-,
   * cdc- and semdedup-sharded): the rewrite-unit layout (reference
   * anchor: one immutable file set made live by one metadata move,
-  * `KM/output/framework/KijiHFileOutputFormat.java:122-186`,
-  * generalized to per-shard generational roots). A flat artifact
-  * re-persists its corpus-sized surfaces wholesale on every delta; here
-  * they split into S independent shard roots inside the artifact's top
-  * generation `<gen>`:
+  * `KM/output/framework/KijiHFileOutputFormat.java:122-186`). A flat
+  * artifact re-persists its corpus-sized surfaces wholesale on every
+  * delta; here they split into S shard roots inside the artifact's top
+  * generation `<gen>`, all made live by ONE segment manifest:
   *
   *   <gen>/_num_shards                     the grid size S
-  *   <gen>/<family>/<s>/_gen_<o>/_segments  shard s's manifest generation
+  *   <gen>/_segments/_gen_current          the manifest pointer
+  *   <gen>/_segments/_gen_<o>/_segments    the manifest: every root's
+  *                                         live segments
   *   <gen>/<family>/<s>/_seg_<o>/<surface>/ immutable data segments
-  *   <gen>/<singleton>/_gen_<o>/            a 1-row rollup root (bm25
-  *                                         `stats`)
+  *   <gen>/<singleton>/_seg_<o>/<singleton>/ a 1-row rollup root (bm25
+  *                                         `stats`), one segment
   *   <gen>/<root surface>/                 build-time surfaces no update
   *                                         moves (semdedup's fitted
   *                                         lanes/seeds/sizes/meta)
@@ -31,14 +32,13 @@ import org.apache.spark.sql.functions.{col, element_at, typedLit}
   *
   * Every verb is the same five steps:
   *  1. open: resolve the artifact generation and read S;
-  *  2. pin the touched shard roots (and the singletons the verb
-  *     rewrites) BEFORE any read — the pins are the commit's CAS
-  *     expectations, so a writer that lands in between fails this
-  *     commit loudly instead of being overwritten;
-  *  3. scan each surface as ONE multi-path scan over every pinned root's
-  *     live segments (each root's manifest read once) — never an S-way
-  *     union, whose per-branch planning is the cost sharding must not
-  *     add;
+  *  2. pin the manifest BEFORE any read — one pointer and one manifest
+  *     read; the pointer is the commit's CAS expectation, so a writer
+  *     that lands in between fails this commit loudly instead of being
+  *     overwritten;
+  *  3. scan each surface as ONE multi-path scan over the pinned roots'
+  *     live segments — never an S-way union, whose per-branch planning
+  *     is the cost sharding must not add;
   *  4. route rows to shards and collect the touched ones;
   *  5. commit through [[ShardedCommit.commitSegmented]]: the shard
   *     column and the empty surface of a rowless shard are added here.
@@ -65,8 +65,8 @@ object SegmentedIndex {
   trait Tier[A] {
     def families: Seq[Family]
 
-    /** 1-row rollup roots `<gen>/<name>`, rewritten whole in the same
-      * pointer transaction as the shards. */
+    /** 1-row rollup roots `<gen>/<name>`, rewritten whole as one
+      * segment in the same manifest commit as the shards. */
     def singletons: Seq[Surface] = Nil
 
     /** The surface holding one row per indexed id, and its id column. */
@@ -104,25 +104,17 @@ object SegmentedIndex {
   /** A tier's update or removal, planned once the artifact is opened. */
   final case class Fold(tier: Tier[_], plan: Opened => Write)
 
-  /** A pinned shard root: its live segments and the ordinal its next
-    * segment takes, each read once on first use. */
-  final class Root(spark: SparkSession, val shard: Int,
-                   val pin: ShardedCommit.Pin) {
-    lazy val segments: Seq[String] = SegmentStore.segmentsAt(spark, pin._3)
-    lazy val nextOrdinal: Long =
-      SegmentStore.maxSegOrdinal(spark, pin._1) + 1L
-    def paths(surface: String): Seq[String] =
-      segments.map(s => s"${pin._1}/$s/$surface")
-  }
+  /** A pinned root: its directory `key` under the artifact generation
+    * (`<family>/<s>`) and its shard. */
+  final case class Root(key: String, shard: Int)
 
   /** The pinned roots of one verb. `apply` is a surface's raw scan —
     * one multi-path scan over its family's pinned roots, or the pinned
     * singleton — built on first use; `live` is the tier's live view.
     * `layer` holds a merge-mode update's rows as one more segment. */
   final class Scan private[SegmentedIndex] (
-      tier: Tier[_], val opened: Opened,
-      val roots: Seq[(Family, Seq[Root])],
-      val singles: Seq[(Surface, ShardedCommit.Pin)],
+      tier: Tier[_], val opened: Opened, val pinned: SegmentStore.Pinned,
+      val roots: Seq[(Family, Seq[Root])], val singles: Seq[Surface],
       layer: Map[String, DataFrame]) {
 
     private val spark = opened.spark
@@ -136,11 +128,12 @@ object SegmentedIndex {
       val (spec, raw) = familyOf(surface) match {
         case Some((sp, rs)) =>
           sp -> ArtifactStore.readSurface(spark,
-            rs.flatMap(_.paths(surface)): _*)
+            rs.flatMap(r => pinned.paths(r.key, surface)): _*)
         case None =>
-          val (sp, pin) = singles.find(_._1.name == surface).getOrElse(
+          val sp = singles.find(_.name == surface).getOrElse(
             throw new IllegalArgumentException(s"$surface is not pinned"))
-          sp -> ArtifactStore.readSurface(spark, pin._3)
+          sp -> ArtifactStore.readSurface(spark,
+            pinned.paths(surface, surface): _*)
       }
       val cols = spec.cols.map(col)
       layer.get(surface).foldLeft(raw.select(cols: _*))(
@@ -150,22 +143,19 @@ object SegmentedIndex {
     /** Whether `surface` spans more than one segment of some root — the
       * partial segments `live` must merge. */
     def layered(surface: String): Boolean = layer.contains(surface) ||
-      familyOf(surface).exists(_._2.exists(_.segments.size > 1))
+      familyOf(surface).exists(_._2.exists(r =>
+        pinned.segments(r.key).size > 1))
 
     def live(surface: String): DataFrame =
       if (familyOf(surface).isDefined) tier.live(this, surface)
       else apply(surface)
 
-    /** Per row, the ordinal of the segment this commit mints in the row's
-      * root of `family` — lets a segment's rows carry their write order. */
-    def segOrdinal(family: String): Column = {
-      val (f, rs) = roots.find(_._1.name == family).get
-      element_at(typedLit(rs.map(r => r.shard -> r.nextOrdinal).toMap),
-        f.route(opened.numShards))
-    }
+    /** The ordinal of the segments this commit mints — lets a segment's
+      * rows carry their write order. */
+    def segOrdinal: Column = lit(pinned.manifest.next)
 
     private[SegmentedIndex] def withLayer(rows: Map[String, DataFrame]): Scan =
-      new Scan(tier, opened, roots, singles, rows)
+      new Scan(tier, opened, pinned, roots, singles, rows)
   }
 
   def open(spark: SparkSession, root: String): Opened = {
@@ -173,14 +163,18 @@ object SegmentedIndex {
     Opened(spark, dir, ShardedCommit.numShards(spark, dir))
   }
 
-  /** Pin `shards(family)` of every family and the named singletons. */
+  /** Scan `shards(family)` of every family and the named singletons of
+    * the manifest `p`. */
+  private def scan(tier: Tier[_], o: Opened, p: SegmentStore.Pinned,
+                   shards: Family => Seq[Int], singles: Seq[String]): Scan =
+    new Scan(tier, o, p, tier.families.map(f =>
+        f -> shards(f).map(sh => Root(s"${f.name}/$sh", sh))),
+      tier.singletons.filter(s => singles.contains(s.name)), Map.empty)
+
+  /** Pin the manifest of `o`, then scan as [[scan]]. */
   private def pin(tier: Tier[_], o: Opened, shards: Family => Seq[Int],
-                  singles: Seq[String]): Scan = new Scan(tier, o,
-    tier.families.map(f => f -> shards(f).map(sh => new Root(o.spark, sh,
-      ArtifactStore.pinGen(o.spark, s"${o.dir}/${f.name}/$sh")))),
-    tier.singletons.filter(s => singles.contains(s.name))
-      .map(s => s -> ArtifactStore.pinGen(o.spark, s"${o.dir}/${s.name}")),
-    Map.empty)
+                  singles: Seq[String]): Scan =
+    scan(tier, o, SegmentStore.pin(o.spark, o.dir), shards, singles)
 
   /** Pin every shard root of the artifact at `root`. */
   def pinAll(spark: SparkSession, tier: Tier[_], root: String): Scan = {
@@ -209,7 +203,7 @@ object SegmentedIndex {
     segmentCount(pinAll(spark, tier, root))
 
   private def segmentCount(s: Scan): Long =
-    s.roots.map(_._2.map(_.segments.size.toLong).sum).sum
+    s.roots.map(_._2.map(r => s.pinned.segments(r.key).size.toLong).sum).sum
 
   /** A full write of `a` as a fresh generation of `path` (S = numShards). */
   def save[A](spark: SparkSession, tier: Tier[A], a: A, path: String,
@@ -218,8 +212,9 @@ object SegmentedIndex {
     ArtifactStore.publish(spark, path) { dir =>
       ShardedCommit.writeNumShards(spark, dir, numShards)
       tier.writeRoots(dir, a)
-      commit(pin(tier, Opened(spark, dir, numShards), _ => 0 until numShards,
-        tier.singletons.map(_.name)), rows, ShardedCommit.SegReplace)
+      commit(scan(tier, Opened(spark, dir, numShards), SegmentStore.fresh(dir),
+        _ => 0 until numShards, tier.singletons.map(_.name)), rows,
+        ShardedCommit.SegReplace)
     }
   }
 
@@ -247,7 +242,7 @@ object SegmentedIndex {
     write(spark, root, fold) { (s, rows) =>
       if (append) commit(s, rows, ShardedCommit.SegAppend)
       else commit(s, liveRows(s.withLayer(rows)) ++
-        s.singles.map { case (sp, _) => sp.name -> rows(sp.name) },
+        s.singles.map(sp => sp.name -> rows(sp.name)),
         ShardedCommit.SegReplace)
     }
 
@@ -283,7 +278,7 @@ object SegmentedIndex {
     val n = s.opened.numShards
     def stored(sp: Surface): DataFrame =
       rows(sp.name).select(sp.cols.map(col): _*)
-    ShardedCommit.commitSegmented(s.opened.spark, s.opened.dir,
+    ShardedCommit.commitSegmented(s.opened.spark, s.pinned,
       s.roots.filter(_._2.nonEmpty).map { case (f, rs) =>
         ShardedCommit.SegFamily(rs, f.surfaces.map { sp =>
           val df = stored(sp)
@@ -291,6 +286,6 @@ object SegmentedIndex {
             () => df.limit(0), sp.wave)
         }, mode)
       },
-      s.singles.map { case (sp, p) => stored(sp) -> p })
+      s.singles.map(sp => stored(sp) -> sp.name))
   }
 }

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** How a sharded artifact's shard roots commit: the `_num_shards`
@@ -16,15 +17,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  3. a shard with no staged rows gets an EXPLICIT schema-bearing
   *     empty surface, so later readers/updates never hit a missing
   *     directory (and schema discovery survives a rowless shard);
-  *  4. [[ArtifactStore.commitGenAll]] verifies every CAS precondition
-  *     before ANY pointer flips — a lost race aborts with the write
-  *     unapplied EVERYWHERE.
+  *  4. every root's segment lands before ONE manifest names them all
+  *     and ONE pointer compare-and-swap makes it live
+  *     ([[SegmentStore.commit]]) — a lost race aborts with the write
+  *     unapplied EVERYWHERE, and a crash anywhere before the flip
+  *     leaves the old artifact whole.
   */
 object ShardedCommit {
-
-  /** [[ArtifactStore.pinGen]]'s result: (root, loaded pointer — the CAS
-    * expectation, resolved directory reads planned against). */
-  type Pin = (String, Option[String], String)
 
   /** One shard-keyed surface: `df` must carry an int `shard` column
     * routing each row; `empty` supplies the schema-bearing zero-row
@@ -49,7 +48,7 @@ object ShardedCommit {
   def writeNumShards(spark: SparkSession, base: String,
                      numShards: Int): Unit = {
     require(numShards > 0, s"numShards must be positive: $numShards")
-    val p = new org.apache.hadoop.fs.Path(base, NumShardsFile)
+    val p = new Path(base, NumShardsFile)
     val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
       .create(p, true)
     try out.write(numShards.toString.getBytes("UTF-8")) finally out.close()
@@ -58,8 +57,7 @@ object ShardedCommit {
   /** The grid size of the sharded artifact generation `base`, None when
     * `base` holds no sharded artifact (no marker). */
   def shardCount(spark: SparkSession, base: String): Option[Int] =
-    ArtifactStore.readText(spark,
-        new org.apache.hadoop.fs.Path(base, NumShardsFile))
+    ArtifactStore.readText(spark, new Path(base, NumShardsFile))
       .map(t => t.trim.toIntOption.getOrElse(throw new IllegalStateException(
         s"$base/$NumShardsFile is unreadable: '$t'")))
 
@@ -67,18 +65,17 @@ object ShardedCommit {
     shardCount(spark, base).getOrElse(throw new IllegalStateException(
       s"no sharded artifact at $base ($NumShardsFile missing)"))
 
-  /** How a [[SegFamily]]'s fresh segment joins each shard's manifest:
-    * REPLACE makes it the only live segment (build / compact / remove —
-    * the full-surface writes), APPEND adds it after the pinned
-    * generation's list (the O(delta) update). */
+  /** How a [[SegFamily]]'s fresh segment joins each root's segment
+    * list: REPLACE makes it the only live segment (build / compact /
+    * remove — the full-surface writes), APPEND adds it after the pinned
+    * manifest's list (the O(delta) update). */
   sealed trait SegMode
   case object SegReplace extends SegMode
   case object SegAppend extends SegMode
 
   /** Shard roots swapping the same surfaces together through the
-    * SEGMENTED layout ([[graft.sinks.SegmentStore]]): each pinned root
-    * gets one new immutable `_seg_*` data dir holding one directory per
-    * surface, plus a manifest-only generation. */
+    * SEGMENTED layout ([[graft.sinks.SegmentStore]]): each root gets one
+    * new immutable `_seg_*` data dir holding one directory per surface. */
   final case class SegFamily(shards: Seq[SegmentedIndex.Root],
                              surfaces: Seq[Surface], mode: SegMode)
 
@@ -87,8 +84,8 @@ object ShardedCommit {
     * scheduling / output-commit latencies (guide §2.6 — measured round
     * 18: the sequential form serialized 2-4 write jobs per commit).
     * `extras` are bounded independent writes (the singleton rollup
-    * roots) folded into the FIRST wave instead of serializing after the
-    * renames. Lambda isolation via
+    * segments) folded into the FIRST wave instead of serializing after
+    * the renames. Lambda isolation via
     * [[graft.operators.Clustering.concurrentFrames]] keeps
     * concurrently-evaluating plans from sharing `NamedLambdaVariable`
     * slots. */
@@ -119,21 +116,22 @@ object ShardedCommit {
 
   /** Stage every family's surfaces (one `partitionBy("shard")` job per
     * surface), land each shard's staged partitions in a fresh IMMUTABLE
-    * `_seg_*` dir, give each shard a new generation holding only the
-    * manifest naming its live segment list (see
-    * [[graft.sinks.SegmentStore]]), and flip all pointers in one
-    * [[ArtifactStore.commitGenAll]] transaction claimed at `path` —
-    * write volume is the staged rows, never the shard's prior surface.
-    * `singletons` are bounded rollup roots (e.g. BM25's 1-row stats)
-    * committing in the same transaction as single-file generations.
-    * After the flip, each root's orphaned segments (displaced-out
-    * manifests' data past the staging grace) are swept. */
-  def commitSegmented(spark: SparkSession, path: String,
+    * `_seg_*` dir of its root (one listing per staging directory names
+    * the partitions present), and commit ONE manifest naming every
+    * root's live segments through ONE pointer compare-and-swap against
+    * `pinned` ([[SegmentStore.commit]]) — write volume is the staged
+    * rows, never the shard's prior surface, and commit metadata is one
+    * file and one flip whatever the number of roots. `singletons` are
+    * bounded rollup roots (e.g. BM25's 1-row stats), each written whole
+    * as a segment of its own root during the first staging wave. */
+  def commitSegmented(spark: SparkSession, pinned: SegmentStore.Pinned,
                       families: Seq[SegFamily],
-                      singletons: Seq[(DataFrame, Pin)] = Nil): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+                      singletons: Seq[(DataFrame, String)] = Nil): Unit = {
+    val path = pinned.dir
+    val fs =
+      new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tag = java.util.UUID.randomUUID().toString.take(8)
+    val seg = SegmentStore.segName(pinned.manifest.next)
     val staged: Seq[(SegFamily, Seq[(Surface, String)])] =
       families.zipWithIndex.map { case (fam, fi) =>
         fam -> fam.surfaces.zipWithIndex.map { case (surf, si) =>
@@ -141,58 +139,31 @@ object ShardedCommit {
         }
       }
     try {
-      // singleton rollup writes overlap the wave-0 stagings: their
-      // generation dirs are named up front, written concurrently, and
-      // committed in the same pointer transaction
-      val singletonGens = singletons.map { case (df, (root, loaded, _)) =>
-        (df, root, loaded, ArtifactStore.newGenDir(spark, root, loaded))
-      }
-      stageAll(staged.flatMap(_._2), singletonGens.map {
-        case (df, _, _, gen) =>
-          df -> ((d: DataFrame) =>
-            d.coalesce(1).write.mode("overwrite").parquet(gen))
+      stageAll(staged.flatMap(_._2), singletons.map { case (df, key) =>
+        df -> ((d: DataFrame) =>
+          d.coalesce(1).write.mode("overwrite").parquet(s"$path/$key/$seg/$key"))
       })
-      val commits = scala.collection.mutable.ArrayBuffer
-        .empty[(String, String, Option[String])]
-      val roots = scala.collection.mutable.ArrayBuffer.empty[String]
-      staged.foreach { case (fam, surfs) =>
-        fam.shards.foreach { r =>
-          val (root, loaded, _) = r.pin
-          val sh = r.shard
-          val segName = SegmentStore.segName(r.nextOrdinal)
-          val segDir = s"$root/$segName"
-          fs.mkdirs(new org.apache.hadoop.fs.Path(segDir))
-          surfs.foreach { case (surf, stage) =>
-            val src = new org.apache.hadoop.fs.Path(s"$stage/shard=$sh")
-            if (fs.exists(src))
-              require(fs.rename(src,
-                  new org.apache.hadoop.fs.Path(s"$segDir/${surf.name}")),
-                s"segmented commit: cannot stage $src as " +
-                  s"$segDir/${surf.name}")
+      val landed: Seq[(String, Seq[String])] = staged.flatMap { case (fam, surfs) =>
+        val present = surfs.map { case (_, stage) =>
+          SegmentStore.list(fs, stage).map(_.getPath.getName).toSet }
+        fam.shards.map { r =>
+          val segDir = new Path(s"$path/${r.key}/$seg")
+          fs.mkdirs(segDir)
+          surfs.zip(present).foreach { case ((surf, stage), parts) =>
+            val dst = new Path(segDir, surf.name)
+            if (parts(s"shard=${r.shard}"))
+              require(fs.rename(new Path(s"$stage/shard=${r.shard}"), dst),
+                s"segmented commit: cannot stage $stage/shard=${r.shard} as $dst")
             else
-              surf.empty().coalesce(1).write.mode("overwrite")
-                .parquet(s"$segDir/${surf.name}")
+              surf.empty().coalesce(1).write.mode("overwrite").parquet(dst.toString)
           }
-          val manifest = fam.mode match {
-            case SegReplace => Seq(segName)
-            case SegAppend => r.segments :+ segName
-          }
-          val gen = ArtifactStore.newGenDir(spark, root, loaded)
-          fs.mkdirs(new org.apache.hadoop.fs.Path(gen))
-          SegmentStore.writeManifest(spark, gen, manifest)
-          commits += ((root, gen, loaded))
-          roots += root
+          r.key -> ((if (fam.mode == SegAppend) pinned.segments(r.key)
+            else Nil) :+ seg)
         }
-      }
-      singletonGens.foreach { case (_, root, loaded, gen) =>
-        commits += ((root, gen, loaded))
-      }
-      ArtifactStore.commitGenAll(spark, path, commits.toSeq)
-      roots.distinct.foreach(r => SegmentStore.sweepOrphans(spark, r))
+      } ++ singletons.map { case (_, key) => key -> Seq(seg) }
+      SegmentStore.commit(spark, pinned, landed)
     } finally staged.foreach { case (_, surfs) =>
-      surfs.foreach { case (_, stage) =>
-        fs.delete(new org.apache.hadoop.fs.Path(stage), true)
-      }
+      surfs.foreach { case (_, stage) => fs.delete(new Path(stage), true) }
     }
   }
 }

@@ -1897,12 +1897,13 @@ class ToolSpec extends SparkSpec {
     val delta = Seq((10L, "novel content here")).toDF("doc_id", "text")
     delta.write.parquet(s"$base/delta")
     val shardedRoot = graft.sinks.ArtifactStore.resolve(spark, sharded)
-    def genOf(kind: String, sh: Int) = graft.sinks.ArtifactStore
-      .currentGen(spark, s"$shardedRoot/$kind/$sh")
+    // a root "advances" when the artifact manifest names new segments
+    def segsOf(key: String) =
+      graft.sinks.SegmentStore.pin(spark, shardedRoot).segments(key)
+    def genOf(kind: String, sh: Int) = segsOf(s"$kind/$sh")
     val tBefore = (0 until 4).map(genOf("shards", _))
     val dBefore = (0 until 4).map(genOf("docshards", _))
-    val statsBefore = graft.sinks.ArtifactStore.currentGen(
-      spark, s"$shardedRoot/stats")
+    val statsBefore = segsOf("stats")
     // expected touched term shards, by the artifact's own routing
     val expectedT = {
       import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
@@ -1925,8 +1926,7 @@ class ToolSpec extends SparkSpec {
       else assert(genOf("docshards", sh) == dBefore(sh),
         s"doc shard $sh must hold")
     }
-    assert(graft.sinks.ArtifactStore.currentGen(spark,
-      s"$shardedRoot/stats") != statsBefore, "stats rollup must advance")
+    assert(segsOf("stats") != statsBefore, "stats rollup must advance")
     // updated == full rebuild on the union (the q153/q186 exactness)
     corpus.unionByName(delta).write.parquet(s"$base/full")
     val full = s"$base/full-idx"
@@ -2560,8 +2560,9 @@ class ToolSpec extends SparkSpec {
       .toDF("doc_id", "text")
     delta.write.parquet(s"$base/delta")
     val shardedRoot = graft.sinks.ArtifactStore.resolve(spark, sharded)
-    def genOf(sh: Int) = graft.sinks.ArtifactStore.currentGen(
-      spark, s"$shardedRoot/shards/$sh")
+    // a root "advances" when the artifact manifest names new segments
+    def genOf(sh: Int) =
+      graft.sinks.SegmentStore.pin(spark, shardedRoot).segments(s"shards/$sh")
     val before = (0 until 8).map(genOf)
     // expected touched shards, by the artifact's own routing
     val expected = {
@@ -2654,8 +2655,9 @@ class ToolSpec extends SparkSpec {
     val delta = Seq((10L, "zzz qqq")).toDF("doc_id", "text")
     delta.write.parquet(s"$base/delta")
     val shardedRoot = graft.sinks.ArtifactStore.resolve(spark, sharded)
-    def genOf(sh: Int) = graft.sinks.ArtifactStore.currentGen(
-      spark, s"$shardedRoot/shards/$sh")
+    // a root "advances" when the artifact manifest names new segments
+    def genOf(sh: Int) =
+      graft.sinks.SegmentStore.pin(spark, shardedRoot).segments(s"shards/$sh")
     val before = (0 until 8).map(genOf)
     val expected = {
       import org.apache.spark.sql.functions.{lit, pmod, xxhash64}
@@ -2732,8 +2734,9 @@ class ToolSpec extends SparkSpec {
     assert(serveOf("semdedup-sharded", sharded, "sh") ==
       serveOf("semdedup", single, "single"))
     val shardedRoot = graft.sinks.ArtifactStore.resolve(spark, sharded)
-    def genOf(sh: Int) = graft.sinks.ArtifactStore.currentGen(
-      spark, s"$shardedRoot/shards/$sh")
+    // a root "advances" when the artifact manifest names new segments
+    def genOf(sh: Int) =
+      graft.sinks.SegmentStore.pin(spark, shardedRoot).segments(s"shards/$sh")
     val before = (0 until 4).map(genOf)
     // vid 300 mod 4 == 0: only assign shard 0 rewrites on the add
     assert(Tool.run(spark, Array("index-update", "--type=semdedup-sharded",

@@ -22,11 +22,10 @@ class RetrievalShardSpec extends SparkSpec {
   private def assertRouted(path: String, after: String, family: String,
                            surfaces: Seq[(String, Column)],
                            nonEmpty: Set[String]): Unit = {
-    val base = ArtifactStore.resolve(spark, path)
+    val pinned = SegmentStore.pin(spark, ArtifactStore.resolve(spark, path))
     val checks = for (sh <- 0 until S; (surface, hash) <- surfaces) yield {
-      val root = s"$base/$family/$sh"
-      val rows = spark.read.parquet(SegmentStore.surfacePathsAt(spark, root,
-        ArtifactStore.resolve(spark, root), surface): _*)
+      val rows = spark.read.parquet(
+        pinned.paths(s"$family/$sh", surface): _*)
       (surface, s"$family/$sh/$surface", rows.count(),
         rows.filter(hash =!= sh).count())
     }

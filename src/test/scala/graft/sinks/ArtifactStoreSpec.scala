@@ -508,11 +508,8 @@ class ArtifactStoreSpec extends SparkSpec {
     val bm = ArtifactStore.resolve(spark, s"$base/bm25-sharded")
     def fieldsByName(df: DataFrame) = df.schema.fields.map(f => f.name -> f).toMap
     for (surface <- Seq("postings", "docfreq")) {
-      val paths = (0 until 2).flatMap { sh =>
-        val root = s"$bm/shards/$sh"
-        SegmentStore.surfacePathsAt(spark, root,
-          ArtifactStore.resolve(spark, root), surface)
-      }
+      val paths = (0 until 2).flatMap(sh =>
+        SegmentStore.pin(spark, bm).paths(s"shards/$sh", surface))
       assert(paths.size > 2, s"no append segment in $paths")
       assert(fieldsByName(ArtifactStore.readSurface(spark, paths: _*)) ==
         fieldsByName(spark.read.parquet(paths: _*)), surface)
