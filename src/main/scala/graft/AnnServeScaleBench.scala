@@ -42,6 +42,7 @@ object AnnServeScaleBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import graft.operators.{Clustering, Similarity}
+    import graft.sinks.SegmentedIndex
 
     val emb = spark.read.parquet(s"$corpusDir/embeddings.parquet")
       .select(col("vec_id"), col("embedding"))
@@ -138,14 +139,14 @@ object AnnServeScaleBench {
           dim = 64, m = 8, maxQueryId, nprobe, topK)
         .agg(count(lit(1)), sum(col("rank"))).head(): Unit)
 
-    // SHARDED layout of the SAME index (8 generational shard roots,
-    // shared codebook): serve is the per-shard probe union — expected
+    // SHARDED layout of the SAME index (8 shard roots, shared
+    // codebook): serve is the per-shard probe union — expected
     // to TRACK serve_pruned across the corpus doubling (equal postings
     // sets; each shard keeps its own probed-cell pruning, so the only
     // delta is fixed per-scan listing overhead, not data)
     val shPath = s"/tmp/annservescale_sh_${System.nanoTime()}"
-    Clustering.saveIvfFlatSharded(idx, shPath, numShards = 8)
-    val shIdx = Clustering.loadIvfFlatSharded(spark, shPath)
+    SegmentedIndex.save(spark, Clustering.IvfFlatSharded, idx, shPath, 8)
+    val shIdx = SegmentedIndex.load(spark, Clustering.IvfFlatSharded, shPath)
     val sharded = timeMin2(() =>
       Clustering.serveIvfFlat(shIdx, emb, "vec_id", "embedding",
           maxQueryId, nprobe, topK)
@@ -156,8 +157,8 @@ object AnnServeScaleBench {
     // serve is expected to TRACK serve_ivfpq_adc across the doubling
     // (equal surface sets; per-shard probed-cell pruning holds)
     val pqShPath = s"/tmp/annservescale_pqsh_${System.nanoTime()}"
-    Clustering.saveIvfPqSharded(pqIdx, pqShPath, numShards = 8)
-    val pqShIdx = Clustering.loadIvfPqSharded(spark, pqShPath)
+    SegmentedIndex.save(spark, Clustering.IvfPqSharded, pqIdx, pqShPath, 8)
+    val pqShIdx = SegmentedIndex.load(spark, Clustering.IvfPqSharded, pqShPath)
     val pqSharded = timeMin2(() =>
       Clustering.serveIvfPq(pqShIdx, emb, "vec_id", "embedding",
           dim = 64, m = 8, maxQueryId, nprobe, topK)

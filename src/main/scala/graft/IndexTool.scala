@@ -122,7 +122,19 @@ object IndexTool {
       (ids, _) => Dedup.CdcSharded.removal(ids)),
     "semdedup-sharded" -> SegmentedType(Clustering.SemSharded, docs = false,
       (in, f) => Clustering.SemSharded.delta(embOf(in, f)),
-      (ids, _) => Clustering.SemSharded.removal(ids)))
+      (ids, _) => Clustering.SemSharded.removal(ids)),
+    "ivfflat-sharded" -> SegmentedType(Clustering.IvfFlatSharded,
+      docs = false, (in, f) => Clustering.IvfFlatSharded.delta(
+        embAllOf(in, f), "vec_id", "embedding"),
+      (ids, _) => Clustering.IvfFlatSharded.removal(ids)),
+    "ivfpq-sharded" -> SegmentedType(Clustering.IvfPqSharded, docs = false,
+      (in, f) => Clustering.IvfPqSharded.delta(embAllOf(in, f), "vec_id",
+        "embedding", intFlag(f, "dim", 64), intFlag(f, "m", 8)),
+      (ids, _) => Clustering.IvfPqSharded.removal(ids)),
+    "ivfpqr-sharded" -> SegmentedType(Clustering.IvfPqrSharded, docs = false,
+      (in, f) => Clustering.IvfPqrSharded.delta(embAllOf(in, f), "vec_id",
+        "embedding", intFlag(f, "dim", 64), intFlag(f, "m", 8)),
+      (ids, _) => Clustering.IvfPqrSharded.removal(ids)))
 
   /** A tier's artifact at `path` from either layout: the segmented type
     * through [[SegmentedIndex.load]], the flat one through `flat`. */
@@ -132,12 +144,28 @@ object IndexTool {
     else flat
 
   /** Save `a` in the layout `tpe` names: segmented with `--shards`
-    * (default 4) roots, or flat through `flat`. */
+    * (default 4) roots, committed against `expected`, or flat through
+    * `flat`. */
   private def saveTier[A](spark: SparkSession, tpe: String,
                           tier: SegmentedIndex.Tier[A], a: A, path: String,
-                          flags: Map[String, String])(flat: => Unit): Unit =
-    if (Segmented.contains(tpe))
-      SegmentedIndex.save(spark, tier, a, path, intFlag(flags, "shards", 4))
+                          flags: Map[String, String],
+                          expected: ArtifactStore.Expect = None)(
+                          flat: => Unit): Unit =
+    if (Segmented.contains(tpe)) SegmentedIndex.save(spark, tier, a, path,
+      intFlag(flags, "shards", 4), expected)
+    else flat
+
+  /** The artifact at `path` in whichever layout it holds — segmented
+    * when its live generation carries the `_num_shards` marker, else
+    * flat through `flat`. For flags that name "an ivfflat/ivfpq/bm25
+    * artifact" without a type of their own (`--rerank-from`, the hybrid
+    * `--path`/`--dense-path`), so those composites work against either
+    * layout — at 100 TB the raw-vector rerank source IS the sharded
+    * artifact. */
+  private def loadAuto[A](spark: SparkSession, path: String,
+                          tier: SegmentedIndex.Tier[A])(flat: => A): A =
+    if (ShardedCommit.shardCount(spark, ArtifactStore.resolve(spark, path))
+        .isDefined) SegmentedIndex.load(spark, tier, path)
     else flat
 
   private def docsOf(df: DataFrame, flags: Map[String, String]): DataFrame = {
@@ -223,66 +251,42 @@ object IndexTool {
         Clustering.saveIvfCodebook(Clustering.ivfCoarseLanes(
           embOf(input, flags), "vec_id", "embedding",
           num("centroids", 64), num("iters", Similarity.IvfCoarseIters)), path)
-      case "ivfflat" =>
+      case "ivfflat" | "ivfflat-sharded" =>
         // the FULL inverted-file index: codebook + cell-partitioned
         // postings — serve reads only the probed cells, and the
         // artifact is updatable (Faiss train/add split).
         // --attr-cols=a,b materializes metadata columns IN the postings
-        // for filtered serves (--filter-col/--filter-val)
-        Clustering.saveIvfFlatIndex(Clustering.buildIvfFlatIndex(
+        // for filtered serves (--filter-col/--filter-val); the sharded
+        // layout splits the postings into --shards roots (n_id mod S)
+        val idx = Clustering.buildIvfFlatIndex(
           pqEmbOf(input, flags), "vec_id", "embedding",
           num("centroids", 64), num("iters", Similarity.IvfCoarseIters),
-          attrCols = attrColsOf(flags)), path)
-      case "ivfflat-sharded" =>
-        // the 100 TB rewrite-unit layout: same index, postings split
-        // into --shards independent generational roots (n_id mod S) —
-        // an update rewrites only the shards its delta routes to.
-        // --attr-cols ride every shard surface, so the sharded serve
-        // takes --filter-col/--filter-val exactly like the unsharded one
-        Clustering.saveIvfFlatSharded(Clustering.buildIvfFlatIndex(
-          pqEmbOf(input, flags), "vec_id", "embedding",
-          num("centroids", 64), num("iters", Similarity.IvfCoarseIters),
-          attrCols = attrColsOf(flags)),
-          path, num("shards", 4))
-      case "ivfpq" =>
+          attrCols = attrColsOf(flags))
+        saveTier(spark, tpe, Clustering.IvfFlatSharded, idx, path, flags,
+          expected)(Clustering.saveIvfFlatIndex(idx, path, expected))
+      case "ivfpq" | "ivfpq-sharded" =>
         // the composed compressed index: coarse codebook +
         // cell-partitioned lists + PQ codes/codebooks, no raw vectors.
         // --attr-cols materializes metadata in the CELLS surface for
         // filtered ADC serves (--filter-col/--filter-val)
-        Clustering.saveIvfPqIndex(Clustering.buildIvfPqIndex(
+        val idx = Clustering.buildIvfPqIndex(
           pqEmbOf(input, flags), "vec_id", "embedding",
           num("dim", 64), num("m", 8), num("k", 16), num("iters", 2),
-          num("centroids", 64), attrCols = attrColsOf(flags)), path)
-      case "ivfpq-sharded" =>
-        // the 100 TB rewrite-unit layout for the PRODUCTION compressed
-        // tier: cells + codes sharded by n_id mod --shards under the
-        // shared frozen codebooks, one generational root per shard — an
-        // update/remove rewrites only the shards its delta routes to,
-        // with cells and codes swapping together inside one generation
-        Clustering.saveIvfPqSharded(Clustering.buildIvfPqIndex(
-          pqEmbOf(input, flags), "vec_id", "embedding",
-          num("dim", 64), num("m", 8), num("k", 16), num("iters", 2),
-          num("centroids", 64), attrCols = attrColsOf(flags)),
-          path, num("shards", 4), expected)
-      case "ivfpqr" =>
+          num("centroids", 64), attrCols = attrColsOf(flags))
+        saveTier(spark, tpe, Clustering.IvfPqSharded, idx, path, flags,
+          expected)(Clustering.saveIvfPqIndex(idx, path, expected))
+      case "ivfpqr" | "ivfpqr-sharded" =>
         // residual-encoded IVFPQ (the production Faiss IndexIVFPQ): PQ
         // quantizes v − centroid(cell), so the codebooks spend their
         // resolution on within-cell geometry — the fix for raw-vector
         // ADC's measured in-cluster recall collapse. --attr-cols ride
         // the cells surface for the filtered residual-ADC serve
-        Clustering.saveIvfPqrIndex(Clustering.buildIvfPqrIndex(
+        val idx = Clustering.buildIvfPqrIndex(
           pqEmbOf(input, flags), "vec_id", "embedding",
           num("dim", 64), num("m", 8), num("k", 16), num("iters", 2),
-          num("centroids", 64), attrCols = attrColsOf(flags)), path)
-      case "ivfpqr-sharded" =>
-        // the residual tier in the 100 TB rewrite-unit layout — same
-        // per-shard cells+codes generations as ivfpq-sharded under the
-        // shared coarse + residual-PQ codebooks
-        Clustering.saveIvfPqrSharded(Clustering.buildIvfPqrIndex(
-          pqEmbOf(input, flags), "vec_id", "embedding",
-          num("dim", 64), num("m", 8), num("k", 16), num("iters", 2),
-          num("centroids", 64), attrCols = attrColsOf(flags)),
-          path, num("shards", 4), expected)
+          num("centroids", 64), attrCols = attrColsOf(flags))
+        saveTier(spark, tpe, Clustering.IvfPqrSharded, idx, path, flags,
+          expected)(Clustering.saveIvfPqrIndex(idx, path, expected))
       case "imi" =>
         // inverted MULTI-index: two half-space codebooks whose product
         // is the cell grid — fit cost n·(kA+kB) for kA·kB cells, the
@@ -441,24 +445,6 @@ object IndexTool {
       col(flags.getOrElse("id-col", "doc_id")).cast(LongType).as("doc_id"))
     def vecIds: DataFrame = input.select(
       col(flags.getOrElse("id-col", "vec_id")).cast(LongType).as("n_id"))
-    if (tpe == "ivfflat-sharded") {
-      // sharded removals commit per-SHARD generations (only the shards
-      // the removed ids route to are read or rewritten) — the artifact
-      // generation never moves, mirroring the sharded add
-      val touched = Clustering.removeFromIvfFlatSharded(spark, path, vecIds)
-      println(s"removed from shards: ${touched.mkString(", ")}")
-      return
-    }
-    if (tpe == "ivfpq-sharded") {
-      val touched = Clustering.removeFromIvfPqSharded(spark, path, vecIds)
-      println(s"removed from shards: ${touched.mkString(", ")}")
-      return
-    }
-    if (tpe == "ivfpqr-sharded") {
-      val touched = Clustering.removeFromIvfPqrSharded(spark, path, vecIds)
-      println(s"removed from shards: ${touched.mkString(", ")}")
-      return
-    }
     Segmented.get(tpe) match {
       case Some(seg) =>
         val touched = SegmentedIndex.remove(spark, path, seg.removal(
@@ -526,8 +512,8 @@ object IndexTool {
               flags: Map[String, String]): Map[String, Long] = {
     require(CompactTypes(tpe),
       s"index-compact supports --type=${CompactTypes.toSeq.sorted.mkString("|")} " +
-        s"only (got '$tpe'); the vector sharded tiers rewrite whole " +
-        s"shards on update, so they never accumulate segments")
+        s"only (got '$tpe'): the other types keep one flat generation, " +
+        s"with no segments to fold")
     val (before, after) =
       SegmentedIndex.compact(spark, Segmented(tpe).tier, path)
     println(s"compacted: $before -> $after live segments")
@@ -576,14 +562,8 @@ object IndexTool {
           s"codes cannot reproduce — re-supply the corpus the artifact " +
           s"indexes (the ivfflat/imi rebuilds retrain from their own " +
           s"exact postings and take no --input)"))
-      val (cells, coarseLanes) =
-        if (tpe == "ivfpq-sharded") {
-          val idx = Clustering.loadIvfPqSharded(spark, base)
-          (idx.cells, idx.coarseLanes)
-        } else {
-          val idx = Clustering.loadIvfPqrSharded(spark, base)
-          (idx.cells, idx.coarseLanes)
-        }
+      // one layout for both: read it through the ivfpq-sharded tier
+      val idx = SegmentedIndex.load(spark, Clustering.IvfPqSharded, base)
       // The three PRE-BUILD reads — the occupancy-skew agg, the
       // stale-corpus id check, and the centroid-count default — are
       // independent read-only jobs; running them concurrently collapses
@@ -602,8 +582,8 @@ object IndexTool {
         .join(embOf(corpus, flags).select(col("vec_id").as("id"))
           .distinct(), Seq("id"), "left_anti")
         .limit(6)
-      val preFrames = Seq(Clustering.occupancySkewAgg(cells),
-        coarseLanes.select(col("cluster")).distinct()) ++
+      val preFrames = Seq(Clustering.occupancySkewAgg(idx.cells),
+        idx.coarseLanes.select(col("cluster")).distinct()) ++
         (if (doCheck) Seq(missingFrame) else Nil)
       val pre = Clustering.concurrentFrames(preFrames) { (i, df) =>
         if (i == 0) Clustering.decodeOccupancySkew(df.head()): Any
@@ -633,9 +613,9 @@ object IndexTool {
       // centroid count from the trained coarse codebook, attribute
       // columns from the cells surface
       val defaults = Map(
-        "shards" -> Clustering.shardedNumShards(spark, base).toString,
+        "shards" -> ShardedCommit.numShards(spark, base).toString,
         "centroids" -> pre(1).asInstanceOf[Long].toString,
-        "attr-cols" -> cells.columns.toSeq
+        "attr-cols" -> idx.cells.columns.toSeq
           .filterNot(Set("n_id", "c_id")).mkString(","))
         .filter { case (_, v) => v.nonEmpty }
       val effective = defaults ++ flags
@@ -666,10 +646,8 @@ object IndexTool {
     // postings (exact scaled vectors, same as the unsharded load) and
     // re-persists as a fresh sharded layout — drift accumulates on
     // exactly this long-lived artifact, so it must be repairable
-    val idx = tpe match {
-      case "ivfflat" => Clustering.loadIvfFlatIndex(spark, base)
-      case _ => Clustering.loadIvfFlatSharded(spark, base)
-    }
+    val idx = loadTier(spark, tpe, base, Clustering.IvfFlatSharded)(
+      Clustering.loadIvfFlatIndex(spark, base))
     val skew = Clustering.postingsOccupancySkew(idx.postings)
     // describe-driven trigger: refuse a retrain the occupancy does not
     // justify (a full k-means over the corpus is the expensive step a
@@ -689,15 +667,12 @@ object IndexTool {
       idx.lanes.select(col("cluster")).distinct().count().toInt)
     val rebuilt = Clustering.rebuildIvfFlatIndex(idx,
       centroids, num("iters", Similarity.IvfCoarseIters))
-    tpe match {
-      case "ivfflat" => Clustering.saveIvfFlatIndex(rebuilt, path, expected)
-      case _ =>
-        // a fresh artifact generation holding a complete sharded layout
-        // (lanes + marker + per-shard generational roots) — in-flight
-        // serves keep the displaced generation's whole shard tree
-        Clustering.saveIvfFlatSharded(rebuilt, path,
-          Clustering.shardedNumShards(spark, base), expected)
-    }
+    // a sharded rebuild commits a fresh artifact generation holding a
+    // complete sharded layout on the live grid — in-flight serves keep
+    // the displaced generation's whole shard tree
+    if (tpe == "ivfflat") Clustering.saveIvfFlatIndex(rebuilt, path, expected)
+    else SegmentedIndex.save(spark, Clustering.IvfFlatSharded, rebuilt, path,
+      ShardedCommit.numShards(spark, base), expected)
     Map("skew_x100_before" -> (skew * 100).toLong,
       "centroids" -> centroids.toLong)
   }
@@ -717,17 +692,11 @@ object IndexTool {
       .select(col("doc_id").as("id"))
     case "ivfflat" => Clustering.loadIvfFlatIndex(spark, base).postings
       .select(col("n_id").as("id"))
-    case "ivfflat-sharded" => Clustering.loadIvfFlatSharded(spark, base)
-      .postings.select(col("n_id").as("id"))
     case "semdedup" => Clustering.loadSemIndex(spark, base).assign
       .select(col("vid").as("id"))
     case "pq" => Clustering.loadPqIndex(spark, base).codes
       .select(col("n_id").as("id"))
     case "ivfpq" => Clustering.loadIvfPqIndex(spark, base).codes
-      .select(col("n_id").as("id"))
-    case "ivfpq-sharded" => Clustering.loadIvfPqSharded(spark, base).cells
-      .select(col("n_id").as("id"))
-    case "ivfpqr-sharded" => Clustering.loadIvfPqrSharded(spark, base).cells
       .select(col("n_id").as("id"))
     case "imi" => Clustering.loadImiIndex(spark, base).postings
       .select(col("n_id").as("id"))
@@ -788,34 +757,10 @@ object IndexTool {
           s"(index-remove) or pass --skip-disjoint-check=true if the " +
           s"scheduler guarantees disjoint deltas")
     }
-    if (tpe == "ivfflat-sharded") {
-      // sharded adds commit per-SHARD pointer generations (one
-      // all-or-nothing multi-shard flip): only the shards the delta's
-      // ids route to are read or rewritten, and the artifact ROOT
-      // generation (codebook + shard set) never moves on an add — the
-      // rewrite unit at 100 TB is a shard, never the whole postings
-      // surface.
-      val touched = Clustering.updateIvfFlatSharded(spark, path,
-        embAllOf(input, flags), "vec_id", "embedding")
-      println(s"updated shards: ${touched.mkString(", ")}")
-      return
-    }
-    if (tpe == "ivfpq-sharded") {
-      // same economics on the production compressed tier: cells + codes
-      // of only the touched shards rewrite, swapping together inside
-      // each shard's generation
-      val touched = Clustering.updateIvfPqSharded(spark, path,
-        embAllOf(input, flags), "vec_id", "embedding",
-        num("dim", 64), num("m", 8))
-      println(s"updated shards: ${touched.mkString(", ")}")
-      return
-    }
-    // --mode for the segmented doc/lexical tiers: `append` (default —
-    // each touched shard gains one delta-sized immutable segment; the
-    // O(delta) write the 100 TB cadence needs) or `merge` (whole-shard
-    // rewrite — the compacting write). Vector-tier sharded updates
-    // ignore it (their deltas route by id, not by sprayed content
-    // hashes).
+    // --mode for every sharded tier: `append` (default — each touched
+    // shard gains one delta-sized immutable segment; the O(delta) write
+    // the 100 TB cadence needs) or `merge` (whole-shard rewrite — the
+    // compacting write). Flat tiers ignore it.
     val appendMode = flags.getOrElse("mode", "append") match {
       case "append" => true
       case "merge" => false
@@ -829,13 +774,6 @@ object IndexTool {
         println(s"updated shards: ${touched.mkString(", ")}")
         return
       case None =>
-    }
-    if (tpe == "ivfpqr-sharded") {
-      val touched = Clustering.updateIvfPqrSharded(spark, path,
-        embAllOf(input, flags), "vec_id", "embedding",
-        num("dim", 64), num("m", 8))
-      println(s"updated shards: ${touched.mkString(", ")}")
-      return
     }
     // Whole-surface rewrite gate: every UNSHARDED fold below re-persists
     // the entire corpus-sized surface per delta — exact, but the
@@ -1018,32 +956,6 @@ object IndexTool {
     }
   }
 
-  /** Whether the artifact at `path` is SHARDED: its live generation
-    * carries the `_num_shards` marker. Used wherever a flag names "an
-    * ivfflat/ivfpq/bm25 artifact" without a type of its own
-    * (`--rerank-from`, the hybrid `--path`/`--dense-path`) so those
-    * composites work against either layout — at 100 TB the raw-vector
-    * rerank source IS the sharded artifact. */
-  private def isSharded(spark: SparkSession, path: String): Boolean =
-    ShardedCommit.shardCount(spark, ArtifactStore.resolve(spark, path))
-      .isDefined
-
-  private def loadFlatAuto(spark: SparkSession, path: String)
-      : Clustering.IvfFlatIndex =
-    if (isSharded(spark, path)) Clustering.loadIvfFlatSharded(spark, path)
-    else Clustering.loadIvfFlatIndex(spark, path)
-
-  private def loadBm25Auto(spark: SparkSession, path: String)
-      : graft.operators.Bm25Index =
-    if (isSharded(spark, path))
-      SegmentedIndex.load(spark, Retrieval.Bm25Sharded, path)
-    else Retrieval.loadBm25Index(spark, path)
-
-  private def loadPqAuto(spark: SparkSession, path: String)
-      : Clustering.IvfPqIndex =
-    if (isSharded(spark, path)) Clustering.loadIvfPqSharded(spark, path)
-    else Clustering.loadIvfPqIndex(spark, path)
-
   /** Opt-out id-parity precheck for the COMPOSITE serves (`--rerank-from`
     * two-stage search, `--type=hybrid` fusion): they read two
     * independently updated artifacts, and a one-sided update degrades
@@ -1112,7 +1024,8 @@ object IndexTool {
     }
     flags.get("rerank-from") match {
       case Some(flatPath) =>
-        val postings = loadFlatAuto(spark, flatPath).postings
+        val postings = loadAuto(spark, flatPath, Clustering.IvfFlatSharded)(
+          Clustering.loadIvfFlatIndex(spark, flatPath)).postings
         // parity on the UNFILTERED id sets: a --filter-col restriction
         // is per-serve intent, not artifact drift
         parityPrecheck(flags, "the two-stage rerank serve",
@@ -1170,7 +1083,8 @@ object IndexTool {
     }
     flags.get("rerank-from") match {
       case Some(flatPath) =>
-        val postings = loadFlatAuto(spark, flatPath).postings
+        val postings = loadAuto(spark, flatPath, Clustering.IvfFlatSharded)(
+          Clustering.loadIvfFlatIndex(spark, flatPath)).postings
         parityPrecheck(flags, "the two-stage residual rerank serve",
           "the residual-ADC artifact (--path)",
           idx0.cells.select(col("n_id").as("id")),
@@ -1205,7 +1119,8 @@ object IndexTool {
     // same fixed state, like every other stream tier's hoisted load.
     // The lexical leg layout-sniffs a bm25-sharded root, exactly like
     // the dense legs sniff theirs
-    val bmIdx = loadBm25Auto(spark, path)
+    val bmIdx = loadAuto(spark, path, Retrieval.Bm25Sharded)(
+      Retrieval.loadBm25Index(spark, path))
     // The dense leg: raw-vector ivfflat (default), optionally filtered
     // (--filter-col/--filter-val — the predicate composes into the
     // probed scan, so the leg's pool is all MATCHING docs), or the
@@ -1216,7 +1131,8 @@ object IndexTool {
     val denseLeg: DataFrame => DataFrame =
       flags.getOrElse("dense-type", "ivfflat") match {
         case "ivfflat" =>
-          val flatIdx = loadFlatAuto(spark, densePath)
+          val flatIdx = loadAuto(spark, densePath, Clustering.IvfFlatSharded)(
+            Clustering.loadIvfFlatIndex(spark, densePath))
           parityPrecheck(flags, "the hybrid serve",
             "the bm25 artifact (--path)",
             bmIdx.doclen.select(col("doc_id").as("id")),
@@ -1240,7 +1156,8 @@ object IndexTool {
               "vec_id", "embedding", maxQ, num("nprobe", 2), pool)
           }
         case "ivfpq" =>
-          val pqIdx0 = loadPqAuto(spark, densePath)
+          val pqIdx0 = loadAuto(spark, densePath, Clustering.IvfPqSharded)(
+            Clustering.loadIvfPqIndex(spark, densePath))
           val pqIdx = flags.get("filter-col") match {
             case Some(c) =>
               require(pqIdx0.cells.columns.contains(c),
@@ -1260,7 +1177,8 @@ object IndexTool {
               "--dense-type=ivfpq needs --rerank-from=<ivfflat artifact> " +
                 "supplying raw vectors for the exact rerank of the ADC " +
                 "shortlist (build both tiers from one coarse fit)"))
-          val postings = loadFlatAuto(spark, rerankFrom).postings
+          val postings = loadAuto(spark, rerankFrom, Clustering.IvfFlatSharded)(
+            Clustering.loadIvfFlatIndex(spark, rerankFrom)).postings
           parityPrecheck(flags, "the hybrid serve",
             "the bm25 artifact (--path)",
             bmIdx.doclen.select(col("doc_id").as("id")),
@@ -1321,25 +1239,18 @@ object IndexTool {
             Clustering.loadIvfCodebook(spark, path),
             num("max-query-id", 20).toLong, num("nprobe", 2), num("topk", 3))
           .orderBy(col("q_id"), col("rank"))
-      case "ivfflat" =>
+      case "ivfflat" | "ivfflat-sharded" =>
         // input supplies only the QUERY rows; the corpus side comes
         // from the persisted postings (pruned to the probed cells).
         // --filter-col/--filter-val compose a metadata predicate INTO
         // the probed scan (the postings must have been built with
         // that attribute column — buildIvfFlatIndex attrCols): the
         // production predicate+vector query, pre-filtered so every
-        // query still gets k MATCHING neighbors
-        serveFlatMaybeFiltered(Clustering.loadIvfFlatIndex(spark, path),
-            embOf(input, flags), flags)
-          .orderBy(col("q_id"), col("rank"))
-      case "ivfflat-sharded" =>
-        // per-shard probe unioned before the shared top-k — reproduces
-        // the single-artifact serve bit-for-bit (equal postings sets,
-        // deterministic rerank); each shard keeps its own probed-cell
-        // partition pruning. --filter-col/--filter-val work exactly as
-        // on the unsharded serve: attrs ride every shard surface, and
-        // the predicate composes into each shard's pruned scan
-        serveFlatMaybeFiltered(Clustering.loadIvfFlatSharded(spark, path),
+        // query still gets k MATCHING neighbors. The sharded load is the
+        // same index (equal postings sets), each segment's scan pruning
+        // its own probed cells
+        serveFlatMaybeFiltered(loadTier(spark, tpe, path,
+              Clustering.IvfFlatSharded)(Clustering.loadIvfFlatIndex(spark, path)),
             embOf(input, flags), flags)
           .orderBy(col("q_id"), col("rank"))
       case "imi" =>
@@ -1349,22 +1260,15 @@ object IndexTool {
             embOf(input, flags), "vec_id", "embedding",
             num("max-query-id", 20).toLong, num("nprobe", 2), num("topk", 3))
           .orderBy(col("q_id"), col("rank"))
-      case "ivfpq" =>
+      case "ivfpq" | "ivfpq-sharded" =>
         // --rerank-from=<ivfflat path> upgrades the ADC top-k to the
         // two-stage production search: ADC shortlist (--rerank-pool
         // deep) from THIS artifact, exact-cosine rerank on raw vectors
         // fetched from the named ivfflat postings (q162's shape).
         // --filter-col/--filter-val pre-filter the cells surface inside
         // the probed scan (serveIvfPqFiltered's contract)
-        servePqMaybeRerank(spark, Clustering.loadIvfPqIndex(spark, path),
-            embOf(input, flags), flags)
-          .orderBy(col("q_id"), col("rank"))
-      case "ivfpq-sharded" =>
-        // per-shard cells/codes unioned under the shared codebooks —
-        // reproduces the single-artifact ADC serve bit-for-bit (equal
-        // surface sets, deterministic rank); same --rerank-from /
-        // --filter-col contracts as the unsharded verb
-        servePqMaybeRerank(spark, Clustering.loadIvfPqSharded(spark, path),
+        servePqMaybeRerank(spark, loadTier(spark, tpe, path,
+              Clustering.IvfPqSharded)(Clustering.loadIvfPqIndex(spark, path)),
             embOf(input, flags), flags)
           .orderBy(col("q_id"), col("rank"))
       case "pq" =>
@@ -1394,15 +1298,12 @@ object IndexTool {
             num("max-query-id", 20).toLong, num("nprobe", 2),
             num("topk", 3))
           .orderBy(col("q_id"), col("rank"))
-      case "ivfpqr" =>
+      case "ivfpqr" | "ivfpqr-sharded" =>
         // residual ADC: per-(query, probed cell) distance tables;
         // --rerank-from / --filter-col carry the same contracts as the
         // ivfpq verb (one shared coarse fit between the artifacts)
-        servePqrMaybeRerank(spark, Clustering.loadIvfPqrIndex(spark, path),
-            embOf(input, flags), flags)
-          .orderBy(col("q_id"), col("rank"))
-      case "ivfpqr-sharded" =>
-        servePqrMaybeRerank(spark, Clustering.loadIvfPqrSharded(spark, path),
+        servePqrMaybeRerank(spark, loadTier(spark, tpe, path,
+              Clustering.IvfPqrSharded)(Clustering.loadIvfPqrIndex(spark, path)),
             embOf(input, flags), flags)
           .orderBy(col("q_id"), col("rank"))
       case "hybrid" =>
@@ -1502,8 +1403,6 @@ object IndexTool {
       s"unknown index type '$tpe' (expected ${Types.toSeq.sorted.mkString("|")})")
     def rows(p: String): Long = ArtifactStore.readSurface(spark,
       ArtifactStore.resolve(spark, p)).count()
-    def shards: (String, Long) = "shards" ->
-      ShardedCommit.numShards(spark, ArtifactStore.resolve(spark, path)).toLong
     // Generation health first: orphaned
     // generations are a crashed/raced writer's leftovers (or the one
     // retained displaced generation) — detected here, swept by the next
@@ -1534,12 +1433,12 @@ object IndexTool {
     // index-gc sweeps them)
     val segmented: Seq[(String, Long)] = Segmented.get(tpe).toSeq.flatMap {
       seg =>
-        val orphans = SegmentStore.orphans(spark,
-          ArtifactStore.resolve(spark, path), graceMs = 0L)
+        val dir = ArtifactStore.resolve(spark, path)
+        val orphans = SegmentStore.orphans(spark, dir, graceMs = 0L)
         if (orphans.nonEmpty) println(s"WARNING: segments named by no " +
           s"manifest (index-gc sweeps them): ${orphans.mkString(", ")}")
-        Seq(shards, "live_segments" ->
-          SegmentedIndex.liveSegments(spark, seg.tier, path),
+        Seq("shards" -> ShardedCommit.numShards(spark, dir).toLong,
+          "live_segments" -> SegmentedIndex.liveSegments(spark, seg.tier, path),
           "orphan_segments" -> orphans.length.toLong)
     }
     val counters: Seq[(String, Long)] = genCounters ++ segmented ++ (tpe match {
@@ -1575,8 +1474,9 @@ object IndexTool {
           ArtifactStore.readSurface(spark, ArtifactStore.resolve(spark, path))
         Seq("centroids" -> lanes.select(col("cluster")).distinct().count(),
           "dim" -> lanes.select(col("pos")).distinct().count())
-      case "ivfflat" =>
-        val idx = Clustering.loadIvfFlatIndex(spark, path)
+      case "ivfflat" | "ivfflat-sharded" =>
+        val idx = loadTier(spark, tpe, path, Clustering.IvfFlatSharded)(
+          Clustering.loadIvfFlatIndex(spark, path))
         // the occupancy agg's sum IS the vector total — one postings
         // scan, not two; coalesce covers the empty artifact
         val st = idx.postings.groupBy(col("c_id")).count()
@@ -1591,19 +1491,6 @@ object IndexTool {
           // are integral), derived from the SAME occupancy agg (no
           // second scan); drifted ingestion under a frozen codebook
           // drives this up, index-rebuild --type=ivfflat repairs it
-          "occupancy_skew_x100" -> (if (st.getLong(1) == 0L) 0L
-            else st.getLong(2) * st.getLong(0) * 100L / st.getLong(1)))
-      case "ivfflat-sharded" =>
-        val idx = Clustering.loadIvfFlatSharded(spark, path)
-        val st = idx.postings.groupBy(col("c_id")).count()
-          .agg(count(lit(1)), coalesce(sum(col("count")), lit(0L)),
-            coalesce(max(col("count")), lit(0L))).head()
-        Seq("centroids" ->
-            idx.lanes.select(col("cluster")).distinct().count(),
-          shards,
-          "vectors" -> st.getLong(1),
-          "occupied_cells" -> st.getLong(0),
-          "largest_cell" -> st.getLong(2),
           "occupancy_skew_x100" -> (if (st.getLong(1) == 0L) 0L
             else st.getLong(2) * st.getLong(0) * 100L / st.getLong(1)))
       case "imi" =>
@@ -1632,13 +1519,13 @@ object IndexTool {
           "codebook_k" ->
             idx.pqLanes.select(col("code")).distinct().count())
       case "ivfpq-sharded" | "ivfpqr-sharded" =>
-        val idx = Clustering.loadIvfPqSharded(spark, path)
+        // one layout for both: read it through the ivfpq-sharded tier
+        val idx = SegmentedIndex.load(spark, Clustering.IvfPqSharded, path)
         val st = idx.cells.groupBy(col("c_id")).count()
           .agg(count(lit(1)), coalesce(sum(col("count")), lit(0L)),
             coalesce(max(col("count")), lit(0L))).head()
         Seq("centroids" ->
             idx.coarseLanes.select(col("cluster")).distinct().count(),
-          shards,
           "vectors" -> st.getLong(1),
           "occupied_cells" -> st.getLong(0),
           "largest_cell" -> st.getLong(2),
@@ -1865,19 +1752,12 @@ object IndexTool {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(enc(batch), batchId)
         }
-      case "ivfflat" =>
+      case "ivfflat" | "ivfflat-sharded" =>
         // inverted lists loaded once; each micro-batch is a query batch
         // (per-query top-k over artifact postings — batch-independent).
         // --filter-col/--filter-val compose exactly as in the batch verb
-        val idx = Clustering.loadIvfFlatIndex(spark, path)
-        embOf(stream, flags).writeStream.foreachBatch {
-          (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            sink(serveFlatMaybeFiltered(idx, batch, flags), batchId)
-        }
-      case "ivfflat-sharded" =>
-        // shard union loaded once; per-batch serve == the batch verb
-        // (including the filtered form)
-        val idx = Clustering.loadIvfFlatSharded(spark, path)
+        val idx = loadTier(spark, tpe, path, Clustering.IvfFlatSharded)(
+          Clustering.loadIvfFlatIndex(spark, path))
         embOf(stream, flags).writeStream.foreachBatch {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(serveFlatMaybeFiltered(idx, batch, flags), batchId)
@@ -1930,31 +1810,21 @@ object IndexTool {
               num("max-query-id", 20).toLong, num("nprobe", 2),
               num("topk", 3)), batchId)
         }
-      case "ivfpqr" =>
-        val idx = Clustering.loadIvfPqrIndex(spark, path)
+      case "ivfpqr" | "ivfpqr-sharded" =>
+        val idx = loadTier(spark, tpe, path, Clustering.IvfPqrSharded)(
+          Clustering.loadIvfPqrIndex(spark, path))
         embOf(stream, flags).writeStream.foreachBatch {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(servePqrMaybeRerank(spark, idx, batch, flags), batchId)
         }
-      case "ivfpqr-sharded" =>
-        val idx = Clustering.loadIvfPqrSharded(spark, path)
-        embOf(stream, flags).writeStream.foreachBatch {
-          (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            sink(servePqrMaybeRerank(spark, idx, batch, flags), batchId)
-        }
-      case "ivfpq" =>
+      case "ivfpq" | "ivfpq-sharded" =>
         // --rerank-from / --filter-col work streamed too: per-query
         // two-stage / pre-filtered search over fixed artifact state
         // composes across micro-batches (the ADC index loads once; the
         // rerank postings pointer re-resolves per batch — a few-bytes
         // read)
-        val idx = Clustering.loadIvfPqIndex(spark, path)
-        embOf(stream, flags).writeStream.foreachBatch {
-          (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
-            sink(servePqMaybeRerank(spark, idx, batch, flags), batchId)
-        }
-      case "ivfpq-sharded" =>
-        val idx = Clustering.loadIvfPqSharded(spark, path)
+        val idx = loadTier(spark, tpe, path, Clustering.IvfPqSharded)(
+          Clustering.loadIvfPqIndex(spark, path))
         embOf(stream, flags).writeStream.foreachBatch {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(servePqMaybeRerank(spark, idx, batch, flags), batchId)

@@ -159,11 +159,11 @@ object Tool {
       val sweptRoot = graft.sinks.ArtifactStore.sweep(spark, path,
         keepDisplaced = !all, stagingGraceMs = grace)
       // multi-root layouts keep more generational roots below the
-      // artifact's: a segmented artifact ONE segment manifest root
-      // (`_segments`), a vector-sharded artifact one root per shard, a
-      // bucketed table one per bucket (`_buckets/`) — a crashed writer's
-      // orphan generations live THERE, so the sweep recurses over every
-      // child root under the same policy (each under its own claim)
+      // artifact's: a sharded artifact ONE segment manifest root
+      // (`_segments`), a bucketed table one per bucket (`_buckets/`) — a
+      // crashed writer's orphan generations live THERE, so the sweep
+      // recurses over every child root under the same policy (each
+      // under its own claim)
       val base = graft.sinks.ArtifactStore.resolve(spark, path)
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -172,8 +172,7 @@ object Tool {
       val segmented = graft.sinks.SegmentStore.isSegmented(spark, base)
       val childRoots =
         (if (segmented) Seq(s"$base/${graft.sinks.SegmentStore.ManifestFile}")
-         else Seq(s"$base/shards").flatMap(childrenOf)) ++
-          childrenOf(s"$path/_buckets")
+         else Nil) ++ childrenOf(s"$path/_buckets")
       val sweptChildren = childRoots.flatMap { r =>
         // display-relative: "<family>/<child>/<gen>" (listStatus returns
         // scheme-qualified paths, so a plain prefix strip misses)
@@ -496,8 +495,8 @@ object Tool {
       |       [--max-rewrite-rows=N  (unsharded tiers with a sharded twin
       |        refuse whole-surface rewrites past the gate — rebuild as
       |        the *-sharded type, or raise the bound for a one-off)]
-      |       [--mode=append|merge  (segmented sharded doc/lexical tiers,
-      |        COMPACTTYPES: append — the default — writes one delta-sized
+      |       [--mode=append|merge  (the sharded tiers, COMPACTTYPES:
+      |        append — the default — writes one delta-sized
       |        immutable segment per routed shard, O(delta) regardless of
       |        how many shards the delta's hashes spray across; merge is
       |        the whole-shard compacting rewrite)]
@@ -527,8 +526,8 @@ object Tool {
       |   | graft.Tool index-gc --path=<dir> [--all=true|false] [--grace-ms=N]
       |       (sweep non-live generations left by crashed writers;
       |        keeps the retained displaced generation unless --all;
-      |        recurses over child roots — a segmented artifact's
-      |        _segments manifest root, shards/, _buckets/ — so a crashed
+      |        recurses over child roots — a sharded artifact's _segments
+      |        manifest root, a bucketed table's _buckets/ — so a crashed
       |        SHARDED update's orphans AND unreferenced _seg_* data dirs
       |        are reachable too)
       |  --input="format=<parquet|text|csv|json|xml|seq|avro|avrokv|small-text-files> file=... [k=v ...]"

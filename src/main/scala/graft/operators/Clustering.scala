@@ -6,7 +6,7 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import graft.functions.TextFunctions.hash28
 import graft.functions.VectorFunctions.scaled
-import graft.sinks.{ArtifactStore, SegmentedIndex, ShardedCommit}
+import graft.sinks.{ArtifactStore, SegmentedIndex}
 
 /** Distributed k-means (Lloyd's) over embedding columns — the corpus
   * topic-clustering step of a training-data pipeline (cluster-balanced
@@ -544,8 +544,8 @@ object Clustering {
     def surfacesOf(idx: SemIndex): Map[String, DataFrame] =
       Map("assign" -> idx.assign)
 
-    override def writeRoots(dir: String, idx: SemIndex): Unit =
-      concurrentWrites(fittedWrites(idx, dir))
+    override def writeRoots(dir: String, idx: SemIndex)
+        : Seq[(DataFrame, DataFrame => Unit)] = fittedWrites(idx, dir)
 
     def artifact(spark: org.apache.spark.sql.SparkSession, dir: String,
                  view: String => DataFrame): SemIndex =
@@ -557,8 +557,9 @@ object Clustering {
       * changes. */
     def delta(delta: DataFrame,
               seedLiteralCap: Int = Similarity.MaxCentroids)
-        : SegmentedIndex.Fold = fold { o =>
-      val cells = checkedDeltaCells(SegmentedIndex.load(o.spark, this, o.dir),
+        : SegmentedIndex.Fold = fold { all =>
+      val cells = checkedDeltaCells(
+        artifact(all.opened.spark, all.opened.dir, all.live),
         delta, "vec_id", "embedding", seedLiteralCap)
       Write(Map("shards" -> cells), _ => Map("assign" -> cells))
     }
@@ -1651,24 +1652,12 @@ object Clustering {
   def updateIvfPqrIndex(idx: IvfPqrIndex, delta: DataFrame, idCol: String,
                         vecCol: String, dim: Int, m: Int): IvfPqrIndex = {
     val attrs = cellsAttrCols(idx.cells)
-    val newPost = Similarity.ivfPostingsAttrs(delta, idCol, vecCol,
-      Similarity.centroidSetFromLanes(idx.coarseLanes), attrs)
-    // persisted for the same reason as the build path: the cells union
-    // reads it once and pqEncode's m subspace branches each read it
-    // again — unpersisted, the delta kernel assignment would run m+1
-    // times per add
-    val resid = OperatorCaches.register(newPost
-      .join(broadcast(centroidVecFrame(idx.coarseLanes)), Seq("c_id"))
-      .select(col("n_id") +: attrs.map(col) :+ col("c_id") :+
-        zip_with(col("nv"), col("cv"), (a, b) => a - b).as("rv"): _*)
-      .persist())
+    val (cells, codes) = ivfPqDelta(delta, idCol, vecCol, idx.coarseLanes,
+      idx.pqLanes, dim, m, attrs, residual = true)
     IvfPqrIndex(idx.coarseLanes,
       idx.cells.select(col("n_id") +: attrs.map(col) :+ col("c_id"): _*)
-        .unionByName(resid.select(
-          col("n_id") +: attrs.map(col) :+ col("c_id"): _*)),
-      idx.codes.select(col("n_id"), col("s"), col("code"))
-        .unionByName(pqEncode(resid, idx.pqLanes, "n_id", "rv", dim, m,
-          preScaled = true)),
+        .unionByName(cells),
+      idx.codes.select(col("n_id"), col("s"), col("code")).unionByName(codes),
       idx.pqLanes)
   }
 
@@ -1832,82 +1821,6 @@ object Clustering {
                           pred: org.apache.spark.sql.Column): DataFrame =
     serveIvfPqr(idx.copy(cells = idx.cells.filter(pred)), emb, idCol,
       vecCol, dim, m, maxQueryId, nprobe, topK)
-
-  // ─────────────── sharded residual (IVFPQR) artifact ────────────────
-  //
-  // The [[saveIvfPqSharded]] layout and commit protocol applied to the
-  // residual tier — the round-15 recall ladder's recommended production
-  // encoding (same bytes, about twice the shortlist recall inside tight
-  // clusters): cells + codes shard by `n_id mod S` under the shared
-  // frozen coarse + residual-PQ codebooks, swap together inside each
-  // shard's generation, and commit through the same all-or-nothing
-  // multi-root pointer transaction.
-
-  def saveIvfPqrSharded(idx: IvfPqrIndex, path: String, numShards: Int,
-                        expected: ArtifactStore.Expect = None): Unit =
-    saveIvfPqSharded(IvfPqIndex(idx.coarseLanes, idx.cells, idx.codes,
-      idx.pqLanes), path, numShards, expected) // identical surface layout
-
-  def loadIvfPqrSharded(spark: org.apache.spark.sql.SparkSession,
-                        path: String): IvfPqrIndex = {
-    val pq = loadIvfPqSharded(spark, path) // identical surface layout
-    IvfPqrIndex(pq.coarseLanes, pq.cells, pq.codes, pq.pqLanes)
-  }
-
-  /** ADD a delta to the sharded residual artifact: kernel cell
-    * assignment + broadcast residual join + per-subspace residual
-    * encode against the FIXED codebooks (the [[updateIvfPqrIndex]]
-    * fold), rewriting ONLY the routed shards. Returns them. */
-  def updateIvfPqrSharded(spark: org.apache.spark.sql.SparkSession,
-                          root: String, delta: DataFrame,
-                          idCol: String, vecCol: String,
-                          dim: Int, m: Int): Seq[Int] = {
-    val path = ArtifactStore.resolve(spark, root)
-    val numShards = ShardedCommit.numShards(spark, path)
-    val coarse = ArtifactStore.readSurface(spark, s"$path/coarse")
-    val pqLanes = ArtifactStore.readSurface(spark, s"$path/pqlanes")
-    val attrs = cellsAttrCols(ArtifactStore.readSurface(spark,
-      ArtifactStore.resolve(spark, s"$path/shards/0") + "/cells"))
-    val shardOf = pmod(col("n_id"), lit(numShards.toLong)).cast("int")
-    val resid = OperatorCaches.register(
-      Similarity.ivfPostingsAttrs(delta, idCol, vecCol,
-          Similarity.centroidSetFromLanes(coarse), attrs)
-        .join(broadcast(centroidVecFrame(coarse)), Seq("c_id"))
-        .select(col("n_id") +: attrs.map(col) :+ col("c_id") :+
-          zip_with(col("nv"), col("cv"), (a, b) => a - b).as("rv"): _*)
-        .withColumn("shard", shardOf)
-        .persist())
-    val touched = resid.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (touched.isEmpty) return touched
-    val pinned = touched.map(sh => sh -> pinShardGen(spark, path, sh)).toMap
-    val existingCells = touched.map { sh =>
-      val raw = ArtifactStore.readSurface(spark, s"${pinned(sh)._3}/cells")
-      raw.select(col("n_id") +: cellsAttrCols(raw).map(col) :+
-          col("c_id").cast(LongType).as("c_id"): _*)
-        .withColumn("shard", lit(sh))
-    }.reduce(_ unionByName _)
-    val existingCodes = touched.map { sh =>
-      ArtifactStore.readSurface(spark, s"${pinned(sh)._3}/codes")
-        .select(col("n_id"), col("s"), col("code"))
-        .withColumn("shard", lit(sh))
-    }.reduce(_ unionByName _)
-    val deltaCodes = pqEncode(resid, pqLanes, "n_id", "rv", dim, m,
-        preScaled = true)
-      .withColumn("shard", shardOf)
-    commitPqShards(spark, path, touched,
-      existingCells.unionByName(resid.select(
-        col("n_id") +: attrs.map(col) :+ col("c_id") :+ col("shard"): _*)),
-      existingCodes.unionByName(deltaCodes), pinned)
-    touched
-  }
-
-  /** REMOVE a vector set from the sharded residual artifact — identical
-    * mechanics to [[removeFromIvfPqSharded]] (the surfaces share the
-    * layout). Returns the touched shard ids. */
-  def removeFromIvfPqrSharded(spark: org.apache.spark.sql.SparkSession,
-                              path: String, removedIds: DataFrame)
-      : Seq[Int] = removeFromIvfPqSharded(spark, path, removedIds)
 
   /** Two-stage retrieval SERVED from artifacts — the production pattern
     * closed over persisted state: the compressed [[IvfPqIndex]]
@@ -2436,41 +2349,152 @@ object Clustering {
     Similarity.ivfRerank(pruned.filter(pred), queries, k)
   }
 
-  // ─────────────────────── sharded ivfflat artifact ───────────────────────
+  // ───────────────────── sharded vector artifacts ─────────────────────
 
-  /** Shard a persisted [[IvfFlatIndex]] so the REWRITE UNIT is a shard,
-    * not the whole artifact: at 100 TB a single postings surface cannot
-    * be rebuilt or rewritten as a unit — an update that folds one
-    * delta must not rewrite a corpus-sized parquet dataset. Layout:
-    *
-    * {{{
-    * path/_gen_current -> <gen>  # the artifact generation
-    * <gen>/lanes/                # the shared frozen codebook (bounded)
-    * <gen>/_num_shards           # the grid size
-    * <gen>/shards/<s>/           # one generational root PER SHARD
-    *   _gen_current, _gen_<n>_<uuid>/c_id=<cell>/...
-    * }}}
-    *
-    * Shard routing is `n_id mod numShards` — deterministic, so a delta
-    * touches exactly the shards its ids route to, and
-    * [[updateIvfFlatSharded]] commits ONLY those shards' generations
-    * (per-shard pointer CAS; untouched shards keep their generation,
-    * concurrent single-shard updates of DIFFERENT shards cannot race).
-    * Every shard keeps the inverted-list `partitionBy(c_id)` layout, so
-    * the probed-cell pruning applies per shard; the serve is a
-    * per-shard probe UNIONED before the shared top-k rerank, which
-    * reproduces the single-artifact serve bit-for-bit (postings sets
-    * are equal; the rerank is deterministic). */
-  /** [[saveIvfFlatSharded]] followed by a serve FROM THE SAVED ARTIFACT,
+  /** The sharded vector tiers ([[graft.sinks.SegmentedIndex]]): the
+    * corpus-sized surfaces shard by `n_id mod S` so the REWRITE UNIT is
+    * a shard's segment, never the whole artifact — at 100 TB one
+    * postings surface cannot be rewritten per delta. The frozen
+    * codebooks are build-time roots no add or remove moves (the Faiss
+    * train/add split made physical). Every surface keeps the
+    * inverted-list `c_id=` layout where the flat tier has it, so serves
+    * prune to the probed cells per segment, and the loaded artifact IS
+    * the flat tier's: serves reproduce the single-artifact serve
+    * bit-for-bit (equal surface sets, deterministic rank). Rows are
+    * per-vector with no rollup, so the `live` view is the union of the
+    * segments: an add appends the delta's rows as one segment per
+    * touched shard (write volume O(delta)), a removal rewrites the
+    * touched shards with the anti-joined live rows. `--attr-cols`
+    * attributes ride the first surface (postings or cells). */
+  sealed abstract class VectorSharded[A](surfaces: Seq[SegmentedIndex.Surface])
+      extends SegmentedIndex.Tier[A] {
+    import SegmentedIndex.{Family, Write}
+
+    val families: Seq[Family] = Seq(Family("shards",
+      n => pmod(col("n_id"), lit(n.toLong)).cast("int"), surfaces))
+    val ids: (String, String) = (surfaces.head.name, "n_id")
+
+    /** The frozen codebooks of `a`, by root surface name. */
+    protected def codebooks(a: A): Seq[(String, DataFrame)]
+
+    override def writeRoots(dir: String, a: A)
+        : Seq[(DataFrame, DataFrame => Unit)] =
+      codebooks(a).map { case (name, df) => df -> ((d: DataFrame) =>
+        d.coalesce(1).write.mode("overwrite").parquet(s"$dir/$name")) }
+
+    /** ADD a delta: `rows` encodes it against the pinned artifact's
+      * frozen codebooks (read by name), given the attribute columns the
+      * artifact stores (the delta must carry them — a loud select error
+      * otherwise); the first surface's rows route the touched shards. */
+    protected def add(
+        rows: (String => DataFrame, Seq[String]) => Map[String, DataFrame])
+        : SegmentedIndex.Fold = fold { all =>
+      val first = surfaces.head.name
+      val encoded = rows(name => ArtifactStore.readSurface(all.opened.spark,
+        s"${all.opened.dir}/$name"), all.attrs(first))
+      Write(Map("shards" -> encoded(first)), _ => encoded)
+    }
+
+    /** REMOVE a vector set `(n_id)`: every surface of the ids' shards
+      * keeps its live rows but theirs; the codebooks stay, so the result
+      * equals a fresh assignment of the remaining vectors. */
+    def removal(removedIds: DataFrame): SegmentedIndex.Fold = fold { _ =>
+      val ids = OperatorCaches.register(removedIds
+        .select(col("n_id").cast(LongType).as("n_id")).distinct().persist())
+      Write(Map("shards" -> ids), s => surfaces.map(sp => sp.name ->
+        s.live(sp.name).join(ids, Seq("n_id"), "left_anti")).toMap)
+    }
+  }
+
+  /** Sharded [[IvfFlatIndex]]: `postings` per shard under the shared
+    * `lanes`. */
+  object IvfFlatSharded extends VectorSharded[IvfFlatIndex](Seq(
+      SegmentedIndex.Surface("postings", Seq("n_id", "nv", "nn"),
+        partition = Some("c_id"), attrs = true))) {
+
+    def surfacesOf(idx: IvfFlatIndex): Map[String, DataFrame] =
+      Map("postings" -> idx.postings)
+
+    protected def codebooks(idx: IvfFlatIndex): Seq[(String, DataFrame)] =
+      Seq("lanes" -> idx.lanes.select(col("cluster"), col("pos"),
+        col("cval"), col("n")))
+
+    def artifact(spark: org.apache.spark.sql.SparkSession, dir: String,
+                 view: String => DataFrame): IvfFlatIndex =
+      IvfFlatIndex(ArtifactStore.readSurface(spark, s"$dir/lanes"),
+        view("postings"))
+
+    /** ADD a delta batch: the [[updateIvfFlatIndex]] kernel assignment
+      * against the frozen lanes. */
+    def delta(delta: DataFrame, idCol: String, vecCol: String)
+        : SegmentedIndex.Fold = add { (codebook, attrs) =>
+      Map("postings" -> Similarity.ivfPostingsAttrs(delta, idCol, vecCol,
+        Similarity.centroidSetFromLanes(codebook("lanes")), attrs))
+    }
+  }
+
+  /** The sharded compressed tiers: `cells` and `codes` per shard, under
+    * the shared `coarse` and `pqlanes` codebooks. The two surfaces swap
+    * together inside each segment — a cells row without its m code rows
+    * silently drops that candidate from every ADC serve. ivfpq- and
+    * ivfpqr-sharded differ only in the delta's encode
+    * ([[ivfPqDelta]]'s `residual`). */
+  sealed abstract class PqSharded[A](residual: Boolean)
+      extends VectorSharded[A](Seq(
+        SegmentedIndex.Surface("cells", Seq("n_id"), partition = Some("c_id"),
+          attrs = true),
+        SegmentedIndex.Surface("codes", Seq("n_id", "s", "code")))) {
+
+    protected def of(idx: IvfPqIndex): A
+    protected def pq(a: A): IvfPqIndex
+
+    def surfacesOf(a: A): Map[String, DataFrame] =
+      Map("cells" -> pq(a).cells, "codes" -> pq(a).codes)
+
+    protected def codebooks(a: A): Seq[(String, DataFrame)] = Seq(
+      "coarse" -> pq(a).coarseLanes.select(col("cluster"), col("pos"),
+        col("cval"), col("n")),
+      "pqlanes" -> pq(a).pqLanes.select(col("s"), col("code"), col("pos"),
+        col("cval")))
+
+    def artifact(spark: org.apache.spark.sql.SparkSession, dir: String,
+                 view: String => DataFrame): A =
+      of(IvfPqIndex(ArtifactStore.readSurface(spark, s"$dir/coarse"),
+        view("cells"), view("codes"),
+        ArtifactStore.readSurface(spark, s"$dir/pqlanes")))
+
+    /** ADD a delta batch: cell assignment and per-subspace encode against
+      * the frozen codebooks — the [[updateIvfPqIndex]] /
+      * [[updateIvfPqrIndex]] add. */
+    def delta(delta: DataFrame, idCol: String, vecCol: String, dim: Int,
+              m: Int): SegmentedIndex.Fold = add { (codebook, attrs) =>
+      val (cells, codes) = ivfPqDelta(delta, idCol, vecCol,
+        codebook("coarse"), codebook("pqlanes"), dim, m, attrs, residual)
+      Map("cells" -> cells, "codes" -> codes)
+    }
+  }
+
+  object IvfPqSharded extends PqSharded[IvfPqIndex](residual = false) {
+    protected def of(idx: IvfPqIndex): IvfPqIndex = idx
+    protected def pq(idx: IvfPqIndex): IvfPqIndex = idx
+  }
+
+  object IvfPqrSharded extends PqSharded[IvfPqrIndex](residual = true) {
+    protected def of(idx: IvfPqIndex): IvfPqrIndex =
+      IvfPqrIndex(idx.coarseLanes, idx.cells, idx.codes, idx.pqLanes)
+    protected def pq(idx: IvfPqrIndex): IvfPqIndex =
+      IvfPqIndex(idx.coarseLanes, idx.cells, idx.codes, idx.pqLanes)
+  }
+
+  /** A sharded ivfflat save followed by a serve FROM THE SAVED ARTIFACT,
     * with the serve's probe stage overlapped with the save (guide §2.6 —
     * VERDICT r18 #3): the probe queries and their distinct-cells collect
     * depend only on the CODEBOOK, which is identical in memory and on
     * disk (integer lanes roundtrip bit-exactly — pinned by q175/q111),
     * while the rerank reads the LOADED per-shard postings. The served
-    * frame is therefore bit-identical to
-    * `serveIvfFlat(loadIvfFlatSharded(path), …)`, but the probe-cells
-    * job's latency hides inside the save's staging barrier instead of
-    * serializing after the commit. */
+    * frame is therefore bit-identical to `serveIvfFlat(load(path), …)`,
+    * but the probe-cells job's latency hides inside the save's staging
+    * barrier instead of serializing after the commit. */
   def saveIvfFlatShardedAndServe(idx: IvfFlatIndex, path: String,
                                  numShards: Int, emb: DataFrame,
                                  idCol: String, vecCol: String,
@@ -2481,234 +2505,17 @@ object Clustering {
       Similarity.ivfProbeQueries(emb, idCol, vecCol,
         Similarity.centroidSetFromLanes(idx.lanes), maxQueryId, nprobe))
     @volatile var cells: Array[Long] = null
-    // isolateLambdas above + saveIvfFlatSharded's own internal isolation
-    // keep the two chains' higher-order expressions disjoint
+    // isolateLambdas above + the save's own staging isolation keep the
+    // two chains' higher-order expressions disjoint
     concurrentlyUnchecked(Seq(
-      () => saveIvfFlatSharded(idx, path, numShards),
+      () => SegmentedIndex.save(spark, IvfFlatSharded, idx, path, numShards),
       () => { cells = collectProbedCells(queries) }))
-    val loaded = loadIvfFlatSharded(spark, path)
+    val loaded = SegmentedIndex.load(spark, IvfFlatSharded, path)
     val postings =
       if (cells.length <= ServeCellFilterCap)
         loaded.postings.filter(col("c_id").isInCollection(cells))
       else loaded.postings
     Similarity.ivfRerank(postings, queries, k)
-  }
-
-  def saveIvfFlatSharded(idx: IvfFlatIndex, path: String, numShards: Int,
-                         expected: ArtifactStore.Expect = None): Unit = {
-    val spark = idx.lanes.sparkSession
-    // ONE corpus scan writes every shard's inverted-list layout
-    // (partitionBy(shard, c_id)), then each shard=<s> subtree is RENAMED
-    // into that shard's fresh generation — S metadata moves instead of S
-    // corpus scans. (Not S concurrent per-shard jobs: concurrently
-    // executing plans that share this postings plan's expression
-    // instances is unsafe — `scaled` is a higher-order `transform` whose
-    // NamedLambdaVariable carries per-evaluation mutable state, and the
-    // race was OBSERVED cross-wiring (n_id, c_id) pairs in this very
-    // write before the single-scan form replaced it. concurrentFrames
-    // lambda-isolates, so the lanes write can overlap it.)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val attrs = postingsAttrCols(idx.postings)
-    ArtifactStore.publish(spark, path, expected) { dir =>
-      ShardedCommit.writeNumShards(spark, dir, numShards)
-      val staging = s"$dir/__shards_stage"
-      concurrentWrites(Seq(
-        idx.postings
-          .select(Seq(col("n_id"), col("nv"), col("nn")) ++ attrs.map(col) ++
-            Seq(pmod(col("n_id"), lit(numShards.toLong)).as("shard"),
-              col("c_id")): _*) ->
-          ((df: DataFrame) => df
-            .repartition(writePar(idx.postings), col("shard"), col("c_id"))
-            .write.mode("overwrite").partitionBy("shard", "c_id")
-            .parquet(staging)),
-        idx.lanes.select(col("cluster"), col("pos"), col("cval"), col("n")) ->
-          ((df: DataFrame) =>
-            df.coalesce(1).write.mode("overwrite").parquet(s"$dir/lanes"))))
-      // stage EVERY shard's generation first (renames + empty-shard
-      // writes — all data movement), then commit all pointers in one
-      // all-or-nothing transaction (ArtifactStore.commitGenAll's
-      // contract) before the artifact generation itself is published
-      val commits = (0 until numShards).map { sh =>
-        val src = new org.apache.hadoop.fs.Path(s"$staging/shard=$sh")
-        val shardRoot = s"$dir/shards/$sh"
-        val gen = ArtifactStore.newGenDir(spark, shardRoot, None)
-        if (fs.exists(src)) {
-          fs.mkdirs(new org.apache.hadoop.fs.Path(shardRoot))
-          require(fs.rename(src, new org.apache.hadoop.fs.Path(gen)),
-            s"saveIvfFlatSharded: cannot stage $src as generation $gen")
-        } else
-          // an id range can leave a shard EMPTY — persist an empty
-          // postings set (c_id as a DATA column: a zero-row partitioned
-          // write leaves no readable schema behind) so load/serve see a
-          // complete shard grid
-          idx.postings.limit(0)
-            .select(Seq(col("n_id"), col("nv"), col("nn")) ++
-              attrs.map(col) :+ col("c_id").cast(LongType).as("c_id"): _*)
-            .coalesce(1).write.mode("overwrite").parquet(gen)
-        (shardRoot, gen, None)
-      }
-      fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-      ArtifactStore.commitGenAll(spark, dir, commits)
-    }
-  }
-
-  /** Pin one shard root's live generation: (root, loaded pointer, the
-    * exact directory reads should plan against). Captured BEFORE any
-    * read, and handed to the commit as its CAS expectation — reading
-    * the pointer again at commit time would make the CAS vacuous (it
-    * would "expect" whatever is current, silently folding the delta
-    * onto a base that raced out from under the reads). */
-  private def pinShardGen(spark: org.apache.spark.sql.SparkSession,
-                          path: String, sh: Int)
-      : (String, Option[String], String) =
-    ArtifactStore.pinGen(spark, s"$path/shards/$sh")
-
-  /** The shard-grid size of the sharded artifact at `root`. */
-  def shardedNumShards(spark: org.apache.spark.sql.SparkSession,
-                       root: String): Int =
-    ShardedCommit.numShards(spark, ArtifactStore.resolve(spark, root))
-
-  /** Load the sharded artifact as a regular [[IvfFlatIndex]]: union of
-    * the per-shard live generations. Each union branch keeps its own
-    * probed-cell partition pruning, so serve cost stays O(probed cells)
-    * per shard. */
-  def loadIvfFlatSharded(spark: org.apache.spark.sql.SparkSession,
-                         root: String): IvfFlatIndex = {
-    val path = ArtifactStore.resolve(spark, root)
-    val postings = (0 until ShardedCommit.numShards(spark, path)).map { sh =>
-      val raw = ArtifactStore.readSurface(spark,
-        ArtifactStore.resolve(spark, s"$path/shards/$sh"))
-      raw.select(Seq(col("n_id"), col("nv"), col("nn")) ++
-        postingsAttrCols(raw).map(col) :+
-        col("c_id").cast(LongType).as("c_id"): _*)
-    }.reduce(_ unionByName _)
-    IvfFlatIndex(ArtifactStore.readSurface(spark, s"$path/lanes"), postings)
-  }
-
-  /** Fold a delta into the sharded artifact, rewriting ONLY the shards
-    * the delta's ids route to — each touched shard commits its own
-    * generation (per-shard CAS), untouched shards are not read or
-    * written. Assignment runs once against the shared frozen codebook
-    * (the Faiss add); the delta is tiny by contract, so its distinct
-    * touched-shard set (≤ numShards values) collects driver-side.
-    * Returns the touched shard ids. */
-  def updateIvfFlatSharded(spark: org.apache.spark.sql.SparkSession,
-                           root: String, delta: DataFrame,
-                           idCol: String, vecCol: String): Seq[Int] = {
-    val path = ArtifactStore.resolve(spark, root)
-    val numShards = ShardedCommit.numShards(spark, path)
-    val lanes = ArtifactStore.readSurface(spark, s"$path/lanes")
-    // attribute columns (filtered-serve metadata) ride every shard
-    // surface — discover them from shard 0's live generation and demand
-    // them from the delta (loud select error otherwise)
-    val shard0 = ArtifactStore.readSurface(spark,
-      ArtifactStore.resolve(spark, s"$path/shards/0"))
-    val attrs = postingsAttrCols(shard0)
-    val assigned = OperatorCaches.register(
-      Similarity.ivfPostingsAttrs(delta, idCol, vecCol,
-          Similarity.centroidSetFromLanes(lanes), attrs)
-        .withColumn("shard",
-          pmod(col("n_id").cast(LongType), lit(numShards.toLong))
-            .cast("int"))
-        .persist())
-    val touched = assigned.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (touched.isEmpty) return touched
-    // ONE staged write covers every touched shard (existing rows of the
-    // touched shards unioned with the delta's, re-laid-out
-    // partitionBy(shard, c_id)), then per-shard renames and ONE
-    // all-or-nothing pointer commit (ArtifactStore.commitGenAll under
-    // the base claim) — the save-path economics instead of one
-    // read+write job per shard, and no partial-commit window: a crash
-    // or lost CAS can never leave the delta applied to some touched
-    // shards but not others. Untouched shards are never read or written.
-    val cols = Seq("n_id", "nv", "nn") ++ attrs :+ "c_id"
-    val pinned = touched.map(sh => sh -> pinShardGen(spark, path, sh)).toMap
-    val existingTouched = touched.map { sh =>
-      ArtifactStore.readSurface(spark, pinned(sh)._3)
-        .select(Seq(col("n_id"), col("nv"), col("nn")) ++ attrs.map(col) :+
-          col("c_id").cast(LongType).as("c_id"): _*)
-        .withColumn("shard", lit(sh))
-    }.reduce(_ unionByName _)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging =
-      s"$path/__shards_stage_${java.util.UUID.randomUUID().toString.take(8)}"
-    try {
-      existingTouched
-        .unionByName(assigned.select(cols.map(col) :+ col("shard"): _*))
-        .repartition(writePar(existingTouched), col("shard"), col("c_id"))
-        .write.mode("overwrite").partitionBy("shard", "c_id")
-        .parquet(staging)
-      val commits = touched.map { sh =>
-        val (shardRoot, loaded, _) = pinned(sh)
-        val gen = ArtifactStore.newGenDir(spark, shardRoot, loaded)
-        val src = new org.apache.hadoop.fs.Path(s"$staging/shard=$sh")
-        require(fs.exists(src), // touched ⇒ at least the delta's rows exist
-          s"updateIvfFlatSharded: staged shard $sh missing at $src")
-        require(fs.rename(src, new org.apache.hadoop.fs.Path(gen)),
-          s"updateIvfFlatSharded: cannot stage $src as generation $gen")
-        (shardRoot, gen, loaded)
-      }
-      ArtifactStore.commitGenAll(spark, path, commits)
-    } finally fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    touched
-  }
-
-  /** REMOVE a vector set from the sharded artifact (right-to-be-
-    * forgotten): anti-join within the shards the removed ids route to —
-    * the same one-staged-write + per-shard CAS economics as
-    * [[updateIvfFlatSharded]]; untouched shards are never read or
-    * written. A shard emptied by the removal persists as an explicit
-    * empty postings set (the save path's empty-shard form). Returns the
-    * touched shard ids. */
-  def removeFromIvfFlatSharded(spark: org.apache.spark.sql.SparkSession,
-                               root: String, removedIds: DataFrame)
-      : Seq[Int] = {
-    val path = ArtifactStore.resolve(spark, root)
-    val numShards = ShardedCommit.numShards(spark, path)
-    val ids = OperatorCaches.register(removedIds
-      .select(col("n_id").cast(LongType).as("n_id")).distinct()
-      .withColumn("shard",
-        pmod(col("n_id"), lit(numShards.toLong)).cast("int"))
-      .persist())
-    val touched = ids.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (touched.isEmpty) return touched
-    val pinned = touched.map(sh => sh -> pinShardGen(spark, path, sh)).toMap
-    val existingTouched = touched.map { sh =>
-      val raw = ArtifactStore.readSurface(spark, pinned(sh)._3)
-      raw.select(Seq(col("n_id"), col("nv"), col("nn")) ++
-          postingsAttrCols(raw).map(col) :+
-          col("c_id").cast(LongType).as("c_id"): _*)
-        .withColumn("shard", lit(sh))
-    }.reduce(_ unionByName _)
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val staging =
-      s"$path/__shards_stage_${java.util.UUID.randomUUID().toString.take(8)}"
-    try {
-      existingTouched
-        .join(ids.select(col("n_id")), Seq("n_id"), "left_anti")
-        .repartition(writePar(existingTouched), col("shard"), col("c_id"))
-        .write.mode("overwrite").partitionBy("shard", "c_id")
-        .parquet(staging)
-      val commits = touched.map { sh =>
-        val (shardRoot, loaded, _) = pinned(sh)
-        val gen = ArtifactStore.newGenDir(spark, shardRoot, loaded)
-        val src = new org.apache.hadoop.fs.Path(s"$staging/shard=$sh")
-        if (fs.exists(src))
-          require(fs.rename(src, new org.apache.hadoop.fs.Path(gen)),
-            s"removeFromIvfFlatSharded: cannot stage $src as generation $gen")
-        else // the removal emptied the shard — persist an explicit empty set
-          existingTouched.limit(0).drop("shard")
-            .coalesce(1).write.mode("overwrite").parquet(gen)
-        (shardRoot, gen, loaded)
-      }
-      ArtifactStore.commitGenAll(spark, path, commits)
-    } finally fs.delete(new org.apache.hadoop.fs.Path(staging), true)
-    touched
   }
 
   // ───────────────────────── ivfflat rebuild ─────────────────────────
@@ -2883,15 +2690,42 @@ object Clustering {
                        idCol: String, vecCol: String,
                        dim: Int, m: Int): IvfPqIndex = {
     val attrs = cellsAttrCols(idx.cells)
-    val deltaCells = Similarity.ivfPostingsAttrs(delta, idCol, vecCol,
-        Similarity.centroidSetFromLanes(idx.coarseLanes), attrs)
-      .select(col("n_id") +: attrs.map(col) :+ col("c_id"): _*)
+    val (cells, codes) = ivfPqDelta(delta, idCol, vecCol, idx.coarseLanes,
+      idx.pqLanes, dim, m, attrs, residual = false)
     IvfPqIndex(idx.coarseLanes,
       idx.cells.select(col("n_id") +: attrs.map(col) :+ col("c_id"): _*)
-        .unionByName(deltaCells),
-      idx.codes.select(col("n_id"), col("s"), col("code"))
-        .unionByName(pqEncode(delta, idx.pqLanes, idCol, vecCol, dim, m)),
+        .unionByName(cells),
+      idx.codes.select(col("n_id"), col("s"), col("code")).unionByName(codes),
       idx.pqLanes)
+  }
+
+  /** A delta's `cells` and `codes` rows under the FIXED codebooks — the
+    * add half of [[updateIvfPqIndex]] and, with `residual`,
+    * [[updateIvfPqrIndex]] (whose codes quantize v − centroid(cell)).
+    * `attrs` ride the cells rows. */
+  private def ivfPqDelta(delta: DataFrame, idCol: String, vecCol: String,
+                         coarseLanes: DataFrame, pqLanes: DataFrame,
+                         dim: Int, m: Int, attrs: Seq[String],
+                         residual: Boolean): (DataFrame, DataFrame) = {
+    val cellCols = col("n_id") +: attrs.map(col) :+ col("c_id")
+    val post = Similarity.ivfPostingsAttrs(delta, idCol, vecCol,
+      Similarity.centroidSetFromLanes(coarseLanes), attrs)
+    if (!residual)
+      (post.select(cellCols: _*),
+        pqEncode(delta, pqLanes, idCol, vecCol, dim, m))
+    else {
+      // persisted for the same reason as the build path: the cells rows
+      // read it once and pqEncode's m subspace branches each read it
+      // again — unpersisted, the delta kernel assignment would run m+1
+      // times per add
+      val resid = OperatorCaches.register(post
+        .join(broadcast(centroidVecFrame(coarseLanes)), Seq("c_id"))
+        .select(cellCols :+
+          zip_with(col("nv"), col("cv"), (a, b) => a - b).as("rv"): _*)
+        .persist())
+      (resid.select(cellCols: _*),
+        pqEncode(resid, pqLanes, "n_id", "rv", dim, m, preScaled = true))
+    }
   }
 
   /** Serve a query batch from the loaded compressed index: probes
@@ -2961,230 +2795,6 @@ object Clustering {
                          pred: org.apache.spark.sql.Column): DataFrame =
     serveIvfPq(idx.copy(cells = idx.cells.filter(pred)), emb, idCol,
       vecCol, dim, m, maxQueryId, nprobe, topK)
-
-  // ─────────────── sharded compressed (IVFPQ) artifact ────────────────
-  //
-  // The q175/q176 rewrite-unit pattern applied to the tier the engine
-  // actually ships at 100 TB ([[IvfPqIndex]] — "the production 100 TB
-  // ANN shape"): BOTH corpus-sized surfaces (cells, codes) shard by
-  // `n_id mod S` under the shared frozen codebooks, one generational
-  // root per shard, so an update/remove rewrites only the shards its
-  // ids route to instead of the whole artifact. cells and codes ride
-  // the SAME shard and swap inside ONE generation — they must stay
-  // id-consistent (a cells row without its m code rows silently drops
-  // that candidate from every ADC serve; committing the two surfaces
-  // separately would open exactly that window). Reference anchor for
-  // the bounded-rewrite-unit idea: one file set per locality group,
-  // KM/output/framework/KijiHFileOutputFormat.java:122-186.
-
-  /** Persist an [[IvfPqIndex]] sharded:
-    * {{{
-    * <gen>/coarse/ <gen>/pqlanes/   # shared frozen codebooks (bounded)
-    * <gen>/_num_shards              # the grid size
-    * <gen>/shards/<s>/_gen_<n>_<uuid>/cells/c_id=<cell>/...   # per shard
-    * <gen>/shards/<s>/_gen_<n>_<uuid>/codes/...
-    * }}}
-    * inside the artifact generation `<gen>`. ONE corpus scan stages each
-    * surface (partitionBy(shard[, c_id])), then per-shard renames
-    * assemble the generations and ONE all-or-nothing pointer commit
-    * publishes them ([[ArtifactStore.commitGenAll]]). */
-  def saveIvfPqSharded(idx: IvfPqIndex, path: String, numShards: Int,
-                       expected: ArtifactStore.Expect = None): Unit = {
-    val spark = idx.coarseLanes.sparkSession
-    val attrs = cellsAttrCols(idx.cells)
-    val shardOf = pmod(col("n_id"), lit(numShards.toLong)).cast("int")
-    ArtifactStore.publish(spark, path, expected) { dir =>
-      ShardedCommit.writeNumShards(spark, dir, numShards)
-      // the two bounded codebook writes overlap the two corpus stagings
-      // — four independent jobs, one barrier (guide §2.6)
-      commitPqShards(spark, dir, 0 until numShards,
-        idx.cells.select(col("n_id") +: attrs.map(col) :+ col("c_id"): _*)
-          .withColumn("shard", shardOf),
-        idx.codes.select(col("n_id"), col("s"), col("code"))
-          .withColumn("shard", shardOf),
-        (0 until numShards).map(sh => sh -> pinShardGen(spark, dir, sh)).toMap,
-        extraWrites = Seq(
-          idx.coarseLanes.select(col("cluster"), col("pos"), col("cval"),
-            col("n")) ->
-            ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
-              .parquet(s"$dir/coarse")),
-          idx.pqLanes.select(col("s"), col("code"), col("pos"), col("cval")) ->
-            ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
-              .parquet(s"$dir/pqlanes"))))
-    }
-  }
-
-  /** Load the sharded compressed artifact as a regular [[IvfPqIndex]]:
-    * per-shard live generations unioned per surface — each cells branch
-    * keeps its own probed-cell partition pruning, so the ADC serve
-    * stays O(probed cells) per shard. */
-  def loadIvfPqSharded(spark: org.apache.spark.sql.SparkSession,
-                       root: String): IvfPqIndex = {
-    val path = ArtifactStore.resolve(spark, root)
-    val bases = (0 until ShardedCommit.numShards(spark, path)).map(sh =>
-      ArtifactStore.resolve(spark, s"$path/shards/$sh"))
-    // cells stay one branch PER SHARD: each keeps its own c_id partition
-    // discovery + probed-cell pruning (multi-root partition discovery
-    // needs a common basePath the per-shard generations don't have).
-    val cells = bases.map { base =>
-      val raw = ArtifactStore.readSurface(spark, s"$base/cells")
-      raw.select(col("n_id") +: cellsAttrCols(raw).map(col) :+
-        col("c_id").cast(LongType).as("c_id"): _*)
-    }.reduce(_ unionByName _)
-    // codes carry no partition columns — ONE multi-path scan over all
-    // shard directories instead of an S-way union of single scans (the
-    // union's per-branch listing/planning overhead grows with S × the
-    // cell grid and showed up directly in the x50 serve row)
-    val codes = ArtifactStore.readSurface(spark,
-        bases.map(b => s"$b/codes"): _*)
-      .select(col("n_id"), col("s"), col("code"))
-    IvfPqIndex(ArtifactStore.readSurface(spark, s"$path/coarse"), cells, codes,
-      ArtifactStore.readSurface(spark, s"$path/pqlanes"))
-  }
-
-  /** ADD a delta to the sharded compressed artifact: one kernel cell
-    * assignment + one per-subspace encode against the FIXED codebooks
-    * (the [[updateIvfPqIndex]] fold), rewriting ONLY the shards the
-    * delta's ids route to — per-shard generations, one all-or-nothing
-    * pointer commit. Returns the touched shard ids. */
-  def updateIvfPqSharded(spark: org.apache.spark.sql.SparkSession,
-                         root: String, delta: DataFrame,
-                         idCol: String, vecCol: String,
-                         dim: Int, m: Int): Seq[Int] = {
-    val path = ArtifactStore.resolve(spark, root)
-    val numShards = ShardedCommit.numShards(spark, path)
-    val coarse = ArtifactStore.readSurface(spark, s"$path/coarse")
-    val pqLanes = ArtifactStore.readSurface(spark, s"$path/pqlanes")
-    // attribute columns ride the cells surface of every shard — discover
-    // them from shard 0 and demand them from the delta
-    val attrs = cellsAttrCols(ArtifactStore.readSurface(spark,
-      ArtifactStore.resolve(spark, s"$path/shards/0") + "/cells"))
-    val shardOf = pmod(col("n_id"), lit(numShards.toLong)).cast("int")
-    val deltaCells = OperatorCaches.register(
-      Similarity.ivfPostingsAttrs(delta, idCol, vecCol,
-          Similarity.centroidSetFromLanes(coarse), attrs)
-        .select(col("n_id") +: attrs.map(col) :+ col("c_id"): _*)
-        .withColumn("shard", shardOf)
-        .persist())
-    val touched = deltaCells.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (touched.isEmpty) return touched
-    val pinned = touched.map(sh => sh -> pinShardGen(spark, path, sh)).toMap
-    val existingCells = touched.map { sh =>
-      val raw = ArtifactStore.readSurface(spark, s"${pinned(sh)._3}/cells")
-      raw.select(col("n_id") +: cellsAttrCols(raw).map(col) :+
-          col("c_id").cast(LongType).as("c_id"): _*)
-        .withColumn("shard", lit(sh))
-    }.reduce(_ unionByName _)
-    val existingCodes = touched.map { sh =>
-      ArtifactStore.readSurface(spark, s"${pinned(sh)._3}/codes")
-        .select(col("n_id"), col("s"), col("code"))
-        .withColumn("shard", lit(sh))
-    }.reduce(_ unionByName _)
-    val deltaCodes = pqEncode(delta, pqLanes, idCol, vecCol, dim, m)
-      .withColumn("shard", shardOf)
-    commitPqShards(spark, path, touched,
-      existingCells.unionByName(deltaCells),
-      existingCodes.unionByName(deltaCodes), pinned)
-    touched
-  }
-
-  /** REMOVE a vector set from the sharded compressed artifact: anti-join
-    * BOTH surfaces within the shards the ids route to; untouched shards
-    * are never read or written. Returns the touched shard ids. */
-  def removeFromIvfPqSharded(spark: org.apache.spark.sql.SparkSession,
-                             root: String, removedIds: DataFrame)
-      : Seq[Int] = {
-    val path = ArtifactStore.resolve(spark, root)
-    val numShards = ShardedCommit.numShards(spark, path)
-    val ids = OperatorCaches.register(removedIds
-      .select(col("n_id").cast(LongType).as("n_id")).distinct()
-      .withColumn("shard",
-        pmod(col("n_id"), lit(numShards.toLong)).cast("int"))
-      .persist())
-    val touched = ids.select(col("shard")).distinct()
-      .collect().map(_.getInt(0)).sorted.toSeq
-    if (touched.isEmpty) return touched
-    val pinned = touched.map(sh => sh -> pinShardGen(spark, path, sh)).toMap
-    val bareIds = ids.select(col("n_id"))
-    val keptCells = touched.map { sh =>
-      val raw = ArtifactStore.readSurface(spark, s"${pinned(sh)._3}/cells")
-      raw.select(col("n_id") +: cellsAttrCols(raw).map(col) :+
-          col("c_id").cast(LongType).as("c_id"): _*)
-        .withColumn("shard", lit(sh))
-    }.reduce(_ unionByName _).join(bareIds, Seq("n_id"), "left_anti")
-    val keptCodes = touched.map { sh =>
-      ArtifactStore.readSurface(spark, s"${pinned(sh)._3}/codes")
-        .select(col("n_id"), col("s"), col("code"))
-        .withColumn("shard", lit(sh))
-    }.reduce(_ unionByName _).join(bareIds, Seq("n_id"), "left_anti")
-    commitPqShards(spark, path, touched, keptCells, keptCodes, pinned)
-    touched
-  }
-
-  /** The shared staging/commit tail of the sharded-IVFPQ writers: ONE
-    * partitioned write per surface (never one job per shard), per-shard
-    * renames assembling `gen/cells` + `gen/codes`, explicit empty
-    * surfaces where a shard ends up with no rows (a zero-row partitioned
-    * write leaves no readable schema behind), then the all-or-nothing
-    * multi-root pointer commit under the artifact-base claim. */
-  private def commitPqShards(spark: org.apache.spark.sql.SparkSession,
-                             path: String, shards: Seq[Int],
-                             cells: DataFrame, codes: DataFrame,
-                             pinned: Map[Int, (String, Option[String], String)],
-                             extraWrites: Seq[(DataFrame, DataFrame => Unit)] =
-                               Nil)
-      : Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tag = java.util.UUID.randomUUID().toString.take(8)
-    val stagingC = s"$path/__cells_stage_$tag"
-    val stagingK = s"$path/__codes_stage_$tag"
-    try {
-      // the two surface stagings are independent jobs — overlap them,
-      // plus any caller-supplied bounded writes (codebooks from the
-      // save path: serializing them BEFORE the staging paid both
-      // latencies — guide §2.6)
-      concurrentFrames(Seq(cells, codes) ++ extraWrites.map(_._1)) {
-        (i, df) =>
-          if (i == 0)
-            df.repartition(writePar(df), col("shard"), col("c_id"))
-              .write.mode("overwrite").partitionBy("shard", "c_id")
-              .parquet(stagingC)
-          else if (i == 1)
-            df.repartition(writePar(df), col("shard"))
-              .write.mode("overwrite").partitionBy("shard").parquet(stagingK)
-          else extraWrites(i - 2)._2(df)
-      }
-      val commits = shards.map { sh =>
-        val (shardRoot, loaded, _) = pinned(sh)
-        val gen = ArtifactStore.newGenDir(spark, shardRoot, loaded)
-        fs.mkdirs(new org.apache.hadoop.fs.Path(gen))
-        val srcC = new org.apache.hadoop.fs.Path(s"$stagingC/shard=$sh")
-        if (fs.exists(srcC))
-          require(fs.rename(srcC,
-              new org.apache.hadoop.fs.Path(s"$gen/cells")),
-            s"sharded ivfpq: cannot stage $srcC as $gen/cells")
-        else
-          cells.limit(0).drop("shard")
-            .coalesce(1).write.mode("overwrite").parquet(s"$gen/cells")
-        val srcK = new org.apache.hadoop.fs.Path(s"$stagingK/shard=$sh")
-        if (fs.exists(srcK))
-          require(fs.rename(srcK,
-              new org.apache.hadoop.fs.Path(s"$gen/codes")),
-            s"sharded ivfpq: cannot stage $srcK as $gen/codes")
-        else
-          codes.limit(0).drop("shard")
-            .coalesce(1).write.mode("overwrite").parquet(s"$gen/codes")
-        (shardRoot, gen, loaded)
-      }
-      ArtifactStore.commitGenAll(spark, path, commits)
-    } finally {
-      fs.delete(new org.apache.hadoop.fs.Path(stagingC), true)
-      fs.delete(new org.apache.hadoop.fs.Path(stagingK), true)
-      ()
-    }
-  }
 
   /** The IVF candidate set behind [[ivfPqSearch]]: `(q_id, n_id, c_id)` —
     * each query paired with exactly the corpus vectors in its nprobe

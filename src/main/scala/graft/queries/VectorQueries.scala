@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions._
 import graft.operators.Similarity
+import graft.operators.Clustering.{IvfFlatSharded, IvfPqSharded, IvfPqrSharded}
+import graft.sinks.SegmentedIndex
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
   *
@@ -587,8 +589,8 @@ object VectorQueries {
 
   // ── q182: SHARDED compressed artifact — the q175 rewrite-unit layout
   // applied to the tier the engine ships at 100 TB (IvfPqIndex): cells
-  // AND codes shard by n_id mod 4, each shard one generational root,
-  // both surfaces swapping inside one generation so they stay
+  // AND codes shard by n_id mod 4, each shard a root of immutable
+  // segments, both surfaces landing inside one segment so they stay
   // id-consistent. The shard-merged ADC serve must reproduce the
   // unsharded q160/q94 search bit-for-bit (equal surface sets,
   // deterministic integer rank): the oracle IS q94's SQL. ──────────────
@@ -596,19 +598,19 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfpqsh", d)
-    graft.operators.Clustering.saveIvfPqSharded(
+    SegmentedIndex.save(s, IvfPqSharded,
       graft.operators.Clustering.buildIvfPqIndex(emb, "vec_id", "embedding",
         Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d)),
-      path, numShards = 4)
+      path, 4)
     graft.operators.Clustering.serveIvfPq(
-        graft.operators.Clustering.loadIvfPqSharded(s, path),
+        SegmentedIndex.load(s, IvfPqSharded, path),
         emb, "vec_id", "embedding", Dim, PqM, MaxQueryId, IvfNprobe, PqTopK)
       .orderBy($"q_id", $"rank")
   }
 
   // ── q183: sharded compressed UPDATE — q161's train/add split where
-  // the add rewrites ONLY the shards the delta routes to (per-shard
-  // cells+codes generations, one all-or-nothing pointer commit). Both
+  // the add appends one delta-sized cells+codes segment to ONLY the
+  // shards the delta routes to (one manifest commit). Both
   // surfaces are monoids under the fixed codebooks, so the served ADC
   // search still equals a fresh assignment+encode of the union under
   // the slice-trained fits: the oracle IS q161's SQL. ──────────────────
@@ -616,23 +618,24 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfpqshup", d)
-    graft.operators.Clustering.saveIvfPqSharded(
+    SegmentedIndex.save(s, IvfPqSharded,
       graft.operators.Clustering.buildIvfPqIndex(
         emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding",
         Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d)),
-      path, numShards = 4)
-    graft.operators.Clustering.updateIvfPqSharded(s, path,
-      emb.filter($"vec_id" % 10 === 0), "vec_id", "embedding", Dim, PqM)
+      path, 4)
+    SegmentedIndex.update(s, path,
+      IvfPqSharded.delta(emb.filter($"vec_id" % 10 === 0),
+        "vec_id", "embedding", Dim, PqM))
     graft.operators.Clustering.serveIvfPq(
-        graft.operators.Clustering.loadIvfPqSharded(s, path),
+        SegmentedIndex.load(s, IvfPqSharded, path),
         emb, "vec_id", "embedding", Dim, PqM, MaxQueryId, IvfNprobe, PqTopK)
       .orderBy($"q_id", $"rank")
   }
 
   // ── q184: FILTERED serve over the SHARDED raw-vector artifact —
   // q177's predicate+vector query where the postings live in per-shard
-  // generational roots: attrs ride every shard surface, the predicate
-  // composes into each shard's pruned scan (the serve verb's
+  // segments: attrs ride every shard surface, the predicate composes
+  // into each segment's pruned scan (the serve verb's
   // --type=ivfflat-sharded --filter-col path). Equal postings sets ⇒
   // the sharded filtered serve must reproduce q177 bit-for-bit: the
   // oracle IS q177's SQL. ───────────────────────────────────────────────
@@ -640,13 +643,13 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfflatshfil", d)
-    graft.operators.Clustering.saveIvfFlatSharded(
+    SegmentedIndex.save(s, IvfFlatSharded,
       graft.operators.Clustering.buildIvfFlatIndex(
         emb, "vec_id", "embedding", 1 << ivfBits(s, d),
         attrCols = Seq("label")),
-      path, numShards = 4)
+      path, 4)
     graft.operators.Clustering.serveIvfFlatFiltered(
-        graft.operators.Clustering.loadIvfFlatSharded(s, path),
+        SegmentedIndex.load(s, IvfFlatSharded, path),
         emb, "vec_id", "embedding", IvfMaxQueryId, IvfNprobe, IvfK,
         pred = col("label") === FilterLabel)
       .orderBy($"q_id", $"rank")
@@ -1208,9 +1211,9 @@ object VectorQueries {
   }
 
   // ── q175: SHARDED inverted-file artifact — the 100 TB rewrite-unit
-  // layout: the same trained index persisted as one generational root
-  // PER SHARD (n_id mod 4) under a shared frozen codebook, serve =
-  // per-shard probe UNIONED before the shared top-k. Postings sets are
+  // layout: the same trained index persisted as one segmented root PER
+  // SHARD (n_id mod 4) under a shared frozen codebook, serve = per-segment
+  // probe UNIONED before the shared top-k. Postings sets are
   // equal and the rerank is deterministic, so the shard-merged serve
   // must reproduce the single-artifact serve (q156) bit-for-bit: the
   // oracle IS q45's SQL. ────────────────────────────────────────────────
@@ -1218,19 +1221,19 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfflatsh", d)
-    graft.operators.Clustering.saveIvfFlatSharded(
+    SegmentedIndex.save(s, IvfFlatSharded,
       graft.operators.Clustering.buildIvfFlatIndex(
         emb, "vec_id", "embedding", 1 << ivfBits(s, d)),
-      path, numShards = 4)
+      path, 4)
     graft.operators.Clustering.serveIvfFlat(
-        graft.operators.Clustering.loadIvfFlatSharded(s, path),
+        SegmentedIndex.load(s, IvfFlatSharded, path),
         emb, "vec_id", "embedding", IvfMaxQueryId, IvfNprobe, IvfK)
       .orderBy($"q_id", $"rank")
   }
 
   // ── q176: sharded UPDATE — q157's train/add split where the add
-  // rewrites ONLY the shards the delta routes to (per-shard pointer
-  // CAS; untouched shards keep their generation). The postings monoid
+  // appends one delta-sized segment to ONLY the shards the delta routes
+  // to (untouched shards keep their segments). The postings monoid
   // is unchanged, so the served search still equals a fresh assignment
   // of the union under the slice-trained codebook: the oracle IS
   // q157's SQL. ─────────────────────────────────────────────────────────
@@ -1238,15 +1241,16 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfflatshup", d)
-    graft.operators.Clustering.saveIvfFlatSharded(
+    SegmentedIndex.save(s, IvfFlatSharded,
       graft.operators.Clustering.buildIvfFlatIndex(
         emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding",
         1 << ivfBits(s, d)),
-      path, numShards = 4)
-    graft.operators.Clustering.updateIvfFlatSharded(s, path,
-      emb.filter($"vec_id" % 10 === 0), "vec_id", "embedding")
+      path, 4)
+    SegmentedIndex.update(s, path,
+      IvfFlatSharded.delta(emb.filter($"vec_id" % 10 === 0),
+        "vec_id", "embedding"))
     graft.operators.Clustering.serveIvfFlat(
-        graft.operators.Clustering.loadIvfFlatSharded(s, path),
+        SegmentedIndex.load(s, IvfFlatSharded, path),
         emb, "vec_id", "embedding", IvfMaxQueryId, IvfNprobe, IvfK)
       .orderBy($"q_id", $"rank")
   }
@@ -1353,15 +1357,16 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfflatshreb", d)
-    graft.operators.Clustering.saveIvfFlatSharded(
+    SegmentedIndex.save(s, IvfFlatSharded,
       graft.operators.Clustering.buildIvfFlatIndex(
         emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding",
         1 << ivfBits(s, d)),
-      path, numShards = 4)
-    graft.operators.Clustering.updateIvfFlatSharded(s, path,
-      emb.filter($"vec_id" % 10 === 0), "vec_id", "embedding")
+      path, 4)
+    SegmentedIndex.update(s, path,
+      IvfFlatSharded.delta(emb.filter($"vec_id" % 10 === 0),
+        "vec_id", "embedding"))
     val rebuilt = graft.operators.Clustering.rebuildIvfFlatIndex(
-      graft.operators.Clustering.loadIvfFlatSharded(s, path),
+      SegmentedIndex.load(s, IvfFlatSharded, path),
       1 << ivfBits(s, d))
     val rebPath = QueryTmp.dir("ivfflatshreb2", d)
     // save + serve with the probe stage overlapped into the save barrier
@@ -1389,20 +1394,21 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfpqshreb", d)
-    graft.operators.Clustering.saveIvfPqSharded(
+    SegmentedIndex.save(s, IvfPqSharded,
       graft.operators.Clustering.buildIvfPqIndex(
         emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding",
         Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d)),
-      path, numShards = 4)
-    graft.operators.Clustering.updateIvfPqSharded(s, path,
-      emb.filter($"vec_id" % 10 === 0), "vec_id", "embedding", Dim, PqM)
+      path, 4)
+    SegmentedIndex.update(s, path,
+      IvfPqSharded.delta(emb.filter($"vec_id" % 10 === 0),
+        "vec_id", "embedding", Dim, PqM))
     graft.IndexTool.rebuild(s, "ivfpq-sharded", path,
       Map("dim" -> Dim.toString, "m" -> PqM.toString, "k" -> PqK.toString,
         "iters" -> PqIters.toString,
         "centroids" -> (1 << ivfBits(s, d)).toString, "force" -> "true"),
       Some(emb))
     graft.operators.Clustering.serveIvfPq(
-        graft.operators.Clustering.loadIvfPqSharded(s, path),
+        SegmentedIndex.load(s, IvfPqSharded, path),
         emb, "vec_id", "embedding", Dim, PqM, MaxQueryId, IvfNprobe, PqTopK)
       .orderBy($"q_id", $"rank")
   }
@@ -1417,20 +1423,21 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfpqrshreb", d)
-    graft.operators.Clustering.saveIvfPqrSharded(
+    SegmentedIndex.save(s, IvfPqrSharded,
       graft.operators.Clustering.buildIvfPqrIndex(
         emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding",
         Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d)),
-      path, numShards = 4)
-    graft.operators.Clustering.updateIvfPqrSharded(s, path,
-      emb.filter($"vec_id" % 10 === 0), "vec_id", "embedding", Dim, PqM)
+      path, 4)
+    SegmentedIndex.update(s, path,
+      IvfPqrSharded.delta(emb.filter($"vec_id" % 10 === 0),
+        "vec_id", "embedding", Dim, PqM))
     graft.IndexTool.rebuild(s, "ivfpqr-sharded", path,
       Map("dim" -> Dim.toString, "m" -> PqM.toString, "k" -> PqK.toString,
         "iters" -> PqIters.toString,
         "centroids" -> (1 << ivfBits(s, d)).toString, "force" -> "true"),
       Some(emb))
     graft.operators.Clustering.serveIvfPqr(
-        graft.operators.Clustering.loadIvfPqrSharded(s, path),
+        SegmentedIndex.load(s, IvfPqrSharded, path),
         emb, "vec_id", "embedding", Dim, PqM, MaxQueryId, IvfNprobe,
         PqTopK)
       .orderBy($"q_id", $"rank")
@@ -1764,17 +1771,17 @@ object VectorQueries {
     val coarseK = 1 << math.min(HierMaxCoarseBits, (bits + 1) / 2)
     val path = QueryTmp.dir("semsharded", d)
     val tier = graft.operators.Clustering.SemSharded
-    graft.sinks.SegmentedIndex.save(s, tier,
+    SegmentedIndex.save(s, tier,
       graft.operators.Clustering.semDedupHierFit(corpus, "vec_id",
         "embedding", coarseK, SemTargetClusterRows, SemIters, "semdedup-hd",
         clusterCap = SemClusterCap, maxFinePerCell = HierMaxFinePerCell),
       path, 4)
-    graft.sinks.SegmentedIndex.update(s, path,
+    SegmentedIndex.update(s, path,
       tier.delta(emb.filter($"label" === SemDeltaLabels.head)))
     graft.operators.Clustering
       .semDedupDeltaHier(emb.filter($"label" === SemDeltaLabels(1)),
         "vec_id", "embedding",
-        graft.sinks.SegmentedIndex.load(s, tier, path),
+        SegmentedIndex.load(s, tier, path),
         CosineDupThreshold)
       .orderBy($"pruned")
   }
@@ -2264,12 +2271,12 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfpqrsh", d)
-    graft.operators.Clustering.saveIvfPqrSharded(
+    SegmentedIndex.save(s, IvfPqrSharded,
       graft.operators.Clustering.buildIvfPqrIndex(emb, "vec_id",
         "embedding", Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d)),
-      path, numShards = 4)
+      path, 4)
     graft.operators.Clustering.serveIvfPqr(
-        graft.operators.Clustering.loadIvfPqrSharded(s, path),
+        SegmentedIndex.load(s, IvfPqrSharded, path),
         emb, "vec_id", "embedding", Dim, PqM, MaxQueryId, IvfNprobe,
         PqTopK)
       .orderBy($"q_id", $"rank")
@@ -2277,21 +2284,22 @@ object VectorQueries {
 
   // ── q189: sharded residual UPDATE — q173's train/add split where the
   // add (cell assign + broadcast residual join + per-subspace encode
-  // against the FIXED residual lanes) rewrites only the shards the
-  // delta routes to. Oracle IS q173's SQL. ─────────────────────────────
+  // against the FIXED residual lanes) appends a segment to only the
+  // shards the delta routes to. Oracle IS q173's SQL. ─────────────────────────────
   val q189_ivfpqr_shard_update: Q = (s, d) => {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfpqrshup", d)
-    graft.operators.Clustering.saveIvfPqrSharded(
+    SegmentedIndex.save(s, IvfPqrSharded,
       graft.operators.Clustering.buildIvfPqrIndex(
         emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding",
         Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d)),
-      path, numShards = 4)
-    graft.operators.Clustering.updateIvfPqrSharded(s, path,
-      emb.filter($"vec_id" % 10 === 0), "vec_id", "embedding", Dim, PqM)
+      path, 4)
+    SegmentedIndex.update(s, path,
+      IvfPqrSharded.delta(emb.filter($"vec_id" % 10 === 0),
+        "vec_id", "embedding", Dim, PqM))
     graft.operators.Clustering.serveIvfPqr(
-        graft.operators.Clustering.loadIvfPqrSharded(s, path),
+        SegmentedIndex.load(s, IvfPqrSharded, path),
         emb, "vec_id", "embedding", Dim, PqM, MaxQueryId, IvfNprobe,
         PqTopK)
       .orderBy($"q_id", $"rank")

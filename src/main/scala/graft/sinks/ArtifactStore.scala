@@ -334,20 +334,18 @@ object ArtifactStore {
                 expected: Option[String]): Unit =
     commitGenAll(spark, path, Seq((path, genDir, expected)))
 
-  /** Commit MANY staged generations (one per shard root) as a single
-    * all-or-nothing pointer transaction — the multi-shard commit a
-    * vector-sharded artifact's update/remove needs (the segmented tiers
-    * commit one manifest through [[commitGen]] instead,
-    * `SegmentStore.commit`). A sequential per-shard
-    * [[commitGen]] loop has a partial-failure window: a crash (or one
-    * lost CAS) mid-loop leaves the delta applied to some shards but not
-    * others, and re-running then either trips the disjoint-ids guard or
-    * (with the guard waived) duplicates the already-committed shards'
-    * rows. Here:
+  /** Commit MANY staged generations (one per root) as a single
+    * all-or-nothing pointer transaction — the multi-bucket commit of a
+    * bucketed entity table's folds (`EntityTable`), its only multi-root
+    * caller (the sharded index tiers commit one segment manifest through
+    * [[commitGen]] instead, `SegmentStore.commit`). A sequential
+    * per-root [[commitGen]] loop has a partial-failure window: a crash
+    * (or one lost CAS) mid-loop leaves the fold applied to some roots
+    * but not others. Here:
     *
-    *  1. ONE claim is taken at `claimDir` (the artifact base — every
-    *     sharded writer serializes on it, so two multi-shard commits
-    *     can never interleave);
+    *  1. ONE claim is taken at `claimDir` (the table root — every fold
+    *     serializes on it, so two multi-root commits can never
+    *     interleave);
     *  2. EVERY commit's precondition is verified before ANY pointer
     *     moves: the root's pointer still names the generation the
     *     writer folded onto, and the staged directory survived. (A
@@ -361,12 +359,12 @@ object ArtifactStore {
     *  4. per-root retention sweeps run last (non-semantic cleanup).
     *
     * If ANY precondition fails, every staged generation is deleted and
-    * the call throws with the delta UNAPPLIED EVERYWHERE — re-run it.
-    * A crash inside the all-flips window itself can still leave a
-    * partial commit (pointer flips cannot be made jointly atomic on a
-    * filesystem), but the window excludes all data writes and renames;
-    * RECOVERY: `index-remove` the delta's ids (remove is idempotent on
-    * ids absent from untouched shards), then re-run the update. */
+    * the call throws with the fold UNAPPLIED EVERYWHERE — re-run it.
+    * A crash inside the all-flips window itself can still leave some
+    * pointers flipped (pointer flips cannot be made jointly atomic on a
+    * filesystem), but the window excludes all data writes and renames,
+    * and a bucketed table's readers plan against the root generation's
+    * bucket manifest, whose pointer flips last. */
   def commitGenAll(spark: SparkSession, claimDir: String,
                    commits: Seq[(String, String, Option[String])]): Unit = {
     if (commits.isEmpty) return

@@ -2,9 +2,11 @@ package graft.sinks
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.types.LongType
 
-/** The one lifecycle of every SEGMENTED index artifact (bm25-, lsh-,
-  * cdc- and semdedup-sharded): the rewrite-unit layout (reference
+/** The one lifecycle of every SHARDED index artifact (bm25-, lsh-,
+  * cdc-, semdedup-, ivfflat-, ivfpq- and ivfpqr-sharded): the
+  * rewrite-unit layout (reference
   * anchor: one immutable file set made live by one metadata move,
   * `KM/output/framework/KijiHFileOutputFormat.java:122-186`). A flat
   * artifact re-persists its corpus-sized surfaces wholesale on every
@@ -20,7 +22,8 @@ import org.apache.spark.sql.functions.{col, lit}
   *                                         `stats`), one segment
   *   <gen>/<root surface>/                 build-time surfaces no update
   *                                         moves (semdedup's fitted
-  *                                         lanes/seeds/sizes/meta)
+  *                                         lanes/seeds/sizes/meta, the
+  *                                         vector tiers' codebooks)
   *
   * A tier is a [[Tier]] descriptor: its shard FAMILIES (each a routing
   * column over S and the surfaces that swap together inside one segment
@@ -38,7 +41,11 @@ import org.apache.spark.sql.functions.{col, lit}
   *     overwritten;
   *  3. scan each surface as ONE multi-path scan over the pinned roots'
   *     live segments — never an S-way union, whose per-branch planning
-  *     is the cost sharding must not add;
+  *     is the cost sharding must not add. The exception is a surface
+  *     laid out by a `partition` column (the vector tiers' `c_id=`
+  *     cell directories): Spark's partition discovery refuses one scan
+  *     over several roots' partition directories, so it scans as one
+  *     branch per segment, each pruning its own cells;
   *  4. route rows to shards and collect the touched ones;
   *  5. commit through [[ShardedCommit.commitSegmented]]: the shard
   *     column and the empty surface of a rowless shard are added here.
@@ -52,8 +59,24 @@ import org.apache.spark.sql.functions.{col, lit}
 object SegmentedIndex {
 
   /** One stored surface: its directory name, its columns in stored
-    * order, and its staging wave ([[ShardedCommit.Surface]]). */
-  final case class Surface(name: String, cols: Seq[String], wave: Int = 0)
+    * order, and its staging wave ([[ShardedCommit.Surface]]).
+    * `partition` names an integral column the surface is laid out by on
+    * disk (`<surface>/<partition>=<v>/`, read back as a long), so a
+    * scan filtered on it prunes directories. `attrs` marks a surface
+    * that also stores the artifact's attribute columns — whatever its
+    * rows or a segment footer hold beyond `cols` — between `cols` and
+    * `partition`. */
+  final case class Surface(name: String, cols: Seq[String], wave: Int = 0,
+                           partition: Option[String] = None,
+                           attrs: Boolean = false) {
+    def stored(attrCols: Seq[String]): Seq[String] =
+      cols ++ attrCols ++ partition
+
+    /** The attribute columns among `columns`. */
+    def attrsOf(columns: Seq[String]): Seq[String] =
+      if (attrs) columns.filterNot(c => cols.contains(c) ||
+        partition.contains(c)) else Nil
+  }
 
   /** S shard roots `<gen>/<name>/<s>` whose surfaces swap together
     * inside one segment; a row lives in shard `route(S)`. */
@@ -79,15 +102,17 @@ object SegmentedIndex {
     /** Every family surface and singleton of `a`, for a full write. */
     def surfacesOf(a: A): Map[String, DataFrame]
 
-    /** Write the build-time root surfaces of `a` into generation `dir`. */
-    def writeRoots(dir: String, a: A): Unit = ()
+    /** The writes of the build-time root surfaces of `a` into
+      * generation `dir`, staged beside a save's first wave. */
+    def writeRoots(dir: String, a: A): Seq[(DataFrame, DataFrame => Unit)] =
+      Nil
 
     /** The artifact of generation `dir`, its surfaces read via `view`. */
     def artifact(spark: SparkSession, dir: String,
                  view: String => DataFrame): A
 
-    /** A write of this tier, planned against the opened artifact. */
-    final def fold(plan: Opened => Write): Fold = Fold(this, plan)
+    /** A write of this tier, planned against the pinned artifact. */
+    final def fold(plan: Scan => Write): Fold = Fold(this, plan)
   }
 
   /** The live generation of a segmented artifact and its grid size. */
@@ -101,8 +126,9 @@ object SegmentedIndex {
                          rows: Scan => Map[String, DataFrame],
                          singletons: Seq[String] = Nil)
 
-  /** A tier's update or removal, planned once the artifact is opened. */
-  final case class Fold(tier: Tier[_], plan: Opened => Write)
+  /** A tier's update or removal, planned over the pinned artifact: a
+    * scan of every shard root, read only where the plan reads it. */
+  final case class Fold(tier: Tier[_], plan: Scan => Write)
 
   /** A pinned root: its directory `key` under the artifact generation
     * (`<family>/<s>`) and its shard. */
@@ -119,25 +145,38 @@ object SegmentedIndex {
 
     private val spark = opened.spark
     private val scans = scala.collection.mutable.Map.empty[String, DataFrame]
+    private val attrCols = scala.collection.mutable.Map.empty[String, Seq[String]]
 
     private def familyOf(surface: String): Option[(Surface, Seq[Root])] =
       roots.iterator.flatMap { case (f, rs) =>
         f.surfaces.find(_.name == surface).map(_ -> rs) }.nextOption()
 
-    def apply(surface: String): DataFrame = scans.getOrElseUpdate(surface, {
-      val (spec, raw) = familyOf(surface) match {
-        case Some((sp, rs)) =>
-          sp -> ArtifactStore.readSurface(spark,
-            rs.flatMap(r => pinned.paths(r.key, surface)): _*)
+    /** A pinned surface's spec and its segment paths. */
+    private def pathsOf(surface: String): (Surface, Seq[String]) =
+      familyOf(surface) match {
+        case Some((sp, rs)) => sp -> rs.flatMap(r => pinned.paths(r.key, surface))
         case None =>
           val sp = singles.find(_.name == surface).getOrElse(
             throw new IllegalArgumentException(s"$surface is not pinned"))
-          sp -> ArtifactStore.readSurface(spark,
-            pinned.paths(surface, surface): _*)
+          sp -> pinned.paths(surface, surface)
       }
-      val cols = spec.cols.map(col)
-      layer.get(surface).foldLeft(raw.select(cols: _*))(
-        (df, l) => df.unionByName(l.select(cols: _*)))
+
+    /** The artifact's attribute columns on `surface` — read from one
+      * pinned segment's footer (no job), so an update can demand them
+      * from its delta. */
+    def attrs(surface: String): Seq[String] = attrCols.getOrElseUpdate(surface, {
+      val (sp, paths) = pathsOf(surface)
+      if (!sp.attrs) Nil
+      else sp.attrsOf(ArtifactStore.readSurface(spark, paths.head).columns.toSeq)
+    })
+
+    def apply(surface: String): DataFrame = scans.getOrElseUpdate(surface, {
+      val (sp, paths) = pathsOf(surface)
+      val cols = sp.stored(attrs(surface)).map(col)
+      val raw = sp.partition.fold(Seq(ArtifactStore.readSurface(spark,
+        paths: _*)))(p => paths.map(ArtifactStore.readSurface(spark, _)
+          .withColumn(p, col(p).cast(LongType))))
+      (raw ++ layer.get(surface)).map(_.select(cols: _*)).reduce(_ unionByName _)
     })
 
     /** Whether `surface` spans more than one segment of some root — the
@@ -205,16 +244,16 @@ object SegmentedIndex {
   private def segmentCount(s: Scan): Long =
     s.roots.map(_._2.map(r => s.pinned.segments(r.key).size.toLong).sum).sum
 
-  /** A full write of `a` as a fresh generation of `path` (S = numShards). */
+  /** A full write of `a` as a fresh generation of `path` (S = numShards),
+    * committed against `expected` ([[ArtifactStore.publish]]). */
   def save[A](spark: SparkSession, tier: Tier[A], a: A, path: String,
-              numShards: Int): Unit = {
+              numShards: Int, expected: ArtifactStore.Expect = None): Unit = {
     val rows = tier.surfacesOf(a)
-    ArtifactStore.publish(spark, path) { dir =>
+    ArtifactStore.publish(spark, path, expected) { dir =>
       ShardedCommit.writeNumShards(spark, dir, numShards)
-      tier.writeRoots(dir, a)
       commit(scan(tier, Opened(spark, dir, numShards), SegmentStore.fresh(dir),
         _ => 0 until numShards, tier.singletons.map(_.name)), rows,
-        ShardedCommit.SegReplace)
+        ShardedCommit.SegReplace, tier.writeRoots(dir, a))
     }
   }
 
@@ -250,22 +289,23 @@ object SegmentedIndex {
   def remove(spark: SparkSession, root: String, fold: Fold): Seq[Int] =
     write(spark, root, fold)(commit(_, _, ShardedCommit.SegReplace))
 
-  /** Open, route the fold's keys, pin the touched shards and the
-    * singletons it rewrites, build its rows from the pinned scan and
-    * hand both to `commitRows`. */
+  /** Open and pin, plan the fold, route its keys, scan the touched
+    * shards and the singletons it rewrites, build its rows from that
+    * scan and hand both to `commitRows`. */
   private def write(spark: SparkSession, root: String, fold: Fold)(
       commitRows: (Scan, Map[String, DataFrame]) => Unit): Seq[Int] = {
     val o = open(spark, root)
-    val w = fold.plan(o)
+    val shards = 0 until o.numShards
+    val all = pin(fold.tier, o, _ => shards, Nil)
+    val w = fold.plan(all)
     val keyed = fold.tier.families.flatMap(f => w.keys.get(f.name).map(k =>
       f.name -> k.select(f.route(o.numShards)).distinct().collect()
         .map(_.getInt(0)).sorted.toSeq))
     if (keyed.nonEmpty && keyed.forall(_._2.isEmpty)) return Nil
-    val all = 0 until o.numShards
-    val s = pin(fold.tier, o, f => keyed.toMap.getOrElse(f.name, all),
-      w.singletons)
+    val s = scan(fold.tier, o, all.pinned,
+      f => keyed.toMap.getOrElse(f.name, shards), w.singletons)
     commitRows(s, w.rows(s))
-    keyed.headOption.fold(all: Seq[Int])(_._2)
+    keyed.headOption.fold(shards: Seq[Int])(_._2)
   }
 
   /** The live view of every surface of the pinned families. */
@@ -274,18 +314,22 @@ object SegmentedIndex {
       .map(sp => sp.name -> s.live(sp.name)).toMap
 
   private def commit(s: Scan, rows: Map[String, DataFrame],
-                     mode: ShardedCommit.SegMode): Unit = {
+                     mode: ShardedCommit.SegMode,
+                     rootWrites: Seq[(DataFrame, DataFrame => Unit)] = Nil)
+      : Unit = {
     val n = s.opened.numShards
-    def stored(sp: Surface): DataFrame =
-      rows(sp.name).select(sp.cols.map(col): _*)
+    def stored(sp: Surface): DataFrame = {
+      val df = rows(sp.name)
+      df.select(sp.stored(sp.attrsOf(df.columns.toSeq)).map(col): _*)
+    }
     ShardedCommit.commitSegmented(s.opened.spark, s.pinned,
       s.roots.filter(_._2.nonEmpty).map { case (f, rs) =>
         ShardedCommit.SegFamily(rs, f.surfaces.map { sp =>
           val df = stored(sp)
           ShardedCommit.Surface(sp.name, df.withColumn("shard", f.route(n)),
-            () => df.limit(0), sp.wave)
+            () => df.limit(0), sp.wave, sp.partition)
         }, mode)
       },
-      s.singles.map(sp => stored(sp) -> sp.name))
+      s.singles.map(sp => stored(sp) -> sp.name), rootWrites)
   }
 }

@@ -6,10 +6,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** How a sharded artifact's shard roots commit: the `_num_shards`
   * grid marker every sharded tier records, and the staged,
   * all-or-nothing segment commit behind [[SegmentedIndex]] (whose
-  * scaladoc describes the layout). A commit keeps four rules:
+  * scaladoc describes the layout and lists the seven sharded tiers). A
+  * commit keeps four rules:
   *
-  *  1. every surface stages as ONE `partitionBy("shard")` job (never a
-  *     write per shard — S jobs of planning overhead for one job's I/O);
+  *  1. every surface stages as ONE `partitionBy("shard")` job — a
+  *     cell-partitioned vector surface as one `partitionBy("shard",
+  *     "c_id")` job — never a write per shard (S jobs of planning
+  *     overhead for one job's I/O);
   *  2. each shard's staged partition directories RENAME into that
   *     shard's fresh segment — surfaces sharing a family swap TOGETHER
   *     inside one segment (a row in one surface whose sibling rows are
@@ -27,14 +30,17 @@ object ShardedCommit {
 
   /** One shard-keyed surface: `df` must carry an int `shard` column
     * routing each row; `empty` supplies the schema-bearing zero-row
-    * frame written where a shard has no staged rows. `wave` orders the
+    * frame written where a shard has no staged rows; `partition` lays
+    * each shard's rows out by that column too (`partitionBy("shard",
+    * partition)`). `wave` orders the
     * staging: surfaces stage concurrently WITHIN a wave, waves run in
     * ascending order — a surface derived from another surface's
     * persisted lineage stages in a later wave so its job plans against
     * the already-materialized cache instead of recomputing the shared
     * ancestor (the saveBm25Index wave pattern, generalized). */
   final case class Surface(name: String, df: DataFrame,
-                           empty: () => DataFrame, wave: Int = 0)
+                           empty: () => DataFrame, wave: Int = 0,
+                           partition: Option[String] = None)
 
   /** The shard-grid size every sharded save records inside its
     * generation (`<gen>/_num_shards`): routing hashes mod it, so it can
@@ -102,13 +108,14 @@ object ShardedCommit {
       val ex = if (wi == 0) extras else Nil
       graft.operators.Clustering.concurrentFrames(
         ws.map(_._1.df) ++ ex.map(_._1)) { (i, df) =>
-        if (i < ws.size)
+        if (i < ws.size) {
+          val keys = "shard" +: ws(i)._1.partition.toSeq
           // explicit count: a bare keyed repartition lets AQE coalesce
           // the staging to one serial-writer task (Clustering.writePar)
           df.repartition(graft.operators.Clustering.writePar(df),
-              org.apache.spark.sql.functions.col("shard"))
-            .write.mode("overwrite").partitionBy("shard").parquet(ws(i)._2)
-        else ex(i - ws.size)._2(df)
+              keys.map(org.apache.spark.sql.functions.col): _*)
+            .write.mode("overwrite").partitionBy(keys: _*).parquet(ws(i)._2)
+        } else ex(i - ws.size)._2(df)
       }
       ()
     }
@@ -123,10 +130,13 @@ object ShardedCommit {
     * rows, never the shard's prior surface, and commit metadata is one
     * file and one flip whatever the number of roots. `singletons` are
     * bounded rollup roots (e.g. BM25's 1-row stats), each written whole
-    * as a segment of its own root during the first staging wave. */
+    * as a segment of its own root during the first staging wave, as are
+    * `rootWrites` (a save's build-time root surfaces). */
   def commitSegmented(spark: SparkSession, pinned: SegmentStore.Pinned,
                       families: Seq[SegFamily],
-                      singletons: Seq[(DataFrame, String)] = Nil): Unit = {
+                      singletons: Seq[(DataFrame, String)] = Nil,
+                      rootWrites: Seq[(DataFrame, DataFrame => Unit)] = Nil)
+      : Unit = {
     val path = pinned.dir
     val fs =
       new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -142,7 +152,7 @@ object ShardedCommit {
       stageAll(staged.flatMap(_._2), singletons.map { case (df, key) =>
         df -> ((d: DataFrame) =>
           d.coalesce(1).write.mode("overwrite").parquet(s"$path/$key/$seg/$key"))
-      })
+      } ++ rootWrites)
       val landed: Seq[(String, Seq[String])] = staged.flatMap { case (fam, surfs) =>
         val present = surfs.map { case (_, stage) =>
           SegmentStore.list(fs, stage).map(_.getPath.getName).toSet }

@@ -56,11 +56,11 @@ class JobBudgetSpec extends SparkSpec with BeforeAndAfterAll {
     "semdedup-sharded" -> segmented(Clustering.SemSharded),
     "ivf" -> Clustering.loadIvfCodebook,
     "ivfflat" -> Clustering.loadIvfFlatIndex,
-    "ivfflat-sharded" -> Clustering.loadIvfFlatSharded,
+    "ivfflat-sharded" -> segmented(Clustering.IvfFlatSharded),
     "ivfpq" -> Clustering.loadIvfPqIndex,
-    "ivfpq-sharded" -> Clustering.loadIvfPqSharded,
+    "ivfpq-sharded" -> segmented(Clustering.IvfPqSharded),
     "ivfpqr" -> Clustering.loadIvfPqrIndex,
-    "ivfpqr-sharded" -> Clustering.loadIvfPqrSharded,
+    "ivfpqr-sharded" -> segmented(Clustering.IvfPqrSharded),
     "pq" -> Clustering.loadPqIndex, "sq" -> Clustering.loadSqIndex,
     "ivfsq" -> Clustering.loadIvfSqIndex, "imi" -> Clustering.loadImiIndex,
     "bpe" -> Bpe.loadMerges, "unigram" -> UnigramLm.loadVocab,
@@ -125,14 +125,19 @@ class JobBudgetSpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
-  test("lsh-, cdc- and semdedup-sharded (S = 4) update, compact and remove stay within their job ceilings") {
+  /** Four-lane vectors `(vec_id, embedding)` in four clusters. */
+  private def emb(ids: Range): org.apache.spark.sql.DataFrame = {
     import spark.implicits._
-    val base = tmpDir("jobsegmented")
-    def emb(ids: Range): org.apache.spark.sql.DataFrame = ids.map { i =>
+    ids.map { i =>
         val v = Array(1f, 1f, 1f, 1f); v(i % 4) = 10f + i * 0.01f
         (i.toLong, v.toSeq)
       }.toDF("vec_id", "embedding")
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
+  }
+
+  test("lsh-, cdc- and semdedup-sharded (S = 4) update, compact and remove stay within their job ceilings") {
+    import spark.implicits._
+    val base = tmpDir("jobsegmented")
     // ceilings = the counts this fixture measured while each tier had
     // its own segmented lifecycle (on the shared one: 13/8/9, 10/5/7,
     // 16/2/5)
@@ -156,6 +161,36 @@ class JobBudgetSpec extends SparkSpec with BeforeAndAfterAll {
         "compact" -> jobsOf(IndexTool.compact(spark, tpe, path, flags)),
         "remove" -> jobsOf(IndexTool.remove(spark, tpe, removed, path,
           flags)))
+      info(s"$tpe: ${counts.map { case (op, n) => s"$op $n" }.mkString(", ")}")
+      counts.foreach { case (op, got) =>
+        assert(got <= ceilings(op),
+          s"$tpe $op launched $got jobs, ceiling ${ceilings(op)}")
+      }
+    }
+  }
+
+  test("ivfflat-, ivfpq- and ivfpqr-sharded (S = 4) update, compact and remove stay within their job ceilings") {
+    import spark.implicits._
+    val base = tmpDir("jobvector")
+    val pq = Map("dim" -> "4", "m" -> "2", "k" -> "2", "centroids" -> "2")
+    // update and remove ceilings = the counts this fixture measured while
+    // each tier rewrote whole shards under per-shard pointers; compact
+    // = the count on the shared segmented lifecycle
+    val cases = Seq(
+      ("ivfflat-sharded", Map("centroids" -> "2"),
+        Map("update" -> 8, "compact" -> 2, "remove" -> 8)),
+      ("ivfpq-sharded", pq, Map("update" -> 12, "compact" -> 4, "remove" -> 10)),
+      ("ivfpqr-sharded", pq, Map("update" -> 14, "compact" -> 4, "remove" -> 10)))
+    for ((tpe, extra, ceilings) <- cases) {
+      val path = s"$base/$tpe"
+      val flags = extra + ("shards" -> "4")
+      IndexTool.build(spark, tpe, emb(0 until 40), path, flags)
+      val counts = Seq(
+        "update" -> jobsOf(IndexTool.update(spark, tpe, emb(100 until 104),
+          path, flags)),
+        "compact" -> jobsOf(IndexTool.compact(spark, tpe, path, flags)),
+        "remove" -> jobsOf(IndexTool.remove(spark, tpe,
+          Seq(1L, 2L, 101L).toDF("vec_id"), path, flags)))
       info(s"$tpe: ${counts.map { case (op, n) => s"$op $n" }.mkString(", ")}")
       counts.foreach { case (op, got) =>
         assert(got <= ceilings(op),

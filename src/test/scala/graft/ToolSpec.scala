@@ -1704,8 +1704,8 @@ class ToolSpec extends SparkSpec {
       serveOf("ivfflat", flat, "flat"))
     // delta ids 102/106 both route to shard 2 (n_id mod 4)
     val shardedRoot = graft.sinks.ArtifactStore.resolve(spark, sharded)
-    def genOf(sh: Int) = graft.sinks.ArtifactStore.currentGen(
-      spark, s"$shardedRoot/shards/$sh")
+    def genOf(sh: Int) =
+      graft.sinks.SegmentStore.pin(spark, shardedRoot).segments(s"shards/$sh")
     val gensBefore = (0 until 4).map(genOf)
     emb(Seq((102L, Seq(0f, 0f, 0f, 9f)), (106L, Seq(0f, 0f, 0f, 9.1f))))
       .write.parquet(s"$base/delta")
@@ -1790,8 +1790,8 @@ class ToolSpec extends SparkSpec {
       serveOf("ivfpq", single, "single"))
     // delta ids 102/106 route to shard 2 — only its generation advances
     val shardedRoot = graft.sinks.ArtifactStore.resolve(spark, sharded)
-    def genOf(sh: Int) = graft.sinks.ArtifactStore.currentGen(
-      spark, s"$shardedRoot/shards/$sh")
+    def genOf(sh: Int) =
+      graft.sinks.SegmentStore.pin(spark, shardedRoot).segments(s"shards/$sh")
     val gensBefore = (0 until 4).map(genOf)
     emb(Seq((102L, Seq(0f, 0f, 0f, 9f)), (106L, Seq(0f, 0f, 0f, 9.1f))))
       .write.parquet(s"$base/delta")
@@ -1980,21 +1980,21 @@ class ToolSpec extends SparkSpec {
     assert(Tool.run(spark, Array("index-build", "--type=ivfflat-sharded",
       s"--path=$sharded", s"--input=format=parquet file=$base/emb",
       "--centroids=2", "--shards=4")).status == "SUCCEEDED")
-    // simulate a CRASHED sharded update: a staged generation lands in
-    // shard 1's root but no pointer ever flips
-    val shardRoot = s"${graft.sinks.ArtifactStore.resolve(spark, sharded)}/shards/1"
-    val loaded = graft.sinks.ArtifactStore.currentGen(spark, shardRoot)
-    val orphan = graft.sinks.ArtifactStore.newGenDir(spark, shardRoot, loaded)
-    Seq((1L, "x")).toDF("a", "b").write.parquet(orphan)
+    // simulate a CRASHED sharded update: a segment lands in shard 1's
+    // root but no manifest ever names it
+    val base0 = graft.sinks.ArtifactStore.resolve(spark, sharded)
+    def live1 = graft.sinks.SegmentStore.pin(spark, base0).segments("shards/1")
+    val loaded = live1
+    val orphan = s"$base0/shards/1/${graft.sinks.SegmentStore.segName(99L)}"
+    Seq((1L, "x")).toDF("a", "b").write.parquet(s"$orphan/postings")
     val orphanName = new org.apache.hadoop.fs.Path(orphan).getName
-    // the root itself has nothing to sweep; the recursion reaches the
-    // shard root (grace-ms=0: the orphan is above-live and fresh, which
-    // the default staging grace would deliberately spare)
+    // the root itself has nothing to sweep; the sweep reaches the shard
+    // root (grace-ms=0: the orphan is fresh, which the default staging
+    // grace would deliberately spare)
     val r = Tool.run(spark, Array("index-gc", s"--path=$sharded",
       "--grace-ms=0"))
-    assert(r.counters("swept_child_roots") == 1L, r.counters.toString)
-    assert(graft.sinks.ArtifactStore.currentGen(spark, shardRoot) == loaded,
-      "the live shard generation must hold")
+    assert(r.counters("swept_segments") == 1L, r.counters.toString)
+    assert(live1 == loaded, "the live shard segments must hold")
     val fs = new org.apache.hadoop.fs.Path(base)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(orphan)),
@@ -2121,8 +2121,8 @@ class ToolSpec extends SparkSpec {
     // an update routed to shard 2 advances ONLY that shard; serve == the
     // updated unsharded artifact
     val shardedRoot = graft.sinks.ArtifactStore.resolve(spark, s"$base/sharded")
-    def genOf(sh: Int) = graft.sinks.ArtifactStore.currentGen(
-      spark, s"$shardedRoot/shards/$sh")
+    def genOf(sh: Int) =
+      graft.sinks.SegmentStore.pin(spark, shardedRoot).segments(s"shards/$sh")
     val before = (0 until 4).map(genOf)
     Seq((102L, Seq(0f, 0f, 0f, 9f), 0), (106L, Seq(0f, 0f, 0f, 9.1f), 1))
       .toDF("vec_id", "embedding", "label")
@@ -2828,6 +2828,35 @@ class ToolSpec extends SparkSpec {
       "compact must keep the bucketed layout")
   }
 
+  test("CLI index-gc sweeps a bucketed table's bucket roots: an orphan generation in one bucket is swept, the live bucket generation holds") {
+    import spark.implicits._
+    import graft.table.TableFixtures
+    val path = s"${tmpDir("gcbuckets")}/t"
+    val table = new graft.table.EntityTable(spark, path, TableFixtures.flatLayout)
+    table.bulkLoadBucketed(TableFixtures.baseCells(spark),
+      TableFixtures.NumBuckets, numPartitions = 2)
+    val cells = table.cells.count()
+    // simulate a CRASHED bucketed fold: a staged generation lands in
+    // bucket 1's root but no pointer ever flips
+    val bucket = s"$path/_buckets/1"
+    val loaded = graft.sinks.ArtifactStore.currentGen(spark, bucket)
+    assert(loaded.isDefined, s"no live generation under $bucket")
+    val orphan = graft.sinks.ArtifactStore.newGenDir(spark, bucket, loaded)
+    Seq((1L, "x")).toDF("a", "b").write.parquet(orphan)
+    // grace-ms=0: the orphan is above-live and fresh, which the default
+    // staging grace would deliberately spare
+    val r = Tool.run(spark, Array("index-gc", s"--path=$path",
+      "--grace-ms=0"))
+    assert(r.counters("swept_child_roots") == 1L, r.counters.toString)
+    assert(graft.sinks.ArtifactStore.currentGen(spark, bucket) == loaded,
+      "the live bucket generation must hold")
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(orphan)),
+      s"orphan $orphan must be swept")
+    assert(table.cells.count() == cells, "the table must read every cell")
+  }
+
   test("CLI index-rebuild on the compressed sharded tiers: corpus re-supply re-fits in place; guards refuse a missing or stale corpus") {
     import spark.implicits._
     val base = tmpDir("idxpqrebuild")
@@ -2887,7 +2916,7 @@ class ToolSpec extends SparkSpec {
     assert(rebuilt.nonEmpty && rebuilt == serveOf(fresh, "fresh"))
     // the shard grid survived in the new generation
     val resolved = graft.sinks.ArtifactStore.resolve(spark, drifted)
-    assert(graft.operators.Clustering.shardedNumShards(spark, resolved) == 4)
+    assert(graft.sinks.ShardedCommit.numShards(spark, resolved) == 4)
   }
 
   test("CLI sharded compressed update survives a rowless shard 0: attrs discovered from the explicit empty surface") {

@@ -674,30 +674,31 @@ class ClusteringSpec extends SparkSpec {
   }
 
   test("sharded ivfflat: shard-merged serve == single-artifact serve; an update rewrites ONLY the routed shards") {
-    import graft.sinks.ArtifactStore
+    import graft.sinks.{SegmentStore, SegmentedIndex}
+    val tier = Clustering.IvfFlatSharded
     val idx = Clustering.buildIvfFlatIndex(blobs, "vec_id", "embedding", 3, 2)
     val single = tmpDir("ivfsh_single")
     val sharded = tmpDir("ivfsh") + "/art"
     Clustering.saveIvfFlatIndex(idx, single)
-    Clustering.saveIvfFlatSharded(idx, sharded, numShards = 4)
+    SegmentedIndex.save(spark, tier, idx, sharded, 4)
     // shard-merged serve reproduces the single-artifact serve bit-for-bit
     def serveOf(i: Clustering.IvfFlatIndex) =
       Clustering.serveIvfFlat(i, blobs, "vec_id", "embedding",
         maxQueryId = 6L, nprobe = 1, k = 3)
         .orderBy($"q_id", $"rank").collect().toSeq
-    assert(serveOf(Clustering.loadIvfFlatSharded(spark, sharded)) ==
+    assert(serveOf(SegmentedIndex.load(spark, tier, sharded)) ==
       serveOf(Clustering.loadIvfFlatIndex(spark, single)))
     // shard routing is n_id mod numShards — a delta whose ids all route
-    // to shard 2 must advance ONLY shard 2's generation
-    def genOf(sh: Int): Option[String] =
-      ArtifactStore.currentGen(spark, s"${live(sharded)}/shards/$sh")
+    // to shard 2 must advance ONLY shard 2's segments
+    def genOf(sh: Int): Seq[String] =
+      SegmentStore.pin(spark, live(sharded)).segments(s"shards/$sh")
     val before = (0 until 4).map(genOf)
-    assert(before.forall(_.isDefined))
+    assert(before.forall(_.nonEmpty))
     val delta = Seq((102L, Seq(0f, 0f, 0f, 9f)), (106L, Seq(0f, 0f, 0f, 9.1f)))
       .toDF("vec_id", "embedding")
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
-    val touched = Clustering.updateIvfFlatSharded(spark, sharded, delta,
-      "vec_id", "embedding")
+    val touched = SegmentedIndex.update(spark, sharded,
+      tier.delta(delta, "vec_id", "embedding"))
     assert(touched == Seq(2), s"expected only shard 2 touched: $touched")
     (0 until 4).foreach { sh =>
       if (sh == 2) assert(genOf(sh) != before(sh), "shard 2 must advance")
@@ -708,7 +709,7 @@ class ClusteringSpec extends SparkSpec {
     val unionPostings = graft.operators.Similarity.ivfPostings(
       blobs.unionByName(delta), "vec_id", "embedding",
       graft.operators.Similarity.centroidSetFromLanes(idx.lanes))
-    assert(serveOf(Clustering.loadIvfFlatSharded(spark, sharded)) ==
+    assert(serveOf(SegmentedIndex.load(spark, tier, sharded)) ==
       serveOf(Clustering.IvfFlatIndex(idx.lanes, unionPostings)))
 
     // ATTRIBUTE columns survive the sharded layout end to end: save,
@@ -716,20 +717,20 @@ class ClusteringSpec extends SparkSpec {
     // one layout the 100 TB path actually uses
     val attributed = blobs.withColumn("label", ($"vec_id" % 3).cast("int"))
     val shAttr = tmpDir("ivfsh_attr") + "/art"
-    Clustering.saveIvfFlatSharded(Clustering.buildIvfFlatIndex(
+    SegmentedIndex.save(spark, tier, Clustering.buildIvfFlatIndex(
       attributed, "vec_id", "embedding", 3, 2, attrCols = Seq("label")),
-      shAttr, numShards = 4)
-    val loadedAttr = Clustering.loadIvfFlatSharded(spark, shAttr)
+      shAttr, 4)
+    val loadedAttr = SegmentedIndex.load(spark, tier, shAttr)
     assert(loadedAttr.postings.columns.contains("label"),
       "attr column lost by the sharded save/load roundtrip")
     val deltaAttr = Seq((102L, Seq(0f, 0f, 0f, 9f), 0))
       .toDF("vec_id", "embedding", "label")
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"),
         $"label".cast("int").as("label"))
-    Clustering.updateIvfFlatSharded(spark, shAttr, deltaAttr,
-      "vec_id", "embedding")
+    SegmentedIndex.update(spark, shAttr,
+      tier.delta(deltaAttr, "vec_id", "embedding"))
     val filtered = Clustering.serveIvfFlatFiltered(
-        Clustering.loadIvfFlatSharded(spark, shAttr), blobs,
+        SegmentedIndex.load(spark, tier, shAttr), blobs,
         "vec_id", "embedding", maxQueryId = 3L, nprobe = 3, k = 12,
         pred = $"label" === 0)
       .collect().map(r => (r.getLong(0), r.getLong(2)))
@@ -740,21 +741,22 @@ class ClusteringSpec extends SparkSpec {
   }
 
   test("sharded ivfpq: shard-merged ADC serve == single artifact; an update rewrites ONLY the routed shards' cells+codes together") {
-    import graft.sinks.ArtifactStore
+    import graft.sinks.{SegmentStore, SegmentedIndex}
+    val tier = Clustering.IvfPqSharded
     val idx = Clustering.buildIvfPqIndex(blobs, "vec_id", "embedding",
       dim = 4, m = 2, k = 2, iters = 2, numCentroids = 3)
     val single = tmpDir("ivfpqsh_single")
     val sharded = tmpDir("ivfpqsh") + "/art"
     Clustering.saveIvfPqIndex(idx, single)
-    Clustering.saveIvfPqSharded(idx, sharded, numShards = 4)
+    SegmentedIndex.save(spark, tier, idx, sharded, 4)
     def serveOf(i: Clustering.IvfPqIndex) =
       Clustering.serveIvfPq(i, blobs, "vec_id", "embedding",
         dim = 4, m = 2, maxQueryId = 6L, nprobe = 1, topK = 3)
         .orderBy($"q_id", $"rank").collect().toSeq
-    assert(serveOf(Clustering.loadIvfPqSharded(spark, sharded)) ==
+    assert(serveOf(SegmentedIndex.load(spark, tier, sharded)) ==
       serveOf(Clustering.loadIvfPqIndex(spark, single)))
     // no raw vectors anywhere in the sharded layout either
-    val loaded0 = Clustering.loadIvfPqSharded(spark, sharded)
+    val loaded0 = SegmentedIndex.load(spark, tier, sharded)
     assert(!loaded0.cells.columns.contains("nv") &&
       !loaded0.codes.columns.contains("nv"))
     // PLAN SHAPE: every per-shard cells branch carries the static
@@ -779,16 +781,16 @@ class ClusteringSpec extends SparkSpec {
     assert(codeScans.length == 1 &&
       codeScans.head.relation.location.rootPaths.length == 4,
       "codes must load as ONE multi-path scan over all shard dirs")
-    // a delta routing only to shard 2 advances ONLY shard 2's generation
-    def genOf(sh: Int): Option[String] =
-      ArtifactStore.currentGen(spark, s"${live(sharded)}/shards/$sh")
+    // a delta routing only to shard 2 advances ONLY shard 2's segments
+    def genOf(sh: Int): Seq[String] =
+      SegmentStore.pin(spark, live(sharded)).segments(s"shards/$sh")
     val before = (0 until 4).map(genOf)
-    assert(before.forall(_.isDefined))
+    assert(before.forall(_.nonEmpty))
     val delta = Seq((102L, Seq(0f, 0f, 0f, 9f)), (106L, Seq(0f, 0f, 0f, 9.1f)))
       .toDF("vec_id", "embedding")
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
-    val touched = Clustering.updateIvfPqSharded(spark, sharded, delta,
-      "vec_id", "embedding", dim = 4, m = 2)
+    val touched = SegmentedIndex.update(spark, sharded,
+      tier.delta(delta, "vec_id", "embedding", dim = 4, m = 2))
     assert(touched == Seq(2), s"expected only shard 2 touched: $touched")
     (0 until 4).foreach { sh =>
       if (sh == 2) assert(genOf(sh) != before(sh), "shard 2 must advance")
@@ -796,7 +798,7 @@ class ClusteringSpec extends SparkSpec {
     }
     // cells and codes moved TOGETHER: the delta's ids appear in both
     // surfaces of the reloaded artifact, with m code rows each
-    val loaded = Clustering.loadIvfPqSharded(spark, sharded)
+    val loaded = SegmentedIndex.load(spark, tier, sharded)
     assert(loaded.cells.filter($"n_id".isin(102L, 106L)).count() == 2L)
     assert(loaded.codes.filter($"n_id".isin(102L, 106L)).count() == 4L)
     // updated sharded serve == the in-memory updateIvfPqIndex fold of
@@ -807,14 +809,14 @@ class ClusteringSpec extends SparkSpec {
     assert(serveOf(loaded) == foldedServe)
     // remove forgets: only the routed shard rewrites, both surfaces drop
     val beforeRm = (0 until 4).map(genOf)
-    val rmTouched = Clustering.removeFromIvfPqSharded(spark, sharded,
-      Seq(106L).toDF("n_id"))
+    val rmTouched = SegmentedIndex.remove(spark, sharded,
+      tier.removal(Seq(106L).toDF("n_id")))
     assert(rmTouched == Seq(2))
     (0 until 4).foreach { sh =>
       if (sh == 2) assert(genOf(sh) != beforeRm(sh))
       else assert(genOf(sh) == beforeRm(sh))
     }
-    val afterRm = Clustering.loadIvfPqSharded(spark, sharded)
+    val afterRm = SegmentedIndex.load(spark, tier, sharded)
     assert(afterRm.cells.filter($"n_id" === 106L).count() == 0L)
     assert(afterRm.codes.filter($"n_id" === 106L).count() == 0L)
     assert(afterRm.cells.filter($"n_id" === 102L).count() == 1L)
@@ -875,11 +877,12 @@ class ClusteringSpec extends SparkSpec {
     // sharded: every union branch's postings scan gets the static c_id
     // partition filter — serve I/O stays O(probed cells) PER SHARD
     val sharded = tmpDir("ivfsh_prune") + "/art"
-    Clustering.saveIvfFlatSharded(
+    graft.sinks.SegmentedIndex.save(spark, Clustering.IvfFlatSharded,
       Clustering.buildIvfFlatIndex(blobs, "vec_id", "embedding", 3, 2),
-      sharded, numShards = 4)
+      sharded, 4)
     val served = Clustering.serveIvfFlat(
-      Clustering.loadIvfFlatSharded(spark, sharded), blobs,
+      graft.sinks.SegmentedIndex.load(spark, Clustering.IvfFlatSharded,
+        sharded), blobs,
       "vec_id", "embedding", maxQueryId = 1L, nprobe = 1, k = 3)
     val scans = served.queryExecution.sparkPlan.collect {
       case sc: org.apache.spark.sql.execution.FileSourceScanExec

@@ -114,11 +114,6 @@ class RetrievalShardSpec extends SparkSpec {
   }
 
   test("semdedup-sharded appends, compaction and removal keep every live row in the shard pmod(vid, S) names") {
-    def emb(ids: Seq[Long]): DataFrame = ids.map { i =>
-        val v = Array(1f, 1f, 1f, 1f); v((i % 4).toInt) = 10f + i * 0.01f
-        (i, v.toSeq)
-      }.toDF("vec_id", "embedding")
-      .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
     lifecycle("semdedup-sharded", emb(0L until 12L),
       Seq(emb(Seq(20L, 21L)), emb(Seq(22L, 23L, 25L))),
       Seq(1L, 20L, 25L).toDF("vec_id"),
@@ -128,6 +123,61 @@ class RetrievalShardSpec extends SparkSpec {
           Seq("assign" -> pmod(col("vid"), lit(S.toLong)).cast("int")),
           Set("assign"))
     }
+  }
+
+  private def emb(ids: Seq[Long]): DataFrame = ids.map { i =>
+      val v = Array(1f, 1f, 1f, 1f); v((i % 4).toInt) = 10f + i * 0.01f
+      (i, v.toSeq)
+    }.toDF("vec_id", "embedding")
+    .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
+
+  /** A vector tier's lifecycle: every row of every live segment of
+    * `shards/<s>` has `pmod(n_id, S) = s`; with `codes`, each segment's
+    * cells ids are exactly its codes ids, `m` code rows each — a vector's
+    * cells row and its code rows share one segment. Each segment reads on
+    * its own: Spark refuses one scan over several `c_id=` directory
+    * roots. */
+  private def vectorLifecycle(tpe: String, surfaces: Seq[String],
+                              extra: Map[String, String], m: Int = 0): Unit =
+    lifecycle(tpe, emb(0L until 12L), Seq(emb(Seq(20L, 21L)),
+      emb(Seq(22L, 23L, 25L))), Seq(1L, 20L, 25L).toDF("vec_id"), extra) {
+      (path, after) =>
+        val pinned = SegmentStore.pin(spark, ArtifactStore.resolve(spark, path))
+        val rows = for (sh <- 0 until S;
+                        segs = surfaces.map(sf => pinned.paths(s"shards/$sh", sf));
+                        seg <- segs.transpose) yield {
+          val read = surfaces.zip(seg.map(spark.read.parquet(_))).toMap
+          read.foreach { case (sf, df) =>
+            val misrouted = df.filter(
+              pmod(col("n_id"), lit(S.toLong)).cast("int") =!= sh).count()
+            assert(misrouted == 0, s"after $after: shards/$sh $sf holds " +
+              s"$misrouted rows of another shard")
+          }
+          read.get("codes").foreach { codes =>
+            val cellIds = read("cells").select("n_id").as[Long].collect().toSet
+            val perId = codes.groupBy("n_id").count().as[(Long, Long)]
+              .collect().toMap
+            assert(perId.keySet == cellIds && perId.values.forall(_ == m),
+              s"after $after: a shards/$sh segment splits cells $cellIds " +
+                s"from codes $perId")
+          }
+          read(surfaces.head).count()
+        }
+        assert(rows.sum > 0, s"after $after: no ${surfaces.head} rows at all")
+    }
+
+  test("ivfflat-sharded appends, compaction and removal keep every live row in the shard pmod(n_id, S) names") {
+    vectorLifecycle("ivfflat-sharded", Seq("postings"), Map("centroids" -> "2"))
+  }
+
+  test("ivfpq-sharded appends, compaction and removal keep every live row in the shard pmod(n_id, S) names, each id's cells and codes in one segment") {
+    vectorLifecycle("ivfpq-sharded", Seq("cells", "codes"),
+      Map("dim" -> "4", "m" -> "2", "k" -> "2", "centroids" -> "2"), m = 2)
+  }
+
+  test("ivfpqr-sharded appends, compaction and removal keep every live row in the shard pmod(n_id, S) names, each id's cells and codes in one segment") {
+    vectorLifecycle("ivfpqr-sharded", Seq("cells", "codes"),
+      Map("dim" -> "4", "m" -> "2", "k" -> "2", "centroids" -> "2"), m = 2)
   }
 
   test("an lsh-sharded compaction pinned before a concurrent append reads the pinned segments, fails its commit with 'concurrent writer', and the append survives") {

@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 
 import graft.{IndexTool, SparkSpec, Tool}
-import graft.operators.{Bpe, Retrieval}
+import graft.operators.{Bpe, Clustering, Retrieval}
 
 /** The segmented tiers' one-manifest layout: shard roots hold only data
   * segments, retention leaks no segment on the commit path, and a
@@ -59,8 +59,9 @@ class SegmentManifestSpec extends SparkSpec {
 
   test("after 3 rounds of update, compact and remove on every segmented tier, shard roots hold only segments and every segment on disk is named by the live or the retained manifest") {
     val docFlags = Map("shards" -> "4")
-    val cases: Seq[(String, DataFrame, Int => DataFrame, Int => DataFrame,
-        Map[String, String])] = Seq(
+    val pq = Map("dim" -> "4", "m" -> "2", "k" -> "2", "centroids" -> "2")
+    val cases = Seq[(String, DataFrame, Int => DataFrame, Int => DataFrame,
+        Map[String, String])](
       ("bm25-sharded", corpus,
         r => docs((100L + r) -> s"novel words round$r here"),
         r => Seq(r.toLong, 100L + r).toDF("doc_id"), docFlags),
@@ -76,7 +77,12 @@ class SegmentManifestSpec extends SparkSpec {
         r => emb(Seq(20L + 2 * r, 21L + 2 * r)),
         r => Seq(r.toLong, 20L + 2 * r).toDF("vec_id"),
         docFlags ++ Map("coarse-k" -> "2", "target-rows" -> "4",
-          "cluster-cap" -> "64")))
+          "cluster-cap" -> "64"))) ++
+      Seq("ivfflat-sharded" -> Map("centroids" -> "2"),
+        "ivfpq-sharded" -> pq, "ivfpqr-sharded" -> pq).map { case (t, f) =>
+        (t, emb(0L until 12L), (r: Int) => emb(Seq(20L + 2 * r, 21L + 2 * r)),
+          (r: Int) => Seq(r.toLong, 20L + 2 * r).toDF("vec_id"), docFlags ++ f)
+      }
     for ((tpe, input, delta, removed, flags) <- cases) {
       val path = s"${tmpDir(tpe)}/idx"
       IndexTool.build(spark, tpe, input, path, flags)
@@ -148,12 +154,18 @@ class SegmentManifestSpec extends SparkSpec {
   }
 
   test("a segmented artifact with no segment manifest (the per-shard-root layout) fails loudly on load, naming index-build") {
-    val path = s"${tmpDir("bm25old")}/idx"
-    IndexTool.build(spark, "bm25-sharded", corpus, path, Map("shards" -> "2"))
-    val base = ArtifactStore.resolve(spark, path)
-    fsOf(base).delete(new Path(base, SegmentStore.ManifestFile), true)
-    val e = intercept[IllegalStateException](
-      SegmentedIndex.load(spark, Retrieval.Bm25Sharded, path))
-    assert(e.getMessage.contains("index-build"), e.getMessage)
+    for ((tpe, input, flags, tier) <- Seq[(String, DataFrame,
+        Map[String, String], SegmentedIndex.Tier[_])](
+        ("bm25-sharded", corpus, Map.empty, Retrieval.Bm25Sharded),
+        ("ivfflat-sharded", emb(0L until 12L), Map("centroids" -> "2"),
+          Clustering.IvfFlatSharded))) {
+      val path = s"${tmpDir(s"$tpe-old")}/idx"
+      IndexTool.build(spark, tpe, input, path, flags + ("shards" -> "2"))
+      val base = ArtifactStore.resolve(spark, path)
+      fsOf(base).delete(new Path(base, SegmentStore.ManifestFile), true)
+      val e = intercept[IllegalStateException](
+        SegmentedIndex.load(spark, tier, path))
+      assert(e.getMessage.contains("index-build"), s"$tpe: ${e.getMessage}")
+    }
   }
 }
