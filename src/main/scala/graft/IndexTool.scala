@@ -757,11 +757,13 @@ object IndexTool {
           s"(index-remove) or pass --skip-disjoint-check=true if the " +
           s"scheduler guarantees disjoint deltas")
     }
-    // --mode for every sharded tier: `append` (default — each touched
-    // shard gains one delta-sized immutable segment; the O(delta) write
-    // the 100 TB cadence needs) or `merge` (whole-shard rewrite — the
-    // compacting write). Flat tiers ignore it.
-    val appendMode = flags.getOrElse("mode", "append") match {
+    // --mode for every sharded tier: `append` (each touched shard gains
+    // one delta-sized immutable segment; the O(delta) write the 100 TB
+    // cadence needs) or `merge` (whole-shard rewrite — the compacting
+    // write). Unset, the tier's default applies: append for the doc and
+    // dedup tiers, merge for the vector tiers, whose appended segments
+    // each add a scan branch to every serve. Flat tiers ignore it.
+    val appendMode = flags.get("mode").map {
       case "append" => true
       case "merge" => false
       case other => throw new IllegalArgumentException(
@@ -769,8 +771,9 @@ object IndexTool {
     }
     Segmented.get(tpe) match {
       case Some(seg) =>
-        val touched = SegmentedIndex.update(spark, path,
-          seg.delta(input, flags), appendMode)
+        val fold = seg.delta(input, flags)
+        val touched = SegmentedIndex.update(spark, path, fold,
+          appendMode.getOrElse(fold.tier.appends))
         println(s"updated shards: ${touched.mkString(", ")}")
         return
       case None =>

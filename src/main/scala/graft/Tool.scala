@@ -496,10 +496,11 @@ object Tool {
       |        refuse whole-surface rewrites past the gate — rebuild as
       |        the *-sharded type, or raise the bound for a one-off)]
       |       [--mode=append|merge  (the sharded tiers, COMPACTTYPES:
-      |        append — the default — writes one delta-sized
-      |        immutable segment per routed shard, O(delta) regardless of
-      |        how many shards the delta's hashes spray across; merge is
-      |        the whole-shard compacting rewrite)]
+      |        append writes one delta-sized immutable segment per
+      |        routed shard, O(delta) regardless of how many shards the
+      |        delta's hashes spray across; merge is the whole-shard
+      |        compacting rewrite. Default: merge on the ivf*-sharded
+      |        tiers, append on the others)]
       |       (fold an admitted delta into the artifact; generation
       |        pointer CAS — racing updates fail loudly, never silently
       |        drop a delta; exact == rebuild on the union. Delta ids

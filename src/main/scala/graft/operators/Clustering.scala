@@ -1652,8 +1652,8 @@ object Clustering {
   def updateIvfPqrIndex(idx: IvfPqrIndex, delta: DataFrame, idCol: String,
                         vecCol: String, dim: Int, m: Int): IvfPqrIndex = {
     val attrs = cellsAttrCols(idx.cells)
-    val (cells, codes) = ivfPqDelta(delta, idCol, vecCol, idx.coarseLanes,
-      idx.pqLanes, dim, m, attrs, residual = true)
+    val (cells, codes) = pqrDelta(delta, idCol, vecCol, idx.coarseLanes,
+      idx.pqLanes, dim, m, attrs)
     IvfPqrIndex(idx.coarseLanes,
       idx.cells.select(col("n_id") +: attrs.map(col) :+ col("c_id"): _*)
         .unionByName(cells),
@@ -2362,10 +2362,14 @@ object Clustering {
     * the flat tier's: serves reproduce the single-artifact serve
     * bit-for-bit (equal surface sets, deterministic rank). Rows are
     * per-vector with no rollup, so the `live` view is the union of the
-    * segments: an add appends the delta's rows as one segment per
-    * touched shard (write volume O(delta)), a removal rewrites the
-    * touched shards with the anti-joined live rows. `--attr-cols`
-    * attributes ride the first surface (postings or cells). */
+    * segments. An add rewrites each touched shard whole by default
+    * (`--mode=merge`): with `--mode=append` it lands the delta's rows as
+    * one O(delta) segment per touched shard instead, but every serve
+    * then plans one scan branch per segment of the partitioned surface
+    * until `index-compact`, a read cost no workload measures yet. A
+    * removal rewrites the touched shards with the anti-joined live rows.
+    * `--attr-cols` attributes ride the first surface (postings or cells,
+    * the partitioned one). */
   sealed abstract class VectorSharded[A](surfaces: Seq[SegmentedIndex.Surface])
       extends SegmentedIndex.Tier[A] {
     import SegmentedIndex.{Family, Write}
@@ -2373,6 +2377,7 @@ object Clustering {
     val families: Seq[Family] = Seq(Family("shards",
       n => pmod(col("n_id"), lit(n.toLong)).cast("int"), surfaces))
     val ids: (String, String) = (surfaces.head.name, "n_id")
+    override val appends: Boolean = false
 
     /** The frozen codebooks of `a`, by root surface name. */
     protected def codebooks(a: A): Seq[(String, DataFrame)]
@@ -2410,7 +2415,7 @@ object Clustering {
     * `lanes`. */
   object IvfFlatSharded extends VectorSharded[IvfFlatIndex](Seq(
       SegmentedIndex.Surface("postings", Seq("n_id", "nv", "nn"),
-        partition = Some("c_id"), attrs = true))) {
+        partition = Some("c_id")))) {
 
     def surfacesOf(idx: IvfFlatIndex): Map[String, DataFrame] =
       Map("postings" -> idx.postings)
@@ -2437,12 +2442,13 @@ object Clustering {
     * the shared `coarse` and `pqlanes` codebooks. The two surfaces swap
     * together inside each segment — a cells row without its m code rows
     * silently drops that candidate from every ADC serve. ivfpq- and
-    * ivfpqr-sharded differ only in the delta's encode
-    * ([[ivfPqDelta]]'s `residual`). */
-  sealed abstract class PqSharded[A](residual: Boolean)
+    * ivfpqr-sharded differ only in the delta's `encode` under the
+    * frozen codebooks ([[pqDelta]] or [[pqrDelta]]). */
+  sealed abstract class PqSharded[A](
+      encode: (DataFrame, String, String, DataFrame, DataFrame, Int, Int,
+        Seq[String]) => (DataFrame, DataFrame))
       extends VectorSharded[A](Seq(
-        SegmentedIndex.Surface("cells", Seq("n_id"), partition = Some("c_id"),
-          attrs = true),
+        SegmentedIndex.Surface("cells", Seq("n_id"), partition = Some("c_id")),
         SegmentedIndex.Surface("codes", Seq("n_id", "s", "code")))) {
 
     protected def of(idx: IvfPqIndex): A
@@ -2468,18 +2474,18 @@ object Clustering {
       * [[updateIvfPqrIndex]] add. */
     def delta(delta: DataFrame, idCol: String, vecCol: String, dim: Int,
               m: Int): SegmentedIndex.Fold = add { (codebook, attrs) =>
-      val (cells, codes) = ivfPqDelta(delta, idCol, vecCol,
-        codebook("coarse"), codebook("pqlanes"), dim, m, attrs, residual)
+      val (cells, codes) = encode(delta, idCol, vecCol,
+        codebook("coarse"), codebook("pqlanes"), dim, m, attrs)
       Map("cells" -> cells, "codes" -> codes)
     }
   }
 
-  object IvfPqSharded extends PqSharded[IvfPqIndex](residual = false) {
+  object IvfPqSharded extends PqSharded[IvfPqIndex](pqDelta) {
     protected def of(idx: IvfPqIndex): IvfPqIndex = idx
     protected def pq(idx: IvfPqIndex): IvfPqIndex = idx
   }
 
-  object IvfPqrSharded extends PqSharded[IvfPqrIndex](residual = true) {
+  object IvfPqrSharded extends PqSharded[IvfPqrIndex](pqrDelta) {
     protected def of(idx: IvfPqIndex): IvfPqrIndex =
       IvfPqrIndex(idx.coarseLanes, idx.cells, idx.codes, idx.pqLanes)
     protected def pq(idx: IvfPqrIndex): IvfPqIndex =
@@ -2690,8 +2696,8 @@ object Clustering {
                        idCol: String, vecCol: String,
                        dim: Int, m: Int): IvfPqIndex = {
     val attrs = cellsAttrCols(idx.cells)
-    val (cells, codes) = ivfPqDelta(delta, idCol, vecCol, idx.coarseLanes,
-      idx.pqLanes, dim, m, attrs, residual = false)
+    val (cells, codes) = pqDelta(delta, idCol, vecCol, idx.coarseLanes,
+      idx.pqLanes, dim, m, attrs)
     IvfPqIndex(idx.coarseLanes,
       idx.cells.select(col("n_id") +: attrs.map(col) :+ col("c_id"): _*)
         .unionByName(cells),
@@ -2700,32 +2706,36 @@ object Clustering {
   }
 
   /** A delta's `cells` and `codes` rows under the FIXED codebooks — the
-    * add half of [[updateIvfPqIndex]] and, with `residual`,
-    * [[updateIvfPqrIndex]] (whose codes quantize v − centroid(cell)).
+    * add half of [[updateIvfPqIndex]]. `attrs` ride the cells rows. */
+  private def pqDelta(delta: DataFrame, idCol: String, vecCol: String,
+                      coarseLanes: DataFrame, pqLanes: DataFrame,
+                      dim: Int, m: Int, attrs: Seq[String])
+      : (DataFrame, DataFrame) =
+    (Similarity.ivfPostingsAttrs(delta, idCol, vecCol,
+        Similarity.centroidSetFromLanes(coarseLanes), attrs)
+      .select(col("n_id") +: attrs.map(col) :+ col("c_id"): _*),
+      pqEncode(delta, pqLanes, idCol, vecCol, dim, m))
+
+  /** A delta's `cells` and residual `codes` rows (v − centroid(cell))
+    * under the FIXED codebooks — the add half of [[updateIvfPqrIndex]].
     * `attrs` ride the cells rows. */
-  private def ivfPqDelta(delta: DataFrame, idCol: String, vecCol: String,
-                         coarseLanes: DataFrame, pqLanes: DataFrame,
-                         dim: Int, m: Int, attrs: Seq[String],
-                         residual: Boolean): (DataFrame, DataFrame) = {
+  private def pqrDelta(delta: DataFrame, idCol: String, vecCol: String,
+                       coarseLanes: DataFrame, pqLanes: DataFrame,
+                       dim: Int, m: Int, attrs: Seq[String])
+      : (DataFrame, DataFrame) = {
     val cellCols = col("n_id") +: attrs.map(col) :+ col("c_id")
-    val post = Similarity.ivfPostingsAttrs(delta, idCol, vecCol,
-      Similarity.centroidSetFromLanes(coarseLanes), attrs)
-    if (!residual)
-      (post.select(cellCols: _*),
-        pqEncode(delta, pqLanes, idCol, vecCol, dim, m))
-    else {
-      // persisted for the same reason as the build path: the cells rows
-      // read it once and pqEncode's m subspace branches each read it
-      // again — unpersisted, the delta kernel assignment would run m+1
-      // times per add
-      val resid = OperatorCaches.register(post
-        .join(broadcast(centroidVecFrame(coarseLanes)), Seq("c_id"))
-        .select(cellCols :+
-          zip_with(col("nv"), col("cv"), (a, b) => a - b).as("rv"): _*)
-        .persist())
-      (resid.select(cellCols: _*),
-        pqEncode(resid, pqLanes, "n_id", "rv", dim, m, preScaled = true))
-    }
+    // persisted for the same reason as the build path: the cells rows
+    // read it once and pqEncode's m subspace branches each read it
+    // again — unpersisted, the delta kernel assignment would run m+1
+    // times per add
+    val resid = OperatorCaches.register(Similarity.ivfPostingsAttrs(delta,
+        idCol, vecCol, Similarity.centroidSetFromLanes(coarseLanes), attrs)
+      .join(broadcast(centroidVecFrame(coarseLanes)), Seq("c_id"))
+      .select(cellCols :+
+        zip_with(col("nv"), col("cv"), (a, b) => a - b).as("rv"): _*)
+      .persist())
+    (resid.select(cellCols: _*),
+      pqEncode(resid, pqLanes, "n_id", "rv", dim, m, preScaled = true))
   }
 
   /** Serve a query batch from the loaded compressed index: probes

@@ -54,7 +54,8 @@ import org.apache.spark.sql.types.LongType
   * shard (write volume O(delta) however widely the delta's hash keys
   * spray); build, removal, compaction and merge-mode updates write one
   * full segment per touched shard. Reads merge the segments through
-  * `live` until `index-compact` folds each root back to one.
+  * `live` until `index-compact` folds each root back to one. A tier
+  * picks the mode an update takes by default ([[Tier.appends]]).
   */
 object SegmentedIndex {
 
@@ -62,19 +63,19 @@ object SegmentedIndex {
     * order, and its staging wave ([[ShardedCommit.Surface]]).
     * `partition` names an integral column the surface is laid out by on
     * disk (`<surface>/<partition>=<v>/`, read back as a long), so a
-    * scan filtered on it prunes directories. `attrs` marks a surface
-    * that also stores the artifact's attribute columns — whatever its
-    * rows or a segment footer hold beyond `cols` — between `cols` and
-    * `partition`. */
+    * scan filtered on it prunes directories. Such a surface is an
+    * inverted list, and it also stores the artifact's attribute columns
+    * — whatever its rows or a segment footer hold beyond `cols` —
+    * between `cols` and `partition`, so a filtered serve prunes inside
+    * the partitioned scan. */
   final case class Surface(name: String, cols: Seq[String], wave: Int = 0,
-                           partition: Option[String] = None,
-                           attrs: Boolean = false) {
+                           partition: Option[String] = None) {
     def stored(attrCols: Seq[String]): Seq[String] =
       cols ++ attrCols ++ partition
 
     /** The attribute columns among `columns`. */
     def attrsOf(columns: Seq[String]): Seq[String] =
-      if (attrs) columns.filterNot(c => cols.contains(c) ||
+      if (partition.isDefined) columns.filterNot(c => cols.contains(c) ||
         partition.contains(c)) else Nil
   }
 
@@ -94,6 +95,11 @@ object SegmentedIndex {
 
     /** The surface holding one row per indexed id, and its id column. */
     def ids: (String, String)
+
+    /** Whether an update without an explicit mode appends its rows as
+      * one delta-sized segment per touched shard; otherwise it merges
+      * them into one full segment per touched shard. */
+    def appends: Boolean = true
 
     /** One surface's live view from the raw segment scans in `s`. Load,
       * compaction and merge-mode updates all read through it. */
@@ -166,7 +172,7 @@ object SegmentedIndex {
       * from its delta. */
     def attrs(surface: String): Seq[String] = attrCols.getOrElseUpdate(surface, {
       val (sp, paths) = pathsOf(surface)
-      if (!sp.attrs) Nil
+      if (sp.partition.isEmpty) Nil
       else sp.attrsOf(ArtifactStore.readSurface(spark, paths.head).columns.toSeq)
     })
 
@@ -271,13 +277,17 @@ object SegmentedIndex {
     (before, s.roots.map(_._2.size.toLong).sum)
   }
 
-  /** Fold a delta in. `append` (the default) lands the fold's rows as
-    * one delta-sized segment per touched shard; otherwise they merge
-    * with the touched shards' segments through the tier's live view into
-    * one full segment per shard (the compacting write). Returns the
-    * touched shards of the first keyed family. */
+  /** Fold a delta in, in the tier's default mode ([[Tier.appends]]). */
+  def update(spark: SparkSession, root: String, fold: Fold): Seq[Int] =
+    update(spark, root, fold, fold.tier.appends)
+
+  /** Fold a delta in. `append` lands the fold's rows as one delta-sized
+    * segment per touched shard; otherwise they merge with the touched
+    * shards' segments through the tier's live view into one full segment
+    * per shard (the compacting write). Returns the touched shards of the
+    * first keyed family. */
   def update(spark: SparkSession, root: String, fold: Fold,
-             append: Boolean = true): Seq[Int] =
+             append: Boolean): Seq[Int] =
     write(spark, root, fold) { (s, rows) =>
       if (append) commit(s, rows, ShardedCommit.SegAppend)
       else commit(s, liveRows(s.withLayer(rows)) ++

@@ -169,18 +169,21 @@ class JobBudgetSpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
-  test("ivfflat-, ivfpq- and ivfpqr-sharded (S = 4) update, compact and remove stay within their job ceilings") {
+  test("ivfflat-, ivfpq- and ivfpqr-sharded (S = 4) update, append, compact and remove stay within their job ceilings") {
     import spark.implicits._
     val base = tmpDir("jobvector")
     val pq = Map("dim" -> "4", "m" -> "2", "k" -> "2", "centroids" -> "2")
-    // update and remove ceilings = the counts this fixture measured while
-    // each tier rewrote whole shards under per-shard pointers; compact
-    // = the count on the shared segmented lifecycle
+    // update (the default whole-shard merge) and remove ceilings = the
+    // counts this fixture measured while each tier rewrote whole shards
+    // under per-shard pointers; the append update (--mode=append) and
+    // compact = the counts on the shared segmented lifecycle
     val cases = Seq(
-      ("ivfflat-sharded", Map("centroids" -> "2"),
-        Map("update" -> 8, "compact" -> 2, "remove" -> 8)),
-      ("ivfpq-sharded", pq, Map("update" -> 12, "compact" -> 4, "remove" -> 10)),
-      ("ivfpqr-sharded", pq, Map("update" -> 14, "compact" -> 4, "remove" -> 10)))
+      ("ivfflat-sharded", Map("centroids" -> "2"), Map("update" -> 8,
+        "append" -> 7, "compact" -> 2, "remove" -> 8)),
+      ("ivfpq-sharded", pq, Map("update" -> 12, "append" -> 11,
+        "compact" -> 4, "remove" -> 10)),
+      ("ivfpqr-sharded", pq, Map("update" -> 14, "append" -> 14,
+        "compact" -> 4, "remove" -> 10)))
     for ((tpe, extra, ceilings) <- cases) {
       val path = s"$base/$tpe"
       val flags = extra + ("shards" -> "4")
@@ -188,6 +191,8 @@ class JobBudgetSpec extends SparkSpec with BeforeAndAfterAll {
       val counts = Seq(
         "update" -> jobsOf(IndexTool.update(spark, tpe, emb(100 until 104),
           path, flags)),
+        "append" -> jobsOf(IndexTool.update(spark, tpe, emb(104 until 108),
+          path, flags + ("mode" -> "append"))),
         "compact" -> jobsOf(IndexTool.compact(spark, tpe, path, flags)),
         "remove" -> jobsOf(IndexTool.remove(spark, tpe,
           Seq(1L, 2L, 101L).toDF("vec_id"), path, flags)))

@@ -131,7 +131,8 @@ class RetrievalShardSpec extends SparkSpec {
     }.toDF("vec_id", "embedding")
     .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
 
-  /** A vector tier's lifecycle: every row of every live segment of
+  /** A vector tier's lifecycle with appended updates (`--mode=append`;
+    * the tiers merge by default): every row of every live segment of
     * `shards/<s>` has `pmod(n_id, S) = s`; with `codes`, each segment's
     * cells ids are exactly its codes ids, `m` code rows each — a vector's
     * cells row and its code rows share one segment. Each segment reads on
@@ -140,7 +141,8 @@ class RetrievalShardSpec extends SparkSpec {
   private def vectorLifecycle(tpe: String, surfaces: Seq[String],
                               extra: Map[String, String], m: Int = 0): Unit =
     lifecycle(tpe, emb(0L until 12L), Seq(emb(Seq(20L, 21L)),
-      emb(Seq(22L, 23L, 25L))), Seq(1L, 20L, 25L).toDF("vec_id"), extra) {
+      emb(Seq(22L, 23L, 25L))), Seq(1L, 20L, 25L).toDF("vec_id"),
+      extra + ("mode" -> "append")) {
       (path, after) =>
         val pinned = SegmentStore.pin(spark, ArtifactStore.resolve(spark, path))
         val rows = for (sh <- 0 until S;

@@ -81,7 +81,8 @@ class SegmentManifestSpec extends SparkSpec {
       Seq("ivfflat-sharded" -> Map("centroids" -> "2"),
         "ivfpq-sharded" -> pq, "ivfpqr-sharded" -> pq).map { case (t, f) =>
         (t, emb(0L until 12L), (r: Int) => emb(Seq(20L + 2 * r, 21L + 2 * r)),
-          (r: Int) => Seq(r.toLong, 20L + 2 * r).toDF("vec_id"), docFlags ++ f)
+          (r: Int) => Seq(r.toLong, 20L + 2 * r).toDF("vec_id"),
+          docFlags ++ f + ("mode" -> "append"))
       }
     for ((tpe, input, delta, removed, flags) <- cases) {
       val path = s"${tmpDir(tpe)}/idx"
