@@ -108,16 +108,9 @@ object BulkSink {
     commitGenAndSweep(spark, dest, genDir, loaded)
   }
 
-  /** A generation directory for a caller that stages its own files (the
-    * grouped bulk-load path writes one file set per locality group
-    * directly into it). Commit with [[commitStaged]]. */
-  def newStagingGen(spark: SparkSession, dest: String)
-      : (String, Option[String]) = {
-    val loaded = ArtifactStore.currentGen(spark, dest)
-    (ArtifactStore.newGenDir(spark, dest, loaded), loaded)
-  }
-
-  /** Pointer-CAS commit of a generation obtained from [[newStagingGen]]. */
+  /** Pointer-CAS commit of a generation a caller staged its own files
+    * into ([[ArtifactStore.newGenDir]] over `loaded`, the generation its
+    * reads were pinned to — the entity table's bulk loads and folds). */
   def commitStaged(spark: SparkSession, dest: String, genDir: String,
                    loaded: Option[String]): Unit =
     commitGenAndSweep(spark, dest, genDir, loaded)

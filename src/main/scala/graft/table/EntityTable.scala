@@ -1,6 +1,7 @@
 package graft.table
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.dml.Dml
@@ -121,7 +122,8 @@ final case class DataRequest(columns: Seq[(String, String)] = Seq.empty,
   *  - `bulkLoad` / `majorCompact` / `applyChanges` ∥ each other: the
   *    pointer CAS serializes them — the loser fails LOUDLY (its fold was
   *    not applied; re-run against the new version) instead of the old
-  *    rename-swap's silent last-swap-wins.
+  *    rename-swap's silent last-swap-wins. A fold reads from, and its CAS
+  *    expects, the generation it pinned once before any read ([[pin]]).
   *  - `bulkLoad` / `majorCompact` / `applyChanges` ∥ feed WRITERS
   *    (`appendChanges`): still UNSAFE — an append into the generation a
   *    fold is displacing is lost with that generation. Run folds
@@ -144,6 +146,37 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * (retention one generation deep, `graft.sinks.ArtifactStore`). */
   private def dataDir: String =
     graft.sinks.ArtifactStore.resolve(spark, path)
+
+  /** A physical fold's pin ([[ArtifactStore.pinGen]]): the table root,
+    * the live generation the fold loaded — its commit's CAS expectation
+    * — and the directory every read of the fold (markers, survivors,
+    * bucket manifest) plans against. Taken ONCE, before any read: a fold
+    * that re-resolved the pointer at commit time would expect whatever
+    * is live then, and silently overwrite a fold that committed after
+    * its reads were planned. */
+  private type Pin = (String, Option[String], String)
+
+  private[table] def pin(): Pin = ArtifactStore.pinGen(spark, path)
+
+  /** Whether the layout writes one file set per locality group: more
+    * than one group, or any non-default storage knob. */
+  private def grouped: Boolean =
+    layout.localityGroups.size > 1 ||
+      layout.families.exists(f => f.localityGroup != "default" ||
+        f.compression != "snappy" || f.inMemory)
+
+  /** Each cell's locality group, by family. */
+  private def lgFor: Column =
+    layout.families.foldLeft(lit("default")) { (acc, f) =>
+      when(col("family") === f.name, lit(f.localityGroup)).otherwise(acc)
+    }
+
+  /** Each cell's family `max_versions` (unbounded for an undeclared
+    * family). */
+  private def famMax: Column =
+    layout.families.foldLeft(lit(Int.MaxValue)) { (acc, f) =>
+      when(col("family") === f.name, lit(f.maxVersions)).otherwise(acc)
+    }
 
   /** Merge-on-read change feed location (inside the live generation, so
     * a physical fold's pointer flip carries the folded feed away with
@@ -320,7 +353,7 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
           s"with the original count or clear the table first")
     }
     foldBuckets(guardLayout(newCells, allowNullScope = false),
-      0 until numBuckets, numBuckets, numPartitions, Map.empty)
+      0 until numBuckets, numBuckets, numPartitions, pin())
   }
 
   /** The staged write + atomic multi-root commit shared by
@@ -341,55 +374,42 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * reference's per-locality-group file sets composed with the
     * per-region split, as HFiles do. Readers union the bucket bases
     * and drop the discovered `lg` partition column; every fold keeps
-    * rewriting only touched buckets, now G write jobs instead of one. */
+    * rewriting only touched buckets, now G write jobs instead of one.
+    *
+    * `rootPin` is the fold's one [[pin]]: the root generation its reads
+    * planned against and its commit expects. Bucket expectations are
+    * read here, under that pin — every fold commits a fresh root
+    * generation, so a fold landing after the pin fails the root's CAS
+    * whatever the bucket pointers say. `cap`: see [[stage]]. */
   private def foldBuckets(newCells: DataFrame, touched: Seq[Int],
                           numBuckets: Int, numPartitions: Int,
-                          extraFiles: Map[String, String],
-                          deferred: DeferredFiles = None): Unit = {
-    import graft.sinks.ArtifactStore
-    val rootPin = ArtifactStore.pinGen(spark, path)
+                          rootPin: Pin, deferred: DeferredFiles = None,
+                          cap: Cap = keepAll): Unit = {
     val pins = touched.map(b =>
       b -> ArtifactStore.pinGen(spark, s"$path/_buckets/$b")).toMap
     val staging =
       s"$path/__buckets_stage_${java.util.UUID.randomUUID().toString.take(8)}"
-    val sortCols = Seq(col("bucket"), col("entity_id"), col("family"),
-      col("qualifier"), col("ts").desc)
     val groups = layout.localityGroups
-    val grouped = groups.size > 1 ||
-      layout.families.exists(f => f.localityGroup != "default" ||
-        f.compression != "snappy" || f.inMemory)
     try {
-      // the staged write(s) — one job ungrouped, one per locality group
-      // — run CONCURRENTLY with each other and with the deferred marker
-      // agg (guide §2.6): a grouped layout's per-group stagings were
-      // previously serial, G jobs of write latency back to back
-      val stagingWrites: Seq[(DataFrame, DataFrame => Unit)] =
-        if (!grouped)
-          Seq(newCells.withColumn("bucket", bucketOf(numBuckets)) ->
-            ((df: DataFrame) => df
-              .repartitionByRange(numPartitions, col("bucket"),
-                col("entity_id"))
-              .sortWithinPartitions(sortCols: _*)
-              .write.mode("overwrite").partitionBy("bucket")
-              .parquet(s"$staging/flat")))
+      // one `partitionBy(bucket)` staging ungrouped, one per locality
+      // group (its own codec), overlapped with the deferred marker agg
+      val bucketed = newCells.withColumn("bucket", bucketOf(numBuckets))
+      val sets =
+        if (!grouped) Seq((bucketed, s"$staging/flat", None))
         else {
-          val lgFor = layout.families.foldLeft(lit("default")) { (acc, f) =>
-            when(col("family") === f.name, lit(f.localityGroup)).otherwise(acc)
-          }
-          val tagged = newCells.withColumn("lg", lgFor)
-            .withColumn("bucket", bucketOf(numBuckets))
+          val tagged = bucketed.withColumn("lg", lgFor)
           groups.toSeq.map { case (g, fams) =>
-            tagged.filter(col("lg") === g).drop("lg") ->
-              ((df: DataFrame) => df
-                .repartitionByRange(numPartitions, col("bucket"),
-                  col("entity_id"))
-                .sortWithinPartitions(sortCols: _*)
-                .write.mode("overwrite")
-                .option("compression", fams.head.compression)
-                .partitionBy("bucket").parquet(s"$staging/g_$g"))
+            (tagged.filter(col("lg") === g).drop("lg"), s"$staging/g_$g",
+              Some(fams.head.compression))
           }
         }
-      val deferredFiles = stageWithDeferred(stagingWrites, deferred)
+      val deferredFiles = stageWithDeferred(sets.map { case (df, dir, codec) =>
+        df -> ((d: DataFrame) => {
+          val w = stage(d, Seq(col("bucket")), numPartitions, cap)
+            .write.mode("overwrite").partitionBy("bucket")
+          codec.fold(w)(w.option("compression", _)).parquet(dir)
+        })
+      }, deferred)
       val commits =
         scala.collection.mutable.ArrayBuffer.empty[(String, String, Option[String])]
       val newGenName = scala.collection.mutable.Map.empty[Int, String]
@@ -442,7 +462,7 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
       }.mkString("\n")
       val rootGen = ArtifactStore.newGenDir(spark, path, rootPin._2)
       hadoopFs.mkdirs(new org.apache.hadoop.fs.Path(rootGen))
-      BulkSink.writeExtraFiles(spark, rootGen, extraFiles ++ deferredFiles ++
+      BulkSink.writeExtraFiles(spark, rootGen, deferredFiles ++
         Map("_numbuckets" -> numBuckets.toString, "_bucket_gens" -> manifest))
       commits += ((path, rootGen, rootPin._2))
       ArtifactStore.commitGenAll(spark, path, commits.toSeq)
@@ -696,59 +716,75 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * before reloading. */
   def bulkLoad(newCells: DataFrame, numPartitions: Int = 32,
                maxRecordsPerFile: Long = 0L): Unit =
-    bulkLoadWith(newCells, numPartitions, maxRecordsPerFile, Map.empty)
+    bulkLoadWith(newCells, ArtifactStore.currentGen(spark, path),
+      numPartitions, maxRecordsPerFile)
 
-  private def bulkLoadWith(newCells: DataFrame, numPartitions: Int,
-                           maxRecordsPerFile: Long,
-                           extraFiles: Map[String, String],
-                           deferred: DeferredFiles = None): Unit = {
-    val groups = layout.localityGroups
-    val grouped = groups.size > 1 ||
-      layout.families.exists(f => f.localityGroup != "default" ||
-        f.compression != "snappy" || f.inMemory)
-    val sortCols =
-      Seq(col("entity_id"), col("family"), col("qualifier"), col("ts").desc)
+  /** The staged bulk-load write and its pointer-CAS commit against
+    * `loaded` (a fold's [[pin]]): one file set, or one per locality group
+    * (`lg=<group>/`, each with its group's codec), staged into a fresh
+    * generation directory — invisible until the commit — as independent
+    * jobs, overlapped with each other and the deferred marker agg
+    * (§2.6). `cap`: see [[stage]]. */
+  private def bulkLoadWith(newCells: DataFrame, loaded: Option[String],
+                           numPartitions: Int, maxRecordsPerFile: Long,
+                           deferred: DeferredFiles = None,
+                           cap: Cap = keepAll): Unit = {
+    val genDir = ArtifactStore.newGenDir(spark, path, loaded)
     val guarded = guardLayout(newCells, allowNullScope = false)
-    if (!grouped) {
-      // the staged write and the deferred marker agg overlap (§2.6)
-      val (genDir, loadedGen) = BulkSink.newStagingGen(spark, path)
-      val deferredFiles = stageWithDeferred(Seq(guarded ->
-        ((df: DataFrame) => {
-          val w = df.repartitionByRange(numPartitions, col("entity_id"))
-            .sortWithinPartitions(sortCols: _*)
-            .write.mode("overwrite")
-          (if (maxRecordsPerFile > 0)
-            w.option("maxRecordsPerFile", maxRecordsPerFile)
-          else w).parquet(genDir)
-        })), deferred)
-      BulkSink.writeExtraFiles(spark, genDir, extraFiles ++ deferredFiles)
-      BulkSink.commitStaged(spark, path, genDir, loadedGen)
-    } else {
-      val lgFor = layout.families.foldLeft(lit("default")) { (acc, f) =>
-        when(col("family") === f.name, lit(f.localityGroup)).otherwise(acc)
+    val sets =
+      if (!grouped) Seq((guarded, genDir, None))
+      else {
+        val tagged = guarded.withColumn("lg", lgFor)
+        layout.localityGroups.toSeq.map { case (g, fams) =>
+          (tagged.filter(col("lg") === g).drop("lg"), s"$genDir/lg=$g",
+            Some(fams.head.compression))
+        }
       }
-      // one file set per locality group, staged directly into a fresh
-      // generation directory (invisible until the pointer CAS commit);
-      // the per-group stagings are independent jobs — overlapped, with
-      // the deferred marker agg riding the same barrier (§2.6)
-      val (genDir, loadedGen) = BulkSink.newStagingGen(spark, path)
-      val tagged = guarded.withColumn("lg", lgFor)
-      val writes = groups.toSeq.map { case (g, fams) =>
-        tagged.filter(col("lg") === g).drop("lg") ->
-          ((df: DataFrame) => {
-            val w = df.repartitionByRange(numPartitions, col("entity_id"))
-              .sortWithinPartitions(sortCols: _*)
-              .write.mode("overwrite")
-              .option("compression", fams.head.compression)
-            (if (maxRecordsPerFile > 0)
-              w.option("maxRecordsPerFile", maxRecordsPerFile)
-            else w).parquet(s"$genDir/lg=$g")
-          })
-      }
-      val deferredFiles = stageWithDeferred(writes, deferred)
-      BulkSink.writeExtraFiles(spark, genDir, extraFiles ++ deferredFiles)
-      BulkSink.commitStaged(spark, path, genDir, loadedGen)
-    }
+    val deferredFiles = stageWithDeferred(sets.map { case (df, dir, codec) =>
+      df -> ((d: DataFrame) => {
+        val w = stage(d, Seq.empty, numPartitions, cap).write.mode("overwrite")
+        val coded = codec.fold(w)(w.option("compression", _))
+        (if (maxRecordsPerFile > 0)
+          coded.option("maxRecordsPerFile", maxRecordsPerFile)
+        else coded).parquet(dir)
+      })
+    }, deferred)
+    BulkSink.writeExtraFiles(spark, genDir, deferredFiles)
+    BulkSink.commitStaged(spark, path, genDir, loaded)
+  }
+
+  /** A staging's bulk-load order: range-partitioned on (`keys`,
+    * entity_id), sorted within partitions by (`keys`, entity_id, family,
+    * qualifier, ts desc) — the region-aligned, sorted HFile layout.
+    * `cap` runs between the range exchange and the sort: the major
+    * compaction's [[capVersions]] window, whose keys that exchange
+    * already clusters and whose own sort already gives the bulk-load
+    * order, so the fold adds neither a shuffle nor a sort. */
+  private def stage(df: DataFrame, keys: Seq[Column], numPartitions: Int,
+                    cap: Cap): DataFrame =
+    cap(df.repartitionByRange(numPartitions, keys :+ col("entity_id"): _*),
+      keys).sortWithinPartitions(keys ++ Seq(col("entity_id"), col("family"),
+        col("qualifier"), col("ts").desc): _*)
+
+  /** What a staging does to its range-partitioned frame (given its
+    * range keys besides entity_id) before the sort: [[keepAll]] for
+    * loads and change folds, which keep every version, or the major
+    * compaction's [[capVersions]]. */
+  private type Cap = (DataFrame, Seq[Column]) => DataFrame
+
+  private val keepAll: Cap = (df, _) => df
+
+  /** The major compaction's version cap: keep each cell's newest
+    * `max_versions` versions, in the versioned read's order — ts
+    * descending, ties by value descending, a null value last. The window
+    * partitions by the staging's range `keys` (`bucket` in a bucketed
+    * fold, a function of entity_id) plus the cell, so it runs inside the
+    * staging's range partitions. */
+  private val capVersions: Cap = (df, keys) => {
+    val cell = keys ++ Seq(col("entity_id"), col("family"), col("qualifier"))
+    df.withColumn("_version", row_number().over(Window.partitionBy(cell: _*)
+        .orderBy(col("ts").desc, col("value").desc)))
+      .filter(col("_version") <= famMax).drop("_version")
   }
 
   /** Layout validation on a written cell/change frame. Undeclared families
@@ -1128,7 +1164,8 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * folded feed, and the folded `changes` timestamps), and cuts
     * strictly below refuse instead of silently serving post-fold state. */
   def applyChanges(changes: DataFrame, numPartitions: Int = 32): Unit = {
-    val dir = dataDir
+    val pinned = pin()
+    val dir = pinned._3
     // History-barrier markers as a DEFERRED 1-row agg: the fold paths
     // evaluate it concurrently with the staged survivors write (both
     // read only pre-fold state) instead of serializing two watermark
@@ -1165,11 +1202,10 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
             Dml.applyChanges(base, pendingChangesIn(dir))
           else base
         foldBuckets(guardLayout(Dml.applyChanges(merged, changes),
-          allowNullScope = false), touched, n, numPartitions, Map.empty,
-          markers)
+          allowNullScope = false), touched, n, numPartitions, pinned, markers)
       case None =>
-        bulkLoadWith(Dml.applyChanges(cells, changes), numPartitions, 0L,
-          Map.empty, markers)
+        bulkLoadWith(Dml.applyChanges(cellsIn(dir), changes), pinned._2,
+          numPartitions, 0L, markers)
     }
   }
 
@@ -1182,15 +1218,24 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     *
     * Any pending `_changes` feed folds in physically here (the survivors
     * read goes through the merged `cells` view) and is then GONE: the
-    * commit rename swaps the whole table dir, feed included — tombstones
+    * commit flips the table to a generation without it — tombstones
     * become true physical deletes, exactly HBase's
     * delete-marker-dropped-at-major-compaction behavior.
     *
-    * Runs as the retention-aware versioned read (one hash aggregate)
-    * exploded back to cells, into the staged atomic bulk-load write —
-    * the source files are only replaced by the final commit rename. */
+    * Runs as the staged bulk-load write of the retention-filtered merged
+    * cells, with [[capVersions]] keeping each cell's newest
+    * `max_versions` versions inside the staging's own range exchange and
+    * sort: one shuffle per file set, no aggregate, no version arrays —
+    * the source files are only replaced by the final commit. The fold
+    * reads and commits against one [[pin]]; a fold that lands in between
+    * fails this one's commit loudly ("concurrent writer"). */
   def majorCompact(asOfMicros: Long = Long.MaxValue,
-                   numPartitions: Int = 32): Unit = {
+                   numPartitions: Int = 32): Unit =
+    majorCompactAt(pin(), asOfMicros, numPartitions)
+
+  /** [[majorCompact]] of the generation `pinned`. */
+  private[table] def majorCompactAt(pinned: Pin, asOfMicros: Long,
+                                    numPartitions: Int): Unit = {
     // History-barrier bookkeeping rides the fold as a DEFERRED agg: the
     // max feed ts/arrival about to be folded (this fold's high-water
     // marks) maxed with any prior watermark (the marker file lives
@@ -1201,13 +1246,9 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     // below-fold as-of cuts. Deferred = the agg job runs concurrently
     // with the staged survivors write (both only read pre-fold files)
     // instead of serializing before it.
-    val dir = dataDir
+    val dir = pinned._3
     val markers = deferredWatermarks(dir, None)
-    val survivors = read(DataRequest(maxVersions = Int.MaxValue), asOfMicros)
-      .select(col("entity_id"), col("family"), col("qualifier"),
-        explode(col("versions")).as("v"))
-      .select(col("entity_id"), col("family"), col("qualifier"),
-        col("v.ts").as("ts"), col("v.value").as("value"))
+    val survivors = retained(DataRequest(), asOfMicros, cellsIn(dir))
     numBucketsIn(dir) match {
       case Some(n) =>
         // retention (TTL/max_versions) touches every key range by
@@ -1215,27 +1256,28 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
         // grid — but still as per-bucket generations under one atomic
         // multi-root commit, preserving the layout for later
         // touched-only applyChanges folds
-        foldBuckets(survivors, 0 until n, n, numPartitions, Map.empty,
-          markers)
+        foldBuckets(survivors, 0 until n, n, numPartitions, pinned, markers,
+          capVersions)
       case None =>
-        bulkLoadWith(survivors, numPartitions, 0L, Map.empty, markers)
+        bulkLoadWith(survivors, pinned._2, numPartitions, 0L, markers,
+          capVersions)
     }
   }
 
   /** Retention-aware filter: family TTL relative to `asOfMicros`
-    * (deterministic analog of "now"), plus an optional request time range.
-    * `source` defaults to the live merged view; the as-of reads pass the
-    * feed-cut view instead — every retention/column/reader-spec rule
-    * applies identically to either. */
+    * (deterministic analog of "now"), plus an optional request time range,
+    * over `source`: a merged view (live, feed-cut or a fold's pinned
+    * generation) — every retention/column/reader-spec rule applies
+    * identically to each. */
   private def retained(request: DataRequest, asOfMicros: Long,
-                       source: DataFrame = null): DataFrame = {
+                       source: DataFrame): DataFrame = {
     val ttlCutoffs = layout.families.map { f =>
       f.name -> f.ttlSeconds.map(t => asOfMicros - t * 1000000L).getOrElse(Long.MinValue)
     }
     val ttlExpr = ttlCutoffs.foldLeft(lit(Long.MinValue)) { case (acc, (fam, cut)) =>
       when(col("family") === fam, lit(cut)).otherwise(acc)
     }
-    val base = Option(source).getOrElse(cells).filter(col("ts") >= ttlExpr)
+    val base = source.filter(col("ts") >= ttlExpr)
     val timeFiltered = request.timeRange match {
       case Some((lo, hi)) => base.filter(col("ts") >= lo && col("ts") < hi)
       case None => base
@@ -1328,10 +1370,7 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     versionedOf(cellsAsOfOrdinal(ordinal), request, asOfMicros)
 
   private def versionedOf(source: DataFrame, request: DataRequest,
-                          asOfMicros: Long): DataFrame = {
-    val famMax = layout.families.foldLeft(lit(Int.MaxValue)) { (acc, f) =>
-      when(col("family") === f.name, lit(f.maxVersions)).otherwise(acc)
-    }
+                          asOfMicros: Long): DataFrame =
     retained(request, asOfMicros, source)
       .groupBy(col("entity_id"), col("family"), col("qualifier"))
       .agg(reverse(sort_array(collect_list(struct(col("ts"), col("value"))))).as("all_versions"),
@@ -1339,7 +1378,6 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
       .select(col("entity_id"), col("family"), col("qualifier"),
         slice(col("all_versions"), lit(1),
           least(lit(request.maxVersions), col("fam_max"))).as("versions"))
-  }
 
   /** [[mostRecent]] over the [[cellsAsOf]] feed cut. Logical-ts cut
     * semantics — see [[readAsOf]]; [[mostRecentAsOfOrdinal]] is the

@@ -1,9 +1,15 @@
 package graft.plans
 
+import org.apache.spark.graftbridge.ListenerDrain
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SortExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+import org.apache.spark.sql.execution.command.DataWritingCommandExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.window.WindowExec
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.SparkSpec
 import graft.queries.{DedupQueries, LexicalQueries, TextQueries, VectorQueries}
@@ -14,7 +20,7 @@ import graft.queries.{DedupQueries, LexicalQueries, TextQueries, VectorQueries}
   * as a silent 100× at scale. Assertions run against the pre-AQE
   * physical plan (`sparkPlan`) — that is where an explicit broadcast
   * hint shows up deterministically; AQE can only improve on it. */
-class PlanShapeSpec extends SparkSpec {
+class PlanShapeSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   /** sf0.001 — plan SHAPE is scale-invariant, so the smallest corpus
     * builds the identical operator tree fastest. */
@@ -200,5 +206,56 @@ class PlanShapeSpec extends SparkSpec {
     assert(p.contains("BroadcastHashJoin"), s"no broadcast join in q117:\n$p")
     assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
       s"shuffled join in q117 plan:\n$p")
+  }
+
+  /** The executed plans of the data writes `body` runs — the final
+    * adaptive plans, which the `AdaptiveSparkPlanHelper` traversals
+    * search through their query stages. */
+  private def writePlans(body: => Unit): Seq[SparkPlan] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution,
+                             durationNs: Long): Unit =
+        if (find(qe.executedPlan)(_.isInstanceOf[DataWritingCommandExec])
+            .isDefined) plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    ListenerDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      body
+      ListenerDrain(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    plans.toArray(Array.empty[SparkPlan]).toSeq
+  }
+
+  test("majorCompact stages each locality group's file set through one range exchange, the version window above it and no aggregate or generate (grouped, bucketed, grouped-bucketed)") {
+    val fixtures = graft.table.TableFixtures.all(spark, tmpDir("compactplan"))
+      .filter(_.name != "flat")
+    for (fx <- fixtures) {
+      val staged = writePlans(fx.table.majorCompact(numPartitions = 2))
+        .filter(p => find(p)(_.isInstanceOf[WindowExec]).isDefined)
+      val groups = fx.layout.localityGroups.size
+      assert(staged.size == groups,
+        s"${fx.name}: ${staged.size} staging writes with a window, want $groups:\n" +
+          staged.mkString("\n"))
+      staged.foreach { p =>
+        val exchanges = collect(p) { case e: ShuffleExchangeExec => e }
+        assert(exchanges.size == 1 &&
+          exchanges.head.outputPartitioning.isInstanceOf[RangePartitioning],
+          s"${fx.name}: want exactly the range exchange:\n$p")
+        assert(collect(p) { case a: BaseAggregateExec => a }.isEmpty,
+          s"${fx.name}: aggregate in the staging:\n$p")
+        assert(collect(p) { case g: GenerateExec => g }.isEmpty,
+          s"${fx.name}: generate in the staging:\n$p")
+        val windows = collect(p) { case w: WindowExec => w }
+        assert(windows.size == 1 &&
+          find(windows.head)(_.isInstanceOf[ShuffleExchangeExec]).isDefined,
+          s"${fx.name}: the window must sit above the range exchange:\n$p")
+        assert(collect(p) { case s: SortExec => s }.size == 1,
+          s"${fx.name}: the window's sort must be the staging's only sort:\n$p")
+      }
+    }
   }
 }

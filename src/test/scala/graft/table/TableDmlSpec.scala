@@ -1147,4 +1147,94 @@ class TableDmlSpec extends SparkSpec {
         e.getMessage.contains("PATH_NOT_FOUND"), s"$n: ${e.getMessage}")
     }
   }
+
+  /** The four fixture shapes under retention: `info` keeps 2 versions,
+    * `stats` expires after one second of the pinned clock. */
+  private val retentionFlat = TableLayout("t", Seq(
+    FamilySpec("info", maxVersions = 2),
+    FamilySpec("stats", ttlSeconds = Some(1L))))
+  private val retentionGrouped = TableLayout("t", Seq(
+    FamilySpec("info", maxVersions = 2, localityGroup = "hot"),
+    FamilySpec("stats", ttlSeconds = Some(1L), localityGroup = "cold",
+      compression = "gzip")))
+  /** TTL clock: `stats` cells older than ts 20 are expired. */
+  private val retentionAsOf = 1000020L
+
+  /** The fixture cells plus: a name cell whose second and third versions
+    * share a ts (the cap cuts between them), and unexpired stats cells. */
+  private def retentionCells(s: org.apache.spark.sql.SparkSession) =
+    TableFixtures.baseCells(s).unionByName(Seq(
+      (6L, "info", "name", 5L, "m6"), (6L, "info", "name", 7L, "p6"),
+      (0L, "stats", "zip", 25L, "y0"), (5L, "stats", "zip", 20L, "y5"),
+      (7L, "stats", "zip", 19L, "gone"))
+      .toDF("entity_id", "family", "qualifier", "ts", "value"))
+
+  private def multiset(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("majorCompact keeps exactly the versioned read's survivors on every layout: a 2-version cap cut inside a same-ts tie, a null-valued put, TTL at a pinned asOf; reads unchanged") {
+    val roots = TableFixtures.all(spark, tmpDir("compactparity"),
+      retentionFlat, retentionGrouped, retentionCells)
+    for (fx <- roots) {
+      val t = fx.table
+      // a null-valued put tied at ts 20 with a stored value, under a
+      // newer put: the cap keeps ts 30 and the non-null ts-20 version
+      t.appendChanges(changesDF(Seq(
+        Dml.put(9L, "info", "email", 20L, null.asInstanceOf[String]),
+        Dml.put(9L, "info", "email", 30L, "n30"),
+        Dml.put(10L, "info", "name", 9L, null.asInstanceOf[String]))))
+      // the versioned read exploded back to cells: what a major
+      // compaction must leave behind
+      val want = multiset(t.read(DataRequest(maxVersions = Int.MaxValue),
+          retentionAsOf)
+        .select(col("entity_id"), col("family"), col("qualifier"),
+          explode(col("versions")).as("v"))
+        .select(col("entity_id"), col("family"), col("qualifier"),
+          col("v.ts").as("ts"), col("v.value").as("value")))
+      assert(want.contains("[6,info,name,7,p6]") &&
+        want.contains("[6,info,name,5,n6]") &&
+        !want.contains("[6,info,name,5,m6]"), s"${fx.name}: $want")
+      assert(want.contains("[9,info,email,20,e9@y]") &&
+        !want.contains("[9,info,email,20,null]") &&
+        want.contains("[10,info,name,9,null]"), s"${fx.name}: $want")
+      assert(!want.exists(_.contains(",stats,zip,1,")) &&
+        !want.contains("[7,stats,zip,19,gone]") &&
+        want.contains("[5,stats,zip,20,y5]"), s"${fx.name}: $want")
+      val read = multiset(t.read(DataRequest(maxVersions = 10), retentionAsOf))
+      val recent = multiset(t.mostRecent(asOfMicros = retentionAsOf))
+      t.majorCompact(retentionAsOf, numPartitions = 2)
+      assert(!t.hasPendingChanges, fx.name)
+      val got = multiset(t.cells.select("entity_id", "family", "qualifier",
+        "ts", "value"))
+      assert(got == want, s"${fx.name}: compacted cells " +
+        s"${got.diff(want)} extra, ${want.diff(got)} missing")
+      assert(multiset(t.read(DataRequest(maxVersions = 10), retentionAsOf)) ==
+        read, s"${fx.name}: read(maxVersions = 10) changed")
+      assert(multiset(t.mostRecent(asOfMicros = retentionAsOf)) == recent,
+        s"${fx.name}: mostRecent changed")
+    }
+  }
+
+  test("a majorCompact pinned before a concurrent fold fails its commit with 'concurrent writer' on every layout, and the other fold's cells survive") {
+    for (fx <- TableFixtures.all(spark, tmpDir("pinnedfold"))) {
+      val t = fx.table
+      val pinned = t.pin()
+      // another fold commits between the compaction's pin and its commit
+      t.applyChanges(changesDF(Seq(Dml.put(50L, "info", "email", 1L,
+        "other"))), numPartitions = 2)
+      val e = intercept[IllegalStateException](
+        t.majorCompactAt(pinned, Long.MaxValue, numPartitions = 2))
+      assert(e.getMessage.contains("concurrent writer"),
+        s"${fx.name}: ${e.getMessage}")
+      assert(t.cells.filter(col("entity_id") === 50L).select("value")
+        .as[String].collect().toSeq == Seq("other"),
+        s"${fx.name}: the other fold's cells must survive")
+      assert(!t.hasPendingChanges, s"${fx.name}: the other fold's feed fold")
+      val gens = Files.list(Paths.get(fx.path)).iterator().asScala
+        .map(_.getFileName.toString)
+        .filter(graft.sinks.ArtifactStore.isGenName).toList
+      assert(gens.size == 2,
+        s"${fx.name}: the refused fold must leave no generation: $gens")
+    }
+  }
 }

@@ -46,26 +46,29 @@ object TableFixtures {
     Dml.deleteColumn(4L, "info", "name", 40L, null.asInstanceOf[String])))
 
   /** Bulk-load one table per layout under `root` and append the two
-    * pending batches. */
-  def all(spark: SparkSession, root: String): Seq[Fixture] =
-    Seq(("flat", flatLayout, false), ("grouped", groupedLayout, false),
-      ("bucketed", flatLayout, true),
-      ("grouped-bucketed", groupedLayout, true)).map {
+    * pending batches. `flat` and `grouped` name the ungrouped and the
+    * grouped layout (the bucketed shapes reuse them) and `base` the
+    * loaded cells, so a suite can run the four shapes under its own
+    * retention knobs. */
+  def all(spark: SparkSession, root: String, flat: TableLayout = flatLayout,
+          grouped: TableLayout = groupedLayout,
+          base: SparkSession => DataFrame = baseCells): Seq[Fixture] =
+    Seq(("flat", flat, false), ("grouped", grouped, false),
+      ("bucketed", flat, true), ("grouped-bucketed", grouped, true)).map {
       case (name, layout, bucketed) =>
         val path = s"$root/$name"
         val fx = Fixture(name, path, layout, load(spark, path, layout,
-          bucketed))
+          bucketed, base(spark)))
         fx.table.appendChanges(batch1(spark), numFiles = 2)
         fx.table.appendChanges(batch2(spark))
         fx
     }
 
   private def load(spark: SparkSession, path: String, layout: TableLayout,
-                   bucketed: Boolean): EntityTable = {
+                   bucketed: Boolean, cells: DataFrame): EntityTable = {
     val t = new EntityTable(spark, path, layout)
-    if (bucketed)
-      t.bulkLoadBucketed(baseCells(spark), NumBuckets, numPartitions = 2)
-    else t.bulkLoad(baseCells(spark), numPartitions = 2)
+    if (bucketed) t.bulkLoadBucketed(cells, NumBuckets, numPartitions = 2)
+    else t.bulkLoad(cells, numPartitions = 2)
     t
   }
 }
