@@ -159,20 +159,22 @@ object Tool {
       val sweptRoot = graft.sinks.ArtifactStore.sweep(spark, path,
         keepDisplaced = !all, stagingGraceMs = grace)
       // multi-root layouts keep more generational roots below the
-      // artifact's: a sharded artifact ONE segment manifest root
-      // (`_segments`), a bucketed table one per bucket (`_buckets/`) — a
-      // crashed writer's orphan generations live THERE, so the sweep
-      // recurses over every child root under the same policy (each
-      // under its own claim)
+      // artifact's: a segment store ONE manifest root (`_segments`) — a
+      // sharded artifact's generation, or an entity table's change feed
+      // (`<live>/_changes`) — and a bucketed table one per bucket
+      // (`_buckets/`). A crashed writer's orphan generations live THERE,
+      // so the sweep recurses over every child root under the same
+      // policy (each under its own claim)
       val base = graft.sinks.ArtifactStore.resolve(spark, path)
       val fs = new org.apache.hadoop.fs.Path(path)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       def childrenOf(p: String): Seq[String] = graft.sinks.SegmentStore
         .list(fs, p).filter(_.isDirectory).map(_.getPath.toString).toSeq.sorted
-      val segmented = graft.sinks.SegmentStore.isSegmented(spark, base)
-      val childRoots =
-        (if (segmented) Seq(s"$base/${graft.sinks.SegmentStore.ManifestFile}")
-         else Nil) ++ childrenOf(s"$path/_buckets")
+      val segmented = Seq(base, s"$base/_changes")
+        .filter(graft.sinks.SegmentStore.isSegmented(spark, _))
+      val childRoots = segmented.map(d =>
+        s"$d/${graft.sinks.SegmentStore.ManifestFile}") ++
+        childrenOf(s"$path/_buckets")
       val sweptChildren = childRoots.flatMap { r =>
         // display-relative: "<family>/<child>/<gen>" (listStatus returns
         // scheme-qualified paths, so a plain prefix strip misses)
@@ -182,14 +184,12 @@ object Tool {
             keepDisplaced = !all, stagingGraceMs = grace)
           .map(g => s"$rel/$g")
       }
-      // a segmented artifact's roots also hold crashed or CAS-losing
+      // a segment store's roots also hold crashed or CAS-losing
       // writers' `_seg_*` data dirs, which no manifest names — swept
       // after the manifest generations, under the same grace policy
       // (--all, the no-writers window, ignores it)
-      val sweptSegments =
-        if (!segmented) Seq.empty
-        else graft.sinks.SegmentStore.sweepOrphans(spark, base,
-          graceMs = if (all) 0L else grace)
+      val sweptSegments = segmented.flatMap(d => graft.sinks.SegmentStore
+        .sweepOrphans(spark, d, graceMs = if (all) 0L else grace))
       val swept = sweptRoot ++ sweptChildren ++ sweptSegments
       swept.foreach(g => println(s"swept: $g"))
       val now = System.currentTimeMillis()
@@ -322,13 +322,14 @@ object Tool {
         (if (feedFiles > 0) " (pending fold: compactFeed or compact)" else ""))
       // the EntityTable concurrency contract, surfaced operationally
       // (scheduling the folds this verb recommends is exactly when it
-      // matters): appends may run concurrently (atomic per-batch commit
-      // + atomic arrival-ordinal reservation); every FOLD must be
-      // writer-exclusive.
-      println("concurrent writers: appendChanges||appendChanges SAFE " +
-        "(distinct arrival stamps); compactFeed/compact/bulk-load " +
-        "require writer exclusivity (directory swaps - schedule in a " +
-        "maintenance window)")
+      // matters): appends and feed folds commit through the feed
+      // manifest's CAS; every PHYSICAL fold must be append-exclusive.
+      println("concurrent writers: appendChanges||appendChanges SAFE and " +
+        "compactFeed||appendChanges SAFE (feed manifest CAS, distinct " +
+        "arrival stamps; a refused compactFeed is re-run); compact/" +
+        "bulk-load require writer exclusivity (an append into the " +
+        "generation they displace is lost - schedule in a maintenance " +
+        "window)")
       val compacted = flags.get("minor-compact-over").map(_.toInt) match {
         case Some(n) if feedFiles > n => table.compactFeed(n); true
         case _ => false
@@ -528,9 +529,10 @@ object Tool {
       |       (sweep non-live generations left by crashed writers;
       |        keeps the retained displaced generation unless --all;
       |        recurses over child roots — a sharded artifact's _segments
-      |        manifest root, a bucketed table's _buckets/ — so a crashed
-      |        SHARDED update's orphans AND unreferenced _seg_* data dirs
-      |        are reachable too)
+      |        manifest root, a table feed's _changes/_segments, a bucketed
+      |        table's _buckets/ — so a crashed SHARDED update's or feed
+      |        append's orphans AND unreferenced _seg_* data dirs are
+      |        reachable too)
       |  --input="format=<parquet|text|csv|json|xml|seq|avro|avrokv|small-text-files> file=... [k=v ...]"
       |        | "format=kiji table=<path> [layout=<layout.json>] [maxversions=N]
       |           [columns=fam:qual,...] [timerange=lo,hi] [startrow=K] [limitrow=K]

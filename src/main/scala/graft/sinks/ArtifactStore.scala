@@ -34,14 +34,11 @@ import org.apache.spark.sql.types.{DataType, StructType}
   *    delta.** `index-update`/`index-remove` is a read-modify-write of
   *    the whole artifact; under the rename swap two racing updates both
   *    folded the same base and the second swap silently dropped the
-  *    first delta (last-swap-wins — FIXTURES.md §10's documented hole,
-  *    the same failure class as the arrival-ordinal race). [[commitGen]]
-  *    is a compare-and-swap: the writer records the generation it loaded
-  *    and the commit refuses if the pointer moved, under a
-  *    create-exclusive `_gen_claim` held only for the pointer flip
-  *    (the `EntityTable.tryClaimArrival` test-and-set pattern —
-  *    `Files.createFile` for true O_EXCL on local FS, where Hadoop's
-  *    overwrite=false emulation is a non-atomic exists() probe).
+  *    first delta (last-swap-wins — FIXTURES.md §10's documented hole).
+  *    [[commitGen]] is a compare-and-swap: the writer records the
+  *    generation it loaded and the commit refuses if the pointer moved,
+  *    under a create-exclusive `_gen_claim` held only for the pointer
+  *    flip ([[tryClaim]]).
   *  - **A crashed writer is harmless and detectable.** A crash before
   *    [[commitGen]] leaves an orphaned generation directory; the pointer
   *    still names the old generation, so serves are untouched. Orphans
@@ -263,8 +260,12 @@ object ArtifactStore {
     commitGen(spark, path, gen, loaded)
   }
 
-  /** Create-exclusive test-and-set on the commit claim (see
-    * `EntityTable.tryClaimArrival` for the local-FS O_EXCL rationale). */
+  /** Create-exclusive test-and-set on the commit claim: true = this
+    * writer holds it. Local paths go through `Files.createFile` (atomic
+    * `O_EXCL` — Hadoop's RawLocalFileSystem emulates overwrite=false with
+    * a non-atomic exists() check, so two local writers could both "win");
+    * everything else through `FileSystem.create(overwrite = false)`, a
+    * single atomic namenode op on HDFS. */
   private def tryClaim(fs: FileSystem, claim: Path): Boolean =
     if (claim.toUri.getScheme == null || claim.toUri.getScheme == "file")
       try {
@@ -303,8 +304,10 @@ object ArtifactStore {
     try body(fs) finally fs.delete(claim, false)
   }
 
-  /** Atomic pointer write: temp + rename-with-overwrite (the
-    * `EntityTable.writeMarker` idiom). */
+  /** Atomic pointer write: temp file + rename-with-overwrite (one
+    * metadata op on HDFS; `Files.move(REPLACE_EXISTING)` on local FS) — a
+    * reader never observes a created-but-unwritten pointer, and a crash
+    * mid-write leaves only a temp file no reader opens. */
   private def writePointer(spark: SparkSession, path: String,
                            genName: String): Unit = {
     val fs = fsOf(spark, path)

@@ -130,7 +130,7 @@ object BulkSink {
     * generation and the retention-one-deep rule sweeps them, exactly as
     * [[ArtifactStore.commitGen]] sweeps `gen_*` directories older than
     * the displaced one. Everything a generational table writes lives
-    * inside `gen_*` (data, `_changes`, markers, arrival claims), so any
+    * inside `gen_*` (data, the `_changes` feed, markers), so any
     * other root entry is legacy residue by construction. */
   private def sweepLegacyRoot(spark: SparkSession, dest: String,
                               loaded: Option[String]): Unit =

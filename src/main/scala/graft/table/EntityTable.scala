@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.dml.Dml
-import graft.sinks.{ArtifactStore, BulkSink}
+import graft.sinks.{ArtifactStore, BulkSink, SegmentStore}
 
 /** Family retention + storage policy — the locality-group knobs of the
   * reference layout (`max_versions`, `ttl_seconds`, `in_memory`,
@@ -83,14 +83,20 @@ final case class DataRequest(columns: Seq[(String, String)] = Seq.empty,
   * schedule. The `_changes` name is deliberate: Spark's file listing
   * skips underscore-prefixed dirs, so base-table scans never see the feed.
   *
+  * The feed of each generation is a [[graft.sinks.SegmentStore]]
+  * directory, the segmented index tiers' lifecycle: one manifest pointer
+  * under `_changes/_segments`, and each append batch one immutable
+  * `_changes/batches/_seg_<arrival>_<uuid>/` segment, made live by one
+  * manifest compare-and-swap ([[EntityTable.Feed]]).
+  *
   * Building a table frame — [[cells]], [[read]], [[mostRecent]], the
   * `readAsOf*` reads, [[localityGroupCells]] — launches no Spark job:
   * every base, bucket-leaf and feed scan takes its schema from the
   * writer's parquet footer on the driver
-  * ([[graft.sinks.ArtifactStore.readSurface]]), and the feed, marker and
-  * manifest checks are driver-side listings and reads. The only jobs are
-  * the ones the caller's actions plan; a fold or an append pays only its
-  * own writes and aggregates.
+  * ([[graft.sinks.ArtifactStore.readSurface]]), and the pointer, feed
+  * manifest, marker and bucket manifest reads are driver-side file reads.
+  * The only jobs are the ones the caller's actions plan; a fold or an
+  * append pays only its own writes and aggregates.
   *
   * == Concurrency contract ==
   *
@@ -98,19 +104,19 @@ final case class DataRequest(columns: Seq[(String, String)] = Seq.empty,
   * always safe against every committed state — each operation commits
   * atomically, so a reader sees a batch/fold wholly or not at all):
   *
-  *  - `appendChanges` ∥ `appendChanges`: SAFE. Each batch commits via
-  *    its own single-file append or staged-dir rename, and arrival
-  *    ordinals are reserved atomically ([[reserveArrival]]: in-process
-  *    per-table lock + create-exclusive `_arrival_claim_<n>` files as
-  *    the cross-process test-and-set) — concurrent appends get DISTINCT
-  *    monotone stamps and neither batch is lost.
-  *  - `appendChanges` ∥ reads (`cells`/`read`/`readAsOf*`): SAFE — a
-  *    read plans against the feed files listed at plan-build time.
-  *  - `compactFeed` ∥ anything that WRITES the feed: UNSAFE. The fold
-  *    swaps the feed directory; a racing append can vanish. Schedule it
-  *    writer-exclusively (it is the maintenance window's job, like the
-  *    reference's compactions) — it also sweeps stale arrival claims
-  *    under that exclusivity.
+  *  - `appendChanges` ∥ `appendChanges`: SAFE. Each batch lands as its
+  *    own segment and commits through the feed manifest's pointer CAS;
+  *    an append whose CAS is refused re-pins and retries, re-stamping
+  *    only when another append took its ordinal — concurrent appends get
+  *    DISTINCT gapless stamps and neither batch is lost.
+  *  - `compactFeed` ∥ `appendChanges`: SAFE. The fold commits one segment
+  *    replacing the segments it pinned, under the same CAS: an append
+  *    that lands first makes the fold fail loudly ("concurrent writer";
+  *    re-run it), never vanish.
+  *  - `appendChanges` / `compactFeed` ∥ reads (`cells`/`read`/
+  *    `readAsOf*`): SAFE — a read scans the segments its pinned feed
+  *    manifest names, and a fold's replaced segments are deleted only by
+  *    the feed commit after it (retention one generation deep, as below).
   *  - `bulkLoad` / `majorCompact` / `applyChanges` ∥ READERS: SAFE.
   *    These commit a NEW GENERATION via the `ArtifactStore` pointer-CAS
   *    layout (`gen_<n>_<uuid>/` + `_gen_current`, the same protocol the
@@ -125,14 +131,18 @@ final case class DataRequest(columns: Seq[(String, String)] = Seq.empty,
   *    rename-swap's silent last-swap-wins. A fold reads from, and its CAS
   *    expects, the generation it pinned once before any read ([[pin]]).
   *  - `bulkLoad` / `majorCompact` / `applyChanges` ∥ feed WRITERS
-  *    (`appendChanges`): still UNSAFE — an append into the generation a
-  *    fold is displacing is lost with that generation. Run folds
-  *    append-exclusive, like the reference's compactions.
+  *    (`appendChanges`, `compactFeed`): still UNSAFE. The feed lives
+  *    inside the table generation, and the fold's CAS is on the TABLE
+  *    pointer, which an append never moves: an append that commits to
+  *    the feed of the generation a fold is displacing is lost with that
+  *    generation, and the fold cannot see it. Run folds append-exclusive,
+  *    like the reference's compactions.
   *
   * The CLI `describe` verb prints this contract next to the feed
   * occupancy it reports.
   */
 final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) {
+  import EntityTable.{Feed, Pin}
 
   /** The directory holding the LIVE table content. Generational tables
     * (anything written by [[bulkLoad]]/[[majorCompact]]/[[applyChanges]]
@@ -140,23 +150,32 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * `_gen_current` pointer to `gen_<n>_<uuid>/`; legacy flat tables (and
     * tables that only ever saw appends) resolve to the root itself.
     * Resolved PER CALL — a driver-side pointer read, the same cost class
-    * as the feed listing every merged read already does — so each read
+    * as the feed manifest read every merged read already does — so each read
     * path plans against the generation that is live when the plan is
     * built, and keeps its files for a full commit cycle afterwards
     * (retention one generation deep, `graft.sinks.ArtifactStore`). */
   private def dataDir: String =
     graft.sinks.ArtifactStore.resolve(spark, path)
 
-  /** A physical fold's pin ([[ArtifactStore.pinGen]]): the table root,
-    * the live generation the fold loaded — its commit's CAS expectation
-    * — and the directory every read of the fold (markers, survivors,
-    * bucket manifest) plans against. Taken ONCE, before any read: a fold
-    * that re-resolved the pointer at commit time would expect whatever
-    * is live then, and silently overwrite a fold that committed after
-    * its reads were planned. */
-  private type Pin = (String, Option[String], String)
+  /** Pin the live generation and its feed ([[EntityTable.Pin]]). */
+  private[table] def pin(): Pin = {
+    val (_, loaded, dir) = ArtifactStore.pinGen(spark, path)
+    Pin(loaded, dir, feedIn(dir))
+  }
 
-  private[table] def pin(): Pin = ArtifactStore.pinGen(spark, path)
+  /** The one segment root of a feed. */
+  private val Batches = "batches"
+
+  private def feedIn(dir: String): Feed = {
+    val root = s"$dir/_changes"
+    if (SegmentStore.isSegmented(spark, root)) {
+      val p = SegmentStore.pin(spark, root)
+      Feed(root, Some(p), p.segments(Batches).map(s => s"$root/$Batches/$s"))
+    } else Feed(root, None, if (dataFiles(Seq(root)).isEmpty) Nil else Seq(root))
+  }
+
+  /** A feed segment's arrival ordinal (`_seg_<arrival>_<uuid>`). */
+  private def arrivalOf(seg: String): Long = seg.split('_')(2).toLong
 
   /** Whether the layout writes one file set per locality group: more
     * than one group, or any non-default storage knob. */
@@ -178,58 +197,36 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
       when(col("family") === f.name, lit(f.maxVersions)).otherwise(acc)
     }
 
-  /** Merge-on-read change feed location (inside the live generation, so
-    * a physical fold's pointer flip carries the folded feed away with
-    * the data it was folded into). */
-  def changesPath: String = feedPathIn(dataDir)
-
-  private def feedPathIn(dir: String): String = s"$dir/_changes"
-
   private def hadoopFs = new org.apache.hadoop.fs.Path(path)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Whether a change feed is pending (cheap driver-side listing at
-    * plan-build time). Checks for committed DATA files, not bare dir
-    * existence — a failed append (layout validation raise_error) can
-    * leave an empty `_changes` dir behind, which must read as "no
-    * pending changes". */
-  def hasPendingChanges: Boolean = hasPendingChangesIn(dataDir)
+  /** Whether a change feed is pending: its pinned manifest names a
+    * segment, or its manifest-less root holds a data file. An empty
+    * `_changes` dir, or one holding only a failed append's unnamed
+    * segment, reads as "no pending changes". */
+  def hasPendingChanges: Boolean = feedIn(dataDir).paths.nonEmpty
 
-  private def hasPendingChangesIn(dir: String): Boolean =
-    feedDataFilesIn(dir).nonEmpty
-
-  /** All committed data files of the feed under generation `dir`:
-    * top-level files (single-file appends) plus files inside `batch_*`
-    * subdirectories (atomic multi-file appends, committed by one
-    * directory rename). A missing feed is an empty one. */
-  private def feedDataFilesIn(dir: String)
-      : Seq[org.apache.hadoop.fs.FileStatus] = {
-    def visible(n: String) = !n.startsWith("_") && !n.startsWith(".")
-    listOrEmpty(new org.apache.hadoop.fs.Path(feedPathIn(dir))).flatMap { s =>
-      if (!visible(s.getPath.getName)) Seq.empty
+  /** Every data file under `paths`, by Spark's listing rules (`_`/`.`
+    * entries hidden), descending into subdirectories. A missing path
+    * lists as empty. */
+  private def dataFiles(paths: Seq[String]): Seq[org.apache.hadoop.fs.FileStatus] =
+    paths.flatMap(SegmentStore.list(hadoopFs, _)).flatMap { s =>
+      val n = s.getPath.getName
+      if (n.startsWith("_") || n.startsWith(".")) Nil
       else if (s.isFile) Seq(s)
-      else hadoopFs.listStatus(s.getPath).toSeq
-        .filter(f => f.isFile && visible(f.getPath.getName))
+      else dataFiles(Seq(s.getPath.toString))
     }
-  }
-
-  /** One `listStatus`, a missing directory listing as empty (an
-    * `exists` probe first would pay a second metadata call). */
-  private def listOrEmpty(p: org.apache.hadoop.fs.Path)
-      : Seq[org.apache.hadoop.fs.FileStatus] =
-    try hadoopFs.listStatus(p).toSeq
-    catch { case _: java.io.FileNotFoundException => Seq.empty }
 
   /** The pending change feed (empty-schema error if none — guard with
-    * `hasPendingChanges`). Batch subdirectories (atomic multi-file
-    * appends) are picked up by the recursive lookup; the schema comes
-    * from the first batch's footer, so building the frame launches no
-    * job. */
-  def pendingChanges: DataFrame = pendingChangesIn(dataDir)
+    * `hasPendingChanges`). The schema comes from the first segment's
+    * footer, so building the frame launches no job. */
+  def pendingChanges: DataFrame = changesOf(feedIn(dataDir))
 
-  private def pendingChangesIn(dir: String): DataFrame =
+  /** One multi-path scan of a pinned feed's paths (recursive, for a
+    * listed feed root's batch subdirectories). */
+  private def changesOf(f: Feed): DataFrame =
     ArtifactStore.readSurface(spark, Map("recursiveFileLookup" -> "true"),
-      feedPathIn(dir))
+      f.paths: _*)
 
   /** Base cells only — the bulk-loaded / direct-appended files, change
     * feed NOT folded in. `lg` is the locality-group partition column of
@@ -267,7 +264,7 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * sets, an ungrouped base itself. */
   private def leavesOf(bases: Seq[String]): Seq[String] =
     bases.flatMap { b =>
-      val lgs = listOrEmpty(new org.apache.hadoop.fs.Path(b)).filter(s =>
+      val lgs = SegmentStore.list(hadoopFs, b).toSeq.filter(s =>
         s.isDirectory && s.getPath.getName.startsWith("lg="))
         .map(_.getPath.toString)
       if (lgs.isEmpty) Seq(b) else lgs
@@ -460,11 +457,11 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
                 s"(crashed bulkLoadBucketed?); re-run the full load")))
         s"$b\t$g"
       }.mkString("\n")
-      val rootGen = ArtifactStore.newGenDir(spark, path, rootPin._2)
+      val rootGen = ArtifactStore.newGenDir(spark, path, rootPin.loaded)
       hadoopFs.mkdirs(new org.apache.hadoop.fs.Path(rootGen))
       BulkSink.writeExtraFiles(spark, rootGen, deferredFiles ++
         Map("_numbuckets" -> numBuckets.toString, "_bucket_gens" -> manifest))
-      commits += ((path, rootGen, rootPin._2))
+      commits += ((path, rootGen, rootPin.loaded))
       ArtifactStore.commitGenAll(spark, path, commits.toSeq)
     } finally {
       hadoopFs.delete(new org.apache.hadoop.fs.Path(staging), true)
@@ -472,7 +469,7 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     }
     // legacy flat-root residue is swept two commits deep, exactly like
     // BulkSink.sweepLegacyRoot — but keeping the bucket roots
-    if (rootPin._2.isDefined)
+    if (rootPin.loaded.isDefined)
       hadoopFs.listStatus(new org.apache.hadoop.fs.Path(path)).foreach { s =>
         val nm = s.getPath.getName
         val keep = nm.startsWith("gen_") || nm.startsWith("_gen_") ||
@@ -485,18 +482,20 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * (puts unioned, tombstones masked — `Dml.applyChanges`). With no
     * pending feed this is exactly the base scan, zero overhead.
     *
-    * TORN-READ GUARD: every multi-surface read resolves the live
-    * generation ONCE and derives base + feed (+ markers, on the as-of
-    * paths) from that one directory — resolving per surface would let a
-    * fold committing mid-plan hand a reader gen_N's base with gen_N+1's
-    * feed (feed entries applied twice, or a path-not-found on the fresh
-    * generation's absent feed). The "folds ∥ readers SAFE" contract in
-    * the class doc depends on this single-resolution discipline. */
-  def cells: DataFrame = cellsIn(dataDir)
+    * TORN-READ GUARD: every multi-surface read takes ONE [[pin]] and
+    * derives base + feed (+ markers, on the as-of paths) from it —
+    * resolving per surface would let a fold committing mid-plan hand a
+    * reader gen_N's base with gen_N+1's feed (feed entries applied twice,
+    * or a path-not-found on the fresh generation's absent feed). The
+    * "folds ∥ readers SAFE" contract in the class doc depends on this
+    * single-resolution discipline. */
+  def cells: DataFrame = cellsOf(pin())
 
-  private def cellsIn(dir: String): DataFrame =
-    if (!hasPendingChangesIn(dir)) baseCellsIn(dir)
-    else Dml.applyChanges(baseCellsIn(dir), pendingChangesIn(dir))
+  /** The merged cells of pin `p`, its feed passed through `cut`. */
+  private def cellsOf(p: Pin, cut: DataFrame => DataFrame = identity)
+      : DataFrame =
+    if (p.feed.paths.isEmpty) baseCellsIn(p.dir)
+    else Dml.applyChanges(baseCellsIn(p.dir), cut(changesOf(p.feed)))
 
   /** Snapshot-as-of cell set (time travel): the merged view as it stood
     * when the change feed was CUT at `feedTs` — only feed entries (puts
@@ -529,9 +528,9 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * applied is <= watermark <= feedTs, exactly HBase's
     * versions-discarded-at-major-compaction semantics). */
   def cellsAsOf(feedTs: Long): DataFrame = {
-    val dir = dataDir // one resolution for watermark + base + feed
+    val p = pin() // one resolution for watermark + base + feed
     if (feedTs != Long.MaxValue) {
-      val w = readMarkerIn(dir, "_asof_watermark")
+      val w = readMarkerIn(p.dir, "_asof_watermark")
       require(feedTs >= w,
         s"readAsOf($feedTs): a major compaction physically folded all feed " +
           s"entries up to ts=$w into the base and discarded the versions and " +
@@ -539,10 +538,8 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
           "unreproducible (run time-travel reads before majorCompact, or " +
           "compact on a schedule that outlives the rollback window)")
     }
-    if (!hasPendingChangesIn(dir)) baseCellsIn(dir)
-    else if (feedTs == Long.MaxValue) cellsIn(dir)
-    else Dml.applyChanges(baseCellsIn(dir),
-      pendingChangesIn(dir).filter(col("ts") <= lit(feedTs)))
+    if (feedTs == Long.MaxValue) cellsOf(p)
+    else cellsOf(p, _.filter(col("ts") <= lit(feedTs)))
   }
 
   /** Snapshot-as-of by ARRIVAL ORDER — the strict batch-history cut
@@ -561,9 +558,9 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * [[asOfArrivalWatermark]] and cuts strictly below it refuse, exactly
     * like the ts axis. */
   def cellsAsOfOrdinal(ordinal: Long): DataFrame = {
-    val dir = dataDir // one resolution for watermark + base + feed
+    val p = pin() // one resolution for watermark + base + feed
     if (ordinal != Long.MaxValue) {
-      val w = readMarkerIn(dir, "_asof_arrival_watermark")
+      val w = readMarkerIn(p.dir, "_asof_arrival_watermark")
       require(ordinal >= w,
         s"readAsOfOrdinal($ordinal): a physical fold (majorCompact or " +
           s"applyChanges) already folded feed batches up to arrival=$w " +
@@ -571,17 +568,14 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
           "masked — batch-history cuts below that watermark are " +
           "unreproducible")
     }
-    if (!hasPendingChangesIn(dir)) baseCellsIn(dir)
-    else if (ordinal == Long.MaxValue) cellsIn(dir)
-    else {
-      val pc = pendingChangesIn(dir)
+    if (ordinal == Long.MaxValue) cellsOf(p)
+    else cellsOf(p, pc => {
       require(pc.columns.contains("arrival"),
         "this change feed has no arrival stamps (written by a writer " +
           "other than appendChanges?) — ordinal cuts need the stamped " +
           "feed; use the logical-ts cut (readAsOf) instead")
-      Dml.applyChanges(baseCellsIn(dir),
-        pc.filter(col("arrival") <= lit(ordinal)))
-    }
+      pc.filter(col("arrival") <= lit(ordinal))
+    })
   }
 
   /** High-water mark of feed history destroyed by major compactions: the
@@ -599,20 +593,16 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * like [[asOfWatermark]] on the logical-ts axis. */
   def asOfArrivalWatermark: Long = readMarker("_asof_arrival_watermark")
 
-  /** Marker read with torn-write tolerance. Marker writes are atomic
-    * (temp + rename, [[writeMarkerIn]]), so a reader sees a complete value
-    * or no file — but a marker written by an OLDER writer generation (or
-    * a filesystem without atomic rename) could still surface
-    * empty/partial content, so an unparseable read retries briefly.
-    * After retries: `lenient = true` treats the marker as absent (the
-    * caller has a ground-truth fallback — [[arrivalFloorIn]] re-derives the
-    * reservation floor from the feed's own `arrival` stamps); `lenient =
-    * false` (the as-of watermarks, where "absent" would silently LOWER a
-    * history barrier) fails loudly with the recovery step. */
+  /** Marker read with torn-write tolerance. Markers are written into a
+    * staged generation before its pointer flip, so a reader sees a
+    * complete value or no file — but a marker written by an OLDER writer
+    * generation (or a filesystem without atomic rename) could still
+    * surface empty/partial content, so an unparseable read retries
+    * briefly, then fails loudly with the recovery step: treating it as
+    * absent would silently LOWER a history barrier. */
   private def readMarker(name: String): Long = readMarkerIn(dataDir, name)
 
-  private def readMarkerIn(dir: String, name: String,
-                           lenient: Boolean = false): Long = {
+  private def readMarkerIn(dir: String, name: String): Long = {
     val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
     var attempt = 0
     while (true) {
@@ -629,31 +619,12 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
       parsed match {
         case Some(v) => return v
         case None if attempt < 5 => attempt += 1; Thread.sleep(20L << attempt)
-        case None if lenient => return Long.MinValue
         case None => throw new IllegalStateException(
           s"marker $p is unreadable (empty/torn) after retries; " +
             s"delete it to rebuild from table state, or restore from a backup")
       }
     }
     Long.MinValue // unreachable
-  }
-
-  /** Atomic marker write: temp file + rename-with-overwrite (one
-    * metadata op on HDFS; `Files.move(REPLACE_EXISTING)` on local FS) —
-    * a reader can never observe a created-but-unwritten marker, and a
-    * crash mid-write leaves only a temp file readers skip. */
-  private def writeMarkerIn(dir: String, name: String, value: Long): Unit = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$name")
-    val tmp = new org.apache.hadoop.fs.Path(
-      s"$dir/_${name.stripPrefix("_")}.tmp_${java.util.UUID.randomUUID().toString.take(8)}")
-    val out = hadoopFs.create(tmp, true)
-    try out.write(value.toString.getBytes("UTF-8"))
-    finally out.close()
-    try {
-      val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-        tmp.toUri, spark.sparkContext.hadoopConfiguration)
-      fc.rename(tmp, p, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    } catch { case e: Throwable => hadoopFs.delete(tmp, false); throw e }
   }
 
   /** Cells of one locality group: a partition-pruned scan (only that
@@ -667,16 +638,16 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     require(layout.localityGroups.contains(group),
       s"no locality group '$group' in table ${layout.name}")
     val fams = layout.localityGroups(group).map(_.name)
-    val dir = dataDir // one resolution for base + feed (torn-read guard)
+    val p = pin() // one resolution for base + feed (torn-read guard)
     // a bucketed table's leaves carry no `lg` column (baseCellsIn) —
     // its "group" read is the family filter over the bucket union
-    val raw = if (numBucketsIn(dir).isDefined) baseCellsIn(dir)
-      else ArtifactStore.readSurface(spark, dir)
+    val raw = if (numBucketsIn(p.dir).isDefined) baseCellsIn(p.dir)
+      else ArtifactStore.readSurface(spark, p.dir)
     val base =
       if (raw.columns.contains("lg")) raw.filter(col("lg") === group).drop("lg")
       else raw.filter(col("family").isin(fams: _*))
-    if (!hasPendingChangesIn(dir)) base
-    else Dml.applyChanges(base, pendingChangesIn(dir).filter(
+    if (p.feed.paths.isEmpty) base
+    else Dml.applyChanges(base, changesOf(p.feed).filter(
       col("family").isNull || col("family").isin(fams: _*)))
   }
 
@@ -851,16 +822,27 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * puts/scoped deletes naming undeclared families/qualifiers fail the
     * append. `numFiles` coalesces the batch (change batches are usually
     * delta-sized; 0 = keep the incoming partitioning for a genuinely
-    * large feed). Batch atomicity holds for EVERY shape: the batch is
-    * written to a private staging directory outside the feed and
-    * committed with a SINGLE directory rename into
-    * `_changes/batch_<uuid>/` — a job that fails mid-append (e.g. a
-    * layout-guard raise_error in a later task) leaves only the staging
-    * dir, which is deleted on failure and invisible to readers either
-    * way (underscore prefix), so readers see the whole batch or
-    * nothing. The private staging dir also gives each append its own
-    * Hadoop committer workspace, which is what makes concurrent appends
-    * safe (see the class-level concurrency contract). */
+    * large feed).
+    *
+    * The batch lands as ONE segment of the feed's [[SegmentStore]] (its
+    * own directory, so its own Hadoop committer workspace) and becomes
+    * visible with the feed manifest's pointer CAS: readers see the whole
+    * batch or nothing, and a job that fails mid-append (e.g. a
+    * layout-guard raise_error in a later task) leaves only a segment no
+    * manifest names, hidden from every reader and swept by `index-gc`.
+    *
+    * Arrival-ordinal stamp: one gapless batch number per append — the
+    * strict batch-history axis of [[cellsAsOfOrdinal]] (logical cell ts
+    * can be non-monotone with append order; the stamp cannot). The
+    * ordinal is the segment's: one above the last segment the pinned
+    * manifest names, or above the arrival watermark of the last physical
+    * fold — so post-fold numbering continues strictly ABOVE the range
+    * whose cuts refuse, instead of restarting at 1 underneath it. A CAS
+    * refused by a concurrent feed commit re-pins and retries; the batch
+    * is re-stamped and rewritten only when another append took its
+    * ordinal. A feed an external writer created (data, no manifest)
+    * stays unstamped and manifest-less, so its files keep ONE schema and
+    * ordinal reads refuse with guidance. */
   def appendChanges(changes: DataFrame, numFiles: Int = 1): Unit = {
     require(numFiles >= 0, s"numFiles must be >= 0: $numFiles")
     val need = Seq("entity_id", "family", "qualifier", "op", "ts", "value")
@@ -873,217 +855,115 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
           lit(s"' for table '${layout.name}'")))))
     val guarded = guardLayout(opGuarded, allowNullScope = true)
       .select(need.map(col): _*)
-    // resolve the live generation ONCE for the whole append so the
-    // stamping decision, the reservation, staging and commit all target
-    // the same directory (a physical fold racing this append is
-    // writer-unsafe by contract either way)
-    val dir = dataDir
-    // Arrival-ordinal stamp: one monotone batch number per append — the
-    // strict batch-history axis of [[cellsAsOfOrdinal]] (logical cell ts
-    // can be non-monotone with append order; the stamp cannot). Stamped
-    // only while the feed is consistently stamped (every appendChanges
-    // feed is; a feed created by an external writer stays unstamped so
-    // its files keep ONE schema — ordinal reads then refuse with
-    // guidance). The check reads the feed's footer on the driver: no job.
-    val stampOrdinal =
-      if (hasPendingChangesIn(dir) &&
-          !pendingChangesIn(dir).columns.contains("arrival"))
-        Long.MinValue
-      else
-        // reserve the ordinal BEFORE writing the batch: a crash between
-        // the two leaves a skipped number (harmless), never a duplicate
-        reserveArrival(dir)
-    val stamped =
-      if (stampOrdinal == Long.MinValue) guarded
-      else guarded.withColumn("arrival", lit(stampOrdinal))
-    // EVERY batch shape (numFiles = 1 single file, 0 keep-partitioning,
-    // >= 2 coalesced) stages outside the feed and commits via one atomic
-    // directory rename into `_changes/batch_<uuid>/`. Two reasons:
-    //  - atomicity: a plain mode("append") with several files would
-    //    expose a partially renamed batch if the job commit dies midway;
-    //  - CONCURRENCY: mode("append") into a shared directory shares the
-    //    Hadoop committer's `_temporary/0` — a concurrent appender's
-    //    job-complete cleanup DELETES the other's in-flight task
-    //    attempts (observed: chmod on a vanished attempt dir). Per-batch
-    //    staging dirs give each append a private committer workspace, so
-    //    concurrent appends cannot interfere (the class contract).
-    // Underscore-prefixed staging dirs are invisible to every reader
-    // (FileIndex hides them), so a mid-write failure exposes zero rows.
-    val shaped = if (numFiles >= 1) stamped.coalesce(numFiles) else stamped
-    val id = java.util.UUID.randomUUID().toString.take(8)
-    val staging = new org.apache.hadoop.fs.Path(s"$dir/__changes_stage_$id")
-    // Cleanup covers the RENAME failing too (e.g. the feed path
-    // occupied by a non-directory): the staging dir must not outlive a
-    // failed commit, whichever step died. After a successful rename the
-    // staging path no longer exists and the delete is a no-op.
-    try {
-      shaped.write.parquet(staging.toString)
-      val feedDir = new org.apache.hadoop.fs.Path(s"$dir/_changes")
-      if (!hadoopFs.exists(feedDir)) hadoopFs.mkdirs(feedDir)
-      val batch = new org.apache.hadoop.fs.Path(feedDir, s"batch_$id")
-      require(hadoopFs.rename(staging, batch),
-        s"appendChanges: commit rename $staging -> $batch failed")
-    } catch { case e: Throwable =>
-      hadoopFs.delete(staging, true)
-      throw e
+    // one pin for the whole append: a physical fold racing it is
+    // writer-unsafe by contract either way
+    val p = pin()
+    val root = p.feed.root
+    def segPath(seg: String) = new org.apache.hadoop.fs.Path(s"$root/$Batches/$seg")
+    def land(ordinal: Long, df: DataFrame): String = {
+      val seg = SegmentStore.segName(ordinal)
+      (if (numFiles >= 1) df.coalesce(numFiles) else df)
+        .write.parquet(segPath(seg).toString)
+      seg
     }
-  }
-
-  /** The highest arrival ordinal known to be in use (0 when none). Reads
-    * the `_arrival_reserved` marker (O(1) — the feed-sized `max(arrival)`
-    * scan on EVERY append was measured as q134's data-proportional
-    * regression at 50×), falling back to the feed agg only for a stamped
-    * feed predating the marker (or an unreadable one — the feed's own
-    * stamps are the ground truth the marker merely caches).
-    * [[compactFeed]] preserves stamps, so the marker stays valid across
-    * minor folds; a physical fold ([[majorCompact]]/[[applyChanges]])
-    * replaces the table directory — marker gone, feed empty — and the
-    * arrival WATERMARK becomes the floor, so post-fold numbering
-    * continues strictly ABOVE the refused range instead of restarting at
-    * 1 underneath it (restarted numbers would be unreachable by any
-    * ordinal cut: cuts below the watermark refuse). */
-  private def arrivalFloorIn(dir: String): Long = {
-    val reserved = readMarkerIn(dir, "_arrival_reserved", lenient = true)
-    val inUse =
-      if (reserved != Long.MinValue) reserved
-      else if (!hasPendingChangesIn(dir)) 0L
-      else Option(pendingChangesIn(dir).agg(max(col("arrival"))).head()
-        .get(0)).map(_.asInstanceOf[Long]).getOrElse(0L)
-    math.max(inUse,
-      math.max(readMarkerIn(dir, "_asof_arrival_watermark"), 0L))
-  }
-
-  /** Atomically reserve the next arrival ordinal — the concurrency-safe
-    * half of [[appendChanges]]' stamping. Two mechanisms compose:
-    *
-    *  1. an in-process per-table lock serializes reservations between
-    *     threads of one JVM (the `local[*]` / one-driver deployment, and
-    *     the only concurrency Spark drivers normally have), and
-    *  2. a create-EXCLUSIVE claim file `_arrival_claim_<n>` is the
-    *     cross-process test-and-set: `O_CREAT|O_EXCL` on a local
-    *     filesystem, a single atomic namenode op on HDFS. A claim that
-    *     already exists means another writer owns that ordinal — probe
-    *     the next one.
-    *
-    * The `_arrival_reserved` marker is then advanced (atomic temp +
-    * rename) as a PERFORMANCE HINT ONLY: the claim files are the
-    * authority, so a marker that lags (or briefly regresses under a
-    * cross-process race — writer A renames its smaller value after
-    * writer B's larger one) costs extra claim probes, never a duplicate
-    * ordinal. Stale claims below the marker are garbage-collected by
-    * [[compactFeed]] (writer-exclusive by contract, so no reservation is
-    * probing while it sweeps). */
-  private def reserveArrival(dir: String): Long =
-    EntityTable.tableLock(path).synchronized {
-      // claims live in the live generation `dir` (the table root for a
-      // legacy flat table) — a physical fold flips to a fresh generation
-      // with no claims, and its arrival WATERMARK keeps post-fold
-      // numbering monotone, exactly as the pre-generational dir swap did
-      hadoopFs.mkdirs(new org.apache.hadoop.fs.Path(dir))
-      var candidate = arrivalFloorIn(dir) + 1L
-      var attempts = 0
-      while (!tryClaimArrival(dir, candidate)) {
-        attempts += 1
-        require(attempts < 100000,
-          s"arrival reservation found $attempts consecutive claims from " +
-            s"$dir/_arrival_claim_${candidate - attempts} — marker far behind " +
-            s"claims; run compactFeed to sweep, or delete stale _arrival_claim_* files")
-        candidate += 1L
+    if (p.feed.manifest.isEmpty && p.feed.paths.nonEmpty) {
+      // an external writer's feed: the footer check (no job) refuses one
+      // this engine stamped before the feed had a manifest. The batch
+      // lands hidden, and one rename unhides it whole into the listing.
+      requireManifest(p.feed, !changesOf(p.feed).columns.contains("arrival"))
+      val seg = land(0L, guarded)
+      require(hadoopFs.rename(segPath(seg),
+          new org.apache.hadoop.fs.Path(root, seg.stripPrefix("_"))),
+        s"appendChanges: cannot list segment $seg in the feed $root")
+    } else {
+      val floor = math.max(readMarkerIn(p.dir, "_asof_arrival_watermark"), 0L)
+      def next(m: SegmentStore.Pinned): Long = math.max(floor,
+        m.segments(Batches).lastOption.fold(0L)(arrivalOf)) + 1L
+      def stamped(a: Long) = land(a, guarded.withColumn("arrival", lit(a)))
+      var m = p.feed.manifest.getOrElse(SegmentStore.fresh(root))
+      var arrival = next(m)
+      var seg = stamped(arrival)
+      while (!commitFeed(m, m.segments(Batches) :+ seg)) {
+        m = SegmentStore.pin(spark, root)
+        if (next(m) != arrival) {
+          hadoopFs.delete(segPath(seg), true)
+          arrival = next(m)
+          seg = stamped(arrival)
+        }
       }
-      writeMarkerIn(dir, "_arrival_reserved", candidate)
-      candidate
     }
-
-  /** Create-exclusive test-and-set on `_arrival_claim_<n>`: true = this
-    * writer owns ordinal `n`. Local paths go through `Files.createFile`
-    * (atomic `O_EXCL` — Hadoop's RawLocalFileSystem emulates
-    * overwrite=false with a non-atomic exists() check); everything else
-    * through `FileSystem.create(overwrite = false)` (atomic on HDFS). */
-  private def tryClaimArrival(dir: String, n: Long): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_arrival_claim_$n")
-    if (p.toUri.getScheme == null || p.toUri.getScheme == "file")
-      try {
-        java.nio.file.Files.createFile(java.nio.file.Paths.get(p.toUri.getPath))
-        true
-      } catch { case _: java.nio.file.FileAlreadyExistsException => false }
-    else
-      try { hadoopFs.create(p, false).close(); true }
-      catch { case _: org.apache.hadoop.fs.FileAlreadyExistsException => false }
   }
+
+  /** Commit `segs` as the segment list of feed pin `m`: true once they
+    * are live. A commit that throws after another feed commit moved the
+    * pointer returns false — refused by the CAS, or failed mid-write
+    * because that commit's retention sweep deleted this one's staged
+    * manifest generation — unless its own flip landed and only a cleanup
+    * step after it failed. */
+  private def commitFeed(m: SegmentStore.Pinned, segs: Seq[String]): Boolean =
+    try { SegmentStore.commit(spark, m, Seq(Batches -> segs)); true }
+    catch { case scala.util.control.NonFatal(_)
+        if ArtifactStore.currentGen(spark, m.root) != m.loaded =>
+      SegmentStore.pin(spark, m.dir).segments(Batches) == segs }
+
+  /** The refusal of a feed write onto a feed root with data but no
+    * manifest, unless `ok`: such a feed can only be read by listing, and
+    * `majorCompact` folds it into the base. */
+  private def requireManifest(f: Feed, ok: Boolean): Unit =
+    require(ok, s"${f.root} holds change files but no segment manifest " +
+      "(written by another writer, or stamped before the feed was a " +
+      "segment store): run majorCompact to fold it into the base")
 
   /** Change-feed occupancy: (data files, rows). Each `appendChanges` batch
-    * leaves its own file(s); every merged read re-lists and re-unions them
-    * all, so a long-lived write pattern should watch this and fold the
-    * feed down (`compactFeed` for a feed-only fold, `majorCompact` for the
-    * full physical fold). Surfaced by the CLI `describe` verb. */
+    * leaves its own segment; every merged read scans them all, so a
+    * long-lived write pattern should watch this and fold the feed down
+    * (`compactFeed` for a feed-only fold, `majorCompact` for the full
+    * physical fold). Surfaced by the CLI `describe` verb. */
   def changeFeedStats: (Int, Long) = {
-    val dir = dataDir // one resolution for the listing + the count
-    val files = feedDataFilesIn(dir).length
-    if (files == 0) (0, 0L) else (files, pendingChangesIn(dir).count())
+    val f = feedIn(dataDir) // one resolution for the listing + the count
+    val files = dataFiles(f.paths).length
+    if (files == 0) (0, 0L) else (files, changesOf(f).count())
   }
 
   /** MINOR compaction of the change feed: coalesce the N accumulated
-    * append batches down to ~128 MB-input fold tasks (one file for the
+    * append segments down to ~128 MB-input fold tasks (one file for the
     * intended delta-sized feed) — the memstore-flush/minor-
     * compaction split of the reference's LSM substrate (minor folds the
     * small files, major folds into the base). Feed-ONLY rewrite: base
-    * files are untouched, tombstones survive (they still mask base cells
-    * until a `majorCompact`), and the merged `cells` view is unchanged.
-    * `maxFiles` makes the call a no-op threshold trigger: fold only when
-    * the feed exceeds that many files (0 = always fold).
+    * files are untouched, tombstones and arrival stamps survive (they
+    * still mask base cells until a `majorCompact`), and the merged
+    * `cells` view is unchanged. `maxFiles` makes the call a no-op
+    * threshold trigger: fold only when the feed exceeds that many files
+    * (0 = always fold).
     *
-    * NOT SAFE concurrently with writers of the same feed (see the
-    * class-level "Concurrency contract"): the fold swaps the feed
-    * directory (stage → delete → rename), and an `appendChanges` racing
-    * the swap can lose its batch. Run from the operational maintenance
-    * schedule, like compaction in the reference. Being writer-exclusive,
-    * this is also where stale `_arrival_claim_*` files (the reservation
-    * protocol's test-and-set markers, [[reserveArrival]]) are swept:
-    * claims at or below the `_arrival_reserved` marker can never be
-    * probed again once no reservation is in flight. */
-  def compactFeed(maxFiles: Int = 0): Unit = {
-    // One generation resolution AND one feed listing for the whole fold:
-    // the fold trigger needs only the FILE COUNT — the previous
-    // changeFeedStats call also ran a full feed-rows count() job whose
-    // result was discarded (one wasted Spark job per compactFeed,
-    // measured round 19; the CLI describe verb still reports rows via
-    // changeFeedStats, where they are actually printed).
-    val dir = dataDir
-    sweepArrivalClaimsIn(dir)
-    val files = feedDataFilesIn(dir)
-    if (files.length <= math.max(maxFiles, 1)) return // 0/1 file: no fold
-    val staging = new org.apache.hadoop.fs.Path(
-      s"$dir/__changes_compact_${java.util.UUID.randomUUID().toString.take(8)}")
-    // Size-based fold width: the intended delta-sized feed folds to one
-    // file, but the feed is UNBOUNDED if folds are deferred (a month of
-    // appends must not funnel through one writer task) — bound each fold
-    // task at ~128 MB of input (the saveSemIndex partition-count fix's
-    // pattern, applied to the fold).
-    val feedBytes = files.map(_.getLen).sum
-    val foldParts = math.max(1L, feedBytes / (128L << 20)).toInt
-    pendingChangesIn(dir).coalesce(foldParts).write.parquet(staging.toString)
-    val feed = new org.apache.hadoop.fs.Path(feedPathIn(dir))
-    hadoopFs.delete(feed, true)
-    require(hadoopFs.rename(staging, feed),
-      s"compactFeed: rename $staging -> $feed failed")
-  }
+    * The fold is one segment, named with the highest arrival it holds
+    * (so it uses up no ordinal), committed through the feed manifest's
+    * CAS against the segments it pinned: safe against a racing
+    * `appendChanges` — an append that lands first makes this fold fail
+    * loudly ("concurrent writer"; re-run it), and neither batch is lost.
+    * The folded segments stay on disk for readers planned before the
+    * fold until the next feed commit. A feed with data but no manifest
+    * is refused (see [[requireManifest]]). */
+  def compactFeed(maxFiles: Int = 0): Unit = compactFeedAt(pin(), maxFiles)
 
-  /** GC stale arrival-claim files (callable only while writer-exclusive —
-    * [[compactFeed]] calls it under that contract). A claim numbered at
-    * or below the reserved marker is unreachable by any future probe
-    * (probes start at marker+1 and the marker, with no reservation in
-    * flight, is at or above every claimed ordinal), so deleting it can
-    * never let an ordinal be claimed twice. Claims ABOVE the marker —
-    * possible after a cross-process marker regression — are kept. */
-  private def sweepArrivalClaimsIn(dir: String): Unit = {
-    val reserved = readMarkerIn(dir, "_arrival_reserved", lenient = true)
-    if (reserved == Long.MinValue) return
-    listOrEmpty(new org.apache.hadoop.fs.Path(dir)).foreach { s =>
-      val n = s.getPath.getName
-      if (n.startsWith("_arrival_claim_") &&
-          scala.util.Try(n.stripPrefix("_arrival_claim_").toLong)
-            .toOption.exists(_ <= reserved))
-        hadoopFs.delete(s.getPath, false)
+  /** [[compactFeed]] of the feed `pinned`. */
+  private[table] def compactFeedAt(pinned: Pin, maxFiles: Int): Unit = {
+    val f = pinned.feed
+    requireManifest(f, f.manifest.isDefined || f.paths.isEmpty)
+    // the fold trigger needs only the FILE listing — no row count job
+    val files = dataFiles(f.paths)
+    if (files.length > math.max(maxFiles, 1)) f.manifest.foreach { m =>
+      // Size-based fold width: the intended delta-sized feed folds to one
+      // file, but the feed is UNBOUNDED if folds are deferred (a month of
+      // appends must not funnel through one writer task) — bound each
+      // fold task at ~128 MB of input.
+      val foldParts = math.max(1L, files.map(_.getLen).sum / (128L << 20)).toInt
+      val seg = SegmentStore.segName(arrivalOf(m.segments(Batches).last))
+      changesOf(f).coalesce(foldParts).write
+        .parquet(s"${f.root}/$Batches/$seg")
+      if (!commitFeed(m, Seq(seg))) throw new IllegalStateException(
+        s"compactFeed: a concurrent writer committed to ${f.root} after " +
+          "the fold pinned it; re-run compactFeed")
     }
   }
 
@@ -1120,16 +1000,17 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * watermarks to the marker-file map. Exactly the markers the
     * serialized form computed — one agg job instead of two, evaluated
     * inside the staging barrier. */
-  private def deferredWatermarks(dir: String,
+  private def deferredWatermarks(p: Pin,
                                  changes: Option[DataFrame]): DeferredFiles = {
     import org.apache.spark.sql.types.LongType
     val spark = this.spark
+    val dir = p.dir
     val feedAgg =
-      if (!hasPendingChangesIn(dir))
+      if (p.feed.paths.isEmpty)
         spark.range(1).select(lit(null).cast(LongType).as("f_ts"),
           lit(null).cast(LongType).as("f_arr"))
       else {
-        val pc = pendingChangesIn(dir)
+        val pc = changesOf(p.feed)
         if (pc.columns.contains("arrival"))
           pc.agg(max(col("ts")).as("f_ts"), max(col("arrival")).as("f_arr"))
         else pc.agg(max(col("ts")).as("f_ts"),
@@ -1165,12 +1046,12 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     * strictly below refuse instead of silently serving post-fold state. */
   def applyChanges(changes: DataFrame, numPartitions: Int = 32): Unit = {
     val pinned = pin()
-    val dir = pinned._3
+    val (dir, feed) = (pinned.dir, pinned.feed)
     // History-barrier markers as a DEFERRED 1-row agg: the fold paths
     // evaluate it concurrently with the staged survivors write (both
     // read only pre-fold state) instead of serializing two watermark
     // agg jobs before the staging.
-    val markers = deferredWatermarks(dir, Some(changes))
+    val markers = deferredWatermarks(pinned, Some(changes))
     numBucketsIn(dir) match {
       case Some(n) =>
         // BUCKETED fold: only the buckets the feed + changes route to
@@ -1179,8 +1060,7 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
         // grid's generations provably hold. Touched-bucket count is
         // bounded by n — a driver collect of at most n ints.
         val feedIds =
-          if (hasPendingChangesIn(dir))
-            pendingChangesIn(dir).select(col("entity_id"))
+          if (feed.paths.nonEmpty) changesOf(feed).select(col("entity_id"))
           else changes.limit(0).select(col("entity_id"))
         val touched = feedIds.unionByName(changes.select(col("entity_id")))
           .select(bucketOf(n).as("bucket")).distinct()
@@ -1198,16 +1078,24 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
           bucketBasesIn(dir, n).zipWithIndex
             .collect { case (p, b) if touched.contains(b) => p }): _*))
         val merged =
-          if (hasPendingChangesIn(dir))
-            Dml.applyChanges(base, pendingChangesIn(dir))
+          if (feed.paths.nonEmpty) Dml.applyChanges(base, changesOf(feed))
           else base
         foldBuckets(guardLayout(Dml.applyChanges(merged, changes),
           allowNullScope = false), touched, n, numPartitions, pinned, markers)
       case None =>
-        bulkLoadWith(Dml.applyChanges(cellsIn(dir), changes), pinned._2,
-          numPartitions, 0L, markers)
+        bulkLoadWith(Dml.applyChanges(cellsOf(pinned), changes),
+          pinned.loaded, numPartitions, 0L, markers)
     }
+    dropRetired(feed)
   }
+
+  /** After a physical fold's commit: delete the segments its pinned feed
+    * manifest had retired (a [[compactFeed]]'s folded inputs, kept for
+    * readers of the manifest before it), so the generation the fold
+    * displaces holds only the feed its live manifest names. */
+  private def dropRetired(f: Feed): Unit =
+    f.manifest.foreach(_.manifest.retired.foreach(s =>
+      hadoopFs.delete(new org.apache.hadoop.fs.Path(f.root, s), true)))
 
   /** MAJOR compaction: physically drop cells beyond each family's
     * max_versions and past its TTL (relative to `asOfMicros`), then
@@ -1246,10 +1134,9 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     // below-fold as-of cuts. Deferred = the agg job runs concurrently
     // with the staged survivors write (both only read pre-fold files)
     // instead of serializing before it.
-    val dir = pinned._3
-    val markers = deferredWatermarks(dir, None)
-    val survivors = retained(DataRequest(), asOfMicros, cellsIn(dir))
-    numBucketsIn(dir) match {
+    val markers = deferredWatermarks(pinned, None)
+    val survivors = retained(DataRequest(), asOfMicros, cellsOf(pinned))
+    numBucketsIn(pinned.dir) match {
       case Some(n) =>
         // retention (TTL/max_versions) touches every key range by
         // definition, so a bucketed major compaction rewrites the whole
@@ -1259,9 +1146,10 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
         foldBuckets(survivors, 0 until n, n, numPartitions, pinned, markers,
           capVersions)
       case None =>
-        bulkLoadWith(survivors, pinned._2, numPartitions, 0L, markers,
+        bulkLoadWith(survivors, pinned.loaded, numPartitions, 0L, markers,
           capVersions)
     }
+    dropRetired(pinned.feed)
   }
 
   /** Retention-aware filter: family TTL relative to `asOfMicros`
@@ -1402,13 +1290,27 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
 }
 
 object EntityTable {
-  /** Per-table-path monitor for arrival-ordinal reservations: serializes
-    * [[EntityTable.reserveArrival]] between all threads of this JVM
-    * (several `EntityTable` instances may point at one path — the lock
-    * keys on the path, not the instance). Cross-PROCESS exclusion is the
-    * claim files' job; this lock makes the common one-driver deployment
-    * race-free without filesystem round-trip retries. */
-  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private[table] def tableLock(path: String): Object =
-    locks.computeIfAbsent(path, _ => new Object)
+  /** A pin of the table ([[ArtifactStore.pinGen]]): the live generation
+    * it loaded — a fold's commit CAS expectation — the directory every
+    * read plans against (markers, base, bucket manifest), and that
+    * generation's change feed pinned with it. Taken ONCE, before any
+    * read: a fold that re-resolved the pointer at commit time would
+    * expect whatever is live then, and silently overwrite a fold that
+    * committed after its reads were planned; a read that resolved the
+    * feed apart from the base could pair one generation's base with
+    * another's feed. */
+  private[table] final case class Pin(loaded: Option[String], dir: String,
+                                      feed: Feed)
+
+  /** A generation's change feed, pinned. `root` is `<gen>/_changes`, a
+    * [[SegmentStore]] directory: `manifest` is its pin, and `paths` the
+    * `batches/_seg_<arrival>_<uuid>` segments it names, in arrival
+    * order. A feed root that holds data but no manifest (an external
+    * writer's feed) is read by listing: `paths` is the root itself. No
+    * paths: no pending changes.
+    * Crash leftovers — segments no manifest names — are hidden from
+    * both (underscore names), and `index-gc` sweeps them. */
+  private[table] final case class Feed(root: String,
+                                       manifest: Option[SegmentStore.Pinned],
+                                       paths: Seq[String])
 }

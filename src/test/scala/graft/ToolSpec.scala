@@ -2857,6 +2857,35 @@ class ToolSpec extends SparkSpec {
     assert(table.cells.count() == cells, "the table must read every cell")
   }
 
+  test("CLI index-gc sweeps a table feed's orphan segment; the named segments hold") {
+    import spark.implicits._
+    import graft.table.TableFixtures
+    val path = s"${tmpDir("gcfeed")}/t"
+    val table = new graft.table.EntityTable(spark, path, TableFixtures.flatLayout)
+    table.bulkLoad(TableFixtures.baseCells(spark), numPartitions = 2)
+    table.appendChanges(TableFixtures.batch1(spark))
+    table.appendChanges(TableFixtures.batch2(spark))
+    val cells = table.cells.count()
+    val feed = s"${live(path)}/_changes"
+    val named = graft.sinks.SegmentStore.pin(spark, feed).segments("batches")
+    // simulate a CRASHED append: its batch segment landed, no manifest
+    // names it
+    val orphan = s"$feed/batches/${graft.sinks.SegmentStore.segName(3L)}"
+    Seq((1L, "x")).toDF("a", "b").write.parquet(orphan)
+    // grace-ms=0: the orphan is fresh, which the default staging grace
+    // would deliberately spare
+    val r = Tool.run(spark, Array("index-gc", s"--path=$path",
+      "--grace-ms=0"))
+    assert(r.counters("swept_segments") == 1L, r.counters.toString)
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(orphan)),
+      s"orphan $orphan must be swept")
+    assert(named.forall(s => fs.exists(
+      new org.apache.hadoop.fs.Path(s"$feed/batches/$s"))), named)
+    assert(table.cells.count() == cells, "the table must read every cell")
+  }
+
   test("CLI index-rebuild on the compressed sharded tiers: corpus re-supply re-fits in place; guards refuse a missing or stale corpus") {
     import spark.implicits._
     val base = tmpDir("idxpqrebuild")

@@ -25,6 +25,25 @@ class TableDmlSpec extends SparkSpec {
   private def changesDF(ch: Seq[Dml.Change[Long, String]]) =
     ch.toDF("entity_id", "family", "qualifier", "op", "ts", "value")
 
+  /** The feed segments the live manifest of table `dir` names, read from
+    * its manifest file; empty for a feed with no manifest. */
+  private def namedSegments(dir: String): Seq[String] = {
+    val root = Paths.get(live(dir), "_changes", "_segments")
+    if (!Files.exists(root.resolve("_gen_current"))) Nil
+    else Files.readAllLines(root.resolve(Files.readString(
+        root.resolve("_gen_current")).trim).resolve("_segments")).asScala
+      .map(_.trim.split(" ").toSeq).collect {
+        case "root" +: "batches" +: segs => segs }.flatten.toSeq
+  }
+
+  /** Every segment directory on disk in table `dir`'s feed. */
+  private def segmentDirs(dir: String): Set[String] = {
+    val root = Paths.get(live(dir), "_changes", "batches")
+    if (!Files.exists(root)) Set.empty
+    else Files.list(root).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.startsWith("_seg_")).toSet
+  }
+
   private def keys(df: org.apache.spark.sql.DataFrame) =
     df.select("entity_id", "family", "qualifier", "ts").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSet
@@ -114,9 +133,7 @@ class TableDmlSpec extends SparkSpec {
       while (fs.hasNext) {
         val p = fs.next()
         val n = p.getFileName.toString
-        // the _arrival_reserved ordinal marker (and its local-FS .crc
-        // shadow) is an INTENDED O(1) append artifact, not a base rewrite
-        if (!n.startsWith("_") && !n.contains("_arrival_reserved"))
+        if (!n.startsWith("_"))
           out += ((p.getFileName.toString, Files.getLastModifiedTime(p).toMillis))
       }
       out
@@ -307,6 +324,11 @@ class TableDmlSpec extends SparkSpec {
     // at/above the watermark the view serves
     assert(keys(table.cellsAsOf(40L)) == live)
     assert(keys(table.cellsAsOfOrdinal(1L)) == live)
+    // a torn watermark fails loudly (absent would silently lower a
+    // history barrier)
+    Files.write(Paths.get(this.live(dir), "_asof_watermark"), Array.emptyByteArray)
+    val torn = intercept[IllegalStateException] { table.asOfWatermark }
+    assert(torn.getMessage.contains("unreadable"))
   }
 
   test("multi-file append (numFiles=0) commits atomically; mid-append failure leaves zero feed rows") {
@@ -336,7 +358,7 @@ class TableDmlSpec extends SparkSpec {
       assert(n.startsWith("_") || n.startsWith(".") || n.endsWith(".parquet"),
         s"unexpected visible artifact after failed append: $n")
     }
-    // a GOOD multi-file batch commits as one batch_* dir, readable merged
+    // a GOOD multi-file batch commits as one named segment, readable merged
     val good = changesDF(Seq(
       Dml.put(1L, "grp", "email", 30L, "c@x"),
       Dml.put(2L, "stats", "zip", 5L, "94110")))
@@ -344,16 +366,15 @@ class TableDmlSpec extends SparkSpec {
     table.appendChanges(good, numFiles = 0)
     val (files, rows) = table.changeFeedStats
     assert(files == 2 && rows == 2L, s"feed=($files, $rows)")
-    assert(Files.list(Paths.get(live(dir), "_changes")).iterator().asScala
-      .exists(_.getFileName.toString.startsWith("batch_")))
+    assert(namedSegments(dir).size == 1, namedSegments(dir))
     assert(keys(table.cells) == Set(
       (1L, "grp", "email", 10L), (1L, "grp", "email", 30L),
       (2L, "stats", "zip", 5L)))
-    // single-file appends still interleave fine with batch dirs
+    // single-file appends still interleave fine with multi-file segments
     table.appendChanges(changesDF(Seq(Dml.put(1L, "grp", "email", 40L, "d@x"))))
     assert(table.changeFeedStats._2 == 3L)
     assert(keys(table.cells).contains((1L, "grp", "email", 40L)))
-    // minor compaction folds batch dirs and top-level files alike
+    // minor compaction folds multi- and single-file segments alike
     table.compactFeed()
     assert(table.changeFeedStats == ((1, 3L)))
     assert(keys(table.cells).contains((1L, "grp", "email", 40L)))
@@ -365,9 +386,10 @@ class TableDmlSpec extends SparkSpec {
     val table = new EntityTable(spark, dir, layout)
     table.bulkLoad(Seq((1L, "grp", "email", 10L, "a@x"))
       .toDF("entity_id", "family", "qualifier", "ts", "value"), numPartitions = 1)
-    // Two writers, each committing a 2-file batch via its own staged dir +
-    // rename. Per-batch UUIDs mean neither rename can clobber the other;
-    // the barrier maximizes overlap of the stage-write + rename windows.
+    // Two writers, each landing a 2-file batch as its own segment and
+    // committing it through the feed manifest's CAS (the loser re-pins
+    // and retries); the barrier maximizes overlap of the write + commit
+    // windows.
     import java.util.concurrent.CyclicBarrier
     val barrier = new CyclicBarrier(2)
     def batchOf(base: Long) = changesDF(Seq(
@@ -387,13 +409,11 @@ class TableDmlSpec extends SparkSpec {
       (1L, "grp", "email", 10L),
       (100L, "grp", "email", 20L), (101L, "grp", "email", 20L),
       (200L, "grp", "email", 20L), (201L, "grp", "email", 20L)))
-    // exactly two committed batch dirs, no stray staging dirs
-    val names = Files.list(Paths.get(live(dir))).iterator().asScala
-      .map(_.getFileName.toString).toSet
-    assert(!names.exists(_.startsWith("__changes_stage_")),
-      s"staging leaked: $names")
-    assert(Files.list(Paths.get(live(dir), "_changes")).iterator().asScala
-      .count(_.getFileName.toString.startsWith("batch_")) == 2)
+    // exactly two named segments, and no segment the manifest does not
+    // name (a re-stamped loser deletes the segment it rewrote)
+    assert(namedSegments(dir).size == 2, namedSegments(dir))
+    assert(segmentDirs(dir) == namedSegments(dir).toSet,
+      s"unnamed segment: ${segmentDirs(dir)}")
   }
 
   test("concurrent appendChanges reserve DISTINCT monotone arrival stamps") {
@@ -458,34 +478,8 @@ class TableDmlSpec extends SparkSpec {
     assert(stamps.min == 1L && stamps.max == 40L, s"non-gapless: ${stamps.sorted}")
   }
 
-  test("torn arrival marker: empty _arrival_reserved recovers from the feed's own stamps") {
-    val dir = tmpDir("morTornMarker") + "/t"
-    val table = new EntityTable(spark, dir, TableLayout("t", Seq(FamilySpec("grp"))))
-    table.bulkLoad(Seq((1L, "grp", "email", 10L, "a@x"))
-      .toDF("entity_id", "family", "qualifier", "ts", "value"), numPartitions = 1)
-    table.appendChanges(changesDF(Seq(Dml.put(2L, "grp", "email", 20L, "b@x"))))
-    table.appendChanges(changesDF(Seq(Dml.put(3L, "grp", "email", 20L, "c@x"))))
-    // simulate the crash-mid-write artifact the old protocol could leave:
-    // a created-but-empty marker (old readMarker: NumberFormatException
-    // on EVERY later append, batch lost; new: lenient fallback to the
-    // feed max(arrival) scan — the stamps ARE the ground truth)
-    Files.write(Paths.get(live(dir), "_arrival_reserved"), Array.emptyByteArray)
-    table.appendChanges(changesDF(Seq(Dml.put(4L, "grp", "email", 20L, "d@x"))))
-    val stamps = table.pendingChanges.select("arrival").collect()
-      .map(_.getLong(0)).toSeq.sorted
-    assert(stamps == Seq(1L, 2L, 3L), s"stamps=$stamps")
-    // ...and the recovered append rewrote the marker atomically: parseable
-    assert(new String(Files.readAllBytes(
-      Paths.get(live(dir), "_arrival_reserved")), "UTF-8").trim.toLong == 3L)
-    // a torn WATERMARK, by contrast, must fail loudly (absent would
-    // silently lower a history barrier)
-    Files.write(Paths.get(live(dir), "_asof_watermark"), Array.emptyByteArray)
-    val e = intercept[IllegalStateException] { table.asOfWatermark }
-    assert(e.getMessage.contains("unreadable"))
-  }
-
-  test("compactFeed sweeps stale arrival claims under its writer-exclusive contract") {
-    val dir = tmpDir("morClaimSweep") + "/t"
+  test("frames planned before compactFeed read their rows after it") {
+    val dir = tmpDir("morPlannedFold") + "/t"
     val table = new EntityTable(spark, dir, TableLayout("t", Seq(FamilySpec("grp"))))
     table.bulkLoad(Seq((1L, "grp", "email", 10L, "a@x"))
       .toDF("entity_id", "family", "qualifier", "ts", "value"), numPartitions = 1)
@@ -493,44 +487,83 @@ class TableDmlSpec extends SparkSpec {
       table.appendChanges(changesDF(Seq(
         Dml.put(10L + i, "grp", "email", 20L, s"b$i@x"))))
     }
-    def claims() = Files.list(Paths.get(live(dir))).iterator().asScala
-      .map(_.getFileName.toString).filter(_.startsWith("_arrival_claim_")).toSet
-    assert(claims() == Set("_arrival_claim_1", "_arrival_claim_2", "_arrival_claim_3"))
+    // frames planned against the three batch segments, run after the fold
+    // replaced them: the folded segments stay until the next feed commit
+    val inFlight = Seq(table.cells, table.mostRecent())
+    val want = inFlight.map(_.collect().map(_.toString).sorted.toSeq)
+    assert(want.forall(_.size == 4), want)
     table.compactFeed()
-    assert(claims().isEmpty, s"stale claims survived the sweep: ${claims()}")
-    // sweeping never breaks the floor: the next append continues at 4
+    assert(table.changeFeedStats == ((1, 3L)))
+    inFlight.zip(want).foreach { case (df, w) =>
+      assert(df.collect().map(_.toString).sorted.toSeq == w,
+        "a frame planned before compactFeed lost rows")
+    }
+    // the fold uses up no ordinal: the next append continues at 4
     table.appendChanges(changesDF(Seq(Dml.put(20L, "grp", "email", 20L, "e@x"))))
     assert(table.pendingChanges.agg(max(col("arrival"))).head().getLong(0) == 4L)
-    // ordinal cuts reproduce across the sweep + fold
+    // ordinal cuts reproduce across the fold
     assert(table.cellsAsOfOrdinal(2L).count() == 3L)
+    // the next feed commit deleted the folded segments: two remain
+    assert(segmentDirs(dir) == namedSegments(dir).toSet &&
+      namedSegments(dir).size == 2, segmentDirs(dir))
   }
 
-  test("crash injection: failed commit rename leaves zero visible rows, no staging") {
+  test("compactFeed racing appendChanges loses no batch") {
+    val dir = tmpDir("morFoldRace") + "/t"
+    val table = new EntityTable(spark, dir, TableLayout("t", Seq(FamilySpec("grp"))))
+    table.bulkLoad(Seq((1L, "grp", "email", 10L, "a@x"))
+      .toDF("entity_id", "family", "qualifier", "ts", "value"), numPartitions = 1)
+    (1 to 2).foreach { i =>
+      table.appendChanges(changesDF(Seq(
+        Dml.put(10L + i, "grp", "email", 20L, s"b$i@x"))))
+    }
+    // the fold pins the feed, then an append commits before the fold does
+    val pinned = table.pin()
+    table.appendChanges(changesDF(Seq(Dml.put(13L, "grp", "email", 20L, "b3@x"))))
+    val e = intercept[IllegalStateException](table.compactFeedAt(pinned, 0))
+    assert(e.getMessage.contains("concurrent writer"), e.getMessage)
+    def stamps = table.pendingChanges.select("arrival").collect()
+      .map(_.getLong(0)).toSeq.sorted
+    assert(keys(table.cells).contains((13L, "grp", "email", 20L)))
+    assert(stamps == Seq(1L, 2L, 3L), s"stamps=$stamps")
+    // re-run against the new pin, the fold takes every batch
+    table.compactFeed()
+    assert(table.changeFeedStats == ((1, 3L)))
+    assert(keys(table.cells) == Set((1L, "grp", "email", 10L),
+      (11L, "grp", "email", 20L), (12L, "grp", "email", 20L),
+      (13L, "grp", "email", 20L)))
+    assert(stamps == Seq(1L, 2L, 3L), s"stamps=$stamps")
+  }
+
+  test("crash injection: a failed feed commit leaves only an unnamed segment") {
     val dir = tmpDir("morRenameFail") + "/t"
     val layout = TableLayout("t", Seq(FamilySpec("grp")))
     val table = new EntityTable(spark, dir, layout)
     table.bulkLoad(Seq((1L, "grp", "email", 10L, "a@x"))
       .toDF("entity_id", "family", "qualifier", "ts", "value"), numPartitions = 1)
-    // Occupy the feed path with a regular FILE: staging write succeeds,
-    // the commit rename into it cannot — the injected crash point between
-    // a written batch and its rename landing.
-    Files.write(Paths.get(live(dir), "_changes"), Array[Byte](1))
+    // Occupy the feed's manifest root with a regular FILE: the batch
+    // segment lands, the manifest commit cannot — the injected crash
+    // point between a written batch and its commit.
+    Files.createDirectories(Paths.get(live(dir), "_changes"))
+    Files.write(Paths.get(live(dir), "_changes", "_segments"), Array[Byte](1))
     val batch = changesDF(Seq(
       Dml.put(2L, "grp", "email", 20L, "b@x"),
       Dml.put(3L, "grp", "email", 20L, "c@x")))
       .repartitionByRange(2, $"entity_id")
     intercept[Exception](table.appendChanges(batch, numFiles = 0))
-    // nothing visible: no feed rows, merged view unchanged, staging gone
+    // nothing visible: no feed rows, merged view unchanged; what is left
+    // is one segment no manifest names
     assert(!table.hasPendingChanges)
     assert(keys(table.cells) == Set((1L, "grp", "email", 10L)))
-    val names = Files.list(Paths.get(live(dir))).iterator().asScala
-      .map(_.getFileName.toString).toSet
-    assert(!names.exists(_.startsWith("__changes_stage_")),
-      s"staging survived the failed rename: $names")
-    // clearing the obstruction restores normal service
-    Files.delete(Paths.get(live(dir), "_changes"))
+    val crashed = segmentDirs(dir)
+    assert(crashed.size == 1, s"segments after the failed commit: $crashed")
+    // clearing the obstruction restores normal service, and the crashed
+    // segment is the one orphan `index-gc` sweeps
+    Files.delete(Paths.get(live(dir), "_changes", "_segments"))
     table.appendChanges(batch, numFiles = 0)
     assert(table.changeFeedStats == ((2, 2L)))
+    assert(graft.sinks.SegmentStore.orphans(spark, s"${live(dir)}/_changes",
+      graceMs = 0L) == crashed.toSeq.map(s => s"batches/$s"))
   }
 
   test("merge-on-read: majorCompact folds the feed physically and empties it") {
@@ -601,9 +634,7 @@ class TableDmlSpec extends SparkSpec {
       while (fs.hasNext) {
         val p = fs.next()
         val n = p.getFileName.toString
-        // the _arrival_reserved ordinal marker (and its local-FS .crc
-        // shadow) is an INTENDED O(1) append artifact, not a base rewrite
-        if (!n.startsWith("_") && !n.contains("_arrival_reserved"))
+        if (!n.startsWith("_"))
           out += ((p.getFileName.toString, Files.getLastModifiedTime(p).toMillis))
       }
       out
@@ -1027,10 +1058,15 @@ class TableDmlSpec extends SparkSpec {
     }
   }
 
-  /** The recursive `_changes` feed, schema inferred. */
-  private def inferredFeed(path: String): org.apache.spark.sql.DataFrame =
-    spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"${live(path)}/_changes")
+  /** The feed by schema inference: the segments its manifest names (a
+    * recursive listing would hide their underscore names), or, with no
+    * manifest, the recursive listing of an external writer's feed. */
+  private def inferredFeed(path: String): org.apache.spark.sql.DataFrame = {
+    val feed = s"${live(path)}/_changes"
+    val named = namedSegments(path)
+    if (named.isEmpty) spark.read.option("recursiveFileLookup", "true").parquet(feed)
+    else spark.read.parquet(named.map(s => s"$feed/batches/$s"): _*)
+  }
 
   /** `mostRecent()` and `read()` (default request, no TTL) over a cell
     * set — the engine's aggregation formulas, so a reference built from

@@ -7,7 +7,7 @@ import graft.dml.Dml
 /** The four entity-table layouts — flat ungrouped, grouped (`lg=` file
   * sets), bucketed, grouped-bucketed — each bulk-loaded with the same
   * cells and left with a pending stamped change feed of two
-  * `_changes/batch_*` appends (the first written as two files). */
+  * appends (the first written as two files). */
 object TableFixtures {
 
   final case class Fixture(name: String, path: String, layout: TableLayout,
