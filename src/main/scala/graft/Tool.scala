@@ -170,8 +170,9 @@ object Tool {
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
       def childrenOf(p: String): Seq[String] = graft.sinks.SegmentStore
         .list(fs, p).filter(_.isDirectory).map(_.getPath.toString).toSeq.sorted
-      val segmented = Seq(base, s"$base/_changes")
-        .filter(graft.sinks.SegmentStore.isSegmented(spark, _))
+      val feed = s"$base/_changes"
+      val segmented = Seq(base, feed)
+        .filter(graft.sinks.SegmentStore.pinIfAny(spark, _).isDefined)
       val childRoots = segmented.map(d =>
         s"$d/${graft.sinks.SegmentStore.ManifestFile}") ++
         childrenOf(s"$path/_buckets")
@@ -187,9 +188,13 @@ object Tool {
       // a segment store's roots also hold crashed or CAS-losing
       // writers' `_seg_*` data dirs, which no manifest names — swept
       // after the manifest generations, under the same grace policy
-      // (--all, the no-writers window, ignores it)
-      val sweptSegments = segmented.flatMap(d => graft.sinks.SegmentStore
-        .sweepOrphans(spark, d, graceMs = if (all) 0L else grace))
+      // (--all, the no-writers window, ignores it). A feed's `batches`
+      // root is walked even when no manifest names it yet: a crashed
+      // first append left its segment there
+      val sweptSegments = Seq(base -> Nil, feed ->
+          Seq(graft.table.EntityTable.Batches)).flatMap { case (d, roots) =>
+        graft.sinks.SegmentStore.sweepOrphans(spark, d, if (all) 0L else grace,
+          roots) }
       val swept = sweptRoot ++ sweptChildren ++ sweptSegments
       swept.foreach(g => println(s"swept: $g"))
       val now = System.currentTimeMillis()

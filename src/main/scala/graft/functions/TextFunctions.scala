@@ -110,9 +110,6 @@ object TextFunctions {
     * leaves headroom for exact affine re-hashing in int64. */
   def hash28(c: Column): Column = md5Prefix(c, 7)
 
-  /** Portable 32-bit hash (for simhash bit sampling). */
-  def hash32(c: Column): Column = md5Prefix(c, 8)
-
   /** Portable 60-bit hash (first 15 hex md5 chars): wide enough to feed a
     * 60-bit simhash while staying exactly representable as signed int64 on
     * both engines (61+ bits would overflow DuckDB's ::BIGINT parse). */

@@ -92,9 +92,6 @@ object VectorFunctions {
     s"list_sum(list_transform(range(1, ${dim + 1}), i -> $a[i] * $b[i]))"
   def sqlInorm2(a: String, dim: Int): String =
     s"list_sum(list_transform(range(1, ${dim + 1}), i -> $a[i] * $a[i]))"
-  def sqlCosine(a: String, b: String, dim: Int): String =
-    s"CAST(${sqlIdot(a, b, dim)} AS DOUBLE) / " +
-      s"(sqrt(CAST(${sqlInorm2(a, dim)} AS DOUBLE)) * sqrt(CAST(${sqlInorm2(b, dim)} AS DOUBLE)))"
   def sqlSignBucket(v: String, bits: Int): String =
     (0 until bits).map { d =>
       s"(CASE WHEN $v[${d + 1}] > 0 THEN ${1L << d} ELSE 0 END)"

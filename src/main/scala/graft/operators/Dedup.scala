@@ -891,11 +891,6 @@ object Dedup {
     columnOf(graft.plans.SimhashOfHashes(expressionOf(hs), bits))
   }
 
-  /** 32-bit SimHash of a text column (convenience; prefer materializing the
-    * token hashes once when computing anything else alongside). */
-  def simhash32(text: Column): Column =
-    simhashNative(tokenHashes(text, nibbles = 8), 32)
-
   /** Default simhash geometry: 60-bit fingerprints in 5 bands of 12 bits.
     *
     * Why not round 3's 32-bit/4×8: each 8-bit band has only 256 buckets,
@@ -1159,7 +1154,7 @@ object Dedup {
   /** Persist both surfaces. The rollup derives from the chunks subtree,
     * so the chunks frame is persisted across the two write actions (the
     * [[graft.operators.Retrieval.saveBm25Index]] cache-then-derive
-    * pattern, one wave deep). */
+    * pattern). */
   def saveCdcArtifact(idx: CdcArtifact, path: String,
                       expected: ArtifactStore.Expect = None): Unit = {
     val c = OperatorCaches.register(idx.chunks.persist())

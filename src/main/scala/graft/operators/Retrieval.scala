@@ -5,7 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.sinks.{ArtifactStore, SegmentedIndex}
+import graft.sinks.{ArtifactStore, SegmentedIndex, ShardedCommit}
 
 /** A built BM25 inverted index as its four relational artifacts — all
   * integer-typed, so a parquet roundtrip is bit-lossless:
@@ -60,27 +60,22 @@ object Retrieval {
     *
     * Four writes are four ACTIONS: unpersisted, each would re-run the
     * corpus tokenize+aggregate scan (docfreq/stats re-derive from the
-    * postings/doclen subtrees). The writes run in two overlapped waves:
-    * first postings+doclen (their write jobs populate the caches as they
-    * run), then docfreq+stats — launched only after the base frames are
-    * fully materialized, so cache substitution is GUARANTEED (launching
-    * all four at once would let the derived jobs plan against a
-    * still-cold cache and re-run the corpus scan). Within each wave the
-    * independent write jobs overlap through driver-side futures (same
-    * pattern as the k-means training chains). */
+    * postings/doclen subtrees). So postings and doclen are persisted and
+    * the writes stage through [[ShardedCommit.stageAll]]: postings and
+    * doclen first, concurrently, their jobs filling the caches; docfreq
+    * and stats read those still-unfilled caches, so they stage in the
+    * next round against the filled ones instead of waiting on the
+    * filling jobs' block locks. */
   def saveBm25Index(index: Bm25Index, path: String,
                     expected: ArtifactStore.Expect = None): Unit = {
     val p = OperatorCaches.register(index.postings.persist())
     val dl = OperatorCaches.register(index.doclen.persist())
     ArtifactStore.publish(p.sparkSession, path, expected) { dir =>
-      def wave(frames: Seq[(String, DataFrame)]): Unit = {
-        Clustering.concurrentFrames(frames.map(_._2)) { (i, df) =>
-          df.write.mode("overwrite").parquet(s"$dir/${frames(i)._1}")
-        }
-        ()
-      }
-      wave(Seq("postings" -> p, "doclen" -> dl))
-      wave(Seq("docfreq" -> index.docfreq, "stats" -> index.stats))
+      ShardedCommit.stageAll(Seq("postings" -> p, "doclen" -> dl,
+          "docfreq" -> index.docfreq, "stats" -> index.stats).map {
+        case (name, df) => (name, df, (d: DataFrame) =>
+          d.write.mode("overwrite").parquet(s"$dir/$name"))
+      })
     }
   }
 
@@ -158,10 +153,7 @@ object Retrieval {
       Family("shards",
         n => pmod(xxhash64(col("term")), lit(n.toLong)).cast("int"), Seq(
           Surface("postings", Seq("term", "doc_id", "tf")),
-          // wave 1: docfreq derives from the postings' persisted lineage
-          // — staging it after the postings wave lets it substitute the
-          // freshly materialized cache
-          Surface("docfreq", Seq("term", "df"), wave = 1))),
+          Surface("docfreq", Seq("term", "df")))),
       Family("docshards", n => pmod(col("doc_id"), lit(n.toLong)).cast("int"),
         Seq(Surface("doclen", Seq("doc_id", "dl")))))
     override val singletons: Seq[Surface] =
@@ -174,9 +166,9 @@ object Retrieval {
       else s(surface)
 
     /** Persists the two corpus-derived bases: the postings/doclen
-      * stagings materialize the caches the docfreq and stats rollups
-      * then substitute instead of re-running the corpus scan
-      * ([[saveBm25Index]]'s wave economics). */
+      * stagings fill the caches the docfreq and stats rollups then read
+      * instead of re-running the corpus scan, staged a round later
+      * ([[saveBm25Index]]'s economics). */
     def surfacesOf(index: Bm25Index): Map[String, DataFrame] = Map(
       "postings" -> OperatorCaches.register(index.postings.persist()),
       "doclen" -> OperatorCaches.register(index.doclen.persist()),
@@ -194,7 +186,8 @@ object Retrieval {
       val d = buildBm25Index(deltaTerms)
       // persist the BASE surfaces: d.docfreq and d.stats derive from the
       // same tf/doclen subtrees, so cache substitution covers every
-      // consumer, including the wave-1 docfreq staging
+      // consumer; the routing collects fill both caches, so every
+      // surface then stages in one round
       OperatorCaches.register(d.postings.persist())
       OperatorCaches.register(d.doclen.persist())
       Write(Map("shards" -> d.postings, "docshards" -> d.doclen), s => Map(

@@ -256,9 +256,17 @@ object ArtifactStore {
              (write: String => Unit): Unit = {
     val loaded = expected.getOrElse(currentGen(spark, path))
     val gen = newGenDir(spark, path, loaded)
-    write(gen)
-    commitGen(spark, path, gen, loaded)
+    filling.add(new Path(gen).getName)
+    try { write(gen); commitGen(spark, path, gen, loaded) }
+    finally filling.remove(new Path(gen).getName)
   }
+
+  /** The generations this JVM's [[publish]] writers are filling, by
+    * (uuid-suffixed) name: no commit's retention deletes them, so a
+    * racing writer that commits first makes such a writer's commit fail
+    * on its compare-and-swap, not on a file retention deleted
+    * mid-write. A writer in another JVM gets no such guard. */
+  private val filling = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Create-exclusive test-and-set on the commit claim: true = this
     * writer holds it. Local paths go through `Files.createFile` (atomic
@@ -332,7 +340,8 @@ object ArtifactStore {
     * against the new version. Silent last-swap-wins is exactly the
     * data-loss mode this protocol exists to remove. Retention: every
     * generation but the new one and `expected` is swept, so exactly one
-    * displaced generation stays for in-flight readers. */
+    * displaced generation stays for in-flight readers, and so does any
+    * generation another [[publish]] of this JVM is still filling. */
   def commitGen(spark: SparkSession, path: String, genDir: String,
                 expected: Option[String]): Unit =
     commitGenAll(spark, path, Seq((path, genDir, expected)))
@@ -359,7 +368,8 @@ object ArtifactStore {
     *  3. only then do all pointers flip — each flip is one atomic
     *     rename of a few bytes, so the all-flips window is
     *     milliseconds of pure metadata (no corpus I/O interleaves);
-    *  4. per-root retention sweeps run last (non-semantic cleanup).
+    *  4. per-root retention sweeps run last (non-semantic cleanup),
+    *     sparing the generations [[publish]] writers still fill.
     *
     * If ANY precondition fails, every staged generation is deleted and
     * the call throws with the fold UNAPPLIED EVERYWHERE — re-run it.
@@ -398,12 +408,14 @@ object ArtifactStore {
       commits.foreach { case (root, genDir, _) =>
         writePointer(spark, root, new Path(genDir).getName)
       }
-      // Phase 3: per-root retention sweeps.
+      // Phase 3: per-root retention sweeps, sparing what this JVM's
+      // writers are still filling.
       commits.foreach { case (root, genDir, expected) =>
         val keep = Set(Some(new Path(genDir).getName), expected).flatten
         fs.listStatus(new Path(root)).foreach { s =>
           val n = s.getPath.getName
-          if (isGenName(n) && !keep(n)) fs.delete(s.getPath, true)
+          if (isGenName(n) && !keep(n) && !filling.contains(n))
+            fs.delete(s.getPath, true)
         }
       }
     }

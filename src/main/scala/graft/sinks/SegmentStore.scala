@@ -118,23 +118,22 @@ object SegmentStore {
     ArtifactStore.readText(spark, new Path(genDir, ManifestFile))
       .map(parseManifest(genDir, _))
 
-  /** Whether `dir` is a segmented artifact generation. */
-  def isSegmented(spark: SparkSession, dir: String): Boolean =
-    ArtifactStore.currentGen(spark, s"$dir/$ManifestFile").isDefined
-
   /** Pin generation `dir`'s manifest: one pointer read and one manifest
     * read. Fails loudly for a generation with no manifest pointer — one
     * written in the earlier per-shard-root layout, which is not read. */
-  def pin(spark: SparkSession, dir: String): Pinned = {
+  def pin(spark: SparkSession, dir: String): Pinned =
+    pinIfAny(spark, dir).getOrElse(throw new IllegalStateException(s"$dir " +
+      s"holds no segment manifest pointer: a segmented artifact written in " +
+      s"the per-shard-root layout is not read — rebuild it with index-build"))
+
+  /** [[pin]], None when `dir` has no manifest pointer (a change feed no
+    * append has committed to yet) — the same one pointer read. */
+  def pinIfAny(spark: SparkSession, dir: String): Option[Pinned] = {
     val root = s"$dir/$ManifestFile"
-    val loaded = ArtifactStore.currentGen(spark, root).getOrElse(
-      throw new IllegalStateException(s"$dir holds no segment manifest " +
-        s"($root/${ArtifactStore.PointerFile}): a segmented artifact " +
-        s"written in the per-shard-root layout is not read — rebuild it " +
-        s"with index-build"))
-    Pinned(dir, Some(loaded), readManifest(spark, s"$root/$loaded")
-      .getOrElse(throw new IllegalStateException(
-        s"$root/$loaded holds no segment manifest ($ManifestFile)")))
+    ArtifactStore.currentGen(spark, root).map(loaded => Pinned(dir,
+      Some(loaded), readManifest(spark, s"$root/$loaded").getOrElse(
+        throw new IllegalStateException(
+          s"$root/$loaded holds no segment manifest ($ManifestFile)"))))
   }
 
   /** The empty pin a save into the fresh generation `dir` commits on. */
@@ -154,11 +153,9 @@ object SegmentStore {
     val next = Manifest(p.manifest.next + 1L, p.manifest.roots ++ landed,
       landed.flatMap { case (key, segs) =>
         p.segments(key).filterNot(segs.contains).map(s => s"$key/$s") })
-    val gen = ArtifactStore.newGenDir(spark, p.root, p.loaded)
-    val fs = fsOf(spark, gen)
-    val out = fs.create(new Path(gen, ManifestFile), true)
-    try out.write(next.render.getBytes("UTF-8")) finally out.close()
-    ArtifactStore.commitGen(spark, p.root, gen, p.loaded)
+    ArtifactStore.publish(spark, p.root, Some(p.loaded))(gen =>
+      BulkSink.writeExtraFiles(spark, gen, Map(ManifestFile -> next.render)))
+    val fs = fsOf(spark, p.dir)
     p.manifest.retired.foreach(s => fs.delete(new Path(p.dir, s), true))
   }
 
@@ -166,9 +163,12 @@ object SegmentStore {
     * manifest generation names — a crashed or CAS-losing writer's
     * landed segments — sparing those modified within `graceMs` (a
     * writer between landing and committing; the
-    * [[ArtifactStore.sweep]] staging grace, applied to data). Lists the
+    * [[ArtifactStore.sweep]] staging grace, applied to data). Walks the
+    * roots some manifest names and the caller's `roots` (a store whose
+    * first commit crashed has no manifest to name them), listing the
     * manifest root and each root once. */
-  def orphans(spark: SparkSession, dir: String, graceMs: Long): Seq[String] = {
+  def orphans(spark: SparkSession, dir: String, graceMs: Long,
+              roots: Seq[String] = Nil): Seq[String] = {
     val fs = fsOf(spark, dir)
     val root = s"$dir/$ManifestFile"
     val manifests = list(fs, root).iterator.map(_.getPath.getName)
@@ -176,7 +176,7 @@ object SegmentStore {
       .flatMap(g => readManifest(spark, s"$root/$g")).toSeq
     val named = manifests.flatMap(_.named).toSet
     val now = System.currentTimeMillis()
-    manifests.flatMap(_.roots.keys).distinct.sorted.flatMap { key =>
+    (manifests.flatMap(_.roots.keys) ++ roots).distinct.sorted.flatMap { key =>
       list(fs, s"$dir/$key").iterator.map(_.getPath.getName)
         .filter(isSegName).map(s => s"$key/$s")
         .filterNot(named)
@@ -187,8 +187,8 @@ object SegmentStore {
   }
 
   /** Delete [[orphans]] (`index-gc`); returns the deleted names. */
-  def sweepOrphans(spark: SparkSession, dir: String,
-                   graceMs: Long): Seq[String] =
-    orphans(spark, dir, graceMs)
+  def sweepOrphans(spark: SparkSession, dir: String, graceMs: Long,
+                   roots: Seq[String] = Nil): Seq[String] =
+    orphans(spark, dir, graceMs, roots)
       .tapEach(s => fsOf(spark, dir).delete(new Path(dir, s), true))
 }

@@ -59,16 +59,15 @@ import org.apache.spark.sql.types.LongType
   */
 object SegmentedIndex {
 
-  /** One stored surface: its directory name, its columns in stored
-    * order, and its staging wave ([[ShardedCommit.Surface]]).
-    * `partition` names an integral column the surface is laid out by on
+  /** One stored surface: its directory name and its columns in stored
+    * order. `partition` names an integral column the surface is laid out by on
     * disk (`<surface>/<partition>=<v>/`, read back as a long), so a
     * scan filtered on it prunes directories. Such a surface is an
     * inverted list, and it also stores the artifact's attribute columns
     * — whatever its rows or a segment footer hold beyond `cols` —
     * between `cols` and `partition`, so a filtered serve prunes inside
     * the partitioned scan. */
-  final case class Surface(name: String, cols: Seq[String], wave: Int = 0,
+  final case class Surface(name: String, cols: Seq[String],
                            partition: Option[String] = None) {
     def stored(attrCols: Seq[String]): Seq[String] =
       cols ++ attrCols ++ partition
@@ -109,7 +108,8 @@ object SegmentedIndex {
     def surfacesOf(a: A): Map[String, DataFrame]
 
     /** The writes of the build-time root surfaces of `a` into
-      * generation `dir`, staged beside a save's first wave. */
+      * generation `dir`, staged beside a save's surfaces
+      * ([[ShardedCommit.stageAll]]). */
     def writeRoots(dir: String, a: A): Seq[(DataFrame, DataFrame => Unit)] =
       Nil
 
@@ -337,7 +337,7 @@ object SegmentedIndex {
         ShardedCommit.SegFamily(rs, f.surfaces.map { sp =>
           val df = stored(sp)
           ShardedCommit.Surface(sp.name, df.withColumn("shard", f.route(n)),
-            () => df.limit(0), sp.wave, sp.partition)
+            () => df.limit(0), sp.partition)
         }, mode)
       },
       s.singles.map(sp => stored(sp) -> sp.name), rootWrites)

@@ -2,6 +2,7 @@ package graft.sinks
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.PlanBridge
 
 /** How a sharded artifact's shard roots commit: the `_num_shards`
   * grid marker every sharded tier records, and the staged,
@@ -12,7 +13,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *  1. every surface stages as ONE `partitionBy("shard")` job — a
   *     cell-partitioned vector surface as one `partitionBy("shard",
   *     "c_id")` job — never a write per shard (S jobs of planning
-  *     overhead for one job's I/O);
+  *     overhead for one job's I/O). The staging jobs, the singleton
+  *     writes and a save's root writes all run concurrently, except
+  *     that a write reading a persisted frame whose cache is still
+  *     unfilled waits one round for the earlier write that fills it
+  *     ([[rounds]]);
   *  2. each shard's staged partition directories RENAME into that
   *     shard's fresh segment — surfaces sharing a family swap TOGETHER
   *     inside one segment (a row in one surface whose sibling rows are
@@ -32,14 +37,9 @@ object ShardedCommit {
     * routing each row; `empty` supplies the schema-bearing zero-row
     * frame written where a shard has no staged rows; `partition` lays
     * each shard's rows out by that column too (`partitionBy("shard",
-    * partition)`). `wave` orders the
-    * staging: surfaces stage concurrently WITHIN a wave, waves run in
-    * ascending order — a surface derived from another surface's
-    * persisted lineage stages in a later wave so its job plans against
-    * the already-materialized cache instead of recomputing the shared
-    * ancestor (the saveBm25Index wave pattern, generalized). */
+    * partition)`). */
   final case class Surface(name: String, df: DataFrame,
-                           empty: () => DataFrame, wave: Int = 0,
+                           empty: () => DataFrame,
                            partition: Option[String] = None)
 
   /** The shard-grid size every sharded save records inside its
@@ -54,10 +54,7 @@ object ShardedCommit {
   def writeNumShards(spark: SparkSession, base: String,
                      numShards: Int): Unit = {
     require(numShards > 0, s"numShards must be positive: $numShards")
-    val p = new Path(base, NumShardsFile)
-    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .create(p, true)
-    try out.write(numShards.toString.getBytes("UTF-8")) finally out.close()
+    BulkSink.writeExtraFiles(spark, base, Map(NumShardsFile -> numShards.toString))
   }
 
   /** The grid size of the sharded artifact generation `base`, None when
@@ -85,41 +82,42 @@ object ShardedCommit {
   final case class SegFamily(shards: Seq[SegmentedIndex.Root],
                              surfaces: Seq[Surface], mode: SegMode)
 
-  /** Stage every surface concurrently: the per-surface staging writes
-    * are independent jobs, so overlapping them collapses their driver
-    * scheduling / output-commit latencies (guide §2.6 — measured round
-    * 18: the sequential form serialized 2-4 write jobs per commit).
-    * `extras` are bounded independent writes (the singleton rollup
-    * segments) folded into the FIRST wave instead of serializing after
-    * the renames. Lambda isolation via
-    * [[graft.operators.Clustering.concurrentFrames]] keeps
-    * concurrently-evaluating plans from sharing `NamedLambdaVariable`
-    * slots. */
-  private def stageAll(surfs: Seq[(Surface, String)],
-                       extras: Seq[(DataFrame, DataFrame => Unit)]): Unit = {
-    val byWave = surfs.groupBy(_._1.wave).toSeq.sortBy(_._1)
-    if (byWave.isEmpty) {
-      graft.operators.Clustering.concurrentFrames(extras.map(_._1)) {
-        (i, df) => extras(i)._2(df)
-      }
-      return
-    }
-    byWave.zipWithIndex.foreach { case ((_, ws), wi) =>
-      val ex = if (wi == 0) extras else Nil
-      graft.operators.Clustering.concurrentFrames(
-        ws.map(_._1.df) ++ ex.map(_._1)) { (i, df) =>
-        if (i < ws.size) {
-          val keys = "shard" +: ws(i)._1.partition.toSeq
-          // explicit count: a bare keyed repartition lets AQE coalesce
-          // the staging to one serial-writer task (Clustering.writePar)
-          df.repartition(graft.operators.Clustering.writePar(df),
-              keys.map(org.apache.spark.sql.functions.col): _*)
-            .write.mode("overwrite").partitionBy(keys: _*).parquet(ws(i)._2)
-        } else ex(i - ws.size)._2(df)
-      }
-      ()
-    }
+  /** The rounds `frames` stage in, as indices into `frames`. A frame
+    * that reads a persisted frame whose cache is not yet filled stages
+    * one round after the first earlier frame reading that cache — whose
+    * job fills it — so it plans against the filled cache instead of
+    * waiting on the filling job's block locks; every other frame stages
+    * in the first round. Derived from the plans at call time, so one
+    * write stages in one round when an earlier action (a routing
+    * collect) already filled the cache it reads, and in two when its
+    * cache is still pending (a save's postings, a removal's kept rows). */
+  private[sinks] def rounds(frames: Seq[DataFrame]): Seq[Seq[Int]] = {
+    val pending = frames.map(PlanBridge.pendingCaches)
+    val round = pending.foldLeft(Vector.empty[Int]) { (rs, p) =>
+      rs :+ p.flatMap(c => rs.indices.find(pending(_).exists(_ eq c)))
+        .map(rs(_) + 1).maxOption.getOrElse(0) }
+    frames.indices.groupBy(round).toSeq.sortBy(_._1).map(_._2)
   }
+
+  /** Run `writes` — each a name, a frame and the action that writes it —
+    * round by round ([[rounds]]), each round's frames concurrently: the
+    * writes are independent jobs, so overlapping them collapses their
+    * driver scheduling and output-commit latencies (guide §2.6).
+    * [[graft.operators.Clustering.concurrentFrames]] isolates the
+    * frames' lambda variables, and each job's description names its
+    * write and round. */
+  private[graft] def stageAll(
+      writes: Seq[(String, DataFrame, DataFrame => Unit)]): Unit =
+    rounds(writes.map(_._2)).zipWithIndex.foreach { case (ws, r) =>
+      graft.operators.Clustering.concurrentFrames(ws.map(writes(_)._2)) {
+        (i, df) =>
+          val (name, _, write) = writes(ws(i))
+          val sc = df.sparkSession.sparkContext
+          sc.setJobDescription(
+            s"${sc.getLocalProperty("spark.job.description")} $name round $r")
+          write(df)
+      }
+    }
 
   /** Stage every family's surfaces (one `partitionBy("shard")` job per
     * surface), land each shard's staged partitions in a fresh IMMUTABLE
@@ -130,8 +128,8 @@ object ShardedCommit {
     * rows, never the shard's prior surface, and commit metadata is one
     * file and one flip whatever the number of roots. `singletons` are
     * bounded rollup roots (e.g. BM25's 1-row stats), each written whole
-    * as a segment of its own root during the first staging wave, as are
-    * `rootWrites` (a save's build-time root surfaces). */
+    * as a segment of its own root; they and `rootWrites` (a save's
+    * build-time root surfaces) stage beside the surfaces ([[stageAll]]). */
   def commitSegmented(spark: SparkSession, pinned: SegmentStore.Pinned,
                       families: Seq[SegFamily],
                       singletons: Seq[(DataFrame, String)] = Nil,
@@ -149,10 +147,18 @@ object ShardedCommit {
         }
       }
     try {
-      stageAll(staged.flatMap(_._2), singletons.map { case (df, key) =>
-        df -> ((d: DataFrame) =>
-          d.coalesce(1).write.mode("overwrite").parquet(s"$path/$key/$seg/$key"))
-      } ++ rootWrites)
+      stageAll(staged.flatMap(_._2).map { case (surf, stage) =>
+        (surf.name, surf.df, (df: DataFrame) => {
+          val keys = "shard" +: surf.partition.toSeq
+          // explicit count: a bare keyed repartition lets AQE coalesce
+          // the staging to one serial-writer task (Clustering.writePar)
+          df.repartition(graft.operators.Clustering.writePar(df),
+              keys.map(org.apache.spark.sql.functions.col): _*)
+            .write.mode("overwrite").partitionBy(keys: _*).parquet(stage)
+        })
+      } ++ singletons.map { case (df, key) => (key, df, (d: DataFrame) =>
+        d.coalesce(1).write.mode("overwrite").parquet(s"$path/$key/$seg/$key"))
+      } ++ rootWrites.map { case (df, write) => ("root", df, write) })
       val landed: Seq[(String, Seq[String])] = staged.flatMap { case (fam, surfs) =>
         val present = surfs.map { case (_, stage) =>
           SegmentStore.list(fs, stage).map(_.getPath.getName).toSet }

@@ -142,7 +142,7 @@ final case class DataRequest(columns: Seq[(String, String)] = Seq.empty,
   * occupancy it reports.
   */
 final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) {
-  import EntityTable.{Feed, Pin}
+  import EntityTable.{Batches, Feed, Pin}
 
   /** The directory holding the LIVE table content. Generational tables
     * (anything written by [[bulkLoad]]/[[majorCompact]]/[[applyChanges]]
@@ -163,15 +163,11 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     Pin(loaded, dir, feedIn(dir))
   }
 
-  /** The one segment root of a feed. */
-  private val Batches = "batches"
-
   private def feedIn(dir: String): Feed = {
     val root = s"$dir/_changes"
-    if (SegmentStore.isSegmented(spark, root)) {
-      val p = SegmentStore.pin(spark, root)
-      Feed(root, Some(p), p.segments(Batches).map(s => s"$root/$Batches/$s"))
-    } else Feed(root, None, if (dataFiles(Seq(root)).isEmpty) Nil else Seq(root))
+    SegmentStore.pinIfAny(spark, root).fold(Feed(root, None,
+        if (dataFiles(Seq(root)).isEmpty) Nil else Seq(root)))(p =>
+      Feed(root, Some(p), p.segments(Batches).map(s => s"$root/$Batches/$s")))
   }
 
   /** A feed segment's arrival ordinal (`_seg_<arrival>_<uuid>`). */
@@ -897,9 +893,9 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
   /** Commit `segs` as the segment list of feed pin `m`: true once they
     * are live. A commit that throws after another feed commit moved the
     * pointer returns false — refused by the CAS, or failed mid-write
-    * because that commit's retention sweep deleted this one's staged
-    * manifest generation — unless its own flip landed and only a cleanup
-    * step after it failed. */
+    * because a writer in another JVM swept this one's staged manifest
+    * generation with its retention — unless its own flip landed and only
+    * a cleanup step after it failed. */
   private def commitFeed(m: SegmentStore.Pinned, segs: Seq[String]): Boolean =
     try { SegmentStore.commit(spark, m, Seq(Batches -> segs)); true }
     catch { case scala.util.control.NonFatal(_)
@@ -1301,6 +1297,9 @@ object EntityTable {
     * another's feed. */
   private[table] final case class Pin(loaded: Option[String], dir: String,
                                       feed: Feed)
+
+  /** The one segment root of a feed (`<gen>/_changes/batches`). */
+  private[graft] val Batches = "batches"
 
   /** A generation's change feed, pinned. `root` is `<gen>/_changes`, a
     * [[SegmentStore]] directory: `manifest` is its pin, and `paths` the

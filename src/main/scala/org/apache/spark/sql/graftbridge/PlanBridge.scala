@@ -3,6 +3,7 @@ package org.apache.spark.sql.graftbridge
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.NamedLambdaVariable
 import org.apache.spark.sql.classic.{Dataset, SparkSession}
+import org.apache.spark.sql.execution.columnar.{CachedRDDBuilder, InMemoryRelation}
 
 /** Structural defense against the concurrent plan-sharing hazard.
   *
@@ -24,6 +25,9 @@ import org.apache.spark.sql.classic.{Dataset, SparkSession}
   * ExprIds are preserved — the copy canonicalizes identically, so cached
   * (persisted) frames still substitute their cache. [[sharedLambdaVars]]
   * is the matching assertion surface for tests.
+  *
+  * [[pendingCaches]] tells concurrent writers which of them would read a
+  * cache another one is still filling (`ShardedCommit.rounds`).
   */
 object PlanBridge {
 
@@ -80,4 +84,17 @@ object PlanBridge {
     }
     Dataset.ofRows(df.sparkSession.asInstanceOf[SparkSession], fresh)
   }
+
+  /** The caches the frame's plan reads that are not yet filled: the
+    * builders of the persisted relations substituted into its plan whose
+    * column buffers are not all materialized. Every relation substituted
+    * for one persisted frame shares its builder, so callers compare the
+    * results by reference. The substitution runs on a copy of the
+    * analyzed plan, so the frame's own execution is left unplanned. */
+  def pendingCaches(df: DataFrame): Seq[CachedRDDBuilder] =
+    df.sparkSession.asInstanceOf[SparkSession].sharedState.cacheManager
+      .useCachedData(df.queryExecution.analyzed.clone()).collect {
+      case r: InMemoryRelation if !r.cacheBuilder.isCachedColumnBuffersLoaded =>
+        r.cacheBuilder
+    }
 }

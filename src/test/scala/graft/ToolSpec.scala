@@ -2884,6 +2884,17 @@ class ToolSpec extends SparkSpec {
     assert(named.forall(s => fs.exists(
       new org.apache.hadoop.fs.Path(s"$feed/batches/$s"))), named)
     assert(table.cells.count() == cells, "the table must read every cell")
+    // a crashed FIRST append: no feed manifest exists to name its root
+    val first = s"${tmpDir("gcfeed1")}/t"
+    new graft.table.EntityTable(spark, first, TableFixtures.flatLayout)
+      .bulkLoad(TableFixtures.baseCells(spark), numPartitions = 2)
+    val crashed = s"${live(first)}/_changes/batches/" +
+      graft.sinks.SegmentStore.segName(1L)
+    Seq((1L, "x")).toDF("a", "b").write.parquet(crashed)
+    assert(Tool.run(spark, Array("index-gc", s"--path=$first",
+      "--grace-ms=0")).counters("swept_segments") == 1L)
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(crashed)),
+      s"orphan $crashed must be swept")
   }
 
   test("CLI index-rebuild on the compressed sharded tiers: corpus re-supply re-fits in place; guards refuse a missing or stale corpus") {

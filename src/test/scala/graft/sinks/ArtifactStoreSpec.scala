@@ -282,6 +282,26 @@ class ArtifactStoreSpec extends SparkSpec {
     assert(ArtifactStore.isGenName("gen_3_ab12cd34"), "pre-rename spelling must still parse")
   }
 
+  test("a commit's retention spares a racing writer's staged generation; that writer's own commit then fails as a concurrent writer") {
+    val path = s"${tmpDir("artrace")}/art"
+    val fs = new org.apache.hadoop.fs.Path(path)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def rows(v: String) = Seq((1L, v)).toDF("id", "v")
+    ArtifactStore.publish(spark, path)(rows("a").write.parquet(_))
+    val e = intercept[IllegalStateException](
+      ArtifactStore.publish(spark, path) { staged =>
+        rows("slow").write.parquet(s"$staged/part1")
+        // another writer commits while this one is still staging
+        ArtifactStore.publish(spark, path)(rows("b").write.parquet(_))
+        assert(fs.exists(new org.apache.hadoop.fs.Path(staged)),
+          "the other writer's retention deleted this writer's staging")
+        rows("slow").write.parquet(s"$staged/part2")
+      })
+    assert(e.getMessage.contains("concurrent writer"), e.getMessage)
+    assert(spark.read.parquet(ArtifactStore.resolve(spark, path))
+      .as[(Long, String)].collect().toSeq == Seq((1L, "b")))
+  }
+
   test("commitGen fails loudly (never flips the pointer) when a concurrent index-gc swept its staged generation") {
     val path = s"${tmpDir("artswept")}/art"
     def writeGen(loaded: Option[String]): String = {

@@ -1,7 +1,10 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.graftbridge.ListenerDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.udf
 
 import graft.{IndexTool, SparkSpec, Tool}
 import graft.operators.{Bpe, Clustering, Retrieval}
@@ -168,5 +171,79 @@ class SegmentManifestSpec extends SparkSpec {
         SegmentedIndex.load(spark, tier, path))
       assert(e.getMessage.contains("index-build"), s"$tpe: ${e.getMessage}")
     }
+  }
+
+  /** `n` rows whose lineage counts every row it computes in `evals`. */
+  private def counted(n: Int, evals: org.apache.spark.util.LongAccumulator)
+      : DataFrame = {
+    val tick = udf((x: Long) => { evals.add(1L); x })
+    spark.range(n).select(tick($"id").as("id"))
+  }
+
+  test("staging rounds: two writes reading one unfilled cache stage in two rounds and compute its lineage once; once it is filled, or with no cache, they stage in one") {
+    val evals = spark.sparkContext.longAccumulator("rounds")
+    val base = counted(40, evals).persist()
+    val a = base.select(($"id" * 2).as("v"))
+    val b = base.groupBy(($"id" % 3).as("k")).count()
+    try {
+      assert(ShardedCommit.rounds(Seq(a, b)) == Seq(Seq(0), Seq(1)))
+      val dir = tmpDir("rounds")
+      ShardedCommit.stageAll(Seq("a" -> a, "b" -> b).map { case (n, df) =>
+        (n, df, (d: DataFrame) => d.write.parquet(s"$dir/$n")) })
+      assert(evals.value == 40L, "the shared lineage ran more than once per row")
+      assert(spark.read.parquet(s"$dir/b").count() == 3L)
+    } finally base.unpersist(blocking = true)
+    val filled = counted(40, evals).persist()
+    try {
+      filled.count()
+      assert(ShardedCommit.rounds(Seq(filled.select(($"id" * 2).as("v")),
+        filled.groupBy(($"id" % 3).as("k")).count())) == Seq(Seq(0, 1)))
+    } finally filled.unpersist(blocking = true)
+    assert(ShardedCommit.rounds(Seq(spark.range(5).toDF(),
+      spark.range(3).select(($"id" + 1).as("v")), spark.range(2).toDF()))
+      == Seq(Seq(0, 1, 2)))
+  }
+
+  test("bm25-sharded docfreq stages in the first round of a compaction and an update, and in the second of a save and a removal, where it reads an unfilled postings cache") {
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.job.description")))
+          .foreach(descriptions.add)
+    }
+    val Docfreq = """.* docfreq round (\d+)""".r
+    /** The rounds `body`'s docfreq staging jobs ran in. */
+    def docfreqRounds(body: => Any): Set[Int] = {
+      ListenerDrain(spark.sparkContext)
+      descriptions.clear()
+      body
+      ListenerDrain(spark.sparkContext)
+      descriptions.toArray(Array.empty[String]).collect {
+        case Docfreq(r) => r.toInt }.toSet
+    }
+    val tpe = "bm25-sharded"
+    val flags = Map("shards" -> "4")
+    val path = s"${tmpDir("bm25rounds")}/idx"
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      // a corpus no other build read: its postings are not cached yet
+      val fresh = docs(0L -> "staging rounds corpus one", 1L -> "rounds two",
+        2L -> "corpus three four")
+      assert(docfreqRounds(IndexTool.build(spark, tpe, fresh, path,
+        flags)) == Set(1), "save")
+      assert(docfreqRounds(IndexTool.update(spark, tpe,
+        docs(10L -> "spark join fresh words"), path, flags)) == Set(0),
+        "append-mode update")
+      assert(docfreqRounds(IndexTool.compact(spark, tpe, path, flags))
+        == Set(0), "compaction")
+      assert(docfreqRounds(IndexTool.remove(spark, tpe,
+        Seq(1L, 10L).toDF("doc_id"), path, flags)) == Set(1), "removal")
+      // a merge-mode update's routing collect fills the delta's postings
+      // cache too, so its docfreq reads no pending cache either
+      assert(docfreqRounds(IndexTool.update(spark, tpe,
+        docs(11L -> "row batch merge words"), path,
+        flags + ("mode" -> "merge"))) == Set(0), "merge-mode update")
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }
