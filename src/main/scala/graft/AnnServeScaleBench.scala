@@ -3,6 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.sinks.SegmentedIndex
+
 /** Dev microbenchmark for the FIXED-INDEX serve slope of the IVF-flat
   * tier: the per-round bench queries (q156/q157) time build+save+serve
   * together, so the corpus-tier ratio is dominated by the n·k coarse
@@ -58,11 +60,11 @@ object AnnServeScaleBench {
     val path = s"/tmp/annservescale_idx_${System.nanoTime()}"
 
     val tBuild = System.nanoTime()
-    Clustering.saveIvfFlatIndex(
-      Clustering.buildIvfFlatIndex(emb, "vec_id", "embedding", k), path)
+    SegmentedIndex.save(spark, Clustering.IvfFlatSharded,
+      Clustering.buildIvfFlatIndex(emb, "vec_id", "embedding", k), path, 1)
     val buildSec = (System.nanoTime() - tBuild) / 1e9
 
-    val idx = Clustering.loadIvfFlatIndex(spark, path)
+    val idx = SegmentedIndex.load(spark, Clustering.IvfFlatSharded, path)
     val cents = Similarity.centroidSetFromLanes(idx.lanes)
     val (maxQueryId, nprobe, topK) = (20L, 2, 3)
 
@@ -87,10 +89,10 @@ object AnnServeScaleBench {
     val pqPath = s"/tmp/annservescale_pq_${System.nanoTime()}"
     // reuse the ivfflat fit (buildIvfPqIndexWith): one coarse quantizer
     // serves both artifacts, and both recall rows probe IDENTICAL cells
-    Clustering.saveIvfPqIndex(
+    SegmentedIndex.save(spark, Clustering.IvfPqSharded,
       Clustering.buildIvfPqIndexWith(emb, "vec_id", "embedding",
-        dim = 64, m = 8, k = 16, iters = 2, coarseLanes = idx.lanes), pqPath)
-    val pqIdx = Clustering.loadIvfPqIndex(spark, pqPath)
+        dim = 64, m = 8, k = 16, iters = 2, coarseLanes = idx.lanes), pqPath, 1)
+    val pqIdx = SegmentedIndex.load(spark, Clustering.IvfPqSharded, pqPath)
     val adc = timeMin2(() =>
       Clustering.serveIvfPq(pqIdx, emb, "vec_id", "embedding",
           dim = 64, m = 8, maxQueryId, nprobe, topK)
@@ -102,10 +104,10 @@ object AnnServeScaleBench {
     // the 8-byte scaled floats of a raw flat scan)
     val sqPath = s"/tmp/annservescale_sq_${System.nanoTime()}"
     val tSq = System.nanoTime()
-    Clustering.saveSqIndex(
-      Clustering.buildSqIndex(emb, "vec_id", "embedding", dim = 64), sqPath)
+    SegmentedIndex.save(spark, Clustering.SqTier,
+      Clustering.buildSqIndex(emb, "vec_id", "embedding", dim = 64), sqPath, 1)
     val sqBuildSec = (System.nanoTime() - tSq) / 1e9
-    val sqIdx = Clustering.loadSqIndex(spark, sqPath)
+    val sqIdx = SegmentedIndex.load(spark, Clustering.SqTier, sqPath)
     val sqServe = timeMin2(() =>
       Clustering.serveSq(sqIdx, emb, "vec_id", "embedding", maxQueryId,
           topK)
@@ -116,10 +118,10 @@ object AnnServeScaleBench {
     // sq row above grows with n — the same contrast ivfflat:legacy has,
     // one compression tier down
     val ivfSqPath = s"/tmp/annservescale_ivfsq_${System.nanoTime()}"
-    Clustering.saveIvfSqIndex(
+    SegmentedIndex.save(spark, Clustering.IvfSqTier,
       Clustering.buildIvfSqIndexWith(emb, "vec_id", "embedding", dim = 64,
-        idx.lanes), ivfSqPath)
-    val ivfSqIdx = Clustering.loadIvfSqIndex(spark, ivfSqPath)
+        idx.lanes), ivfSqPath, 1)
+    val ivfSqIdx = SegmentedIndex.load(spark, Clustering.IvfSqTier, ivfSqPath)
     val ivfSqServe = timeMin2(() =>
       Clustering.serveIvfSq(ivfSqIdx, emb, "vec_id", "embedding",
           maxQueryId, nprobe, topK)
@@ -129,11 +131,10 @@ object AnnServeScaleBench {
     // cost nprobe× the raw tier's broadcast, but serve I/O is the same
     // pruned cells — also expected ~flat across the doubling
     val pqrPath = s"/tmp/annservescale_pqr_${System.nanoTime()}"
-    Clustering.saveIvfPqrIndex(
+    SegmentedIndex.save(spark, Clustering.IvfPqrSharded,
       Clustering.buildIvfPqrIndexWith(emb, "vec_id", "embedding",
-        dim = 64, m = 8, k = 16, iters = 2, coarseLanes = idx.lanes),
-      pqrPath)
-    val pqrIdx = Clustering.loadIvfPqrIndex(spark, pqrPath)
+        dim = 64, m = 8, k = 16, iters = 2, coarseLanes = idx.lanes), pqrPath, 1)
+    val pqrIdx = SegmentedIndex.load(spark, Clustering.IvfPqrSharded, pqrPath)
     val pqrServe = timeMin2(() =>
       Clustering.serveIvfPqr(pqrIdx, emb, "vec_id", "embedding",
           dim = 64, m = 8, maxQueryId, nprobe, topK)

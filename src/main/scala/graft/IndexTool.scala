@@ -4,7 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
-import graft.operators.{Bpe, Clustering, Dedup, Retrieval, Similarity, UnigramLm, WordPiece}
+import graft.operators.{Bpe, Clustering, Dedup, OperatorCaches, Retrieval,
+  Similarity, UnigramLm, WordPiece}
 import graft.sinks.{ArtifactStore, SegmentStore, SegmentedIndex, ShardedCommit}
 
 /** The build-once/serve-many index tier behind the CLI facade: one
@@ -69,6 +70,14 @@ import graft.sinks.{ArtifactStore, SegmentStore, SegmentedIndex, ShardedCommit}
   *    serve = the input treated as a DELTA batch pruned against the
   *    loaded index (`semDedupDeltaHier`; the q139 ingestion loop).
   *
+  * Every vector type above (`ivfflat`, `ivfpq`, `ivfpqr`, `pq`, `sq`,
+  * `ivfsq`, `imi`) persists as its [[SegmentedIndex]] tier with ONE
+  * shard (`Clustering.IvfFlatSharded`, `IvfPqSharded`, `IvfPqrSharded`,
+  * `PqTier`, `SqTier`, `IvfSqTier`, `ImiTier`): its update, remove and
+  * compaction are the segmented ones (`--mode` applies), and its
+  * `-sharded` twin, where there is one, is the same tier on
+  * `--shards` roots.
+  *
   * Every serve whose corpus side lives in the artifact — the four
   * delta-against-index screens (`lsh`, `semdedup`, `decontam`, `cdc`),
   * the three tokenizer encode tiers (`bpe`, `unigram`, `wordpiece`),
@@ -103,38 +112,61 @@ object IndexTool {
       delta: (DataFrame, Map[String, String]) => SegmentedIndex.Fold,
       removal: (DataFrame, Map[String, String]) => SegmentedIndex.Fold)
 
-  /** The segmented tiers: `index-compact` and their branches of
-    * `index-update`, `index-remove`, `index-describe` and the
-    * re-ingestion guard are lookups here. */
-  private val Segmented: Map[String, SegmentedType] = Map(
-    "bm25-sharded" -> SegmentedType(Retrieval.Bm25Sharded, docs = true,
-      (in, f) => Retrieval.Bm25Sharded.delta(terms(docsOf(in, f))),
-      (ids, _) => Retrieval.Bm25Sharded.removal(ids)),
-    "lsh-sharded" -> SegmentedType(Dedup.LshSharded, docs = true,
-      (in, f) => Dedup.LshSharded.delta(
-        shingled(docsOf(in, f), intFlag(f, "shingle-n", 3)),
-        intFlag(f, "num-hashes", 28), intFlag(f, "bands", 4)),
-      (ids, f) => Dedup.LshSharded.removal(ids,
-        intFlag(f, "num-hashes", 28), intFlag(f, "bands", 4))),
-    "cdc-sharded" -> SegmentedType(Dedup.CdcSharded, docs = true,
-      (in, f) => Dedup.CdcSharded.delta(docsOf(in, f),
-        intFlag(f, "avg-mask", 32)),
-      (ids, _) => Dedup.CdcSharded.removal(ids)),
-    "semdedup-sharded" -> SegmentedType(Clustering.SemSharded, docs = false,
-      (in, f) => Clustering.SemSharded.delta(embOf(in, f)),
-      (ids, _) => Clustering.SemSharded.removal(ids)),
-    "ivfflat-sharded" -> SegmentedType(Clustering.IvfFlatSharded,
-      docs = false, (in, f) => Clustering.IvfFlatSharded.delta(
-        embAllOf(in, f), "vec_id", "embedding"),
-      (ids, _) => Clustering.IvfFlatSharded.removal(ids)),
-    "ivfpq-sharded" -> SegmentedType(Clustering.IvfPqSharded, docs = false,
-      (in, f) => Clustering.IvfPqSharded.delta(embAllOf(in, f), "vec_id",
-        "embedding", intFlag(f, "dim", 64), intFlag(f, "m", 8)),
-      (ids, _) => Clustering.IvfPqSharded.removal(ids)),
-    "ivfpqr-sharded" -> SegmentedType(Clustering.IvfPqrSharded, docs = false,
-      (in, f) => Clustering.IvfPqrSharded.delta(embAllOf(in, f), "vec_id",
-        "embedding", intFlag(f, "dim", 64), intFlag(f, "m", 8)),
-      (ids, _) => Clustering.IvfPqrSharded.removal(ids)))
+  /** A vector tier behind the CLI: removal by `n_id`, `delta` encoding
+    * the input against the artifact's frozen codebooks. */
+  private def vector(tier: Clustering.VectorSharded[_])(
+      delta: (DataFrame, Map[String, String]) => SegmentedIndex.Fold)
+      : SegmentedType =
+    SegmentedType(tier, docs = false, delta, (ids, _) => tier.removal(ids))
+
+  /** The segmented tiers — every `-sharded` type, and every persisted
+    * vector type, whose unsharded form is its tier at S = 1:
+    * `index-compact` and their branches of `index-update`,
+    * `index-remove`, `index-describe` and the re-ingestion guard are
+    * lookups here. */
+  private val Segmented: Map[String, SegmentedType] = {
+    def pq(tier: Clustering.PqSharded[_]) = vector(tier)((in, f) =>
+      tier.delta(embAllOf(in, f), "vec_id", "embedding",
+        intFlag(f, "dim", 64), intFlag(f, "m", 8)))
+    val ivfFlat = vector(Clustering.IvfFlatSharded)((in, f) =>
+      Clustering.IvfFlatSharded.delta(embAllOf(in, f), "vec_id", "embedding"))
+    val ivfPq = pq(Clustering.IvfPqSharded)
+    val ivfPqr = pq(Clustering.IvfPqrSharded)
+    Map(
+      "bm25-sharded" -> SegmentedType(Retrieval.Bm25Sharded, docs = true,
+        (in, f) => Retrieval.Bm25Sharded.delta(terms(docsOf(in, f))),
+        (ids, _) => Retrieval.Bm25Sharded.removal(ids)),
+      "lsh-sharded" -> SegmentedType(Dedup.LshSharded, docs = true,
+        (in, f) => Dedup.LshSharded.delta(
+          shingled(docsOf(in, f), intFlag(f, "shingle-n", 3)),
+          intFlag(f, "num-hashes", 28), intFlag(f, "bands", 4)),
+        (ids, f) => Dedup.LshSharded.removal(ids,
+          intFlag(f, "num-hashes", 28), intFlag(f, "bands", 4))),
+      "cdc-sharded" -> SegmentedType(Dedup.CdcSharded, docs = true,
+        (in, f) => Dedup.CdcSharded.delta(docsOf(in, f),
+          intFlag(f, "avg-mask", 32)),
+        (ids, _) => Dedup.CdcSharded.removal(ids)),
+      "semdedup-sharded" -> SegmentedType(Clustering.SemSharded, docs = false,
+        (in, f) => Clustering.SemSharded.delta(embOf(in, f)),
+        (ids, _) => Clustering.SemSharded.removal(ids)),
+      "ivfflat" -> ivfFlat, "ivfflat-sharded" -> ivfFlat,
+      "ivfpq" -> ivfPq, "ivfpq-sharded" -> ivfPq,
+      "ivfpqr" -> ivfPqr, "ivfpqr-sharded" -> ivfPqr,
+      "pq" -> vector(Clustering.PqTier)((in, f) => Clustering.PqTier.delta(
+        embOf(in, f), "vec_id", "embedding", intFlag(f, "dim", 64),
+        intFlag(f, "m", 8))),
+      "sq" -> vector(Clustering.SqTier)((in, f) =>
+        Clustering.SqTier.delta(embOf(in, f), "vec_id", "embedding")),
+      "ivfsq" -> vector(Clustering.IvfSqTier)((in, f) =>
+        Clustering.IvfSqTier.delta(embOf(in, f), "vec_id", "embedding")),
+      "imi" -> vector(Clustering.ImiTier)((in, f) =>
+        Clustering.ImiTier.delta(embOf(in, f), "vec_id", "embedding")))
+  }
+
+  /** The shard count a save of `tpe` uses: `--shards` (default 4) for a
+    * `-sharded` type, 1 for the unsharded types. */
+  private def shardsOf(tpe: String, flags: Map[String, String]): Int =
+    if (tpe.endsWith("-sharded")) intFlag(flags, "shards", 4) else 1
 
   /** A tier's artifact at `path` from either layout: the segmented type
     * through [[SegmentedIndex.load]], the flat one through `flat`. */
@@ -143,25 +175,21 @@ object IndexTool {
     if (Segmented.contains(tpe)) SegmentedIndex.load(spark, tier, path)
     else flat
 
-  /** Save `a` in the layout `tpe` names: segmented with `--shards`
-    * (default 4) roots, committed against `expected`, or flat through
-    * `flat`. */
+  /** Save `a` in the layout `tpe` names: segmented on [[shardsOf]]
+    * roots, committed against `expected`, or flat through `flat`. */
   private def saveTier[A](spark: SparkSession, tpe: String,
                           tier: SegmentedIndex.Tier[A], a: A, path: String,
                           flags: Map[String, String],
                           expected: ArtifactStore.Expect = None)(
                           flat: => Unit): Unit =
     if (Segmented.contains(tpe)) SegmentedIndex.save(spark, tier, a, path,
-      intFlag(flags, "shards", 4), expected)
+      shardsOf(tpe, flags), expected)
     else flat
 
-  /** The artifact at `path` in whichever layout it holds — segmented
-    * when its live generation carries the `_num_shards` marker, else
-    * flat through `flat`. For flags that name "an ivfflat/ivfpq/bm25
-    * artifact" without a type of their own (`--rerank-from`, the hybrid
-    * `--path`/`--dense-path`), so those composites work against either
-    * layout — at 100 TB the raw-vector rerank source IS the sharded
-    * artifact. */
+  /** The bm25 artifact at `path` in whichever layout it holds —
+    * segmented when its live generation carries the `_num_shards`
+    * marker, else flat through `flat`. For the hybrid `--path`, which
+    * names "a bm25 artifact" without a type of its own. */
   private def loadAuto[A](spark: SparkSession, path: String,
                           tier: SegmentedIndex.Tier[A])(flat: => A): A =
     if (ShardedCommit.shardCount(spark, ArtifactStore.resolve(spark, path))
@@ -227,7 +255,7 @@ object IndexTool {
     * fails loudly instead of silently clobbering it. */
   def build(spark: SparkSession, tpe: String, input: DataFrame,
             path: String, flags: Map[String, String]): Unit =
-    build(spark, tpe, input, path, flags, None)
+    OperatorCaches.scoped(build(spark, tpe, input, path, flags, None))
 
   /** [[build]] committing against `expected` (a rebuild's pinned
     * generation — see [[ArtifactStore.Expect]]). */
@@ -235,6 +263,9 @@ object IndexTool {
                     path: String, flags: Map[String, String],
                     expected: ArtifactStore.Expect): Unit = {
     def num(k: String, dflt: Int): Int = flags.get(k).map(_.toInt).getOrElse(dflt)
+    def saveVector[A](tier: SegmentedIndex.Tier[A], idx: A): Unit =
+      SegmentedIndex.save(spark, tier, idx, path, shardsOf(tpe, flags),
+        expected)
     tpe match {
       case "hybrid" => throw new IllegalArgumentException(
         "--type=hybrid is a SERVE-time composite (reciprocal-rank fusion " +
@@ -258,61 +289,54 @@ object IndexTool {
         // --attr-cols=a,b materializes metadata columns IN the postings
         // for filtered serves (--filter-col/--filter-val); the sharded
         // layout splits the postings into --shards roots (n_id mod S)
-        val idx = Clustering.buildIvfFlatIndex(
+        saveVector(Clustering.IvfFlatSharded, Clustering.buildIvfFlatIndex(
           pqEmbOf(input, flags), "vec_id", "embedding",
           num("centroids", 64), num("iters", Similarity.IvfCoarseIters),
-          attrCols = attrColsOf(flags))
-        saveTier(spark, tpe, Clustering.IvfFlatSharded, idx, path, flags,
-          expected)(Clustering.saveIvfFlatIndex(idx, path, expected))
+          attrCols = attrColsOf(flags)))
       case "ivfpq" | "ivfpq-sharded" =>
         // the composed compressed index: coarse codebook +
         // cell-partitioned lists + PQ codes/codebooks, no raw vectors.
         // --attr-cols materializes metadata in the CELLS surface for
         // filtered ADC serves (--filter-col/--filter-val)
-        val idx = Clustering.buildIvfPqIndex(
+        saveVector(Clustering.IvfPqSharded, Clustering.buildIvfPqIndex(
           pqEmbOf(input, flags), "vec_id", "embedding",
           num("dim", 64), num("m", 8), num("k", 16), num("iters", 2),
-          num("centroids", 64), attrCols = attrColsOf(flags))
-        saveTier(spark, tpe, Clustering.IvfPqSharded, idx, path, flags,
-          expected)(Clustering.saveIvfPqIndex(idx, path, expected))
+          num("centroids", 64), attrCols = attrColsOf(flags)))
       case "ivfpqr" | "ivfpqr-sharded" =>
         // residual-encoded IVFPQ (the production Faiss IndexIVFPQ): PQ
         // quantizes v − centroid(cell), so the codebooks spend their
         // resolution on within-cell geometry — the fix for raw-vector
         // ADC's measured in-cluster recall collapse. --attr-cols ride
         // the cells surface for the filtered residual-ADC serve
-        val idx = Clustering.buildIvfPqrIndex(
+        saveVector(Clustering.IvfPqrSharded, Clustering.buildIvfPqrIndex(
           pqEmbOf(input, flags), "vec_id", "embedding",
           num("dim", 64), num("m", 8), num("k", 16), num("iters", 2),
-          num("centroids", 64), attrCols = attrColsOf(flags))
-        saveTier(spark, tpe, Clustering.IvfPqrSharded, idx, path, flags,
-          expected)(Clustering.saveIvfPqrIndex(idx, path, expected))
+          num("centroids", 64), attrCols = attrColsOf(flags)))
       case "imi" =>
         // inverted MULTI-index: two half-space codebooks whose product
         // is the cell grid — fit cost n·(kA+kB) for kA·kB cells, the
         // past-the-ladder-cap coarse quantizer (Babenko & Lempitsky)
-        Clustering.saveImiIndex(Clustering.buildImiIndex(
+        saveVector(Clustering.ImiTier, Clustering.buildImiIndex(
           embOf(input, flags), "vec_id", "embedding", num("dim", 64),
           num("half-centroids-a", 8), num("half-centroids-b", 8),
-          num("iters", Similarity.IvfCoarseIters)), path)
+          num("iters", Similarity.IvfCoarseIters)))
       case "pq" =>
-        Clustering.savePqIndex(Clustering.pqFit(embOf(input, flags),
+        saveVector(Clustering.PqTier, Clustering.pqFit(embOf(input, flags),
           "vec_id", "embedding", num("dim", 64), num("m", 8),
-          num("k", 16), num("iters", 2)), path)
+          num("k", 16), num("iters", 2)))
       case "sq" =>
         // trained 8-bit scalar quantizer: per-dim (lo, hi) bounds +
         // 1-byte-per-lane codes — the codebook-light compression tier
-        Clustering.saveSqIndex(Clustering.buildSqIndex(embOf(input, flags),
-          "vec_id", "embedding", num("dim", 64)), path)
+        saveVector(Clustering.SqTier, Clustering.buildSqIndex(
+          embOf(input, flags), "vec_id", "embedding", num("dim", 64)))
       case "ivfsq" =>
         // composed IVF × SQ8 (IndexIVFScalarQuantizer): inverted lists
         // of 1-byte-per-lane codes — sublinear serve whose per-lane
         // ranking survives cluster interiors where m-subspace ADC
         // saturates
-        Clustering.saveIvfSqIndex(Clustering.buildIvfSqIndex(
+        saveVector(Clustering.IvfSqTier, Clustering.buildIvfSqIndex(
           embOf(input, flags), "vec_id", "embedding", num("dim", 64),
-          num("centroids", 64), num("iters", Similarity.IvfCoarseIters)),
-          path)
+          num("centroids", 64), num("iters", Similarity.IvfCoarseIters)))
       case "bpe" =>
         val (merges, _) = Bpe.trainAuto(
           Bpe.wordFreq(Bpe.docWords(docsOf(input, flags), "doc_id", "text")),
@@ -395,8 +419,9 @@ object IndexTool {
       "ivfpqr", "ivfpqr-sharded")
 
   /** Unsharded tier → its sharded twin (the per-shard rewrite-unit
-    * layout). Drives the whole-surface rewrite gate in [[update]] and
-    * the refusal text that names the migration. */
+    * layout). Drives the whole-surface rewrite gate in [[update]] — a
+    * flat doc tier's update, or a merge-mode update of a vector tier's
+    * one shard — and the refusal text that names the migration. */
   val ShardedTwin: Map[String, String] = Map(
     "lsh" -> "lsh-sharded", "cdc" -> "cdc-sharded",
     "bm25" -> "bm25-sharded", "semdedup" -> "semdedup-sharded",
@@ -436,69 +461,46 @@ object IndexTool {
     * `doc_id` for doc-typed tiers (lsh/bm25/cdc), `vec_id` for vector
     * tiers. */
   def remove(spark: SparkSession, tpe: String, input: DataFrame,
-             path: String, flags: Map[String, String]): Unit = {
-    require(RemoveTypes(tpe),
-      s"index-remove supports --type=${RemoveTypes.toSeq.sorted.mkString("|")} " +
-        s"only (got '$tpe')")
-    def num(k: String, dflt: Int): Int = flags.get(k).map(_.toInt).getOrElse(dflt)
-    def docIds: DataFrame = input.select(
-      col(flags.getOrElse("id-col", "doc_id")).cast(LongType).as("doc_id"))
-    def vecIds: DataFrame = input.select(
-      col(flags.getOrElse("id-col", "vec_id")).cast(LongType).as("n_id"))
-    Segmented.get(tpe) match {
-      case Some(seg) =>
-        val touched = SegmentedIndex.remove(spark, path, seg.removal(
-          input.select(col(flags.getOrElse("id-col",
-            if (seg.docs) "doc_id" else "vec_id")).cast(LongType)
-            .as(seg.tier.ids._2)), flags))
-        println(s"removed from shards: ${touched.mkString(", ")}")
-        return
-      case None =>
+             path: String, flags: Map[String, String]): Unit =
+    OperatorCaches.scoped {
+      require(RemoveTypes(tpe),
+        s"index-remove supports --type=${RemoveTypes.toSeq.sorted.mkString("|")} " +
+          s"only (got '$tpe')")
+      def num(k: String, dflt: Int): Int = flags.get(k).map(_.toInt).getOrElse(dflt)
+      def ids(dflt: String, as: String): DataFrame = input.select(
+        col(flags.getOrElse("id-col", dflt)).cast(LongType).as(as))
+      Segmented.get(tpe) match {
+        case Some(seg) =>
+          val touched = SegmentedIndex.remove(spark, path, seg.removal(
+            ids(if (seg.docs) "doc_id" else "vec_id", seg.tier.ids._2), flags))
+          println(s"removed from shards: ${touched.mkString(", ")}")
+        case None =>
+          // Pin the generation this remove folds onto: loads plan against
+          // `base`, and the commit CAS refuses if the pointer moved
+          // meanwhile (a racing update/remove) — fail loudly, never drop
+          // a deletion.
+          val (_, loaded, base) = ArtifactStore.pinGen(spark, path)
+          val expected = Some(loaded)
+          tpe match {
+            case "lsh" =>
+              Dedup.saveLshIndex(Dedup.removeFromLshIndex(
+                Dedup.loadLshIndex(spark, base), ids("doc_id", "id"),
+                num("num-hashes", 28), num("bands", 4)), path, expected)
+            case "bm25" =>
+              Retrieval.saveBm25Index(Retrieval.removeFromBm25Index(
+                Retrieval.loadBm25Index(spark, base), ids("doc_id", "doc_id")),
+                path, expected)
+            case "cdc" =>
+              Dedup.saveCdcArtifact(Dedup.removeFromCdcArtifact(
+                Dedup.loadCdcArtifact(spark, base), ids("doc_id", "doc_id")),
+                path, expected)
+            case "semdedup" =>
+              Clustering.saveSemIndex(Clustering.removeFromSemIndex(
+                Clustering.loadSemIndex(spark, base), ids("vec_id", "vid")),
+                path, expected)
+          }
+      }
     }
-    // Pin the generation this remove folds onto: loads plan against
-    // `base`, and the commit CAS refuses if the pointer moved meanwhile
-    // (a racing update/remove) — fail loudly, never drop a deletion.
-    val (_, loaded, base) = ArtifactStore.pinGen(spark, path)
-    val expected = Some(loaded)
-    tpe match {
-      case "lsh" =>
-        Dedup.saveLshIndex(Dedup.removeFromLshIndex(
-          Dedup.loadLshIndex(spark, base),
-          docIds.select(col("doc_id").as("id")),
-          num("num-hashes", 28), num("bands", 4)), path, expected)
-      case "bm25" =>
-        Retrieval.saveBm25Index(Retrieval.removeFromBm25Index(
-          Retrieval.loadBm25Index(spark, base), docIds), path, expected)
-      case "cdc" =>
-        Dedup.saveCdcArtifact(Dedup.removeFromCdcArtifact(
-          Dedup.loadCdcArtifact(spark, base), docIds), path, expected)
-      case "ivfflat" =>
-        Clustering.saveIvfFlatIndex(Clustering.removeFromIvfFlatIndex(
-          Clustering.loadIvfFlatIndex(spark, base), vecIds), path, expected)
-      case "ivfpq" =>
-        Clustering.saveIvfPqIndex(Clustering.removeFromIvfPqIndex(
-          Clustering.loadIvfPqIndex(spark, base), vecIds), path, expected)
-      case "pq" =>
-        Clustering.savePqIndex(Clustering.removeFromPqIndex(
-          Clustering.loadPqIndex(spark, base), vecIds), path, expected)
-      case "semdedup" =>
-        Clustering.saveSemIndex(Clustering.removeFromSemIndex(
-          Clustering.loadSemIndex(spark, base),
-          vecIds.select(col("n_id").as("vid"))), path, expected)
-      case "imi" =>
-        Clustering.saveImiIndex(Clustering.removeFromImiIndex(
-          Clustering.loadImiIndex(spark, base), vecIds), path, expected)
-      case "sq" =>
-        Clustering.saveSqIndex(Clustering.removeFromSqIndex(
-          Clustering.loadSqIndex(spark, base), vecIds), path, expected)
-      case "ivfsq" =>
-        Clustering.saveIvfSqIndex(Clustering.removeFromIvfSqIndex(
-          Clustering.loadIvfSqIndex(spark, base), vecIds), path, expected)
-      case "ivfpqr" =>
-        Clustering.saveIvfPqrIndex(Clustering.removeFromIvfPqrIndex(
-          Clustering.loadIvfPqrIndex(spark, base), vecIds), path, expected)
-    }
-  }
 
   /** The SEGMENTED tiers `index-compact` folds back to one segment per
     * shard root — the read-amplification reset after a run of
@@ -514,8 +516,8 @@ object IndexTool {
       s"index-compact supports --type=${CompactTypes.toSeq.sorted.mkString("|")} " +
         s"only (got '$tpe'): the other types keep one flat generation, " +
         s"with no segments to fold")
-    val (before, after) =
-      SegmentedIndex.compact(spark, Segmented(tpe).tier, path)
+    val (before, after) = OperatorCaches.scoped(
+      SegmentedIndex.compact(spark, Segmented(tpe).tier, path))
     println(s"compacted: $before -> $after live segments")
     Map("segments_before" -> before, "segments_after" -> after)
   }
@@ -536,7 +538,12 @@ object IndexTool {
 
   def rebuild(spark: SparkSession, tpe: String, path: String,
               flags: Map[String, String],
-              input: Option[DataFrame] = None): Map[String, Long] = {
+              input: Option[DataFrame] = None): Map[String, Long] =
+    OperatorCaches.scoped(retrain(spark, tpe, path, flags, input))
+
+  private def retrain(spark: SparkSession, tpe: String, path: String,
+                      flags: Map[String, String],
+                      input: Option[DataFrame]): Map[String, Long] = {
     require(RebuildTypes(tpe),
       s"index-rebuild supports --type=${RebuildTypes.toSeq.sorted.mkString("|")} " +
         s"only (got '$tpe'); the remaining compressed tiers (ivfpq|ivfpqr|" +
@@ -627,7 +634,7 @@ object IndexTool {
     if (tpe == "imi") {
       // both half-codebooks retrain from the postings' exact scaled
       // vector halves — the same drift repair, two-level
-      val idx = Clustering.loadImiIndex(spark, base)
+      val idx = SegmentedIndex.load(spark, Clustering.ImiTier, base)
       val skew = Clustering.postingsOccupancySkew(idx.postings)
       val minSkew = flags.get("min-skew").map(_.toDouble).getOrElse(0.0)
       require(skew >= minSkew || flags.get("force").contains("true"),
@@ -638,16 +645,16 @@ object IndexTool {
       val kB = flags.get("half-centroids-b").map(_.toInt).getOrElse(idx.kB)
       val rebuilt = Clustering.rebuildImiIndex(idx, kA, kB,
         num("iters", Similarity.IvfCoarseIters))
-      Clustering.saveImiIndex(rebuilt, path, expected)
+      SegmentedIndex.save(spark, Clustering.ImiTier, rebuilt, path,
+        ShardedCommit.numShards(spark, base), expected)
       return Map("skew_x100_before" -> (skew * 100).toLong,
         "half_centroids_a" -> kA.toLong, "half_centroids_b" -> kB.toLong)
     }
-    // the sharded artifact rebuilds from the UNION of its shards'
-    // postings (exact scaled vectors, same as the unsharded load) and
-    // re-persists as a fresh sharded layout — drift accumulates on
-    // exactly this long-lived artifact, so it must be repairable
-    val idx = loadTier(spark, tpe, base, Clustering.IvfFlatSharded)(
-      Clustering.loadIvfFlatIndex(spark, base))
+    // the artifact rebuilds from the UNION of its shards' postings
+    // (exact scaled vectors) and re-persists on its own grid — drift
+    // accumulates on exactly this long-lived artifact, so it must be
+    // repairable
+    val idx = SegmentedIndex.load(spark, Clustering.IvfFlatSharded, base)
     val skew = Clustering.postingsOccupancySkew(idx.postings)
     // describe-driven trigger: refuse a retrain the occupancy does not
     // justify (a full k-means over the corpus is the expensive step a
@@ -667,11 +674,10 @@ object IndexTool {
       idx.lanes.select(col("cluster")).distinct().count().toInt)
     val rebuilt = Clustering.rebuildIvfFlatIndex(idx,
       centroids, num("iters", Similarity.IvfCoarseIters))
-    // a sharded rebuild commits a fresh artifact generation holding a
-    // complete sharded layout on the live grid — in-flight serves keep
-    // the displaced generation's whole shard tree
-    if (tpe == "ivfflat") Clustering.saveIvfFlatIndex(rebuilt, path, expected)
-    else SegmentedIndex.save(spark, Clustering.IvfFlatSharded, rebuilt, path,
+    // the rebuild commits a fresh artifact generation holding a
+    // complete layout on the live grid — in-flight serves keep the
+    // displaced generation's whole shard tree
+    SegmentedIndex.save(spark, Clustering.IvfFlatSharded, rebuilt, path,
       ShardedCommit.numShards(spark, base), expected)
     Map("skew_x100_before" -> (skew * 100).toLong,
       "centroids" -> centroids.toLong)
@@ -690,22 +696,8 @@ object IndexTool {
       .select(col("doc_id").as("id"))
     case "bm25" => Retrieval.loadBm25Index(spark, base).doclen
       .select(col("doc_id").as("id"))
-    case "ivfflat" => Clustering.loadIvfFlatIndex(spark, base).postings
-      .select(col("n_id").as("id"))
     case "semdedup" => Clustering.loadSemIndex(spark, base).assign
       .select(col("vid").as("id"))
-    case "pq" => Clustering.loadPqIndex(spark, base).codes
-      .select(col("n_id").as("id"))
-    case "ivfpq" => Clustering.loadIvfPqIndex(spark, base).codes
-      .select(col("n_id").as("id"))
-    case "imi" => Clustering.loadImiIndex(spark, base).postings
-      .select(col("n_id").as("id"))
-    case "sq" => Clustering.loadSqIndex(spark, base).codes
-      .select(col("n_id").as("id"))
-    case "ivfsq" => Clustering.loadIvfSqIndex(spark, base).codes
-      .select(col("n_id").as("id"))
-    case "ivfpqr" => Clustering.loadIvfPqrIndex(spark, base).cells
-      .select(col("n_id").as("id"))
   }
 
   /** `index-update`: load the artifact at `path`, fold the delta batch
@@ -729,7 +721,11 @@ object IndexTool {
     * (one column-pruned scan; `--skip-disjoint-check=true` waives it
     * when the scheduler already guarantees disjointness). */
   def update(spark: SparkSession, tpe: String, input: DataFrame,
-             path: String, flags: Map[String, String]): Unit = {
+             path: String, flags: Map[String, String]): Unit =
+    OperatorCaches.scoped(fold(spark, tpe, input, path, flags))
+
+  private def fold(spark: SparkSession, tpe: String, input: DataFrame,
+                   path: String, flags: Map[String, String]): Unit = {
     require(UpdateTypes(tpe),
       s"index-update supports --type=${UpdateTypes.toSeq.sorted.mkString("|")} " +
         s"only (got '$tpe'); globally-fitted artifacts (ivf|bpe|" +
@@ -757,37 +753,32 @@ object IndexTool {
           s"(index-remove) or pass --skip-disjoint-check=true if the " +
           s"scheduler guarantees disjoint deltas")
     }
-    // --mode for every sharded tier: `append` (each touched shard gains
+    // --mode for every segmented tier: `append` (each touched shard gains
     // one delta-sized immutable segment; the O(delta) write the 100 TB
     // cadence needs) or `merge` (whole-shard rewrite — the compacting
     // write). Unset, the tier's default applies: append for the doc and
     // dedup tiers, merge for the vector tiers, whose appended segments
-    // each add a scan branch to every serve. Flat tiers ignore it.
+    // each add a scan branch to every serve. The flat doc tiers (lsh,
+    // cdc, bm25, semdedup) ignore it.
     val appendMode = flags.get("mode").map {
       case "append" => true
       case "merge" => false
       case other => throw new IllegalArgumentException(
         s"--mode=$other: expected append|merge")
     }
-    Segmented.get(tpe) match {
-      case Some(seg) =>
-        val fold = seg.delta(input, flags)
-        val touched = SegmentedIndex.update(spark, path, fold,
-          appendMode.getOrElse(fold.tier.appends))
-        println(s"updated shards: ${touched.mkString(", ")}")
-        return
-      case None =>
-    }
-    // Whole-surface rewrite gate: every UNSHARDED fold below re-persists
-    // the entire corpus-sized surface per delta — exact, but the
-    // scale-killer class the sharded layouts eliminate (at 100 TB a
-    // daily crawl would rewrite the whole index). Past the bound,
-    // refuse loudly naming the sharded plan instead of letting a cron
-    // trip into a whole-corpus rewrite unknowingly — the --max-flat-rows
-    // serve-gate economics on the write path. The measure is the id
-    // surface (one column-pruned scan, a corpus-proportional proxy for
-    // the rewrite volume).
-    ShardedTwin.get(tpe).foreach { twin =>
+    val seg = Segmented.get(tpe)
+    val append = seg.exists(s => appendMode.getOrElse(s.tier.appends))
+    // Whole-surface rewrite gate: every unsharded fold but an append
+    // re-persists the entire corpus-sized surface per delta (a flat doc
+    // tier's whole artifact, or the one shard of a vector tier at
+    // S = 1) — exact, but the scale-killer class the sharded layouts
+    // eliminate (at 100 TB a daily crawl would rewrite the whole index).
+    // Past the bound, refuse loudly naming the O(delta) plans instead of
+    // letting a cron trip into a whole-corpus rewrite unknowingly — the
+    // --max-flat-rows serve-gate economics on the write path. The
+    // measure is the id surface (one column-pruned scan, a
+    // corpus-proportional proxy for the rewrite volume).
+    ShardedTwin.get(tpe).filterNot(_ => append).foreach { twin =>
       val bound = flags.get("max-rewrite-rows").map(_.toLong)
         .getOrElse(RewriteGateRows)
       val rows = existingIds(spark, tpe, base).count()
@@ -796,10 +787,16 @@ object IndexTool {
           s"this tier's update RE-PERSISTS THE WHOLE SURFACE per delta — " +
           s"above the $bound-row gate that is a corpus-sized rewrite for " +
           s"every crawl batch. Rebuild as --type=$twin (same serves, " +
-          s"per-shard rewrite units) or raise --max-rewrite-rows=N " +
-          s"deliberately for a one-off")
+          s"per-shard rewrite units)" +
+          (if (seg.isDefined) ", update with --mode=append (one " +
+            "delta-sized segment per update)" else "") +
+          s" or raise --max-rewrite-rows=N deliberately for a one-off")
     }
     tpe match {
+      case _ if seg.isDefined =>
+        val touched = SegmentedIndex.update(spark, path,
+          seg.get.delta(input, flags), append)
+        println(s"updated shards: ${touched.mkString(", ")}")
       case "lsh" =>
         Dedup.saveLshIndex(Dedup.updateLshIndex(
           Dedup.loadLshIndex(spark, base),
@@ -813,53 +810,10 @@ object IndexTool {
         Retrieval.saveBm25Index(Retrieval.updateBm25Index(
           Retrieval.loadBm25Index(spark, base),
           terms(docsOf(input, flags))), path, expected)
-      case "ivfflat" =>
-        // a filtered-capable artifact carries attribute columns — the
-        // delta must supply the same ones (loud select error otherwise)
-        val idx0 = Clustering.loadIvfFlatIndex(spark, base)
-        val attrs = idx0.postings.columns.toSeq
-          .filterNot(Set("n_id", "nv", "nn", "c_id"))
-        val deltaIn = input.select(
-          col(flags.getOrElse("id-col", "vec_id")).cast(LongType)
-              .as("vec_id") +:
-            col(flags.getOrElse("vec-col", "embedding")).as("embedding") +:
-            attrs.map(col): _*)
-        Clustering.saveIvfFlatIndex(Clustering.updateIvfFlatIndex(
-          idx0, deltaIn, "vec_id", "embedding"), path, expected)
       case "semdedup" =>
         Clustering.saveSemIndex(Clustering.updateSemIndex(
           Clustering.loadSemIndex(spark, base),
           embOf(input, flags), "vec_id", "embedding"), path, expected)
-      case "pq" =>
-        Clustering.savePqIndex(Clustering.updatePqIndex(
-          Clustering.loadPqIndex(spark, base),
-          embOf(input, flags), "vec_id", "embedding",
-          num("dim", 64), num("m", 8)), path, expected)
-      case "ivfpq" =>
-        // embAllOf: an attr-carrying artifact's fold selects the
-        // artifact's attribute columns FROM the delta — embOf would
-        // strip them and fail the update
-        Clustering.saveIvfPqIndex(Clustering.updateIvfPqIndex(
-          Clustering.loadIvfPqIndex(spark, base),
-          embAllOf(input, flags), "vec_id", "embedding",
-          num("dim", 64), num("m", 8)), path, expected)
-      case "imi" =>
-        Clustering.saveImiIndex(Clustering.updateImiIndex(
-          Clustering.loadImiIndex(spark, base),
-          embOf(input, flags), "vec_id", "embedding"), path, expected)
-      case "sq" =>
-        Clustering.saveSqIndex(Clustering.updateSqIndex(
-          Clustering.loadSqIndex(spark, base),
-          embOf(input, flags), "vec_id", "embedding"), path, expected)
-      case "ivfsq" =>
-        Clustering.saveIvfSqIndex(Clustering.updateIvfSqIndex(
-          Clustering.loadIvfSqIndex(spark, base),
-          embOf(input, flags), "vec_id", "embedding"), path, expected)
-      case "ivfpqr" =>
-        Clustering.saveIvfPqrIndex(Clustering.updateIvfPqrIndex(
-          Clustering.loadIvfPqrIndex(spark, base),
-          embAllOf(input, flags), "vec_id", "embedding",
-          num("dim", 64), num("m", 8)), path, expected)
     }
   }
 
@@ -1027,8 +981,7 @@ object IndexTool {
     }
     flags.get("rerank-from") match {
       case Some(flatPath) =>
-        val postings = loadAuto(spark, flatPath, Clustering.IvfFlatSharded)(
-          Clustering.loadIvfFlatIndex(spark, flatPath)).postings
+        val postings = SegmentedIndex.load(spark, Clustering.IvfFlatSharded, flatPath).postings
         // parity on the UNFILTERED id sets: a --filter-col restriction
         // is per-serve intent, not artifact drift
         parityPrecheck(flags, "the two-stage rerank serve",
@@ -1086,8 +1039,7 @@ object IndexTool {
     }
     flags.get("rerank-from") match {
       case Some(flatPath) =>
-        val postings = loadAuto(spark, flatPath, Clustering.IvfFlatSharded)(
-          Clustering.loadIvfFlatIndex(spark, flatPath)).postings
+        val postings = SegmentedIndex.load(spark, Clustering.IvfFlatSharded, flatPath).postings
         parityPrecheck(flags, "the two-stage residual rerank serve",
           "the residual-ADC artifact (--path)",
           idx0.cells.select(col("n_id").as("id")),
@@ -1134,8 +1086,7 @@ object IndexTool {
     val denseLeg: DataFrame => DataFrame =
       flags.getOrElse("dense-type", "ivfflat") match {
         case "ivfflat" =>
-          val flatIdx = loadAuto(spark, densePath, Clustering.IvfFlatSharded)(
-            Clustering.loadIvfFlatIndex(spark, densePath))
+          val flatIdx = SegmentedIndex.load(spark, Clustering.IvfFlatSharded, densePath)
           parityPrecheck(flags, "the hybrid serve",
             "the bm25 artifact (--path)",
             bmIdx.doclen.select(col("doc_id").as("id")),
@@ -1159,8 +1110,7 @@ object IndexTool {
               "vec_id", "embedding", maxQ, num("nprobe", 2), pool)
           }
         case "ivfpq" =>
-          val pqIdx0 = loadAuto(spark, densePath, Clustering.IvfPqSharded)(
-            Clustering.loadIvfPqIndex(spark, densePath))
+          val pqIdx0 = SegmentedIndex.load(spark, Clustering.IvfPqSharded, densePath)
           val pqIdx = flags.get("filter-col") match {
             case Some(c) =>
               require(pqIdx0.cells.columns.contains(c),
@@ -1180,8 +1130,7 @@ object IndexTool {
               "--dense-type=ivfpq needs --rerank-from=<ivfflat artifact> " +
                 "supplying raw vectors for the exact rerank of the ADC " +
                 "shortlist (build both tiers from one coarse fit)"))
-          val postings = loadAuto(spark, rerankFrom, Clustering.IvfFlatSharded)(
-            Clustering.loadIvfFlatIndex(spark, rerankFrom)).postings
+          val postings = SegmentedIndex.load(spark, Clustering.IvfFlatSharded, rerankFrom).postings
           parityPrecheck(flags, "the hybrid serve",
             "the bm25 artifact (--path)",
             bmIdx.doclen.select(col("doc_id").as("id")),
@@ -1252,14 +1201,13 @@ object IndexTool {
         // query still gets k MATCHING neighbors. The sharded load is the
         // same index (equal postings sets), each segment's scan pruning
         // its own probed cells
-        serveFlatMaybeFiltered(loadTier(spark, tpe, path,
-              Clustering.IvfFlatSharded)(Clustering.loadIvfFlatIndex(spark, path)),
+        serveFlatMaybeFiltered(SegmentedIndex.load(spark, Clustering.IvfFlatSharded, path),
             embOf(input, flags), flags)
           .orderBy(col("q_id"), col("rank"))
       case "imi" =>
         // same serve economics over the two-level codebook's composed
         // cell grid (probes rank composed centroids, scan prunes)
-        Clustering.serveImi(Clustering.loadImiIndex(spark, path),
+        Clustering.serveImi(SegmentedIndex.load(spark, Clustering.ImiTier, path),
             embOf(input, flags), "vec_id", "embedding",
             num("max-query-id", 20).toLong, num("nprobe", 2), num("topk", 3))
           .orderBy(col("q_id"), col("rank"))
@@ -1270,12 +1218,11 @@ object IndexTool {
         // fetched from the named ivfflat postings (q162's shape).
         // --filter-col/--filter-val pre-filter the cells surface inside
         // the probed scan (serveIvfPqFiltered's contract)
-        servePqMaybeRerank(spark, loadTier(spark, tpe, path,
-              Clustering.IvfPqSharded)(Clustering.loadIvfPqIndex(spark, path)),
+        servePqMaybeRerank(spark, SegmentedIndex.load(spark, Clustering.IvfPqSharded, path),
             embOf(input, flags), flags)
           .orderBy(col("q_id"), col("rank"))
       case "pq" =>
-        val pqIdx = Clustering.loadPqIndex(spark, path)
+        val pqIdx = SegmentedIndex.load(spark, Clustering.PqTier, path)
         gateFlatServe("pq", pqIdx.codes.count(), flags,
           "ivfpq/ivfpqr: probed-cell ADC")
         Clustering.pqSearchIndex(pqIdx,
@@ -1286,7 +1233,7 @@ object IndexTool {
       case "sq" =>
         // queries come from the input, bounds + codes from the
         // artifact: exact integer L2 in code space over one flat scan
-        val sqIdx = Clustering.loadSqIndex(spark, path)
+        val sqIdx = SegmentedIndex.load(spark, Clustering.SqTier, path)
         gateFlatServe("sq", sqIdx.codes.count(), flags,
           "ivfsq: probed-cell SQ ranking")
         Clustering.serveSq(sqIdx,
@@ -1296,7 +1243,7 @@ object IndexTool {
       case "ivfsq" =>
         // sublinear + compressed: probes prune the codes scan to the
         // probed cells, ranking is SQ code-space L2 within them
-        Clustering.serveIvfSq(Clustering.loadIvfSqIndex(spark, path),
+        Clustering.serveIvfSq(SegmentedIndex.load(spark, Clustering.IvfSqTier, path),
             embOf(input, flags), "vec_id", "embedding",
             num("max-query-id", 20).toLong, num("nprobe", 2),
             num("topk", 3))
@@ -1305,8 +1252,7 @@ object IndexTool {
         // residual ADC: per-(query, probed cell) distance tables;
         // --rerank-from / --filter-col carry the same contracts as the
         // ivfpq verb (one shared coarse fit between the artifacts)
-        servePqrMaybeRerank(spark, loadTier(spark, tpe, path,
-              Clustering.IvfPqrSharded)(Clustering.loadIvfPqrIndex(spark, path)),
+        servePqrMaybeRerank(spark, SegmentedIndex.load(spark, Clustering.IvfPqrSharded, path),
             embOf(input, flags), flags)
           .orderBy(col("q_id"), col("rank"))
       case "hybrid" =>
@@ -1478,8 +1424,7 @@ object IndexTool {
         Seq("centroids" -> lanes.select(col("cluster")).distinct().count(),
           "dim" -> lanes.select(col("pos")).distinct().count())
       case "ivfflat" | "ivfflat-sharded" =>
-        val idx = loadTier(spark, tpe, path, Clustering.IvfFlatSharded)(
-          Clustering.loadIvfFlatIndex(spark, path))
+        val idx = SegmentedIndex.load(spark, Clustering.IvfFlatSharded, path)
         // the occupancy agg's sum IS the vector total — one postings
         // scan, not two; coalesce covers the empty artifact
         val st = idx.postings.groupBy(col("c_id")).count()
@@ -1497,7 +1442,7 @@ object IndexTool {
           "occupancy_skew_x100" -> (if (st.getLong(1) == 0L) 0L
             else st.getLong(2) * st.getLong(0) * 100L / st.getLong(1)))
       case "imi" =>
-        val idx = Clustering.loadImiIndex(spark, path)
+        val idx = SegmentedIndex.load(spark, Clustering.ImiTier, path)
         val st = idx.postings.groupBy(col("c_id")).count()
           .agg(count(lit(1)), coalesce(sum(col("count")), lit(0L)),
             coalesce(max(col("count")), lit(0L))).head()
@@ -1507,22 +1452,8 @@ object IndexTool {
           "vectors" -> st.getLong(1),
           "occupied_cells" -> st.getLong(0),
           "largest_cell" -> st.getLong(2))
-      case "ivfpq" =>
-        val idx = Clustering.loadIvfPqIndex(spark, path)
-        val st = idx.cells.groupBy(col("c_id")).count()
-          .agg(count(lit(1)), coalesce(sum(col("count")), lit(0L)),
-            coalesce(max(col("count")), lit(0L))).head()
-        Seq("centroids" ->
-            idx.coarseLanes.select(col("cluster")).distinct().count(),
-          "vectors" -> st.getLong(1),
-          "occupied_cells" -> st.getLong(0),
-          "largest_cell" -> st.getLong(2),
-          "code_rows" -> idx.codes.count(),
-          "subspaces" -> idx.pqLanes.select(col("s")).distinct().count(),
-          "codebook_k" ->
-            idx.pqLanes.select(col("code")).distinct().count())
-      case "ivfpq-sharded" | "ivfpqr-sharded" =>
-        // one layout for both: read it through the ivfpq-sharded tier
+      case "ivfpq" | "ivfpqr" | "ivfpq-sharded" | "ivfpqr-sharded" =>
+        // one layout for all four: read it through the ivfpq tier
         val idx = SegmentedIndex.load(spark, Clustering.IvfPqSharded, path)
         val st = idx.cells.groupBy(col("c_id")).count()
           .agg(count(lit(1)), coalesce(sum(col("count")), lit(0L)),
@@ -1539,13 +1470,13 @@ object IndexTool {
           "codebook_k" ->
             idx.pqLanes.select(col("code")).distinct().count())
       case "pq" =>
-        val idx = Clustering.loadPqIndex(spark, path)
+        val idx = SegmentedIndex.load(spark, Clustering.PqTier, path)
         Seq("code_rows" -> idx.codes.count(),
           "vectors" -> idx.codes.select(col("n_id")).distinct().count(),
           "subspaces" -> idx.lanes.select(col("s")).distinct().count(),
           "codebook_k" -> idx.lanes.select(col("code")).distinct().count())
       case "sq" =>
-        val idx = Clustering.loadSqIndex(spark, path)
+        val idx = SegmentedIndex.load(spark, Clustering.SqTier, path)
         // degenerate lanes (lo == hi) quantize the whole corpus to one
         // level on that dimension — the shape check an operator wants
         val lanes = idx.lanes.agg(count(lit(1)),
@@ -1555,25 +1486,13 @@ object IndexTool {
           "degenerate_dims" -> lanes.getLong(1),
           "vectors" -> idx.codes.count())
       case "ivfsq" =>
-        val idx = Clustering.loadIvfSqIndex(spark, path)
+        val idx = SegmentedIndex.load(spark, Clustering.IvfSqTier, path)
         val st = idx.codes.groupBy(col("c_id")).count()
           .agg(count(lit(1)), coalesce(sum(col("count")), lit(0L)),
             coalesce(max(col("count")), lit(0L))).head()
         Seq("centroids" ->
             idx.coarseLanes.select(col("cluster")).distinct().count(),
           "dims" -> idx.sqLanes.count(),
-          "vectors" -> st.getLong(1),
-          "occupied_cells" -> st.getLong(0),
-          "largest_cell" -> st.getLong(2))
-      case "ivfpqr" =>
-        val idx = Clustering.loadIvfPqrIndex(spark, path)
-        val st = idx.cells.groupBy(col("c_id")).count()
-          .agg(count(lit(1)), coalesce(sum(col("count")), lit(0L)),
-            coalesce(max(col("count")), lit(0L))).head()
-        Seq("centroids" ->
-            idx.coarseLanes.select(col("cluster")).distinct().count(),
-          "subspaces" -> idx.pqLanes.select(col("s")).distinct().count(),
-          "codebook_k" -> idx.pqLanes.select(col("code")).distinct().count(),
           "vectors" -> st.getLong(1),
           "occupied_cells" -> st.getLong(0),
           "largest_cell" -> st.getLong(2))
@@ -1759,8 +1678,7 @@ object IndexTool {
         // inverted lists loaded once; each micro-batch is a query batch
         // (per-query top-k over artifact postings — batch-independent).
         // --filter-col/--filter-val compose exactly as in the batch verb
-        val idx = loadTier(spark, tpe, path, Clustering.IvfFlatSharded)(
-          Clustering.loadIvfFlatIndex(spark, path))
+        val idx = SegmentedIndex.load(spark, Clustering.IvfFlatSharded, path)
         embOf(stream, flags).writeStream.foreachBatch {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(serveFlatMaybeFiltered(idx, batch, flags), batchId)
@@ -1775,7 +1693,7 @@ object IndexTool {
             sink(fuse(batch), batchId)
         }
       case "imi" =>
-        val idx = Clustering.loadImiIndex(spark, path)
+        val idx = SegmentedIndex.load(spark, Clustering.ImiTier, path)
         embOf(stream, flags).writeStream.foreachBatch {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(Clustering.serveImi(idx, batch, "vec_id", "embedding",
@@ -1783,7 +1701,7 @@ object IndexTool {
               num("topk", 3)), batchId)
         }
       case "pq" =>
-        val idx = Clustering.loadPqIndex(spark, path)
+        val idx = SegmentedIndex.load(spark, Clustering.PqTier, path)
         // the O(corpus)-per-batch gate applies to the STREAMED flat
         // serves too (each micro-batch pays the full codes scan)
         gateFlatServe("pq", idx.codes.count(), flags,
@@ -1797,7 +1715,7 @@ object IndexTool {
       case "sq" =>
         // bounds + codes loaded once; each micro-batch is a query batch
         // encoded against the fixed lanes and ranked per q_id
-        val idx = Clustering.loadSqIndex(spark, path)
+        val idx = SegmentedIndex.load(spark, Clustering.SqTier, path)
         gateFlatServe("sq", idx.codes.count(), flags,
           "ivfsq: probed-cell SQ ranking")
         embOf(stream, flags).writeStream.foreachBatch {
@@ -1806,7 +1724,7 @@ object IndexTool {
               num("max-query-id", 20).toLong, num("topk", 3)), batchId)
         }
       case "ivfsq" =>
-        val idx = Clustering.loadIvfSqIndex(spark, path)
+        val idx = SegmentedIndex.load(spark, Clustering.IvfSqTier, path)
         embOf(stream, flags).writeStream.foreachBatch {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(Clustering.serveIvfSq(idx, batch, "vec_id", "embedding",
@@ -1814,8 +1732,7 @@ object IndexTool {
               num("topk", 3)), batchId)
         }
       case "ivfpqr" | "ivfpqr-sharded" =>
-        val idx = loadTier(spark, tpe, path, Clustering.IvfPqrSharded)(
-          Clustering.loadIvfPqrIndex(spark, path))
+        val idx = SegmentedIndex.load(spark, Clustering.IvfPqrSharded, path)
         embOf(stream, flags).writeStream.foreachBatch {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(servePqrMaybeRerank(spark, idx, batch, flags), batchId)
@@ -1826,8 +1743,7 @@ object IndexTool {
         // composes across micro-batches (the ADC index loads once; the
         // rerank postings pointer re-resolves per batch — a few-bytes
         // read)
-        val idx = loadTier(spark, tpe, path, Clustering.IvfPqSharded)(
-          Clustering.loadIvfPqIndex(spark, path))
+        val idx = SegmentedIndex.load(spark, Clustering.IvfPqSharded, path)
         embOf(stream, flags).writeStream.foreachBatch {
           (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
             sink(servePqMaybeRerank(spark, idx, batch, flags), batchId)

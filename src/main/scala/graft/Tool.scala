@@ -500,13 +500,15 @@ object Tool {
       |       --input="format=..." [--skip-disjoint-check=true]
       |       [--max-rewrite-rows=N  (unsharded tiers with a sharded twin
       |        refuse whole-surface rewrites past the gate — rebuild as
-      |        the *-sharded type, or raise the bound for a one-off)]
-      |       [--mode=append|merge  (the sharded tiers, COMPACTTYPES:
-      |        append writes one delta-sized immutable segment per
-      |        routed shard, O(delta) regardless of how many shards the
-      |        delta's hashes spray across; merge is the whole-shard
-      |        compacting rewrite. Default: merge on the ivf*-sharded
-      |        tiers, append on the others)]
+      |        the *-sharded type, update ivfflat|ivfpq|ivfpqr with
+      |        --mode=append, or raise the bound for a one-off)]
+      |       [--mode=append|merge  (the segmented tiers, COMPACTTYPES —
+      |        every *-sharded type and the vector types, one shard
+      |        unsharded: append writes one delta-sized immutable segment
+      |        per routed shard, O(delta) regardless of how many shards
+      |        the delta's hashes spray across; merge is the whole-shard
+      |        compacting rewrite. Default: merge on the vector tiers,
+      |        append on the others)]
       |       (fold an admitted delta into the artifact; generation
       |        pointer CAS — racing updates fail loudly, never silently
       |        drop a delta; exact == rebuild on the union. Delta ids
@@ -556,4 +558,6 @@ object Tool {
         s"<${IndexTool.RemoveTypes.toSeq.sorted.mkString("|")}>")
       .replace("<REBUILDTYPES>",
         s"<${IndexTool.RebuildTypes.toSeq.sorted.mkString("|")}>")
+      .replace("COMPACTTYPES",
+        IndexTool.CompactTypes.toSeq.sorted.mkString("|"))
 }

@@ -566,8 +566,7 @@ object Clustering {
 
     /** REMOVE a vector set `(vid)` ([[removeFromSemIndex]]'s semantics). */
     def removal(removedIds: DataFrame): SegmentedIndex.Fold = fold { _ =>
-      val ids = OperatorCaches.register(
-        removedIds.select(col("vid")).distinct().persist())
+      val ids = removedIds.select(col("vid"))
       Write(Map("shards" -> ids), s => Map("assign" ->
         s.live("assign").join(ids, Seq("vid"), "left_anti")))
     }
@@ -1023,33 +1022,13 @@ object Clustering {
   final case class PqIndex(codes: DataFrame, lanes: DataFrame)
 
   /** Train a [[PqIndex]] — the expensive half of PQ-ANN, run ONCE per
-    * corpus build (persist with [[savePqIndex]]; every later query batch
-    * is [[pqSearchIndex]] against the loaded artifact — the FAISS
-    * build-once/serve-many economics, on parquet). */
+    * corpus build (persist as the [[PqTier]] artifact; every later
+    * query batch is [[pqSearchIndex]] against the loaded artifact — the
+    * FAISS build-once/serve-many economics, on parquet). */
   def pqFit(emb: DataFrame, idCol: String, vecCol: String, dim: Int,
             m: Int, k: Int, iters: Int, salt: String = "pq"): PqIndex = {
     val models = pqModels(emb, idCol, vecCol, dim, m, k, iters, salt)
     PqIndex(pqCodesLong(models), pqLanesLong(models))
-  }
-
-  /** Persist a [[PqIndex]] as two parquet tables. The codes table is the
-    * corpus-sized side (m rows per vector) and keeps its partitioning;
-    * the codebooks are k·m·subDim rows — one file. */
-  def savePqIndex(idx: PqIndex, path: String,
-                  expected: ArtifactStore.Expect = None): Unit =
-    ArtifactStore.publish(idx.codes.sparkSession, path, expected) { dir =>
-      concurrentWrites(Seq(
-        idx.codes -> ((df: DataFrame) => df.write.mode("overwrite")
-          .parquet(s"$dir/codes")),
-        idx.lanes -> ((df: DataFrame) => df.coalesce(1)
-          .write.mode("overwrite").parquet(s"$dir/lanes"))))
-    }
-
-  def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
-                  p0: String): PqIndex = {
-    val path = ArtifactStore.resolve(spark, p0)
-    PqIndex(ArtifactStore.readSurface(spark, s"$path/codes"),
-      ArtifactStore.readSurface(spark, s"$path/lanes"))
   }
 
   /** ADD a delta batch to a fitted/loaded [[PqIndex]]: ENCODE each delta
@@ -1214,29 +1193,6 @@ object Clustering {
       .select(col("q_id"), col("rank"), col("n_id"), col("cos"))
   }
 
-  /** REMOVE a vector set from the composed compressed index: anti-join
-    * both corpus-sized surfaces (cells and codes) on `n_id`; both
-    * codebooks stay fixed. Equals building cells+codes from the
-    * remaining vectors under the same fit. */
-  def removeFromIvfPqIndex(idx: IvfPqIndex, removedIds: DataFrame)
-      : IvfPqIndex = {
-    val ids = removedIds.select(col("n_id")).distinct()
-    idx.copy(
-      cells = idx.cells
-        .select(col("n_id") +: cellsAttrCols(idx.cells).map(col) :+
-          col("c_id"): _*)
-        .join(ids, Seq("n_id"), "left_anti"),
-      codes = idx.codes.select(col("n_id"), col("s"), col("code"))
-        .join(ids, Seq("n_id"), "left_anti"))
-  }
-
-  /** REMOVE a vector set from a PQ index: anti-join the codes on
-    * `n_id`; the codebooks stay fixed. */
-  def removeFromPqIndex(idx: PqIndex, removedIds: DataFrame): PqIndex =
-    idx.copy(codes = idx.codes.select(col("n_id"), col("s"), col("code"))
-      .join(removedIds.select(col("n_id")).distinct(), Seq("n_id"),
-        "left_anti"))
-
   // ── trained 8-bit scalar quantizer (SQ8) ───────────────────────────────
 
   /** Trained 8-bit scalar-quantizer index — the Faiss
@@ -1349,14 +1305,6 @@ object Clustering {
     idx.copy(codes = idx.codes.select(col("n_id"), col("code"))
       .unionByName(sqEncode(delta, idx.lanes, idCol, vecCol)))
 
-  /** REMOVE a vector set: anti-join the codes; the bounds stay fixed —
-    * per-vector code rows are independent, so the result equals a fresh
-    * encode of the survivors under the same lanes. */
-  def removeFromSqIndex(idx: SqIndex, removedIds: DataFrame): SqIndex =
-    idx.copy(codes = idx.codes.select(col("n_id"), col("code"))
-      .join(removedIds.select(col("n_id")).distinct(), Seq("n_id"),
-        "left_anti"))
-
   /** Serve top-k from the loaded codes: encode the query batch (rows
     * from the input, bounds from the artifact), broadcast it over ONE
     * flat scan of the codes, rank by exact integer code-space L2
@@ -1379,27 +1327,6 @@ object Clustering {
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("rank"), col("n_id"), col("sqdist"))
-  }
-
-  /** Persist: dim-bounded lanes funnel to one file; the codes keep
-    * their partitioning (the corpus-sized surface). */
-  def saveSqIndex(idx: SqIndex, path: String,
-                  expected: ArtifactStore.Expect = None): Unit =
-    ArtifactStore.publish(idx.codes.sparkSession, path, expected) { dir =>
-      concurrentWrites(Seq(
-        idx.lanes.select(col("d"), col("lo"), col("hi")) ->
-          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
-            .parquet(s"$dir/lanes")),
-        idx.codes.select(col("n_id"), col("code")) ->
-          ((df: DataFrame) => df.write.mode("overwrite")
-            .parquet(s"$dir/codes"))))
-    }
-
-  def loadSqIndex(spark: org.apache.spark.sql.SparkSession,
-                  p0: String): SqIndex = {
-    val path = ArtifactStore.resolve(spark, p0)
-    SqIndex(ArtifactStore.readSurface(spark, s"$path/lanes"),
-      ArtifactStore.readSurface(spark, s"$path/codes"))
   }
 
   // ── composed IVF × SQ8 (IndexIVFScalarQuantizer) ───────────────────────
@@ -1486,15 +1413,6 @@ object Clustering {
       .unionByName(ivfSqAssign(delta, idCol, vecCol, idx.coarseLanes,
         idx.sqLanes)))
 
-  /** REMOVE a vector set: anti-join the cell-coded rows; the fitted
-    * codebook and bounds stay — equals a fresh assignment/encode of the
-    * survivors. */
-  def removeFromIvfSqIndex(idx: IvfSqIndex, removedIds: DataFrame)
-      : IvfSqIndex =
-    idx.copy(codes = idx.codes.select(col("n_id"), col("c_id"), col("code"))
-      .join(removedIds.select(col("n_id")).distinct(), Seq("n_id"),
-        "left_anti"))
-
   /** Serve top-k from the loaded artifact: probes kernel-rank the query
     * batch against the coarse codebook, the codes scan prunes to the
     * probed cell partitions (static `c_id IN (...)`), the query batch
@@ -1534,36 +1452,6 @@ object Clustering {
     scored.withColumn("rank", row_number().over(w))
       .filter(col("rank") <= k)
       .select(col("q_id"), col("rank"), col("n_id"), col("sqdist"))
-  }
-
-  /** Persist: both fitted surfaces funnel to one file each (bounded);
-    * codes get the inverted-list directory layout the serve-time
-    * partition filter prunes. */
-  def saveIvfSqIndex(idx: IvfSqIndex, path: String,
-                     expected: ArtifactStore.Expect = None): Unit =
-    ArtifactStore.publish(idx.codes.sparkSession, path, expected) { dir =>
-      concurrentWrites(Seq(
-        idx.coarseLanes.select(col("cluster"), col("pos"), col("cval"),
-          col("n")) ->
-          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
-            .parquet(s"$dir/lanes")),
-        idx.sqLanes.select(col("d"), col("lo"), col("hi")) ->
-          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
-            .parquet(s"$dir/sqlanes")),
-        idx.codes.select(col("n_id"), col("code"), col("c_id")) ->
-          ((df: DataFrame) => df.repartition(writePar(df), col("c_id"))
-            .write.mode("overwrite").partitionBy("c_id")
-            .parquet(s"$dir/codes"))))
-    }
-
-  def loadIvfSqIndex(spark: org.apache.spark.sql.SparkSession,
-                     p0: String): IvfSqIndex = {
-    val path = ArtifactStore.resolve(spark, p0)
-    IvfSqIndex(ArtifactStore.readSurface(spark, s"$path/lanes"),
-      ArtifactStore.readSurface(spark, s"$path/sqlanes"),
-      ArtifactStore.readSurface(spark, s"$path/codes")
-        .select(col("n_id"), col("code"),
-          col("c_id").cast(LongType).as("c_id")))
   }
 
   // ── residual-encoded IVF × PQ (the production IndexIVFPQ) ─────────────
@@ -1659,20 +1547,6 @@ object Clustering {
         .unionByName(cells),
       idx.codes.select(col("n_id"), col("s"), col("code")).unionByName(codes),
       idx.pqLanes)
-  }
-
-  /** REMOVE a vector set: anti-join both corpus-sized surfaces; the
-    * fitted codebooks stay. */
-  def removeFromIvfPqrIndex(idx: IvfPqrIndex, removedIds: DataFrame)
-      : IvfPqrIndex = {
-    val ids = removedIds.select(col("n_id")).distinct()
-    idx.copy(
-      cells = idx.cells
-        .select(col("n_id") +: cellsAttrCols(idx.cells).map(col) :+
-          col("c_id"): _*)
-        .join(ids, Seq("n_id"), "left_anti"),
-      codes = idx.codes.select(col("n_id"), col("s"), col("code"))
-        .join(ids, Seq("n_id"), "left_anti"))
   }
 
   /** ADC serve over residual codes: probes kernel-rank against the
@@ -1776,41 +1650,6 @@ object Clustering {
       .select(col("q_id"), col("rank"), col("n_id"), col("cos"))
   }
 
-  /** Persist/load: the [[IvfPqIndex]] layout (bounded codebooks funnel
-    * to one file each; cells get the inverted-list directory layout;
-    * codes stay n_id-keyed). */
-  def saveIvfPqrIndex(idx: IvfPqrIndex, path: String,
-                      expected: ArtifactStore.Expect = None): Unit =
-    ArtifactStore.publish(idx.cells.sparkSession, path, expected) { dir =>
-      concurrentWrites(Seq(
-        idx.coarseLanes.select(col("cluster"), col("pos"), col("cval"),
-          col("n")) ->
-          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
-            .parquet(s"$dir/coarse")),
-        idx.pqLanes.select(col("s"), col("code"), col("pos"), col("cval")) ->
-          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
-            .parquet(s"$dir/pqlanes")),
-        idx.cells.select(col("n_id") +: cellsAttrCols(idx.cells).map(col) :+
-          col("c_id"): _*) ->
-          ((df: DataFrame) => df.repartition(writePar(df), col("c_id"))
-            .write.mode("overwrite").partitionBy("c_id")
-            .parquet(s"$dir/cells")),
-        idx.codes.select(col("n_id"), col("s"), col("code")) ->
-          ((df: DataFrame) => df.write.mode("overwrite")
-            .parquet(s"$dir/codes"))))
-    }
-
-  def loadIvfPqrIndex(spark: org.apache.spark.sql.SparkSession,
-                      p0: String): IvfPqrIndex = {
-    val path = ArtifactStore.resolve(spark, p0)
-    val rawCells = ArtifactStore.readSurface(spark, s"$path/cells")
-    IvfPqrIndex(ArtifactStore.readSurface(spark, s"$path/coarse"),
-      rawCells.select(col("n_id") +: cellsAttrCols(rawCells).map(col) :+
-        col("c_id").cast(LongType).as("c_id"): _*),
-      ArtifactStore.readSurface(spark, s"$path/codes"),
-      ArtifactStore.readSurface(spark, s"$path/pqlanes"))
-  }
-
   /** FILTERED residual-ADC serve — [[serveIvfPqFiltered]]'s contract on
     * the residual tier: the predicate over cells-surface attributes
     * composes into the probed scan BEFORE the candidate join, so every
@@ -1909,7 +1748,7 @@ object Clustering {
 
   /** Persist a trained coarse codebook as its integer lanes — k·dim
     * rows, one file; train once, serve every query batch from the loaded
-    * artifact (the IVF face of `savePqIndex`/`Dedup.saveLshIndex` —
+    * artifact (the IVF face of [[PqTier]]/`Dedup.saveLshIndex` —
     * every index tier in the engine is persistable). Lossless: lanes are
     * pure int64, so the reloaded [[graft.plans.IvfCentroids]] is
     * bit-identical to the freshly trained one. */
@@ -1974,41 +1813,11 @@ object Clustering {
       Similarity.centroidSetFromLanes(lanes), attrCols))
   }
 
-  /** Persist: lanes funnel to one file (bounded ≤ MaxCentroids·dim
-    * scalar rows); postings keep their size but are clustered into the
-    * inverted-list layout — `repartition(c_id)` then `partitionBy(c_id)`
-    * writes ONE file per cell directory, and the cell directories are
-    * what serve-time dynamic partition pruning skips. */
   /** Postings columns beyond the core quadruple are metadata attributes
     * ([[Similarity.ivfPostingsAttrs]]) — preserved through save/load so
     * a filtered serve can push its predicate into the pruned scan. */
   private def postingsAttrCols(postings: DataFrame): Seq[String] =
     postings.columns.toSeq.filterNot(Set("n_id", "nv", "nn", "c_id"))
-
-  def saveIvfFlatIndex(idx: IvfFlatIndex, path: String,
-                       expected: ArtifactStore.Expect = None): Unit =
-    ArtifactStore.publish(idx.postings.sparkSession, path, expected) { dir =>
-      concurrentWrites(Seq(
-        idx.lanes.select(col("cluster"), col("pos"), col("cval"), col("n")) ->
-          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
-            .parquet(s"$dir/lanes")),
-        idx.postings.select(Seq(col("n_id"), col("nv"), col("nn")) ++
-          postingsAttrCols(idx.postings).map(col) :+ col("c_id"): _*) ->
-          ((df: DataFrame) => df.repartition(writePar(df), col("c_id"))
-            .write.mode("overwrite").partitionBy("c_id")
-            .parquet(s"$dir/postings"))))
-    }
-
-  def loadIvfFlatIndex(spark: org.apache.spark.sql.SparkSession,
-                       p0: String): IvfFlatIndex = {
-    import org.apache.spark.sql.types.LongType
-    val path = ArtifactStore.resolve(spark, p0)
-    val raw = ArtifactStore.readSurface(spark, s"$path/postings")
-    IvfFlatIndex(ArtifactStore.readSurface(spark, s"$path/lanes"),
-      raw.select(Seq(col("n_id"), col("nv"), col("nn")) ++
-        postingsAttrCols(raw).map(col) :+
-        col("c_id").cast(LongType).as("c_id"): _*))
-  }
 
   /** ADD a delta batch: kernel-assign it against the LOADED (fixed)
     * centroids and append to the postings — compute is O(delta); the
@@ -2022,19 +1831,6 @@ object Clustering {
       idx.postings.unionByName(Similarity.ivfPostingsAttrs(delta, idCol,
         vecCol, Similarity.centroidSetFromLanes(idx.lanes),
         postingsAttrCols(idx.postings))))
-
-  /** REMOVE a vector set from the inverted lists (right-to-be-forgotten
-    * on the ANN tier): anti-join the postings on `n_id` — fitted
-    * centroids stay, exactly like the add path, so the result equals a
-    * fresh assignment of the remaining vectors under the same codebook.
-    * `removedIds` is one `n_id` column. */
-  def removeFromIvfFlatIndex(idx: IvfFlatIndex, removedIds: DataFrame)
-      : IvfFlatIndex =
-    idx.copy(postings = idx.postings
-      .select(Seq(col("n_id"), col("nv"), col("nn")) ++
-        postingsAttrCols(idx.postings).map(col) :+ col("c_id"): _*)
-      .join(removedIds.select(col("n_id")).distinct(), Seq("n_id"),
-        "left_anti"))
 
   /** The inverted MULTI-index (IMI) — the two-level coarse quantizer
     * that keeps the cell count on the √n ladder while the FIT cost
@@ -2062,7 +1858,7 @@ object Clustering {
     *
     * Postings are the same `(n_id, nv, nn, c_id)` monoid as the flat
     * tier: [[updateImiIndex]] adds deltas exactly under the fixed
-    * half-codebooks, [[removeFromImiIndex]] anti-joins.
+    * half-codebooks, [[ImiTier]]'s removal anti-joins.
     *
     * Caveat (the cosine metric's zero-vector caveat, per half-space): a
     * vector whose HALF is all-zero has no half-cosine — real embedding
@@ -2148,12 +1944,6 @@ object Clustering {
     idx.copy(postings = idx.postings.unionByName(
       imiAssign(delta, idCol, vecCol, idx.lanesA, idx.lanesB, idx.kB,
         idx.dim)))
-
-  def removeFromImiIndex(idx: ImiIndex, removedIds: DataFrame): ImiIndex =
-    idx.copy(postings = idx.postings
-      .select(col("n_id"), col("nv"), col("nn"), col("c_id"))
-      .join(removedIds.select(col("n_id")).distinct(), Seq("n_id"),
-        "left_anti"))
 
   /** RETRAIN both half-codebooks from the index's OWN postings and
     * re-assign — the IMI drift repair: both halves freeze on add (the
@@ -2256,43 +2046,6 @@ object Clustering {
     Similarity.ivfRerank(postings, queries, k)
   }
 
-  /** Persist: both half-codebooks and the 1-row meta funnel to one file
-    * (bounded); postings get the inverted-list directory layout. */
-  def saveImiIndex(idx: ImiIndex, path: String,
-                   expected: ArtifactStore.Expect = None): Unit = {
-    val spark = idx.lanesA.sparkSession
-    import spark.implicits._
-    ArtifactStore.publish(spark, path, expected) { dir =>
-      concurrentWrites(Seq(
-        idx.lanesA.select(col("cluster"), col("pos"), col("cval"), col("n")) ->
-          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
-            .parquet(s"$dir/lanes_a")),
-        idx.lanesB.select(col("cluster"), col("pos"), col("cval"), col("n")) ->
-          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
-            .parquet(s"$dir/lanes_b")),
-        Seq((idx.kA, idx.kB, idx.dim)).toDF("ka", "kb", "dim") ->
-          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
-            .parquet(s"$dir/meta")),
-        idx.postings.select(col("n_id"), col("nv"), col("nn"), col("c_id")) ->
-          ((df: DataFrame) => df.repartition(writePar(df), col("c_id"))
-            .write.mode("overwrite").partitionBy("c_id")
-            .parquet(s"$dir/postings"))))
-    }
-  }
-
-  def loadImiIndex(spark: org.apache.spark.sql.SparkSession,
-                   p0: String): ImiIndex = {
-    import org.apache.spark.sql.types.LongType
-    val path = ArtifactStore.resolve(spark, p0)
-    val meta = ArtifactStore.readSurface(spark, s"$path/meta").head()
-    ImiIndex(ArtifactStore.readSurface(spark, s"$path/lanes_a"),
-      ArtifactStore.readSurface(spark, s"$path/lanes_b"),
-      ArtifactStore.readSurface(spark, s"$path/postings")
-        .select(col("n_id"), col("nv"), col("nn"),
-          col("c_id").cast(LongType).as("c_id")),
-      meta.getAs[Int]("ka"), meta.getAs[Int]("kb"), meta.getAs[Int]("dim"))
-  }
-
   /** Serve a query batch from the loaded inverted lists: probes come
     * from the query rows alone (one kernel call each against the loaded
     * codebook); the corpus side is the persisted postings with a STATIC
@@ -2349,18 +2102,20 @@ object Clustering {
     Similarity.ivfRerank(pruned.filter(pred), queries, k)
   }
 
-  // ───────────────────── sharded vector artifacts ─────────────────────
+  // ───────────────────── persisted vector artifacts ────────────────────
 
-  /** The sharded vector tiers ([[graft.sinks.SegmentedIndex]]): the
-    * corpus-sized surfaces shard by `n_id mod S` so the REWRITE UNIT is
-    * a shard's segment, never the whole artifact — at 100 TB one
-    * postings surface cannot be rewritten per delta. The frozen
-    * codebooks are build-time roots no add or remove moves (the Faiss
-    * train/add split made physical). Every surface keeps the
-    * inverted-list `c_id=` layout where the flat tier has it, so serves
-    * prune to the probed cells per segment, and the loaded artifact IS
-    * the flat tier's: serves reproduce the single-artifact serve
-    * bit-for-bit (equal surface sets, deterministic rank). Rows are
+  /** Every persisted vector tier is a [[graft.sinks.SegmentedIndex]]
+    * tier: the corpus-sized surfaces shard by `n_id mod S` so the
+    * REWRITE UNIT is a shard's segment, never the whole artifact — at
+    * 100 TB one postings surface cannot be rewritten per delta. The
+    * unsharded types (`ivfflat`, `ivfpq`, `ivfpqr`, `pq`, `sq`, `ivfsq`,
+    * `imi`) are their tier at S = 1. The frozen codebooks are
+    * build-time roots no add or remove moves (the Faiss train/add split
+    * made physical). The cell-partitioned surfaces keep the
+    * inverted-list `c_id=` layout, so serves prune to the probed cells
+    * per segment, and every S loads the same in-memory index: serves
+    * reproduce the single-shard serve bit-for-bit (equal surface sets,
+    * deterministic rank). Rows are
     * per-vector with no rollup, so the `live` view is the union of the
     * segments. An add rewrites each touched shard whole by default
     * (`--mode=merge`): with `--mode=append` it lands the delta's rows as
@@ -2404,8 +2159,7 @@ object Clustering {
       * keeps its live rows but theirs; the codebooks stay, so the result
       * equals a fresh assignment of the remaining vectors. */
     def removal(removedIds: DataFrame): SegmentedIndex.Fold = fold { _ =>
-      val ids = OperatorCaches.register(removedIds
-        .select(col("n_id").cast(LongType).as("n_id")).distinct().persist())
+      val ids = removedIds.select(col("n_id").cast(LongType).as("n_id"))
       Write(Map("shards" -> ids), s => surfaces.map(sp => sp.name ->
         s.live(sp.name).join(ids, Seq("n_id"), "left_anti")).toMap)
     }
@@ -2490,6 +2244,111 @@ object Clustering {
       IvfPqrIndex(idx.coarseLanes, idx.cells, idx.codes, idx.pqLanes)
     protected def pq(idx: IvfPqrIndex): IvfPqIndex =
       IvfPqIndex(idx.coarseLanes, idx.cells, idx.codes, idx.pqLanes)
+  }
+
+  /** [[PqIndex]]: `codes` per shard under the frozen `lanes` codebooks. */
+  object PqTier extends VectorSharded[PqIndex](Seq(
+      SegmentedIndex.Surface("codes", Seq("n_id", "s", "code")))) {
+
+    def surfacesOf(idx: PqIndex): Map[String, DataFrame] =
+      Map("codes" -> idx.codes)
+
+    protected def codebooks(idx: PqIndex): Seq[(String, DataFrame)] =
+      Seq("lanes" -> idx.lanes)
+
+    def artifact(spark: org.apache.spark.sql.SparkSession, dir: String,
+                 view: String => DataFrame): PqIndex =
+      PqIndex(view("codes"), ArtifactStore.readSurface(spark, s"$dir/lanes"))
+
+    /** ADD a delta batch: the [[updatePqIndex]] encode. */
+    def delta(delta: DataFrame, idCol: String, vecCol: String, dim: Int,
+              m: Int): SegmentedIndex.Fold = add { (codebook, _) =>
+      Map("codes" -> pqEncode(delta, codebook("lanes"), idCol, vecCol, dim, m))
+    }
+  }
+
+  /** [[SqIndex]]: `codes` per shard under the frozen per-dim `lanes`. */
+  object SqTier extends VectorSharded[SqIndex](Seq(
+      SegmentedIndex.Surface("codes", Seq("n_id", "code")))) {
+
+    def surfacesOf(idx: SqIndex): Map[String, DataFrame] =
+      Map("codes" -> idx.codes)
+
+    protected def codebooks(idx: SqIndex): Seq[(String, DataFrame)] =
+      Seq("lanes" -> idx.lanes.select(col("d"), col("lo"), col("hi")))
+
+    def artifact(spark: org.apache.spark.sql.SparkSession, dir: String,
+                 view: String => DataFrame): SqIndex =
+      SqIndex(ArtifactStore.readSurface(spark, s"$dir/lanes"), view("codes"))
+
+    /** ADD a delta batch: the [[updateSqIndex]] encode. */
+    def delta(delta: DataFrame, idCol: String, vecCol: String)
+        : SegmentedIndex.Fold = add { (codebook, _) =>
+      Map("codes" -> sqEncode(delta, codebook("lanes"), idCol, vecCol))
+    }
+  }
+
+  /** [[IvfSqIndex]]: cell-partitioned `codes` per shard under the frozen
+    * coarse `lanes` and per-dim `sqlanes`. */
+  object IvfSqTier extends VectorSharded[IvfSqIndex](Seq(
+      SegmentedIndex.Surface("codes", Seq("n_id", "code"),
+        partition = Some("c_id")))) {
+
+    def surfacesOf(idx: IvfSqIndex): Map[String, DataFrame] =
+      Map("codes" -> idx.codes)
+
+    protected def codebooks(idx: IvfSqIndex): Seq[(String, DataFrame)] = Seq(
+      "lanes" -> idx.coarseLanes.select(col("cluster"), col("pos"),
+        col("cval"), col("n")),
+      "sqlanes" -> idx.sqLanes.select(col("d"), col("lo"), col("hi")))
+
+    def artifact(spark: org.apache.spark.sql.SparkSession, dir: String,
+                 view: String => DataFrame): IvfSqIndex =
+      IvfSqIndex(ArtifactStore.readSurface(spark, s"$dir/lanes"),
+        ArtifactStore.readSurface(spark, s"$dir/sqlanes"), view("codes"))
+
+    /** ADD a delta batch: the [[updateIvfSqIndex]] fused assign+encode. */
+    def delta(delta: DataFrame, idCol: String, vecCol: String)
+        : SegmentedIndex.Fold = add { (codebook, _) =>
+      Map("codes" -> ivfSqAssign(delta, idCol, vecCol, codebook("lanes"),
+        codebook("sqlanes")))
+    }
+  }
+
+  /** [[ImiIndex]]: cell-partitioned `postings` per shard under the frozen
+    * half-codebooks `lanes_a`/`lanes_b` and the 1-row `meta` (kA, kB,
+    * dim). */
+  object ImiTier extends VectorSharded[ImiIndex](Seq(
+      SegmentedIndex.Surface("postings", Seq("n_id", "nv", "nn"),
+        partition = Some("c_id")))) {
+
+    def surfacesOf(idx: ImiIndex): Map[String, DataFrame] =
+      Map("postings" -> idx.postings)
+
+    protected def codebooks(idx: ImiIndex): Seq[(String, DataFrame)] = {
+      val spark = idx.lanesA.sparkSession
+      import spark.implicits._
+      def lanes(df: DataFrame) =
+        df.select(col("cluster"), col("pos"), col("cval"), col("n"))
+      Seq("lanes_a" -> lanes(idx.lanesA), "lanes_b" -> lanes(idx.lanesB),
+        "meta" -> Seq((idx.kA, idx.kB, idx.dim)).toDF("ka", "kb", "dim"))
+    }
+
+    def artifact(spark: org.apache.spark.sql.SparkSession, dir: String,
+                 view: String => DataFrame): ImiIndex = {
+      val meta = ArtifactStore.readSurface(spark, s"$dir/meta").head()
+      ImiIndex(ArtifactStore.readSurface(spark, s"$dir/lanes_a"),
+        ArtifactStore.readSurface(spark, s"$dir/lanes_b"), view("postings"),
+        meta.getAs[Int]("ka"), meta.getAs[Int]("kb"), meta.getAs[Int]("dim"))
+    }
+
+    /** ADD a delta batch: the [[updateImiIndex]] per-half assignment. */
+    def delta(delta: DataFrame, idCol: String, vecCol: String)
+        : SegmentedIndex.Fold = add { (codebook, _) =>
+      val meta = codebook("meta").head()
+      Map("postings" -> imiAssign(delta, idCol, vecCol, codebook("lanes_a"),
+        codebook("lanes_b"), meta.getAs[Int]("kb"), meta.getAs[Int]("dim")))
+    }
   }
 
   /** A sharded ivfflat save followed by a serve FROM THE SAVED ARTIFACT,
@@ -2645,46 +2504,10 @@ object Clustering {
     IvfPqIndex(coarseLanes, cells, pqCodesLong(models), pqLanesLong(models))
   }
 
-  /** Persist: both codebooks funnel to one file (bounded); `cells` gets
-    * the inverted-list directory layout (`partitionBy(c_id)`); `codes`
-    * keeps its partitioning (corpus-sized, joined on n_id at serve). */
   /** Cells columns beyond (n_id, c_id) are metadata attributes for the
     * filtered ADC serve — preserved through save/load/update. */
   private def cellsAttrCols(cells: DataFrame): Seq[String] =
     cells.columns.toSeq.filterNot(Set("n_id", "c_id"))
-
-  def saveIvfPqIndex(idx: IvfPqIndex, path: String,
-                     expected: ArtifactStore.Expect = None): Unit =
-    ArtifactStore.publish(idx.cells.sparkSession, path, expected) { dir =>
-      concurrentWrites(Seq(
-        idx.coarseLanes.select(col("cluster"), col("pos"), col("cval"),
-          col("n")) ->
-          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
-            .parquet(s"$dir/coarse")),
-        idx.pqLanes.select(col("s"), col("code"), col("pos"), col("cval")) ->
-          ((df: DataFrame) => df.coalesce(1).write.mode("overwrite")
-            .parquet(s"$dir/pqlanes")),
-        idx.cells.select(col("n_id") +: cellsAttrCols(idx.cells).map(col) :+
-          col("c_id"): _*) ->
-          ((df: DataFrame) => df.repartition(writePar(df), col("c_id"))
-            .write.mode("overwrite").partitionBy("c_id")
-            .parquet(s"$dir/cells")),
-        idx.codes.select(col("n_id"), col("s"), col("code")) ->
-          ((df: DataFrame) => df.write.mode("overwrite")
-            .parquet(s"$dir/codes"))))
-    }
-
-  def loadIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
-                     p0: String): IvfPqIndex = {
-    import org.apache.spark.sql.types.LongType
-    val path = ArtifactStore.resolve(spark, p0)
-    val rawCells = ArtifactStore.readSurface(spark, s"$path/cells")
-    IvfPqIndex(ArtifactStore.readSurface(spark, s"$path/coarse"),
-      rawCells.select(col("n_id") +: cellsAttrCols(rawCells).map(col) :+
-        col("c_id").cast(LongType).as("c_id"): _*),
-      ArtifactStore.readSurface(spark, s"$path/codes"),
-      ArtifactStore.readSurface(spark, s"$path/pqlanes"))
-  }
 
   /** ADD a delta: one kernel cell-assignment against the fixed coarse
     * codebook + one per-subspace encode against the fixed PQ codebooks

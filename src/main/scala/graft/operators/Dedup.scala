@@ -407,7 +407,7 @@ object Dedup {
   /** Persist a banded-signature index ([[bandedSignatures]] output) as
     * one parquet table `(id, ghash, band, bkey)` — the build-once half
     * of build-once/serve-many ingestion dedup (the LSH analog of
-    * `Clustering.savePqIndex`). Partitioning survives as parquet file
+    * `Clustering.PqTier`). Partitioning survives as parquet file
     * layout; the serve-side join re-shuffles on (band, bkey) either way. */
   def saveLshIndex(index: DataFrame, path: String,
                    expected: ArtifactStore.Expect = None): Unit =
@@ -533,7 +533,7 @@ object Dedup {
                 bands: Int): SegmentedIndex.Fold = fold { _ =>
       Write(Map.empty, s => Map(
         "sig" -> retile(sigCols(s.live("sig")).join(
-            removedIds.select(col("id")).distinct(), Seq("id"), "left_anti"),
+            removedIds.select(col("id")), Seq("id"), "left_anti"),
           numHashes, bands).withColumn("seg_ord", lit(0L)),
         "mask" -> s("mask").limit(0)))
     }
@@ -1233,8 +1233,7 @@ object Dedup {
     def removal(removedIds: DataFrame): SegmentedIndex.Fold = fold { _ =>
       Write(Map.empty, s => {
         val kept = s.live("chunks").join(
-          removedIds.select(col("doc_id")).distinct(), Seq("doc_id"),
-          "left_anti")
+          removedIds.select(col("doc_id")), Seq("doc_id"), "left_anti")
         Map("chunks" -> kept, "rollup" -> rollupOf(kept))
       })
     }

@@ -26,10 +26,22 @@ object OperatorCaches {
     synchronized { rdds += rdd }
 
   /** Unpersist (non-blocking) everything registered and forget it. */
-  def releaseAll(): Unit = synchronized {
-    frames.foreach(_.unpersist(false))
-    frames.clear()
-    rdds.foreach(_.unpersist(false))
-    rdds.clear()
+  def releaseAll(): Unit = releaseFrom(0, 0)
+
+  /** Run `body`, then release what it registered however it ends — for
+    * a call whose result reads none of its caches (an index verb that
+    * commits and returns), so a long-lived session does not keep them.
+    * Two scoped calls running at once in one session may release each
+    * other's caches early: that costs a recomputation, never a result. */
+  def scoped[A](body: => A): A = {
+    val (f, r) = synchronized((frames.size, rdds.size))
+    try body finally releaseFrom(f, r)
+  }
+
+  private def releaseFrom(f: Int, r: Int): Unit = synchronized {
+    frames.drop(f).foreach(_.unpersist(false))
+    frames.dropRightInPlace(frames.size - f)
+    rdds.drop(r).foreach(_.unpersist(false))
+    rdds.dropRightInPlace(rdds.size - r)
   }
 }

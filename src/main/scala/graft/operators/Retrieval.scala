@@ -20,7 +20,7 @@ import graft.sinks.{ArtifactStore, SegmentedIndex, ShardedCommit}
   * the lexical leg of hybrid retrieval beside the ANN index tiers, with
   * the same build-once/serve-many persistence contract as the LSH
   * (`Dedup.saveLshIndex`), IVF (`Clustering.saveIvfCodebook`), PQ
-  * (`Clustering.savePqIndex`) and BPE (`Bpe.saveMerges`) artifacts.
+  * (`Clustering.PqTier`) and BPE (`Bpe.saveMerges`) artifacts.
   */
 final case class Bm25Index(postings: DataFrame, doclen: DataFrame,
                            docfreq: DataFrame, stats: DataFrame)

@@ -830,12 +830,11 @@ object LexicalQueries {
       .where($"rank" <= RrfPoolN)
       .select($"q_id", $"doc_id", $"rank".as("lex_rank"))
     val ivPath = QueryTmp.dir("hyivf", d)
-    graft.operators.Clustering.saveIvfFlatIndex(
-      graft.operators.Clustering.buildIvfFlatIndex(
-        Tables.embeddings(s, d), "vec_id", "embedding",
-        1 << VectorQueries.ivfBits(s, d)), ivPath)
     val dense = graft.operators.Clustering.serveIvfFlat(
-        graft.operators.Clustering.loadIvfFlatIndex(s, ivPath),
+        VectorQueries.persisted(s, graft.operators.Clustering.IvfFlatSharded,
+          graft.operators.Clustering.buildIvfFlatIndex(
+            Tables.embeddings(s, d), "vec_id", "embedding",
+            1 << VectorQueries.ivfBits(s, d)), ivPath),
         Tables.embeddings(s, d), "vec_id", "embedding",
         BmMaxQueryId, VectorQueries.IvfNprobe, RrfPoolN)
       .select($"q_id", $"n_id".as("doc_id"),

@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.functions.VectorFunctions._
 import graft.operators.Similarity
-import graft.operators.Clustering.{IvfFlatSharded, IvfPqSharded, IvfPqrSharded}
+import graft.operators.Clustering.{ImiTier, IvfFlatSharded, IvfPqSharded,
+  IvfPqrSharded, IvfSqTier, PqTier, SqTier}
 import graft.sinks.SegmentedIndex
 
 /** Similarity search over the `embeddings` table (64-dim float vectors).
@@ -39,6 +40,16 @@ object VectorQueries {
 
   private def corpusBits(s: SparkSession, d: String): Int =
     Similarity.bitsFor(Tables.embeddings(s, d).count(), TargetBucketRows, MaxBits)
+
+  /** `idx` saved as its tier's artifact at `path` with one shard, and
+    * the artifact loaded back — the persisted index every serve below
+    * reads. */
+  private[graft] def persisted[A](s: SparkSession,
+                                  tier: SegmentedIndex.Tier[A], idx: A,
+                                  path: String): A = {
+    SegmentedIndex.save(s, tier, idx, path, 1)
+    SegmentedIndex.load(s, tier, path)
+  }
 
   /** √n-scaled centroid-count bits for the TRAINED IVF codebook (see
     * `Similarity.quadBitsFor` — k ∝ n would make coarse training
@@ -418,17 +429,14 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("pqupd0", d)
-    graft.operators.Clustering.savePqIndex(
-      graft.operators.Clustering.pqFit(emb.filter($"vec_id" % 10 =!= 0),
-        "vec_id", "embedding", Dim, PqM, PqK, PqIters),
-      path)
     val updated = graft.operators.Clustering.updatePqIndex(
-      graft.operators.Clustering.loadPqIndex(s, path),
+      persisted(s, PqTier,
+        graft.operators.Clustering.pqFit(emb.filter($"vec_id" % 10 =!= 0),
+          "vec_id", "embedding", Dim, PqM, PqK, PqIters), path),
       emb.filter($"vec_id" % 10 === 0), "vec_id", "embedding", Dim, PqM)
     val upPath = QueryTmp.dir("pqupd1", d)
-    graft.operators.Clustering.savePqIndex(updated, upPath)
     graft.operators.Clustering
-      .pqSearchIndex(graft.operators.Clustering.loadPqIndex(s, upPath),
+      .pqSearchIndex(persisted(s, PqTier, updated, upPath),
         emb, "vec_id", "embedding", Dim / PqM, MaxQueryId, PqTopK)
       .orderBy($"q_id", $"rank")
   }
@@ -499,14 +507,12 @@ object VectorQueries {
     val flat = QueryTmp.dir("ivfpqr1", d)
     val flatIdx = graft.operators.Clustering.buildIvfFlatIndex(emb,
       "vec_id", "embedding", k)
-    graft.operators.Clustering.saveIvfFlatIndex(flatIdx, flat)
     val pq = QueryTmp.dir("ivfpqr0", d)
-    graft.operators.Clustering.saveIvfPqIndex(
-      graft.operators.Clustering.buildIvfPqIndexWith(emb, "vec_id",
-        "embedding", Dim, PqM, PqK, PqIters, flatIdx.lanes), pq)
     graft.operators.Clustering.serveIvfPqRerank(
-        graft.operators.Clustering.loadIvfPqIndex(s, pq),
-        graft.operators.Clustering.loadIvfFlatIndex(s, flat).postings,
+        persisted(s, IvfPqSharded,
+          graft.operators.Clustering.buildIvfPqIndexWith(emb, "vec_id",
+            "embedding", Dim, PqM, PqK, PqIters, flatIdx.lanes), pq),
+        persisted(s, IvfFlatSharded, flatIdx, flat).postings,
         emb, "vec_id", "embedding", Dim, PqM, MaxQueryId, IvfNprobe,
         RerankPool, PqTopK)
       .orderBy($"q_id", $"rank")
@@ -547,12 +553,10 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfpqidx", d)
-    graft.operators.Clustering.saveIvfPqIndex(
-      graft.operators.Clustering.buildIvfPqIndex(emb, "vec_id", "embedding",
-        Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d)),
-      path)
     graft.operators.Clustering.serveIvfPq(
-        graft.operators.Clustering.loadIvfPqIndex(s, path),
+        persisted(s, IvfPqSharded,
+          graft.operators.Clustering.buildIvfPqIndex(emb, "vec_id", "embedding",
+            Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d)), path),
         emb, "vec_id", "embedding", Dim, PqM, MaxQueryId, IvfNprobe, PqTopK)
       .orderBy($"q_id", $"rank")
   }
@@ -569,13 +573,11 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfpqfil", d)
-    graft.operators.Clustering.saveIvfPqIndex(
-      graft.operators.Clustering.buildIvfPqIndex(emb, "vec_id", "embedding",
-        Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d),
-        attrCols = Seq("label")),
-      path)
     graft.operators.Clustering.serveIvfPqFiltered(
-        graft.operators.Clustering.loadIvfPqIndex(s, path),
+        persisted(s, IvfPqSharded,
+          graft.operators.Clustering.buildIvfPqIndex(emb, "vec_id", "embedding",
+            Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d),
+            attrCols = Seq("label")), path),
         emb, "vec_id", "embedding", Dim, PqM, MaxQueryId, IvfNprobe,
         PqTopK, pred = col("label") === FilterLabel)
       .orderBy($"q_id", $"rank")
@@ -668,18 +670,15 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfpqupd0", d)
-    graft.operators.Clustering.saveIvfPqIndex(
-      graft.operators.Clustering.buildIvfPqIndex(
-        emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding",
-        Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d)),
-      path)
     val updated = graft.operators.Clustering.updateIvfPqIndex(
-      graft.operators.Clustering.loadIvfPqIndex(s, path),
+      persisted(s, IvfPqSharded,
+        graft.operators.Clustering.buildIvfPqIndex(
+          emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding",
+          Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d)), path),
       emb.filter($"vec_id" % 10 === 0), "vec_id", "embedding", Dim, PqM)
     val upPath = QueryTmp.dir("ivfpqupd1", d)
-    graft.operators.Clustering.saveIvfPqIndex(updated, upPath)
     graft.operators.Clustering.serveIvfPq(
-        graft.operators.Clustering.loadIvfPqIndex(s, upPath),
+        persisted(s, IvfPqSharded, updated, upPath),
         emb, "vec_id", "embedding", Dim, PqM, MaxQueryId, IvfNprobe, PqTopK)
       .orderBy($"q_id", $"rank")
   }
@@ -1087,8 +1086,7 @@ object VectorQueries {
     val path = QueryTmp.dir("pqindex", d)
     val idx = graft.operators.Clustering
       .pqFit(emb, "vec_id", "embedding", Dim, PqM, PqK, PqIters)
-    graft.operators.Clustering.savePqIndex(idx, path)
-    val loaded = graft.operators.Clustering.loadPqIndex(s, path)
+    val loaded = persisted(s, PqTier, idx, path)
     graft.operators.Clustering
       .pqSearchIndex(loaded, emb, "vec_id", "embedding", Dim / PqM,
         MaxQueryId, PqTopK)
@@ -1130,12 +1128,10 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfflat", d)
-    graft.operators.Clustering.saveIvfFlatIndex(
-      graft.operators.Clustering.buildIvfFlatIndex(
-        emb, "vec_id", "embedding", 1 << ivfBits(s, d)),
-      path)
     graft.operators.Clustering.serveIvfFlat(
-        graft.operators.Clustering.loadIvfFlatIndex(s, path),
+        persisted(s, IvfFlatSharded,
+          graft.operators.Clustering.buildIvfFlatIndex(
+            emb, "vec_id", "embedding", 1 << ivfBits(s, d)), path),
         emb, "vec_id", "embedding", IvfMaxQueryId, IvfNprobe, IvfK)
       .orderBy($"q_id", $"rank")
   }
@@ -1155,18 +1151,15 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfflatup0", d)
-    graft.operators.Clustering.saveIvfFlatIndex(
-      graft.operators.Clustering.buildIvfFlatIndex(
-        emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding",
-        1 << ivfBits(s, d)),
-      path)
     val updated = graft.operators.Clustering.updateIvfFlatIndex(
-      graft.operators.Clustering.loadIvfFlatIndex(s, path),
+      persisted(s, IvfFlatSharded,
+        graft.operators.Clustering.buildIvfFlatIndex(
+          emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding",
+          1 << ivfBits(s, d)), path),
       emb.filter($"vec_id" % 10 === 0), "vec_id", "embedding")
     val upPath = QueryTmp.dir("ivfflatup1", d)
-    graft.operators.Clustering.saveIvfFlatIndex(updated, upPath)
     graft.operators.Clustering.serveIvfFlat(
-        graft.operators.Clustering.loadIvfFlatIndex(s, upPath),
+        persisted(s, IvfFlatSharded, updated, upPath),
         emb, "vec_id", "embedding", IvfMaxQueryId, IvfNprobe, IvfK)
       .orderBy($"q_id", $"rank")
   }
@@ -1269,13 +1262,11 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfflatfil", d)
-    graft.operators.Clustering.saveIvfFlatIndex(
-      graft.operators.Clustering.buildIvfFlatIndex(
-        emb, "vec_id", "embedding", 1 << ivfBits(s, d),
-        attrCols = Seq("label")),
-      path)
     graft.operators.Clustering.serveIvfFlatFiltered(
-        graft.operators.Clustering.loadIvfFlatIndex(s, path),
+        persisted(s, IvfFlatSharded,
+          graft.operators.Clustering.buildIvfFlatIndex(
+            emb, "vec_id", "embedding", 1 << ivfBits(s, d),
+            attrCols = Seq("label")), path),
         emb, "vec_id", "embedding", IvfMaxQueryId, IvfNprobe, IvfK,
         pred = col("label") === FilterLabel)
       .orderBy($"q_id", $"rank")
@@ -1334,12 +1325,10 @@ object VectorQueries {
         1 << ivfBits(s, d)),
       emb.filter($"vec_id" % 10 === 0), "vec_id", "embedding")
     val path = QueryTmp.dir("ivfflatreb", d)
-    graft.operators.Clustering.saveIvfFlatIndex(
-      graft.operators.Clustering.rebuildIvfFlatIndex(
-        stale, 1 << ivfBits(s, d)),
-      path)
     graft.operators.Clustering.serveIvfFlat(
-        graft.operators.Clustering.loadIvfFlatIndex(s, path),
+        persisted(s, IvfFlatSharded,
+          graft.operators.Clustering.rebuildIvfFlatIndex(
+            stale, 1 << ivfBits(s, d)), path),
         emb, "vec_id", "embedding", IvfMaxQueryId, IvfNprobe, IvfK)
       .orderBy($"q_id", $"rank")
   }
@@ -1467,11 +1456,10 @@ object VectorQueries {
     val emb = Tables.embeddings(s, d)
     val (ka, kb) = imiKs(s, d)
     val path = QueryTmp.dir("imi", d)
-    graft.operators.Clustering.saveImiIndex(
-      graft.operators.Clustering.buildImiIndex(emb, "vec_id", "embedding",
-        Dim, ka, kb), path)
     graft.operators.Clustering.serveImi(
-        graft.operators.Clustering.loadImiIndex(s, path),
+        persisted(s, ImiTier,
+          graft.operators.Clustering.buildImiIndex(emb, "vec_id", "embedding",
+            Dim, ka, kb), path),
         emb, "vec_id", "embedding", IvfMaxQueryId, IvfNprobe, IvfK)
       .orderBy($"q_id", $"rank")
   }
@@ -1488,17 +1476,15 @@ object VectorQueries {
     val emb = Tables.embeddings(s, d)
     val (ka, kb) = imiKs(s, d)
     val path = QueryTmp.dir("imiup0", d)
-    graft.operators.Clustering.saveImiIndex(
-      graft.operators.Clustering.buildImiIndex(
-        emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding",
-        Dim, ka, kb), path)
     val updated = graft.operators.Clustering.updateImiIndex(
-      graft.operators.Clustering.loadImiIndex(s, path),
+      persisted(s, ImiTier,
+        graft.operators.Clustering.buildImiIndex(
+          emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding",
+          Dim, ka, kb), path),
       emb.filter($"vec_id" % 10 === 0), "vec_id", "embedding")
     val upPath = QueryTmp.dir("imiup1", d)
-    graft.operators.Clustering.saveImiIndex(updated, upPath)
     graft.operators.Clustering.serveImi(
-        graft.operators.Clustering.loadImiIndex(s, upPath),
+        persisted(s, ImiTier, updated, upPath),
         emb, "vec_id", "embedding", IvfMaxQueryId, IvfNprobe, IvfK)
       .orderBy($"q_id", $"rank")
   }
@@ -2055,11 +2041,10 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("sqindex", d)
-    graft.operators.Clustering.saveSqIndex(
-      graft.operators.Clustering.buildSqIndex(emb, "vec_id", "embedding",
-        Dim), path)
     graft.operators.Clustering.serveSq(
-        graft.operators.Clustering.loadSqIndex(s, path),
+        persisted(s, SqTier,
+          graft.operators.Clustering.buildSqIndex(emb, "vec_id", "embedding",
+            Dim), path),
         emb, "vec_id", "embedding", SqMaxQueryId, SqTopK)
       .orderBy($"q_id", $"rank")
   }
@@ -2075,17 +2060,14 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("squp0", d)
-    graft.operators.Clustering.saveSqIndex(
-      graft.operators.Clustering.buildSqIndex(
-        emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding", Dim),
-      path)
     val updated = graft.operators.Clustering.updateSqIndex(
-      graft.operators.Clustering.loadSqIndex(s, path),
+      persisted(s, SqTier,
+        graft.operators.Clustering.buildSqIndex(
+          emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding", Dim), path),
       emb.filter($"vec_id" % 10 === 0), "vec_id", "embedding")
     val upPath = QueryTmp.dir("squp1", d)
-    graft.operators.Clustering.saveSqIndex(updated, upPath)
     graft.operators.Clustering.serveSq(
-        graft.operators.Clustering.loadSqIndex(s, upPath),
+        persisted(s, SqTier, updated, upPath),
         emb, "vec_id", "embedding", SqMaxQueryId, SqTopK)
       .orderBy($"q_id", $"rank")
   }
@@ -2150,11 +2132,10 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfsq", d)
-    graft.operators.Clustering.saveIvfSqIndex(
-      graft.operators.Clustering.buildIvfSqIndex(emb, "vec_id",
-        "embedding", Dim, 1 << ivfBits(s, d)), path)
     graft.operators.Clustering.serveIvfSq(
-        graft.operators.Clustering.loadIvfSqIndex(s, path),
+        persisted(s, IvfSqTier,
+          graft.operators.Clustering.buildIvfSqIndex(emb, "vec_id",
+            "embedding", Dim, 1 << ivfBits(s, d)), path),
         emb, "vec_id", "embedding", IvfMaxQueryId, IvfNprobe, IvfK)
       .orderBy($"q_id", $"rank")
   }
@@ -2170,17 +2151,15 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfsqup0", d)
-    graft.operators.Clustering.saveIvfSqIndex(
-      graft.operators.Clustering.buildIvfSqIndex(
-        emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding", Dim,
-        1 << ivfBits(s, d)), path)
     val updated = graft.operators.Clustering.updateIvfSqIndex(
-      graft.operators.Clustering.loadIvfSqIndex(s, path),
+      persisted(s, IvfSqTier,
+        graft.operators.Clustering.buildIvfSqIndex(
+          emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding", Dim,
+          1 << ivfBits(s, d)), path),
       emb.filter($"vec_id" % 10 === 0), "vec_id", "embedding")
     val upPath = QueryTmp.dir("ivfsqup1", d)
-    graft.operators.Clustering.saveIvfSqIndex(updated, upPath)
     graft.operators.Clustering.serveIvfSq(
-        graft.operators.Clustering.loadIvfSqIndex(s, upPath),
+        persisted(s, IvfSqTier, updated, upPath),
         emb, "vec_id", "embedding", IvfMaxQueryId, IvfNprobe, IvfK)
       .orderBy($"q_id", $"rank")
   }
@@ -2314,12 +2293,11 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfpqrfil", d)
-    graft.operators.Clustering.saveIvfPqrIndex(
-      graft.operators.Clustering.buildIvfPqrIndex(emb, "vec_id",
-        "embedding", Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d),
-        attrCols = Seq("label")), path)
     graft.operators.Clustering.serveIvfPqrFiltered(
-        graft.operators.Clustering.loadIvfPqrIndex(s, path),
+        persisted(s, IvfPqrSharded,
+          graft.operators.Clustering.buildIvfPqrIndex(emb, "vec_id",
+            "embedding", Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d),
+            attrCols = Seq("label")), path),
         emb, "vec_id", "embedding", Dim, PqM, MaxQueryId, IvfNprobe,
         PqTopK, pred = col("label") === FilterLabel)
       .orderBy($"q_id", $"rank")
@@ -2329,11 +2307,10 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfpqr", d)
-    graft.operators.Clustering.saveIvfPqrIndex(
-      graft.operators.Clustering.buildIvfPqrIndex(emb, "vec_id",
-        "embedding", Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d)), path)
     graft.operators.Clustering.serveIvfPqr(
-        graft.operators.Clustering.loadIvfPqrIndex(s, path),
+        persisted(s, IvfPqrSharded,
+          graft.operators.Clustering.buildIvfPqrIndex(emb, "vec_id",
+            "embedding", Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d)), path),
         emb, "vec_id", "embedding", Dim, PqM, MaxQueryId, IvfNprobe,
         PqTopK)
       .orderBy($"q_id", $"rank")
@@ -2350,17 +2327,15 @@ object VectorQueries {
     import s.implicits._
     val emb = Tables.embeddings(s, d)
     val path = QueryTmp.dir("ivfpqrup0", d)
-    graft.operators.Clustering.saveIvfPqrIndex(
-      graft.operators.Clustering.buildIvfPqrIndex(
-        emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding",
-        Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d)), path)
     val updated = graft.operators.Clustering.updateIvfPqrIndex(
-      graft.operators.Clustering.loadIvfPqrIndex(s, path),
+      persisted(s, IvfPqrSharded,
+        graft.operators.Clustering.buildIvfPqrIndex(
+          emb.filter($"vec_id" % 10 =!= 0), "vec_id", "embedding",
+          Dim, PqM, PqK, PqIters, 1 << ivfBits(s, d)), path),
       emb.filter($"vec_id" % 10 === 0), "vec_id", "embedding", Dim, PqM)
     val upPath = QueryTmp.dir("ivfpqrup1", d)
-    graft.operators.Clustering.saveIvfPqrIndex(updated, upPath)
     graft.operators.Clustering.serveIvfPqr(
-        graft.operators.Clustering.loadIvfPqrIndex(s, upPath),
+        persisted(s, IvfPqrSharded, updated, upPath),
         emb, "vec_id", "embedding", Dim, PqM, MaxQueryId, IvfNprobe,
         PqTopK)
       .orderBy($"q_id", $"rank")
@@ -2498,14 +2473,12 @@ object VectorQueries {
     val flat = QueryTmp.dir("pqrflat", d)
     val flatIdx = graft.operators.Clustering.buildIvfFlatIndex(emb,
       "vec_id", "embedding", k)
-    graft.operators.Clustering.saveIvfFlatIndex(flatIdx, flat)
     val pqr = QueryTmp.dir("pqrstage", d)
-    graft.operators.Clustering.saveIvfPqrIndex(
-      graft.operators.Clustering.buildIvfPqrIndexWith(emb, "vec_id",
-        "embedding", Dim, PqM, PqK, PqIters, flatIdx.lanes), pqr)
     graft.operators.Clustering.serveIvfPqrRerank(
-        graft.operators.Clustering.loadIvfPqrIndex(s, pqr),
-        graft.operators.Clustering.loadIvfFlatIndex(s, flat).postings,
+        persisted(s, IvfPqrSharded,
+          graft.operators.Clustering.buildIvfPqrIndexWith(emb, "vec_id",
+            "embedding", Dim, PqM, PqK, PqIters, flatIdx.lanes), pqr),
+        persisted(s, IvfFlatSharded, flatIdx, flat).postings,
         emb, "vec_id", "embedding", Dim, PqM, MaxQueryId, IvfNprobe,
         RerankPool, PqTopK)
       .orderBy($"q_id", $"rank")

@@ -256,17 +256,25 @@ object ArtifactStore {
              (write: String => Unit): Unit = {
     val loaded = expected.getOrElse(currentGen(spark, path))
     val gen = newGenDir(spark, path, loaded)
-    filling.add(new Path(gen).getName)
-    try { write(gen); commitGen(spark, path, gen, loaded) }
-    finally filling.remove(new Path(gen).getName)
+    filling(Seq(gen)) { write(gen); commitGen(spark, path, gen, loaded) }
   }
 
-  /** The generations this JVM's [[publish]] writers are filling, by
-    * (uuid-suffixed) name: no commit's retention deletes them, so a
-    * racing writer that commits first makes such a writer's commit fail
-    * on its compare-and-swap, not on a file retention deleted
-    * mid-write. A writer in another JVM gets no such guard. */
-  private val filling = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+  /** Run `body`, which fills and commits the generation directories
+    * `gens` (each a [[newGenDir]]), sparing them from every commit's
+    * retention meanwhile: a racing writer that commits first then makes
+    * `body`'s commit fail on its compare-and-swap, not on a file
+    * retention deleted mid-write. [[publish]] and the entity table's
+    * multi-root folds fill their generations through it. A writer in
+    * another JVM gets no such guard. */
+  private[graft] def filling[A](gens: Seq[String])(body: => A): A = {
+    val names = gens.map(new Path(_).getName)
+    names.foreach(filled.add)
+    try body finally names.foreach(filled.remove)
+  }
+
+  /** The generations [[filling]] bodies of this JVM are filling, by
+    * (uuid-suffixed) name. */
+  private val filled = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
 
   /** Create-exclusive test-and-set on the commit claim: true = this
     * writer holds it. Local paths go through `Files.createFile` (atomic
@@ -341,7 +349,7 @@ object ArtifactStore {
     * data-loss mode this protocol exists to remove. Retention: every
     * generation but the new one and `expected` is swept, so exactly one
     * displaced generation stays for in-flight readers, and so does any
-    * generation another [[publish]] of this JVM is still filling. */
+    * generation a [[filling]] body of this JVM is still filling. */
   def commitGen(spark: SparkSession, path: String, genDir: String,
                 expected: Option[String]): Unit =
     commitGenAll(spark, path, Seq((path, genDir, expected)))
@@ -369,7 +377,7 @@ object ArtifactStore {
     *     rename of a few bytes, so the all-flips window is
     *     milliseconds of pure metadata (no corpus I/O interleaves);
     *  4. per-root retention sweeps run last (non-semantic cleanup),
-    *     sparing the generations [[publish]] writers still fill.
+    *     sparing the generations [[filling]] bodies still fill.
     *
     * If ANY precondition fails, every staged generation is deleted and
     * the call throws with the fold UNAPPLIED EVERYWHERE — re-run it.
@@ -414,7 +422,7 @@ object ArtifactStore {
         val keep = Set(Some(new Path(genDir).getName), expected).flatten
         fs.listStatus(new Path(root)).foreach { s =>
           val n = s.getPath.getName
-          if (isGenName(n) && !keep(n) && !filling.contains(n))
+          if (isGenName(n) && !keep(n) && !filled.contains(n))
             fs.delete(s.getPath, true)
         }
       }

@@ -62,13 +62,12 @@ object BulkSink {
     val sorted = df
       .repartitionByRange(numPartitions, keyCols.map(col): _*)
       .sortWithinPartitions(sortCols: _*)
-    val loaded = ArtifactStore.currentGen(spark, dest)
-    val genDir = ArtifactStore.newGenDir(spark, dest, loaded)
-    val writer = sorted.write.mode("overwrite")
-    (if (maxRecordsPerFile > 0) writer.option("maxRecordsPerFile", maxRecordsPerFile)
-     else writer).parquet(genDir)
-    writeExtraFiles(spark, genDir, extraFiles)
-    commitGenAndSweep(spark, dest, genDir, loaded)
+    publish(spark, dest, ArtifactStore.currentGen(spark, dest)) { genDir =>
+      val writer = sorted.write.mode("overwrite")
+      (if (maxRecordsPerFile > 0) writer.option("maxRecordsPerFile", maxRecordsPerFile)
+       else writer).parquet(genDir)
+      writeExtraFiles(spark, genDir, extraFiles)
+    }
   }
 
   /** Small metadata files (e.g. the `_asof_watermark` history barrier)
@@ -100,25 +99,20 @@ object BulkSink {
       throw new java.io.IOException(
         s"bulk commit: staged directory $staging does not exist")
     fs.mkdirs(new Path(dest))
-    val loaded = ArtifactStore.currentGen(spark, dest)
-    val genDir = ArtifactStore.newGenDir(spark, dest, loaded)
-    if (!fs.rename(new Path(staging), new Path(genDir)))
-      throw new java.io.IOException(
-        s"bulk commit: cannot stage $staging as generation $genDir")
-    commitGenAndSweep(spark, dest, genDir, loaded)
+    publish(spark, dest, ArtifactStore.currentGen(spark, dest)) { genDir =>
+      if (!fs.rename(new Path(staging), new Path(genDir)))
+        throw new java.io.IOException(
+          s"bulk commit: cannot stage $staging as generation $genDir")
+    }
   }
 
-  /** Pointer-CAS commit of a generation a caller staged its own files
-    * into ([[ArtifactStore.newGenDir]] over `loaded`, the generation its
-    * reads were pinned to — the entity table's bulk loads and folds). */
-  def commitStaged(spark: SparkSession, dest: String, genDir: String,
-                   loaded: Option[String]): Unit =
-    commitGenAndSweep(spark, dest, genDir, loaded)
-
-  private def commitGenAndSweep(spark: SparkSession, dest: String,
-                                genDir: String,
-                                loaded: Option[String]): Unit = {
-    ArtifactStore.commitGen(spark, dest, genDir, loaded)
+  /** Fill a new generation of `dest` through `write` and commit it
+    * against `loaded`, the generation the caller's reads were pinned to
+    * ([[ArtifactStore.publish]] — the entity table's bulk loads and
+    * folds), then sweep legacy root residue. */
+  def publish(spark: SparkSession, dest: String, loaded: Option[String])(
+      write: String => Unit): Unit = {
+    ArtifactStore.publish(spark, dest, Some(loaded))(write)
     sweepLegacyRoot(spark, dest, loaded)
   }
 

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.types.LongType
 
 /** The one lifecycle of every SHARDED index artifact (bm25-, lsh-,
-  * cdc-, semdedup-, ivfflat-, ivfpq- and ivfpqr-sharded): the
-  * rewrite-unit layout (reference
+  * cdc-, semdedup-, ivfflat-, ivfpq- and ivfpqr-sharded) and of every
+  * persisted vector tier, the unsharded ones (ivfflat, ivfpq, ivfpqr,
+  * pq, sq, ivfsq, imi) at S = 1: the rewrite-unit layout (reference
   * anchor: one immutable file set made live by one metadata move,
   * `KM/output/framework/KijiHFileOutputFormat.java:122-186`). A flat
   * artifact re-persists its corpus-sized surfaces wholesale on every
@@ -46,7 +47,8 @@ import org.apache.spark.sql.types.LongType
   *     cell directories): Spark's partition discovery refuses one scan
   *     over several roots' partition directories, so it scans as one
   *     branch per segment, each pruning its own cells;
-  *  4. route rows to shards and collect the touched ones;
+  *  4. route rows to shards and collect the touched ones (at S = 1
+  *     the one shard, with no routing job);
   *  5. commit through [[ShardedCommit.commitSegmented]]: the shard
   *     column and the empty surface of a rowless shard are added here.
   *
@@ -309,8 +311,9 @@ object SegmentedIndex {
     val all = pin(fold.tier, o, _ => shards, Nil)
     val w = fold.plan(all)
     val keyed = fold.tier.families.flatMap(f => w.keys.get(f.name).map(k =>
-      f.name -> k.select(f.route(o.numShards)).distinct().collect()
-        .map(_.getInt(0)).sorted.toSeq))
+      f.name -> (if (o.numShards == 1) Seq(0)
+        else k.select(f.route(o.numShards)).distinct().collect()
+          .map(_.getInt(0)).sorted.toSeq)))
     if (keyed.nonEmpty && keyed.forall(_._2.isEmpty)) return Nil
     val s = scan(fold.tier, o, all.pinned,
       f => keyed.toMap.getOrElse(f.name, shards), w.singletons)

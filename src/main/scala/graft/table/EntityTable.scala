@@ -383,7 +383,12 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     val staging =
       s"$path/__buckets_stage_${java.util.UUID.randomUUID().toString.take(8)}"
     val groups = layout.localityGroups
-    try {
+    // every generation this fold fills, spared by racing commits'
+    // retention until its own commit
+    val gens = pins.map { case (b, (root, loaded, _)) =>
+      b -> ArtifactStore.newGenDir(spark, root, loaded) }
+    val rootGen = ArtifactStore.newGenDir(spark, path, rootPin.loaded)
+    ArtifactStore.filling(gens.values.toSeq :+ rootGen)(try {
       // one `partitionBy(bucket)` staging ungrouped, one per locality
       // group (its own codec), overlapped with the deferred marker agg
       val bucketed = newCells.withColumn("bucket", bucketOf(numBuckets))
@@ -408,7 +413,7 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
       val newGenName = scala.collection.mutable.Map.empty[Int, String]
       touched.foreach { b =>
         val (root, loaded, _) = pins(b)
-        val gen = ArtifactStore.newGenDir(spark, root, loaded)
+        val gen = gens(b)
         if (!grouped) {
           val src = new org.apache.hadoop.fs.Path(s"$staging/flat/bucket=$b")
           if (hadoopFs.exists(src)) {
@@ -453,7 +458,6 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
                 s"(crashed bulkLoadBucketed?); re-run the full load")))
         s"$b\t$g"
       }.mkString("\n")
-      val rootGen = ArtifactStore.newGenDir(spark, path, rootPin.loaded)
       hadoopFs.mkdirs(new org.apache.hadoop.fs.Path(rootGen))
       BulkSink.writeExtraFiles(spark, rootGen, deferredFiles ++
         Map("_numbuckets" -> numBuckets.toString, "_bucket_gens" -> manifest))
@@ -462,7 +466,7 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
     } finally {
       hadoopFs.delete(new org.apache.hadoop.fs.Path(staging), true)
       ()
-    }
+    })
     // legacy flat-root residue is swept two commits deep, exactly like
     // BulkSink.sweepLegacyRoot — but keeping the bucket roots
     if (rootPin.loaded.isDefined)
@@ -696,28 +700,28 @@ final class EntityTable(spark: SparkSession, path: String, layout: TableLayout) 
                            numPartitions: Int, maxRecordsPerFile: Long,
                            deferred: DeferredFiles = None,
                            cap: Cap = keepAll): Unit = {
-    val genDir = ArtifactStore.newGenDir(spark, path, loaded)
     val guarded = guardLayout(newCells, allowNullScope = false)
-    val sets =
-      if (!grouped) Seq((guarded, genDir, None))
-      else {
-        val tagged = guarded.withColumn("lg", lgFor)
-        layout.localityGroups.toSeq.map { case (g, fams) =>
-          (tagged.filter(col("lg") === g).drop("lg"), s"$genDir/lg=$g",
-            Some(fams.head.compression))
+    BulkSink.publish(spark, path, loaded) { genDir =>
+      val sets =
+        if (!grouped) Seq((guarded, genDir, None))
+        else {
+          val tagged = guarded.withColumn("lg", lgFor)
+          layout.localityGroups.toSeq.map { case (g, fams) =>
+            (tagged.filter(col("lg") === g).drop("lg"), s"$genDir/lg=$g",
+              Some(fams.head.compression))
+          }
         }
-      }
-    val deferredFiles = stageWithDeferred(sets.map { case (df, dir, codec) =>
-      df -> ((d: DataFrame) => {
-        val w = stage(d, Seq.empty, numPartitions, cap).write.mode("overwrite")
-        val coded = codec.fold(w)(w.option("compression", _))
-        (if (maxRecordsPerFile > 0)
-          coded.option("maxRecordsPerFile", maxRecordsPerFile)
-        else coded).parquet(dir)
-      })
-    }, deferred)
-    BulkSink.writeExtraFiles(spark, genDir, deferredFiles)
-    BulkSink.commitStaged(spark, path, genDir, loaded)
+      val deferredFiles = stageWithDeferred(sets.map { case (df, dir, codec) =>
+        df -> ((d: DataFrame) => {
+          val w = stage(d, Seq.empty, numPartitions, cap).write.mode("overwrite")
+          val coded = codec.fold(w)(w.option("compression", _))
+          (if (maxRecordsPerFile > 0)
+            coded.option("maxRecordsPerFile", maxRecordsPerFile)
+          else coded).parquet(dir)
+        })
+      }, deferred)
+      BulkSink.writeExtraFiles(spark, genDir, deferredFiles)
+    }
   }
 
   /** A staging's bulk-load order: range-partitioned on (`keys`,

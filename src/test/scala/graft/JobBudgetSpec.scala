@@ -55,14 +55,15 @@ class JobBudgetSpec extends SparkSpec with BeforeAndAfterAll {
     "semdedup" -> Clustering.loadSemIndex,
     "semdedup-sharded" -> segmented(Clustering.SemSharded),
     "ivf" -> Clustering.loadIvfCodebook,
-    "ivfflat" -> Clustering.loadIvfFlatIndex,
+    "ivfflat" -> segmented(Clustering.IvfFlatSharded),
     "ivfflat-sharded" -> segmented(Clustering.IvfFlatSharded),
-    "ivfpq" -> Clustering.loadIvfPqIndex,
+    "ivfpq" -> segmented(Clustering.IvfPqSharded),
     "ivfpq-sharded" -> segmented(Clustering.IvfPqSharded),
-    "ivfpqr" -> Clustering.loadIvfPqrIndex,
+    "ivfpqr" -> segmented(Clustering.IvfPqrSharded),
     "ivfpqr-sharded" -> segmented(Clustering.IvfPqrSharded),
-    "pq" -> Clustering.loadPqIndex, "sq" -> Clustering.loadSqIndex,
-    "ivfsq" -> Clustering.loadIvfSqIndex, "imi" -> Clustering.loadImiIndex,
+    "pq" -> segmented(Clustering.PqTier), "sq" -> segmented(Clustering.SqTier),
+    "ivfsq" -> segmented(Clustering.IvfSqTier),
+    "imi" -> segmented(Clustering.ImiTier),
     "bpe" -> Bpe.loadMerges, "unigram" -> UnigramLm.loadVocab,
     "wordpiece" -> WordPiece.loadVocab,
     "decontam" -> ((s: SparkSession, p: String) =>
@@ -173,17 +174,18 @@ class JobBudgetSpec extends SparkSpec with BeforeAndAfterAll {
     import spark.implicits._
     val base = tmpDir("jobvector")
     val pq = Map("dim" -> "4", "m" -> "2", "k" -> "2", "centroids" -> "2")
-    // update (the default whole-shard merge) and remove ceilings = the
-    // counts this fixture measured while each tier rewrote whole shards
-    // under per-shard pointers; the append update (--mode=append) and
-    // compact = the counts on the shared segmented lifecycle
+    // update (the default whole-shard merge) ceilings = the counts this
+    // fixture measured while each tier rewrote whole shards under
+    // per-shard pointers; the append update (--mode=append), compact and
+    // remove = the counts on the shared segmented lifecycle (remove,
+    // while a removal's ids were deduplicated and cached: 8, 10, 10)
     val cases = Seq(
       ("ivfflat-sharded", Map("centroids" -> "2"), Map("update" -> 8,
-        "append" -> 7, "compact" -> 2, "remove" -> 8)),
+        "append" -> 7, "compact" -> 2, "remove" -> 5)),
       ("ivfpq-sharded", pq, Map("update" -> 12, "append" -> 11,
-        "compact" -> 4, "remove" -> 10)),
+        "compact" -> 4, "remove" -> 8)),
       ("ivfpqr-sharded", pq, Map("update" -> 14, "append" -> 14,
-        "compact" -> 4, "remove" -> 10)))
+        "compact" -> 4, "remove" -> 8)))
     for ((tpe, extra, ceilings) <- cases) {
       val path = s"$base/$tpe"
       val flags = extra + ("shards" -> "4")
@@ -200,6 +202,40 @@ class JobBudgetSpec extends SparkSpec with BeforeAndAfterAll {
       counts.foreach { case (op, got) =>
         assert(got <= ceilings(op),
           s"$tpe $op launched $got jobs, ceiling ${ceilings(op)}")
+      }
+    }
+  }
+
+  test("ivfflat, ivfpq, ivfpqr, pq, sq, ivfsq and imi (S = 1) update, append, compact and remove stay within their job ceilings") {
+    import spark.implicits._
+    val base = tmpDir("jobflat")
+    // ceilings = the counts this fixture measures at S = 1. With their
+    // own flat save, load and remove these types measured, update/remove:
+    // ivfflat 8/4, ivfpq 12/7, ivfpqr 17/7, pq 6/3, sq 5/3, ivfsq 8/5,
+    // imi 11/7 (no routing collect runs at S = 1, and a removal's ids
+    // are neither deduplicated nor cached)
+    def c(update: Int, append: Int, compact: Int, remove: Int) =
+      Map("update" -> update, "append" -> append, "compact" -> compact,
+        "remove" -> remove)
+    val ceilings = Map("ivfflat" -> c(7, 5, 2, 3), "ivfpq" -> c(11, 9, 4, 6),
+      "ivfpqr" -> c(14, 12, 4, 6), "pq" -> c(6, 6, 2, 3),
+      "sq" -> c(5, 5, 2, 3), "ivfsq" -> c(6, 6, 2, 3), "imi" -> c(7, 7, 2, 3))
+    for (fx <- IndexFixtures.all(spark) if ceilings.contains(fx.tpe)) {
+      val path = s"$base/${fx.tpe}"
+      IndexTool.build(spark, fx.tpe, fx.input, path, fx.flags)
+      val counts = Seq(
+        "update" -> jobsOf(IndexTool.update(spark, fx.tpe, fx.delta, path,
+          fx.flags)),
+        "append" -> jobsOf(IndexTool.update(spark, fx.tpe,
+          fx.delta.withColumn("vec_id", $"vec_id" + 10L), path,
+          fx.flags + ("mode" -> "append"))),
+        "compact" -> jobsOf(IndexTool.compact(spark, fx.tpe, path, fx.flags)),
+        "remove" -> jobsOf(IndexTool.remove(spark, fx.tpe, fx.removed, path,
+          fx.flags)))
+      info(s"${fx.tpe}: ${counts.map { case (op, n) => s"$op $n" }.mkString(", ")}")
+      counts.foreach { case (op, got) =>
+        assert(got <= ceilings(fx.tpe)(op),
+          s"${fx.tpe} $op launched $got jobs, ceiling ${ceilings(fx.tpe)(op)}")
       }
     }
   }

@@ -2007,6 +2007,60 @@ class ToolSpec extends SparkSpec {
     assert(spark.read.parquet(s"$base/out").count() > 0)
   }
 
+  test("CLI index-gc sweeps the unnamed segment a crashed ivfpq update (S = 1) leaves; the live segment holds") {
+    import spark.implicits._
+    import graft.sinks.{ArtifactStore, SegmentStore, SegmentedIndex}
+    val base = tmpDir("idxgcflat")
+    def emb(ids: Range) = ids.map { i =>
+        val v = Array(1f, 1f, 1f, 1f); v(i % 4) = 10f + i * 0.01f
+        (i.toLong, v.toSeq)
+      }.toDF("vec_id", "embedding")
+      .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
+    emb(0 until 12).write.parquet(s"$base/emb")
+    val path = s"$base/ivfpq"
+    val pq = Seq("--dim=4", "--m=2", "--k=2", "--centroids=2")
+    assert(Tool.run(spark, Array("index-build", "--type=ivfpq",
+      s"--path=$path", s"--input=format=parquet file=$base/emb") ++ pq)
+      .status == "SUCCEEDED")
+    val dir = ArtifactStore.resolve(spark, path)
+    def live0 = SegmentStore.pin(spark, dir).segments("shards/0")
+    def segsOnDisk = new java.io.File(s"$dir/shards/0").list()
+      .filter(SegmentStore.isSegName).toSet
+    // the update lands its segment, then crashes before its manifest
+    // commit: a compaction committing meanwhile makes its CAS refuse it
+    val before = segsOnDisk
+    val fold = graft.operators.Clustering.IvfPqSharded.delta(
+      emb(20 until 22), "vec_id", "embedding", 4, 2)
+    val crashed = SegmentedIndex.Fold(fold.tier, s => {
+      val w = fold.plan(s)
+      w.copy(rows = sc => {
+        IndexTool.compact(spark, "ivfpq", path, Map.empty)
+        w.rows(sc)
+      })
+    })
+    val e = intercept[IllegalStateException](
+      SegmentedIndex.update(spark, path, crashed))
+    assert(e.getMessage.contains("concurrent writer"), e.getMessage)
+    // the compaction's segment is live; the one it displaced stays for
+    // in-flight readers
+    val named = live0
+    val orphan = segsOnDisk -- before -- named
+    assert(named.size == 1 && orphan.size == 1,
+      s"named $named, crashed update's $orphan")
+    assert(Tool.run(spark, Array("index-describe", "--type=ivfpq",
+      s"--path=$path")).counters("orphan_segments") == 1L)
+    val r = Tool.run(spark, Array("index-gc", s"--path=$path",
+      "--grace-ms=0"))
+    assert(r.counters("swept_segments") == 1L, r.counters.toString)
+    assert(live0 == named && segsOnDisk == before ++ named,
+      "index-gc must sweep exactly the crashed update's segment")
+    assert(Tool.run(spark, Array("index-serve", "--type=ivfpq",
+      s"--path=$path", s"--input=format=parquet file=$base/emb",
+      s"--output=format=parquet file=$base/out", "--max-query-id=4",
+      "--nprobe=1", "--topk=3") ++ pq).status == "SUCCEEDED")
+    assert(spark.read.parquet(s"$base/out").count() > 0)
+  }
+
   test("CLI composites accept SHARDED artifacts: --rerank-from and the hybrid dense legs layout-sniff the sharded roots") {
     import spark.implicits._
     val base = tmpDir("idxshcomposite")
@@ -2283,7 +2337,8 @@ class ToolSpec extends SparkSpec {
       .where($"rank" <= 5)
       .select($"q_id", $"doc_id", $"rank".as("lex_rank"))
     val dense = graft.operators.Clustering.serveIvfFlat(
-        graft.operators.Clustering.loadIvfFlatIndex(spark, s"$base/ivf"),
+        graft.sinks.SegmentedIndex.load(spark,
+          graft.operators.Clustering.IvfFlatSharded, s"$base/ivf"),
         emb.filter($"vec_id" < 2), "vec_id", "embedding",
         Long.MaxValue, 2, 5)
       .select($"q_id", $"n_id".as("doc_id"),
@@ -3215,5 +3270,26 @@ class ToolSpec extends SparkSpec {
       s"--path=$idx", s"--input=format=parquet file=$base/delta2",
       "--shingle-n=2", "--max-rewrite-rows=100000"))
       .status == "SUCCEEDED")
+    // ivfflat (S = 1): a merge-mode update rewrites its one shard whole,
+    // so it is gated too; an append lands one delta-sized segment
+    def emb(ids: Seq[Long]) = ids.map(i => (i, Seq(i.toFloat, 1f, 1f, 1f)))
+      .toDF("vec_id", "embedding")
+      .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
+    emb(0L until 6L).write.parquet(s"$base/emb")
+    emb(Seq(20L)).write.parquet(s"$base/edelta")
+    val ivf = s"$base/ivfflat"
+    assert(Tool.run(spark, Array("index-build", "--type=ivfflat",
+      s"--path=$ivf", s"--input=format=parquet file=$base/emb",
+      "--centroids=2")).status == "SUCCEEDED")
+    val e2 = intercept[IllegalArgumentException](Tool.run(spark,
+      Array("index-update", "--type=ivfflat", s"--path=$ivf",
+        s"--input=format=parquet file=$base/edelta",
+        "--max-rewrite-rows=1")))
+    assert(e2.getMessage.contains("ivfflat-sharded") &&
+      e2.getMessage.contains("--mode=append") &&
+      e2.getMessage.contains("WHOLE SURFACE"), e2.getMessage)
+    assert(Tool.run(spark, Array("index-update", "--type=ivfflat",
+      s"--path=$ivf", s"--input=format=parquet file=$base/edelta",
+      "--max-rewrite-rows=1", "--mode=append")).status == "SUCCEEDED")
   }
 }

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
+import graft.queries.VectorQueries.persisted
+import graft.sinks.{SegmentStore, SegmentedIndex}
 
 class ClusteringSpec extends SparkSpec {
   import spark.implicits._
@@ -18,6 +20,21 @@ class ClusteringSpec extends SparkSpec {
     }
     rows.toDF("vec_id", "embedding")
       .select($"vec_id", $"embedding".cast("array<float>").as("embedding"))
+  }
+
+  /** The directory of `surface` in the one live segment of the one-shard
+    * artifact at `path`. */
+  private def segDir(path: String, surface: String): String =
+    SegmentStore.pin(spark, live(path)).paths("shards/0", surface).head
+
+  /** `idx` saved with one shard, `ids` removed through the tier's
+    * removal, and the artifact loaded back. */
+  private def removedFrom[A](tier: Clustering.VectorSharded[A], idx: A,
+                             ids: Long*): A = {
+    val path = tmpDir("removed")
+    SegmentedIndex.save(spark, tier, idx, path, 1)
+    SegmentedIndex.remove(spark, path, tier.removal(ids.toDF("n_id")))
+    SegmentedIndex.load(spark, tier, path)
   }
 
   test("kmeans recovers separated blobs; populations sum to the corpus") {
@@ -469,8 +486,7 @@ class ClusteringSpec extends SparkSpec {
   test("IvfFlatIndex roundtrip: served search == fresh knnIvf; update == union build") {
     val path = tmpDir("ivfflat_rt")
     val idx = Clustering.buildIvfFlatIndex(blobs, "vec_id", "embedding", 3, 2)
-    Clustering.saveIvfFlatIndex(idx, path)
-    val loaded = Clustering.loadIvfFlatIndex(spark, path)
+    val loaded = persisted(spark, Clustering.IvfFlatSharded, idx, path)
     val served = Clustering.serveIvfFlat(loaded, blobs, "vec_id", "embedding",
       maxQueryId = 6L, nprobe = 1, k = 3)
     val fresh = graft.operators.Similarity.knnIvf(blobs, "vec_id", "embedding",
@@ -483,9 +499,8 @@ class ClusteringSpec extends SparkSpec {
     val corpus = blobs.filter($"vec_id" % 2 === 0)
     val delta = blobs.filter($"vec_id" % 2 =!= 0)
     val p2 = tmpDir("ivfflat_up")
-    Clustering.saveIvfFlatIndex(
+    val base = persisted(spark, Clustering.IvfFlatSharded,
       Clustering.buildIvfFlatIndex(corpus, "vec_id", "embedding", 3, 2), p2)
-    val base = Clustering.loadIvfFlatIndex(spark, p2)
     val updated = Clustering.updateIvfFlatIndex(base, delta, "vec_id", "embedding")
     val unionAssigned = graft.operators.Similarity.ivfPostings(
       blobs, "vec_id", "embedding",
@@ -594,10 +609,10 @@ class ClusteringSpec extends SparkSpec {
 
   test("IvfPqIndex roundtrip: served ADC search == fresh ivfPqSearch; cells scan prunes") {
     val path = tmpDir("ivfpq_rt")
-    Clustering.saveIvfPqIndex(Clustering.buildIvfPqIndex(
-      blobs, "vec_id", "embedding", dim = 4, m = 2, k = 2, iters = 2,
-      numCentroids = 3), path)
-    val loaded = Clustering.loadIvfPqIndex(spark, path)
+    val loaded = persisted(spark, Clustering.IvfPqSharded,
+      Clustering.buildIvfPqIndex(
+        blobs, "vec_id", "embedding", dim = 4, m = 2, k = 2, iters = 2,
+        numCentroids = 3), path)
     val served = Clustering.serveIvfPq(loaded, blobs, "vec_id", "embedding",
       dim = 4, m = 2, maxQueryId = 6L, nprobe = 1, topK = 3)
     val fresh = Clustering.ivfPqSearch(blobs, "vec_id", "embedding",
@@ -622,11 +637,11 @@ class ClusteringSpec extends SparkSpec {
     // the two-stage serve: equality with the fresh ivfPqRerank, and the
     // rerank's raw-vector fetch ALSO prunes to the probed cells
     val flatPath = tmpDir("ivfpq_rt_flat")
-    Clustering.saveIvfFlatIndex(Clustering.IvfFlatIndex(loaded.coarseLanes,
-      graft.operators.Similarity.ivfPostings(blobs, "vec_id", "embedding",
-        graft.operators.Similarity.centroidSetFromLanes(loaded.coarseLanes))),
-      flatPath)
-    val flatPostings = Clustering.loadIvfFlatIndex(spark, flatPath).postings
+    val flatPostings = persisted(spark, Clustering.IvfFlatSharded,
+      Clustering.IvfFlatIndex(loaded.coarseLanes,
+        graft.operators.Similarity.ivfPostings(blobs, "vec_id", "embedding",
+          graft.operators.Similarity.centroidSetFromLanes(loaded.coarseLanes))),
+      flatPath).postings
     val twoStage = Clustering.serveIvfPqRerank(loaded, flatPostings, blobs,
       "vec_id", "embedding", dim = 4, m = 2, maxQueryId = 6L, nprobe = 1,
       rerankPool = 6, topK = 3)
@@ -649,16 +664,17 @@ class ClusteringSpec extends SparkSpec {
 
   test("IvfFlat serve prunes the postings scan to the probed cells") {
     val path = tmpDir("ivfflat_prune")
-    Clustering.saveIvfFlatIndex(
-      Clustering.buildIvfFlatIndex(blobs, "vec_id", "embedding", 3, 2), path)
+    SegmentedIndex.save(spark, Clustering.IvfFlatSharded,
+      Clustering.buildIvfFlatIndex(blobs, "vec_id", "embedding", 3, 2), path, 1)
     // the artifact is laid out as one directory per inverted list
-    val cellDirs = new java.io.File(s"${live(path)}/postings").listFiles()
+    val cellDirs = new java.io.File(segDir(path, "postings")).listFiles()
       .filter(_.getName.startsWith("c_id=")).map(_.getName)
     assert(cellDirs.length >= 2, s"expected cell directories, got ${cellDirs.toSeq}")
     // one query, nprobe=1 → the static cell filter reaches the scan as a
     // partition filter: the scan reads ONE cell directory, not the corpus
     val served = Clustering.serveIvfFlat(
-      Clustering.loadIvfFlatIndex(spark, path), blobs, "vec_id", "embedding",
+      SegmentedIndex.load(spark, Clustering.IvfFlatSharded, path), blobs,
+      "vec_id", "embedding",
       maxQueryId = 1L, nprobe = 1, k = 3)
     val scans = served.queryExecution.sparkPlan.collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec
@@ -679,7 +695,7 @@ class ClusteringSpec extends SparkSpec {
     val idx = Clustering.buildIvfFlatIndex(blobs, "vec_id", "embedding", 3, 2)
     val single = tmpDir("ivfsh_single")
     val sharded = tmpDir("ivfsh") + "/art"
-    Clustering.saveIvfFlatIndex(idx, single)
+    SegmentedIndex.save(spark, Clustering.IvfFlatSharded, idx, single, 1)
     SegmentedIndex.save(spark, tier, idx, sharded, 4)
     // shard-merged serve reproduces the single-artifact serve bit-for-bit
     def serveOf(i: Clustering.IvfFlatIndex) =
@@ -687,7 +703,7 @@ class ClusteringSpec extends SparkSpec {
         maxQueryId = 6L, nprobe = 1, k = 3)
         .orderBy($"q_id", $"rank").collect().toSeq
     assert(serveOf(SegmentedIndex.load(spark, tier, sharded)) ==
-      serveOf(Clustering.loadIvfFlatIndex(spark, single)))
+      serveOf(SegmentedIndex.load(spark, Clustering.IvfFlatSharded, single)))
     // shard routing is n_id mod numShards — a delta whose ids all route
     // to shard 2 must advance ONLY shard 2's segments
     def genOf(sh: Int): Seq[String] =
@@ -747,14 +763,14 @@ class ClusteringSpec extends SparkSpec {
       dim = 4, m = 2, k = 2, iters = 2, numCentroids = 3)
     val single = tmpDir("ivfpqsh_single")
     val sharded = tmpDir("ivfpqsh") + "/art"
-    Clustering.saveIvfPqIndex(idx, single)
+    SegmentedIndex.save(spark, Clustering.IvfPqSharded, idx, single, 1)
     SegmentedIndex.save(spark, tier, idx, sharded, 4)
     def serveOf(i: Clustering.IvfPqIndex) =
       Clustering.serveIvfPq(i, blobs, "vec_id", "embedding",
         dim = 4, m = 2, maxQueryId = 6L, nprobe = 1, topK = 3)
         .orderBy($"q_id", $"rank").collect().toSeq
     assert(serveOf(SegmentedIndex.load(spark, tier, sharded)) ==
-      serveOf(Clustering.loadIvfPqIndex(spark, single)))
+      serveOf(SegmentedIndex.load(spark, Clustering.IvfPqSharded, single)))
     // no raw vectors anywhere in the sharded layout either
     val loaded0 = SegmentedIndex.load(spark, tier, sharded)
     assert(!loaded0.cells.columns.contains("nv") &&
@@ -804,7 +820,7 @@ class ClusteringSpec extends SparkSpec {
     // updated sharded serve == the in-memory updateIvfPqIndex fold of
     // the same delta over the unsharded artifact (the q161 exactness)
     val foldedServe = serveOf(Clustering.updateIvfPqIndex(
-      Clustering.loadIvfPqIndex(spark, single), delta,
+      SegmentedIndex.load(spark, Clustering.IvfPqSharded, single), delta,
       "vec_id", "embedding", dim = 4, m = 2))
     assert(serveOf(loaded) == foldedServe)
     // remove forgets: only the routed shard rewrites, both surfaces drop
@@ -827,9 +843,9 @@ class ClusteringSpec extends SparkSpec {
     // style metadata column materialized in the postings
     val attributed = blobs.withColumn("label", ($"vec_id" % 3).cast("int"))
     val path = tmpDir("ivfflat_filt")
-    Clustering.saveIvfFlatIndex(Clustering.buildIvfFlatIndex(
-      attributed, "vec_id", "embedding", 3, 2, attrCols = Seq("label")), path)
-    val loaded = Clustering.loadIvfFlatIndex(spark, path)
+    val loaded = persisted(spark, Clustering.IvfFlatSharded,
+      Clustering.buildIvfFlatIndex(
+        attributed, "vec_id", "embedding", 3, 2, attrCols = Seq("label")), path)
     assert(loaded.postings.columns.contains("label"),
       "attribute column must survive the save/load roundtrip")
     val served = Clustering.serveIvfFlatFiltered(loaded, blobs,
@@ -902,10 +918,10 @@ class ClusteringSpec extends SparkSpec {
     // the codes join)
     val attributed = blobs.withColumn("label", ($"vec_id" % 3).cast("int"))
     val pqPath = tmpDir("ivfpq_filt")
-    Clustering.saveIvfPqIndex(Clustering.buildIvfPqIndex(
-      attributed, "vec_id", "embedding", dim = 4, m = 2, k = 2, iters = 2,
-      numCentroids = 3, attrCols = Seq("label")), pqPath)
-    val loaded = Clustering.loadIvfPqIndex(spark, pqPath)
+    val loaded = persisted(spark, Clustering.IvfPqSharded,
+      Clustering.buildIvfPqIndex(
+        attributed, "vec_id", "embedding", dim = 4, m = 2, k = 2, iters = 2,
+        numCentroids = 3, attrCols = Seq("label")), pqPath)
     assert(loaded.cells.columns.contains("label"))
     val fserved = Clustering.serveIvfPqFiltered(loaded, blobs,
       "vec_id", "embedding", dim = 4, m = 2, maxQueryId = 3L, nprobe = 3,
@@ -965,8 +981,7 @@ class ClusteringSpec extends SparkSpec {
     val path = tmpDir("imi_rt")
     val built = Clustering.buildImiIndex(vecs, "vec_id", "embedding",
       dim = 4, kA = 2, kB = 2, iters = 2)
-    Clustering.saveImiIndex(built, path)
-    val loaded = Clustering.loadImiIndex(spark, path)
+    val loaded = persisted(spark, Clustering.ImiTier, built, path)
     assert(loaded.kA == 2 && loaded.kB == 2 && loaded.dim == 4)
     // the reload serves identically to the in-memory build
     def serveSet(idx: Clustering.ImiIndex) =
@@ -975,7 +990,7 @@ class ClusteringSpec extends SparkSpec {
     assert(serveSet(loaded) == serveSet(built) && serveSet(loaded).nonEmpty)
     // postings are laid out one directory per COMPOSED cell, and the
     // static probe filter prunes the scan to the probed cells
-    val cellDirs = new java.io.File(s"${live(path)}/postings").listFiles()
+    val cellDirs = new java.io.File(segDir(path, "postings")).listFiles()
       .filter(_.getName.startsWith("c_id=")).map(_.getName)
     assert(cellDirs.length >= 2, s"expected cell dirs, got ${cellDirs.toSeq}")
     val served = Clustering.serveImi(loaded, vecs, "vec_id", "embedding",
@@ -1026,9 +1041,8 @@ class ClusteringSpec extends SparkSpec {
 
   test("SqIndex roundtrip: codes bounded; top-1 stays in-blob; update == union encode; remove == survivor encode") {
     val path = tmpDir("sq_rt")
-    Clustering.saveSqIndex(
+    val loaded = persisted(spark, Clustering.SqTier,
       Clustering.buildSqIndex(blobs, "vec_id", "embedding", dim = 4), path)
-    val loaded = Clustering.loadSqIndex(spark, path)
     // lanes: one (lo ≤ hi) row per dimension
     val lanes = loaded.lanes.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
@@ -1052,9 +1066,9 @@ class ClusteringSpec extends SparkSpec {
     // are encoded against them — codes must equal a fresh encode of
     // the union under the same lanes
     val p2 = tmpDir("sq_up")
-    Clustering.saveSqIndex(Clustering.buildSqIndex(
-      blobs.filter($"vec_id" % 2 === 0), "vec_id", "embedding", 4), p2)
-    val base = Clustering.loadSqIndex(spark, p2)
+    val base = persisted(spark, Clustering.SqTier,
+      Clustering.buildSqIndex(
+        blobs.filter($"vec_id" % 2 === 0), "vec_id", "embedding", 4), p2)
     val updated = Clustering.updateSqIndex(base,
       blobs.filter($"vec_id" % 2 =!= 0), "vec_id", "embedding")
     def keyed(df: org.apache.spark.sql.DataFrame) =
@@ -1063,8 +1077,7 @@ class ClusteringSpec extends SparkSpec {
       keyed(Clustering.sqEncode(blobs, base.lanes, "vec_id", "embedding")))
     assert(keyed(updated.codes).size == 30)
     // the remove path: anti-join == fresh encode of the survivors
-    val removed = Clustering.removeFromSqIndex(updated,
-      Seq(1L, 2L).toDF("n_id"))
+    val removed = removedFrom(Clustering.SqTier, updated, 1L, 2L)
     assert(keyed(removed.codes) == keyed(Clustering.sqEncode(
       blobs.filter(!$"vec_id".isin(1L, 2L)), base.lanes,
       "vec_id", "embedding")))
@@ -1074,8 +1087,7 @@ class ClusteringSpec extends SparkSpec {
     val path = tmpDir("ivfsq_rt")
     val built = Clustering.buildIvfSqIndex(blobs, "vec_id", "embedding",
       dim = 4, numCentroids = 3, iters = 2)
-    Clustering.saveIvfSqIndex(built, path)
-    val loaded = Clustering.loadIvfSqIndex(spark, path)
+    val loaded = persisted(spark, Clustering.IvfSqTier, built, path)
     def serveSet(idx: Clustering.IvfSqIndex) =
       Clustering.serveIvfSq(idx, blobs, "vec_id", "embedding",
         maxQueryId = 3L, nprobe = 1, k = 3).collect().map(_.toSeq).toSet
@@ -1088,7 +1100,7 @@ class ClusteringSpec extends SparkSpec {
       assert(n % 3 == q % 3, s"query $q top-1 $n crossed blobs") }
     // codes are laid out one directory per cell, and the static probe
     // filter prunes the scan to the probed cells
-    val cellDirs = new java.io.File(s"${live(path)}/codes").listFiles()
+    val cellDirs = new java.io.File(segDir(path, "codes")).listFiles()
       .filter(_.getName.startsWith("c_id=")).map(_.getName)
     assert(cellDirs.length >= 2, s"expected cell dirs, got ${cellDirs.toSeq}")
     val one = Clustering.serveIvfSq(loaded, blobs, "vec_id", "embedding",
@@ -1105,9 +1117,9 @@ class ClusteringSpec extends SparkSpec {
     // the add path: both fitted surfaces stay fixed — the updated codes
     // must equal one fused assign+encode pass over the union
     val p2 = tmpDir("ivfsq_up")
-    Clustering.saveIvfSqIndex(Clustering.buildIvfSqIndex(
-      blobs.filter($"vec_id" % 2 === 0), "vec_id", "embedding", 4, 3, 2), p2)
-    val base = Clustering.loadIvfSqIndex(spark, p2)
+    val base = persisted(spark, Clustering.IvfSqTier,
+      Clustering.buildIvfSqIndex(
+        blobs.filter($"vec_id" % 2 === 0), "vec_id", "embedding", 4, 3, 2), p2)
     val updated = Clustering.updateIvfSqIndex(base,
       blobs.filter($"vec_id" % 2 =!= 0), "vec_id", "embedding")
     def keyed(df: org.apache.spark.sql.DataFrame) =
@@ -1118,8 +1130,7 @@ class ClusteringSpec extends SparkSpec {
       blobs, "vec_id", "embedding", base.coarseLanes, base.sqLanes)))
     assert(keyed(updated.codes).size == 30)
     // remove == survivors under the same fits
-    val removed = Clustering.removeFromIvfSqIndex(updated,
-      Seq(3L, 4L).toDF("n_id"))
+    val removed = removedFrom(Clustering.IvfSqTier, updated, 3L, 4L)
     assert(keyed(removed.codes) == keyed(Clustering.ivfSqAssign(
       blobs.filter(!$"vec_id".isin(3L, 4L)), "vec_id", "embedding",
       base.coarseLanes, base.sqLanes)))
@@ -1129,8 +1140,7 @@ class ClusteringSpec extends SparkSpec {
     val path = tmpDir("ivfpqr_rt")
     val built = Clustering.buildIvfPqrIndex(blobs, "vec_id", "embedding",
       dim = 4, m = 2, k = 2, iters = 2, numCentroids = 3)
-    Clustering.saveIvfPqrIndex(built, path)
-    val loaded = Clustering.loadIvfPqrIndex(spark, path)
+    val loaded = persisted(spark, Clustering.IvfPqrSharded, built, path)
     def serveSet(idx: Clustering.IvfPqrIndex) =
       Clustering.serveIvfPqr(idx, blobs, "vec_id", "embedding", 4, 2,
         maxQueryId = 3L, nprobe = 1, topK = 3).collect().map(_.toSeq).toSet
@@ -1148,10 +1158,10 @@ class ClusteringSpec extends SparkSpec {
     // the add path under all-fixed fits: delta rows join both surfaces
     // and become retrievable; a removed row stops being retrievable
     val p2 = tmpDir("ivfpqr_up")
-    Clustering.saveIvfPqrIndex(Clustering.buildIvfPqrIndex(
-      blobs.filter($"vec_id" % 2 === 0), "vec_id", "embedding",
-      4, 2, 2, 2, 3), p2)
-    val base = Clustering.loadIvfPqrIndex(spark, p2)
+    val base = persisted(spark, Clustering.IvfPqrSharded,
+      Clustering.buildIvfPqrIndex(
+        blobs.filter($"vec_id" % 2 === 0), "vec_id", "embedding",
+        4, 2, 2, 2, 3), p2)
     val updated = Clustering.updateIvfPqrIndex(base,
       blobs.filter($"vec_id" % 2 =!= 0), "vec_id", "embedding", 4, 2)
     assert(updated.cells.count() == 30 && updated.codes.count() == 60)
@@ -1162,8 +1172,7 @@ class ClusteringSpec extends SparkSpec {
     val afterAdd = served(updated)
     assert(afterAdd.exists(_ % 2 == 1), s"no odd (added) id served: $afterAdd")
     assert(afterAdd.contains(9L), s"expected 9 in $afterAdd")
-    val removed = Clustering.removeFromIvfPqrIndex(updated,
-      Seq(9L).toDF("n_id"))
+    val removed = removedFrom(Clustering.IvfPqrSharded, updated, 9L)
     assert(!served(removed).contains(9L), "removed vector still retrievable")
   }
 

@@ -82,7 +82,12 @@ class SegmentManifestSpec extends SparkSpec {
         docFlags ++ Map("coarse-k" -> "2", "target-rows" -> "4",
           "cluster-cap" -> "64"))) ++
       Seq("ivfflat-sharded" -> Map("centroids" -> "2"),
-        "ivfpq-sharded" -> pq, "ivfpqr-sharded" -> pq).map { case (t, f) =>
+        "ivfpq-sharded" -> pq, "ivfpqr-sharded" -> pq,
+        "ivfflat" -> Map("centroids" -> "2"), "ivfpq" -> pq, "ivfpqr" -> pq,
+        "pq" -> (pq - "centroids"), "sq" -> Map("dim" -> "4"),
+        "ivfsq" -> Map("dim" -> "4", "centroids" -> "2"),
+        "imi" -> Map("dim" -> "4", "half-centroids-a" -> "2",
+          "half-centroids-b" -> "2")).map { case (t, f) =>
         (t, emb(0L until 12L), (r: Int) => emb(Seq(20L + 2 * r, 21L + 2 * r)),
           (r: Int) => Seq(r.toLong, 20L + 2 * r).toDF("vec_id"),
           docFlags ++ f + ("mode" -> "append"))
@@ -107,6 +112,25 @@ class SegmentManifestSpec extends SparkSpec {
         s"$tpe: expected the live and one retained manifest: ${present.keys}")
       val leaked = onDisk(base) -- present.values.flatMap(_.named)
       assert(leaked.isEmpty, s"$tpe: segments no manifest names: $leaked")
+    }
+  }
+
+  test("index-build, -update, -remove and -compact release every cache they persisted: the session caches nothing after bm25-sharded and ivfflat lifecycles") {
+    graft.operators.OperatorCaches.releaseAll()
+    spark.catalog.clearCache()
+    val caches = spark.sharedState.cacheManager
+    for ((tpe, input, delta, removed, flags) <- Seq[(String, DataFrame,
+        DataFrame, DataFrame, Map[String, String])](
+        ("bm25-sharded", corpus, docs(100L -> "novel words here"),
+          Seq(1L, 100L).toDF("doc_id"), Map("shards" -> "4")),
+        ("ivfflat", emb(0L until 12L), emb(Seq(20L, 21L)),
+          Seq(1L, 20L).toDF("vec_id"), Map("centroids" -> "2")))) {
+      val path = s"${tmpDir(tpe)}/idx"
+      IndexTool.build(spark, tpe, input, path, flags)
+      IndexTool.update(spark, tpe, delta, path, flags)
+      IndexTool.remove(spark, tpe, removed, path, flags)
+      IndexTool.compact(spark, tpe, path, flags)
+      assert(caches.isEmpty, s"$tpe: the verbs left cached frames behind")
     }
   }
 

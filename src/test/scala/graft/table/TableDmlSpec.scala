@@ -1276,4 +1276,59 @@ class TableDmlSpec extends SparkSpec {
         s"${fx.name}: the refused fold must leave no generation: $gens")
     }
   }
+
+  test("a bulk load's generation still staging survives a racing commit's retention; its own commit then fails as a concurrent writer") {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val dir = tmpDir("stagerace") + "/t"
+    val table = new EntityTable(spark, dir,
+      TableLayout("t", Seq(FamilySpec("info"), FamilySpec("stats"))))
+    table.bulkLoad(cells, numPartitions = 1)
+    def gens = Files.list(Paths.get(dir)).iterator().asScala
+      .map(_.getFileName.toString)
+      .filter(graft.sinks.ArtifactStore.isGenName).toSet
+    // the slow load's one staging task holds inside its write until the
+    // racing load has committed (read back from one parquet file, so no
+    // optimizer rule evaluates it early and one task holds one core;
+    // adaptive execution off, so the held shuffle stage runs inside the
+    // write job, after the job has created its output directory)
+    cells.coalesce(1).write.parquet(s"$dir.in")
+    val held = TableDmlSpec.holdOnce()
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val slow = Future(table.bulkLoad(spark.read.parquet(s"$dir.in")
+      .withColumn("value", held(col("value"))), numPartitions = 1))
+    try {
+      assert(TableDmlSpec.started.await(60, SECONDS), "the load never staged")
+      val before = gens
+      assert(before.size == 2, s"no staging generation: $before")
+      table.bulkLoad(cells.limit(2), numPartitions = 1)
+      assert((before -- gens).isEmpty,
+        s"the racing commit's retention deleted a staging: ${before -- gens}")
+    } finally {
+      TableDmlSpec.release.countDown()
+      spark.conf.unset("spark.sql.adaptive.enabled")
+    }
+    val e = intercept[IllegalStateException](Await.result(slow, 120.seconds))
+    assert(e.getMessage.contains("concurrent writer"), e.getMessage)
+    assert(table.cells.count() == 2L, "the racing load's cells are live")
+    assert(gens.size == 2, s"the refused load must leave no generation: $gens")
+  }
+}
+
+object TableDmlSpec {
+  @volatile var started = new java.util.concurrent.CountDownLatch(1)
+  @volatile var release = new java.util.concurrent.CountDownLatch(1)
+
+  /** An identity column whose first evaluation waits for `release`,
+    * counting `started` down first. */
+  def holdOnce(): org.apache.spark.sql.expressions.UserDefinedFunction = {
+    started = new java.util.concurrent.CountDownLatch(1)
+    release = new java.util.concurrent.CountDownLatch(1)
+    udf { (v: String) =>
+      started.countDown()
+      release.await(120, java.util.concurrent.TimeUnit.SECONDS)
+      v
+    }
+  }
 }
